@@ -22,7 +22,8 @@ import sys
 import time
 import traceback
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 WARMUP_DIR = "/root/testdata/sf0.001"
@@ -301,18 +302,98 @@ def _load_registry(repo_dir: str) -> dict:
         sys.path.remove(repo_dir)
 
 
-def _ab_protocol(spark, head_qs: dict, names: list, errors: dict) -> dict:
-    """Interleaved A/B/A/B paired comparison vs PREV_BENCH_COMMIT
-    (round-7 verdict #3). Returns {prev_commit, pairs, loadavg,
-    n_processes, paired_delta_pct, paired_detail} — empty-ish with an
-    error recorded if the worktree or prev import fails (the main
-    bench must survive a broken A/B leg)."""
+def _checkout(ref: str) -> str:
+    """Check ``ref`` out into a fresh detached git worktree under the
+    temp dir and return its path (release it with :func:`_release`)."""
+    import subprocess
+    import tempfile
+
+    path = tempfile.mkdtemp(prefix="bench_ab_")
+    subprocess.run(
+        ["git", "-C", HERE, "worktree", "add", "--detach", path, ref],
+        check=True, capture_output=True, text=True,
+    )
+    return path
+
+
+def _release(path: str) -> None:
     import shutil
-    import statistics
     import subprocess
 
-    here = os.path.dirname(os.path.abspath(__file__))
-    wt = "/tmp/bench_prev_worktree"
+    shutil.rmtree(path, ignore_errors=True)
+    subprocess.run(
+        ["git", "-C", HERE, "worktree", "prune"], check=False, capture_output=True
+    )
+
+
+def paired_ab(base: dict, head: dict, names: list, pairs: int, leg) -> dict:
+    """The order-balanced paired A/B loop: ``pairs`` rounds over
+    ``names``; ``leg(fn)`` runs one registry entry and returns its wall
+    seconds. Returns {"paired_delta_pct", "min_delta_pct",
+    "paired_detail"}, each keyed by query name; deltas are head
+    relative to base in %, negative = head faster.
+
+    Query-level adjacency: the base and head legs of the SAME query
+    run back-to-back, so a transient load burst lands on (at most) one
+    pair of one query instead of poisoning an entire side's leg for
+    every query (one multi-second burst once inflated 15/18 medians).
+    Order-balanced within the pair: a FIXED (base, head) order hands
+    head the hot-adjacency slot — the run immediately after an
+    identical plan reuses its JIT-compiled codegen classes and
+    page-cache state — and a null test (HEAD vs HEAD, scripts/ab.py
+    --base HEAD) measured that slot alone worth −15…−24% "improvement"
+    on identical code. Alternating which side runs first per pair
+    gives each side the slot equally often (exactly, for an even
+    ``pairs``). The per-pair deltas then fall into two order modes of
+    opposite sign, and the median of an even count averages the two
+    innermost values, so a single outlier pair can still move it."""
+    import statistics
+
+    samples = {n: {"base": [], "head": []} for n in names}
+    for p in range(pairs):
+        for n in names:
+            legs = (("base", base[n]), ("head", head[n]))
+            if p % 2 == 1:
+                legs = legs[::-1]
+            for side, fn in legs:
+                samples[n][side].append(leg(fn))
+
+    out: dict = {"paired_delta_pct": {}, "min_delta_pct": {}, "paired_detail": {}}
+    for n, s in samples.items():
+        b, h = s["base"], s["head"]
+        per_pair = [(hh - bb) / bb * 100.0 for bb, hh in zip(b, h)]
+        out["paired_delta_pct"][n] = round(statistics.median(per_pair), 1)
+        # min-vs-min: contention only ever ADDS time, so the minimum
+        # over pairs is each side's least-contaminated sample — the
+        # robust estimator when any single pair may be poisoned
+        out["min_delta_pct"][n] = round((min(h) - min(b)) / min(b) * 100.0, 1)
+        out["paired_detail"][n] = {
+            "delta_pct_pairs": [round(d, 1) for d in per_pair],
+            "base_s": [round(v, 3) for v in b],
+            "head_s": [round(v, 3) for v in h],
+        }
+    return out
+
+
+def _timed_leg(spark, sf_dir: str):
+    """``leg`` for :func:`paired_ab`: force one query end-to-end with
+    the noop sink at ``sf_dir`` and return its wall seconds."""
+
+    def leg(fn) -> float:
+        t0 = time.perf_counter()
+        _noop(fn(spark, sf_dir))
+        return time.perf_counter() - t0
+
+    return leg
+
+
+def _ab_protocol(spark, head_qs: dict, names: list, errors: dict) -> dict:
+    """Interleaved paired comparison vs PREV_BENCH_COMMIT (round-7
+    verdict #3) through :func:`paired_ab`. Returns {prev_commit, pairs,
+    loadavg, n_processes, paired_delta_pct, min_delta_pct,
+    paired_detail} — empty-ish with an error recorded if the worktree
+    or prev import fails (the main bench must survive a broken A/B
+    leg)."""
     out: dict = {"prev_commit": PREV_BENCH_COMMIT, "pairs": 0}
     try:
         out["loadavg_1m"] = round(os.getloadavg()[0], 2)
@@ -320,106 +401,38 @@ def _ab_protocol(spark, head_qs: dict, names: list, errors: dict) -> dict:
     except OSError:
         pass
     try:
-        shutil.rmtree(wt, ignore_errors=True)
-        subprocess.run(
-            ["git", "-C", here, "worktree", "prune"],
-            check=False, capture_output=True,
-        )
-        subprocess.run(
-            ["git", "-C", here, "worktree", "add", "--detach", wt,
-             PREV_BENCH_COMMIT],
-            check=True, capture_output=True, text=True,
-        )
-        prev_qs = _load_registry(wt)
-        _load_registry(here)  # restore HEAD modules for later importers
+        wt = _checkout(PREV_BENCH_COMMIT)
     except Exception as e:  # noqa: BLE001
         errors["ab_protocol"] = f"{type(e).__name__}: {e}"
         return out
-
-    candidates = [n for n in names if n in prev_qs and n in head_qs]
-    # one warm-up pass for the prev side (HEAD is already warm)
-    paired = []
-    for n in candidates:
-        try:
-            _noop(prev_qs[n](spark, WARMUP_DIR))
-            paired.append(n)
-        except Exception as e:  # noqa: BLE001
-            errors[f"ab_warmup:{n}"] = f"{type(e).__name__}: {e}"
-    spark.catalog.clearCache()
-
-    n_pairs = 4
-    samples: dict[str, dict[str, list]] = {
-        n: {"prev": [], "head": []} for n in paired
-    }
     try:
-        # query-level adjacency: prev and head legs of the SAME query
-        # run back-to-back, so a transient load burst lands on (at
-        # most) one pair of one query instead of poisoning an entire
-        # side's leg for every query (the failure mode the r8 clean
-        # run exposed: one multi-second burst inflated 15/18 medians).
-        # ORDER-BALANCED within the pair (r13 measurement-bug fix): a
-        # FIXED (prev, head) order hands head the hot-adjacency slot —
-        # the run immediately after an identical plan reuses its
-        # JIT-compiled codegen classes and page-cache state — and a
-        # null test (HEAD vs HEAD, scripts/r13_ab.py) measured that
-        # slot alone worth −15…−24% "improvement" on identical code.
-        # Alternating which side runs first per pair splits the
-        # advantage evenly and the per-query median over pairs cancels
-        # it (null test after the fix: ~0%). Pre-r13 paired headlines
-        # carry that bias; BENCH_r12's raw numbers are kept unchanged
-        # in the series and OPTIMIZATION_r13.md documents the break.
-        for p in range(n_pairs):
-            for n in paired:
-                legs = (("prev", prev_qs), ("head", head_qs))
-                if p % 2 == 1:
-                    legs = legs[::-1]
-                for side, qs_side in legs:
-                    t0 = time.perf_counter()
-                    _noop(qs_side[n](spark, SF_DIR))
-                    samples[n][side].append(time.perf_counter() - t0)
+        prev_qs = _load_registry(wt)
+        _load_registry(HERE)  # restore HEAD modules for later importers
+        # one warm-up pass for the prev side (HEAD is already warm)
+        paired = []
+        for n in names:
+            if n not in prev_qs or n not in head_qs:
+                continue
+            try:
+                _noop(prev_qs[n](spark, WARMUP_DIR))
+                paired.append(n)
+            except Exception as e:  # noqa: BLE001
+                errors[f"ab_warmup:{n}"] = f"{type(e).__name__}: {e}"
+        spark.catalog.clearCache()
+        n_pairs = 4
+        out.update(
+            paired_ab(prev_qs, head_qs, paired, n_pairs, _timed_leg(spark, SF_DIR))
+        )
+        out["pairs"] = n_pairs
     except Exception as e:  # noqa: BLE001
         errors["ab_protocol_run"] = f"{type(e).__name__}: {e}"
         return out
-
-    deltas: dict[str, float] = {}
-    min_deltas: dict[str, float] = {}
-    detail: dict[str, dict] = {}
-    for n in paired:
-        per_pair = [
-            (h - p) / p * 100.0
-            for p, h in zip(samples[n]["prev"], samples[n]["head"])
-        ]
-        deltas[n] = round(statistics.median(per_pair), 1)
-        # min-vs-min: contention only ever ADDS time, so the minimum
-        # over pairs is each side's least-contaminated sample — the
-        # robust estimator when any single pair may be poisoned
-        min_deltas[n] = round(
-            (min(samples[n]["head"]) - min(samples[n]["prev"]))
-            / min(samples[n]["prev"])
-            * 100.0,
-            1,
-        )
-        detail[n] = {
-            "delta_pct_pairs": [round(d, 1) for d in per_pair],
-            "prev_s": [round(v, 3) for v in samples[n]["prev"]],
-            "head_s": [round(v, 3) for v in samples[n]["head"]],
-        }
-    out.update(
-        {
-            "pairs": n_pairs,
-            "paired_delta_pct": deltas,
-            "min_delta_pct": min_deltas,
-            "paired_detail": detail,
-        }
-    )
+    finally:
+        _release(wt)
     try:
         out["loadavg_1m_end"] = round(os.getloadavg()[0], 2)
     except OSError:
         pass
-    shutil.rmtree(wt, ignore_errors=True)
-    subprocess.run(
-        ["git", "-C", here, "worktree", "prune"], check=False, capture_output=True
-    )
     return out
 
 
@@ -683,9 +696,9 @@ def main() -> int:
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
 
-    # Detail (spread/extras/recall/errors) goes to its OWN earlier
-    # stdout line AND a sidecar file; the FINAL stdout line stays
-    # compact so the driver's tail-capture window always parses it
+    # Detail (spread/extras/recall/errors) goes to the BENCH_DETAIL.json
+    # sidecar only; stdout carries just the compact contract line so
+    # a consumer that keeps a bounded stdout tail always parses it
     # (round-6 lesson: the single giant line outgrew the window and
     # BENCH_r06.json recorded "parsed": null — the official headline
     # number survived only by reconstruction from fragments).
@@ -707,7 +720,6 @@ def main() -> int:
         "cpu_freq_end": freq_end,
         "sf": sf_val,
     }
-    print(json.dumps(detail))
 
     # THE headline (r11 verdict #1a): the paired-vs-prev-close median
     # delta — the only number in this artifact that is comparable
@@ -757,7 +769,7 @@ def main() -> int:
         # stay on the contract line so the headline is checkable
         # against the numbers it is the median OF; the bulkier
         # per-query blocks (min_delta_pct, duckdb_s, spread, freq)
-        # moved to the detail line + BENCH_DETAIL.json sidecar (r13
+        # live in the BENCH_DETAIL.json sidecar (r13
         # verdict #2/#3: BENCH_r12's one-line JSON outgrew the
         # driver's tail-capture window, parsed null, and orphaned the
         # whole round's PERF alignment).
@@ -789,13 +801,10 @@ def main() -> int:
     # tail, so the self-contained record lives in the repo file
     detail["headline"] = out
     try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "BENCH_DETAIL.json"), "w"
-        ) as f:
+        with open(os.path.join(HERE, "BENCH_DETAIL.json"), "w") as f:
             json.dump(detail, f, indent=1)
     except OSError:
-        pass  # sidecar is best-effort; stdout lines already out
+        pass  # sidecar is best-effort; the contract line still prints
     # the compact headline is the LAST stdout line — paired median,
     # official flag, freq fields all present even under tail capture
     print(json.dumps(out))

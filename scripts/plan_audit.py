@@ -41,7 +41,7 @@ def main() -> int:
         "x_dedup_decontaminate",
         "x_text_bigram_lm",
         # (the fused pipelines moved into bench.HEADLINE in r6; their
-        # returned plans are checkpoint-truncated — scripts/plan_nodes.py
+        # returned plans are checkpoint-truncated — scripts/profile_queries.py
         # is the per-pipeline audit tool)
         "x_text_vocab_topk",
         "x_skew_salted_agg",
@@ -149,7 +149,7 @@ def main() -> int:
     flagged = 0
     # the fused pipelines execute eagerly (localCheckpoint) and return
     # a checkpoint-truncated plan — auditing them here would pay the
-    # full sf0.1 run for an all-zero row; scripts/plan_nodes.py is the
+    # full sf0.1 run for an all-zero row; scripts/profile_queries.py is the
     # per-pipeline audit tool (code-review r6 finding)
     skip = {"x_pipeline_activity_e2e", "x_pipeline_corpus_filter"}
     for n in [q for q in bench.HEADLINE + audited_extras if q not in skip]:

@@ -1,24 +1,28 @@
-"""Round-14 optimization measurement harness (guide §1).
+"""Per-query plan shape, wall time and Spark job count.
 
-For each named query (default: bench.py HEADLINE):
+For each named query (default: bench.py HEADLINE) at $SPARK_GRAFT_SF_DIR:
 
-- captures ``explain("formatted")`` into plans/r14/<q>_<tag>.txt
+- captures ``explain("formatted")`` into <out>/<q>_<tag>.txt
 - counts plan-shape signals (Exchange / Sort / Window / *EvalPython /
-  join strategies / WholeStageCodegen spans)
+  join strategies / WholeStageCodegen spans / parquet scans)
 - times the query end-to-end with the noop sink, N runs, and records
-  the number of Spark jobs the timed run submitted (job-floor
+  the number of Spark jobs the timed runs submitted (job-floor
   accounting: at sf0.1 many queries are fixed-overhead-bound, so the
   job count is the denominator that explains the wall clock)
 
 Usage:
-    python scripts/r14_profile.py [--tag before|after] [--runs 3] [q ...]
+    python scripts/profile_queries.py [--tag before|after] [--runs 3] [--out DIR] [q ...]
 
-Writes plans/r14/<q>_<tag>.txt and prints one JSON line per query plus
-a summary JSON line (so runs can be diffed programmatically).
+Prints one JSON line per query plus a summary JSON line, so a
+``--tag before`` and a ``--tag after`` run can be diffed
+programmatically.
 """
 
 from __future__ import annotations
 
+import argparse
+import contextlib
+import io
 import json
 import os
 import re
@@ -27,9 +31,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-PLANS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                         "plans", "r14")
+import bench  # noqa: E402
 
 
 def _plan_stats(plan: str) -> dict:
@@ -55,47 +57,32 @@ def _plan_stats(plan: str) -> dict:
 
 
 def main() -> int:
-    args = sys.argv[1:]
-    tag = "before"
-    runs = 3
-    names: list[str] = []
-    i = 0
-    while i < len(args):
-        if args[i] == "--tag":
-            tag = args[i + 1]; i += 2
-        elif args[i] == "--runs":
-            runs = int(args[i + 1]); i += 2
-        else:
-            names.append(args[i]); i += 1
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--tag", default="before")
+    ap.add_argument("--runs", type=int, default=3)
+    ap.add_argument("--out", default=os.path.join(bench.HERE, "plans"))
+    ap.add_argument("queries", nargs="*")
+    args = ap.parse_args()
 
-    import bench as B
     import __spark_entry__ as E
     from strava_etl_public_spark.queries import EXTRA_QUERIES as _EXTRAS
     from strava_etl_public_spark.session import get_spark
 
-    spark = get_spark(app_name="r14_profile")
+    spark = get_spark(app_name="profile")
     sc = spark.sparkContext
     qs = dict(_EXTRAS)
     qs.update(E.queries())
-    if not names:
-        names = [n for n in B.HEADLINE if n in qs]
+    names = args.queries or [n for n in bench.HEADLINE if n in qs]
+    os.makedirs(args.out, exist_ok=True)
 
-    os.makedirs(PLANS_DIR, exist_ok=True)
-
-    def noop(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    # warm-up at sf0.001 (JIT/codegen), same as bench
+    # warm-up on the smallest fixture (JIT/codegen), same as bench
     for n in names:
         try:
-            noop(qs[n](spark, "/root/testdata/sf0.001"))
+            bench._noop(qs[n](spark, bench.WARMUP_DIR))
         except Exception as e:  # noqa: BLE001
             print(json.dumps({"query": n, "warmup_error": repr(e)}))
         finally:
             spark.catalog.clearCache()
-
-    import contextlib
-    import io
 
     try:  # Spark 4: the concrete class owns the method
         from pyspark.sql.classic.dataframe import DataFrame as _DF
@@ -110,7 +97,7 @@ def main() -> int:
         orig = _DF.localCheckpoint
         _DF.localCheckpoint = lambda self, eager=True: self  # type: ignore[method-assign]
         try:
-            df = qs[n](spark, SF_DIR)
+            df = qs[n](spark, bench.SF_DIR)
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
                 df.explain("formatted")
@@ -122,18 +109,18 @@ def main() -> int:
     for n in names:
         rec: dict = {"query": n}
         plan = _capture_plan(n)
-        with open(os.path.join(PLANS_DIR, f"{n}_{tag}.txt"), "w") as f:
+        with open(os.path.join(args.out, f"{n}_{args.tag}.txt"), "w") as f:
             f.write(plan)
         rec["plan"] = _plan_stats(plan)
         spark.catalog.clearCache()
 
         times = []
-        group = f"r14_{n}"
-        sc.setJobGroup(group, f"r14 profile: {n}")
+        group = f"profile_{n}"
+        sc.setJobGroup(group, f"profile: {n}")
         jobs_before = len(sc.statusTracker().getJobIdsForGroup(group))
-        for r in range(runs):
+        for _ in range(args.runs):
             t0 = time.perf_counter()
-            noop(qs[n](spark, SF_DIR))
+            bench._noop(qs[n](spark, bench.SF_DIR))
             times.append(round(time.perf_counter() - t0, 3))
             spark.catalog.clearCache()
         jobs_after = len(sc.statusTracker().getJobIdsForGroup(group))
@@ -142,15 +129,16 @@ def main() -> int:
         rec["times"] = times
         rec["best"] = ts[0]
         rec["median"] = ts[len(ts) // 2]
-        rec["jobs_per_run"] = round((jobs_after - jobs_before) / max(runs, 1), 1)
+        rec["jobs_per_run"] = round((jobs_after - jobs_before) / max(args.runs, 1), 1)
         results[n] = rec
         print(json.dumps(rec))
         sys.stdout.flush()
 
-    total_med = round(sum(r.get("median", 0.0) for r in results.values()), 3)
-    print(json.dumps({"summary": True, "tag": tag, "sf_dir": SF_DIR,
+    total_med = round(sum(r["median"] for r in results.values()), 3)
+    print(json.dumps({"summary": True, "tag": args.tag, "sf_dir": bench.SF_DIR,
                       "total_median": total_med,
-                      "medians": {k: v.get("median") for k, v in results.items()}}))
+                      "medians": {k: v["median"] for k, v in results.items()}}))
+    spark.stop()
     return 0
 
 

@@ -53,79 +53,12 @@ def densify(df: DataFrame, key: str, ord_col: str, start: int = 0) -> DataFrame:
     NaN rows in the reference).
 
     This is the canonical two-sided shape that certifies the J2
-    spine-join operator (j1_j2_spine_join). Pipelines that only need
-    the densified OUTPUT (w2, n10, the activity e2e) use
-    :func:`densify_fused` instead — same rows, one pass, no join.
+    spine-join operator (j1_j2_spine_join) and the test oracle for the
+    one-pass gap-fill. Pipelines that only need the densified OUTPUT
+    (w2, n10, the activity e2e) use :func:`densify_interpolate_fused`
+    instead — same rows, one pass, no join.
     """
     return spine(df, key, ord_col, start).join(df, [key, ord_col], "left")
-
-
-def densify_fused(df: DataFrame, key: str, ord_col: str, start: int = 0) -> DataFrame:
-    """One-pass densify (r13): row-identical to :func:`densify` for
-    inputs with ``ord_col >= start``, without the join and without the
-    second computation of ``df``.
-
-    ``densify`` builds the spine as a groupBy-max branch of ``df`` and
-    left-joins ``df`` back — Spark plans the ``df`` subtree TWICE
-    (branch subtrees are never deduplicated; measured in
-    plans/r13/w2_interpolate_linear_before.txt: two full
-    scan+exchange+sort+window subtrees of the streams projection) plus
-    the join machinery itself (broadcast locally, a two-sided
-    co-partitioned equi-join at scale). But each sample row already
-    knows exactly which spine ticks it is responsible for: the
-    half-open gap from its predecessor. So emit, per row, the ticks
-    ``max(start, prev_ord+1) … ord`` via one generator, with every
-    payload column masked NULL except at the sample's own tick:
-
-    - gap ticks come out exactly once (consecutive ranges tile
-      ``start … max(ord)``), with NULL payloads = the join's unmatched
-      spine rows;
-    - the sample's own tick carries its payloads = the matched row;
-    - a duplicate ``(key, ord)`` sample emits just its own tick again
-      = the join's multiplicity;
-    - the first row per key starts its range at ``start`` = the spine
-      head (no trailing ticks exist past max(ord), same as the spine).
-
-    One lag window (same (key, ord) partition+sort every downstream
-    resample/rolling consumer needs anyway) + one generator. Per-gap
-    tick arrays are bounded by the gap length — strictly smaller than
-    ``spine``'s one whole-activity array per key.
-
-    Rows with ``ord_col < start`` are dropped up front (r14, ADVICE
-    r13): ``densify``'s left join silently drops them (the spine has
-    no tick below ``start``), and without the filter a violating input
-    would emit its own tick — a silent divergence between the two
-    shapes. The filter is one codegen'd predicate on the hot path; all
-    oracle-gated inputs are cumulative-sum ticks ≥ 1 so it passes
-    everything in practice. (One residual asymmetry stays documented:
-    a key whose rows are ALL below ``start`` contributes no spine here,
-    while ``densify``'s groupBy-max still emits its key — an input the
-    precondition already excludes.)
-    """
-    rest = [c for c in df.columns if c not in (key, ord_col)]
-    df = df.filter(F.col(ord_col) >= F.lit(start))
-    w = Window.partitionBy(key).orderBy(ord_col)
-    prev = F.lag(ord_col).over(w)
-    lo = F.least(
-        F.greatest(F.coalesce(prev + 1, F.lit(start)), F.lit(start)),
-        F.col(ord_col),
-    )
-    # window expr materialized in its own projection — generators may
-    # not contain window functions directly
-    base = df.withColumn("_lo", lo.cast("long"))
-    ticks = F.sequence(F.col("_lo"), F.col(ord_col).cast("long"))
-    ex = base.select(
-        F.col(key),
-        F.col(ord_col).alias("_sample_ord"),
-        F.explode(ticks).alias(ord_col),
-        *[F.col(c) for c in rest],
-    )
-    is_sample = F.col(ord_col) == F.col("_sample_ord")
-    return ex.select(
-        F.col(key),
-        F.col(ord_col),
-        *[F.when(is_sample, F.col(c)).alias(c) for c in rest],
-    )
 
 
 def densify_interpolate_fused(
@@ -136,15 +69,44 @@ def densify_interpolate_fused(
     start: int = 0,
 ) -> DataFrame:
     """Densify + linear interpolation in ONE pass over the SPARSE
-    table (r14, guide §2.4/§8 — decide with small rows): row-identical
-    to ``interpolate_linear(densify_fused(df, key, ord_col, start),
-    key, ord_col, cols)`` under two preconditions the caller asserts:
+    table. With ``cols=[]`` it is the gap-fill alone, row-identical to
+    :func:`densify` for inputs with ``ord_col >= start``; with ``cols``
+    it is row-identical to ``interpolate_linear(densify(df, key,
+    ord_col, start), key, ord_col, cols)`` under two preconditions the
+    caller asserts:
 
     * ``(key, ord_col)`` is unique (no duplicate sample ticks), and
     * every ``cols`` value is non-NULL on the sample rows.
 
-    Insight: each gap tick ``densify_fused`` emits is generated by the
-    sample at its RIGHT edge — which IS its next non-null neighbor
+    Gap-fill (r13): ``densify`` builds the spine as a groupBy-max
+    branch of ``df`` and left-joins ``df`` back — Spark plans the
+    ``df`` subtree TWICE (branch subtrees are never deduplicated;
+    plans/r13/w2_interpolate_linear_before.txt shows two full
+    scan+exchange+sort+window subtrees) plus the join machinery. But
+    each sample row already knows exactly which spine ticks it is
+    responsible for: the half-open gap from its predecessor. So emit,
+    per row, the ticks ``max(start, prev_ord+1) … ord`` via one
+    generator, with every payload column masked NULL except at the
+    sample's own tick:
+
+    - gap ticks come out exactly once (consecutive ranges tile
+      ``start … max(ord)``), with NULL payloads = the join's unmatched
+      spine rows;
+    - the sample's own tick carries its payloads = the matched row;
+    - a duplicate ``(key, ord)`` sample emits just its own tick again
+      = the join's multiplicity;
+    - the first row per key starts its range at ``start`` = the spine
+      head (no trailing ticks exist past max(ord), same as the spine).
+
+    Rows with ``ord_col < start`` are dropped up front, as
+    ``densify``'s left join drops them (the spine has no tick below
+    ``start``). One residual asymmetry stays: a key whose rows are ALL
+    below ``start`` contributes no spine here, while ``densify``'s
+    groupBy-max still emits its key — an input outside the
+    ``ord_col >= start`` domain.
+
+    Interpolation (r14): each gap tick the gap-fill emits is generated
+    by the sample at its RIGHT edge — which IS its next non-null neighbor
     under the preconditions — and the previous neighbor is one ``lag``
     on the sparse table, in the same window the gap-fill already runs.
     So the interpolation that used to cost TWO window passes (DESC +

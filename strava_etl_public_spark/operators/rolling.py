@@ -56,18 +56,6 @@ from pyspark.sql import functions as F
 REFERENCE_WINDOWS = (1, 5, 10, 20, 30, 45, 60, 120, 300, 600, 1200)
 
 
-def _running(key: str, ord_col: str):
-    """Running (unboundedPreceding → current) frame — Spark evaluates
-    these incrementally (O(1)/row), unlike bounded sliding frames which
-    re-aggregate the whole frame per row (O(w)/row, no retract support
-    in WindowExec's SlidingWindowFunctionFrame)."""
-    return (
-        Window.partitionBy(key)
-        .orderBy(ord_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-
-
 def rolling_mean_triang(
     df: DataFrame,
     key: str,
@@ -141,7 +129,7 @@ def rolling_mean_triang(
     fits), while re-associating raw double sums could drift across a
     round(·,6) boundary. The caller asserts density; a gap in the
     ticks silently breaks the identity, so only densified inputs
-    (resample.densify / densify_fused output) qualify —
+    (resample.densify / densify_interpolate_fused output) qualify —
     tests/test_rolling.py pins equivalence vs the general path.
     """
     if dense_ord and not quantize:
@@ -237,35 +225,6 @@ def rolling_mean_triang(
     # expressions), measured as multi-second driver time on the e2e
     # shape (r14; guide §7.3 — planning is single-threaded driver work)
     return out.drop(*pass1.keys(), *pass2.keys())
-
-
-def rolling_mean_box(
-    df: DataFrame,
-    key: str,
-    ord_col: str,
-    cols: Sequence[str],
-    windows: Sequence[int] = REFERENCE_WINDOWS,
-    suffix: str = "box",
-) -> DataFrame:
-    """Unweighted trailing means with the same min_periods/NULL mask.
-
-    Same prefix-sum-difference trick as ``rolling_mean_triang`` — O(1)
-    per row per window instead of O(w)."""
-    run = _running(key, ord_col)
-    w_lag = Window.partitionBy(key).orderBy(ord_col)
-    pass1: dict[str, Column] = {}
-    for c in cols:
-        pass1[f"_cs_{c}"] = F.sum(c).over(run)
-        pass1[f"_cc_{c}"] = F.count(c).over(run)
-    final: dict[str, Column] = {}
-    for w in windows:
-        for c in cols:
-            s = F.col(f"_cs_{c}") - F.coalesce(F.lag(f"_cs_{c}", w).over(w_lag), F.lit(0.0))
-            n = F.col(f"_cc_{c}") - F.coalesce(F.lag(f"_cc_{c}", w).over(w_lag), F.lit(0))
-            final[f"{c}_{suffix}_{w}"] = F.when(n == w, s / F.lit(float(w)))
-    out = df.withColumns(pass1).withColumns(final)
-    # explicit helper names — see rolling_mean_triang's drop note
-    return out.drop(*pass1.keys())
 
 
 def activity_maxes(

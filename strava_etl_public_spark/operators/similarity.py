@@ -1363,19 +1363,20 @@ def knn_join_blocked(
     per-block join is ~15k² cosines per bucket worst-case under the
     cap — embarrassingly parallel. ``emb`` feeds FOUR consumers (the
     size agg, both small-tier join legs, the hot-member scan) and
-    Spark never dedupes common subtrees, so it is persisted here; the
-    (N·k)-row result is eagerly materialized as the ONE barrier so the
-    cache releases on exit instead of relying on the caller (r14,
-    guide §5 — the minhash_lsh_dedup cache-lifetime discipline; the
-    old contract leaked the persisted corpus+vectors for the session
-    lifetime whenever the caller forgot to unpersist, which the
-    x_sim_knn_join query did)."""
+    Spark never dedupes common subtrees, so it is persisted here unless
+    the caller already cached it; the (N·k)-row result is eagerly
+    materialized as the ONE barrier so a cache made here releases on
+    exit instead of relying on the caller (r14, guide §5 — the
+    minhash_lsh_dedup cache-lifetime discipline). A cache the caller
+    made is the caller's: it is neither re-persisted nor released."""
     from pyspark import StorageLevel
     from pyspark.sql import Window
 
     from .dedup import cosine
 
-    emb = emb.persist(StorageLevel.MEMORY_AND_DISK)
+    owns_cache = emb.storageLevel == StorageLevel.NONE
+    if owns_cache:
+        emb = emb.persist(StorageLevel.MEMORY_AND_DISK)
     sizes = emb.groupBy(block_col).agg(
         F.count(F.lit(1)).alias("_n"), F.min(id_col).alias("_min_id")
     )
@@ -1433,7 +1434,8 @@ def knn_join_blocked(
     try:
         return out.localCheckpoint(eager=True)
     finally:
-        emb.unpersist()
+        if owns_cache:
+            emb.unpersist()
 
 
 def label_centroids(emb: DataFrame, label_col: str, vec_col: str) -> DataFrame:

@@ -923,8 +923,9 @@ def w2_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2: densify + linear interpolation with pandas edge semantics
     (reference main.py:47-59): interior gaps linear, trailing ffill,
     leading stay NULL. Identical expression tree both engines → exact
-    double match, no rounding. r13: densify_fused — the join-shape
-    densify planned the streams subtree twice (scan+shuffle+window ×2,
+    double match, no rounding. r13: the one-pass gap-fill of
+    resample.densify_interpolate_fused — the join-shape densify
+    planned the streams subtree twice (scan+shuffle+window ×2,
     plans/r13/w2_interpolate_linear_before.txt) just to build the
     spine; the one-pass gap-fill emits the same rows from one subtree
     with no join (J2's join shape itself stays certified by

@@ -14,6 +14,7 @@ import pytest
 from tests.conftest import to_sdf
 from strava_etl_public_spark.operators.resample import (
     densify,
+    densify_interpolate_fused,
     interpolate_linear,
     mask_endpoints,
     row_position,
@@ -183,7 +184,7 @@ def test_downsample_ohlc_known_values_and_plan(spark):
 
 
 # ---------------------------------------------------------------------------
-# densify_fused ≡ densify (r13 one-pass gap-fill)
+# fused gap-fill ≡ densify: densify_interpolate_fused(..., cols=[])
 # ---------------------------------------------------------------------------
 
 
@@ -198,12 +199,10 @@ def _rows_multiset(df):
 def test_densify_fused_equals_join_shape(spark, seed):
     """Row-identical (multiset) to the spine left-join on sparse
     multi-key frames with leading gaps and NULL payloads."""
-    from strava_etl_public_spark.operators.resample import densify_fused
-
     pdf = _sparse_frame(seed)
     sdf = to_sdf(spark, pdf)
     a = densify(sdf, "activity_id", "time_key")
-    b = densify_fused(sdf, "activity_id", "time_key")
+    b = densify_interpolate_fused(sdf, "activity_id", "time_key", cols=[])
     assert list(a.columns) == list(b.columns)
     assert _rows_multiset(a) == _rows_multiset(b)
 
@@ -212,8 +211,6 @@ def test_densify_fused_edges(spark):
     """Duplicate (key, ord) samples keep the join's multiplicity; a
     single-row key with a leading gap fills from start; start offsets
     respected."""
-    from strava_etl_public_spark.operators.resample import densify_fused
-
     pdf = pd.DataFrame(
         {
             "activity_id": [1, 1, 1, 2],
@@ -224,7 +221,9 @@ def test_densify_fused_edges(spark):
     sdf = to_sdf(spark, pdf)
     for start in (0, 1):
         a = densify(sdf, "activity_id", "time_key", start=start)
-        b = densify_fused(sdf, "activity_id", "time_key", start=start)
+        b = densify_interpolate_fused(
+            sdf, "activity_id", "time_key", cols=[], start=start
+        )
         assert _rows_multiset(a) == _rows_multiset(b), start
 
 
@@ -232,12 +231,14 @@ def test_densify_fused_drops_below_start_like_join_shape(spark):
     """r14 (ADVICE r13): a sample at ord < start must be DROPPED, as
     densify's left join drops it — the old fused path silently emitted
     the violating row's own tick."""
-    from strava_etl_public_spark.operators.resample import densify, densify_fused
-
     df = spark.createDataFrame(
         [(1, -2, 99.0), (1, 1, 10.0), (1, 3, 30.0)], "k long, t long, v double"
     )
-    fused = densify_fused(df, "k", "t", start=0).orderBy("t").collect()
+    fused = (
+        densify_interpolate_fused(df, "k", "t", cols=[], start=0)
+        .orderBy("t")
+        .collect()
+    )
     joined = densify(df, "k", "t", start=0).orderBy("t").collect()
     assert [r.asDict() for r in fused] == [r.asDict() for r in joined]
     assert [r["t"] for r in fused] == [0, 1, 2, 3]
@@ -245,18 +246,10 @@ def test_densify_fused_drops_below_start_like_join_shape(spark):
 
 def test_densify_interpolate_fused_equals_two_pass(spark):
     """r14 fusion: densify_interpolate_fused must be BIT-identical to
-    interpolate_linear(densify_fused(...)) on precondition-satisfying
+    interpolate_linear(densify(...)) on precondition-satisfying
     input (unique ticks, non-null sample values) — gaps, leading gaps,
     multi-key, a non-interpolated payload column, and single-sample
     keys included."""
-    import numpy as np
-
-    from strava_etl_public_spark.operators.resample import (
-        densify_fused,
-        densify_interpolate_fused,
-        interpolate_linear,
-    )
-
     rng = np.random.default_rng(11)
     rows = []
     for k in range(6):
@@ -268,7 +261,7 @@ def test_densify_interpolate_fused_equals_two_pass(spark):
             )
     df = spark.createDataFrame(rows, "k long, t long, v double, aux long")
     want = (
-        interpolate_linear(densify_fused(df, "k", "t"), "k", "t", ["v"])
+        interpolate_linear(densify(df, "k", "t"), "k", "t", ["v"])
         .orderBy("k", "t")
         .collect()
     )

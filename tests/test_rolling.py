@@ -18,7 +18,6 @@ from tests.conftest import to_sdf
 from strava_etl_public_spark.operators.rolling import (
     REFERENCE_WINDOWS,
     activity_maxes,
-    rolling_mean_box,
     rolling_mean_triang,
     rolling_triang_pandas_oracle,
     triang_weights,
@@ -75,31 +74,6 @@ def test_triang_matches_pandas_oracle(spark, seed):
             have = sub[f"x_tri_{w}"].astype(float)
             np.testing.assert_allclose(
                 have.to_numpy(),
-                want.to_numpy(),
-                rtol=1e-9,
-                atol=1e-9,
-                err_msg=f"key={k} w={w}",
-            )
-
-
-def test_box_matches_pandas(spark):
-    pdf = _random_frame(7)
-    sdf = to_sdf(spark, pdf)
-    got = (
-        rolling_mean_box(sdf, "activity_id", "t", ["x"], (1, 3, 5))
-        .toPandas()
-        .sort_values(["activity_id", "t"])
-    )
-    for k, grp in pdf.groupby("activity_id"):
-        series = grp.sort_values("t")["x"].astype(float).reset_index(drop=True)
-        sub = got[got.activity_id == k].reset_index(drop=True)
-        for w in (1, 3, 5):
-            # plain rolling mean propagates NaN only via min_periods;
-            # match our stricter pandas-win_type parity (NaN in frame -> NaN)
-            want = series.rolling(w, min_periods=w).mean()
-            want[series.rolling(w, min_periods=1).apply(lambda f: np.isnan(f).any(), raw=True) > 0] = np.nan
-            np.testing.assert_allclose(
-                sub[f"x_box_{w}"].astype(float).to_numpy(),
                 want.to_numpy(),
                 rtol=1e-9,
                 atol=1e-9,

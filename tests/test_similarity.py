@@ -516,8 +516,10 @@ def test_hier_assign_build_recall_close_to_flat(spark, sf_dir):
 def test_knn_join_blocked_releases_input_cache(spark):
     """r14 (r13 verdict #7): knn_join_blocked persists its 4-consumer
     input internally; the eager result barrier must release that cache
-    on exit instead of leaking it for the session lifetime."""
+    on exit instead of leaking it for the session lifetime. A cache the
+    caller made before the call is the caller's and must survive it."""
     import numpy as np
+    from pyspark import StorageLevel
 
     from strava_etl_public_spark.operators.similarity import knn_join_blocked
 
@@ -534,3 +536,9 @@ def test_knn_join_blocked_releases_input_cache(spark):
     # +1: the result's own localCheckpoint blocks; the input cache
     # must be gone
     assert after - before <= 1
+
+    cached = df.persist(StorageLevel.MEMORY_ONLY)
+    cached.count()
+    assert knn_join_blocked(cached, "id", "v", "blk", k=3).count() == out.count()
+    assert cached.storageLevel == StorageLevel.MEMORY_ONLY
+    cached.unpersist()
