@@ -330,8 +330,9 @@ def paired_ab(base: dict, head: dict, names: list, pairs: int, leg) -> dict:
     """The order-balanced paired A/B loop: ``pairs`` rounds over
     ``names``; ``leg(fn)`` runs one registry entry and returns its wall
     seconds. Returns {"paired_delta_pct", "min_delta_pct",
-    "paired_detail"}, each keyed by query name; deltas are head
-    relative to base in %, negative = head faster.
+    "block_delta_pct", "block_ci90_pct", "paired_detail"}, each keyed
+    by query name; deltas are head relative to base in %, negative =
+    head faster.
 
     Query-level adjacency: the base and head legs of the SAME query
     run back-to-back, so a transient load burst lands on (at most) one
@@ -345,8 +346,18 @@ def paired_ab(base: dict, head: dict, names: list, pairs: int, leg) -> dict:
     on identical code. Alternating which side runs first per pair
     gives each side the slot equally often (exactly, for an even
     ``pairs``). The per-pair deltas then fall into two order modes of
-    opposite sign, and the median of an even count averages the two
-    innermost values, so a single outlier pair can still move it."""
+    opposite sign, and the median of an even count averages one value
+    from each mode, so it reads the slot advantage as noise, not as
+    zero: a null test read −14.4% then +6.2%.
+
+    ``block_delta_pct`` cancels the slot instead. A block is pair 2k
+    (base first) plus pair 2k+1 (head first); its log-ratio
+    ``½·(ln h₁/b₁ + ln h₂/b₂)`` removes any multiplicative advantage
+    of the second slot exactly. It is the median over blocks (the
+    last pair of an odd count is dropped), with ``block_ci90_pct`` a
+    90% percentile-bootstrap interval of that median; a delta whose
+    interval holds 0 is not resolved."""
+    import math
     import statistics
 
     samples = {n: {"base": [], "head": []} for n in names}
@@ -358,11 +369,22 @@ def paired_ab(base: dict, head: dict, names: list, pairs: int, leg) -> dict:
             for side, fn in legs:
                 samples[n][side].append(leg(fn))
 
-    out: dict = {"paired_delta_pct": {}, "min_delta_pct": {}, "paired_detail": {}}
+    def pct(log_ratio: float) -> float:
+        return round(math.expm1(log_ratio) * 100.0, 1)
+
+    out: dict = {
+        "paired_delta_pct": {}, "min_delta_pct": {},
+        "block_delta_pct": {}, "block_ci90_pct": {}, "paired_detail": {},
+    }
     for n, s in samples.items():
         b, h = s["base"], s["head"]
         per_pair = [(hh - bb) / bb * 100.0 for bb, hh in zip(b, h)]
         out["paired_delta_pct"][n] = round(statistics.median(per_pair), 1)
+        lr = [math.log(hh) - math.log(bb) for bb, hh in zip(b, h)]
+        blocks = [(lr[i] + lr[i + 1]) / 2 for i in range(0, len(lr) - 1, 2)]
+        if blocks:
+            out["block_delta_pct"][n] = pct(statistics.median(blocks))
+            out["block_ci90_pct"][n] = [pct(v) for v in _bootstrap_ci90(blocks)]
         # min-vs-min: contention only ever ADDS time, so the minimum
         # over pairs is each side's least-contaminated sample — the
         # robust estimator when any single pair may be poisoned
@@ -373,6 +395,19 @@ def paired_ab(base: dict, head: dict, names: list, pairs: int, leg) -> dict:
             "head_s": [round(v, 3) for v in h],
         }
     return out
+
+
+def _bootstrap_ci90(xs: list, resamples: int = 2000, seed: int = 0) -> tuple:
+    """90% percentile-bootstrap interval of ``median(xs)`` (fixed seed,
+    so the same samples always give the same interval)."""
+    import random
+    import statistics
+
+    rng = random.Random(seed)
+    meds = sorted(
+        statistics.median(rng.choices(xs, k=len(xs))) for _ in range(resamples)
+    )
+    return meds[int(0.05 * resamples)], meds[int(0.95 * resamples) - 1]
 
 
 def _timed_leg(spark, sf_dir: str):
@@ -390,10 +425,9 @@ def _timed_leg(spark, sf_dir: str):
 def _ab_protocol(spark, head_qs: dict, names: list, errors: dict) -> dict:
     """Interleaved paired comparison vs PREV_BENCH_COMMIT (round-7
     verdict #3) through :func:`paired_ab`. Returns {prev_commit, pairs,
-    loadavg, n_processes, paired_delta_pct, min_delta_pct,
-    paired_detail} — empty-ish with an error recorded if the worktree
-    or prev import fails (the main bench must survive a broken A/B
-    leg)."""
+    loadavg, n_processes} and the :func:`paired_ab` keys — empty-ish
+    with an error recorded if the worktree or prev import fails (the
+    main bench must survive a broken A/B leg)."""
     out: dict = {"prev_commit": PREV_BENCH_COMMIT, "pairs": 0}
     try:
         out["loadavg_1m"] = round(os.getloadavg()[0], 2)
@@ -557,16 +591,12 @@ def main() -> int:
     for n in (
         "x_sim_topk_lsh",
         "x_sim_topk_ivf",
-        "x_sim_topk_ivf_sampled",
-        "x_text_repetition",
-        "x_dedup_decontaminate",
         "x_text_bigram_lm",
         "x_range_join_sessions",
         "x_embed_quantize_int8",
-        # sixth-to-eighth batch curation operators (the heavy graph rows
-        # — x_graph_triangles 50 s, x_pipeline_entity_resolution 22 s at
-        # sf0.1 — are measured once in SCALE.md, not re-paid per round)
-        "x_dedup_jaccard_exact",
+        # sixth-to-eighth batch curation operators (the heavy graph row
+        # — x_graph_triangles 50 s at sf0.1 — is measured once in
+        # SCALE.md, not re-paid per round)
         "x_shard_manifest",
         "x_sketch_kmv",
         "x_sketch_quantile_hist",
@@ -576,14 +606,12 @@ def main() -> int:
         "x_geo_radius_join",
         # fifteenth-sixteenth batch (r7)
         "x_sim_knn_join",
-        "x_curation_token_budget",
         "x_curation_dsir",
         "x_mm_gif_frames",
         # seventeenth batch (late r7) — x_mm_jpeg_stats (51 s at
         # sf0.1: pure-Python DCT decode of 5000 real JPEGs) follows
         # the heavy-row convention: measured once in SCALE.md, not
         # re-paid per round
-        "x_pipeline_export",
         "x_text_cdc_chunks",
         "x_feature_trailing_window",
         "x_pipeline_curation",
@@ -775,6 +803,10 @@ def main() -> int:
         # whole round's PERF alignment).
         "prev_commit": ab.get("prev_commit"),
         "paired_delta_pct": ab.get("paired_delta_pct", {}),
+        # slot-cancelling per-block estimate and its 90% bootstrap
+        # interval (see paired_ab)
+        "block_delta_pct": ab.get("block_delta_pct", {}),
+        "block_ci90_pct": ab.get("block_ci90_pct", {}),
         "loadavg_1m": ab.get("loadavg_1m"),
         "n_processes": ab.get("n_processes"),
         # idle-box gate evidence (r8 verdict #2) + mid-run foreign-CPU

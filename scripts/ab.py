@@ -12,9 +12,10 @@ read ~0%).
 Usage:
     python scripts/ab.py [--base REF] [--head REF] [--pairs N] q [q ...]
 
-Prints one JSON line: per query the median and min-vs-min paired
-deltas (head relative to base, %; positive = head slower) and both
-sides' samples.
+Prints one JSON line: per query the median, min-vs-min and per-block
+paired deltas with the block delta's 90% bootstrap interval (head
+relative to base, %; positive = head slower) and both sides' samples.
+The block delta cancels the second slot's advantage; read it first.
 """
 
 from __future__ import annotations

@@ -756,8 +756,8 @@ def shape_digest(rng, pools):
     """Order-free multiset digest over a random grouping — the batch
     twin of the streaming AvailableNow fingerprint (count / bit-XOR /
     modular sum of a 60-bit md5 row hash over cast-stable columns).
-    Exercises the commutative-monoid aggregation path whose streaming
-    face x_stream_fingerprint / x_stream_available_now run; row-hash
+    Exercises the commutative-monoid aggregation path that the
+    streaming AvailableNow fingerprint runs; row-hash
     construction differs per dialect (conv vs 0x-cast), so this emits
     a (spark_sql, duck_sql) pair."""
     t = rng.choice(["customer", "orders", "lineitem", "part", "events"])
@@ -895,8 +895,7 @@ def shape_recursive(rng, pools):
 
 
 def shape_variant_path(rng, pools):
-    """VARIANT / JSON path extraction (the surface x_variant_shred
-    enabled): a nested JSON document is constructed from real columns,
+    """VARIANT / JSON path extraction: a nested JSON document is constructed from real columns,
     parsed, and shredded back with typed paths — object field, string
     field, and array index. Spark goes through parse_json → VARIANT →
     variant_get; DuckDB through to_json(struct_pack) → json extraction
@@ -969,7 +968,7 @@ def shape_range_frame(rng, pools):
 
 def shape_session_window(rng, pools):
     """Built-in session_window aggregation vs the gaps-and-islands
-    rewrite (the x_session_window_builtin pair, randomized): Spark
+    rewrite, randomized: Spark
     merges events whose gap is STRICTLY under the timeout, so the
     islands side breaks on diff >= gap and reconstructs
     end = last + gap. Tie rows (same user, same second) are safe:

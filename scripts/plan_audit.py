@@ -37,25 +37,20 @@ def main() -> int:
     qs = E.queries()
     #: bench extras with their own scale posture worth auditing
     audited_extras = [
-        "x_text_repetition",
-        "x_dedup_decontaminate",
         "x_text_bigram_lm",
         # (the fused pipelines moved into bench.HEADLINE in r6; their
         # returned plans are checkpoint-truncated — scripts/profile_queries.py
         # is the per-pipeline audit tool)
         "x_text_vocab_topk",
         "x_skew_salted_agg",
-        "x_rollup_revenue",
-        "x_cube_revenue",
-        "x_pivot_event_counts",
         "x_range_join_sessions",
         "x_sample_stratified",
         "x_embed_quantize_int8",
         "x_dedup_containment",
-        # sixth-to-ninth batch curation operators (x_graph_triangles,
-        # x_dedup_jaccard_exact, x_text_dup_spans checkpoint internally
-        # → their returned plans are scan-of-checkpoint; they are
-        # audited by plan reading at change time, not here)
+        # sixth-to-ninth batch curation operators (x_graph_triangles and
+        # x_text_dup_spans checkpoint internally → their returned plans
+        # are scan-of-checkpoint; they are audited by plan reading at
+        # change time, not here)
         "x_sketch_kmv",
         "x_sketch_kmv_pairs",
         "x_ohlc_downsample",
@@ -65,24 +60,17 @@ def main() -> int:
         "x_hist_equidepth",
         "x_embed_centroids",
         "x_mm_audio_stats",
-        "x_split_contamination",
         "x_shard_manifest",
         "x_interval_join_overlap",
         "x_sketch_quantile_hist",
-        "x_drift_psi",
         "x_embed_covariance",
-        "x_merge_into",
-        "x_markov_transitions",
         "x_bootstrap_ci",
         "x_ab_mannwhitney",
         "x_fuzzy_join_names",
         # fifteenth batch (r7 curation)
         "x_sim_knn_join",
-        "x_curation_token_budget",
         "x_curation_dsir",
-        "x_text_encoding_quality",
         "x_mm_gif_frames",
-        "x_dedup_keep_longest",
         # late-r7 waves (span_removal / dup_extents / heavy hitters /
         # eval-ann / pit / export checkpoint internally — audited at
         # change time; these return live plans)
@@ -93,58 +81,28 @@ def main() -> int:
         "x_text_cdc_chunks",
         "x_split_leakage_free",
         "x_pseudonymize_join",
-        "x_dataset_fingerprint",
         "x_join_cardinality_report",
-        "x_weighted_median",
         "x_feature_trailing_window",
         "x_ab_cuped",
         "x_graph_khop",
         # round-8 live-plan additions (x_dedup_incremental /
-        # x_state_time_travel / x_stream_incremental_clusters
-        # checkpoint internally — audited at change time)
-        "x_sim_ivf_incremental",
+        # x_stream_incremental_clusters checkpoint internally — audited
+        # at change time)
         "x_eval_retrieval_mrr_map",
-        "x_fingerprint_incremental",
         # round-8 third/fourth waves (the fingerprint near-dups and
         # the staging queries — compact/zonemap/dpp — checkpoint
         # internally; audited at change time + scale_ratio entries)
-        "x_tpch_q7_volume",
-        "x_tpch_q12_priority",
-        "x_tpch_q14_promo",
-        "x_tpch_q15_top_supplier",
-        "x_tpch_q18_large_orders",
-        "x_tpch_q19_disjunctive",
-        "x_ab_srm",
-        "x_eval_calibration",
         "x_eval_auc",
         "x_global_row_ids",
-        "x_ids_incremental",
         # round-8 fourth wave: the TPC-H shape-battery closure (live
         # plans; x_sql_recursive_khop / x_udtf_chunk_windows and the
         # streaming rows checkpoint or sink internally — audited at
-        # change time). x_ts_ewma is EXCLUDED by design: its
-        # FlatMapGroupsInPandas is the sanctioned imperative path and
-        # would false-positive a python-eval check meant for scalar
-        # row-at-a-time UDFs.
-        "x_tpch_q2_min_cost_supplier",
+        # change time).
         "x_tpch_q4_order_priority",
-        "x_tpch_q8_market_share",
-        "x_tpch_q9_nation_profit",
-        "x_tpch_q11_important_parts",
         "x_tpch_q13_custdist",
         "x_tpch_q16_supplier_cnt",
-        "x_tpch_q17_small_qty",
-        "x_tpch_q20_part_promotion",
         "x_tpch_q21_waiting_supplier",
         "x_tpch_q22_dormant_customers",
-        "x_variant_shred",
-        # round-8 fifth/sixth waves (live plans; lateral/udtf/observe/
-        # optimize/variant-explode/index-incremental/stream queries
-        # checkpoint or sink internally — audited at change time)
-        "x_session_window_builtin",
-        "x_ansi_try_functions",
-        "x_attribution_multi_touch",
-        "x_path_trigrams",
     ]
     flagged = 0
     # the fused pipelines execute eagerly (localCheckpoint) and return

@@ -34,7 +34,6 @@ QUERIES = [
     "x_sim_topk_ivf_arrow",
     "x_text_tfidf",
     # round-8 promotions + the incremental maintainer
-    "x_pipeline_export",
     "x_text_hybrid_retrieval",
     "x_pit_join_state",
     "x_feature_trailing_window",

@@ -1,7 +1,7 @@
 """Measure the deletion-vector claim: DELETE cost ∝ deleted rows,
 never table volume.
 
-x_table_delete_vectors proves DV correctness at fixture scale; this
+tests/test_table*.py prove DV correctness at fixture scale; this
 script MEASURES the scale argument (SCALE.md's claim-then-measure
 discipline) on gen-scale events: for delete shares {0.1%, 1%, 10%},
 compare

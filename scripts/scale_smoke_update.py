@@ -1,7 +1,7 @@
 """Measure the merge-on-read UPDATE claim: cost ∝ updated rows, never
 table volume.
 
-x_table_update_restore proves correctness at fixture scale; this
+tests/test_table*.py prove correctness at fixture scale; this
 script MEASURES the scale argument (SCALE.md's claim-then-measure
 discipline) on gen-scale events: for update shares {0.1%, 1%, 10%},
 compare

@@ -179,19 +179,6 @@ def _tri_list_sql(w: int, col: str) -> str:
     )
 
 
-def _tri_lag_sql(w: int, col: str = "value", over: str = "w") -> str:
-    """DuckDB lag-formula for a triangular trailing mean of width w —
-    the oracle form (integer weights, explicit lags; any NULL or short
-    frame propagates NULL through +)."""
-    wts = [int(x) for x in (rolling.triang_weights(w) * (w + 1 if w % 2 == 1 else w)).round()]
-    terms = []
-    for j, wt in enumerate(wts):
-        lagn = w - 1 - j
-        term = f"{wt}*lag({col},{lagn}) OVER {over}" if lagn else f"{wt}*{col}"
-        terms.append(term)
-    return f"({' + '.join(terms)}) / {float(sum(wts))}"
-
-
 # ---------------------------------------------------------------------------
 # 2.A  Sources / scans / sinks
 # ---------------------------------------------------------------------------
@@ -984,8 +971,6 @@ def w3_w4_position_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-
-
 def _g2_oracle() -> str:
     wins = rolling.REFERENCE_WINDOWS
     list_wins = [w for w in wins if w > 1]
@@ -1387,101 +1372,6 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_extra(
-    "q_pivot_event_counts",
-    oracle="""
-SELECT user_id,
-       CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS click,
-       CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS error,
-       CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchase,
-       CAST(SUM(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS signup,
-       CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS view
-FROM events GROUP BY user_id
-""",
-)
-def q_pivot_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot: long→wide counts (the rolling_dict 33-column shape,
-    SURVEY §1.1d). Explicit pivot values → single pass, no extra job
-    to discover keys."""
-    ensure_harness_conf(spark)
-    types = ["click", "error", "purchase", "signup", "view"]
-    ev = load(spark, sf_dir, "events")
-    out = ev.groupBy("user_id").pivot("event_type", types).count().na.fill(0, types)
-    return out.select("user_id", *[F.col(t).cast("long").alias(t) for t in types])
-
-
-@register_extra(
-    "q_rollup_distinct",
-    oracle="""
-SELECT l_returnflag, l_linestatus,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS sum_qty,
-       CAST(count(DISTINCT l_suppkey) AS BIGINT) AS n_supp
-FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-""",
-)
-def q_rollup_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchical rollup totals + distinct aggregation in one pass
-    (§2.D closing: both free in Spark once declarative) — the distinct
-    count runs through Catalyst's expand + two-phase agg under the
-    rollup grouping sets."""
-    ensure_harness_conf(spark)
-    li = load(spark, sf_dir, "lineitem")
-    return li.rollup("l_returnflag", "l_linestatus").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        _dsum("l_quantity").alias("sum_qty"),
-        F.countDistinct("l_suppkey").cast("long").alias("n_supp"),
-    )
-
-
-@register_extra(
-    "q_semi_anti_join",
-    oracle="""
-SELECT c_custkey, 'has_orders' AS status FROM customer
-WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-UNION ALL
-SELECT c_custkey, 'no_orders' AS status FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-""",
-)
-def q_semi_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi/anti joins (EXISTS / NOT EXISTS) — §2.C note: A7's probe is
-    semi-join-shaped; the engine ships both natively."""
-    ensure_harness_conf(spark)
-    c = load(spark, sf_dir, "customer")
-    o = load(spark, sf_dir, "orders").select("o_custkey")
-    semi = c.join(o, c.c_custkey == o.o_custkey, "left_semi").select(
-        "c_custkey", F.lit("has_orders").alias("status")
-    )
-    anti = c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(
-        "c_custkey", F.lit("no_orders").alias("status")
-    )
-    return semi.unionByName(anti)
-
-
-@register_extra(
-    "q_asof_join",
-    oracle="""
-WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-r AS (SELECT user_id, ts, value FROM events WHERE event_type = 'error')
-SELECT l.event_id, l.user_id, r.value AS value_asof
-FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts
-""",
-)
-def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of backward join (§2.C extension): for each purchase, the
-    latest error value at-or-before it, per user. Engine: union+carry
-    window (one sort, no range explode) — oracle: DuckDB native ASOF."""
-    ensure_harness_conf(spark)
-    from .operators.asof import asof_join_backward
-
-    ev = load(spark, sf_dir, "events")
-    left = ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
-    right = ev.filter(F.col("event_type") == "error").select("user_id", "ts", "value")
-    out = asof_join_backward(left, right, by="user_id", ts="ts", value_cols=["value"])
-    return out.select("event_id", "user_id", "value_asof")
-
-
 # ---------------------------------------------------------------------------
 # Flagship (SURVEY §7 M0): trailing rolling mean + per-activity max —
 # the reference's analytical heart (main.py:83-106) on fixture streams.
@@ -1534,8 +1424,6 @@ from .queries_order import QUERY_ORDER, SURVEY_COVERAGE  # noqa: E402
 # streaming) register themselves on import — must stay at module bottom
 # so `register` and the shared helpers above exist.
 from . import queries_ext  # noqa: E402,F401  (registry side-effect)
-
-
 
 
 def _finalize_registry() -> None:

@@ -12,18 +12,6 @@ to 6dp only where they feed an ordering.
 
 from __future__ import annotations
 
-import uuid
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
-from pyspark.sql import functions as F
-
-from .functions import epoch as ep
-from .io import load
-from .session import ensure_harness_conf
-from .queries import register, register_extra, streams
-from .operators import dedup, multimodal, similarity, text
-
 # ---------------------------------------------------------------------------
 # Shared oracle fragments
 # ---------------------------------------------------------------------------
@@ -61,5 +49,3 @@ def _cos_sql(a: str, b: str) -> str:
         f"({_dot_sql(a, b)} / "
         f"(sqrt({_dot_sql(a, a)}) * sqrt({_dot_sql(b, b)})))"
     )
-
-

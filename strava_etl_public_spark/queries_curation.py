@@ -1,4 +1,4 @@
-"""Curation: domain mixing, row IDs, boilerplate, BPE, exact joins, PSI.
+"""Curation: domain mixing, row IDs, boilerplate, duplicated spans, BPE, DSIR.
 
 Split from the former single-file queries_ext.py (round 7, verdict
 #7): registrations, names, and oracle SQL are unchanged — the
@@ -19,10 +19,6 @@ from .io import load  # noqa: F401
 from .session import ensure_harness_conf  # noqa: F401
 from .queries import register, register_extra, streams  # noqa: F401
 from .operators import dedup, multimodal, similarity, text  # noqa: F401
-from .queries_common import _SH_SQL, _cos_sql, _dot_sql  # noqa: F401
-from .queries_dedup_sim import _CC_CLOSURE_SQL, x_dedup_ngram_jaccard  # noqa: F401
-from .queries_text_mm_stream import _run_stream, _stage_events_dir  # noqa: F401
-from .queries_snapshots import x_snapshot_diff  # noqa: F401
 
 
 # ---------------------------------------------------------------------------
@@ -124,51 +120,6 @@ def x_global_row_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = ev.select("event_id", ep.epoch_s(ev).alias("es"))
     ids = assign_global_ids(e, ["es", "event_id"], num_partitions=8)
     return ids.filter(F.col("event_id") % 97 == 0)
-
-
-@register_extra(
-    "x_ids_incremental",
-    oracle="""
-WITH c AS (
-  SELECT doc_id, row_number() OVER (ORDER BY doc_id) AS row_id
-  FROM documents WHERE doc_id % 5 <> 0
-),
-n AS (SELECT count(*) AS nc FROM documents WHERE doc_id % 5 <> 0),
-b AS (
-  SELECT doc_id,
-         (SELECT nc FROM n) + row_number() OVER (ORDER BY doc_id) AS row_id
-  FROM documents WHERE doc_id % 5 = 0
-)
-SELECT doc_id, CAST(row_id AS BIGINT) AS row_id FROM c
-UNION ALL
-SELECT doc_id, CAST(row_id AS BIGINT) AS row_id FROM b
-""",
-)
-def x_ids_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """APPEND-ONLY global row IDs (the incremental face of
-    x_global_row_ids, round-8 maintenance family): when a batch lands,
-    re-running the global numbering would RENUMBER the corpus —
-    breaking every shard manifest, cache key, and sample that
-    references the old ids. Instead the corpus keeps its frozen
-    numbering and the batch is numbered 1..|batch| in its own order,
-    offset by the corpus row count (one O(1) scalar from the corpus
-    manifest — the only state). The oracle numbers corpus and batch
-    independently and offsets the batch, so a hash match proves BOTH
-    contiguity of the union 1..N AND that corpus ids are bit-identical
-    to the standalone corpus numbering (the append-only property
-    itself)."""
-    ensure_harness_conf(spark)
-    from .operators.layout import assign_global_ids
-
-    docs = load(spark, sf_dir, "documents").select("doc_id")
-    corpus = docs.filter(F.col("doc_id") % 5 != 0)
-    batch = docs.filter(F.col("doc_id") % 5 == 0)
-    corpus_ids = assign_global_ids(corpus, ["doc_id"], num_partitions=8)
-    n_corpus = corpus.count()  # production: the corpus manifest's row count
-    batch_ids = assign_global_ids(batch, ["doc_id"], num_partitions=4).withColumn(
-        "row_id", F.col("row_id") + F.lit(n_corpus)
-    )
-    return corpus_ids.unionByName(batch_ids).select("doc_id", "row_id")
 
 
 # ---------------------------------------------------------------------------
@@ -485,125 +436,6 @@ def x_hist_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Exact set-similarity join (prefix filtering, completeness-guaranteed)
-# ---------------------------------------------------------------------------
-
-
-@register_extra(
-    "x_dedup_jaccard_exact",
-    oracle=f"""
-WITH {_SH_SQL},
-sz AS (SELECT doc_id, count(*) AS s FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS i
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
-j AS (
-  SELECT id1, id2, i, sa.s AS s1, sb.s AS s2
-  FROM inter JOIN sz sa ON sa.doc_id = id1 JOIN sz sb ON sb.doc_id = id2
-)
-SELECT id1, id2,
-       CAST(i AS BIGINT) AS inter_size,
-       CAST(s1 AS BIGINT) AS s1,
-       CAST(s2 AS BIGINT) AS s2,
-       round(CAST(i AS DOUBLE) / CAST(s1 + s2 - i AS DOUBLE), 6) AS jaccard
-FROM j WHERE i * 2 >= (s1 + s2 - i) * 1
-""",
-)
-def x_dedup_jaccard_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT τ=1/2 shingle-resemblance join over the whole corpus via
-    prefix filtering (Bayardo WWW'07): provably finds every qualifying
-    pair — the completeness guarantee `x_dedup_ngram_jaccard`'s rare-
-    shingle blocking trades away — while joining only signature-prefix
-    elements, never all pairs. Integer cross-multiplied threshold, so
-    the result SET is exact; the oracle is the naive all-pairs join
-    the engine never executes."""
-    ensure_harness_conf(spark)
-    from .operators.dedup import doc_shingles, jaccard_join_prefix
-
-    sh = doc_shingles(load(spark, sf_dir, "documents"), "doc_id", "text").select(
-        "doc_id", "shingle"
-    )
-    return jaccard_join_prefix(sh, "doc_id", "shingle", tau_num=1, tau_den=2)
-
-
-# ---------------------------------------------------------------------------
-# Cross-split contamination audit (hash_split ∘ shingle overlap)
-# ---------------------------------------------------------------------------
-
-
-@register_extra(
-    "x_split_contamination",
-    oracle=f"""
-WITH {_SH_SQL},
-sp AS (
-  SELECT doc_id,
-         CASE WHEN CAST(concat('0x', substr(md5(concat('split:',
-                CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % 1000000
-              < 900000 THEN 'train' ELSE 'val' END AS split
-  FROM documents
-),
-tsh AS (
-  SELECT DISTINCT sh.shingle FROM sh JOIN sp ON sp.doc_id = sh.doc_id
-  WHERE sp.split = 'train'
-),
-v AS (
-  SELECT sh.doc_id, sh.shingle FROM sh JOIN sp ON sp.doc_id = sh.doc_id
-  WHERE sp.split = 'val'
-),
-h AS (
-  SELECT v.doc_id, count(*) AS n_sh,
-         sum(CASE WHEN t.shingle IS NULL THEN 0 ELSE 1 END) AS n_hit
-  FROM v LEFT JOIN tsh t ON v.shingle = t.shingle
-  GROUP BY v.doc_id
-)
-SELECT doc_id,
-       CAST(n_sh AS BIGINT) AS n_shingles,
-       CAST(n_hit AS BIGINT) AS n_train_hits,
-       round(CAST(n_hit AS DOUBLE) / CAST(n_sh AS DOUBLE), 6) AS contamination
-FROM h
-""",
-)
-def x_split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train/val leakage audit as a composition of existing faces:
-    deterministic 90/10 hash split, then every val document scored by
-    the fraction of its distinct 3-token shingles that also appear
-    ANYWHERE in the train split. Unlike x_dedup_decontaminate (tiny
-    benchmark set → broadcast), both sides here are corpus-scale, so
-    the overlap is a plain long-key equi-join against the distinct
-    train-shingle table — the shape that survives when the "benchmark"
-    is 90% of 100 TB. High contamination on a val doc means the split
-    is leaking (near-dups straddling the boundary) and eval numbers
-    are inflated."""
-    ensure_harness_conf(spark)
-    from .operators import sketch
-    from .operators.dedup import doc_shingles
-
-    docs = load(spark, sf_dir, "documents")
-    split = sketch.hash_split(docs, "doc_id", {"train": 0.9, "val": 0.1})
-    sh = doc_shingles(docs, "doc_id", "text").select("doc_id", "shingle")
-    sh = sh.join(split.select("doc_id", "split"), "doc_id")
-    tsh = (
-        sh.filter(F.col("split") == "train")
-        .select("shingle")
-        .distinct()
-        .withColumn("_hit", F.lit(1))
-    )
-    v = sh.filter(F.col("split") == "val").select("doc_id", "shingle")
-    j = v.join(tsh, "shingle", "left")
-    return j.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_shingles"),
-        F.sum(F.coalesce("_hit", F.lit(0))).cast("long").alias("n_train_hits"),
-        F.round(
-            F.sum(F.coalesce("_hit", F.lit(0))).cast("double")
-            / F.count(F.lit(1)).cast("double"),
-            6,
-        ).alias("contamination"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # Streaming-maintained count-min sketch
 # ---------------------------------------------------------------------------
 
@@ -792,57 +624,6 @@ def x_sketch_quantile_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Entity-resolution pipeline: exact similarity join → canonical clusters
-# ---------------------------------------------------------------------------
-
-
-def _entity_resolution_oracle() -> str:
-    """Exact τ=1/2 resemblance pairs (naive all-pairs — the plan the
-    engine never runs) fed into the recursive-closure twin of
-    min-label propagation: the full entity-resolution answer computed
-    two structurally different ways end-to-end."""
-    return f"""
-WITH RECURSIVE {_SH_SQL},
-sz AS (SELECT doc_id, count(*) AS s FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS i
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
-pairs AS (
-  SELECT id1 AS doc_a, id2 AS doc_b
-  FROM inter JOIN sz sa ON sa.doc_id = id1 JOIN sz sb ON sb.doc_id = id2
-  WHERE i * 2 >= (sa.s + sb.s - i) * 1
-),{_CC_CLOSURE_SQL}
-SELECT cc.doc_id, cc.rep_id, CAST(sz2.n AS BIGINT) AS cluster_size
-FROM cc JOIN (SELECT rep_id, count(*) AS n FROM cc GROUP BY rep_id) sz2
-  USING (rep_id)
-"""
-
-
-@register_extra("x_pipeline_entity_resolution", oracle=_entity_resolution_oracle())
-def x_pipeline_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entity resolution end-to-end with EXACT pair semantics: the
-    prefix-filtered τ=1/2 resemblance join (provably complete — no
-    LSH misses) feeds min-label-propagation connected components, so
-    the cluster map is the true transitive closure of "resembles at
-    τ", not an approximation of it. This is the dedup decision a
-    curation pipeline can defend row-by-row: the oracle recomputes
-    pairs naively AND the closure recursively. Composition of two
-    already-verified faces — the point is that they compose on one
-    shingle table without re-scanning the corpus."""
-    ensure_harness_conf(spark)
-    from .operators.dedup import doc_shingles, duplicate_clusters, jaccard_join_prefix
-
-    docs = load(spark, sf_dir, "documents")
-    sh = doc_shingles(docs, "doc_id", "text").select("doc_id", "shingle")
-    pairs = jaccard_join_prefix(sh, "doc_id", "shingle", tau_num=1, tau_den=2).select(
-        F.col("id1").alias("doc_a"), F.col("id2").alias("doc_b")
-    )
-    return duplicate_clusters(pairs, "doc_a", "doc_b")
-
-
-# ---------------------------------------------------------------------------
 # Distribution drift: population stability index between snapshots
 # ---------------------------------------------------------------------------
 
@@ -907,135 +688,6 @@ def x_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# General MERGE INTO
-# ---------------------------------------------------------------------------
-
-
-@register_extra(
-    "x_merge_into",
-    oracle="""
-WITH tgt AS (
-  SELECT user_id,
-         CAST(count(*) AS BIGINT) AS n_events,
-         CAST(sum(CAST(round(value * 1000000, 0) AS HUGEINT)) AS BIGINT) AS sum_q
-  FROM events WHERE event_id % 5 != 0 AND user_id % 11 != 3
-  GROUP BY user_id
-),
-src AS (
-  SELECT user_id,
-         CAST(count(*) AS BIGINT) AS n_events,
-         CAST(sum(CAST(round(value * 1000000, 0) AS HUGEINT)) AS BIGINT) AS sum_q
-  FROM events WHERE user_id % 7 != 2 AND user_id % 3 = 0
-  GROUP BY user_id
-)
-SELECT coalesce(t.user_id, s.user_id) AS user_id,
-       CASE WHEN s.user_id IS NOT NULL THEN s.n_events ELSE t.n_events END
-         AS n_events,
-       CASE WHEN s.user_id IS NOT NULL THEN s.sum_q ELSE t.sum_q END AS sum_q
-FROM tgt t FULL OUTER JOIN src s ON t.user_id = s.user_id
-WHERE NOT (s.user_id IS NOT NULL AND t.user_id IS NOT NULL
-           AND s.n_events % 7 = 0)
-""",
-)
-def x_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delta-style MERGE INTO as one relational expression: a per-user
-    rollup target merged with a CDC-ish source batch — matched rows
-    update (or DELETE when the source says the 7-multiple condition
-    holds), unmatched source rows insert, unmatched target rows pass
-    through — all three action arms as CASEs over ONE NULL-safe
-    full-outer join. The general superset of the LWW upsert row and
-    the forward application of x_snapshot_diff."""
-    ensure_harness_conf(spark)
-    from .operators.upsert import merge_into
-
-    ev = load(spark, sf_dir, "events")
-    d38 = "decimal(38,0)"
-
-    def snap(df: DataFrame) -> DataFrame:
-        return df.groupBy("user_id").agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.sum(F.round(F.col("value") * 1000000, 0).cast(d38))
-            .cast("long")
-            .alias("sum_q"),
-        )
-
-    tgt = snap(ev.filter((F.col("event_id") % 5 != 0) & (F.col("user_id") % 11 != 3)))
-    src = snap(ev.filter((F.col("user_id") % 7 != 2) & (F.col("user_id") % 3 == 0)))
-    return merge_into(
-        tgt, src, "user_id", delete_cond=F.col("_s_n_events") % 7 == 0
-    )
-
-
-
-
-# ---------------------------------------------------------------------------
-# Token-budget curriculum manifest (r7: curation batch)
-# ---------------------------------------------------------------------------
-
-
-@register_extra(
-    "x_curation_token_budget",
-    oracle="""
-WITH tk AS (
-  SELECT doc_id, source,
-         CAST(len(regexp_extract_all(lower(text), '[a-z0-9_]+')) AS BIGINT) AS nt
-  FROM documents
-),
-c AS (
-  SELECT source AS domain, CAST(sum(nt) AS BIGINT) AS t,
-         CAST(floor(sqrt(CAST(sum(nt) AS DOUBLE)) * 1000000.0) AS BIGINT) AS wq
-  FROM tk GROUP BY source
-),
-tot AS (SELECT CAST(sum(wq) AS BIGINT) AS sumwq FROM c),
-b AS (SELECT CAST(floor(0.4 * CAST(sum(nt) AS DOUBLE)) AS BIGINT) AS btot FROM tk),
-pl AS (
-  SELECT domain,
-         CAST(floor(CAST(btot AS DOUBLE) * CAST(wq AS DOUBLE)
-                    / CAST(sumwq AS DOUBLE)) AS BIGINT) AS tok_budget
-  FROM c, tot, b
-),
-o AS (
-  SELECT doc_id, source AS domain, nt,
-         CAST(concat('0x', substr(md5('tb:' || CAST(doc_id AS VARCHAR)), 1, 15))
-              AS BIGINT) AS h
-  FROM tk
-),
-s AS (
-  SELECT doc_id, domain,
-         CAST(coalesce(sum(nt) OVER (
-           PARTITION BY domain ORDER BY h, doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-           AS tok_start
-  FROM o
-)
-SELECT s.doc_id, s.domain, s.tok_start
-FROM s JOIN pl USING (domain) WHERE s.tok_start < pl.tok_budget
-""",
-)
-def x_curation_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-budget curriculum: 40% of the corpus's tokens allocated
-    across sources by α=0.5 temperature, each source's budget filled
-    with hash-ordered docs (operators/sketch.token_budget_allocate).
-    The one driver action is the corpus token total (a single exact
-    integer — bounded model state); everything else is the P-row plan
-    broadcast + one per-domain window. The manifest (kept doc ids +
-    in-domain token offsets) is a pure function of (corpus, α, salt),
-    reproduced from scratch by the oracle."""
-    ensure_harness_conf(spark)
-    from .operators.dedup import tokens as _tokens
-    from .operators.sketch import token_budget_allocate
-
-    docs = load(spark, sf_dir, "documents").select(
-        "doc_id", "source", F.size(_tokens(F.col("text"))).cast("long").alias("nt")
-    )
-    total = docs.agg(F.sum("nt").cast("long").alias("t")).collect()[0]["t"]
-    budget = int(0.4 * float(total))  # floor of an exact-int product
-    return token_budget_allocate(
-        docs, "doc_id", "source", "nt", budget_tokens=budget, alpha=0.5
-    )
-
-
-# ---------------------------------------------------------------------------
 # DSIR-style importance weighting (hashed n-gram features)
 # ---------------------------------------------------------------------------
 
@@ -1086,43 +738,6 @@ def x_curation_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dsir_importance(
         docs, "doc_id", "text", target_pred=F.col("lang") == "en"
     )
-
-
-# ---------------------------------------------------------------------------
-# Encoding sanity / mojibake pre-filter
-# ---------------------------------------------------------------------------
-
-
-@register_extra(
-    "x_text_encoding_quality",
-    oracle="""
-SELECT doc_id,
-       CAST(length(text) AS BIGINT) AS n_chars,
-       CAST(len(regexp_extract_all(text, '\\x{FFFD}')) AS BIGINT)
-         AS n_replacement,
-       CAST(len(regexp_extract_all(text, '[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f]'))
-            AS BIGINT) AS n_ctrl,
-       round(CAST(len(regexp_extract_all(text, '[\\x20-\\x7e]')) AS DOUBLE)
-             / CAST(greatest(length(text), 1) AS DOUBLE), 6) + 0.0
-         AS printable_ratio,
-       (len(regexp_extract_all(text, '\\x{FFFD}')) = 0
-        AND len(regexp_extract_all(text, '[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f]')) = 0)
-         AS clean
-FROM documents
-""",
-)
-def x_text_encoding_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mojibake/encoding-sanity pre-filter over the corpus
-    (operators/text.encoding_quality): replacement-char and control-
-    byte counts plus ASCII-printable ratio, shuffle-free codegen'd
-    regexp counts. The fixture corpus is clean (all rows pass), which
-    the oracle confirms; the non-trivial cases are pinned in
-    tests/test_text.py with synthetic mojibake."""
-    ensure_harness_conf(spark)
-    from .operators.text import encoding_quality
-
-    docs = load(spark, sf_dir, "documents")
-    return encoding_quality(docs, "doc_id", "text")
 
 
 # ---------------------------------------------------------------------------
@@ -1542,5 +1157,3 @@ def x_text_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cdc_chunks(
         load(spark, sf_dir, "documents"), "doc_id", "text", window=3, mask=15
     )
-
-

@@ -1,8 +1,6 @@
-"""Evaluation / experimentation / drift / profiling queries:
-exact AUC, calibration, A/B SRM + CUPED, KS and PSI drift, data
-profiling (column profiles, histograms, winsorize, MAD outliers),
-behavioral analytics (retention cohorts, funnels, session windows,
-path trigrams, attribution), LOCF fill, and embedding diagnostics
+"""Evaluation / experimentation / profiling queries: exact AUC, A/B
+CUPED, data profiling (column profiles, histograms, winsorize, MAD
+outliers, per-user trends), LOCF fill, and embedding diagnostics
 (centroids, covariance).
 
 Split from queries_stats_text.py and queries_curation.py (round 9, verdict #6 file-size
@@ -24,7 +22,7 @@ from .functions import epoch as ep  # noqa: F401
 from .io import load  # noqa: F401
 from .session import ensure_harness_conf  # noqa: F401
 from .queries import register, register_extra, streams  # noqa: F401
-from .queries_common import _SH_SQL, _TK_SQL, _cos_sql, _dot_sql  # noqa: F401
+from .queries_common import _cos_sql, _dot_sql  # noqa: F401
 from .queries_stats_text import _EPOCH_US_DUCK  # noqa: F401
 
 
@@ -309,280 +307,6 @@ def x_outliers_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    "x_drift_ks",
-    oracle="""
-WITH e AS (
-  SELECT value,
-         CASE WHEN epoch_ns(ts) // 1000000000 < 1705400000
-              THEN 'a' ELSE 'b' END AS g
-  FROM events
-),
-n AS (SELECT CAST(count(*) FILTER (g = 'a') AS BIGINT) AS na,
-             CAST(count(*) FILTER (g = 'b') AS BIGINT) AS nb FROM e),
-byv AS (
-  SELECT value,
-         CAST(count(*) FILTER (g = 'a') AS BIGINT) AS ca,
-         CAST(count(*) FILTER (g = 'b') AS BIGINT) AS cb
-  FROM e GROUP BY value
-),
-cum AS (
-  SELECT value,
-         sum(ca) OVER (ORDER BY value ROWS UNBOUNDED PRECEDING) AS ia,
-         sum(cb) OVER (ORDER BY value ROWS UNBOUNDED PRECEDING) AS ib
-  FROM byv
-)
-SELECT CAST(max(abs(ia * n.nb - ib * n.na)) AS BIGINT) AS ks_num,
-       CAST(n.na * n.nb AS BIGINT) AS ks_den,
-       round(CAST(max(abs(ia * n.nb - ib * n.na)) AS DOUBLE)
-             / CAST(n.na * n.nb AS DOUBLE), 6) AS ks_stat
-FROM cum, n GROUP BY n.na, n.nb
-""",
-)
-def x_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sample Kolmogorov–Smirnov drift statistic between the early
-    and late halves of the value distribution — the distribution-free
-    companion to x_drift_psi (PSI needs bins; KS is the sup-norm of
-    the ECDF gap, binless). Computed EXACTLY in integers: at every
-    distinct value, D's numerator is |ia·nb − ib·na| over the common
-    denominator na·nb — cross-multiplied BIGINTs, so no FP enters
-    before the final reported ratio. The ECDF cumsums route through
-    layout.global_prefix_sum (frozen-bin two-pass) instead of an
-    Exchange SinglePartition window — the AUC hardening applied on
-    day one; per-value counts are one hash agg, so the whole statistic
-    is two shuffles at any scale."""
-    ensure_harness_conf(spark)
-    from .operators.layout import global_prefix_sum
-
-    ev = load(spark, sf_dir, "events").select("value", "ts")
-    ev = ev.withColumn(
-        "g", F.when(ep.epoch_s(ev, "ts") < 1705400000, "a").otherwise("b")
-    ).drop("ts")
-    n = ev.agg(
-        F.sum(F.when(F.col("g") == "a", 1).otherwise(0)).cast("long").alias("na"),
-        F.sum(F.when(F.col("g") == "b", 1).otherwise(0)).cast("long").alias("nb"),
-    )
-    byv = ev.groupBy("value").agg(
-        F.sum(F.when(F.col("g") == "a", 1).otherwise(0)).cast("long").alias("ca"),
-        F.sum(F.when(F.col("g") == "b", 1).otherwise(0)).cast("long").alias("cb"),
-    )
-    ia = global_prefix_sum(byv, ["value"], "ca", out_col="ia_ex", exclusive=True)
-    cum = global_prefix_sum(
-        ia, ["value"], "cb", out_col="ib_ex", exclusive=True
-    ).select(
-        "value",
-        (F.col("ia_ex") + F.col("ca")).alias("ia"),
-        (F.col("ib_ex") + F.col("cb")).alias("ib"),
-    )
-    return (
-        cum.crossJoin(F.broadcast(n))
-        .agg(
-            F.max(F.abs(F.col("ia") * F.col("nb") - F.col("ib") * F.col("na")))
-            .cast("long")
-            .alias("ks_num"),
-            F.first(F.col("na") * F.col("nb")).cast("long").alias("ks_den"),
-        )
-        .select(
-            "ks_num",
-            "ks_den",
-            F.round(
-                F.col("ks_num").cast("double") / F.col("ks_den").cast("double"), 6
-            ).alias("ks_stat"),
-        )
-    )
-
-
-@register_extra(
-    "x_session_window_builtin",
-    oracle="""
-WITH e AS (
-  SELECT user_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS es FROM events
-),
-o AS (
-  SELECT user_id, es,
-         CASE WHEN lag(es) OVER w IS NULL
-                OR es - lag(es) OVER w >= 1800 THEN 1 ELSE 0 END AS brk
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY es)
-),
-s AS (
-  SELECT user_id, es,
-         sum(brk) OVER (PARTITION BY user_id ORDER BY es
-                        ROWS UNBOUNDED PRECEDING) AS sid
-  FROM o
-)
-SELECT user_id,
-       CAST(min(es) AS BIGINT) AS s_start,
-       CAST(max(es) + 1800 AS BIGINT) AS s_end,
-       CAST(count(*) AS BIGINT) AS n
-FROM s GROUP BY user_id, sid
-""",
-)
-def x_session_window_builtin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The engine's BUILT-IN session_window in a BATCH aggregation —
-    the declarative twin of q_sessionize's gaps-and-islands rewrite
-    (and of the streaming x_stream_session_window). Spark merges
-    events whose gap is STRICTLY under the 30-minute timeout (a new
-    session starts when diff >= gap — the [start, start+gap) window
-    extension rule), so the islands oracle uses >= on the break
-    condition and reconstructs end = last_event + gap. The gate pins
-    the two formulations' session boundaries, counts, and extents
-    equal row-for-row — the boundary semantics a hand-rolled
-    sessionizer most often gets wrong."""
-    ensure_harness_conf(spark)
-    ev = load(spark, sf_dir, "events").select("user_id", "ts")
-    ev = ev.withColumn("et", F.timestamp_seconds(ep.epoch_s(ev, "ts"))).drop("ts")
-    return (
-        ev.groupBy("user_id", F.session_window("et", "30 minutes"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .select(
-            "user_id",
-            F.col("session_window.start").cast("long").alias("s_start"),
-            F.col("session_window.end").cast("long").alias("s_end"),
-            "n",
-        )
-    )
-
-
-@register_extra(
-    "x_path_trigrams",
-    oracle="""
-WITH o AS (
-  SELECT user_id, event_type,
-         CAST(epoch_ns(ts) AS BIGINT) AS ns, event_id
-  FROM events
-),
-seq AS (
-  SELECT user_id,
-         list(event_type ORDER BY ns, event_id) AS path
-  FROM o GROUP BY user_id
-),
-tri AS (
-  SELECT user_id,
-         path[i] || '>' || path[i+1] || '>' || path[i+2] AS trigram
-  FROM seq, LATERAL (
-    SELECT unnest(generate_series(1, len(path) - 2)) AS i) u
-)
-SELECT trigram,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-FROM tri GROUP BY trigram
-""",
-)
-def x_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """User-path mining: each user's time-ordered event-type sequence
-    decomposed into sliding TRIGRAMS (the path-analysis primitive
-    behind 'what do users do right before purchasing'). One
-    collect-sort per user (the G4/T3 ordered-assembly discipline:
-    sort_array over (ns, event_id, type) structs makes the order a
-    pure function of the data, not the partitioning), then trigram
-    extraction is a higher-order transform over index sequences —
-    codegen'd, no UDF, no second shuffle; counts per trigram are the
-    only downstream exchange. The same shape at 100 TB: paths are
-    per-user bounded, the heavy key (trigram) is low-cardinality
-    (|types|³)."""
-    ensure_harness_conf(spark)
-    ev = load(spark, sf_dir, "events").select("user_id", "event_id", "event_type", "ts")
-    ev = ev.withColumn("ns", ep.epoch_ns(ev, "ts")).drop("ts")
-    seq = ev.groupBy("user_id").agg(
-        F.transform(
-            F.sort_array(
-                F.collect_list(F.struct("ns", "event_id", "event_type"))
-            ),
-            lambda s: s["event_type"],
-        ).alias("path")
-    )
-    # guard: sequence(1, 0) DESCENDS in Spark ([1, 0]), so a sub-3
-    # path must short-circuit to an empty array, not a bogus range
-    grams = F.when(
-        F.size("path") >= 3,
-        F.transform(
-            F.sequence(F.lit(1), F.size("path") - 2),
-            lambda i: F.concat_ws(
-                ">",
-                F.element_at("path", i),
-                F.element_at("path", i + 1),
-                F.element_at("path", i + 2),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    tri = seq.select("user_id", F.explode(grams).alias("trigram"))
-    return tri.groupBy("trigram").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.countDistinct("user_id").cast("long").alias("n_users"),
-    )
-
-
-@register_extra(
-    "x_attribution_multi_touch",
-    oracle="""
-WITH e AS (
-  SELECT event_id, user_id, event_type,
-         CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS es
-  FROM events
-),
-pur AS (SELECT event_id AS p_id, user_id, es AS p_es
-        FROM e WHERE event_type = 'purchase'),
-clk AS (SELECT event_id AS c_id, user_id, es AS c_es
-        FROM e WHERE event_type = 'click'),
-pairs AS (
-  SELECT p.p_id, c.c_id, p.user_id
-  FROM pur p JOIN clk c
-    ON c.user_id = p.user_id
-   AND c.c_es <= p.p_es AND c.c_es >= p.p_es - 86400
-),
-credit AS (
-  SELECT user_id, c_id,
-         round(1.0 / count(*) OVER (PARTITION BY p_id), 6) AS w
-  FROM pairs
-)
-SELECT user_id,
-       CAST(count(DISTINCT c_id) AS BIGINT) AS n_touch_clicks,
-       CAST(SUM(CAST(w AS DECIMAL(38,6))) AS DOUBLE) AS credit
-FROM credit GROUP BY user_id
-""",
-)
-def x_attribution_multi_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Linear multi-touch attribution — each purchase distributes one
-    unit of credit equally across the same user's clicks in the
-    trailing 24 h (the product-analytics op downstream of the
-    stream-stream attribution JOIN, which finds the pairs; this adds
-    the CREDIT model). Per-pair weight is round(1/n, 6) where n =
-    clicks in the purchase's window (one count window over pairs);
-    weights then sum per user in DECIMAL, so cross-engine FP can only
-    enter through the single rounded division — identical doubles on
-    both sides. The interval join is user-keyed with a bounded range;
-    every dim of the plan reuses the q_asof/range-join family's
-    discipline."""
-    ensure_harness_conf(spark)
-    ev = load(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "ts")
-    ev = ev.withColumn("es", ep.epoch_s(ev, "ts")).drop("ts")
-    pur = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("p_id"), "user_id", F.col("es").alias("p_es")
-    )
-    clk = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("c_id"),
-        F.col("user_id").alias("c_user"),
-        F.col("es").alias("c_es"),
-    )
-    pairs = pur.join(
-        clk,
-        (F.col("c_user") == F.col("user_id"))
-        & (F.col("c_es") <= F.col("p_es"))
-        & (F.col("c_es") >= F.col("p_es") - 86400),
-    ).select("p_id", "c_id", "user_id")
-    w = F.round(
-        F.lit(1.0) / F.count(F.lit(1)).over(W.partitionBy("p_id")), 6
-    )
-    credit = pairs.select("user_id", "c_id", w.alias("w"))
-    return credit.groupBy("user_id").agg(
-        F.countDistinct("c_id").cast("long").alias("n_touch_clicks"),
-        F.sum(F.col("w").cast("decimal(38,6)")).cast("double").alias("credit"),
-    )
-
-
-_DAY_DUCK = "(CAST(epoch_ns(ts) // 1000000000 AS BIGINT) // 86400)"
-
-
-@register_extra(
     "x_locf_fill",
     oracle="""
 WITH b AS (
@@ -629,285 +353,6 @@ def x_locf_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.col("v_filled").alias("value_filled"),
         F.col("v_was_filled").cast("long").alias("was_filled"),
-    )
-
-
-@register_extra(
-    "x_running_distinct_users",
-    oracle=f"""
-WITH d AS (SELECT user_id, {_DAY_DUCK} AS day FROM events),
-days AS (SELECT DISTINCT day FROM d),
-first_seen AS (SELECT user_id, min(day) AS d0 FROM d GROUP BY user_id),
-new_per_day AS (SELECT d0 AS day, CAST(count(*) AS BIGINT) AS n_new FROM first_seen GROUP BY d0)
-SELECT days.day AS day,
-       coalesce(n.n_new, 0) AS n_new_users,
-       CAST(sum(coalesce(n.n_new, 0)) OVER (ORDER BY days.day
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-         AS cum_distinct_users
-FROM days LEFT JOIN new_per_day n ON n.day = days.day
-""",
-)
-def x_running_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cumulative distinct users per day via the FIRST-SEEN transform:
-    a user contributes to the running distinct count exactly once (the
-    day they first appear), so the running count is a cumulative SUM
-    of per-day new-user counts — one user-level agg + one tiny day
-    window, instead of the naive per-day COUNT(DISTINCT over growing
-    prefix) which is O(days × history) rescans. The scan-once shape
-    every growth dashboard should compile to at 100 TB."""
-    ensure_harness_conf(spark)
-    ev = load(spark, sf_dir, "events")
-    es = ep.epoch_s(ev)
-    d = ev.select("user_id", F.floor(es / F.lit(86400)).cast("long").alias("day"))
-    days = d.select("day").distinct()
-    first_seen = d.groupBy("user_id").agg(F.min("day").alias("d0"))
-    new_per_day = first_seen.groupBy(F.col("d0").alias("day")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_new")
-    )
-    w = W.orderBy("day").rowsBetween(W.unboundedPreceding, W.currentRow)
-    return (
-        days.join(new_per_day, "day", "left")
-        .select("day", F.coalesce("n_new", F.lit(0)).alias("n_new_users"))
-        .withColumn(
-            "cum_distinct_users", F.sum("n_new_users").over(w).cast("long")
-        )
-    )
-
-
-@register_extra(
-    "x_cohort_retention",
-    oracle=f"""
-WITH d AS (SELECT DISTINCT user_id, {_DAY_DUCK} AS day FROM events),
-first_seen AS (SELECT user_id, min(day) AS d0 FROM d GROUP BY user_id),
-act AS (
-  SELECT DISTINCT f.user_id, f.d0 // 7 AS cohort_week, d.day // 7 - f.d0 // 7 AS week_offset
-  FROM d JOIN first_seen f USING (user_id)
-)
-SELECT cohort_week, week_offset, CAST(count(*) AS BIGINT) AS n_users
-FROM act GROUP BY cohort_week, week_offset
-""",
-)
-def x_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention matrix: users grouped by first-seen week,
-    counted once per (cohort, weeks-since-first-seen) they were active
-    — the standard retention triangle. Two hash aggs + one join keyed
-    on user (the cohort label broadcasts back onto activity); integer
-    day/week math on epoch seconds, engine-portable with no timezone
-    or DATE-cast drift."""
-    ensure_harness_conf(spark)
-    ev = load(spark, sf_dir, "events")
-    es = ep.epoch_s(ev)
-    d = ev.select(
-        "user_id", F.floor(es / F.lit(86400)).cast("long").alias("day")
-    ).distinct()
-    first_seen = d.groupBy("user_id").agg(F.min("day").alias("d0"))
-    act = (
-        d.join(first_seen, "user_id")
-        .select(
-            "user_id",
-            F.floor(F.col("d0") / 7).cast("long").alias("cohort_week"),
-            (F.floor(F.col("day") / 7) - F.floor(F.col("d0") / 7))
-            .cast("long")
-            .alias("week_offset"),
-        )
-        .distinct()
-    )
-    return act.groupBy("cohort_week", "week_offset").agg(
-        F.count(F.lit(1)).cast("long").alias("n_users")
-    )
-
-
-@register_extra(
-    "x_funnel_steps",
-    oracle="""
-WITH e AS (
-  SELECT user_id, event_type, CAST(epoch_ns(ts) AS BIGINT) AS t FROM events
-),
-v AS (SELECT user_id, min(t) AS tv FROM e WHERE event_type = 'view' GROUP BY user_id),
-c AS (
-  SELECT e.user_id, min(e.t) AS tc
-  FROM e JOIN v ON v.user_id = e.user_id
-  WHERE e.event_type = 'click' AND e.t >= v.tv
-  GROUP BY e.user_id
-),
-p AS (
-  SELECT e.user_id, min(e.t) AS tp
-  FROM e JOIN c ON c.user_id = e.user_id
-  WHERE e.event_type = 'purchase' AND e.t >= c.tc
-  GROUP BY e.user_id
-)
-SELECT 'view' AS step, CAST((SELECT count(*) FROM v) AS BIGINT) AS n_users
-UNION ALL
-SELECT 'click_after_view', CAST((SELECT count(*) FROM c) AS BIGINT)
-UNION ALL
-SELECT 'purchase_after_click', CAST((SELECT count(*) FROM p) AS BIGINT)
-""",
-)
-def x_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered funnel: users who viewed, then clicked AT OR AFTER
-    their first view, then purchased at or after that click — the
-    order-sensitive conversion count (a user who purchases before
-    ever viewing does NOT convert, which a naive per-type distinct
-    count gets wrong). Three stage aggregations, each a keyed min
-    joined forward — no per-user event-array materialization, no
-    window over the whole history."""
-    ensure_harness_conf(spark)
-    ev = load(spark, sf_dir, "events")
-    e = ev.select("user_id", "event_type", ep.epoch_ns(ev).alias("t"))
-    v = (
-        e.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("t").alias("tv"))
-    )
-    c = (
-        e.filter(F.col("event_type") == "click")
-        .join(v, "user_id")
-        .filter(F.col("t") >= F.col("tv"))
-        .groupBy("user_id")
-        .agg(F.min("t").alias("tc"))
-    )
-    p = (
-        e.filter(F.col("event_type") == "purchase")
-        .join(c, "user_id")
-        .filter(F.col("t") >= F.col("tc"))
-        .groupBy("user_id")
-        .agg(F.min("t").alias("tp"))
-    )
-
-    def stage(name: str, df: DataFrame) -> DataFrame:
-        return df.agg(
-            F.lit(name).alias("step"),
-            F.count(F.lit(1)).cast("long").alias("n_users"),
-        )
-
-    return (
-        stage("view", v)
-        .unionAll(stage("click_after_view", c))
-        .unionAll(stage("purchase_after_click", p))
-    )
-
-
-@register_extra(
-    "x_ab_srm",
-    oracle="""
-WITH u AS (SELECT DISTINCT user_id FROM events),
-a AS (
-  SELECT CASE WHEN CAST(concat('0x', substr(md5(concat('exp:',
-              CAST(user_id AS VARCHAR))), 1, 15)) AS BIGINT) % 1000000
-              < 500000 THEN 'A' ELSE 'B' END AS arm
-  FROM u
-),
-c AS (
-  SELECT CAST(sum(CASE WHEN arm = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-         CAST(sum(CASE WHEN arm = 'B' THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-         CAST(count(*) AS BIGINT) AS n
-  FROM a
-)
-SELECT n_a, n_b,
-       round((CAST(n_a AS DOUBLE) - CAST(n AS DOUBLE) / 2.0)
-             * (CAST(n_a AS DOUBLE) - CAST(n AS DOUBLE) / 2.0)
-             / (CAST(n AS DOUBLE) / 2.0)
-             + (CAST(n_b AS DOUBLE) - CAST(n AS DOUBLE) / 2.0)
-             * (CAST(n_b AS DOUBLE) - CAST(n AS DOUBLE) / 2.0)
-             / (CAST(n AS DOUBLE) / 2.0), 6) AS chi2,
-       CAST(1 AS BIGINT) AS dof
-FROM c
-""",
-)
-def x_ab_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sample-ratio mismatch (SRM) check — the experiment-health gate
-    every A/B platform runs before reading any metric: chi-square
-    goodness-of-fit of the observed arm counts against the designed
-    50/50 split (the same 'exp:' hash assignment the CUPED/
-    Mann-Whitney readouts use, so a broken assignment would surface
-    here first). The statistic is one fixed double expression over
-    two BIGINT counts (dof=1; the p-value threshold lives in the
-    caller — chi2 > 3.84 ≈ p < 0.05); bit-portable, oracle-exact."""
-    ensure_harness_conf(spark)
-    from .operators.sketch import _hash60
-
-    ev = load(spark, sf_dir, "events")
-    armed = ev.select("user_id").distinct().select(
-        F.when(
-            _hash60(F.concat(F.lit("exp:"), F.col("user_id").cast("string")))
-            % 1_000_000
-            < 500_000,
-            F.lit("A"),
-        )
-        .otherwise(F.lit("B"))
-        .alias("arm")
-    )
-    c = armed.agg(
-        F.sum(F.when(F.col("arm") == "A", 1).otherwise(0)).cast("long").alias("n_a"),
-        F.sum(F.when(F.col("arm") == "B", 1).otherwise(0)).cast("long").alias("n_b"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-    )
-    half = F.col("n").cast("double") / F.lit(2.0)
-    da = F.col("n_a").cast("double") - half
-    db = F.col("n_b").cast("double") - half
-    return c.select(
-        "n_a",
-        "n_b",
-        F.round(da * da / half + db * db / half, 6).alias("chi2"),
-        F.lit(1).cast("long").alias("dof"),
-    )
-
-
-@register_extra(
-    "x_eval_calibration",
-    oracle="""
-WITH s AS (
-  SELECT doc_id,
-         round(1.0 / (1.0 + exp(-(CAST(n_chars AS DOUBLE) - 300.0) / 100.0)), 6) AS score,
-         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-  FROM documents
-),
-b AS (
-  SELECT CAST(least(floor(score * 10), 9) AS BIGINT) AS bin, score, y FROM s
-)
-SELECT bin,
-       CAST(count(*) AS BIGINT) AS n,
-       round(CAST(sum(CAST(score AS DECIMAL(38,6))) AS DOUBLE) / count(*), 6) AS avg_score,
-       round(CAST(sum(y) AS DOUBLE) / count(*), 6) AS obs_rate
-FROM b GROUP BY bin
-""",
-)
-def x_eval_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Calibration (reliability-diagram) bins for a probabilistic
-    score — the eval every quality/toxicity/language classifier needs
-    before its threshold means anything: deciles of the predicted
-    probability vs the observed positive rate per bin. The score here
-    is a fixed length-logistic (sigmoid of standardized n_chars)
-    predicting lang='en' — a deliberately simple, fully deterministic
-    model so the METRIC path is what the oracle certifies. libm exp
-    follows the BM25 log2 discipline (round 6dp before any grouping
-    decision); bin = floor(10·rounded score) capped at 9, per-bin
-    averages DECIMAL-summed. ECE = Σ (n_b/N)·|avg_score−obs_rate|
-    is one more agg the caller runs over these rows."""
-    ensure_harness_conf(spark)
-    docs = load(spark, sf_dir, "documents")
-    score = F.round(
-        F.lit(1.0)
-        / (
-            F.lit(1.0)
-            + F.exp(-(F.col("n_chars").cast("double") - F.lit(300.0)) / F.lit(100.0))
-        ),
-        6,
-    )
-    s = docs.select(
-        score.alias("score"),
-        F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
-    ).withColumn(
-        "bin", F.least(F.floor(F.col("score") * 10), F.lit(9)).cast("long")
-    )
-    return s.groupBy("bin").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.round(
-            F.sum(F.col("score").cast("decimal(38,6)")).cast("double")
-            / F.count(F.lit(1)),
-            6,
-        ).alias("avg_score"),
-        F.round(F.sum("y").cast("double") / F.count(F.lit(1)), 6).alias("obs_rate"),
     )
 
 
@@ -1008,95 +453,6 @@ def x_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cuped(armed, "user_id", "x", "y", "arm")
 
 
-@register_extra(
-    "x_quantiles_cont",
-    oracle="""
-WITH v AS (
-  SELECT event_type,
-         CAST(round(value * 1000000, 0) AS BIGINT) AS q,
-         row_number() OVER (PARTITION BY event_type
-                            ORDER BY round(value * 1000000, 0), event_id) AS rn,
-         count(*) OVER (PARTITION BY event_type) AS n
-  FROM events WHERE value IS NOT NULL
-),
-marks AS (
-  SELECT event_type, q, rn, n,
-         (n - 1) * 0.5 AS pos50,
-         (n - 1) * 0.9 AS pos90
-  FROM v
-),
-p AS (
-  SELECT event_type, CAST(max(n) AS BIGINT) AS n,
-         max(CASE WHEN rn = CAST(floor(pos50) AS BIGINT) + 1 THEN q END) AS lo50,
-         max(CASE WHEN rn = CAST(ceil(pos50) AS BIGINT) + 1 THEN q END) AS hi50,
-         max(CASE WHEN rn = CAST(floor(pos90) AS BIGINT) + 1 THEN q END) AS lo90,
-         max(CASE WHEN rn = CAST(ceil(pos90) AS BIGINT) + 1 THEN q END) AS hi90,
-         max(pos50) AS pos50, max(pos90) AS pos90
-  FROM marks GROUP BY event_type
-)
-SELECT event_type, n,
-       round((lo50 + (pos50 - floor(pos50)) * (hi50 - lo50)) / 1000000.0, 6)
-         AS p50_cont,
-       round((lo90 + (pos90 - floor(pos90)) * (hi90 - lo90)) / 1000000.0, 6)
-         AS p90_cont
-FROM p
-""",
-)
-def x_quantiles_cont(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interpolated (percentile_cont-style) exact quantiles — the
-    CONTINUOUS companion of x_quantiles_value's integer-rank
-    percentiles: pos = (n-1)·q, result = lo + frac·(hi-lo) over the
-    two bracketing order statistics. Built from the SAME total-order
-    window (rank arithmetic over micro-quantized integers; the only
-    doubles are the final fixed-order interpolation), NOT the
-    engines' native percentile_cont — whose interpolation conventions
-    are exactly the kind of cross-engine divergence this repo
-    quantizes away. One sort family per group, two quantiles from
-    one pass."""
-    ensure_harness_conf(spark)
-    ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    q = F.round(F.col("value") * 1000000, 0).cast("long")
-    w = W.partitionBy("event_type").orderBy(q, "event_id")
-    v = ev.select(
-        "event_type",
-        q.alias("q"),
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(W.partitionBy("event_type")).alias("n"),
-    )
-    m = v.withColumn("pos50", (F.col("n") - 1) * 0.5).withColumn(
-        "pos90", (F.col("n") - 1) * 0.9
-    )
-
-    def pick(pos, which):
-        edge = F.floor(pos) if which == "lo" else F.ceil(pos)
-        return F.max(
-            F.when(F.col("rn") == edge.cast("long") + 1, F.col("q"))
-        )
-
-    p = m.groupBy("event_type").agg(
-        F.max("n").cast("long").alias("n"),
-        pick(F.col("pos50"), "lo").alias("lo50"),
-        pick(F.col("pos50"), "hi").alias("hi50"),
-        pick(F.col("pos90"), "lo").alias("lo90"),
-        pick(F.col("pos90"), "hi").alias("hi90"),
-        F.max("pos50").alias("pos50"),
-        F.max("pos90").alias("pos90"),
-    )
-    def interp(lo, hi, pos):
-        return F.round(
-            (F.col(lo) + (F.col(pos) - F.floor(F.col(pos))) * (F.col(hi) - F.col(lo)))
-            / 1000000.0,
-            6,
-        )
-
-    return p.select(
-        "event_type",
-        "n",
-        interp("lo50", "hi50", "pos50").alias("p50_cont"),
-        interp("lo90", "hi90", "pos90").alias("p90_cont"),
-    )
-
-
 @register(
     "x_eval_auc",
     oracle="""
@@ -1130,7 +486,7 @@ FROM t
 )
 def x_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact ROC AUC by the tie-corrected rank-sum (Mann-Whitney U)
-    identity — the threshold-free companion to x_eval_calibration for
+    identity — the threshold-free companion to calibration checks for
     any probabilistic quality/toxicity/language gate: AUC =
     (R_pos − n_pos(n_pos+1)/2) / (n_pos·n_neg) with ties taking their
     AVERAGE rank. Same fixed length-logistic score predicting
@@ -1254,125 +610,6 @@ def x_embed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("avg_cos"),
         (F.min("cq").cast("double") / F.lit(1000000.0)).alias("min_cos"),
         (F.max("cq").cast("double") / F.lit(1000000.0)).alias("max_cos"),
-    )
-
-
-@register_extra(
-    "x_drift_psi",
-    oracle="""
-WITH e AS (
-  SELECT event_type, event_id, CAST(value AS DOUBLE) AS v FROM events
-  WHERE value IS NOT NULL
-),
-mm AS (
-  SELECT event_type, min(v) AS mn, max(v) AS mx FROM e GROUP BY event_type
-),
-b AS (
-  SELECT e.event_type, e.event_id % 2 AS snap,
-         CASE WHEN mm.mx = mm.mn THEN 0
-              ELSE least(CAST(floor((e.v - mm.mn) * 10 / (mm.mx - mm.mn))
-                              AS BIGINT), 9) END AS bin
-  FROM e JOIN mm ON e.event_type = mm.event_type
-),
-grid AS (
-  SELECT DISTINCT event_type, u.b AS bin
-  FROM mm, unnest(generate_series(0, 9)) AS u(b)
-),
-cnt AS (
-  SELECT g.event_type, g.bin,
-         CAST(coalesce(sum(CASE WHEN b.snap = 0 THEN 1 END), 0) AS BIGINT) AS n1,
-         CAST(coalesce(sum(CASE WHEN b.snap = 1 THEN 1 END), 0) AS BIGINT) AS n2
-  FROM grid g LEFT JOIN b ON b.event_type = g.event_type AND b.bin = g.bin
-  GROUP BY g.event_type, g.bin
-),
-tot AS (
-  SELECT event_type, sum(n1) AS t1, sum(n2) AS t2 FROM cnt GROUP BY event_type
-),
-term AS (
-  SELECT c.event_type,
-         (CAST(c.n1 + 1 AS DOUBLE) / CAST(t.t1 + 10 AS DOUBLE)
-          - CAST(c.n2 + 1 AS DOUBLE) / CAST(t.t2 + 10 AS DOUBLE))
-         * round(ln(CAST((c.n1 + 1) * (t.t2 + 10) AS DOUBLE)
-                    / CAST((c.n2 + 1) * (t.t1 + 10) AS DOUBLE)), 6) AS trm
-  FROM cnt c JOIN tot t ON c.event_type = t.event_type
-),
-q AS (
-  SELECT event_type, CAST(round(trm * 1000000, 0) AS BIGINT) AS tq FROM term
-)
-SELECT event_type,
-       round(CAST(sum(tq) AS DOUBLE) / 1000000.0, 6) AS psi
-FROM q GROUP BY event_type
-""",
-)
-def x_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Population stability index between two event snapshots (even vs
-    odd event ids — the deterministic stand-in for last-week vs
-    this-week): 10 shared equi-width bins per event type, Laplace
-    smoothing so empty bins don't blow up the log, PSI = Σ(p−q)·ln(p/q)
-    with each ln taken over a RATIO OF EXACT INTEGERS and 6dp-rounded
-    (the bigram-LM recipe), per-bin terms quantized before the sum so
-    summation order can't move a bit. PSI > 0.2 is the standard
-    retrain/investigate alarm — the monitoring face of the profiler
-    and histogram rows. Three hash aggs, one broadcast of the P-row
-    bin-edge table."""
-    ensure_harness_conf(spark)
-    ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    e = ev.select(
-        "event_type", "event_id", F.col("value").cast("double").alias("v")
-    )
-    mm = e.groupBy("event_type").agg(
-        F.min("v").alias("mn"), F.max("v").alias("mx")
-    )
-    j = e.join(F.broadcast(mm), "event_type")
-    bin_col = F.when(F.col("mx") == F.col("mn"), F.lit(0).cast("long")).otherwise(
-        F.least(
-            F.floor((F.col("v") - F.col("mn")) * 10 / (F.col("mx") - F.col("mn"))).cast(
-                "long"
-            ),
-            F.lit(9).cast("long"),
-        )
-    )
-    b = j.select(
-        "event_type", (F.col("event_id") % 2).alias("snap"), bin_col.alias("bin")
-    )
-    grid = mm.select("event_type").crossJoin(
-        spark.range(10).select(F.col("id").alias("bin"))
-    )
-    # aggregate the corpus FIRST, then left-join the tiny grid onto the
-    # tiny counts — joining grid⋈corpus forces a SortMergeJoin because a
-    # left join cannot broadcast its preserved side (plan-audit finding)
-    raw = b.groupBy("event_type", "bin").agg(
-        F.sum(F.when(F.col("snap") == 0, 1).otherwise(0)).alias("_c1"),
-        F.sum(F.when(F.col("snap") == 1, 1).otherwise(0)).alias("_c2"),
-    )
-    cnt = (
-        grid.join(F.broadcast(raw), ["event_type", "bin"], "left")
-        .select(
-            "event_type",
-            "bin",
-            F.coalesce("_c1", F.lit(0)).cast("long").alias("n1"),
-            F.coalesce("_c2", F.lit(0)).cast("long").alias("n2"),
-        )
-    )
-    tot = cnt.groupBy("event_type").agg(
-        F.sum("n1").alias("t1"), F.sum("n2").alias("t2")
-    )
-    c = cnt.join(tot, "event_type")
-    p = (F.col("n1") + 1).cast("double") / (F.col("t1") + 10).cast("double")
-    q = (F.col("n2") + 1).cast("double") / (F.col("t2") + 10).cast("double")
-    lnr = F.round(
-        F.log(
-            ((F.col("n1") + 1) * (F.col("t2") + 10)).cast("double")
-            / ((F.col("n2") + 1) * (F.col("t1") + 10)).cast("double")
-        ),
-        6,
-    )
-    term = c.select(
-        "event_type",
-        F.round((p - q) * lnr * 1000000, 0).cast("long").alias("tq"),
-    )
-    return term.groupBy("event_type").agg(
-        F.round(F.sum("tq").cast("double") / F.lit(1000000.0), 6).alias("psi")
     )
 
 

@@ -2,10 +2,8 @@
 
 The former 7.6k-line single-file registry is split into per-family
 modules (round 7, verdict #7). Importing this module imports them in
-the ORIGINAL registration order, so QUERIES / EXTRA_QUERIES contents
-and iteration order are unchanged and every oracle string is
-byte-identical to the pre-split file (gate: scripts/verify_oracle.py
-169/169 at sf0.001 and sf0.01).
+the original registration order, so EXTRA_QUERIES iteration order
+follows registration; the driver-facing order is queries.QUERY_ORDER.
 """
 
 from . import queries_common  # noqa: F401

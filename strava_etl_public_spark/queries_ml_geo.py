@@ -20,68 +20,10 @@ from .session import ensure_harness_conf  # noqa: F401
 from .queries import register, register_extra, streams  # noqa: F401
 from .operators import dedup, multimodal, similarity, text  # noqa: F401
 from .queries_common import _cos_sql  # noqa: F401
-from .queries_dedup_sim import _CC_CLOSURE_SQL, _ivf_oracle, _minhash_oracle  # noqa: F401
+from .queries_dedup_sim import _ivf_oracle  # noqa: F401
 from .queries_sketch import _hll_oracle  # noqa: F401
 from .queries_stats_text import x_incremental_agg_merge  # noqa: F401
 from .queries_stream_state import _cms_users_oracle  # noqa: F401
-
-
-# ---------------------------------------------------------------------------
-# Event-sequence transition matrix (first-order Markov)
-# ---------------------------------------------------------------------------
-
-
-@register_extra(
-    "x_markov_transitions",
-    oracle="""
-WITH e AS (
-  SELECT user_id, event_type,
-         CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS es, event_id
-  FROM events
-),
-s AS (
-  SELECT user_id, event_type AS src,
-         lead(event_type) OVER (PARTITION BY user_id
-                                ORDER BY es, event_id) AS dst
-  FROM e
-),
-t AS (SELECT src, dst, CAST(count(*) AS BIGINT) AS n FROM s
-      WHERE dst IS NOT NULL GROUP BY src, dst),
-tot AS (SELECT src, sum(n) AS tn FROM t GROUP BY src)
-SELECT t.src, t.dst, t.n,
-       round(CAST(t.n AS DOUBLE) / CAST(tot.tn AS DOUBLE), 6) AS p
-FROM t JOIN tot ON t.src = tot.src
-""",
-)
-def x_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition matrix over per-user event
-    sequences (click→view→purchase probabilities — the product-
-    analytics path model next to the funnel and cohort rows): one
-    lead window per user (one sort family) + two hash aggs; row
-    counts exact, probabilities one division. |types|² output — model
-    state, not data."""
-    ensure_harness_conf(spark)
-    ev = load(spark, sf_dir, "events")
-    e = ev.select(
-        "user_id", "event_type", ep.epoch_s(ev).alias("es"), "event_id"
-    )
-    w = W.partitionBy("user_id").orderBy("es", "event_id")
-    s = e.select(
-        "event_type",
-        F.lead("event_type").over(w).alias("dst"),
-    ).filter(F.col("dst").isNotNull())
-    t = s.groupBy(F.col("event_type").alias("src"), "dst").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-    tot = t.groupBy("src").agg(F.sum("n").alias("tn"))
-    return t.join(tot, "src").select(
-        "src",
-        "dst",
-        "n",
-        F.round(F.col("n").cast("double") / F.col("tn").cast("double"), 6).alias(
-            "p"
-        ),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -270,216 +212,6 @@ def x_fuzzy_join_names(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id1").cast("long").alias("id1"),
         F.col("id2").cast("long").alias("id2"),
         "distance",
-    )
-
-
-# ---------------------------------------------------------------------------
-# CUSUM changepoint detection on daily series
-# ---------------------------------------------------------------------------
-
-
-@register_extra(
-    "x_cusum_changepoint",
-    oracle="""
-WITH e AS (
-  SELECT event_type,
-         CAST(epoch_ns(ts) // 1000000000 AS BIGINT) // 86400 AS day,
-         CAST(round(CAST(value AS DOUBLE) * 1000000, 0) AS BIGINT) AS vq
-  FROM events WHERE value IS NOT NULL
-),
-d AS (
-  SELECT event_type, day,
-         CAST(round(CAST(sum(vq) AS DOUBLE) / CAST(count(*) AS DOUBLE), 0)
-              AS BIGINT) AS mq
-  FROM e GROUP BY event_type, day
-),
-p AS (
-  SELECT event_type, day, mq,
-         sum(mq) OVER (PARTITION BY event_type ORDER BY day
-                       ROWS UNBOUNDED PRECEDING) AS pre,
-         row_number() OVER (PARTITION BY event_type ORDER BY day) AS k,
-         sum(mq) OVER (PARTITION BY event_type) AS tot,
-         count(*) OVER (PARTITION BY event_type) AS nd
-  FROM d
-),
-s AS (
-  SELECT event_type, day, nd,
-         abs(nd * pre - k * tot) AS absd
-  FROM p
-),
-sel AS (
-  SELECT event_type, day, nd, absd,
-         row_number() OVER (PARTITION BY event_type
-                            ORDER BY absd DESC, day) AS rn
-  FROM s
-)
-SELECT event_type,
-       CAST(nd AS BIGINT) AS n_days,
-       CAST(day AS BIGINT) AS changepoint_day,
-       round(CAST(absd AS DOUBLE) / CAST(nd AS DOUBLE) / 1000000.0, 6)
-         AS cusum_max
-FROM sel WHERE rn = 1
-""",
-)
-def x_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUSUM changepoint per event type over the daily-mean series:
-    S_k = Σ_{i≤k}(x̄_i − x̄) peaks at the most likely mean-shift day
-    (Page 1954 / the standard offline CUSUM scan). Kept EXACT by
-    clearing denominators — n·prefix_k − k·total over 6dp-quantized
-    daily means is pure BIGINT, so the argmax day is unambiguous and
-    engine-identical; only the reported magnitude divides at the end.
-    The alarm that tells you WHEN the drift x_drift_psi scores
-    actually began. One hash agg + one sort family over the (tiny)
-    per-day series + one argmax agg."""
-    ensure_harness_conf(spark)
-    ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    e = ev.select(
-        "event_type",
-        (ep.epoch_s(ev) / 86400).cast("long").alias("day"),
-        F.round(F.col("value").cast("double") * 1000000, 0)
-        .cast("long")
-        .alias("vq"),
-    )
-    d = e.groupBy("event_type", "day").agg(
-        F.round(F.sum("vq").cast("double") / F.count(F.lit(1)).cast("double"), 0)
-        .cast("long")
-        .alias("mq")
-    )
-    wo = W.partitionBy("event_type").orderBy("day")
-    wp = W.partitionBy("event_type")
-    p = d.select(
-        "event_type",
-        "day",
-        F.sum("mq").over(wo.rowsBetween(W.unboundedPreceding, W.currentRow)).alias(
-            "pre"
-        ),
-        F.row_number().over(wo).alias("k"),
-        F.sum("mq").over(wp).alias("tot"),
-        F.count(F.lit(1)).over(wp).alias("nd"),
-    )
-    s = p.select(
-        "event_type",
-        "day",
-        "nd",
-        F.abs(F.col("nd") * F.col("pre") - F.col("k") * F.col("tot")).alias("absd"),
-    )
-    return s.groupBy("event_type").agg(
-        F.max("nd").cast("long").alias("n_days"),
-        F.max_by("day", F.struct(F.col("absd"), (-F.col("day")).alias("nd2")))
-        .cast("long")
-        .alias("changepoint_day"),
-        F.round(
-            F.max("absd").cast("double")
-            / F.max("nd").cast("double")
-            / F.lit(1000000.0),
-            6,
-        ).alias("cusum_max"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Benford leading-digit audit
-# ---------------------------------------------------------------------------
-
-#: log10(1 + 1/d) as exact double literals shared with the oracle —
-#: constants, so no engine-libm log enters the comparison at all.
-_BENFORD_P = {d: __import__("math").log10(1 + 1 / d) for d in range(1, 10)}
-
-
-def _benford_oracle() -> str:
-    pcase = "CASE d " + " ".join(
-        f"WHEN {d} THEN {repr(p)}" for d, p in _BENFORD_P.items()
-    ) + " END"
-    return f"""
-WITH v AS (
-  SELECT event_type, value FROM events WHERE value IS NOT NULL AND value > 0
-),
-d AS (
-  SELECT event_type,
-         CAST(substr(CAST(CAST(floor(value * 1000000) AS BIGINT) AS VARCHAR),
-                     1, 1) AS BIGINT) AS d
-  FROM v
-),
-c AS (
-  SELECT event_type, d, CAST(count(*) AS BIGINT) AS obs
-  FROM d WHERE d BETWEEN 1 AND 9 GROUP BY event_type, d
-),
-g AS (
-  SELECT a.event_type, b.d
-  FROM (SELECT DISTINCT event_type FROM c) a,
-       unnest(generate_series(1, 9)) AS b(d)
-),
-f AS (
-  SELECT g.event_type, g.d, coalesce(c.obs, 0) AS obs
-  FROM g LEFT JOIN c ON c.event_type = g.event_type AND c.d = g.d
-),
-t AS (SELECT event_type, sum(obs) AS n FROM f GROUP BY event_type),
-chi AS (
-  SELECT f.event_type,
-         CAST(round((CAST(f.obs AS DOUBLE) - CAST(t.n AS DOUBLE) * ({pcase}))
-                    * (CAST(f.obs AS DOUBLE) - CAST(t.n AS DOUBLE) * ({pcase}))
-                    / (CAST(t.n AS DOUBLE) * ({pcase})) * 1000000, 0) AS BIGINT)
-           AS termq
-  FROM f JOIN t ON f.event_type = t.event_type
-)
-SELECT chi.event_type,
-       CAST(max(t.n) AS BIGINT) AS n,
-       round(CAST(sum(termq) AS DOUBLE) / 1000000.0, 6) AS chi2
-FROM chi JOIN t ON chi.event_type = t.event_type
-GROUP BY chi.event_type
-"""
-
-
-@register_extra("x_benford_audit", oracle=_benford_oracle())
-def x_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benford's-law audit of `value` per event type: leading-digit
-    distribution (of the 6dp-integerized value — leading digit is
-    scale-invariant) vs the log10(1+1/d) expectation, χ² per group.
-    Fabricated or truncated numeric columns jump out (the classic
-    fraud/data-entry screen); a synthetic uniform fixture rightly
-    FAILS Benford — large χ² here is a property of the data, not a
-    bug, and that is the point of shipping the audit. Expected
-    frequencies are double LITERALS shared with the oracle (no libm
-    in the comparison); per-digit χ² terms are 6dp-quantized before
-    the sum so order can't move a bit."""
-    ensure_harness_conf(spark)
-    ev = load(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull() & (F.col("value") > 0)
-    )
-    d = ev.select(
-        "event_type",
-        F.substring(
-            F.floor(F.col("value") * 1000000).cast("long").cast("string"), 1, 1
-        )
-        .cast("long")
-        .alias("d"),
-    ).filter(F.col("d").between(1, 9))
-    c = d.groupBy("event_type", "d").agg(F.count(F.lit(1)).cast("long").alias("obs"))
-    grid = (
-        c.select("event_type")
-        .distinct()
-        .crossJoin(spark.range(1, 10).select(F.col("id").alias("d")))
-    )
-    f = grid.join(F.broadcast(c), ["event_type", "d"], "left").select(
-        "event_type", "d", F.coalesce("obs", F.lit(0)).alias("obs")
-    )
-    t = f.groupBy("event_type").agg(F.sum("obs").alias("n"))
-    pexpr = F.lit(None).cast("double")
-    for dd in range(9, 0, -1):
-        pexpr = F.when(F.col("d") == dd, F.lit(_BENFORD_P[dd])).otherwise(pexpr)
-    j = f.join(t, "event_type")
-    exp = F.col("n").cast("double") * pexpr
-    termq = F.round(
-        (F.col("obs").cast("double") - exp)
-        * (F.col("obs").cast("double") - exp)
-        / exp
-        * 1000000,
-        0,
-    ).cast("long")
-    chi = j.select("event_type", F.col("n"), termq.alias("termq"))
-    return chi.groupBy("event_type").agg(
-        F.max("n").cast("long").alias("n"),
-        F.round(F.sum("termq").cast("double") / F.lit(1000000.0), 6).alias("chi2"),
     )
 
 
@@ -840,79 +572,6 @@ def x_embed_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Incremental view maintenance: delta rule over an agg-on-join view
-# ---------------------------------------------------------------------------
-
-
-@register_extra(
-    "x_ivm_join_view",
-    oracle="""
-SELECT CAST(year(o.o_orderdate) AS BIGINT) AS order_year,
-       CAST(count(*) AS BIGINT) AS n_items,
-       CAST(sum(CAST(round(l.l_extendedprice * (1 - l.l_discount) * 10000, 0)
-                     AS HUGEINT)) AS BIGINT) AS revenue_q
-FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-GROUP BY year(o.o_orderdate)
-""",
-)
-def x_ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental view maintenance under the delta rule: the
-    revenue-per-order-year view is maintained INCREMENTALLY — the
-    base state aggregates 'history' (line numbers ≠ 1), the delta
-    batch (line number 1) aggregates separately through the SAME
-    join, and the two states merge algebraically (counts and exact
-    decimal sums ADD, a NULL-safe full-outer merge per group) — while
-    the ORACLE recomputes the view from scratch over everything.
-    Equality proves Δ(A⋈B → γ) = γ(ΔA⋈B) ⊕ V for an append-only fact
-    side — the update path that touches only the delta instead of
-    re-scanning 100 TB of history (the aggstate row's algebra, now
-    with the dimension join inside the loop)."""
-    ensure_harness_conf(spark)
-    li = load(spark, sf_dir, "lineitem")
-    o = load(spark, sf_dir, "orders")
-    od = o.select(
-        "o_orderkey", F.year(ep.as_timestamp(o, "o_orderdate")).alias("order_year")
-    )
-    rq = F.round(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000, 0
-    ).cast("decimal(38,0)")
-
-    def view(df: DataFrame) -> DataFrame:
-        return (
-            df.join(od, df["l_orderkey"] == od["o_orderkey"])
-            .groupBy("order_year")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_items"),
-                F.sum(rq).alias("rev"),
-            )
-        )
-
-    v_old = view(li.filter(F.col("l_linenumber") != 1))
-    v_delta = view(li.filter(F.col("l_linenumber") == 1))
-    a = v_old.select(
-        F.col("order_year").alias("y"),
-        F.col("n_items").alias("n1"),
-        F.col("rev").alias("r1"),
-    )
-    b = v_delta.select(
-        F.col("order_year").alias("y2"),
-        F.col("n_items").alias("n2"),
-        F.col("rev").alias("r2"),
-    )
-    merged = a.join(b, a["y"] == b["y2"], "full_outer")
-    zero = F.lit(0).cast("decimal(38,0)")
-    return merged.select(
-        F.coalesce("y", "y2").alias("order_year"),
-        (
-            F.coalesce("n1", F.lit(0)) + F.coalesce("n2", F.lit(0))
-        ).cast("long").alias("n_items"),
-        (F.coalesce("r1", zero) + F.coalesce("r2", zero))
-        .cast("long")
-        .alias("revenue_q"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # Real image resize on the multimodal path
 # ---------------------------------------------------------------------------
 
@@ -1040,46 +699,6 @@ assign AS (
 )"""
 
 
-def _kmeans_oracle(
-    n_cent: int = 16, stride: int = 37, refine_iters: int = 2, dim: int = 64
-) -> str:
-    """Lloyd prefix (shared generator) finished as per-vector cluster
-    labels + sizes."""
-    return f"""{_lloyd_assign_sql(n_cent, stride, refine_iters, dim, False)}
-SELECT vec_id, cent_id,
-       CAST(count(*) OVER (PARTITION BY cent_id) AS BIGINT) AS cluster_size
-FROM assign
-"""
-
-
-@register_extra("x_embed_kmeans", oracle=_kmeans_oracle())
-def x_embed_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K-means clustering as a first-class output (not just an ANN
-    index): 16 clusters, deterministic strided seeds, two decimal-
-    exact Lloyd passes, per-vector labels + cluster sizes — every
-    ASSIGNMENT hash-matched against the oracle's unrolled-CTE replay.
-    The clustering face the SemDeDup/curation stack consumes directly
-    (x_embed_centroids audits a labeled clustering; this one creates
-    an unlabeled one)."""
-    ensure_harness_conf(spark)
-    from pyspark.sql import Window as W2
-
-    from .operators.similarity import build_ivf_index_arrow
-
-    emb = load(spark, sf_dir, "embeddings")
-    _cents, corpus = build_ivf_index_arrow(
-        emb, "vec_id", "embedding", n_centroids=16, refine_iters=2
-    )
-    return corpus.select(
-        F.col("n_id").alias("vec_id"),
-        "cent_id",
-        F.count(F.lit(1))
-        .over(W2.partitionBy("cent_id"))
-        .cast("long")
-        .alias("cluster_size"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # SemDeDup: learned clusters as the dedup blocking key
 # ---------------------------------------------------------------------------
@@ -1110,7 +729,7 @@ def x_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairwise work (the whole point of the method: within-cluster
     pairs only, never corpus²) and the cosine threshold picks the
     semantic duplicates. Pure composition of two verified faces
-    (x_embed_kmeans clustering → embedding_near_dup with cent_id as
+    (k-means clustering → embedding_near_dup with cent_id as
     the block key), oracle-exact end-to-end through the unrolled
     Lloyd replay + in-cluster pairwise scan."""
     ensure_harness_conf(spark)
@@ -1292,79 +911,6 @@ def x_geo_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_extra(
-    "x_geo_track_length",
-    oracle="""
-WITH e AS (
-  SELECT user_id, event_id,
-         CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS es,
-         (event_id * 48271) % 200001 - 100000 AS la,
-         (event_id * 16807) % 200001 - 100000 AS lo
-  FROM events
-),
-s AS (
-  SELECT user_id,
-         la - lag(la) OVER w AS dla,
-         lo - lag(lo) OVER w AS dlo
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY es, event_id)
-),
-q AS (
-  SELECT user_id,
-         CAST(round(sqrt(CAST(dla * dla + dlo * dlo AS DOUBLE)) * 1000000, 0)
-              AS BIGINT) AS lenq
-  FROM s WHERE dla IS NOT NULL
-)
-SELECT user_id,
-       CAST(count(*) AS BIGINT) AS n_segments,
-       round(CAST(sum(lenq) AS DOUBLE) / 1000000000000.0, 6) AS track_deg
-FROM q GROUP BY user_id
-""",
-)
-def x_geo_track_length(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user trajectory length over the event sequence (positions
-    derived deterministically from event ids): one lag window per
-    user, per-segment planar length with the exact-sum discipline —
-    sqrt is IEEE-exact, each segment quantizes to 6dp BEFORE the sum,
-    so the total is order-proof and engine-identical. The
-    movement-analytics face (distance accumulated per entity) on the
-    same sort family the session/TWAP rows already pay."""
-    ensure_harness_conf(spark)
-    ev = load(spark, sf_dir, "events")
-    e = ev.select(
-        "user_id",
-        "event_id",
-        ep.epoch_s(ev).alias("es"),
-        ((F.col("event_id") * 48271) % 200001 - 100000).alias("la"),
-        ((F.col("event_id") * 16807) % 200001 - 100000).alias("lo"),
-    )
-    w = W.partitionBy("user_id").orderBy("es", "event_id")
-    s = e.select(
-        "user_id",
-        (F.col("la") - F.lag("la").over(w)).alias("dla"),
-        (F.col("lo") - F.lag("lo").over(w)).alias("dlo"),
-    ).filter(F.col("dla").isNotNull())
-    q = s.select(
-        "user_id",
-        F.round(
-            F.sqrt(
-                (F.col("dla") * F.col("dla") + F.col("dlo") * F.col("dlo")).cast(
-                    "double"
-                )
-            )
-            * 1000000,
-            0,
-        )
-        .cast("long")
-        .alias("lenq"),
-    )
-    return q.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_segments"),
-        F.round(
-            F.sum("lenq").cast("double") / F.lit(1000000000000.0), 6
-        ).alias("track_deg"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Sketch union at the query level: merged half-sketches == whole sketch
 # ---------------------------------------------------------------------------
@@ -1407,70 +953,6 @@ def x_sketch_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _keeplist_oracle() -> str:
-    """Recursive-closure clusters over the minhash pairs, anti-joined:
-    a doc survives iff it is not a non-representative member."""
-    return f"""
-WITH RECURSIVE pairs AS ({_minhash_oracle()}),{_CC_CLOSURE_SQL},
-drops AS (SELECT doc_id FROM cc WHERE doc_id != rep_id)
-SELECT d.doc_id, d.source
-FROM documents d LEFT JOIN drops x ON d.doc_id = x.doc_id
-WHERE x.doc_id IS NULL
-"""
-
-
-@register_extra("x_dedup_keeplist", oracle=_keeplist_oracle())
-def x_dedup_keeplist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The keep-list a curation pipeline actually ships: corpus minus
-    every non-representative member of a near-dup cluster (MinHash
-    pairs → min-label components → anti-join). Singletons and cluster
-    representatives survive; the anti-join is against the BOUNDED drop
-    set (cluster members only), so the corpus side streams through a
-    broadcast-anti at any scale — the same shape as the
-    delete-propagation sweep."""
-    ensure_harness_conf(spark)
-    docs = load(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_dedup(
-        docs, "doc_id", "text", n=3, k=8, bands=4, threshold=0.5
-    )
-    cc = dedup.duplicate_clusters(pairs, "doc_a", "doc_b")
-    drops = cc.filter(F.col("doc_id") != F.col("rep_id")).select("doc_id")
-    return docs.join(F.broadcast(drops), "doc_id", "left_anti").select(
-        "doc_id", "source"
-    )
-
-
-@register_extra(
-    "x_geo_heatmap",
-    oracle="""
-WITH c AS (
-  SELECT (c_custkey * 48271) % 2000001 - 1000000 AS la,
-         (c_custkey * 16807) % 2000001 - 1000000 AS lo
-  FROM customer
-)
-SELECT CAST(floor(CAST(la AS DOUBLE) / 250000) AS BIGINT) AS cell_y,
-       CAST(floor(CAST(lo AS DOUBLE) / 250000) AS BIGINT) AS cell_x,
-       CAST(count(*) AS BIGINT) AS n
-FROM c GROUP BY 1, 2
-""",
-)
-def x_geo_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spatial density grid (0.25° cells) of the customer sites — the
-    heat-map aggregation every geo dashboard starts from and the
-    occupancy statistic that sizes the radius join's cells: one hash
-    agg over integer cell keys, map-side combined, |cells| rows out
-    regardless of point count."""
-    ensure_harness_conf(spark)
-    c = load(spark, sf_dir, "customer").select(
-        ((F.col("c_custkey") * 48271) % 2000001 - 1000000).alias("la"),
-        ((F.col("c_custkey") * 16807) % 2000001 - 1000000).alias("lo"),
-    )
-    return c.groupBy(
-        F.floor(F.col("la").cast("double") / 250000).cast("long").alias("cell_y"),
-        F.floor(F.col("lo").cast("double") / 250000).cast("long").alias("cell_x"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
-
-
 @register_extra("x_sketch_cms_merge", oracle=_cms_users_oracle())
 def x_sketch_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CMS union proof at the query level (completing the mergeable-
@@ -1508,61 +990,4 @@ def x_sketch_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     est = sketch.cms_lookup(merged, top, "user_id", d=4, w=1024)
     return top.join(est, "user_id").select(
         F.col("user_id").cast("long").alias("user_id"), "n_true", "cms_count"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Quality-aware dedup keep policy: keep the LONGEST cluster member (r7)
-# ---------------------------------------------------------------------------
-
-
-def _keep_longest_oracle() -> str:
-    """Same recursive-closure clusters; the kept member per cluster is
-    the argmax by (n_chars desc, doc_id asc) — the policy production
-    pipelines prefer over keep-min-id, because near-dup clusters often
-    contain truncated variants of one document."""
-    return f"""
-WITH RECURSIVE pairs AS ({_minhash_oracle()}),{_CC_CLOSURE_SQL},
-m AS (
-  SELECT cc.rep_id, cc.doc_id, d.n_chars,
-         row_number() OVER (PARTITION BY cc.rep_id
-                            ORDER BY d.n_chars DESC, cc.doc_id) AS rk,
-         count(*) OVER (PARTITION BY cc.rep_id) AS sz
-  FROM cc JOIN documents d USING (doc_id)
-)
-SELECT rep_id AS cluster_id, doc_id AS kept_doc_id,
-       CAST(n_chars AS BIGINT) AS kept_n_chars,
-       CAST(sz AS BIGINT) AS cluster_size
-FROM m WHERE rk = 1
-"""
-
-
-@register_extra("x_dedup_keep_longest", oracle=_keep_longest_oracle())
-def x_dedup_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-aware canonical member per near-dup cluster: instead of
-    the min-id representative, keep the LONGEST member (ties → min
-    doc_id) — truncated variants lose to their fuller original, the
-    keep policy production curation actually uses. One broadcast-sized
-    join of the bounded cluster map onto doc lengths + one per-cluster
-    window; the cluster map itself is the already-certified CC output,
-    so this adds an argmax policy layer, not new graph machinery."""
-    ensure_harness_conf(spark)
-    from pyspark.sql import Window
-
-    docs = load(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_dedup(
-        docs, "doc_id", "text", n=3, k=8, bands=4, threshold=0.5
-    )
-    cc = dedup.duplicate_clusters(pairs, "doc_a", "doc_b")
-    m = cc.join(docs.select("doc_id", "n_chars"), "doc_id")
-    w = Window.partitionBy("rep_id").orderBy(F.desc("n_chars"), "doc_id")
-    return (
-        m.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select(
-            F.col("rep_id").alias("cluster_id"),
-            F.col("doc_id").alias("kept_doc_id"),
-            F.col("n_chars").cast("long").alias("kept_n_chars"),
-            F.col("cluster_size").cast("long").alias("cluster_size"),
-        )
     )

@@ -106,33 +106,35 @@ QUERY_ORDER: tuple[str, ...] = (
     # ranking family is certified by the hybrid-retrieval official row
     # (BM25 + dense fusion) and the tfidf extra stays oracle-gated;
     # the slot goes to the maintenance family's time-series face.
-    # x_text_chunk_windows demoted (late-r7 fourth wave): chunking is
-    # certified by the pack-chunks extra + BPE/token paths; the slot
-    # goes to the duplicated-span REMOVAL rewrite (the Lee-et-al step
-    # a pretraining pipeline actually runs).
+    # x_text_chunk_windows demoted (late-r7 fourth wave), later deleted
+    # by the extras census: chunking is certified by the
+    # x_text_pack_chunks extra (same chunk_documents operator) + the
+    # BPE/token paths; the slot goes to the duplicated-span REMOVAL
+    # rewrite (the Lee-et-al step a pretraining pipeline actually runs).
     "x_text_span_removal",
     # r8 promotion (verdict #1): the RAG stack's official row — BM25
     # top-20 + dense cosine top-20 fused by reciprocal-rank fusion.
     "x_text_hybrid_retrieval",
     # x_text_pii_redact demoted (second-wave r7 rotation): the regex
-    # projection family is certified by x_text_encoding_quality +
-    # x_text_lang_id rows and the extra stays oracle-gated; slot freed
-    # for the curation batch below.
-    # x_text_encoding_quality demoted (r12 rotation, verdict #3): the
-    # text family keeps FOUR official rows (lang_id, quality,
-    # span_removal, hybrid_retrieval) and the mojibake/encoding
-    # projection stays oracle-gated as an extra; the slot goes to the
+    # projection family is certified by the x_text_lang_id row and the
+    # extra stays oracle-gated; slot freed for the curation batch below.
+    # x_text_encoding_quality demoted (r12 rotation, verdict #3), later
+    # deleted by the extras census (an inline projection that reaches
+    # no operator): the text family keeps FOUR official rows (lang_id,
+    # quality, span_removal, hybrid_retrieval); the slot goes to the
     # round-11 LogStore-seam face below.
     # sketches / deterministic sampling — x_sketch_hll_users and
-    # x_sample_hash_split demoted (second-wave r7 rotation): the HLL
-    # family is certified by the merge/streaming extras, hash sampling
-    # by the fixed-k/stratified/weighted/domain-mix extras; slots
-    # freed for the curation operators a training pipeline runs first.
-    # x_curation_token_budget demoted (r12 rotation, verdict #3): the
-    # curation family is certified by the x_pipeline_curation official
-    # row (which composes budgeting inside the fused pipeline) and the
-    # token-budget extra stays oracle-gated; the slot goes to the
-    # round-11 commit-log-at-scale face below.
+    # x_sample_hash_split demoted (second-wave r7 rotation; the latter
+    # later deleted by the extras census): the HLL family is certified
+    # by the merge/streaming extras, hash sampling (sample_by_hash) by
+    # the x_sim_topk_ivf_arrow headline and the fixed-k/stratified/
+    # weighted/domain-mix extras; slots freed for the curation
+    # operators a training pipeline runs first.
+    # x_curation_token_budget demoted (r12 rotation, verdict #3), later
+    # deleted by the extras census: the curation family is certified by
+    # the x_pipeline_curation official row, which composes budgeting
+    # (token_budget_allocate) inside the fused pipeline; the slot goes
+    # to the round-11 commit-log-at-scale face below.
     # x_curation_dsir demoted (r9 rotation): importance weighting is
     # certified by the token-budget + pipeline_curation official rows
     # and the DSIR extra stays oracle-gated; slot freed for the exact
@@ -180,8 +182,8 @@ QUERY_ORDER: tuple[str, ...] = (
     # the dedup block had 7 official rows and the freed slot gives
     # the THIRD fused pipeline (curation manifest) an official row.
     # x_dedup_ngram_jaccard demoted (second-wave r7 rotation): the
-    # shingle-Jaccard semantics now have the completeness-guaranteed
-    # exact join (x_dedup_jaccard_exact) as their official row; the
+    # shingle-Jaccard semantics keep the completeness-guaranteed exact
+    # join (jaccard_join_prefix, run by x_mm_video_phash_neardup); the
     # blocked approximation stays oracle-gated as an extra. Slot freed
     # for the keep-longest cluster policy layer.
     # x_dedup_embedding_cosine demoted (r8 rotation, verdict #1):
@@ -192,17 +194,17 @@ QUERY_ORDER: tuple[str, ...] = (
     # family keeps THREE official rows (exact, minhash_lsh,
     # incremental — the incremental row folds batches into persisted
     # LSH state and proves clusters == full recompute, exercising the
-    # same connected-components canonicalization); the cluster-policy
-    # extra stays oracle-gated; the slot goes to the round-11
-    # multi-writer streaming face below.
-    # x_dedup_jaccard_exact demoted (r10 rotation, verdict #1): the
-    # shingle-Jaccard family keeps three official rows (minhash_lsh,
-    # clusters, incremental) and the exact Bayardo join stays
-    # oracle-gated as an extra; slot freed for the lakehouse
-    # merge-on-read UPDATE/RESTORE signature row.
-    # x_dedup_keep_longest demoted (r9 rotation): the cluster-policy
-    # layer is certified by the x_dedup_clusters official row + the
-    # keep-longest extra; slot freed for OPTIMIZE-on-snapshots — the
+    # same connected-components canonicalization, so the extras census
+    # later deleted the cluster-policy extra); the slot goes to the
+    # round-11 multi-writer streaming face below.
+    # x_dedup_jaccard_exact demoted (r10 rotation, verdict #1), later
+    # deleted by the extras census: the shingle-Jaccard family keeps
+    # official rows (minhash_lsh, incremental) and the exact Bayardo
+    # join (jaccard_join_prefix) runs in x_mm_video_phash_neardup; slot
+    # freed for the lakehouse merge-on-read UPDATE/RESTORE signature row.
+    # x_dedup_keep_longest demoted (r9 rotation), later deleted by the
+    # extras census: duplicate_clusters runs in the x_dedup_incremental
+    # official row; slot freed for OPTIMIZE-on-snapshots — the
     # versioned-table contract's official row.
     # r8 (verdict #5): incremental dedup maintenance — fold a new
     # batch into persisted LSH state, clusters == full recompute.
@@ -217,25 +219,25 @@ QUERY_ORDER: tuple[str, ...] = (
     "x_ts_acf",
     # x_merge_into demoted (r10 rotation, verdict #1): general MERGE
     # is now composed INSIDE the managed-table official row's
-    # create→merge→optimize pipeline, and the five-arm contract stays
-    # oracle-gated via the extra + x_merge_not_matched_by_source.
+    # create→merge→optimize pipeline; the extras census later deleted
+    # it and x_merge_not_matched_by_source, and the five-arm contract
+    # is pinned by tests/test_table.py and tests/test_upsert_diff.py.
     # r10 promotions (verdict #1 — the round-9 lakehouse layer earned
     # official rows); r11 rotation (verdict #3) swaps the completed
     # round-10 faces in and retires rows with sibling coverage:
     #  - x_table_delete_vectors demoted: DV mechanics are exercised
     #    by x_table_compact (victim census over DVs), x_table_reclaim
-    #    (compact→vacuum loop) and the managed-table pipeline row;
-    #    the extra stays oracle-gated.
+    #    (compact→vacuum loop) and the managed-table pipeline row.
     #  - x_table_update_restore demoted: merge-on-read UPDATE and
     #    RESTORE ride inside the compact/reclaim/CDF-source rows
-    #    (rollback replay is proven in the CDF gate); extra stays
-    #    oracle-gated.
+    #    (rollback replay is proven in the CDF gate).
     #  - x_table_column_mapping demoted: the widen row rides the
     #    column map and compaction-under-column-map is directed-
-    #    tested; extra stays oracle-gated.
-    #  - x_maintenance_zorder demoted: OPTIMIZE is exercised by the
-    #    pipeline row; the Z-order pruning proof stays oracle-gated
-    #    as an extra.
+    #    tested.
+    #  - x_maintenance_zorder demoted: OPTIMIZE (and z_value) is
+    #    exercised by the pipeline row.
+    #  The extras census later deleted all four extras: the rows named
+    #  reach every operator they reached.
     "x_pipeline_managed_table",
     # r11 promotions (verdict #3): the round-10 lakehouse faces —
     # minor compaction (O(victim-bytes) maintenance), type widening
@@ -260,9 +262,8 @@ QUERY_ORDER: tuple[str, ...] = (
     "x_table_ckpt_parquet",
     "x_stream_table_sink_multi",
     # x_maintenance_optimize_snapshot demoted (r10): superseded by
-    # x_maintenance_zorder (same OPTIMIZE-on-snapshots contract PLUS
-    # the clustering/pruning proof) and the managed-table pipeline
-    # row's optimize step; stays oracle-gated as an extra.
+    # the managed-table pipeline row's optimize step; later deleted by
+    # the extras census.
     # x_graph_triangles demoted (r10): the graph family keeps its
     # official row via x_sql_recursive_khop (k-hop reachability) and
     # triangles stays oracle-gated as an extra.
@@ -275,11 +276,10 @@ QUERY_ORDER: tuple[str, ...] = (
     "x_pipeline_curation",
     # r8 promotions (verdict #1): the feature-store pair — leakage-
     # free PIT join on SCD2 state + event-time trailing-window RANGE
-    # features. x_pipeline_export demoted (r11 rotation): the fused-
-    # pipeline family keeps three official rows (activity e2e,
-    # curation, managed-table) and the export pipeline's chunk/
-    # prefix-sum/shard machinery is certified by the global-row-ids
-    # official row + the oracle-gated extra.
+    # features. x_pipeline_export demoted (r11 rotation), later deleted
+    # by the extras census: the fused-pipeline family keeps three
+    # official rows (activity e2e, curation, managed-table) and the
+    # prefix-sum machinery runs in the global-row-ids official row.
     "x_pit_join_state",
     "x_feature_trailing_window",
     # binned range join (new r6 operator family)
@@ -327,8 +327,9 @@ QUERY_ORDER: tuple[str, ...] = (
     # the 22-shape battery.
     "x_tpch_q21_waiting_supplier",
     # q3_revenue_join demoted (r8 fifth wave): the join family is
-    # certified by the full 22-shape TPC-H battery's oracle gates and
-    # q3 stays oracle-gated as an extra + a bench headline; the freed
+    # certified by the TPC-H shapes the extras census kept (the ones
+    # tests/test_relational_plans.py pins) and q3 stays oracle-gated
+    # as an extra + a bench headline; the freed
     # slot gives the watermarked STREAM-STREAM interval join — the
     # streaming face that had no official row — its driver row.
     "x_stream_stream_join",
@@ -336,20 +337,20 @@ QUERY_ORDER: tuple[str, ...] = (
     # semantics keep official coverage via x_range_join_sessions and
     # the session_window extras; it stays oracle-gated as an extra
     # AND a bench.py headline (bench merges both registries).
-    # q_pivot_event_counts demoted late-r7: the pivot family is
-    # certified by the x_pivot_event_counts extra (FILTER-clause
-    # twin); slot freed for the GIF frame-sampling row above.
-    # q_rollup_distinct demoted to extras (continuation batch): not a
-    # SURVEY §2 id, and the grouping-sets family is certified by the
-    # x_rollup_revenue / x_cube_revenue extras — the freed slot gives
-    # the PQ ANN path an official row.
-    # q_semi_anti_join demoted to extras (sixth batch): semi/anti is
-    # certified by the x_set_ops_users extra and A7's semi-shaped probe;
-    # the freed slot gives contiguous global row IDs (the operator
-    # whose naive plan dies at scale) an official CORRECTNESS row.
+    # q_pivot_event_counts demoted late-r7; slot freed for the GIF
+    # frame-sampling row above. q_rollup_distinct demoted to extras
+    # (continuation batch; not a SURVEY §2 id); the freed slot gives
+    # the PQ ANN path an official row. q_semi_anti_join demoted to
+    # extras (sixth batch): semi/anti is certified by A7's semi-shaped
+    # probe (a6_a7_user_lookup); the freed slot gives contiguous global
+    # row IDs (the operator whose naive plan dies at scale) an official
+    # CORRECTNESS row. The extras census later deleted all three with
+    # their pivot, grouping-sets and set-op twins: inline DataFrame
+    # shapes that reach no operator the kept queries do not.
     "x_global_row_ids",
     # q_asof_join demoted (r8): the as-of family's official row is now
     # x_pit_join_state (strict as-of carry on SCD2 state, DuckDB-native
-    # ASOF oracle); the event-join twin stays oracle-gated as an extra.
+    # ASOF oracle, the same asof_join_backward operator); the extras
+    # census later deleted the event-join twin.
     # Freed slot → incremental dedup maintenance (verdict #5).
 )

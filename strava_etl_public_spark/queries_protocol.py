@@ -276,162 +276,3 @@ def x_table_ckpt_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         layout.SNAPSHOT_CKPT_EVERY = old_every
         layout.LINEAGE_CKPT_PQ_THRESHOLD = old_thresh
         shutil.rmtree(root, ignore_errors=True)
-
-
-@register_extra(
-    "x_table_publish_repair",
-    oracle=f"""
-WITH base AS (
-  SELECT event_id, user_id, event_type,
-         CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS es,
-         CAST(floor(value * 1000000) AS BIGINT) AS vmic
-  FROM events
-),
-alive AS (
-  SELECT * FROM base WHERE user_id % 7 IS DISTINCT FROM 0
-),
-synth AS (
-  SELECT CAST(9300000000 + i AS BIGINT) AS event_id,
-         CAST(i AS BIGINT) AS user_id, 'repair' AS event_type,
-         CAST(32503800000 + i AS BIGINT) AS es,
-         CAST(i * 1000000 AS BIGINT) AS vmic
-  FROM range(1, 5) AS r(i)
-),
-final AS (SELECT * FROM alive UNION ALL SELECT * FROM synth),
-fp AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_rows,
-         CAST(bit_xor(h) AS BIGINT) AS xor_hash,
-         CAST(sum(h) % 1152921504606846976 AS BIGINT) AS sum_hash_mod
-  FROM (SELECT CAST(concat('0x', substr(md5(concat_ws(chr(31), {_CMP_FP_RENDER})),
-                                        1, 15)) AS BIGINT) AS h
-        FROM final)
-)
-SELECT 'publish_repair_events' AS dataset, n_rows, xor_hash, sum_hash_mod,
-       TRUE AS roll_forward_served, TRUE AS staged_fallback_served,
-       TRUE AS rename_repaired, TRUE AS chain_contiguous,
-       CAST(6 AS BIGINT) AS n_versions
-FROM fp
-""",
-)
-def x_table_publish_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """THE PUBLISH-REPAIR PROTOCOL, oracle-gated (round 12, verdict
-    #2): the record put is the commit point, and both crash windows
-    after it are REPAIRED live inside this query, with the final
-    table hash-matching the relational oracle:
-
-    * crash between record and pointer flip (an in-flight writer that
-      died) — simulated by suppressing one ``publish_pointer``: the
-      NEXT writer's entry (``resolve_entry``) rolls the commit
-      forward instead of chaining past it, so its rows appear and no
-      version slot burns;
-    * crash between record and the ``v{{n}}`` rename — simulated by
-      un-renaming a committed version back to the staged name the
-      record carries: time travel to that version SERVES through the
-      staged fallback and the read REPAIRS the rename for every
-      later consumer;
-    * after both repairs the chain is contiguous: pointer == record
-      high-water, and one more commit lands normally on top.
-
-    Cites the reference's whole-table rewrite pattern (main.py:199-
-    203) as the contract being strengthened: every write here is an
-    immutable version and a crashed publish is recoverable by ANY
-    reader, which is what a 1000-executor deployment on an object
-    store (no atomic rename) actually requires — PORTABILITY.md
-    "Commit protocol"."""
-    ensure_harness_conf(spark)
-    import json as _json
-    import os
-    import shutil
-    import tempfile
-
-    from .operators.layout import dataset_fingerprint, snapshot_max_commit
-    from .operators.logstore import LogStore, set_log_store
-    from .operators.table import ManagedTable
-
-    cols = ["event_id", "user_id", "event_type", "es", "vmic"]
-    ev = load(spark, sf_dir, "events")
-    base = ev.select(
-        "event_id",
-        "user_id",
-        "event_type",
-        ep.epoch_s(ev, "ts").cast("long").alias("es"),
-        F.floor(F.col("value") * 1000000).cast("long").alias("vmic"),
-    )
-
-    def synth(i: int):
-        return spark.createDataFrame(
-            [(9300000000 + i, i, "repair", 32503800000 + i, i * 1000000)],
-            "event_id long, user_id long, event_type string, "
-            "es long, vmic long",
-        )
-
-    class HoldFlip(LogStore):
-        """Suppress ONE pointer flip — the crashed-before-flip writer."""
-
-        def __init__(self, hold: int):
-            self.hold = hold
-
-        def publish_pointer(self, table_path, version):
-            if version == self.hold:
-                self.hold = None
-                return
-            super().publish_pointer(table_path, version)
-
-    root = tempfile.mkdtemp(prefix="publish_repair_")
-    path = os.path.join(root, "t")
-    try:
-        t = ManagedTable.create(base.repartition(8), path, key="event_id")
-        t.delete(F.col("user_id") % 7 == 0)            # v2
-        # -- crash window 1: record + rename durable, flip lost
-        set_log_store(HoldFlip(3))
-        try:
-            t.append(synth(1))                          # v3, unflipped
-        finally:
-            set_log_store(None)
-        pointer_lagged = t.version() == 2
-        t2 = ManagedTable(spark, path)
-        t2.append(synth(2))                             # entry rolls v3 → v4
-        roll_forward = (
-            pointer_lagged
-            and t2.version() == 4
-            and t2.read(version=3)
-            .filter(F.col("event_id") == 9300000001)
-            .count()
-            == 1
-        )
-        # -- crash window 2: record durable, rename lost
-        t2.append(synth(3))                             # v5
-        rec5 = _json.load(
-            open(os.path.join(path, "_commits", "5.json"))
-        )
-        os.rename(
-            os.path.join(path, "v5"), os.path.join(path, rec5["staged"])
-        )
-        LogStore().publish_pointer(path, 4)             # flip lost too
-        t3 = ManagedTable(spark, path)
-        staged_served = (
-            t3.read(version=5)
-            .filter(F.col("event_id") == 9300000003)
-            .count()
-            == 1
-        )
-        rename_repaired = os.path.isdir(os.path.join(path, "v5"))
-        t3.append(synth(4))                             # rolls v5 → v6
-        chain_contiguous = (
-            t3.version() == 6 and snapshot_max_commit(path) == 6
-        )
-        fp = dataset_fingerprint(
-            t3.read(), cols, label="publish_repair_events"
-        )
-        return fp.withColumns(
-            {
-                "roll_forward_served": F.lit(bool(roll_forward)),
-                "staged_fallback_served": F.lit(bool(staged_served)),
-                "rename_repaired": F.lit(bool(rename_repaired)),
-                "chain_contiguous": F.lit(bool(chain_contiguous)),
-                "n_versions": F.lit(6).cast("long"),
-            }
-        ).localCheckpoint(eager=True)
-    finally:
-        set_log_store(None)
-        shutil.rmtree(root, ignore_errors=True)

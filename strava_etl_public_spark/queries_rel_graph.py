@@ -1,4 +1,4 @@
-"""Relational breadth (windows/TPC-H), PageRank, CDC, governance, KMV.
+"""Graphs (PageRank, k-hop), file sources, stream-stream join, governance, KMV.
 
 Split from the former single-file queries_ext.py (round 7, verdict
 #7): registrations, names, and oracle SQL are unchanged — the
@@ -205,56 +205,6 @@ def x_source_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_extra(
-    "x_window_suite",
-    oracle="""
-SELECT event_id, user_id,
-       CAST(row_number() OVER w AS BIGINT) AS rn,
-       CAST(rank() OVER (PARTITION BY user_id ORDER BY value) AS BIGINT) AS rnk,
-       CAST(dense_rank() OVER (PARTITION BY user_id ORDER BY value) AS BIGINT) AS drnk,
-       CAST(ntile(4) OVER w AS BIGINT) AS quartile,
-       round(percent_rank() OVER (PARTITION BY user_id ORDER BY value), 6) AS pct_rank,
-       round(cume_dist() OVER (PARTITION BY user_id ORDER BY value), 6) AS cume,
-       lag(value, 1) OVER w AS prev_value,
-       lead(value, 1) OVER w AS next_value,
-       first_value(value) OVER (PARTITION BY user_id ORDER BY epoch_ns(ts), event_id
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS first_v,
-       nth_value(value, 3) OVER (PARTITION BY user_id ORDER BY epoch_ns(ts), event_id
-                                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS third_v
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ns(ts), event_id)
-""",
-)
-def x_window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full ranking/navigation window-function surface in ONE
-    query — row_number / rank / dense_rank / ntile / percent_rank /
-    cume_dist / lag / lead / first_value / nth_value — all sharing
-    two sort families (event-time order and value order) over one
-    user partitioning, so the plan is two sorts on one exchange, not
-    ten. percent_rank and cume_dist are rank arithmetic over exact
-    integers (engine-portable); rank ties on equal values are
-    IDENTICAL by definition in both engines."""
-    ensure_harness_conf(spark)
-    ev = load(spark, sf_dir, "events")
-    wt = W.partitionBy("user_id").orderBy(ep.epoch_ns(ev), "event_id")
-    wv = W.partitionBy("user_id").orderBy("value")
-    wt_frame = wt.rowsBetween(W.unboundedPreceding, W.currentRow)
-    return ev.select(
-        "event_id",
-        "user_id",
-        F.row_number().over(wt).cast("long").alias("rn"),
-        F.rank().over(wv).cast("long").alias("rnk"),
-        F.dense_rank().over(wv).cast("long").alias("drnk"),
-        F.ntile(4).over(wt).cast("long").alias("quartile"),
-        F.round(F.percent_rank().over(wv), 6).alias("pct_rank"),
-        F.round(F.cume_dist().over(wv), 6).alias("cume"),
-        F.lag("value", 1).over(wt).alias("prev_value"),
-        F.lead("value", 1).over(wt).alias("next_value"),
-        F.first("value").over(wt_frame).alias("first_v"),
-        F.nth_value("value", 3).over(wt_frame).alias("third_v"),
-    )
-
-
 @register(
     "x_stream_stream_join",
     oracle="""
@@ -423,255 +373,9 @@ def x_moments_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_extra(
-    "x_assoc_rules_events",
-    oracle="""
-WITH ut AS (SELECT DISTINCT user_id, event_type FROM events),
-nu AS (SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS n_users FROM events),
-t AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_t FROM ut GROUP BY event_type),
-pairs AS (
-  SELECT a.event_type AS lhs, b.event_type AS rhs,
-         CAST(count(*) AS BIGINT) AS n_both
-  FROM ut a JOIN ut b ON a.user_id = b.user_id AND a.event_type < b.event_type
-  GROUP BY a.event_type, b.event_type
-)
-SELECT p.lhs, p.rhs, p.n_both,
-       round(CAST(p.n_both AS DOUBLE) / CAST(n.n_users AS DOUBLE), 6) AS support,
-       round(CAST(p.n_both AS DOUBLE) / CAST(tl.n_t AS DOUBLE), 6) AS confidence,
-       round(CAST(p.n_both AS DOUBLE) * CAST(n.n_users AS DOUBLE)
-             / (CAST(tl.n_t AS DOUBLE) * CAST(tr.n_t AS DOUBLE)), 6) AS lift
-FROM pairs p
-JOIN t tl ON tl.event_type = p.lhs
-JOIN t tr ON tr.event_type = p.rhs
-CROSS JOIN nu n
-""",
-)
-def x_assoc_rules_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Association rules over user behavior (market-basket on event
-    types): for each unordered type pair, support / confidence / lift
-    from exact distinct-user counts. The pair table comes from ONE
-    self-join of the deduplicated (user, type) set — bounded by
-    users × types², with types a small vocabulary (the itemset is the
-    schema, not the data); totals broadcast. All three measures are
-    fixed ratios of exact BIGINTs — engine-exact at 6 dp."""
-    ensure_harness_conf(spark)
-    ev = load(spark, sf_dir, "events")
-    ut = ev.select("user_id", "event_type").distinct()
-    nu = ev.agg(F.countDistinct("user_id").cast("long").alias("n_users"))
-    t = ut.groupBy("event_type").agg(F.count(F.lit(1)).cast("long").alias("n_t"))
-    a = ut.select("user_id", F.col("event_type").alias("lhs"))
-    b = ut.select("user_id", F.col("event_type").alias("rhs"))
-    pairs = (
-        a.join(b, "user_id")
-        .filter(F.col("lhs") < F.col("rhs"))
-        .groupBy("lhs", "rhs")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_both"))
-    )
-    tl = t.select(F.col("event_type").alias("lhs"), F.col("n_t").alias("n_l"))
-    tr = t.select(F.col("event_type").alias("rhs"), F.col("n_t").alias("n_r"))
-    nd = lambda c: F.col(c).cast("double")
-    return (
-        pairs.join(F.broadcast(tl), "lhs")
-        .join(F.broadcast(tr), "rhs")
-        .crossJoin(F.broadcast(nu))
-        .select(
-            "lhs",
-            "rhs",
-            "n_both",
-            F.round(nd("n_both") / nd("n_users"), 6).alias("support"),
-            F.round(nd("n_both") / nd("n_l"), 6).alias("confidence"),
-            F.round(
-                nd("n_both") * nd("n_users") / (nd("n_l") * nd("n_r")), 6
-            ).alias("lift"),
-        )
-    )
-
-
-@register_extra(
-    "x_twap_value",
-    oracle="""
-WITH e AS (
-  SELECT user_id, value,
-         CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS es,
-         event_id
-  FROM events
-),
-seg AS (
-  SELECT user_id, value, es,
-         lead(es) OVER (PARTITION BY user_id ORDER BY es, event_id) - es AS dt
-  FROM e
-),
-w AS (
-  SELECT user_id,
-         CAST(round(value * 1000000, 0) AS BIGINT) AS vq, dt
-  FROM seg WHERE dt IS NOT NULL AND dt > 0
-)
-SELECT user_id,
-       CAST(sum(dt) AS BIGINT) AS total_secs,
-       round(CAST(sum(CAST(vq AS HUGEINT) * dt) AS DOUBLE)
-             / CAST(sum(dt) AS DOUBLE) / 1000000.0, 6) AS twap
-FROM w GROUP BY user_id
-""",
-)
-def x_twap_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-weighted average value per user (TWAP — the sensor/price
-    standard where a reading HOLDS until the next one, so a plain mean
-    over-weights bursts): each observation weighted by its holding
-    interval (lead(ts) − ts), the last open-ended reading excluded.
-    Weights and 6dp-quantized values multiply as exact integers and
-    sum in DECIMAL(38,0), so the weighted mean is engine-exact. One
-    sort family for the lead + one hash agg."""
-    ensure_harness_conf(spark)
-    ev = load(spark, sf_dir, "events")
-    es = ep.epoch_s(ev)
-    e = ev.select("user_id", "value", es.alias("es"), "event_id")
-    w = W.partitionBy("user_id").orderBy("es", "event_id")
-    seg = e.withColumn("dt", F.lead("es").over(w) - F.col("es")).filter(
-        F.col("dt").isNotNull() & (F.col("dt") > 0)
-    )
-    vq = F.round(F.col("value") * 1000000, 0).cast("long")
-    d38 = "decimal(38,0)"
-    return (
-        seg.select("user_id", vq.alias("vq"), "dt")
-        .groupBy("user_id")
-        .agg(
-            F.sum("dt").cast("long").alias("total_secs"),
-            F.round(
-                F.sum((F.col("vq").cast(d38) * F.col("dt").cast(d38)).cast(d38))
-                .cast("double")
-                / F.sum("dt").cast("double")
-                / F.lit(1000000.0),
-                6,
-            ).alias("twap"),
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # CDC snapshot diff
 # ---------------------------------------------------------------------------
-
-
-# ---------------------------------------------------------------------------
-# Data governance: k-anonymity, declarative expectations
-# ---------------------------------------------------------------------------
-
-
-@register_extra(
-    "x_kanonymity_report",
-    oracle="""
-WITH g AS (
-  SELECT c_nationkey, c_mktsegment, CAST(count(*) AS BIGINT) AS grp_n
-  FROM customer GROUP BY c_nationkey, c_mktsegment
-)
-SELECT CAST(count(*) AS BIGINT) AS n_classes,
-       CAST(sum(CASE WHEN grp_n < 5 THEN 1 ELSE 0 END) AS BIGINT) AS n_small_classes,
-       CAST(sum(CASE WHEN grp_n < 5 THEN grp_n ELSE 0 END) AS BIGINT) AS n_risky_rows,
-       CAST(min(grp_n) AS BIGINT) AS min_class_size
-FROM g
-""",
-)
-def x_kanonymity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-anonymity audit over a quasi-identifier combination
-    (nation × market segment, k=5): equivalence-class sizes in one
-    hash agg, then the privacy report — classes below k, rows at
-    re-identification risk, and the minimum class size (the dataset's
-    actual k). The release gate that complements PII redaction
-    (column-level) and delete propagation (row-level): this one is
-    about what the REMAINING columns jointly reveal. Two hash aggs at
-    scan speed."""
-    ensure_harness_conf(spark)
-    g = (
-        load(spark, sf_dir, "customer")
-        .groupBy("c_nationkey", "c_mktsegment")
-        .agg(F.count(F.lit(1)).cast("long").alias("grp_n"))
-    )
-    k = 5
-    return g.agg(
-        F.count(F.lit(1)).cast("long").alias("n_classes"),
-        F.sum(F.when(F.col("grp_n") < k, 1).otherwise(0))
-        .cast("long")
-        .alias("n_small_classes"),
-        F.sum(F.when(F.col("grp_n") < k, F.col("grp_n")).otherwise(0))
-        .cast("long")
-        .alias("n_risky_rows"),
-        F.min("grp_n").cast("long").alias("min_class_size"),
-    )
-
-
-@register_extra(
-    "x_dq_expectations",
-    oracle="""
-SELECT 'value_non_negative' AS rule,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(sum(CASE WHEN value IS NOT NULL AND value < 0 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_violations
-FROM events
-UNION ALL
-SELECT 'event_type_in_domain', CAST(count(*) AS BIGINT),
-       CAST(sum(CASE WHEN event_type NOT IN
-                     ('click','view','purchase','signup','error')
-                     OR event_type IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-FROM events
-UNION ALL
-SELECT 'ts_not_null', CAST(count(*) AS BIGINT),
-       CAST(sum(CASE WHEN ts IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-FROM events
-UNION ALL
-SELECT 'event_id_unique', CAST(count(*) AS BIGINT),
-       CAST(count(*) - count(DISTINCT event_id) AS BIGINT)
-FROM events
-""",
-)
-def x_dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Declarative data-contract check: per-rule violation counts —
-    range (value ≥ 0), domain (event_type in vocabulary), presence
-    (ts not null), uniqueness (event_id) — in ONE pass over one scan
-    (the row rules are conditional sums in a single aggregate; the
-    uniqueness rule is count−countDistinct in the same agg). The
-    ingest gate a pipeline runs before publishing a batch; pairs with
-    the profiler (shape) and FK audit (referential) rows."""
-    ensure_harness_conf(spark)
-    ev = load(spark, sf_dir, "events")
-    domain = ["click", "view", "purchase", "signup", "error"]
-    agg = ev.agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum(
-            F.when(F.col("value").isNotNull() & (F.col("value") < 0), 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("v_range"),
-        F.sum(
-            F.when(
-                ~F.col("event_type").isin(domain) | F.col("event_type").isNull(), 1
-            ).otherwise(0)
-        )
-        .cast("long")
-        .alias("v_domain"),
-        F.sum(F.when(F.col("ts").isNull(), 1).otherwise(0))
-        .cast("long")
-        .alias("v_null"),
-        (F.count(F.lit(1)) - F.countDistinct("event_id"))
-        .cast("long")
-        .alias("v_uniq"),
-    )
-    rules = [
-        ("value_non_negative", "v_range"),
-        ("event_type_in_domain", "v_domain"),
-        ("ts_not_null", "v_null"),
-        ("event_id_unique", "v_uniq"),
-    ]
-    entries = F.array(
-        *[
-            F.struct(
-                F.lit(name).alias("rule"),
-                F.col("n_rows").alias("n_rows"),
-                F.col(c).alias("n_violations"),
-            )
-            for name, c in rules
-        ]
-    )
-    return agg.select(F.explode(entries).alias("_e")).select("_e.*")
 
 
 # ---------------------------------------------------------------------------
@@ -839,8 +543,6 @@ def x_ohlc_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-
 # ---------------------------------------------------------------------------
 # Dataset fingerprinting + join-preserving pseudonymization
 # ---------------------------------------------------------------------------
@@ -956,32 +658,6 @@ def x_graph_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     return graph.bfs_khop(fwd.unionByName(bwd), seeds, max_hops=4)
 
 
-@register_extra("x_source_orc_roundtrip", oracle=_ROUNDTRIP_ORACLE)
-def x_source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORC interchange round-trip — the THIRD columnar container
-    (after parquet sources and the CSV/JSONL text twins): write
-    lineitem's flag/status/price columns to ORC (a typed, self-
-    describing format, so unlike CSV no schema-first read is needed —
-    the reader trusts the file footer), read back, aggregate. Same
-    exact-cents oracle as the text twins: any type mapping or
-    predicate-pushdown drift in the ORC path breaks the hash. ORC is
-    Spark-native (no extra package), zlib-compressed by default."""
-    ensure_harness_conf(spark)
-    import shutil
-    import tempfile
-
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_returnflag", "l_linestatus", "l_extendedprice"
-    )
-    out = tempfile.mkdtemp(prefix="orc_rt_")
-    try:
-        li.write.mode("overwrite").orc(out)
-        back = spark.read.orc(out)
-        return _roundtrip_agg(back).localCheckpoint()
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-
-
 @register_extra(
     "x_join_cardinality_report",
     oracle="""
@@ -1028,105 +704,6 @@ def x_join_cardinality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         top=10,
     )
-
-
-@register_extra(
-    "x_weighted_median",
-    oracle="""
-WITH b AS (
-  SELECT l_returnflag AS flag,
-         CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS price_c,
-         CAST(l_quantity AS BIGINT) AS wt
-  FROM lineitem
-),
-c AS (
-  SELECT flag, price_c, wt,
-         sum(wt) OVER (PARTITION BY flag ORDER BY price_c, wt
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw,
-         sum(wt) OVER (PARTITION BY flag) AS tw
-  FROM b
-)
-SELECT flag,
-       CAST(min(tw) AS BIGINT) AS total_weight,
-       CAST(min(CASE WHEN 2 * cw >= tw THEN price_c END) AS BIGINT)
-         AS weighted_median_cents
-FROM c GROUP BY flag
-""",
-)
-def x_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact weighted median (quantity-weighted price per return
-    flag): the smallest price whose cumulative weight reaches half
-    the group total — one cumulative-weight window over a single
-    (group, price) sort plus the group total from the same
-    partitioning, then a conditional-min agg. The weighted companion
-    of x_quantiles_value's integer-rank percentiles (robust central
-    tendency when rows represent unequal volumes — the norm in
-    commerce and token-weighted corpus stats). Prices compare as
-    exact integer cents; the window tie order (price, weight) is
-    immaterial to the result but pinned for engine parity."""
-    ensure_harness_conf(spark)
-    li = load(spark, sf_dir, "lineitem")
-    b = li.select(
-        F.col("l_returnflag").alias("flag"),
-        F.round(F.col("l_extendedprice") * 100, 0).cast("long").alias("price_c"),
-        F.col("l_quantity").cast("long").alias("wt"),
-    )
-    wc = (
-        W.partitionBy("flag")
-        .orderBy("price_c", "wt")
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    c = b.withColumn("cw", F.sum("wt").over(wc)).withColumn(
-        "tw", F.sum("wt").over(W.partitionBy("flag"))
-    )
-    return c.groupBy("flag").agg(
-        F.min("tw").cast("long").alias("total_weight"),
-        F.min(F.when(2 * F.col("cw") >= F.col("tw"), F.col("price_c")))
-        .cast("long")
-        .alias("weighted_median_cents"),
-    )
-
-
-@register_extra(
-    "x_grouping_sets",
-    oracle="""
-SELECT coalesce(l_returnflag, 'ALL') AS flag,
-       coalesce(l_linestatus, 'ALL') AS status,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-       CAST(grouping(l_returnflag) * 2 + grouping(l_linestatus) AS BIGINT)
-         AS grouping_id
-FROM lineitem
-GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-""",
-)
-def x_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS — the general form rollup/cube are sugar
-    for, with an ASYMMETRIC set list ((flag, status), (flag), ()) that
-    neither rollup nor cube can express when the hierarchy is partial.
-    grouping() flags disambiguate real NULLs from subtotal rows (the
-    coalesce-to-'ALL' rendering is only safe because the flags carry
-    the truth). One Expand + hash agg, same plan family as the
-    rollup/cube rows; exercised through the SQL front door because
-    the DataFrame API has no groupingSets builder."""
-    ensure_harness_conf(spark)
-    li = load(spark, sf_dir, "lineitem")
-    view = f"lineitem_gs_{uuid.uuid4().hex[:8]}"
-    li.createOrReplaceTempView(view)
-    try:
-        return spark.sql(f"""
-            SELECT coalesce(l_returnflag, 'ALL') AS flag,
-                   coalesce(l_linestatus, 'ALL') AS status,
-                   CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-                   CAST(grouping(l_returnflag) * 2 + grouping(l_linestatus)
-                        AS BIGINT) AS grouping_id
-            FROM {view}
-            GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-                                    (l_returnflag), ())
-        """).localCheckpoint(eager=True)
-    finally:
-        spark.catalog.dropTempView(view)
 
 
 @register_extra(
@@ -1179,78 +756,6 @@ def x_source_paged_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("moving_s").cast("long").alias("total_moving_s"),
         F.count_distinct("sport").cast("long").alias("n_sports"),
     )
-
-
-@register_extra(
-    "x_source_jsonl_corrupt",
-    oracle="""
-WITH ids AS (SELECT unnest(generate_series(0, 999)) AS i),
-parsed AS (
-  SELECT i,
-         CASE WHEN i % 7 = 3 THEN NULL ELSE i END AS id_ok,
-         CASE WHEN i % 7 = 3 THEN NULL ELSE i % 13 END AS grp
-  FROM ids
-)
-SELECT CAST(count(*) AS BIGINT) AS n_lines,
-       CAST(count(id_ok) AS BIGINT) AS n_good,
-       CAST(sum(CASE WHEN id_ok IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_corrupt,
-       CAST(sum(grp) AS BIGINT) AS sum_grp
-FROM parsed
-""",
-)
-def x_source_jsonl_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resilient ingest: a JSONL stage where every 7th-mod-3 line is
-    deliberately malformed, read back PERMISSIVE with an explicit
-    _corrupt_record column — bad lines become (NULL fields + the raw
-    line preserved for the dead-letter queue) instead of a job kill
-    (FAILFAST) or silent disappearance (DROPMALFORMED). The counts
-    prove every line is accounted for: good + corrupt = total, and
-    the good-side aggregate is unpolluted. The schema is declared
-    (schema-first, like the clean round-trip twins) because corrupt-
-    record capture requires a user-provided schema."""
-    ensure_harness_conf(spark)
-    import shutil
-    import tempfile
-
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    out = tempfile.mkdtemp(prefix="jsonl_corrupt_")
-    try:
-        lines = []
-        for i in range(1000):
-            if i % 7 == 3:
-                lines.append(f'{{"id": {i}, "grp": ')  # truncated JSON
-            else:
-                lines.append(f'{{"id": {i}, "grp": {i % 13}}}')
-        with open(f"{out}/part-000.jsonl", "w") as f:
-            f.write("\n".join(lines))
-        schema = StructType(
-            [
-                StructField("id", LongType()),
-                StructField("grp", LongType()),
-                StructField("_corrupt_record", StringType()),
-            ]
-        )
-        back = (
-            spark.read.schema(schema)
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", "_corrupt_record")
-            .json(out)
-        )
-        res = back.agg(
-            F.count(F.lit(1)).cast("long").alias("n_lines"),
-            F.count("id").cast("long").alias("n_good"),
-            F.sum(
-                F.when(F.col("_corrupt_record").isNotNull(), 1).otherwise(0)
-            )
-            .cast("long")
-            .alias("n_corrupt"),
-            F.sum("grp").cast("long").alias("sum_grp"),
-        )
-        return res.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1340,49 +845,3 @@ def x_sql_recursive_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint(eager=True)
     finally:
         spark.catalog.dropTempView(view)
-
-
-@register_extra(
-    "x_sql_lateral_topk",
-    oracle="""
-SELECT o.o_orderkey, l.l_linenumber, l.l_extendedprice
-FROM orders o, LATERAL (
-  SELECT l_linenumber, l_extendedprice FROM lineitem
-  WHERE l_orderkey = o.o_orderkey
-  ORDER BY l_extendedprice DESC, l_linenumber LIMIT 2) l
-WHERE o.o_orderpriority = '1-URGENT'
-""",
-)
-def x_sql_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated LATERAL subquery with ORDER BY ... LIMIT through the
-    SQL front door — top-2 line items per urgent order, the
-    top-k-per-group pattern written the way an analyst writes it.
-    Catalyst DECORRELATES the per-row subquery into a set-based plan
-    (window/rank over a single join) rather than re-executing it per
-    outer row — the property that separates a lateral join from a
-    driver loop at 100 TB. Ties broken by l_linenumber so the LIMIT
-    frontier is deterministic; the oracle is the identical SQL text in
-    DuckDB (both engines implement standard LATERAL)."""
-    ensure_harness_conf(spark)
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    ov = f"orders_lat_{uuid.uuid4().hex[:8]}"
-    lv = f"lineitem_lat_{uuid.uuid4().hex[:8]}"
-    o.createOrReplaceTempView(ov)
-    li.createOrReplaceTempView(lv)
-    try:
-        return spark.sql(
-            f"""
-            SELECT o.o_orderkey, l.l_linenumber, l.l_extendedprice
-            FROM {ov} o, LATERAL (
-              SELECT l_linenumber, l_extendedprice FROM {lv}
-              WHERE l_orderkey = o.o_orderkey
-              ORDER BY l_extendedprice DESC, l_linenumber LIMIT 2) l
-            WHERE o.o_orderpriority = '1-URGENT'
-            """
-        ).localCheckpoint(eager=True)
-    finally:
-        spark.catalog.dropTempView(ov)
-        spark.catalog.dropTempView(lv)
-
-

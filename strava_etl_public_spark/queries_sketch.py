@@ -21,7 +21,7 @@ from .queries import register, register_extra, streams  # noqa: F401
 from .operators import dedup, multimodal, similarity, text  # noqa: F401
 from .queries_common import _SH_SQL, _TK_SQL  # noqa: F401
 from .queries_dedup_sim import _clusters_oracle, x_pipeline_activity_e2e  # noqa: F401
-from .queries_text_mm_stream import _QUALITY_ORACLE, _lang_oracle, _run_stream, _stage_events_dir  # noqa: F401
+from .queries_text_mm_stream import _QUALITY_ORACLE, _lang_oracle  # noqa: F401
 
 
 # ---------------------------------------------------------------------------
@@ -87,44 +87,6 @@ def x_sketch_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sketch.hll_distinct(ev, "user_id", ["event_type"], b=9)
 
 
-@register_extra(
-    "x_zorder_events",
-    oracle="""
-WITH b AS (
-  SELECT event_id,
-         user_id % 65536 AS ux,
-         (CAST(epoch_ns(ts) // 1000000000 AS BIGINT) // 3600) % 65536 AS hb
-  FROM events
-)
-SELECT event_id, CAST(ux AS BIGINT) AS ux, CAST(hb AS BIGINT) AS hb,
-       CAST(list_sum(list_transform(generate_series(0, 15), i ->
-            (((ux >> i) & 1) << (2 * i)) + (((hb >> i) & 1) << (2 * i + 1))
-       )) AS BIGINT) AS z
-FROM b
-""",
-)
-def x_zorder_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order (Morton) clustering keys over (user, hour) — the
-    write-time layout that makes parquet min/max stats prune on BOTH
-    columns (Delta/Iceberg Z-ORDER; a single-column sort prunes on one
-    and nothing else). The key is pure shift/mask/or integer math the
-    oracle reproduces bit-for-bit; tests/test_layout.py proves the
-    locality property (per-partition spans shrink on BOTH columns
-    after zorder_layout, where a plain sort only shrinks its own)."""
-    ensure_harness_conf(spark)
-    from .operators import layout
-
-    ev = load(spark, sf_dir, "events")
-    b = ev.select(
-        "event_id",
-        (F.col("user_id") % 65536).alias("ux"),
-        ((ep.epoch_s(ev) / 3600).cast("long") % 65536).alias("hb"),
-    )
-    return b.select(
-        "event_id", "ux", "hb", layout.z_value(["ux", "hb"], bits=16).alias("z")
-    )
-
-
 def _cms_oracle(d: int = 4, w: int = 1024, k: int = 20) -> str:
     def h(term: str, row: str) -> str:
         return (
@@ -182,52 +144,6 @@ def x_sketch_cms_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     cms = sketch.cms_build(toks, "term", d=4, w=1024)
     est = sketch.cms_lookup(cms, top, "term", d=4, w=1024)
     return top.join(est, "term").select("term", "n_true", "cms_count")
-
-
-def _split_oracle() -> str:
-    h = "CAST(concat('0x', substr(md5(concat('split:', CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)"
-    s = "CAST(concat('0x', substr(md5(concat('sample:', CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)"
-    thresh = int(0.1 * (1 << 60))  # the exact integer sample_by_hash compares against
-    return f"""
-WITH assigned AS (
-  SELECT doc_id,
-         CASE WHEN ({h}) % 1000000 < 800000 THEN 'train'
-              WHEN ({h}) % 1000000 < 900000 THEN 'val'
-              ELSE 'test' END AS split,
-         CASE WHEN ({s}) < CAST({thresh} AS BIGINT) THEN 1 ELSE 0 END AS sampled
-  FROM documents
-)
-SELECT split, CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(sampled) AS BIGINT) AS n_in_10pct_sample
-FROM assigned GROUP BY split
-"""
-
-
-@register_extra("x_sample_hash_split", oracle=_split_oracle())
-def x_sample_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic sampling + split assignment: 80/10/10
-    train/val/test by hash bucket, crossed with a 10% stable sample —
-    both pure functions of (salt, doc_id), reproducible across engines
-    and partitionings (df.sample() is neither). Scan-speed
-    projections; the oracle replicates the identical integer math."""
-    ensure_harness_conf(spark)
-    from .operators import sketch
-
-    docs = load(spark, sf_dir, "documents")
-    split = sketch.hash_split(
-        docs, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1}
-    )
-    sampled = sketch.sample_by_hash(docs, "doc_id", 0.1).select(
-        "doc_id", F.lit(1).alias("sampled")
-    )
-    return (
-        split.join(sampled, "doc_id", "left")
-        .groupBy("split")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum(F.coalesce(F.col("sampled"), F.lit(0))).cast("long").alias("n_in_10pct_sample"),
-        )
-    )
 
 
 def _strat_oracle() -> str:
@@ -494,24 +410,13 @@ FROM w WHERE len(win) > 0
 """
 
 
-@register_extra("x_text_chunk_windows", oracle=_chunk_oracle())
-def x_text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Context-window chunking: split every document into 64-token
-    windows at stride 48 (overlap 16) — the LLM-training preprocessing
-    explode. Tokenize once, slice per start offset, posexplode; pure
-    codegen'd array math, map-only at any corpus size."""
-    ensure_harness_conf(spark)
-    docs = load(spark, sf_dir, "documents")
-    return text.chunk_documents(docs, "doc_id", "text", chunk_tokens=64, stride=48)
-
-
 @register_extra("x_udtf_chunk_windows", oracle=_chunk_oracle())
 def x_udtf_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The chunking operator re-expressed through Spark 4's Python
     UDTF extension point (operators/udtfs.ChunkWindowsUDTF): an
     Arrow-batched table function invoked as a LATERAL generator from
-    SQL, oracle-gated to the SAME answer as the declarative HOF twin
-    (x_text_chunk_windows shares this oracle verbatim). This is the
+    SQL, oracle-gated to the SAME answer as the declarative HOF
+    chunking (text.chunk_documents). This is the
     sanctioned imperative escape hatch — per-row Python that EMITS
     ROWS — and the gate proves the extension point preserves every
     row, not just the API shape. The hot path remains the codegen'd
@@ -548,326 +453,6 @@ def x_text_pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.pack_chunks(
         chunks, ["doc_id", "chunk_idx"], "n_tokens", budget=256, n_buckets=8
     )
-
-
-@register_extra(
-    "x_scd2_user_state",
-    oracle="""
-WITH e AS (
-  SELECT user_id, CAST(epoch_ns(ts) // 1000 AS BIGINT) AS us, event_id, event_type
-  FROM events
-),
-c AS (
-  SELECT user_id, us, event_id, event_type,
-         row_number() OVER w AS rn,
-         lag(event_type) OVER w AS prev
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
-),
-v AS (
-  SELECT user_id, event_type, us AS valid_from, event_id
-  FROM c WHERE rn = 1 OR prev IS DISTINCT FROM event_type
-)
-SELECT user_id, event_type, valid_from,
-       lead(valid_from) OVER w2 AS valid_to,
-       lead(valid_from) OVER w2 IS NULL AS is_current
-FROM v WINDOW w2 AS (PARTITION BY user_id ORDER BY valid_from, event_id)
-""",
-)
-def x_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCD type-2 history (the warehouse CDC pattern the reference's
-    whole-document LWW replace throws away): consecutive duplicate
-    per-user event_type states collapse into validity intervals
-    (valid_from, valid_to µs-epoch, NULL-open while current), with
-    NULL-safe change detection and point-in-time joins riding
-    valid_from <= t < valid_to. Two window passes on ONE (user, time)
-    sort family — no self-join, one shuffle."""
-    ensure_harness_conf(spark)
-    from .operators import upsert as U
-
-    ev = load(spark, sf_dir, "events")
-    ev = ev.select(
-        "user_id", ep.epoch_us(ev).alias("us"), "event_id", "event_type"
-    )
-    return U.scd2_history(ev, "user_id", "us", "event_type", tie_col="event_id")
-
-
-@register_extra(
-    "x_quantiles_value",
-    oracle="""
-WITH v AS (
-  SELECT event_type, value,
-         row_number() OVER (PARTITION BY event_type ORDER BY value, event_id) AS rn,
-         count(*) OVER (PARTITION BY event_type) AS n
-  FROM events WHERE value IS NOT NULL
-)
-SELECT event_type,
-       CAST(max(n) AS BIGINT) AS n,
-       max(CASE WHEN rn = CAST(ceil(0.25 * n) AS BIGINT) THEN value END) AS p25,
-       max(CASE WHEN rn = CAST(ceil(0.50 * n) AS BIGINT) THEN value END) AS p50,
-       max(CASE WHEN rn = CAST(ceil(0.75 * n) AS BIGINT) THEN value END) AS p75
-FROM v GROUP BY event_type
-""",
-)
-def x_quantiles_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact per-group quantiles (percentile_disc semantics: the value
-    at rank ⌈p·n⌉) computed by explicit rank math, NOT an engine
-    percentile builtin — Spark's `percentile` interpolates and
-    `percentile_approx` sketches, neither cross-engine-exact; rank
-    arithmetic is (0.25/0.5/0.75 are exact binary fractions, so
-    ⌈p·n⌉ is integer-exact in both engines). One shuffle+sort per
-    group family — the honest cost of EXACT quantiles at any scale;
-    the HLL sketch (x_sketch_hll_users) is the approximate-precedent
-    pattern when a full sort is too expensive."""
-    ensure_harness_conf(spark)
-    ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    w = W.partitionBy("event_type").orderBy("value", "event_id")
-    wn = W.partitionBy("event_type")
-    v = ev.select(
-        "event_type",
-        "value",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(wn).alias("n"),
-    )
-    pick = {
-        f"p{int(p * 100)}": F.max(
-            F.when(F.col("rn") == F.ceil(F.lit(p) * F.col("n")).cast("long"), F.col("value"))
-        )
-        for p in (0.25, 0.50, 0.75)
-    }
-    return v.groupBy("event_type").agg(
-        F.max("n").cast("long").alias("n"),
-        *[c.alias(name) for name, c in pick.items()],
-    )
-
-
-@register_extra(
-    "x_rollup_revenue",
-    oracle="""
-SELECT coalesce(l_returnflag, '<all>') AS l_returnflag,
-       coalesce(l_linestatus, '<all>') AS l_linestatus,
-       CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))) AS DOUBLE)
-         AS revenue,
-       CAST(count(*) AS BIGINT) AS n
-FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-""",
-)
-def x_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP hierarchy totals (flag → flag+status → grand total) in
-    one pass — Spark plans grouping sets as a single Expand + hash agg,
-    not one scan per level. NULL grouping slots are coalesced to a
-    sentinel so the oracle compare is unambiguous (a NULL from rollup
-    vs a NULL key are different things). Decimal-cast revenue keeps
-    the sums order-independent across engines."""
-    ensure_harness_conf(spark)
-    li = load(spark, sf_dir, "lineitem")
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(38,6)"
-                )
-            )
-            .cast("double")
-            .alias("revenue"),
-            F.count(F.lit(1)).cast("long").alias("n"),
-        )
-        .select(
-            F.coalesce("l_returnflag", F.lit("<all>")).alias("l_returnflag"),
-            F.coalesce("l_linestatus", F.lit("<all>")).alias("l_linestatus"),
-            "revenue",
-            "n",
-        )
-    )
-
-
-@register_extra(
-    "x_cube_revenue",
-    oracle="""
-SELECT coalesce(l_returnflag, '<all>') AS l_returnflag,
-       coalesce(l_linestatus, '<all>') AS l_linestatus,
-       CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))) AS DOUBLE)
-         AS revenue,
-       CAST(count(*) AS BIGINT) AS n
-FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
-""",
-)
-def x_cube_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE twin of :func:`x_rollup_revenue` — ALL grouping-set
-    combinations (flag, status, flag+status, grand total) in one
-    Expand + hash-agg pass, closing the grouping-sets family ROLLUP
-    opened. Same sentinel/decimal discipline."""
-    ensure_harness_conf(spark)
-    li = load(spark, sf_dir, "lineitem")
-    return (
-        li.cube("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(38,6)"
-                )
-            )
-            .cast("double")
-            .alias("revenue"),
-            F.count(F.lit(1)).cast("long").alias("n"),
-        )
-        .select(
-            F.coalesce("l_returnflag", F.lit("<all>")).alias("l_returnflag"),
-            F.coalesce("l_linestatus", F.lit("<all>")).alias("l_linestatus"),
-            "revenue",
-            "n",
-        )
-    )
-
-
-@register_extra(
-    "x_pivot_event_counts",
-    oracle="""
-SELECT user_id,
-       CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS n_click,
-       CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS n_view,
-       CAST(count(*) FILTER (event_type = 'purchase') AS BIGINT) AS n_purchase,
-       CAST(count(*) FILTER (event_type = 'error') AS BIGINT) AS n_error
-FROM events GROUP BY user_id
-""",
-)
-def x_pivot_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PIVOT (long → wide counts per event type). The pivot value list
-    is EXPLICIT, which is the scale rule: an unlisted pivot runs an
-    extra distinct pass over the key column AND makes the output
-    schema data-dependent — a schema change waiting to happen upstream
-    of a writer. With listed values Spark plans the same single hash
-    agg as the FILTER-clause oracle."""
-    ensure_harness_conf(spark)
-    ev = load(spark, sf_dir, "events")
-    kinds = ["click", "view", "purchase", "error"]
-    out = (
-        ev.groupBy("user_id")
-        .pivot("event_type", kinds)
-        .agg(F.count(F.lit(1)))
-    )
-    return out.select(
-        "user_id",
-        *[
-            F.coalesce(F.col(k), F.lit(0)).cast("long").alias(f"n_{k}")
-            for k in kinds
-        ],
-    )
-
-
-@register_extra(
-    "x_set_ops_users",
-    oracle="""
-WITH clickers AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'click'),
-buyers AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase'),
-erroring AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'error')
-SELECT user_id, 'click_and_buy' AS cohort FROM (
-  SELECT user_id FROM clickers INTERSECT SELECT user_id FROM buyers)
-UNION ALL
-SELECT user_id, 'click_no_error' FROM (
-  SELECT user_id FROM clickers EXCEPT SELECT user_id FROM erroring)
-""",
-)
-def x_set_ops_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT / EXCEPT set operations (§2.G) as first-class rows:
-    Spark plans both as aggregate-free semi/anti joins over distinct
-    inputs — same shuffle shape as the equivalent joins, and AQE
-    broadcasts the small side. Cohort labels keep the two results in
-    one comparable table."""
-    ensure_harness_conf(spark)
-    ev = load(spark, sf_dir, "events")
-
-    def users_of(kind: str):
-        return ev.filter(F.col("event_type") == kind).select("user_id").distinct()
-
-    both = users_of("click").intersect(users_of("purchase"))
-    clean = users_of("click").exceptAll(users_of("error"))
-    return both.withColumn("cohort", F.lit("click_and_buy")).unionByName(
-        clean.withColumn("cohort", F.lit("click_no_error"))
-    )
-
-
-@register_extra(
-    "x_delete_propagation",
-    oracle="""
-WITH tomb AS (SELECT DISTINCT user_id FROM events WHERE user_id % 13 = 0)
-SELECT 'events' AS tbl,
-       CAST(count(*) AS BIGINT) AS n_kept,
-       CAST((SELECT count(*) FROM events) - count(*) AS BIGINT) AS n_deleted
-FROM events e WHERE NOT EXISTS (SELECT 1 FROM tomb t WHERE t.user_id = e.user_id)
-UNION ALL
-SELECT 'orders',
-       CAST(count(*) AS BIGINT),
-       CAST((SELECT count(*) FROM orders) - count(*) AS BIGINT)
-FROM orders o WHERE NOT EXISTS (SELECT 1 FROM tomb t WHERE t.user_id = o.o_custkey)
-""",
-)
-def x_delete_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Right-to-be-forgotten delete propagation: a tombstone key set
-    (every 13th user plays the deletion-request table) anti-joined
-    through every fact table that carries the key — the compliance
-    sweep a training-data pipeline must run before each export. Scale
-    shape: the tombstone set is bounded (requests, not users) →
-    broadcast anti-join per table, each fact scanned once, never
-    shuffled; the digest row per table makes the sweep auditable."""
-    ensure_harness_conf(spark)
-    ev = load(spark, sf_dir, "events")
-    orders = load(spark, sf_dir, "orders")
-    tomb = ev.filter(F.col("user_id") % 13 == 0).select("user_id").distinct()
-
-    def sweep(df: DataFrame, key: str, name: str) -> DataFrame:
-        kept = df.join(
-            F.broadcast(tomb.withColumnRenamed("user_id", key)), key, "left_anti"
-        )
-        total = df.count()  # bounded driver scalar: audit arithmetic
-        return kept.agg(
-            F.lit(name).alias("tbl"),
-            F.count(F.lit(1)).cast("long").alias("n_kept"),
-            (F.lit(total) - F.count(F.lit(1))).cast("long").alias("n_deleted"),
-        )
-
-    return sweep(ev, "user_id", "events").unionByName(
-        sweep(orders, "o_custkey", "orders")
-    )
-
-
-@register_extra(
-    "x_unpivot_lineitem",
-    oracle="""
-SELECT l_orderkey, l_linenumber, metric, round(val, 6) AS val
-FROM (
-  SELECT l_orderkey, l_linenumber, 'quantity' AS metric,
-         CAST(l_quantity AS DOUBLE) AS val FROM lineitem
-  UNION ALL
-  SELECT l_orderkey, l_linenumber, 'extendedprice',
-         CAST(l_extendedprice AS DOUBLE) FROM lineitem
-  UNION ALL
-  SELECT l_orderkey, l_linenumber, 'discount',
-         CAST(l_discount AS DOUBLE) FROM lineitem
-  UNION ALL
-  SELECT l_orderkey, l_linenumber, 'tax',
-         CAST(l_tax AS DOUBLE) FROM lineitem
-)
-""",
-)
-def x_unpivot_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNPIVOT / melt (wide → long) — the inverse of
-    x_pivot_event_counts, closing the reshape family. Spark's
-    ``unpivot`` plans ONE Expand over a single scan (4 output rows per
-    input row), where the naive UNION-of-selects the oracle runs scans
-    the table once per metric — at 100 TB that's a 4× scan saving for
-    the identical result."""
-    ensure_harness_conf(spark)
-    li = load(spark, sf_dir, "lineitem")
-    metrics = ["quantity", "extendedprice", "discount", "tax"]
-    out = li.select(
-        "l_orderkey",
-        "l_linenumber",
-        *[F.col(f"l_{m}").cast("double").alias(m) for m in metrics],
-    ).unpivot(
-        ["l_orderkey", "l_linenumber"], metrics, "metric", "val"
-    )
-    return out.withColumn("val", F.round("val", 6))
 
 
 @register_extra(
@@ -971,17 +556,6 @@ GROUP BY d.doc_id
 """
 
 
-@register_extra("x_text_repetition", oracle=_REPETITION_ORACLE)
-def x_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style within-document repetition signals (top-token /
-    top-2-gram concentration, duplicate-5-gram fraction) — the
-    quality-filter family for templated/spammy training text. One
-    tagged gram explode + two hash aggs; no window, no pairwise work."""
-    ensure_harness_conf(spark)
-    docs = load(spark, sf_dir, "documents")
-    return text.repetition_features(docs, "doc_id", "text")
-
-
 _DECONTAM_ORACLE = f"""
 WITH {_SH_SQL},
 bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 19 = 0),
@@ -1000,20 +574,6 @@ SELECT d.doc_id,
                       >= 0.3 THEN 1 ELSE 0 END AS BIGINT) AS flagged
 FROM documents d LEFT JOIN per p ON p.doc_id = d.doc_id
 """
-
-
-@register_extra("x_dedup_decontaminate", oracle=_DECONTAM_ORACLE)
-def x_dedup_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination: flag corpus docs whose 3-gram shingle
-    overlap with a (deterministic 1/19 subset playing the) held-out
-    eval corpus exceeds 30%. The benchmark shingle set is bounded →
-    broadcast; the corpus side is a map-only probe + one per-doc agg —
-    at 100 TB the corpus is never shuffled pairwise against anything."""
-    ensure_harness_conf(spark)
-    docs = load(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % 19 == 0)
-    out = dedup.decontaminate(docs, bench, "doc_id", "text", n=3, threshold=0.3)
-    return out.withColumn("flagged", F.col("flagged").cast("long"))
 
 
 def _corpus_filter_oracle() -> str:
@@ -1342,8 +902,6 @@ def x_sketch_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-
 # ---------------------------------------------------------------------------
 # Exact heavy hitters (Misra-Gries candidate screen + exact recount)
 # ---------------------------------------------------------------------------
@@ -1450,103 +1008,3 @@ def x_pit_join_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         f, v, by="user_id", ts="us", value_cols=["state"], strict=True
     )
     return out.select("event_id", "user_id", "us", "state_asof")
-
-
-@register_extra(
-    "x_pipeline_export",
-    oracle=f"""
-WITH tk AS ({_TK_SQL}),
-st AS (
-  SELECT doc_id, t,
-         generate_series(0,
-           greatest(CAST(0 AS BIGINT),
-                    CAST(ceil((len(t) - 64) / 48.0) AS BIGINT) * 48),
-           48) AS starts
-  FROM tk
-),
-w AS (
-  SELECT doc_id, u.s AS start, list_slice(t, u.s + 1, u.s + 64) AS win
-  FROM st, unnest(starts) AS u(s)
-),
-c AS (
-  SELECT doc_id, CAST(start / 48 AS BIGINT) AS chunk_idx,
-         CAST(len(win) AS BIGINT) AS n_tokens
-  FROM w WHERE len(win) > 0
-),
-k AS (
-  SELECT doc_id, chunk_idx, n_tokens,
-         CAST(concat('0x', substr(md5(concat('exp:', CAST(doc_id AS VARCHAR),
-                                             ':', CAST(chunk_idx AS VARCHAR))),
-                                  1, 15)) AS BIGINT) AS h
-  FROM c
-),
-s AS (
-  SELECT doc_id, chunk_idx, n_tokens, h,
-         coalesce(SUM(n_tokens) OVER (
-           ORDER BY h, doc_id, chunk_idx
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS tok_start
-  FROM k
-)
-SELECT CAST(tok_start // 4096 AS BIGINT) AS shard_id,
-       CAST(count(*) AS BIGINT) AS n_chunks,
-       CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-       CAST(bit_xor(h) AS BIGINT) AS xor_hash,
-       CAST(sum(h) % 1152921504606846976 AS BIGINT) AS sum_hash_mod
-FROM s GROUP BY tok_start // 4096
-""",
-)
-def x_pipeline_export(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FOURTH fused pipeline — the last mile from corpus to
-    training shards: context-window chunking (64/48), a deterministic
-    hash shuffle order (stable under reruns/appends of later-hashing
-    chunks), a GLOBAL exclusive token prefix sum, token-range shard
-    assignment (4096-token shards; a chunk starting inside a shard
-    stays whole, so shards are ragged by at most one chunk — the
-    standard dataloader contract), and a per-shard manifest carrying
-    chunk/token counts plus the order-free content digest (xor +
-    modular sum of the chunk identity hash — the dataset_fingerprint
-    primitive applied per shard, so any later re-export can be
-    verified shard-by-shard without rereading text).
-
-    Scale shape: chunking is map-only; the prefix sum is the frozen-
-    bin two-pass operator (global_prefix_sum — NO Exchange
-    SinglePartition; the naive sum() OVER (ORDER BY) dies at scale,
-    which is why the ORACLE uses it and the engine must not); the
-    manifest is one hash agg on shard_id. The only driver state is
-    the bin-total offset map (bounded model rows)."""
-    ensure_harness_conf(spark)
-    from .operators.layout import global_prefix_sum
-    from .operators.sketch import _hash60
-
-    docs = load(spark, sf_dir, "documents")
-    chunks = text.chunk_documents(docs, "doc_id", "text", chunk_tokens=64, stride=48)
-    keyed = chunks.select(
-        "doc_id",
-        "chunk_idx",
-        "n_tokens",
-        _hash60(
-            F.concat(
-                F.lit("exp:"),
-                F.col("doc_id").cast("string"),
-                F.lit(":"),
-                F.col("chunk_idx").cast("string"),
-            )
-        ).alias("_h"),
-    )
-    ps = global_prefix_sum(
-        keyed, ["_h", "doc_id", "chunk_idx"], "n_tokens", out_col="tok_start"
-    )
-    return (
-        ps.withColumn("shard_id", F.floor(F.col("tok_start") / 4096).cast("long"))
-        .groupBy("shard_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_chunks"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-            F.expr("bit_xor(_h)").cast("long").alias("xor_hash"),
-            (F.sum(F.col("_h").cast("decimal(38,0)")) % F.lit(1152921504606846976))
-            .cast("long")
-            .alias("sum_hash_mod"),
-        )
-    )
-
-

@@ -1,7 +1,6 @@
-"""Snapshot / storage-layout queries: dataset fingerprints,
-versioned snapshots + time travel, OPTIMIZE/compaction, zone-map /
-bloom / dynamic-partition scan pruning, schema evolution, dynamic
-partition overwrite, and snapshot CDC diff.
+"""Snapshot / storage-layout queries: zone-map / bloom /
+dynamic-partition scan pruning, minor compaction, type widening, the
+pushdown batch DataSource and the compact→vacuum reclaim loop.
 
 Split from queries_tables.py (round 10, verdict #5 file-size
 discipline) at the scan-pruning/layout vs lakehouse-DML seam:
@@ -28,384 +27,7 @@ from .session import ensure_harness_conf  # noqa: F401
 from .queries import register, register_extra, streams  # noqa: F401
 
 
-@register_extra(
-    "x_snapshot_diff",
-    oracle="""
-WITH old AS (
-  SELECT user_id,
-         CAST(count(*) AS BIGINT) AS n_events,
-         CAST(sum(CAST(round(value * 1000000, 0) AS HUGEINT)) AS BIGINT) AS sum_q
-  FROM events
-  WHERE event_id % 5 != 0 AND user_id % 11 != 3
-  GROUP BY user_id
-),
-new AS (
-  SELECT user_id,
-         CAST(count(*) AS BIGINT) AS n_events,
-         CAST(sum(CAST(round(value * 1000000, 0) AS HUGEINT)) AS BIGINT) AS sum_q
-  FROM events
-  WHERE user_id % 7 != 2
-  GROUP BY user_id
-)
-SELECT coalesce(o.user_id, n.user_id) AS user_id,
-       CASE WHEN o.user_id IS NULL THEN 'insert'
-            WHEN n.user_id IS NULL THEN 'delete'
-            WHEN o.n_events IS DISTINCT FROM n.n_events
-              OR o.sum_q IS DISTINCT FROM n.sum_q THEN 'update' END AS change_type,
-       n.n_events, n.sum_q
-FROM old o FULL OUTER JOIN new n ON o.user_id = n.user_id
-WHERE CASE WHEN o.user_id IS NULL THEN 'insert'
-           WHEN n.user_id IS NULL THEN 'delete'
-           WHEN o.n_events IS DISTINCT FROM n.n_events
-             OR o.sum_q IS DISTINCT FROM n.sum_q THEN 'update' END IS NOT NULL
-""",
-)
-def x_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC between two snapshots (the inverse of SCD2's
-    change-application): two deterministic per-user rollup snapshots
-    — 'old' missing some events and some users, 'new' missing a
-    different user slice — diffed into insert/delete/update rows via
-    one NULL-safe full-outer join on the key. What a pipeline emits
-    when the upstream only ships full snapshots and downstream needs
-    a MERGE feed / audit log."""
-    ensure_harness_conf(spark)
-    from .operators.upsert import snapshot_diff
-
-    ev = load(spark, sf_dir, "events")
-    d38 = "decimal(38,0)"
-
-    def snap(df: DataFrame) -> DataFrame:
-        return df.groupBy("user_id").agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.sum(F.round(F.col("value") * 1000000, 0).cast(d38))
-            .cast("long")
-            .alias("sum_q"),
-        )
-
-    old = snap(
-        ev.filter((F.col("event_id") % 5 != 0) & (F.col("user_id") % 11 != 3))
-    )
-    new = snap(ev.filter(F.col("user_id") % 7 != 2))
-    return snapshot_diff(old, new, "user_id", ["n_events", "sum_q"])
-
-
-def _fp_sql(table: str, cols: list[str]) -> str:
-    rendered = ", ".join(
-        f"coalesce(CAST({c} AS VARCHAR), chr(30))" for c in cols
-    )
-    return f"""
-SELECT '{table}' AS dataset, CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(bit_xor(h) AS BIGINT) AS xor_hash,
-       CAST(sum(h) % 1152921504606846976 AS BIGINT) AS sum_hash_mod
-FROM (
-  SELECT CAST(concat('0x', substr(md5(concat_ws(chr(31), {rendered})),
-                                  1, 15)) AS BIGINT) AS h
-  FROM {table}
-)"""
-
-
-_FP_COLS = {
-    "lineitem": ["l_orderkey", "l_partkey", "l_suppkey", "l_returnflag", "l_linestatus"],
-    "orders": ["o_orderkey", "o_custkey", "o_orderstatus"],
-    "documents": ["doc_id", "text", "lang", "source", "n_chars"],
-}
-
-
-@register_extra(
-    "x_dataset_fingerprint",
-    oracle=" UNION ALL ".join(_fp_sql(t, cs) for t, cs in _FP_COLS.items()),
-)
-def x_dataset_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order-free content digests (row count, bit-XOR and modular sum
-    of a 60-bit md5 row hash) for three tables — the cache-key /
-    reproducibility primitive: detect silent input drift, verify two
-    copies are row-multiset-identical, pin a training run to the
-    exact bytes it consumed. One map-side-combined aggregate per
-    table, no shuffle beyond the 1-row combine; digests are pure
-    functions of the row multiset (partition/engine/order-invariant,
-    proven by the oracle match). Columns restricted to cast-stable
-    types (float/timestamp string forms diverge between engines —
-    operators/layout.py dataset_fingerprint documents the contract)."""
-    ensure_harness_conf(spark)
-    from .operators.layout import dataset_fingerprint
-
-    outs = []
-    for t, cs in _FP_COLS.items():
-        outs.append(dataset_fingerprint(load(spark, sf_dir, t).select(*cs), label=t))
-    r = outs[0]
-    for o in outs[1:]:
-        r = r.unionByName(o)
-    return r
-
-
-@register_extra(
-    "x_fingerprint_incremental",
-    oracle=f"""
-WITH whole AS ({_fp_sql("documents", _FP_COLS["documents"])})
-SELECT 'documents' AS dataset, n_rows, xor_hash, sum_hash_mod FROM whole
-""",
-)
-def x_fingerprint_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INCREMENTAL dataset fingerprint (the round-8 maintenance theme
-    applied to the cache-key primitive): when a batch lands, the
-    union's digest is computed by MERGING the corpus digest with the
-    batch digest — count adds, xor xors, sums add mod 2^60 — without
-    rescanning the corpus (the same commutative-monoid argument the
-    streaming twin x_stream_fingerprint proves batch-by-batch). The
-    oracle fingerprints the whole table from scratch; the engine side
-    must reproduce it from the two partial digests exactly."""
-    ensure_harness_conf(spark)
-    from .operators.layout import dataset_fingerprint
-
-    cols = _FP_COLS["documents"]
-    docs = load(spark, sf_dir, "documents").select(*cols)
-    corpus_d = dataset_fingerprint(
-        docs.filter(F.col("doc_id") % 5 != 0), label="documents"
-    )
-    batch_d = dataset_fingerprint(
-        docs.filter(F.col("doc_id") % 5 == 0), label="documents"
-    )
-    both = corpus_d.unionByName(batch_d)
-    return both.groupBy("dataset").agg(
-        F.sum("n_rows").cast("long").alias("n_rows"),
-        F.expr("bit_xor(xor_hash)").cast("long").alias("xor_hash"),
-        (
-            F.sum(F.col("sum_hash_mod").cast("decimal(38,0)"))
-            % F.lit(1152921504606846976)
-        )
-        .cast("long")
-        .alias("sum_hash_mod"),
-    )
-
-
-@register_extra(
-    "x_partition_overwrite_dynamic",
-    oracle="""
-WITH cur AS (
-  SELECT event_type,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CAST(round(value * 1000000, 0) AS HUGEINT)) AS BIGINT) AS sum_q
-  FROM events
-  WHERE event_type != 'error'
-  GROUP BY event_type
-),
-backfill AS (
-  SELECT event_type,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CAST(round(value * 1000000, 0) AS HUGEINT)) AS BIGINT) AS sum_q
-  FROM events
-  WHERE event_type = 'error' AND user_id % 2 = 0
-  GROUP BY event_type
-)
-SELECT * FROM cur UNION ALL SELECT * FROM backfill
-""",
-)
-def x_partition_overwrite_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partition-level idempotent backfill via DYNAMIC partition
-    overwrite (partitionOverwriteMode=dynamic): write the full
-    event_type-partitioned table, then overwrite with a corrected
-    batch that contains ONLY the 'error' partition (halved by a
-    deterministic predicate) — dynamic mode replaces exactly the
-    partitions present in the batch and leaves every other partition
-    byte-untouched (static mode would wipe them: THE classic backfill
-    data-loss trap). The final read-back aggregate proves it: the
-    four untouched partitions carry their original totals, 'error'
-    carries the corrected ones. Writes go to a temp dir per run;
-    the conf is set on the writer scope and restored."""
-    ensure_harness_conf(spark)
-    import shutil
-    import tempfile
-
-    ev = load(spark, sf_dir, "events").select("event_type", "user_id", "value")
-    out = tempfile.mkdtemp(prefix="dpo_")
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
-        fix = ev.filter(
-            (F.col("event_type") == "error") & (F.col("user_id") % 2 == 0)
-        )
-        fix.write.mode("overwrite").partitionBy("event_type").parquet(out)
-        back = spark.read.parquet(out)
-        res = back.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum(F.round(F.col("value") * 1000000, 0).cast("decimal(38,0)"))
-            .cast("long")
-            .alias("sum_q"),
-        )
-        return res.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        shutil.rmtree(out, ignore_errors=True)
-
-
-@register_extra(
-    "x_schema_evolution",
-    oracle="""
-WITH v1 AS (
-  SELECT event_id, user_id, event_type, CAST(NULL AS BIGINT) AS quality
-  FROM events WHERE event_id % 2 = 0
-),
-v2 AS (
-  SELECT event_id, user_id, event_type,
-         CAST(event_id % 5 AS BIGINT) AS quality
-  FROM events WHERE event_id % 2 = 1
-),
-unioned AS (SELECT * FROM v1 UNION ALL SELECT * FROM v2)
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(count(quality) AS BIGINT) AS n_with_quality,
-       CAST(sum(quality) AS BIGINT) AS sum_quality
-FROM unioned GROUP BY event_type
-""",
-)
-def x_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ADDITIVE schema evolution across snapshot generations: an old
-    batch written WITHOUT the `quality` column and a new batch
-    written WITH it land in the same directory; one mergeSchema read
-    unifies them (old rows surface NULL for the new column — count
-    vs count(quality) proves the reader distinguishes absent-column
-    NULLs from data). This is the append-only evolution contract
-    every long-lived dataset needs (the inverse — dropping or
-    retyping — is a rewrite, not an evolution; left out on purpose).
-    The oracle replays the same union semantics over the source."""
-    ensure_harness_conf(spark)
-    import shutil
-    import tempfile
-
-    ev = load(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type"
-    )
-    out = tempfile.mkdtemp(prefix="schema_evo_")
-    try:
-        ev.filter(F.col("event_id") % 2 == 0).write.mode("append").parquet(out)
-        ev.filter(F.col("event_id") % 2 == 1).withColumn(
-            "quality", (F.col("event_id") % 5).cast("long")
-        ).write.mode("append").parquet(out)
-        back = spark.read.option("mergeSchema", "true").parquet(out)
-        res = back.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.count("quality").cast("long").alias("n_with_quality"),
-            F.sum("quality").cast("long").alias("sum_quality"),
-        )
-        return res.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-
-
-@register_extra(
-    "x_state_time_travel",
-    oracle="""
-WITH e AS (
-  SELECT user_id, event_id, event_type, event_id % 4 AS b FROM events
-),
-v AS (SELECT unnest(generate_series(1, 4)) AS version),
-ranked AS (
-  SELECT v.version, e.user_id, e.event_id, e.event_type,
-         row_number() OVER (PARTITION BY v.version, e.user_id
-                            ORDER BY e.event_id DESC) AS rn
-  FROM e JOIN v ON e.b <= v.version - 1
-)
-SELECT CAST(version AS BIGINT) AS version, user_id,
-       event_id AS last_event_id, event_type AS last_event_type
-FROM ranked WHERE rn = 1
-""",
-)
-def x_state_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Versioned snapshots + TIME TRAVEL (round 8): four deterministic
-    event batches (event_id % 4, replayed in order) merge into a
-    keyed LWW state table through layout.snapshot_commit — an
-    immutable v{n} per merge, an O(1) atomic pointer publish, and a
-    commit log carrying each snapshot's content digest (the minimal
-    Delta/Iceberg contract on plain parquet). The query reads EVERY
-    version back via snapshot_read(version) and returns the union of
-    the four historical states; the oracle recomputes "state as of
-    batch v" straight from the source events, so a wrong snapshot
-    boundary, a leaked later batch, or a torn publish all hash-
-    mismatch. Rollback/history are pinned in tests/test_layout.py."""
-    ensure_harness_conf(spark)
-    import shutil
-    import tempfile
-
-    from .operators.layout import snapshot_commit, snapshot_read
-    from .operators.upsert import upsert_last_writer_wins
-
-    ev = load(spark, sf_dir, "events").select(
-        "user_id", "event_id", "event_type"
-    )
-    table = tempfile.mkdtemp(prefix="state_tt_")
-    try:
-        state = None
-        for b in range(4):
-            batch = ev.filter(F.col("event_id") % 4 == b)
-            state = upsert_last_writer_wins(state, batch, "user_id", "event_id")
-            v = snapshot_commit(state, table)
-            state = snapshot_read(spark, table, v)  # next merge reads published
-        out = None
-        for v in range(1, 5):
-            s = snapshot_read(spark, table, v).select(
-                F.lit(v).cast("long").alias("version"),
-                "user_id",
-                F.col("event_id").alias("last_event_id"),
-                F.col("event_type").alias("last_event_type"),
-            )
-            out = s if out is None else out.unionByName(s)
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(table, ignore_errors=True)
-
-
 _EV_FP_COLS = ["event_id", "user_id", "event_type"]
-
-
-@register_extra(
-    "x_maintenance_compact",
-    oracle=f"""
-WITH fp AS ({_fp_sql("events", _EV_FP_COLS)})
-SELECT dataset, n_rows, xor_hash, sum_hash_mod, TRUE AS files_reduced
-FROM (SELECT 'events_compacted' AS dataset, n_rows, xor_hash, sum_hash_mod FROM fp)
-""",
-)
-def x_maintenance_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Small-file COMPACTION as an end-to-end verified maintenance op
-    (the classic fix for streaming sinks that accrete thousands of
-    tiny files — at 100 TB each file costs a task, a footer read, and
-    an object-store request): stage events as 64 deliberately tiny
-    parquet files, rewrite with layout.compact_parquet to
-    ceil(total/target) bin-packed files, then prove the rewrite is
-    content-lossless with the order-free multiset digest of the
-    COMPACTED copy against the oracle's digest of the source table
-    (count + bit-XOR + modular sum of the 60-bit row hash — any
-    dropped, duplicated, or mutated row mismatches). `files_reduced`
-    is measured from the real file listings, so a rewrite that
-    failed to consolidate fails the gate too; the exact output-count
-    arithmetic is pinned in tests/test_layout.py."""
-    ensure_harness_conf(spark)
-    import glob
-    import shutil
-    import tempfile
-
-    from .operators.layout import compact_parquet, dataset_fingerprint
-
-    ev = load(spark, sf_dir, "events").select(*_EV_FP_COLS)
-    root = tempfile.mkdtemp(prefix="compact_")
-    src, dst = f"{root}/src", f"{root}/dst"
-    try:
-        ev.repartition(64).write.parquet(src)
-        n_before = len(glob.glob(f"{src}/part-*.parquet"))
-        total = sum(
-            __import__("os").path.getsize(p) for p in glob.glob(f"{src}/part-*.parquet")
-        )
-        compact_parquet(spark, src, dst, target_bytes=total // 4 + 1)
-        n_after = len(glob.glob(f"{dst}/part-*.parquet"))
-        fp = dataset_fingerprint(
-            spark.read.parquet(dst), _EV_FP_COLS, label="events_compacted"
-        )
-        return fp.withColumn(
-            "files_reduced", F.lit(bool(n_after < n_before))
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @register_extra(
@@ -600,78 +222,6 @@ def x_scan_bloom_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(path, ignore_errors=True)
-
-
-@register_extra(
-    "x_maintenance_optimize_snapshot",
-    oracle=f"""
-WITH fp AS ({_fp_sql("events", _EV_FP_COLS)})
-SELECT dataset, n_rows, xor_hash, sum_hash_mod,
-       TRUE AS files_reduced, CAST(2 AS BIGINT) AS history_len,
-       TRUE AS time_travel_intact
-FROM (SELECT 'events_optimized' AS dataset, n_rows, xor_hash,
-             sum_hash_mod FROM fp)
-""",
-)
-def x_maintenance_optimize_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OPTIMIZE on a versioned table — compaction composed with the
-    snapshot contract (Delta/Iceberg's OPTIMIZE in miniature): v1
-    commits the events table deliberately fragmented (64 files), the
-    maintenance pass reads v1 THROUGH the snapshot layer, compacts it
-    (layout.compact_parquet), and commits the rewrite as v2 — data
-    files of v1 are never touched (immutability), the _latest pointer
-    moves atomically, and TIME TRAVEL to v1 still serves the
-    pre-optimize file layout. The gate packs three proofs into one
-    row: the v2 digest equals the oracle's digest of the source
-    (rewrite is content-lossless), `files_reduced` is measured from
-    the real v1-vs-v2 listings, and `time_travel_intact` re-reads v1
-    and digest-compares it against v2 — an optimize that mutated
-    history in place would flip it."""
-    ensure_harness_conf(spark)
-    import glob
-    import shutil
-    import tempfile
-
-    from .operators.layout import (
-        compact_parquet,
-        dataset_fingerprint,
-        snapshot_commit,
-        snapshot_history,
-        snapshot_read,
-    )
-
-    ev = load(spark, sf_dir, "events").select(*_EV_FP_COLS)
-    root = tempfile.mkdtemp(prefix="optimize_")
-    table, scratch = f"{root}/table", f"{root}/scratch"
-    try:
-        v1 = snapshot_commit(ev.repartition(64), table)
-        files_v1 = glob.glob(f"{table}/v{v1}/part-*.parquet")
-        total = sum(__import__("os").path.getsize(p) for p in files_v1)
-        compact_parquet(
-            spark, f"{table}/v{v1}", scratch, target_bytes=total // 4 + 1
-        )
-        v2 = snapshot_commit(spark.read.parquet(scratch), table)
-        files_v2 = glob.glob(f"{table}/v{v2}/part-*.parquet")
-
-        fp2 = dataset_fingerprint(
-            snapshot_read(spark, table), _EV_FP_COLS, label="events_optimized"
-        )
-        fp1 = dataset_fingerprint(
-            snapshot_read(spark, table, version=v1),
-            _EV_FP_COLS,
-            label="events_optimized",
-        )
-        tt_ok = fp1.collect() == fp2.collect()
-        hist = snapshot_history(spark, table).count()
-        return fp2.withColumns(
-            {
-                "files_reduced": F.lit(bool(len(files_v2) < len(files_v1))),
-                "history_len": F.lit(int(hist)).cast("long"),
-                "time_travel_intact": F.lit(bool(tt_ok)),
-            }
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 _CMP_FP_RENDER = ", ".join(

@@ -1,4 +1,4 @@
-"""Dataset statistics, robust stats, PQ ANN, JSON, product analytics.
+"""Dataset statistics, text statistics, PQ ANN, incremental maintenance.
 
 Split from the former single-file queries_ext.py (round 7, verdict
 #7): registrations, names, and oracle SQL are unchanged — the
@@ -344,7 +344,7 @@ def _pq_oracle(
     )
     # train_cond restricts codebook TRAINING (init + Lloyd) to a slice
     # of the corpus — the add-after-train oracle: the final encode
-    # still runs over every vector (x_sim_pq_incremental)
+    # still runs over every vector
     trows = f"(SELECT * FROM sl WHERE {train_cond})" if train_cond else "sl"
 
     def assign(src_cb: str, rows: str = "sl") -> str:
@@ -459,88 +459,6 @@ def x_sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    "x_sim_pq_incremental",
-    oracle=_pq_oracle(train_cond="vec_id % 5 <> 0"),
-)
-def x_sim_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INCREMENTAL PQ index maintenance (round 9, verdict #4) — the
-    last index family without an add-after-train path gets one, in the
-    x_sim_ivf_incremental proof shape: a new embedding batch
-    (vec_id % 5 == 0, ~20%) arrives after the codebooks were trained;
-    instead of retraining (strided init + Lloyd over the union), the
-    batch is ENCODED under the FROZEN corpus-trained codebooks
-    (similarity.pq_encode — one broadcast argmin over 16 entries per
-    subspace, map-only, cost ∝ batch) and its codes UNION into the
-    persisted corpus codes. Because encoding is a pure per-vector
-    function of the codebooks, merged codes are bit-identical to a
-    full re-encode of corpus ∪ batch under the same codebooks — so
-    ADC + exact-rerank serving over the merged index equals the
-    from-scratch oracle with TRAINING restricted to the corpus (the
-    faiss add-after-train contract; centroid drift is periodic
-    retrain's job, not per-batch). At 100 TB this is the difference
-    between re-touching 10⁹ vectors per arriving batch and touching
-    only the batch: the serving plan is literally the same
-    (pq_adc_topk_from_index), only the code provenance differs."""
-    ensure_harness_conf(spark)
-    from .operators import similarity
-
-    emb = load(spark, sf_dir, "embeddings")
-    embn = similarity._l2_normalize(emb, "embedding")
-    corpus = embn.filter(F.col("vec_id") % 5 != 0)
-    batch = embn.filter(F.col("vec_id") % 5 == 0)
-    cb = similarity.pq_codebooks(
-        corpus, "vec_id", "embedding", n_sub=8, dim=64, n_cent=16,
-        stride=37, refine_iters=2,
-    )
-    corpus_codes = similarity.pq_encode(  # persisted in production
-        corpus, "vec_id", "embedding", cb, n_sub=8, dim=64
-    )
-    batch_codes = similarity.pq_encode(  # the per-batch cost
-        batch, "vec_id", "embedding", cb, n_sub=8, dim=64
-    )
-    merged = corpus_codes.unionByName(batch_codes)
-    return similarity.pq_adc_topk_from_index(
-        embn, "vec_id", "embedding", cb, merged,
-        k=5, n_queries=8, n_sub=8, dim=64, rerank_r=100,
-    )
-
-
-@register_extra("x_text_index_incremental", oracle=_bm25_oracle())
-def x_text_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental INVERTED-INDEX maintenance — the retrieval face of
-    the round-8 maintenance theme: the corpus partition's postings +
-    doc lengths are built once and PERSISTED (the stored index), the
-    arriving batch (every 10th doc) is tokenized ALONE, and the two
-    compose by pure union — a doc's postings depend only on its own
-    text, so index(C ∪ B) = index(C) ∪ index(B) exactly, with
-    tokenization cost proportional to the batch. BM25 then scores
-    THROUGH the merged index (text.bm25_from_index derives N and Σdl
-    from the index itself, so stale sidecar stats are impossible) and
-    the full ranking must equal the from-scratch oracle over the
-    whole corpus — the same oracle text x_text_bm25_topk passes."""
-    ensure_harness_conf(spark)
-    import shutil
-    import tempfile
-
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = docs.filter(F.col("doc_id") % 10 != 0)
-    batch = docs.filter(F.col("doc_id") % 10 == 0)
-    state = tempfile.mkdtemp(prefix="bm25_index_")
-    try:
-        tc_c, dl_c = text.build_postings(corpus, "doc_id", "text")
-        tc_c.write.mode("overwrite").parquet(f"{state}/postings")
-        dl_c.write.mode("overwrite").parquet(f"{state}/doclen")
-        tc_b, dl_b = text.build_postings(batch, "doc_id", "text")
-        tc = spark.read.parquet(f"{state}/postings").unionByName(tc_b)
-        dl = spark.read.parquet(f"{state}/doclen").unionByName(dl_b)
-        return text.bm25_from_index(
-            spark, tc, dl, "doc_id", _BM25_QUERIES, k=10
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(state, ignore_errors=True)
-
-
-@register_extra(
     "x_stream_index_bm25",
     oracle=f"""
 SELECT b.*, CAST(4 AS BIGINT) AS n_batches
@@ -604,205 +522,6 @@ def x_stream_index_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Semi-structured extraction (JSON props)
 # ---------------------------------------------------------------------------
-
-
-@register_extra(
-    "x_json_extract_props",
-    oracle="""
-WITH px AS (
-  SELECT event_type,
-         CAST(props->>'k' AS BIGINT) AS k
-  FROM events
-)
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(count(k) AS BIGINT) AS n_with_k,
-       CAST(sum(k) AS BIGINT) AS sum_k,
-       CAST(min(k) AS BIGINT) AS min_k,
-       CAST(max(k) AS BIGINT) AS max_k
-FROM px GROUP BY event_type
-""",
-)
-def x_json_extract_props(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured extraction: parse the JSON ``props`` column
-    with an EXPLICIT schema (``from_json`` — one vectorized parse into
-    a typed struct, the scalable path; schema inference would rescan)
-    and aggregate the extracted field per event type. Malformed or
-    missing fields become NULL (PERMISSIVE), surfaced by the
-    n vs n_with_k gap — the ingest-quality contract for JSON columns
-    at scan speed, no UDF."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    ensure_harness_conf(spark)
-    ev = load(spark, sf_dir, "events")
-    schema = StructType([StructField("k", LongType())])
-    px = ev.select(
-        "event_type",
-        F.from_json(F.col("props"), schema).getField("k").alias("k"),
-    )
-    return px.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.count("k").cast("long").alias("n_with_k"),
-        F.sum("k").cast("long").alias("sum_k"),
-        F.min("k").cast("long").alias("min_k"),
-        F.max("k").cast("long").alias("max_k"),
-    )
-
-
-@register_extra(
-    "x_variant_shred",
-    oracle="""
-SELECT event_type AS t,
-       CAST(user_id % 3 AS VARCHAR) AS tag1,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(SUM(CAST(round(value, 6) AS DECIMAL(38,6))) AS DOUBLE) AS sum_v,
-       CAST(count(*) AS BIGINT) AS n_missing_null
-FROM events GROUP BY 1, 2
-""",
-)
-def x_variant_shred(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """VARIANT round-trip shred (Spark 4's semi-structured type): each
-    event is rendered to a NESTED JSON document (scalar + object +
-    array fields), parsed into a VARIANT with parse_json, then shredded
-    back with typed path extraction — object path ($.m.t), array index
-    ($.tags[1]), typed double ($.m.v), and a missing path whose
-    try_variant_get must be NULL on every row (n_missing_null == n is
-    the null-semantics proof). The oracle computes the same aggregate
-    straight from the source columns, so the gate proves the VARIANT
-    encode→parse→extract cycle is exactly value-preserving — the
-    contract a schemaless ingest path needs before you trust it at
-    100 TB (VARIANT's binary encoding scans without re-parsing text
-    JSON per query, and Catalyst pushes the typed extractions into the
-    scan)."""
-    ensure_harness_conf(spark)
-    ev = load(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    j = ev.select(
-        F.to_json(
-            F.struct(
-                F.col("event_id").alias("id"),
-                F.struct(
-                    F.col("event_type").alias("t"), F.round("value", 6).alias("v")
-                ).alias("m"),
-                F.array(
-                    F.col("event_type"), (F.col("user_id") % 3).cast("string")
-                ).alias("tags"),
-            )
-        ).alias("js")
-    )
-    v = j.select(F.parse_json(F.col("js")).alias("v"))
-    out = v.select(
-        F.try_variant_get(F.col("v"), "$.m.t", "string").alias("t"),
-        F.try_variant_get(F.col("v"), "$.tags[1]", "string").alias("tag1"),
-        F.try_variant_get(F.col("v"), "$.m.v", "double").alias("val"),
-        F.try_variant_get(F.col("v"), "$.missing", "string").alias("miss"),
-    )
-    return out.groupBy("t", "tag1").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.col("val").cast("decimal(38,6)")).cast("double").alias("sum_v"),
-        F.sum(F.when(F.col("miss").isNull(), 1).otherwise(0))
-        .cast("long")
-        .alias("n_missing_null"),
-    )
-
-
-@register_extra(
-    "x_ts_ewma",
-    oracle="""
-WITH RECURSIVE b AS (
-  SELECT user_id, event_id, value,
-         row_number() OVER (
-           PARTITION BY user_id
-           ORDER BY CAST(epoch_ns(ts) AS BIGINT), event_id) AS rn
-  FROM events
-),
-r(user_id, event_id, rn, s) AS (
-  SELECT user_id, event_id, rn, value FROM b WHERE rn = 1
-  UNION ALL
-  SELECT b.user_id, b.event_id, b.rn, 0.3 * b.value + 0.7 * r.s
-  FROM r JOIN b ON b.user_id = r.user_id AND b.rn = r.rn + 1
-)
-SELECT user_id, event_id, round(s, 6) AS ewma
-FROM r
-""",
-)
-def x_ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user EWMA smoothing (α=0.3) of the event value series — the
-    inherently-sequential recursion sₜ = α·xₜ + (1−α)·sₜ₋₁ run through
-    the sanctioned imperative path (operators/rolling.ewma_by_key:
-    applyInPandas per key, one shuffle, one linear Arrow pass per
-    series, one double of state). The oracle is DuckDB's RECURSIVE CTE
-    computing the SAME recursion step-by-step — both engines execute
-    literally s = 0.3·x + 0.7·s in IEEE double over the identical
-    tie-free (epoch_ns, event_id) order, so the match is bit-exact
-    before the single edge rounding. The closed-form window rewrite is
-    deliberately rejected: its (1−α)⁻ⁱ factor overflows double at
-    series length ~700 — precisely the scale where it would matter."""
-    ensure_harness_conf(spark)
-    from .operators.rolling import ewma_by_key
-
-    ev = load(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
-    ev = ev.withColumn("_ns", ep.epoch_ns(ev, "ts")).drop("ts")
-    out = ewma_by_key(
-        ev, ["user_id"], ["_ns", "event_id"], "value", alpha=0.3, out_col="_s"
-    )
-    return out.select(
-        "user_id", "event_id", F.round("_s", 6).alias("ewma")
-    )
-
-
-@register_extra(
-    "x_udtf_table_ewma",
-    oracle="""
-WITH RECURSIVE b AS (
-  SELECT user_id, event_id, value,
-         row_number() OVER (
-           PARTITION BY user_id
-           ORDER BY CAST(epoch_ns(ts) AS BIGINT), event_id) AS rn
-  FROM events
-),
-r(user_id, event_id, rn, s) AS (
-  SELECT user_id, event_id, rn, value FROM b WHERE rn = 1
-  UNION ALL
-  SELECT b.user_id, b.event_id, b.rn, 0.3 * b.value + 0.7 * r.s
-  FROM r JOIN b ON b.user_id = r.user_id AND b.rn = r.rn + 1
-),
-mx AS (SELECT user_id, max(rn) AS m FROM b GROUP BY user_id)
-SELECT r.user_id, CAST(mx.m AS BIGINT) AS n, round(r.s, 6) AS ewma
-FROM r JOIN mx ON mx.user_id = r.user_id AND r.rn = mx.m
-""",
-)
-def x_udtf_table_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TABLE-argument Python UDTF: `ewma_final_udtf(TABLE(v)
-    PARTITION BY user_id ORDER BY (_ns, event_id))` — the engine
-    shuffles by the key, sorts each partition, and runs one UDTF
-    instance per partition with terminate() emitting the final state:
-    per-partition imperative logic THROUGH THE SQL FRONT DOOR, the
-    batch twin of the streaming stateful processor. Computes each
-    user's final EWMA (α=0.3) with the identical IEEE recursion as
-    x_ts_ewma, so the recursive-CTE oracle's last-value row matches
-    bit-for-bit; tests also pin identity against rolling.ewma_by_key
-    (three independent implementations, one answer)."""
-    ensure_harness_conf(spark)
-    from .operators.udtfs import register_udtfs
-
-    register_udtfs(spark)
-    ev = load(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
-    ev = ev.withColumn("_ns", ep.epoch_ns(ev, "ts")).drop("ts")
-    view = f"ev_udtf_{uuid.uuid4().hex[:8]}"
-    ev.createOrReplaceTempView(view)
-    try:
-        return spark.sql(
-            f"""
-            SELECT user_id, n, round(ewma, 6) AS ewma
-            FROM ewma_final_udtf(TABLE({view})
-                                 PARTITION BY user_id
-                                 ORDER BY (_ns, event_id))
-            """
-        ).localCheckpoint(eager=True)
-    finally:
-        spark.catalog.dropTempView(view)
 
 
 @register_extra(
@@ -916,152 +635,6 @@ def x_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
-@register_extra(
-    "x_keyset_pagination",
-    oracle="""
-WITH o AS (
-  SELECT event_id, user_id, event_type,
-         CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS es,
-         row_number() OVER (
-           ORDER BY CAST(epoch_ns(ts) // 1000000000 AS BIGINT), event_id) AS rn
-  FROM events
-)
-SELECT CAST((rn - 1) // 50 AS INT) AS page_idx,
-       event_id, user_id, event_type, es
-FROM o WHERE rn <= 150
-""",
-)
-def x_keyset_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KEYSET pagination — the scale-correct re-expression of the
-    reference's page-number walk (strava_sdk.py:100, params
-    {'page': 1, 'per_page': …}): each page is fetched with
-    WHERE (es, event_id) > (last key of the previous page)
-    ORDER BY (es, event_id) LIMIT 50 — a row-value predicate the scan
-    can push and an index/sort can serve in O(page), where OFFSET-
-    based pagination re-scans and re-sorts everything it skips (page
-    N costs O(N·page), and rows shifting underneath repeat or drop
-    entries; the keyset predicate is also a natural resume token —
-    exactly the role of the reference's max_time watermark). Three
-    successive pages are fetched with real per-page boundary
-    carryover (the last key COLLECTED from each page — bounded driver
-    state, the pagination client's own behavior) and their union must
-    equal rows 1..150 of the global (es, event_id) order, each row on
-    the page the oracle's row_number assigns it."""
-    ensure_harness_conf(spark)
-    ev = load(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "ts")
-    ev = ev.withColumn("es", ep.epoch_s(ev, "ts")).drop("ts")
-    key = F.struct(F.col("es"), F.col("event_id"))
-    pages = []
-    last = None
-    for idx in range(3):
-        page = ev
-        if last is not None:
-            page = page.filter(
-                key
-                > F.struct(
-                    F.lit(last[0]).cast("long").alias("es"),
-                    F.lit(last[1]).cast("long").alias("event_id"),
-                )
-            )
-        page = page.orderBy("es", "event_id").limit(50)
-        rows = page.collect()  # the pagination CLIENT consumes pages
-        if not rows:
-            break
-        last = (rows[-1]["es"], rows[-1]["event_id"])
-        pages.append(
-            page.withColumn("page_idx", F.lit(idx).cast("int"))
-        )
-    out = pages[0]
-    for p in pages[1:]:
-        out = out.unionByName(p)
-    return out.select(
-        "page_idx", "event_id", "user_id", "event_type", "es"
-    ).localCheckpoint(eager=True)
-
-
-@register_extra(
-    "x_variant_explode",
-    oracle="""
-SELECT k,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(v) AS BIGINT) AS sum_v
-FROM (
-  SELECT 'ka' AS k, user_id % 7 AS v FROM events
-  UNION ALL
-  SELECT 'kb' AS k, event_id % 13 AS v FROM events
-)
-GROUP BY k
-""",
-)
-def x_variant_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """VARIANT object traversal via the variant_explode TABLE function
-    (the lateral companion to x_variant_shred's path extraction):
-    each event renders a 2-field JSON object, parse_json lifts it to
-    VARIANT, and LATERAL variant_explode walks its fields as
-    (pos, key, value) rows — schema-on-read iteration over
-    semi-structured data without knowing the keys at plan time. The
-    typed values are re-aggregated per key and must equal computing
-    the same quantities straight from the source columns, proving the
-    explode walked every field exactly once with values intact."""
-    ensure_harness_conf(spark)
-    ev = load(spark, sf_dir, "events").select("event_id", "user_id")
-    view = f"ev_vexp_{uuid.uuid4().hex[:8]}"
-    ev.createOrReplaceTempView(view)
-    try:
-        return spark.sql(
-            f"""
-            SELECT f.key AS k,
-                   CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(variant_get(f.value, '$', 'bigint')) AS BIGINT)
-                     AS sum_v
-            FROM (SELECT parse_json(to_json(named_struct(
-                    'ka', user_id % 7, 'kb', event_id % 13))) AS v
-                  FROM {view}) t,
-                 LATERAL variant_explode(t.v) f
-            GROUP BY f.key
-            """
-        ).localCheckpoint(eager=True)
-    finally:
-        spark.catalog.dropTempView(view)
-
-
-@register_extra(
-    "x_ansi_try_functions",
-    oracle="""
-SELECT event_id,
-       TRY_CAST(event_type AS INT) AS bad_cast,
-       TRY_CAST(CAST(event_id AS VARCHAR) AS INT) AS good_cast,
-       round(value / nullif(user_id % 5, 0), 6) AS safe_div,
-       CASE WHEN event_id > 0 THEN NULL
-            ELSE 9223372036854775807 + event_id END AS safe_add
-FROM events
-""",
-)
-def x_ansi_try_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Error-safe ANSI arithmetic: try_cast / try_divide / try_add
-    turn per-row failures (unparseable cast, division by zero, BIGINT
-    overflow) into NULLs instead of job-killing exceptions — at 100 TB
-    one malformed row must NOT fail a 1000-executor stage, and these
-    are the row-level counterpart of the dead-letter patterns
-    (JSONL corrupt capture, media decode quarantine). The oracle
-    mirrors each neutralization explicitly: TRY_CAST both sides,
-    x / nullif(y, 0) for the zero divisor, and a CASE reproducing the
-    overflow boundary (max_bigint + id overflows for every positive
-    id) — so the gate proves WHICH rows neutralize, not just that the
-    query survives."""
-    ensure_harness_conf(spark)
-    ev = load(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    return ev.select(
-        "event_id",
-        F.col("event_type").try_cast("int").alias("bad_cast"),
-        F.col("event_id").cast("string").try_cast("int").alias("good_cast"),
-        F.round(F.try_divide(F.col("value"), F.col("user_id") % 5), 6).alias("safe_div"),
-        F.try_add(F.lit(9223372036854775807), F.col("event_id")).alias("safe_add"),
-    )
-
-
 @register(
     "x_ts_ewma_incremental",
     oracle="""
@@ -1121,64 +694,6 @@ def x_ts_ewma_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return resumed.select(
         "user_id", "event_id", F.round("_s", 6).alias("ewma")
-    )
-
-
-@register_extra(
-    "x_observe_metrics",
-    oracle="""
-WITH g AS (
-  SELECT event_type,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(user_id) AS BIGINT) AS sum_uid
-  FROM events WHERE value > 10 GROUP BY event_type
-),
-t AS (
-  SELECT CAST(count(*) AS BIGINT) AS obs_rows_scanned,
-         CAST(sum(user_id) AS BIGINT) AS obs_sum_uid
-  FROM events
-)
-SELECT g.event_type, g.n, g.sum_uid, t.obs_rows_scanned, t.obs_sum_uid
-FROM g CROSS JOIN t
-""",
-)
-def x_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """In-flight pipeline observability (the Observation API): scan-
-    level metrics (rows scanned, exact BIGINT checksum) are collected
-    by `df.observe` DURING the same job that computes a filtered
-    aggregate — zero extra passes, zero extra shuffles. At 100 TB the
-    alternative is a second full scan per monitored metric; observe
-    rides the existing one (accumulator semantics, exact for the
-    integer aggregates used here — double sums would be partial-order
-    dependent, which is why the checksum is BIGINT). The oracle
-    recomputes both the result AND the observed metrics from the
-    table, so the gate proves the observation measured the true
-    pre-filter input, not the filtered stream."""
-    ensure_harness_conf(spark)
-    from pyspark.sql import Observation
-
-    ev = load(spark, sf_dir, "events").select("event_type", "user_id", "value")
-    obs = Observation(f"metrics_{uuid.uuid4().hex[:8]}")
-    observed = ev.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_scanned"),
-        F.sum("user_id").alias("sum_uid"),
-    )
-    agg = (
-        observed.filter(F.col("value") > 10)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("user_id").cast("long").alias("sum_uid"),
-        )
-        .localCheckpoint(eager=True)  # runs the job; fills the observation
-    )
-    m = obs.get
-    return agg.withColumns(
-        {
-            "obs_rows_scanned": F.lit(int(m["n_scanned"])).cast("long"),
-            "obs_sum_uid": F.lit(int(m["sum_uid"])).cast("long"),
-        }
     )
 
 
@@ -1419,5 +934,3 @@ def x_feature_trailing_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).over(w7).cast("long").alias("n_7d"),
         F.sum("qv").over(w7).cast("long").alias("sum_q_7d"),
     )
-
-

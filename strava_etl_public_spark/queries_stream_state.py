@@ -1,7 +1,7 @@
 """Streaming sink / state queries: streaming HLL and CMS sketch
-maintenance, cross-batch dedup, streaming dataset fingerprints,
-AvailableNow backfill, paged-feed streaming ingest, and the
-digest-verified commit sink.
+maintenance, paged-feed streaming ingest, the digest-verified commit
+sink, and the ManagedTable streaming sinks and sources (MERGE, CDF,
+Arrow and JVM append, multi-writer).
 
 Split from queries_sketch.py and queries_curation.py (round 9, verdict #6 file-size
 discipline): registrations, names, and oracle SQL are unchanged —
@@ -22,7 +22,6 @@ from .functions import epoch as ep  # noqa: F401
 from .io import load  # noqa: F401
 from .session import ensure_harness_conf  # noqa: F401
 from .queries import register, register_extra, streams  # noqa: F401
-from .queries_common import _SH_SQL, _TK_SQL, _cos_sql, _dot_sql  # noqa: F401
 from .queries_sketch import _hll_oracle  # noqa: F401
 from .queries_text_mm_stream import _run_stream, _stage_events_dir  # noqa: F401
 
@@ -55,213 +54,6 @@ def x_stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         reg_table = _run_stream(spark, regs, "complete")
         return sketch.finish_hll_registers(
             reg_table, ["event_type"], b=9
-        ).localCheckpoint()
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-
-
-@register_extra(
-    "x_stream_dedup",
-    oracle="""
-WITH m AS (SELECT event_id, min(event_type) AS event_type
-           FROM events GROUP BY event_id)
-SELECT event_type, CAST(count(*) AS BIGINT) AS n
-FROM m GROUP BY event_type
-""",
-)
-def x_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming exactly-once ingest dedup: the staged corpus is
-    written TWICE (the at-least-once-delivery shape — replayed files,
-    retried producers), and ``dropDuplicatesWithinWatermark`` on the
-    event id must emit each event exactly once. The emitted ID SET is
-    what the gate checks: ids join to a deterministic id→type map
-    (min event_type per id, same rule both engines — ADVICE r4: WHICH
-    replica survives dedup is micro-batch-order dependent, so the
-    surviving row's own type column must not feed the compare), then
-    count per type. A leaked duplicate id inflates its type's count, a
-    dropped id deflates it.
-
-    Scale: dedup state is keyed by event_id in the state store,
-    EXPIRED by the watermark bound — unlike plain ``dropDuplicates``,
-    state does not grow with the full history, only with the late-data
-    horizon; the fixture run uses a horizon wider than the data span
-    so every replay is inside it."""
-    ensure_harness_conf(spark)
-    import shutil
-
-    from .streaming.ingest import EVENTS_SCHEMA, normalize_events, with_event_time
-
-    stage = _stage_events_dir(spark, sf_dir)
-    try:
-        # replay: the same normalized corpus appended again (same
-        # event_ids, new files — the redelivery case)
-        normalize_events(load(spark, sf_dir, "events")).write.mode("append").parquet(stage)
-
-        stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(stage)
-        deduped = (
-            with_event_time(stream)
-            .withWatermark("event_time", "3650 days")
-            .dropDuplicatesWithinWatermark(["event_id"])
-            .select("event_id")
-        )
-        out = _run_stream(spark, deduped, "append")
-        id_type = (
-            load(spark, sf_dir, "events")
-            .groupBy("event_id")
-            .agg(F.min("event_type").alias("event_type"))
-        )
-        return (
-            out.join(id_type, "event_id")
-            .groupBy("event_type")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-
-
-@register_extra(
-    "x_stream_fingerprint",
-    oracle="""
-SELECT 'events' AS dataset, CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(bit_xor(h) AS BIGINT) AS xor_hash,
-       CAST(sum(h) % 1152921504606846976 AS BIGINT) AS sum_hash_mod
-FROM (
-  SELECT CAST(concat('0x', substr(md5(concat_ws(chr(31),
-           coalesce(CAST(event_id AS VARCHAR), chr(30)),
-           coalesce(CAST(user_id AS VARCHAR), chr(30)),
-           coalesce(event_type, chr(30)))), 1, 15)) AS BIGINT) AS h
-  FROM events
-)
-""",
-)
-def x_stream_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The dataset fingerprint maintained BY THE STREAM: count, bit-
-    XOR, and modular sum of the 60-bit row hash are all commutative
-    monoids, so the streaming aggregation's state (one row) is the
-    digest itself, micro-batch slicing cannot change it, and the
-    final value equals the batch dataset_fingerprint bit-for-bit —
-    same oracle family. This is what continuous ingest integrity
-    looks like at scale: each arriving batch folds into O(1) state,
-    and any replica/backfill can be compared against the live digest
-    without rereading history."""
-    ensure_harness_conf(spark)
-    import shutil
-
-    from .streaming.ingest import EVENTS_SCHEMA
-
-    stage = _stage_events_dir(spark, sf_dir)
-    try:
-        stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(stage)
-        parts = [
-            F.coalesce(F.col(c).cast("string"), F.lit("\x1e"))
-            for c in ("event_id", "user_id", "event_type")
-        ]
-        from .operators.sketch import _hash60
-
-        h = _hash60(F.concat_ws("\x1f", *parts))
-        agg = (
-            stream.select(h.alias("_h"))
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.expr("bit_xor(_h)").cast("long").alias("xor_hash"),
-                (
-                    F.sum(F.col("_h").cast("decimal(38,0)"))
-                    % F.lit(1152921504606846976)
-                )
-                .cast("long")
-                .alias("sum_hash_mod"),
-            )
-        )
-        out = _run_stream(spark, agg, "complete")
-        return out.select(
-            F.lit("events").alias("dataset"), "n_rows", "xor_hash", "sum_hash_mod"
-        ).localCheckpoint()
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-
-
-@register_extra(
-    "x_stream_available_now",
-    oracle="""
-SELECT 'events' AS dataset, CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(bit_xor(h) AS BIGINT) AS xor_hash,
-       CAST(sum(h) % 1152921504606846976 AS BIGINT) AS sum_hash_mod,
-       CAST(1 AS BIGINT) AS multi_batch
-FROM (
-  SELECT CAST(concat('0x', substr(md5(concat_ws(chr(31),
-           coalesce(CAST(event_id AS VARCHAR), chr(30)),
-           coalesce(CAST(user_id AS VARCHAR), chr(30)),
-           coalesce(event_type, chr(30)))), 1, 15)) AS BIGINT) AS h
-  FROM events
-)
-""",
-)
-def x_stream_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded-catchup semantics: Trigger.AvailableNow +
-    maxFilesPerTrigger drains the staged backlog in MULTIPLE small
-    micro-batches and then stops — the operational mode for backfill
-    (catch up without an unbounded first batch, release the cluster
-    when drained). The digest aggregation proves batch-slicing
-    invariance: the multi-batch catchup's final state equals the
-    all-at-once digest bit-for-bit (same oracle as the batch
-    fingerprint), and multi_batch asserts the run REALLY took more
-    than one micro-batch (staging writes >= 4 files, the trigger
-    admits 1 per batch) — a single-batch run would fail the row."""
-    ensure_harness_conf(spark)
-    import shutil
-    import uuid as _uuid
-
-    from .operators.sketch import _hash60
-    from .streaming.ingest import EVENTS_SCHEMA, normalize_events
-
-    import tempfile
-
-    stage = tempfile.mkdtemp(prefix="events_avnow_")
-    try:
-        normalize_events(load(spark, sf_dir, "events")).repartition(4).write.mode(
-            "overwrite"
-        ).parquet(stage)
-        stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        parts = [
-            F.coalesce(F.col(c).cast("string"), F.lit("\x1e"))
-            for c in ("event_id", "user_id", "event_type")
-        ]
-        h = _hash60(F.concat_ws("\x1f", *parts))
-        agg = stream.select(h.alias("_h")).agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.expr("bit_xor(_h)").cast("long").alias("xor_hash"),
-            (
-                F.sum(F.col("_h").cast("decimal(38,0)"))
-                % F.lit(1152921504606846976)
-            )
-            .cast("long")
-            .alias("sum_hash_mod"),
-        )
-        name = f"q_{_uuid.uuid4().hex[:12]}"
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-            n_batches = len(q.recentProgress)
-        finally:
-            q.stop()
-        out = spark.table(name)
-        return out.select(
-            F.lit("events").alias("dataset"),
-            "n_rows",
-            "xor_hash",
-            "sum_hash_mod",
-            F.lit(1 if n_batches > 1 else 0).cast("long").alias("multi_batch"),
         ).localCheckpoint()
     finally:
         shutil.rmtree(stage, ignore_errors=True)

@@ -1,8 +1,8 @@
-"""Lakehouse-DML queries on the ManagedTable layer: the composed
-create→merge→optimize→time-travel pipeline, deletion-vector DELETE,
-merge-on-read UPDATE + RESTORE, shallow clone, CDC consumption,
-CHECK constraints, column mapping, Z-order OPTIMIZE, and the
-bloom-manifest point lookup.
+"""Lakehouse-DML query on the ManagedTable layer: the composed
+create→merge→optimize→time-travel pipeline. The single-operation DML
+extras were deleted by the extras census (EXTRAS_CENSUS.json): this
+row and the table-family rows in queries_snapshots reach every
+operator they reached.
 
 Split from the original queries_tables.py (round 10, verdict #5
 file-size discipline) at the scan-pruning/layout vs lakehouse-DML
@@ -193,1405 +193,5 @@ def x_pipeline_managed_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "vacuum_read_raises": F.lit(bool(v1_raises)),
             }
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-@register_extra(
-    "x_table_delete_vectors",
-    oracle=f"""
-WITH base AS (
-  SELECT event_id, user_id, event_type,
-         CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS es,
-         CAST(floor(value * 1000000) AS BIGINT) AS vmic
-  FROM events
-),
-alive AS (
-  SELECT * FROM base
-  WHERE user_id % 7 IS DISTINCT FROM 3
-    AND event_id % 5 IS DISTINCT FROM 0
-),
-fp AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_rows,
-         CAST(bit_xor(h) AS BIGINT) AS xor_hash,
-         CAST(sum(h) % 1152921504606846976 AS BIGINT) AS sum_hash_mod
-  FROM (SELECT CAST(concat('0x', substr(md5(concat_ws(chr(31), {_MT_FP_RENDER})),
-                                        1, 15)) AS BIGINT) AS h
-        FROM alive)
-),
-bounds AS (SELECT min(es) AS lo FROM alive),
-scan AS (SELECT CAST(count(*) AS BIGINT) AS scan_rows
-         FROM alive, bounds WHERE es BETWEEN lo AND lo + 86400)
-SELECT 'dv_events' AS dataset, fp.n_rows, fp.xor_hash, fp.sum_hash_mod,
-       TRUE AS dv_no_datafiles, TRUE AS base_untouched,
-       TRUE AS time_travel_intact, TRUE AS one_hop_dv,
-       scan.scan_rows, TRUE AS scan_pruned, TRUE AS scan_exact,
-       TRUE AS optimize_lossless, TRUE AS optimize_dropped_dv
-FROM fp, scan
-""",
-)
-def x_table_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DELETE as deletion vectors — the merge-on-read delete path a
-    100 TB table needs (rewriting the table to drop 0.1% of its rows
-    is the single most expensive way to delete them). Two chained
-    DELETEs publish DV versions over one materialized base:
-
-      create(v1: all events, fragmented to 16 files, stats on es)
-      → DELETE user_id%7=3  (v2: sidecar only)
-      → DELETE event_id%5=0 (v3: sidecar only, parent DV merged —
-        one-hop resolution pinned via the sidecar's base pointer)
-      → invariants packed into the row: the DV versions' dirs hold NO
-        data files; v1's files are untouched (name+size listing
-        equality); time travel to v1 still serves every row; the
-        manifest-pruned day-window scan on the DV version opens fewer
-        files than the manifest lists AND equals the exact relational
-        filter; OPTIMIZE then materializes survivors (digest equal,
-        sidecar gone — DV compaction).
-
-    The oracle recomputes the surviving multiset relationally with
-    NULL-safe predicate complements (rows where the DELETE predicate
-    is NULL must SURVIVE — SQL DELETE semantics, enforced
-    positionally by the operator). Reference parity: the reference
-    deletes by full-table rewrite (firestore_sink.py upsert loop);
-    this is that contract at lakehouse scale."""
-    ensure_harness_conf(spark)
-    import os
-    import shutil
-    import tempfile
-
-    from .operators.layout import dataset_fingerprint
-    from .operators.table import ManagedTable
-
-    cols = ["event_id", "user_id", "event_type", "es", "vmic"]
-    ev = load(spark, sf_dir, "events")
-    base = ev.select(
-        "event_id",
-        "user_id",
-        "event_type",
-        ep.epoch_s(ev, "ts").cast("long").alias("es"),
-        F.floor(F.col("value") * 1000000).cast("long").alias("vmic"),
-    )
-    root = tempfile.mkdtemp(prefix="dv_table_")
-    path = os.path.join(root, "t")
-
-    def _part_files(p: str):
-        return sorted(
-            (f, os.path.getsize(os.path.join(p, f)))
-            for f in os.listdir(p)
-            if f.startswith("part-")
-        )
-
-    try:
-        # range-clustered layout: disjoint per-file es ranges are what
-        # make the manifest prune (stats over a random layout span the
-        # whole domain and skip nothing — the zone-map precondition)
-        t = ManagedTable.create(
-            base.repartitionByRange(16, "es").sortWithinPartitions("es"),
-            path,
-            key="event_id",
-            stat_cols=["es"],
-        )
-        v1_files = _part_files(os.path.join(path, "v1"))
-        v2 = t.delete(F.col("user_id") % 7 == 3)
-        v3 = t.delete(F.col("event_id") % 5 == 0)
-
-        dv_no_datafiles = (
-            _part_files(os.path.join(path, f"v{v2}")) == []
-            and _part_files(os.path.join(path, f"v{v3}")) == []
-        )
-        base_untouched = _part_files(os.path.join(path, "v1")) == v1_files
-        import json as _json
-
-        with open(os.path.join(path, f"v{v3}", "_dv.json")) as f:
-            one_hop = _json.load(f)["base"] == "v1"
-        tt_ok = (
-            dataset_fingerprint(t.read(version=1), cols).collect()
-            == dataset_fingerprint(base, cols).collect()
-        )
-
-        lo = t.read().agg(F.min("es")).collect()[0][0]
-        sdf, files_read, files_total = t.scan("es", lo, lo + 86400)
-        scan_rows = sdf.count()
-        exact = t.read().filter(F.col("es").between(lo, lo + 86400)).count()
-        scan_pruned = files_read < files_total
-        scan_exact = scan_rows == exact
-
-        pre_opt = dataset_fingerprint(t.read(), cols).collect()
-        v4 = t.optimize()
-        opt_lossless = (
-            dataset_fingerprint(t.read(version=v4), cols).collect() == pre_opt
-        )
-        opt_dropped_dv = not os.path.isdir(
-            os.path.join(path, f"v{v4}", "_dv")
-        ) and _part_files(os.path.join(path, f"v{v4}")) != []
-
-        fp = dataset_fingerprint(t.read(), cols, label="dv_events")
-        return fp.withColumns(
-            {
-                "dv_no_datafiles": F.lit(bool(dv_no_datafiles)),
-                "base_untouched": F.lit(bool(base_untouched)),
-                "time_travel_intact": F.lit(bool(tt_ok)),
-                "one_hop_dv": F.lit(bool(one_hop)),
-                "scan_rows": F.lit(int(scan_rows)).cast("long"),
-                "scan_pruned": F.lit(bool(scan_pruned)),
-                "scan_exact": F.lit(bool(scan_exact)),
-                "optimize_lossless": F.lit(bool(opt_lossless)),
-                "optimize_dropped_dv": F.lit(bool(opt_dropped_dv)),
-            }
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-@register_extra(
-    "x_merge_not_matched_by_source",
-    oracle="""
-WITH tgt AS (
-  SELECT user_id,
-         CAST(count(*) AS BIGINT) AS n_events,
-         CAST(sum(CAST(round(value * 1000000, 0) AS HUGEINT)) AS BIGINT) AS sum_q,
-         'fresh' AS status
-  FROM events GROUP BY user_id
-),
-src AS (
-  SELECT user_id,
-         CAST(count(*) AS BIGINT) AS n_events,
-         CAST(sum(CAST(round(value * 1000000, 0) AS HUGEINT)) AS BIGINT) AS sum_q
-  FROM events WHERE user_id % 3 = 0 GROUP BY user_id
-),
-merged AS (
-  -- matched: source values win, status stays fresh
-  SELECT t.user_id, s.n_events, s.sum_q, 'fresh' AS status
-  FROM tgt t JOIN src s USING (user_id)
-  UNION ALL
-  -- not matched by source: user_id%5=0 deleted, others marked stale
-  SELECT t.user_id, t.n_events, t.sum_q,
-         CASE WHEN t.user_id % 2 = 0 THEN 'stale' ELSE t.status END AS status
-  FROM tgt t LEFT JOIN src s USING (user_id)
-  WHERE s.user_id IS NULL AND t.user_id % 5 != 0
-)
-SELECT user_id, n_events, sum_q, status FROM merged
-""",
-)
-def x_merge_not_matched_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MERGE's WHEN NOT MATCHED BY SOURCE arms (SQL:2023 / Delta
-    2.3+) — the sync-to-snapshot shape: the source is the desired
-    state for the keys it carries, and target keys the source does
-    NOT touch get acted on (deleted when user_id%5=0, marked stale
-    when user_id%2=0, passed through otherwise; delete outranks
-    update, the first-matching-clause rule). Still ONE NULL-safe
-    full-outer join — the new arms are CASE branches, not extra
-    passes, so the plan shape is unchanged at any scale
-    (operators/upsert.py merge_into)."""
-    ensure_harness_conf(spark)
-    from .operators.upsert import merge_into
-
-    ev = load(spark, sf_dir, "events")
-    agg = ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.sum(F.round(F.col("value") * 1000000, 0).cast("decimal(38,0)"))
-        .cast("long")
-        .alias("sum_q"),
-    )
-    tgt = agg.withColumn("status", F.lit("fresh"))
-    src = agg.filter(F.col("user_id") % 3 == 0).select(
-        "user_id", "n_events", "sum_q"
-    )
-    return merge_into(
-        tgt,
-        src,
-        "user_id",
-        not_matched_by_source_delete_cond=F.col("user_id") % 5 == 0,
-        not_matched_by_source_update={"status": F.lit("stale")},
-        not_matched_by_source_update_cond=F.col("user_id") % 2 == 0,
-    )
-
-
-@register_extra(
-    "x_table_clone",
-    oracle=f"""
-WITH base AS (
-  SELECT event_id, user_id, event_type,
-         CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS es,
-         CAST(floor(value * 1000000) AS BIGINT) AS vmic
-  FROM events
-),
-alive AS (SELECT * FROM base WHERE user_id % 4 IS DISTINCT FROM 1),
-fp AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_rows,
-         CAST(bit_xor(h) AS BIGINT) AS xor_hash,
-         CAST(sum(h) % 1152921504606846976 AS BIGINT) AS sum_hash_mod
-  FROM (SELECT CAST(concat('0x', substr(md5(concat_ws(chr(31), {_MT_FP_RENDER})),
-                                        1, 15)) AS BIGINT) AS h
-        FROM alive)
-)
-SELECT 'clone_events' AS dataset, fp.n_rows, fp.xor_hash, fp.sum_hash_mod,
-       TRUE AS zero_copy, TRUE AS source_isolated, TRUE AS clone_scan_prunes
-FROM fp
-""",
-)
-def x_table_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shallow CLONE: a zero-copy fork of a managed table — the
-    dev/test/experimentation primitive (Delta CLONE SHALLOW): clone a
-    100 TB production table in O(1) bytes, mutate the clone freely,
-    the source never notices. v1 of the clone is an empty deletion
-    vector over the source's current files; a DELETE on the clone
-    then behaves exactly as on any table (DV semantics), while the
-    SOURCE keeps serving its own content — isolation proven by
-    mutating both sides and fingerprinting the clone (oracle
-    recomputes it relationally) plus a boolean for the source's
-    digest staying put. The clone inherits the source's manifest, so
-    its scans prune from the first read."""
-    ensure_harness_conf(spark)
-    import os
-    import shutil
-    import tempfile
-
-    from .operators.layout import dataset_fingerprint
-    from .operators.table import ManagedTable
-
-    cols = ["event_id", "user_id", "event_type", "es", "vmic"]
-    ev = load(spark, sf_dir, "events")
-    base = ev.select(
-        "event_id",
-        "user_id",
-        "event_type",
-        ep.epoch_s(ev, "ts").cast("long").alias("es"),
-        F.floor(F.col("value") * 1000000).cast("long").alias("vmic"),
-    )
-    root = tempfile.mkdtemp(prefix="clone_table_")
-    try:
-        t = ManagedTable.create(
-            base.repartitionByRange(8, "es").sortWithinPartitions("es"),
-            os.path.join(root, "src"),
-            key="event_id",
-            stat_cols=["es"],
-        )
-        src_fp = dataset_fingerprint(t.read(), cols).collect()
-        c = t.clone(os.path.join(root, "dst"))
-        zero_copy = not any(
-            f.startswith("part-")
-            for f in os.listdir(os.path.join(root, "dst", "v1"))
-        )
-        # mutate the clone; the source must not move
-        c.delete(F.col("user_id") % 4 == 1)
-        source_isolated = (
-            dataset_fingerprint(t.read(), cols).collect() == src_fp
-        )
-        lo = c.read().agg(F.min("es")).collect()[0][0]
-        _, files_read, files_total = c.scan("es", lo, lo + 43200)
-        clone_scan_prunes = files_read < files_total
-        fp = dataset_fingerprint(c.read(), cols, label="clone_events")
-        return fp.withColumns(
-            {
-                "zero_copy": F.lit(bool(zero_copy)),
-                "source_isolated": F.lit(bool(source_isolated)),
-                "clone_scan_prunes": F.lit(bool(clone_scan_prunes)),
-            }
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-@register_extra(
-    "x_table_cdc_consume",
-    oracle="""
-WITH base AS (
-  SELECT user_id,
-         CAST(count(*) AS BIGINT) AS n_events,
-         CAST(sum(CAST(round(value * 1000000, 0) AS HUGEINT)) AS BIGINT) AS sum_q
-  FROM events GROUP BY user_id
-),
-final AS (
-  SELECT user_id, n_events,
-         sum_q + CASE WHEN user_id % 7 = 1 THEN 1000000 ELSE 0 END AS sum_q
-  FROM base
-  WHERE user_id % 5 IS DISTINCT FROM 3
-)
-SELECT CAST(user_id % 10 AS BIGINT) AS bucket,
-       CAST(count(*) AS BIGINT) AS n_users,
-       CAST(sum(n_events) AS BIGINT) AS total_events,
-       CAST(sum(sum_q) AS BIGINT) AS total_q,
-       TRUE AS maintained_equals_recompute
-FROM final
-GROUP BY user_id % 10
-""",
-)
-def x_table_cdc_consume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental CDC CONSUMPTION — the downstream half of the
-    change-feed contract: a consumer maintains a per-bucket AGGREGATE
-    of a managed table by folding `changes(..., include_before=True)`
-    (Delta CDF row shape) instead of re-aggregating the table. The
-    before-image rows are what make this pure retraction arithmetic:
-    sign = +1 for insert/update_postimage, −1 for
-    delete/update_preimage; each batch's delta aggregate merges into
-    the running state with one outer join on the bucket key — cost ∝
-    CHANGE volume, never table volume, the property a 100 TB
-    materialized view lives on.
-
-      v1 = per-user event aggregates, keys user_id%3!=0
-      → MERGE (all %3==0 users insert; %7==1 users bump sum_q) = v2
-      → MERGE (delete matched %5==3 users, no inserts)          = v3
-      consumer: agg(v1) + fold cdf(1→2) + fold cdf(2→3)
-
-    The maintained result is returned AS the query output (the oracle
-    recomputes the final table relationally and aggregates it), and
-    `maintained_equals_recompute` re-checks it Spark-side against a
-    direct aggregate of v3 — the provably-equal-to-recompute
-    discipline of every maintenance operator in this engine
-    (cf. x_ivm_join_view, x_dedup_incremental)."""
-    ensure_harness_conf(spark)
-    import os
-    import shutil
-    import tempfile
-
-    from .operators.table import ManagedTable
-
-    ev = load(spark, sf_dir, "events")
-    base = ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.sum(F.round(F.col("value") * 1000000, 0).cast("decimal(38,0)"))
-        .cast("long")
-        .alias("sum_q"),
-    )
-    root = tempfile.mkdtemp(prefix="cdc_consume_")
-    path = os.path.join(root, "t")
-
-    def agg_of(df: DataFrame) -> DataFrame:
-        return (
-            df.groupBy((F.col("user_id") % 10).cast("long").alias("bucket"))
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_users"),
-                F.sum("n_events").cast("long").alias("total_events"),
-                F.sum("sum_q").cast("long").alias("total_q"),
-            )
-        )
-
-    def fold(state: DataFrame, cdf: DataFrame) -> DataFrame:
-        sign = F.when(
-            F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
-        ).otherwise(F.lit(-1))
-        delta = (
-            cdf.groupBy((F.col("user_id") % 10).cast("long").alias("bucket"))
-            .agg(
-                F.sum(sign).cast("long").alias("d_users"),
-                F.sum(sign * F.col("n_events")).cast("long").alias("d_events"),
-                F.sum(sign * F.col("sum_q")).cast("long").alias("d_q"),
-            )
-        )
-        merged = state.join(delta, "bucket", "full_outer").select(
-            "bucket",
-            (
-                F.coalesce(F.col("n_users"), F.lit(0))
-                + F.coalesce(F.col("d_users"), F.lit(0))
-            ).cast("long").alias("n_users"),
-            (
-                F.coalesce(F.col("total_events"), F.lit(0))
-                + F.coalesce(F.col("d_events"), F.lit(0))
-            ).cast("long").alias("total_events"),
-            (
-                F.coalesce(F.col("total_q"), F.lit(0))
-                + F.coalesce(F.col("d_q"), F.lit(0))
-            ).cast("long").alias("total_q"),
-        )
-        # buckets whose last key retracted vanish, as a recompute would
-        return merged.filter(F.col("n_users") > 0)
-
-    try:
-        v1_rows = base.filter(F.col("user_id") % 3 != 0)
-        t = ManagedTable.create(v1_rows, path, key="user_id")
-        src1 = base.filter(
-            (F.col("user_id") % 3 == 0) | (F.col("user_id") % 7 == 1)
-        ).withColumn(
-            "sum_q",
-            F.col("sum_q")
-            + F.when(F.col("user_id") % 7 == 1, F.lit(1000000)).otherwise(0),
-        )
-        t.merge(src1)  # v2: inserts + updates
-        src2 = base.filter(F.col("user_id") % 5 == 3).select("user_id")
-        t.merge(
-            src2.withColumn("n_events", F.lit(None).cast("long")).withColumn(
-                "sum_q", F.lit(None).cast("long")
-            ),
-            delete_cond=F.lit(True),
-            insert_unmatched=False,
-        )  # v3: deletes only
-
-        state = agg_of(t.read(version=1))
-        state = fold(state, t.changes(1, 2, include_before=True))
-        state = fold(state, t.changes(2, 3, include_before=True))
-        maintained = state.localCheckpoint(eager=True)
-
-        recompute = agg_of(t.read())
-        eq = (
-            maintained.exceptAll(recompute).count() == 0
-            and recompute.exceptAll(maintained).count() == 0
-        )
-        return maintained.withColumn(
-            "maintained_equals_recompute", F.lit(bool(eq))
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-@register_extra(
-    "x_table_constraints",
-    oracle="""
-WITH base AS (
-  SELECT user_id,
-         CAST(count(*) AS BIGINT) AS n_events,
-         CAST(sum(CAST(round(value * 1000000, 0) AS HUGEINT)) AS BIGINT) AS sum_q
-  FROM events GROUP BY user_id
-),
-final AS (
-  SELECT user_id, n_events,
-         CASE WHEN user_id % 9 = 2 THEN sum_q + 500000 ELSE sum_q END AS sum_q
-  FROM base
-)
-SELECT CAST(count(*) AS BIGINT) AS n_users,
-       CAST(sum(n_events) AS BIGINT) AS total_events,
-       CAST(sum(sum_q) AS BIGINT) AS total_q,
-       TRUE AS violating_commit_refused, TRUE AS version_unchanged_after_refusal,
-       TRUE AS unenforceable_constraint_rejected
-FROM final
-""",
-)
-def x_table_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CHECK constraints on the managed table (Delta's ADD CONSTRAINT
-    contract): declared once, enforced on every subsequent commit via
-    a short-circuit existence probe (limit-k, not a count — at 100 TB
-    the probe stops at the first violating partition). Pinned here:
-    a violating MERGE is REFUSED with the table version unchanged (the
-    failed batch never publishes — constraint enforcement and the
-    atomic-commit contract compose); a clean MERGE then lands; adding
-    a constraint the EXISTING data violates is itself rejected (the
-    Delta rule: unenforceable constraints are never recorded). The
-    final content is oracle-verified relationally; SQL CHECK NULL
-    semantics (violate only on FALSE) are pinned in tests."""
-    ensure_harness_conf(spark)
-    import os
-    import shutil
-    import tempfile
-
-    from .operators.table import ManagedTable
-
-    ev = load(spark, sf_dir, "events")
-    base = ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.sum(F.round(F.col("value") * 1000000, 0).cast("decimal(38,0)"))
-        .cast("long")
-        .alias("sum_q"),
-    )
-    root = tempfile.mkdtemp(prefix="constraints_")
-    path = os.path.join(root, "t")
-    try:
-        t = ManagedTable.create(base, path, key="user_id")
-        t.add_constraint("events_positive", "n_events >= 1")
-        try:
-            t.add_constraint("impossible", "sum_q < 0")
-            unenforceable_rejected = False
-        except ValueError:
-            unenforceable_rejected = "impossible" not in t.constraints
-
-        v_before = t.version()
-        bad = base.filter(F.col("user_id") % 9 == 2).withColumn(
-            "n_events", F.lit(0).cast("long")
-        )
-        try:
-            t.merge(bad)
-            refused = False
-        except ValueError:
-            refused = True
-        unchanged = t.version() == v_before
-
-        good = base.filter(F.col("user_id") % 9 == 2).withColumn(
-            "sum_q", F.col("sum_q") + 500000
-        )
-        t.merge(good)
-
-        out = t.read().agg(
-            F.count(F.lit(1)).cast("long").alias("n_users"),
-            F.sum("n_events").cast("long").alias("total_events"),
-            F.sum("sum_q").cast("long").alias("total_q"),
-        )
-        return out.withColumns(
-            {
-                "violating_commit_refused": F.lit(bool(refused)),
-                "version_unchanged_after_refusal": F.lit(bool(unchanged)),
-                "unenforceable_constraint_rejected": F.lit(
-                    bool(unenforceable_rejected)
-                ),
-            }
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-@register_extra(
-    "x_table_point_lookup",
-    oracle="""
-SELECT event_id, user_id, event_type,
-       CAST(round(value * 1000000, 0) AS BIGINT) AS vmic,
-       TRUE AS bloom_pruned, TRUE AS deleted_key_returns_zero
-FROM events
-WHERE event_id IN (100, 777)
-""",
-)
-def x_table_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-manifest POINT LOOKUP through the managed table — the
-    100 TB single-key probe: the table is laid out RANDOMLY on the
-    lookup column (the shape where zone maps span the whole domain
-    and prune nothing — exactly the gap the bloom layer covers), and
-    a key probe opens only the files whose per-file bloom may contain
-    the key, decided entirely driver-side from the manifest. Composed
-    with deletion vectors: after DELETE event_id%500=321, a lookup of
-    key 321 routes to its file via the bloom (no false negatives) and
-    returns ZERO rows through the DV anti-join — the sidecar
-    composition a lakehouse point-read actually performs. Bloom
-    manifests are maintained on every copy commit and inherited
-    (conservatively) by DV versions; FP rate sizing documented at
-    layout.write_with_bloom."""
-    ensure_harness_conf(spark)
-    import os
-    import shutil
-    import tempfile
-
-    from .operators.table import ManagedTable
-
-    ev = load(spark, sf_dir, "events")
-    base = ev.select(
-        "event_id",
-        "user_id",
-        "event_type",
-        F.round(F.col("value") * 1000000, 0).cast("long").alias("vmic"),
-    )
-    root = tempfile.mkdtemp(prefix="point_lookup_")
-    path = os.path.join(root, "t")
-    try:
-        t = ManagedTable.create(
-            base.repartition(32), path, key="event_id", bloom_col="event_id"
-        )
-        t.delete(F.col("event_id") % 500 == 321)
-
-        outs = []
-        pruned = True
-        for key in (100, 777):
-            df, fr, tot = t.lookup(key)
-            pruned = pruned and fr < tot
-            outs.append(df.localCheckpoint(eager=True))
-        gone, fr_g, _ = t.lookup(321)
-        deleted_zero = gone.count() == 0 and fr_g >= 1
-
-        out = outs[0].unionByName(outs[1])
-        return out.withColumns(
-            {
-                "bloom_pruned": F.lit(bool(pruned)),
-                "deleted_key_returns_zero": F.lit(bool(deleted_zero)),
-            }
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-@register_extra(
-    "x_table_update_restore",
-    oracle=f"""
-WITH base AS (
-  SELECT event_id, user_id, event_type,
-         CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS es,
-         CAST(floor(value * 1000000) AS BIGINT) AS vmic
-  FROM events
-),
-upd1 AS (
-  SELECT event_id, user_id, event_type, es,
-         CASE WHEN user_id % 5 = 1 THEN vmic * 3 + es % 97 ELSE vmic END AS vmic
-  FROM base
-),
-alive AS (
-  SELECT * FROM upd1 WHERE event_id % 7 IS DISTINCT FROM 2
-),
-upd2 AS (
-  SELECT event_id, user_id, event_type, es,
-         CASE WHEN user_id % 6 = 4 THEN -vmic ELSE vmic END AS vmic
-  FROM alive
-),
-fp AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_rows,
-         CAST(bit_xor(h) AS BIGINT) AS xor_hash,
-         CAST(sum(h) % 1152921504606846976 AS BIGINT) AS sum_hash_mod
-  FROM (SELECT CAST(concat('0x', substr(md5(concat_ws(chr(31), {_MT_FP_RENDER})),
-                                        1, 15)) AS BIGINT) AS h
-        FROM upd2)
-),
-bounds AS (SELECT min(es) AS lo FROM upd2),
-scan AS (SELECT CAST(count(*) AS BIGINT) AS scan_rows
-         FROM upd2, bounds WHERE es BETWEEN lo AND lo + 86400)
-SELECT 'upd_events' AS dataset, fp.n_rows, fp.xor_hash, fp.sum_hash_mod,
-       TRUE AS upd_no_datafiles, TRUE AS base_untouched,
-       TRUE AS time_travel_intact,
-       scan.scan_rows, TRUE AS scan_pruned, TRUE AS scan_exact,
-       TRUE AS restore_zero_copy, TRUE AS restore_intact,
-       TRUE AS restore_roundtrip,
-       TRUE AS optimize_lossless, TRUE AS optimize_folded
-FROM fp, scan
-""",
-)
-def x_table_update_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UPDATE as merge-on-read (DV + appended rewrite images) and
-    RESTORE as a zero-copy forward commit — the write path a 100 TB
-    table needs for in-place mutation (rewriting the table to touch
-    0.1% of its rows is the most expensive possible update). The
-    chain exercised, every hop published without rewriting a data
-    file:
-
-      create(v1: events, 16 range-clustered files, stats on es)
-      → UPDATE user_id%5=1 SET vmic = vmic*3 + es%97   (v2: DV + _upd)
-      → DELETE event_id%7=2                            (v3: DV only)
-      → UPDATE user_id%6=4 SET vmic = -vmic            (v4: DV + _upd —
-        rewrites rows that v2 itself appended, proving appended files
-        are first-class DV targets)
-      → RESTORE v1                                     (v5: zero-copy,
-        content == v1, txn lineage forward — unlike rollback)
-      → RESTORE v4                                     (v6: round-trips
-        a DV+appends version through a reference commit)
-      → OPTIMIZE                                       (v7: folds DV +
-        appends into clustered files, digest-lossless)
-
-    Invariants packed into the row: update versions hold NO top-level
-    data files; v1's files byte-identical after the whole chain; time
-    travel to v1 exact; the manifest-pruned day-window scan on the
-    DV+appends version opens fewer files than listed AND equals the
-    exact filter; both restores digest-exact; OPTIMIZE lossless and
-    sidecar-free. The oracle recomputes the final multiset relationally
-    (CASE WHEN for each UPDATE over OLD row values — set expressions
-    read the pre-update row, SQL UPDATE semantics — and the NULL-safe
-    delete complement). Reference parity: the reference mutates its
-    store via full-table rewrite upserts (firestore_sink.py); this is
-    that contract with lakehouse-scale economics."""
-    ensure_harness_conf(spark)
-    import os
-    import shutil
-    import tempfile
-
-    from .operators.layout import dataset_fingerprint
-    from .operators.table import ManagedTable
-
-    cols = ["event_id", "user_id", "event_type", "es", "vmic"]
-    ev = load(spark, sf_dir, "events")
-    base = ev.select(
-        "event_id",
-        "user_id",
-        "event_type",
-        ep.epoch_s(ev, "ts").cast("long").alias("es"),
-        F.floor(F.col("value") * 1000000).cast("long").alias("vmic"),
-    )
-    root = tempfile.mkdtemp(prefix="upd_table_")
-    path = os.path.join(root, "t")
-
-    def _part_files(p: str):
-        return sorted(
-            (f, os.path.getsize(os.path.join(p, f)))
-            for f in os.listdir(p)
-            if f.startswith("part-")
-        )
-
-    try:
-        t = ManagedTable.create(
-            base.repartitionByRange(16, "es").sortWithinPartitions("es"),
-            path,
-            key="event_id",
-            stat_cols=["es"],
-        )
-        v1_files = _part_files(os.path.join(path, "v1"))
-        v2 = t.update(
-            F.col("user_id") % 5 == 1,
-            {"vmic": F.col("vmic") * 3 + F.col("es") % 97},
-        )
-        v3 = t.delete(F.col("event_id") % 7 == 2)
-        v4 = t.update(F.col("user_id") % 6 == 4, {"vmic": -F.col("vmic")})
-
-        upd_no_datafiles = (
-            _part_files(os.path.join(path, f"v{v2}")) == []
-            and _part_files(os.path.join(path, f"v{v4}")) == []
-            and os.path.isdir(os.path.join(path, f"v{v2}", "_upd"))
-        )
-        base_untouched = _part_files(os.path.join(path, "v1")) == v1_files
-        tt_ok = (
-            dataset_fingerprint(t.read(version=1), cols).collect()
-            == dataset_fingerprint(base, cols).collect()
-        )
-
-        lo = t.read().agg(F.min("es")).collect()[0][0]
-        sdf, files_read, files_total = t.scan("es", lo, lo + 86400)
-        scan_rows = sdf.count()
-        exact = t.read().filter(F.col("es").between(lo, lo + 86400)).count()
-        scan_pruned = files_read < files_total
-        scan_exact = scan_rows == exact
-
-        v4_digest = dataset_fingerprint(t.read(version=v4), cols).collect()
-        v5 = t.restore(1)
-        restore_zero_copy = _part_files(os.path.join(path, f"v{v5}")) == []
-        restore_intact = (
-            dataset_fingerprint(t.read(version=v5), cols).collect()
-            == dataset_fingerprint(base, cols).collect()
-        )
-        v6 = t.restore(v4)
-        restore_roundtrip = (
-            dataset_fingerprint(t.read(version=v6), cols).collect()
-            == v4_digest
-        )
-
-        v7 = t.optimize()
-        opt_lossless = (
-            dataset_fingerprint(t.read(version=v7), cols).collect()
-            == v4_digest
-        )
-        opt_folded = not os.path.isdir(
-            os.path.join(path, f"v{v7}", "_dv")
-        ) and not os.path.isdir(os.path.join(path, f"v{v7}", "_upd"))
-
-        fp = dataset_fingerprint(t.read(), cols, label="upd_events")
-        return fp.withColumns(
-            {
-                "upd_no_datafiles": F.lit(bool(upd_no_datafiles)),
-                "base_untouched": F.lit(bool(base_untouched)),
-                "time_travel_intact": F.lit(bool(tt_ok)),
-                "scan_rows": F.lit(int(scan_rows)).cast("long"),
-                "scan_pruned": F.lit(bool(scan_pruned)),
-                "scan_exact": F.lit(bool(scan_exact)),
-                "restore_zero_copy": F.lit(bool(restore_zero_copy)),
-                "restore_intact": F.lit(bool(restore_intact)),
-                "restore_roundtrip": F.lit(bool(restore_roundtrip)),
-                "optimize_lossless": F.lit(bool(opt_lossless)),
-                "optimize_folded": F.lit(bool(opt_folded)),
-            }
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-@register_extra(
-    "x_maintenance_zorder",
-    oracle=f"""
-WITH base AS (
-  SELECT event_id, user_id, event_type,
-         CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS es,
-         CAST(floor(value * 1000000) AS BIGINT) AS vmic
-  FROM events
-),
-fp AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_rows,
-         CAST(bit_xor(h) AS BIGINT) AS xor_hash,
-         CAST(sum(h) % 1152921504606846976 AS BIGINT) AS sum_hash_mod
-  FROM (SELECT CAST(concat('0x', substr(md5(concat_ws(chr(31), {_MT_FP_RENDER})),
-                                        1, 15)) AS BIGINT) AS h
-        FROM base)
-),
-ub AS (SELECT min(user_id) AS lo_u,
-              min(user_id) + (max(user_id) - min(user_id)) // 8 AS hi_u
-       FROM base),
-tb AS (SELECT min(es) AS lo_t, min(es) + 86400 AS hi_t FROM base),
-uscan AS (SELECT CAST(count(*) AS BIGINT) AS u_rows
-          FROM base, ub WHERE user_id BETWEEN lo_u AND hi_u),
-tscan AS (SELECT CAST(count(*) AS BIGINT) AS t_rows
-          FROM base, tb WHERE es BETWEEN lo_t AND hi_t)
-SELECT 'z_events' AS dataset, fp.n_rows, fp.xor_hash, fp.sum_hash_mod,
-       TRUE AS zorder_lossless,
-       uscan.u_rows, TRUE AS user_scan_pruned, TRUE AS user_scan_exact,
-       tscan.t_rows, TRUE AS time_scan_pruned, TRUE AS time_scan_exact,
-       TRUE AS beats_lexicographic_on_second_col
-FROM fp, uscan, tscan
-""",
-)
-def x_maintenance_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OPTIMIZE ZORDER BY (user_id, es) — multi-column data skipping.
-    A layout can be range-clustered on ONE ordering: lexicographic
-    (user_id, es) clustering prunes user scans perfectly and time
-    scans not at all, yet a real workload filters on BOTH (per-user
-    reads AND event-time windows). Z-ordering bit-interleaves the
-    min/max-scaled grid coordinates of both columns into one Morton
-    key (layout.z_value — pure JVM bit math) and range-partitions on
-    it, so every output file covers a compact rectangle of the
-    (user_id, es) plane and the per-file manifest prunes selective
-    scans on EITHER column — at 100 TB the difference between a
-    two-predicate workload opening ~1% of files and scanning the
-    table. The rewrite publishes by RENAME of the verified scratch
-    files (one data pass — re-writing through a second job both
-    doubles the I/O and scrambles the clustering through size-ordered
-    split packing; measured before the fix: zero pruning survived).
-
-    Packed invariants: digest-lossless rewrite (optimize proves it
-    before publishing; the row's fingerprint re-proves it against the
-    oracle's relational recompute); a 1/8-domain user_id scan AND a
-    one-day es scan each open strictly fewer files than the manifest
-    lists while matching the exact relational counts; and the same
-    es scan against a LEXICOGRAPHIC (user_id, es) clustering of the
-    same data reads a larger file fraction — the comparison that
-    justifies z-order's existence."""
-    ensure_harness_conf(spark)
-    import os
-    import shutil
-    import tempfile
-
-    from .operators.layout import dataset_fingerprint
-    from .operators.table import ManagedTable
-
-    cols = ["event_id", "user_id", "event_type", "es", "vmic"]
-    ev = load(spark, sf_dir, "events")
-    base = ev.select(
-        "event_id",
-        "user_id",
-        "event_type",
-        ep.epoch_s(ev, "ts").cast("long").alias("es"),
-        F.floor(F.col("value") * 1000000).cast("long").alias("vmic"),
-    )
-    root = tempfile.mkdtemp(prefix="z_table_")
-    try:
-        t = ManagedTable.create(
-            base.repartition(16),
-            os.path.join(root, "t"),
-            key="event_id",
-            stat_cols=["user_id", "es"],
-        )
-        t.optimize(
-            target_bytes=2048, cluster_by=["user_id", "es"], zorder=True
-        )
-        b = base.agg(
-            F.min("user_id"),
-            F.max("user_id"),
-            F.min("es"),
-        ).collect()[0]
-        lo_u, hi_u = b[0], b[0] + (b[1] - b[0]) // 8
-        lo_t, hi_t = b[2], b[2] + 86400
-
-        udf_, u_read, u_tot = t.scan("user_id", lo_u, hi_u)
-        u_rows = udf_.count()
-        u_exact = u_rows == base.filter(
-            F.col("user_id").between(lo_u, hi_u)
-        ).count()
-        tdf_, t_read, t_tot = t.scan("es", lo_t, hi_t)
-        t_rows = tdf_.count()
-        t_exact = t_rows == base.filter(
-            F.col("es").between(lo_t, hi_t)
-        ).count()
-
-        # the justification leg: lexicographic (user_id, es) clustering
-        # of the same data reads a larger file share on the es scan
-        t2 = ManagedTable.create(
-            base.repartition(16),
-            os.path.join(root, "lex"),
-            key="event_id",
-            stat_cols=["user_id", "es"],
-        )
-        t2.optimize(target_bytes=2048, cluster_by=["user_id", "es"])
-        _, t2_read, t2_tot = t2.scan("es", lo_t, hi_t)
-        beats_lex = (t_read / t_tot) < (t2_read / t2_tot)
-
-        zorder_lossless = (
-            dataset_fingerprint(t.read(), cols).collect()
-            == dataset_fingerprint(base, cols).collect()
-        )
-        fp = dataset_fingerprint(t.read(), cols, label="z_events")
-        return fp.withColumns(
-            {
-                "zorder_lossless": F.lit(bool(zorder_lossless)),
-                "u_rows": F.lit(int(u_rows)).cast("long"),
-                "user_scan_pruned": F.lit(bool(u_read < u_tot)),
-                "user_scan_exact": F.lit(bool(u_exact)),
-                "t_rows": F.lit(int(t_rows)).cast("long"),
-                "time_scan_pruned": F.lit(bool(t_read < t_tot)),
-                "time_scan_exact": F.lit(bool(t_exact)),
-                "beats_lexicographic_on_second_col": F.lit(bool(beats_lex)),
-            }
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-_CM_FP_RENDER = ", ".join(
-    f"coalesce(CAST({c} AS VARCHAR), chr(30))"
-    for c in ["event_id", "user_id", "es", "val_mic"]
-)
-
-
-@register_extra(
-    "x_table_column_mapping",
-    oracle=f"""
-WITH base AS (
-  SELECT event_id, user_id, event_type,
-         CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS es,
-         CAST(floor(value * 1000000) AS BIGINT) AS vmic
-  FROM events
-),
-alive AS (
-  SELECT * FROM base WHERE user_id % 9 IS DISTINCT FROM 4
-),
-updated AS (
-  SELECT event_id, user_id, es,
-         CASE WHEN event_id % 11 = 6 THEN vmic + 7 ELSE vmic END AS val_mic
-  FROM alive
-),
-fp AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_rows,
-         CAST(bit_xor(h) AS BIGINT) AS xor_hash,
-         CAST(sum(h) % 1152921504606846976 AS BIGINT) AS sum_hash_mod
-  FROM (SELECT CAST(concat('0x', substr(md5(concat_ws(chr(31), {_CM_FP_RENDER})),
-                                        1, 15)) AS BIGINT) AS h
-        FROM updated)
-)
-SELECT 'cm_events' AS dataset, fp.n_rows, fp.xor_hash, fp.sum_hash_mod,
-       TRUE AS rename_zero_copy, TRUE AS rename_digest_inherited,
-       TRUE AS drop_zero_copy, TRUE AS drop_digest_rescanned,
-       TRUE AS time_travel_schema_intact, TRUE AS current_schema_mapped,
-       TRUE AS scan_pruned, TRUE AS scan_exact,
-       TRUE AS optimize_purges_physical
-FROM fp
-""",
-)
-def x_table_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COLUMN MAPPING — RENAME/DROP COLUMN as O(1) metadata-only
-    commits (Delta's column-mapping contract): physical parquet names
-    are fixed at write time forever; each commit record carries its
-    own logical→physical map, so time travel serves every version
-    under the schema it was published with, and a rename of a 100 TB
-    table costs one JSON write instead of a 100 TB rewrite. The chain:
-
-      create(v1: events, range-clustered, stats on es)
-      → RENAME vmic → val_mic      (v2: zero-copy, digest INHERITED —
-        a rename changes no value and no column order)
-      → DELETE user_id%9=4         (v3: DV, predicate over the map)
-      → UPDATE event_id%11=6 SET val_mic += 7  (v4: _upd files written
-        in the PHYSICAL schema so they join the base file universe)
-      → DROP event_type            (v5: zero-copy, digest RESCANNED —
-        narrowing the view changes row hashes, inheritance would lie)
-      → OPTIMIZE                   (v6: physical rewrite PURGES the
-        dropped column from disk — REORG PURGE pairing)
-
-    Invariants in the row: both metadata commits hold no data files;
-    the rename commit's digest equals its parent's verbatim while the
-    drop commit's equals a fresh fingerprint of the narrowed view;
-    time travel to v1 serves the ORIGINAL column names; the manifest-
-    pruned scan translates the logical column to the physical manifest
-    key and stays exact; and the post-OPTIMIZE physical files no
-    longer contain the dropped column. The oracle recomputes the final
-    logical multiset relationally under the renamed schema."""
-    ensure_harness_conf(spark)
-    import os
-    import shutil
-    import tempfile
-
-    from .operators.layout import dataset_fingerprint
-    from .operators.table import ManagedTable
-
-    ev = load(spark, sf_dir, "events")
-    base = ev.select(
-        "event_id",
-        "user_id",
-        "event_type",
-        ep.epoch_s(ev, "ts").cast("long").alias("es"),
-        F.floor(F.col("value") * 1000000).cast("long").alias("vmic"),
-    )
-    root = tempfile.mkdtemp(prefix="cm_table_")
-    path = os.path.join(root, "t")
-
-    def _parts(v: int):
-        return [
-            f
-            for f in os.listdir(os.path.join(path, f"v{v}"))
-            if f.startswith("part-")
-        ]
-
-    def _rec(v: int):
-        import json as _json
-
-        with open(os.path.join(path, "_commits", f"{v}.json")) as f:
-            return _json.load(f)
-
-    try:
-        t = ManagedTable.create(
-            base.repartitionByRange(16, "es").sortWithinPartitions("es"),
-            path,
-            key="event_id",
-            stat_cols=["es"],
-        )
-        v2 = t.rename_column("vmic", "val_mic")
-        v3 = t.delete(F.col("user_id") % 9 == 4)
-        v4 = t.update(
-            F.col("event_id") % 11 == 6, {"val_mic": F.col("val_mic") + 7}
-        )
-        v5 = t.drop_column("event_type")
-
-        rename_zero_copy = _parts(v2) == []
-        r1, r2 = _rec(1), _rec(v2)
-        rename_digest_inherited = all(
-            r1[k] == r2[k] for k in ("n_rows", "xor_hash", "sum_hash_mod")
-        )
-        drop_zero_copy = _parts(v5) == []
-        cols_now = ["event_id", "user_id", "es", "val_mic"]
-        fp_now = dataset_fingerprint(t.read(), cols_now).collect()[0]
-        r5 = _rec(v5)
-        drop_digest_rescanned = (
-            r5["n_rows"],
-            r5["xor_hash"],
-            r5["sum_hash_mod"],
-        ) == (fp_now["n_rows"], fp_now["xor_hash"], fp_now["sum_hash_mod"])
-        tt_ok = t.read(version=1).columns == [
-            "event_id",
-            "user_id",
-            "event_type",
-            "es",
-            "vmic",
-        ]
-        mapped_ok = t.read().columns == cols_now
-
-        lo = t.read().agg(F.min("es")).collect()[0][0]
-        sdf, fr, tot = t.scan("es", lo, lo + 86400)
-        scan_rows = sdf.count()
-        scan_exact = scan_rows == t.read().filter(
-            F.col("es").between(lo, lo + 86400)
-        ).count()
-        scan_pruned = fr < tot
-
-        v6 = t.optimize()
-        phys_cols = spark.read.parquet(os.path.join(path, f"v{v6}")).columns
-        optimize_purges = "event_type" not in phys_cols
-
-        fp = dataset_fingerprint(t.read(), cols_now, label="cm_events")
-        return fp.withColumns(
-            {
-                "rename_zero_copy": F.lit(bool(rename_zero_copy)),
-                "rename_digest_inherited": F.lit(
-                    bool(rename_digest_inherited)
-                ),
-                "drop_zero_copy": F.lit(bool(drop_zero_copy)),
-                "drop_digest_rescanned": F.lit(bool(drop_digest_rescanned)),
-                "time_travel_schema_intact": F.lit(bool(tt_ok)),
-                "current_schema_mapped": F.lit(bool(mapped_ok)),
-                "scan_pruned": F.lit(bool(scan_pruned)),
-                "scan_exact": F.lit(bool(scan_exact)),
-                "optimize_purges_physical": F.lit(bool(optimize_purges)),
-            }
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-@register_extra(
-    "x_table_append",
-    oracle=f"""
-WITH base AS (
-  SELECT event_id, user_id, event_type,
-         CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS es,
-         CAST(floor(value * 1000000) AS BIGINT) AS vmic
-  FROM events
-),
-alive AS (
-  SELECT * FROM base WHERE event_id % 3 <> 0
-  UNION ALL
-  SELECT * FROM base WHERE event_id % 3 = 0 AND user_id % 2 = 0
-),
-fp AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_rows,
-         CAST(bit_xor(h) AS BIGINT) AS xor_hash,
-         CAST(sum(h) % 1152921504606846976 AS BIGINT) AS sum_hash_mod
-  FROM (SELECT CAST(concat('0x', substr(md5(concat_ws(chr(31), {_MT_FP_RENDER})),
-                                        1, 15)) AS BIGINT) AS h
-        FROM alive)
-)
-SELECT 'append_events' AS dataset, fp.n_rows, fp.xor_hash, fp.sum_hash_mod,
-       TRUE AS base_untouched, TRUE AS batch_in_own_dir,
-       TRUE AS digest_derived_exact, TRUE AS delete_sees_appended
-FROM fp
-""",
-)
-def x_table_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blind APPEND as a reference commit (round-10 verdict #3): the
-    ingest face of the managed table — the batch lands in the
-    version's own ``_upd`` dir, the parent's files/DV carry through
-    untouched, the commit digest is DERIVED (parent + batch, group-op
-    addition). Cost O(batch): this is how a 100 TB table takes a 1 GB
-    micro-batch without rewriting anything, and the op COMMUTES with
-    concurrent published commits (tests/test_table_r10.py pins the
-    rebase against an interleaved MERGE and the refusal on a column-
-    map change).
-
-    Shape: create(events where id%3<>0, 8 files) → append(the id%3=0
-    even-user slice). Invariants packed into the row: v1 part files
-    untouched (name+size equality),
-    the append version holds ONLY the batch's `_upd` files, the
-    DERIVED commit digest equals a full rescan of the union, and a
-    follow-up DELETE addresses an appended row positionally (the
-    appended universe is first-class for later DML).
-
-    Reference parity: the reference appends activity batches to its
-    store on every poll (main.py upload loop); this is that append
-    with snapshot isolation."""
-    ensure_harness_conf(spark)
-    import json as _json
-    import os
-    import shutil
-    import tempfile
-
-    from .operators.layout import dataset_fingerprint
-    from .operators.table import ManagedTable
-
-    cols = ["event_id", "user_id", "event_type", "es", "vmic"]
-    ev = load(spark, sf_dir, "events")
-    base = ev.select(
-        "event_id",
-        "user_id",
-        "event_type",
-        ep.epoch_s(ev, "ts").cast("long").alias("es"),
-        F.floor(F.col("value") * 1000000).cast("long").alias("vmic"),
-    )
-    init = base.filter(F.col("event_id") % 3 != 0)
-    batch = base.filter(
-        (F.col("event_id") % 3 == 0) & (F.col("user_id") % 2 == 0)
-    )
-    root = tempfile.mkdtemp(prefix="append_table_")
-    path = os.path.join(root, "t")
-
-    def _part_files(p: str):
-        return sorted(
-            (f, os.path.getsize(os.path.join(p, f)))
-            for f in os.listdir(p)
-            if f.startswith("part-")
-        )
-
-    try:
-        t = ManagedTable.create(init.repartition(8), path, key="event_id")
-        v1_files = _part_files(os.path.join(path, "v1"))
-        v2 = t.append(batch)
-        base_untouched = _part_files(os.path.join(path, "v1")) == v1_files
-        vdir = os.path.join(path, f"v{v2}")
-        batch_in_own_dir = (
-            _part_files(vdir) == []  # no data files at the version root
-            and os.path.isdir(os.path.join(vdir, "_upd"))
-            and _json.load(open(os.path.join(vdir, "_dv.json")))["base"]
-            == "v1"
-        )
-        with open(os.path.join(path, "_commits", f"{v2}.json")) as f:
-            rec = _json.load(f)
-        rescan = (
-            dataset_fingerprint(t.read(), cols).collect()[0].asDict()
-        )
-        digest_derived_exact = all(
-            rescan[k] == rec[k] for k in ("n_rows", "xor_hash", "sum_hash_mod")
-        )
-        # positional DML over the appended universe: delete one
-        # appended row, then prove the deletion and restore the count
-        probe = batch.select("event_id").limit(1).collect()
-        delete_sees_appended = True
-        if probe:
-            pid = probe[0][0]
-            t.delete(F.col("event_id") == pid)
-            delete_sees_appended = (
-                t.read().filter(F.col("event_id") == pid).count() == 0
-            )
-            t.restore(v2)
-
-        fp = dataset_fingerprint(t.read(), cols, label="append_events")
-        return fp.withColumns(
-            {
-                "base_untouched": F.lit(bool(base_untouched)),
-                "batch_in_own_dir": F.lit(bool(batch_in_own_dir)),
-                "digest_derived_exact": F.lit(bool(digest_derived_exact)),
-                "delete_sees_appended": F.lit(bool(delete_sees_appended)),
-            }
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-@register_extra(
-    "x_table_manifest_pq",
-    oracle="""
-WITH base AS (
-  SELECT event_id, user_id,
-         CAST(round(value * 1000000, 0) AS BIGINT) AS vmic
-  FROM events
-)
-SELECT event_id, user_id, vmic,
-       TRUE AS parquet_manifest_used, TRUE AS scan_pruned,
-       TRUE AS bloom_pruned, TRUE AS deleted_key_zero
-FROM base
-WHERE event_id BETWEEN 200 AND 699 AND event_id % 7 <> 3
-ORDER BY event_id
-""",
-)
-def x_table_manifest_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PARQUET-manifest metadata path (operators/manifest.py) — the
-    Delta-checkpoint treatment of the r9 verdict's named ceiling: at
-    ≥PARQUET_MANIFEST_THRESHOLD files per version the zone-map and
-    bloom manifests are DISTRIBUTED parquet relations, pruned by a
-    Spark filter that ships only surviving file names to the driver —
-    never the 10⁶-entry list a monolithic JSON would materialize on
-    every commit and scan. This gate forces the representation
-    (manifest_format="parquet") on a range-clustered events table and
-    proves the full composition on it: a 500-key range scan PRUNES
-    (files_read < files_total) through the parquet zone maps, a DV
-    DELETE inherits the relation and the re-scan stays exact, a point
-    lookup routes through the parquet bloom relation, and a deleted
-    key returns zero rows through bloom + DV. Crossover + 10⁶-entry
-    walls measured in scripts/scale_smoke_manifest.py (SCALE.md)."""
-    ensure_harness_conf(spark)
-    import json
-    import os
-    import shutil
-    import tempfile
-
-    from .operators.table import ManagedTable
-
-    ev = load(spark, sf_dir, "events")
-    base = ev.select(
-        "event_id",
-        "user_id",
-        F.round(F.col("value") * 1000000, 0).cast("long").alias("vmic"),
-    )
-    root = tempfile.mkdtemp(prefix="manifest_pq_")
-    path = os.path.join(root, "t")
-    try:
-        t = ManagedTable.create(
-            base.repartitionByRange(32, "event_id"),
-            path,
-            key="event_id",
-            stat_cols=["event_id"],
-            bloom_col="user_id",
-            manifest_format="parquet",
-        )
-        meta = json.load(
-            open(os.path.join(path, "v1", "_manifest.json"))
-        )
-        pq_used = meta.get("format") == "parquet" and os.path.isdir(
-            os.path.join(path, "v1", "_bloom_pq")
-        )
-
-        t.delete(F.col("event_id") % 7 == 3)
-
-        window, fr, tot = t.scan("event_id", 200, 699)
-        scan_pruned = fr < tot
-
-        probe_uid = base.filter(F.col("event_id") == 201).head()["user_id"]
-        hit, fr_b, tot_b = t.lookup(probe_uid)
-        bloom_pruned = fr_b < tot_b and hit.count() >= 1
-
-        gone, fr_g, _ = t.lookup(
-            base.filter(F.col("event_id") == 3).head()["user_id"]
-        )
-        deleted_zero = (
-            gone.filter(F.col("event_id") == 3).count() == 0 and fr_g >= 1
-        )
-
-        return (
-            window.orderBy("event_id")
-            .withColumns(
-                {
-                    "parquet_manifest_used": F.lit(bool(pq_used)),
-                    "scan_pruned": F.lit(bool(scan_pruned)),
-                    "bloom_pruned": F.lit(bool(bloom_pruned)),
-                    "deleted_key_zero": F.lit(bool(deleted_zero)),
-                }
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-@register_extra(
-    "x_table_add_column",
-    oracle="""
-WITH base AS (
-  SELECT event_id, user_id,
-         CAST(round(value * 1000000, 0) AS BIGINT) AS vmic
-  FROM events
-),
-aug AS (
-  SELECT event_id, user_id, vmic,
-         CASE WHEN event_id % 11 = 4 THEN vmic / 1000000.0 END AS qscore,
-         CAST(NULL AS VARCHAR) AS src
-  FROM base
-  UNION ALL
-  SELECT event_id + 1000000, user_id, vmic,
-         CAST(NULL AS DOUBLE), 'legacy'
-  FROM base WHERE event_id % 97 = 5
-)
-SELECT event_id, user_id, vmic, qscore, src,
-       TRUE AS add_was_metadata_only, TRUE AS pre_add_schema_preserved
-FROM aug
-WHERE event_id % 13 = 2 OR event_id >= 1000000
-ORDER BY event_id
-""",
-)
-def x_table_add_column(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ADD COLUMN as WRITE-FREE metadata (ManagedTable.add_column —
-    Delta's additive evolution, the only kind a 100 TB table can
-    afford): the commit writes ZERO data files (asserted in-row), and
-    files that predate the add serve the column as typed NULL through
-    every read path. Composed here with the rest of the DML surface:
-    a merge-on-read UPDATE sets the added column for a keyed slice
-    (its rewritten images carry the column; older files still lack
-    it — the mergeSchema union path), a second add with a DEFAULT
-    clause applies the default to a FUTURE append that omits the
-    column while existing rows stay NULL (defaults are never
-    backdated — indistinguishable from real NULLs otherwise), and
-    time travel before the add serves the original schema.
-    Lifecycle × {optimize, restore, rollback, clone, vacuum}
-    interleavings are fuzz-pinned in tests/test_table_model.py;
-    12 directed tests in tests/test_table_add_column.py."""
-    ensure_harness_conf(spark)
-    import os
-    import shutil
-    import tempfile
-
-    from .operators.table import ManagedTable
-
-    ev = load(spark, sf_dir, "events")
-    base = ev.select(
-        "event_id",
-        "user_id",
-        F.round(F.col("value") * 1000000, 0).cast("long").alias("vmic"),
-    )
-    root = tempfile.mkdtemp(prefix="add_column_")
-    path = os.path.join(root, "t")
-    try:
-        t = ManagedTable.create(
-            base.repartitionByRange(16, "event_id"),
-            path,
-            key="event_id",
-            stat_cols=["event_id"],
-        )
-        v_pre = t.version()
-        v_add = t.add_column("qscore", "double")
-        metadata_only = not any(
-            f.startswith("part-")
-            for f in os.listdir(os.path.join(path, f"v{v_add}"))
-        )
-        t.update(
-            F.col("event_id") % 11 == 4,
-            {"qscore": F.col("vmic") / F.lit(1000000.0)},
-        )
-        t.add_column("src", "string", default_sql="'legacy'")
-        batch = (
-            base.filter(F.col("event_id") % 97 == 5)
-            .withColumn("event_id", F.col("event_id") + 1000000)
-            .withColumn("qscore", F.lit(None).cast("double"))
-        )
-        t.append(batch)
-        pre_ok = t.read(version=v_pre).columns == base.columns
-
-        out = t.read().filter(
-            (F.col("event_id") % 13 == 2) | (F.col("event_id") >= 1000000)
-        )
-        return (
-            out.orderBy("event_id")
-            .withColumns(
-                {
-                    "add_was_metadata_only": F.lit(bool(metadata_only)),
-                    "pre_add_schema_preserved": F.lit(bool(pre_ok)),
-                }
-            )
-            .localCheckpoint(eager=True)
-        )
     finally:
         shutil.rmtree(root, ignore_errors=True)

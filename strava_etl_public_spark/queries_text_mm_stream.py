@@ -399,7 +399,7 @@ FROM m
 @register_extra("x_mm_decode_quarantine", oracle=_decode_quarantine_oracle())
 def x_mm_decode_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decode-stage FAULT ISOLATION, oracle-exact end-to-end — the
-    media twin of the resilient JSONL ingest (x_source_jsonl_corrupt):
+    media twin of a resilient JSONL ingest:
     every 13th payload is planted torn (valid signature, truncated
     IHDR), the Arrow decode kernel quarantines exactly those rows
     with NULL stats and a fixed status constant (never exception
@@ -504,103 +504,6 @@ def x_stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
             "total_value",
         )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-
-
-@register_extra(
-    "x_stream_sliding_counts",
-    oracle="""
-WITH e AS (
-  SELECT event_type, value,
-         CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS es
-  FROM events
-),
-x AS (
-  SELECT event_type, value, (es - es % 900) - 900 * g.i AS ws
-  FROM e CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS i) g
-)
-SELECT strftime(make_timestamp(ws * 1000000), '%Y-%m-%dT%H:%M:%SZ') AS w_start,
-       strftime(make_timestamp((ws + 3600) * 1000000), '%Y-%m-%dT%H:%M:%SZ') AS w_end,
-       event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total_value
-FROM x GROUP BY ws, event_type
-""",
-)
-def x_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SLIDING-window streaming counts — 1-hour windows every 15
-    minutes — closing the §2.I tumbling/sliding/session triad (the
-    other two have driver rows). Each event lands in exactly 4
-    overlapping windows (duration/slide); Spark aligns window starts
-    to multiples of the slide, which the oracle replicates by
-    exploding each event onto its 4 bucket starts
-    ((es - es%900) - 900·i, i∈0..3 — every one satisfies
-    ws ≤ es < ws+3600 since es-ws ≤ 899+2700 < 3600). State grows 4×
-    vs tumbling but stays watermark-bounded."""
-    ensure_harness_conf(spark)
-    import shutil
-
-    from .streaming.ingest import EVENTS_SCHEMA, windowed_counts
-
-    stage = _stage_events_dir(spark, sf_dir)
-    try:
-        stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(stage)
-        agg = windowed_counts(
-            stream, window="1 hour", watermark="2 hours", slide="15 minutes"
-        )
-        out = _run_stream(spark, agg, "complete")
-        return out.select(
-            F.date_format("w_start", _ISO).alias("w_start"),
-            F.date_format("w_end", _ISO).alias("w_end"),
-            "event_type",
-            "n",
-            "total_value",
-        ).localCheckpoint()
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-
-
-@register_extra(
-    "x_stream_enrich_join",
-    oracle="""
-SELECT c.c_mktsegment AS mktsegment,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(SUM(CAST(e.value AS DECIMAL(38,6))) AS DOUBLE) AS total_value
-FROM events e JOIN customer c ON e.user_id = c.c_custkey
-GROUP BY c.c_mktsegment
-""",
-)
-def x_stream_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-static ENRICHMENT join — the standard streaming pattern
-    the window queries don't cover: each micro-batch of the event
-    stream joins a broadcast static dimension (no state, no watermark
-    needed for an inner stream-static join), then feeds a running
-    aggregation. At 100 TB the dim is broadcast once per batch and the
-    stream side never shuffles for the join; the only stateful op is
-    the downstream agg. Oracle = the equivalent batch join."""
-    ensure_harness_conf(spark)
-    import shutil
-
-    from .streaming.ingest import EVENTS_SCHEMA
-
-    stage = _stage_events_dir(spark, sf_dir)
-    try:
-        stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(stage)
-        dim = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-        joined = stream.join(
-            F.broadcast(dim), stream.user_id == dim.c_custkey
-        )
-        agg = joined.groupBy("c_mktsegment").agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum(F.col("value").cast("decimal(38,6)"))
-            .cast("double")
-            .alias("total_value"),
-        )
-        out = _run_stream(spark, agg, "complete")
-        return out.select(
-            F.col("c_mktsegment").alias("mktsegment"), "n", "total_value"
-        ).localCheckpoint()
     finally:
         shutil.rmtree(stage, ignore_errors=True)
 
@@ -770,8 +673,6 @@ def x_stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(stage, ignore_errors=True)
-
-
 
 
 @register_extra(
@@ -1281,9 +1182,8 @@ def x_pipeline_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register_extra("x_mm_phash_incremental")
 def x_mm_phash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL image-dedup maintenance — the multimodal face of
-    the round-8 maintenance theme (x_dedup_incremental for MinHash,
-    x_sim_ivf_incremental for ANN, x_fingerprint_incremental for
-    digests): when a new image batch lands (doc_id % 10 == 0 plays
+    the round-8 maintenance theme (x_dedup_incremental for MinHash):
+    when a new image batch lands (doc_id % 10 == 0 plays
     the batch), fold its pHash signatures into the corpus pair state
     at batch-proportional cost — prior verified pairs are reused
     verbatim, and only buckets a batch doc touches generate
@@ -1331,97 +1231,6 @@ def x_mm_jpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload = multimodal.attach_jpeg(docs, "doc_id", "text")
     out = multimodal.decode_jpeg(payload, "doc_id")
     return out.withColumn("mean_intensity", F.round("mean_intensity", 6))
-
-
-@register_extra(
-    "x_eval_kappa",
-    oracle=f"""
-WITH pred AS ({_lang_oracle()}),
-conf AS (
-  SELECT d.lang AS actual, p.lang_pred AS pred, CAST(count(*) AS BIGINT) AS n
-  FROM documents d JOIN pred p USING (doc_id)
-  GROUP BY d.lang, p.lang_pred
-),
-tot AS (SELECT CAST(sum(n) AS BIGINT) AS nn FROM conf),
-diag AS (SELECT CAST(coalesce(sum(n), 0) AS BIGINT) AS agree
-         FROM conf WHERE actual = pred),
-rm AS (SELECT actual AS lab, sum(n) AS r FROM conf GROUP BY actual),
-cm AS (SELECT pred AS lab, sum(n) AS c FROM conf GROUP BY pred),
-pe AS (
-  SELECT CAST(coalesce(sum(rm.r * cm.c), 0) AS BIGINT) AS pe_num
-  FROM rm JOIN cm USING (lab)
-)
-SELECT tot.nn AS n, diag.agree AS n_agree,
-       round(CAST(diag.agree AS DOUBLE) / tot.nn, 6) AS po,
-       round(CAST(pe.pe_num AS DOUBLE) / (tot.nn * tot.nn), 6) AS pe,
-       round(CAST(diag.agree * tot.nn - pe.pe_num AS DOUBLE)
-             / CAST(tot.nn * tot.nn - pe.pe_num AS DOUBLE), 6) AS kappa
-FROM tot, diag, pe
-""",
-)
-def x_eval_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohen's kappa between the heuristic language-ID prediction and
-    the fixture's labeled lang column — chance-corrected agreement,
-    the standard eval for classifier-vs-gold and annotator-vs-
-    annotator comparisons, computed IN-ENGINE from exact integer
-    sufficient statistics: kappa = (agree*N - sum(r_k*c_k)) /
-    (N^2 - sum(r_k*c_k)) stays ALL-INTEGER until one final division,
-    so the result is bit-portable without any per-term rounding
-    discipline. One confusion-matrix hash agg + two bounded marginal
-    aggs (model-state-sized: |labels|^2 cells)."""
-    ensure_harness_conf(spark)
-    from .operators.dedup import tokens as _tokens
-
-    docs = load(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", "lang", _tokens(F.col("text")).alias("_toks")
-    )
-    pred = toks.select(
-        "doc_id",
-        "lang",
-        text.lang_id("_toks", toks=F.col("_toks")).alias("lang_pred"),
-    )
-    conf = pred.groupBy(
-        F.col("lang").alias("actual"), F.col("lang_pred").alias("pred")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
-    from pyspark import StorageLevel
-
-    conf = conf.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        tot = conf.agg(F.sum("n").cast("long").alias("nn"))
-        diag = conf.filter(F.col("actual") == F.col("pred")).agg(
-            F.coalesce(F.sum("n"), F.lit(0)).cast("long").alias("agree")
-        )
-        rm = conf.groupBy(F.col("actual").alias("lab")).agg(
-            F.sum("n").alias("r")
-        )
-        cm = conf.groupBy(F.col("pred").alias("lab")).agg(F.sum("n").alias("c"))
-        pe = rm.join(cm, "lab").agg(
-            F.coalesce(F.sum(F.col("r") * F.col("c")), F.lit(0))
-            .cast("long")
-            .alias("pe_num")
-        )
-        out = (
-            tot.crossJoin(F.broadcast(diag))
-            .crossJoin(F.broadcast(pe))
-            .select(
-                F.col("nn").alias("n"),
-                F.col("agree").alias("n_agree"),
-                F.round(F.col("agree").cast("double") / F.col("nn"), 6).alias("po"),
-                F.round(
-                    F.col("pe_num").cast("double") / (F.col("nn") * F.col("nn")),
-                    6,
-                ).alias("pe"),
-                F.round(
-                    (F.col("agree") * F.col("nn") - F.col("pe_num")).cast("double")
-                    / (F.col("nn") * F.col("nn") - F.col("pe_num")).cast("double"),
-                    6,
-                ).alias("kappa"),
-            )
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        conf.unpersist()
 
 
 def _video_oracle() -> str:

@@ -1,5 +1,5 @@
-"""Time-series analytics queries: classical seasonal decomposition and
-autocorrelation over the daily event series.
+"""Time-series analytics query: autocorrelation over the daily event
+series.
 
 New module (round 9, third arc) — queries_ml_geo.py sits at the
 1,600-line per-file discipline boundary, so the time-series family
@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from .functions import epoch as ep
 from .io import load
-from .queries import register, register_extra
+from .queries import register
 from .session import ensure_harness_conf
 
 # shared daily quantized-mean series (the CUSUM query's `d` CTE shape):
@@ -54,107 +54,6 @@ def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("mq")
-    )
-
-
-@register_extra(
-    "x_ts_seasonal_decompose",
-    oracle=f"""
-WITH d AS ({_DAILY_SQL}),
-t AS (
-  SELECT event_type, day, mq,
-         CASE WHEN count(*) OVER w = 7
-              THEN sum(mq) OVER w END AS trend7
-  FROM d
-  WINDOW w AS (PARTITION BY event_type ORDER BY day
-               ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-),
-det AS (
-  SELECT event_type, day % 7 AS phase, 7 * mq - trend7 AS d7
-  FROM t WHERE trend7 IS NOT NULL
-),
-g AS (
-  SELECT event_type,
-         CAST(sum(d7) AS BIGINT) AS sum_all,
-         CAST(count(*) AS BIGINT) AS n_all
-  FROM det GROUP BY event_type
-),
-ph AS (
-  SELECT event_type, phase,
-         CAST(sum(d7) AS BIGINT) AS sum_p,
-         CAST(count(*) AS BIGINT) AS n_p
-  FROM det GROUP BY event_type, phase
-)
-SELECT ph.event_type, CAST(ph.phase AS BIGINT) AS phase, ph.n_p AS n_days,
-       round((CAST(ph.sum_p AS DOUBLE) / ph.n_p
-              - CAST(g.sum_all AS DOUBLE) / g.n_all) / 7000000.0, 6)
-         AS seasonal
-FROM ph JOIN g ON g.event_type = ph.event_type
-""",
-)
-def x_ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Classical additive seasonal decomposition (the moving-average
-    method every stats text opens with) of the per-type daily-mean
-    series at weekly period: trend = centered 7-day moving average
-    (full windows only — the standard endpoint mask), seasonal index
-    per calendar phase (epoch-day mod 7, so the phase is stable across
-    partitions and engines) = mean of the detrended series at that
-    phase, centered by the grand detrended mean. The decomposition a
-    monitoring pipeline runs before alerting on a metric: compare
-    x_cusum_changepoint (level shifts) and x_drift_psi (distribution
-    drift) — this separates the weekly rhythm those scores must not
-    fire on.
-
-    Exactness by clearing denominators: the detrended series is kept
-    as 7·x − Σwindow (pure BIGINT — no division inside the window),
-    and each reported seasonal index is (sum_p/n_p − sum_all/n_all)/7
-    in micro-units — three divisions on exact-integer operands, each
-    IEEE-deterministic, so the oracle matches bit-for-bit at 6dp.
-    Plan: one hash agg to the daily grain (map-side combined), one
-    7-row window per type over the TINY daily series, two hash aggs."""
-    ensure_harness_conf(spark)
-    d = _daily(spark, sf_dir)
-    w = (
-        W.partitionBy("event_type")
-        .orderBy("day")
-        .rowsBetween(-3, 3)
-    )
-    t = d.select(
-        "event_type",
-        "day",
-        "mq",
-        F.when(
-            F.count(F.lit(1)).over(w) == 7, F.sum("mq").over(w)
-        ).alias("trend7"),
-    )
-    det = t.filter(F.col("trend7").isNotNull()).select(
-        "event_type",
-        (F.col("day") % 7).alias("phase"),
-        (F.lit(7) * F.col("mq") - F.col("trend7")).alias("d7"),
-    )
-    g = det.groupBy("event_type").agg(
-        F.sum("d7").cast("long").alias("sum_all"),
-        F.count(F.lit(1)).cast("long").alias("n_all"),
-    )
-    ph = det.groupBy("event_type", "phase").agg(
-        F.sum("d7").cast("long").alias("sum_p"),
-        F.count(F.lit(1)).cast("long").alias("n_p"),
-    )
-    return (
-        ph.join(g, "event_type")
-        .select(
-            "event_type",
-            F.col("phase").cast("long").alias("phase"),
-            F.col("n_p").cast("long").alias("n_days"),
-            F.round(
-                (
-                    F.col("sum_p").cast("double") / F.col("n_p")
-                    - F.col("sum_all").cast("double") / F.col("n_all")
-                )
-                / F.lit(7000000.0),
-                6,
-            ).alias("seasonal"),
-        )
     )
 
 
@@ -191,7 +90,7 @@ FROM s
 def x_ts_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Autocorrelation of the per-type daily-mean series at lags
     {1, 2, 7} — the diagnostic that justifies (or refutes) the weekly
-    period x_ts_seasonal_decompose assumes, and the standard
+    period a seasonal decomposition assumes, and the standard
     pre-modeling check for any forecasting feature. Pearson r per
     (type, lag) over (x_t, x_{t-lag}) pairs.
 

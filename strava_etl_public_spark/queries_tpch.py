@@ -25,442 +25,6 @@ from .session import ensure_harness_conf  # noqa: F401
 from .queries import register, register_extra, streams  # noqa: F401
 
 
-
-@register_extra(
-    "q5_local_supplier_volume",
-    oracle="""
-SELECT n.n_name,
-       round(CAST(sum(CAST(round(l.l_extendedprice * (1 - l.l_discount), 6)
-                           AS DECIMAL(38,6))) AS DOUBLE), 6) AS revenue
-FROM customer c
-JOIN orders o ON o.o_custkey = c.c_custkey
-JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-JOIN supplier s ON s.s_suppkey = l.l_suppkey AND s.s_nationkey = c.c_nationkey
-JOIN nation n ON n.n_nationkey = s.s_nationkey
-JOIN region r ON r.r_regionkey = n.n_regionkey
-GROUP BY n.n_name
-""",
-)
-def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape (local supplier volume): the 6-table join —
-    customer⋈orders⋈lineitem⋈supplier⋈nation⋈region with the
-    same-nation correlation — per-nation revenue. Catalyst broadcasts
-    every dimension (region/nation/supplier/customer) so the only
-    shuffle is lineitem⋈orders on orderkey; revenue accumulates as
-    6dp-quantized DECIMAL(38,6) (order-free, engine-exact)."""
-    ensure_harness_conf(spark)
-    c = load(spark, sf_dir, "customer")
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    s = load(spark, sf_dir, "supplier")
-    n = load(spark, sf_dir, "nation")
-    r = load(spark, sf_dir, "region")
-    j = (
-        c.join(o, o["o_custkey"] == c["c_custkey"])
-        .join(li, li["l_orderkey"] == o["o_orderkey"])
-        .join(
-            s,
-            (s["s_suppkey"] == li["l_suppkey"])
-            & (s["s_nationkey"] == c["c_nationkey"]),
-        )
-        .join(n, n["n_nationkey"] == s["s_nationkey"])
-        .join(r, r["r_regionkey"] == n["n_regionkey"])
-    )
-    return j.groupBy("n_name").agg(
-        F.round(
-            F.sum(
-                F.round(
-                    F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount")), 6
-                ).cast("decimal(38,6)")
-            ).cast("double"),
-            6,
-        ).alias("revenue")
-    )
-
-
-@register_extra(
-    "q10_returned_items",
-    oracle="""
-SELECT c.c_custkey, c.c_name, n.n_name,
-       round(CAST(sum(CAST(round(l.l_extendedprice * (1 - l.l_discount), 6)
-                           AS DECIMAL(38,6))) AS DOUBLE), 6) AS revenue,
-       CAST(count(*) AS BIGINT) AS n_items
-FROM customer c
-JOIN orders o ON o.o_custkey = c.c_custkey
-JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-JOIN nation n ON n.n_nationkey = c.c_nationkey
-WHERE l.l_returnflag = 'R'
-GROUP BY c.c_custkey, c.c_name, n.n_name
-ORDER BY revenue DESC, c.c_custkey
-LIMIT 20
-""",
-)
-def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 shape (returned-item reporting): top-20 customers by
-    revenue lost to returns. The returnflag filter pushes into the
-    lineitem scan; nation/customer broadcast; the final top-20 plans
-    as TakeOrderedAndProject. Revenue exact via quantized decimal
-    sums; deterministic order ties on custkey."""
-    ensure_harness_conf(spark)
-    c = load(spark, sf_dir, "customer")
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    n = load(spark, sf_dir, "nation")
-    j = (
-        c.join(o, o["o_custkey"] == c["c_custkey"])
-        .join(li, li["l_orderkey"] == o["o_orderkey"])
-        .join(n, n["n_nationkey"] == c["c_nationkey"])
-    )
-    agg = j.groupBy("c_custkey", "c_name", "n_name").agg(
-        F.round(
-            F.sum(
-                F.round(
-                    F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount")), 6
-                ).cast("decimal(38,6)")
-            ).cast("double"),
-            6,
-        ).alias("revenue"),
-        F.count(F.lit(1)).cast("long").alias("n_items"),
-    )
-    return agg.orderBy(F.col("revenue").desc(), "c_custkey").limit(20)
-
-
-@register_extra(
-    "x_sql_tpch_q6",
-    oracle="""
-SELECT CAST(sum(CAST(round(l_extendedprice * l_discount * 10000, 0)
-                     AS HUGEINT)) AS BIGINT) AS revenue_e4,
-       CAST(count(*) AS BIGINT) AS n_items
-FROM lineitem
-WHERE l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24
-""",
-)
-def x_sql_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 (forecast revenue change) submitted as RAW SQL TEXT
-    through spark.sql() over a temp view — the one registry entry
-    that exercises the SQL parser/analyzer front door instead of the
-    DataFrame DSL (same Catalyst plan after analysis; the point is
-    that the engine's SQL surface is first-class for users who bring
-    SQL, not DataFrames). Revenue is summed in exact 1e4-quantized
-    integers (the merge_into cents convention); the date clause of
-    textbook Q6 is carried by the quantity/discount predicates
-    because raw SQL cannot dispatch on the fixture's dual physical
-    timestamp encodings (functions/epoch.py exists precisely for
-    that — documented trade, not an oversight)."""
-    ensure_harness_conf(spark)
-    li = load(spark, sf_dir, "lineitem")
-    view = f"lineitem_q6_{uuid.uuid4().hex[:8]}"
-    li.createOrReplaceTempView(view)
-    try:
-        return spark.sql(f"""
-            SELECT CAST(sum(CAST(round(l_extendedprice * l_discount * 10000, 0)
-                                 AS DECIMAL(38,0))) AS BIGINT) AS revenue_e4,
-                   CAST(count(*) AS BIGINT) AS n_items
-            FROM {view}
-            WHERE l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24
-        """).localCheckpoint(eager=True)
-    finally:
-        spark.catalog.dropTempView(view)
-
-
-@register_extra(
-    "x_tpch_q7_volume",
-    oracle="""
-SELECT supp_nation, cust_nation, CAST(l_year AS BIGINT) AS l_year,
-       CAST(SUM(CAST(rev AS DECIMAL(38,6))) AS DOUBLE) AS revenue
-FROM (
-  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-         year(l.l_shipdate) AS l_year,
-         l.l_extendedprice * (1 - l.l_discount) AS rev
-  FROM supplier s
-  JOIN lineitem l ON s.s_suppkey = l.l_suppkey
-  JOIN orders o ON o.o_orderkey = l.l_orderkey
-  JOIN customer c ON c.c_custkey = o.o_custkey
-  JOIN nation n1 ON s.s_nationkey = n1.n_nationkey
-  JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
-  WHERE (n1.n_name = 'NATION_18' AND n2.n_name = 'NATION_19')
-     OR (n1.n_name = 'NATION_19' AND n2.n_name = 'NATION_18')
-)
-GROUP BY supp_nation, cust_nation, l_year
-""",
-)
-def x_tpch_q7_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7-shaped volume shipping: the 6-way join with a
-    SYMMETRIC two-nation disjunction and a year rollup — the deepest
-    join tree in the relational suite. Both nation legs and supplier/
-    customer broadcast (bounded dims); lineitem⋈orders is the only
-    big-big join and shares the orderkey shuffle with Q3. Year comes
-    from the encoding-dispatch helper (l_shipdate flips physical
-    types between fixture generations); revenue is decimal-exact."""
-    ensure_harness_conf(spark)
-    n = load(spark, sf_dir, "nation")
-    s = load(spark, sf_dir, "supplier")
-    c = load(spark, sf_dir, "customer")
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    n1 = n.select(
-        F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation")
-    )
-    n2 = n.select(
-        F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("cust_nation")
-    )
-    j = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
-        .filter(
-            (
-                (F.col("supp_nation") == "NATION_18")
-                & (F.col("cust_nation") == "NATION_19")
-            )
-            | (
-                (F.col("supp_nation") == "NATION_19")
-                & (F.col("cust_nation") == "NATION_18")
-            )
-        )
-    )
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        j.withColumn("l_year", F.year(ep.as_timestamp(li, "l_shipdate")).cast("long"))
-        .groupBy("supp_nation", "cust_nation", "l_year")
-        .agg(F.sum(rev.cast("decimal(38,6)")).cast("double").alias("revenue"))
-    )
-
-
-@register_extra(
-    "x_tpch_q19_disjunctive",
-    oracle="""
-SELECT CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount)
-                     AS DECIMAL(38,6))) AS DOUBLE) AS revenue,
-       CAST(count(*) AS BIGINT) AS n_lines
-FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-WHERE (p.p_brand = 'Brand#11' AND p.p_size BETWEEN 1 AND 15
-       AND l.l_quantity >= 1 AND l.l_quantity <= 20)
-   OR (p.p_brand = 'Brand#13' AND p.p_size BETWEEN 10 AND 30
-       AND l.l_quantity >= 10 AND l.l_quantity <= 35)
-   OR (p.p_brand = 'Brand#16' AND p.p_size BETWEEN 20 AND 50
-       AND l.l_quantity >= 20 AND l.l_quantity <= 50)
-""",
-)
-def x_tpch_q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19-shaped disjunctive join predicate: three OR-branches
-    mixing join-side (brand/size) and probe-side (quantity)
-    conditions — the planner shape where a naive engine evaluates the
-    whole disjunction post-join while a good one pushes the
-    brand/size union down to the part scan and the quantity envelope
-    (1..50) down to lineitem. Part broadcasts; the residual
-    disjunction runs on the joined rows; revenue decimal-exact."""
-    ensure_harness_conf(spark)
-    li = load(spark, sf_dir, "lineitem")
-    p = load(spark, sf_dir, "part")
-    cond = (
-        (F.col("p_brand") == "Brand#11")
-        & F.col("p_size").between(1, 15)
-        & F.col("l_quantity").between(1, 20)
-    ) | (
-        (F.col("p_brand") == "Brand#13")
-        & F.col("p_size").between(10, 30)
-        & F.col("l_quantity").between(10, 35)
-    ) | (
-        (F.col("p_brand") == "Brand#16")
-        & F.col("p_size").between(20, 50)
-        & F.col("l_quantity").between(20, 50)
-    )
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .filter(cond)
-        .agg(
-            F.sum(rev.cast("decimal(38,6)")).cast("double").alias("revenue"),
-            F.count(F.lit(1)).cast("long").alias("n_lines"),
-        )
-    )
-
-
-@register_extra(
-    "x_tpch_q14_promo",
-    oracle="""
-WITH j AS (
-  SELECT p.p_type,
-         CAST(round(l.l_extendedprice * (1 - l.l_discount) * 10000, 0)
-              AS HUGEINT) AS rev_e4
-  FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-),
-s AS (
-  SELECT CAST(sum(CASE WHEN p_type = 'PROMO' THEN rev_e4 ELSE 0 END)
-              AS BIGINT) AS promo_e4,
-         CAST(sum(rev_e4) AS BIGINT) AS total_e4
-  FROM j
-)
-SELECT promo_e4, total_e4,
-       round(100.0 * CAST(promo_e4 AS DOUBLE) / CAST(total_e4 AS DOUBLE), 6)
-         AS promo_pct
-FROM s
-""",
-)
-def x_tpch_q14_promo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 (promotion effect): share of revenue from PROMO
-    parts — the lineitem⋈part join the Q5/Q10 rows don't touch, with
-    the ratio computed from exact 1e4-quantized integer revenues so
-    the percentage is bit-portable (one double division at the end).
-    The part side broadcasts (bounded dim); the scan-side CASE folds
-    the classification into the single aggregate — no second pass."""
-    ensure_harness_conf(spark)
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_partkey",
-        F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000, 0)
-        .cast("decimal(38,0)")
-        .alias("rev_e4"),
-    )
-    p = load(spark, sf_dir, "part").select("p_partkey", "p_type")
-    j = li.join(F.broadcast(p), li["l_partkey"] == p["p_partkey"])
-    s = j.agg(
-        F.sum(F.when(F.col("p_type") == "PROMO", F.col("rev_e4")).otherwise(0))
-        .cast("long")
-        .alias("promo_e4"),
-        F.sum("rev_e4").cast("long").alias("total_e4"),
-    )
-    return s.select(
-        "promo_e4",
-        "total_e4",
-        F.round(
-            F.lit(100.0) * F.col("promo_e4").cast("double")
-            / F.col("total_e4").cast("double"),
-            6,
-        ).alias("promo_pct"),
-    )
-
-
-@register_extra(
-    "x_tpch_q12_priority",
-    oracle="""
-SELECT l_returnflag,
-       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                     THEN 1 ELSE 0 END) AS BIGINT) AS high_priority_count,
-       CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                     THEN 1 ELSE 0 END) AS BIGINT) AS low_priority_count
-FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-WHERE l.l_shipdate >= o.o_orderdate
-GROUP BY l_returnflag
-""",
-)
-def x_tpch_q12_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12-shaped conditional-count join (shipping-mode audit
-    re-expressed on the fixture's columns): lineitem⋈orders on
-    orderkey with a cross-table date predicate, then per-flag
-    HIGH/LOW priority counts as CASE-sums — the classic
-    one-pass-two-metrics pattern that replaces two filtered joins
-    with one. The orderkey equi-join shares Q3/Q5/Q7's shuffle key;
-    the CASE-sums are map-side-combined BIGINTs."""
-    ensure_harness_conf(spark)
-    l = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_returnflag", "l_shipdate")
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate", "o_orderpriority")
-    # epoch dispatch on BOTH sides: the fixture's timestamp columns flip
-    # physical encodings between generations (see functions/epoch.py)
-    l = l.withColumn("_ship_s", ep.epoch_s(l, "l_shipdate")).drop("l_shipdate")
-    o = o.withColumn("_ord_s", ep.epoch_s(o, "o_orderdate")).drop("o_orderdate")
-    j = l.join(o, l.l_orderkey == o.o_orderkey).filter(
-        F.col("_ship_s") >= F.col("_ord_s")
-    )
-    hi = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return j.groupBy("l_returnflag").agg(
-        F.sum(F.when(hi, 1).otherwise(0)).cast("long").alias("high_priority_count"),
-        F.sum(F.when(~hi, 1).otherwise(0)).cast("long").alias("low_priority_count"),
-    )
-
-
-@register_extra(
-    "x_tpch_q18_large_orders",
-    oracle="""
-WITH big AS (
-  SELECT l_orderkey
-  FROM lineitem GROUP BY l_orderkey
-  HAVING sum(l_quantity) > 150
-)
-SELECT c.c_name, o.o_orderkey,
-       CAST(SUM(CAST(l.l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS total_qty,
-       CAST(count(*) AS BIGINT) AS n_lines
-FROM orders o
-JOIN big ON o.o_orderkey = big.l_orderkey
-JOIN customer c ON c.c_custkey = o.o_custkey
-JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-GROUP BY c.c_name, o.o_orderkey
-""",
-)
-def x_tpch_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18-shaped large-volume-order report: the HAVING-driven
-    semi-join (orders whose total line quantity exceeds a threshold)
-    feeding a customer join and a re-aggregation. The big-order key
-    set comes from ONE hash-agg over lineitem reused as a semi-join
-    filter — at scale the agg output is tiny (high threshold), so AQE
-    broadcasts it into both the orders and lineitem probes; the
-    orderkey shuffle is shared with Q3/Q7/Q12. Quantities sum in
-    DECIMAL (exact) with one cast at the edge."""
-    ensure_harness_conf(spark)
-    l = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    big = (
-        l.groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(38,6)")).alias("_tq"))
-        .filter(F.col("_tq") > 150)
-        .select(F.col("l_orderkey").alias("_big_key"))
-    )
-    j = (
-        o.join(big, o.o_orderkey == F.col("_big_key"))
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(l, o.o_orderkey == l.l_orderkey)
-    )
-    return j.groupBy("c_name", "o_orderkey").agg(
-        F.sum(F.col("l_quantity").cast("decimal(38,6)"))
-        .cast("double")
-        .alias("total_qty"),
-        F.count(F.lit(1)).cast("long").alias("n_lines"),
-    )
-
-
-@register_extra(
-    "x_tpch_q15_top_supplier",
-    oracle="""
-WITH rev AS (
-  SELECT l_suppkey,
-         SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))) AS r
-  FROM lineitem GROUP BY l_suppkey
-)
-SELECT s.s_suppkey, s.s_name,
-       CAST(rev.r AS DOUBLE) AS total_revenue
-FROM supplier s JOIN rev ON s.s_suppkey = rev.l_suppkey
-WHERE rev.r = (SELECT max(r) FROM rev)
-""",
-)
-def x_tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15-shaped top-supplier query: the equal-to-global-max
-    subquery over an aggregated view (ties INCLUDED — the shape that
-    row_number() = 1 gets wrong). The revenue agg is computed once and
-    self-joined against its own 1-row max via a broadcast; revenue in
-    DECIMAL so the max comparison is exact, not an FP near-tie."""
-    ensure_harness_conf(spark)
-    l = load(spark, sf_dir, "lineitem").select(
-        "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    rev = l.groupBy("l_suppkey").agg(
-        F.sum(
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                "decimal(38,6)"
-            )
-        ).alias("r")
-    )
-    mx = rev.agg(F.max("r").alias("mr"))
-    top = rev.join(F.broadcast(mx), rev.r == mx.mr).select("l_suppkey", "r")
-    return (
-        s.join(top, s.s_suppkey == top.l_suppkey)
-        .select("s_suppkey", "s_name", F.col("r").cast("double").alias("total_revenue"))
-    )
-
-
 @register_extra(
     "x_tpch_q4_order_priority",
     oracle="""
@@ -600,62 +164,6 @@ def x_tpch_q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_extra(
-    "x_tpch_q17_small_qty",
-    oracle="""
-WITH pa AS (
-  SELECT l_partkey,
-         SUM(CAST(l_quantity AS DECIMAL(38,6))) AS sq,
-         CAST(count(*) AS BIGINT) AS cnt
-  FROM lineitem GROUP BY l_partkey
-)
-SELECT CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) / 7.0
-         AS avg_yearly,
-       CAST(count(*) AS BIGINT) AS n_lines
-FROM lineitem l
-JOIN part p ON p.p_partkey = l.l_partkey AND p.p_brand = 'Brand#13'
-JOIN pa ON pa.l_partkey = l.l_partkey
-WHERE CAST(l.l_quantity AS DECIMAL(38,6)) * 2 * pa.cnt < pa.sq
-""",
-)
-def x_tpch_q17_small_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17-shaped small-quantity revenue: the correlated scalar
-    aggregate (l_quantity < 0.5 * per-part average) decorrelated into
-    one per-part aggregate joined back to the fact — the rewrite every
-    modern planner performs, made explicit. The threshold compare is
-    exact integer/DECIMAL arithmetic (qty*2*cnt < sum) instead of a
-    floating 0.5*avg, so the boundary can never drift between engines
-    or partial-agg orders. Per-part stats are tiny relative to
-    lineitem; at 100 TB the agg output still fans back in on the same
-    partkey shuffle key the join uses, so AQE coalesces the two."""
-    ensure_harness_conf(spark)
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_quantity", "l_extendedprice"
-    )
-    pa = li.groupBy("l_partkey").agg(
-        F.sum(F.col("l_quantity").cast("decimal(38,6)")).alias("sq"),
-        F.count(F.lit(1)).cast("long").alias("cnt"),
-    )
-    p = (
-        load(spark, sf_dir, "part")
-        .filter(F.col("p_brand") == "Brand#13")
-        .select("p_partkey")
-    )
-    j = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(pa.withColumnRenamed("l_partkey", "_pk"), F.col("l_partkey") == F.col("_pk"))
-        .filter(
-            F.col("l_quantity").cast("decimal(38,6)") * 2 * F.col("cnt")
-            < F.col("sq")
-        )
-    )
-    return j.agg(
-        (F.sum(F.col("l_extendedprice").cast("decimal(38,6)")).cast("double") / 7.0)
-        .alias("avg_yearly"),
-        F.count(F.lit(1)).cast("long").alias("n_lines"),
-    )
-
-
 @register(
     "x_tpch_q21_waiting_supplier",
     oracle="""
@@ -792,317 +300,4 @@ def x_tpch_q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("totacctbal"),
         )
-    )
-
-
-@register_extra(
-    "x_tpch_q2_min_cost_supplier",
-    oracle="""
-WITH rs AS (
-  SELECT s.s_suppkey, s.s_name, s.s_acctbal, n.n_name
-  FROM supplier s
-  JOIN nation n ON n.n_nationkey = s.s_nationkey
-  JOIN region r ON r.r_regionkey = n.n_regionkey
-  WHERE r.r_name IN ('ASIA', 'EUROPE')
-),
-cost AS (
-  SELECT l.l_partkey, l.l_suppkey, min(l.l_extendedprice) AS best
-  FROM lineitem l JOIN rs ON rs.s_suppkey = l.l_suppkey
-  GROUP BY 1, 2
-),
-pm AS (SELECT l_partkey, min(best) AS mn FROM cost GROUP BY 1)
-SELECT pt.p_partkey, pt.p_type, rs.s_name, rs.s_acctbal, rs.n_name,
-       c.best AS min_price
-FROM cost c
-JOIN pm ON pm.l_partkey = c.l_partkey AND c.best = pm.mn
-JOIN part pt ON pt.p_partkey = c.l_partkey
-JOIN rs ON rs.s_suppkey = c.l_suppkey
-WHERE pt.p_size <= 10
-""",
-)
-def x_tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2-shaped minimum-cost supplier: the correlated
-    equal-to-groupwise-MIN subquery (cheapest offer per part among
-    suppliers of a region, TIES INCLUDED) over a region→nation→
-    supplier snowflake. Decorrelated the planner's way: one per-(part,
-    supplier) aggregate, a per-part min over it, and an equality join
-    back — dims broadcast, and the min comparison is on the raw double
-    (same value both engines, no arithmetic). The region filter
-    prunes the supplier side BEFORE any lineitem work, the order the
-    correlated form obscures but a 100 TB plan needs."""
-    ensure_harness_conf(spark)
-    s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_acctbal", "s_nationkey")
-    n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    r = (
-        load(spark, sf_dir, "region")
-        .filter(F.col("r_name").isin("ASIA", "EUROPE"))
-        .select("r_regionkey")
-    )
-    rs = (
-        s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == F.col("r_regionkey"))
-        .select("s_suppkey", "s_name", "s_acctbal", "n_name")
-    )
-    li = load(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey", "l_extendedprice")
-    cost = (
-        li.join(F.broadcast(rs.select("s_suppkey")), li.l_suppkey == F.col("s_suppkey"))
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(F.min("l_extendedprice").alias("best"))
-    )
-    pm = cost.groupBy(F.col("l_partkey").alias("_pk")).agg(F.min("best").alias("mn"))
-    pt = (
-        load(spark, sf_dir, "part")
-        .filter(F.col("p_size") <= 10)
-        .select("p_partkey", "p_type")
-    )
-    return (
-        cost.join(pm, (cost.l_partkey == F.col("_pk")) & (cost.best == F.col("mn")))
-        .join(F.broadcast(pt), cost.l_partkey == pt.p_partkey)
-        .join(F.broadcast(rs), cost.l_suppkey == rs.s_suppkey)
-        .select(
-            "p_partkey", "p_type", "s_name", "s_acctbal", "n_name",
-            F.col("best").alias("min_price"),
-        )
-    )
-
-
-@register_extra(
-    "x_tpch_q11_important_parts",
-    oracle="""
-WITH v AS (
-  SELECT l_partkey,
-         SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))) AS val
-  FROM lineitem l
-  JOIN supplier s ON s.s_suppkey = l.l_suppkey
-  WHERE s.s_nationkey % 3 = 0
-  GROUP BY l_partkey
-),
-t AS (SELECT SUM(val) AS tot, CAST(count(*) AS BIGINT) AS n FROM v)
-SELECT v.l_partkey, CAST(v.val AS DOUBLE) AS part_value
-FROM v, t
-WHERE v.val * t.n * 10 > t.tot * 12
-""",
-)
-def x_tpch_q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q11-shaped important-stock report: groups whose aggregate
-    exceeds a scalar aggregate over the SAME relation (here 1.2× the
-    mean part value, a scale-free threshold; textbook Q11's fixed
-    fraction of the total breaks the moment row counts change). The
-    HAVING compare is exact cross-multiplied DECIMAL
-    (val·n·10 > tot·12) — no division, no FP boundary; the global
-    (tot, n) is a 1-row broadcast against the already-aggregated
-    per-part table, so the second pass is free at any scale."""
-    ensure_harness_conf(spark)
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    s = (
-        load(spark, sf_dir, "supplier")
-        .filter(F.col("s_nationkey") % 3 == 0)
-        .select("s_suppkey")
-    )
-    v = (
-        li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .groupBy("l_partkey")
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(38,6)"
-                )
-            ).alias("val")
-        )
-    )
-    t = v.agg(
-        F.sum("val").alias("tot"), F.count(F.lit(1)).cast("long").alias("n")
-    )
-    return (
-        v.crossJoin(F.broadcast(t))
-        .filter(F.col("val") * F.col("n") * 10 > F.col("tot") * 12)
-        .select("l_partkey", F.col("val").cast("double").alias("part_value"))
-    )
-
-
-@register_extra(
-    "x_tpch_q20_part_promotion",
-    oracle="""
-WITH wp AS (SELECT p_partkey FROM part WHERE p_name LIKE '%widget%'),
-hv AS (
-  SELECT l_suppkey
-  FROM lineitem l JOIN wp ON wp.p_partkey = l.l_partkey
-  GROUP BY l_suppkey, l_partkey
-  HAVING sum(l_quantity) > 100
-)
-SELECT s.s_suppkey, s.s_name, n.n_name
-FROM supplier s
-JOIN nation n ON n.n_nationkey = s.s_nationkey
-WHERE s.s_suppkey IN (SELECT l_suppkey FROM hv)
-""",
-)
-def x_tpch_q20_part_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q20-shaped promotion-candidate suppliers: the NESTED
-    IN-subquery chain — suppliers IN (heavy shippers of parts IN
-    (name-filtered part set)). Planned as two stacked semi joins: the
-    part name filter broadcasts into lineitem, a (suppkey, partkey)
-    aggregate applies the HAVING volume threshold, and the surviving
-    supplier keys semi-join the supplier dim (IN = LEFT SEMI, so a
-    supplier qualifying via many parts still emits once). Each layer
-    shrinks the next layer's input — the nesting ORDER is the plan."""
-    ensure_harness_conf(spark)
-    wp = (
-        load(spark, sf_dir, "part")
-        .filter(F.col("p_name").like("%widget%"))
-        .select("p_partkey")
-    )
-    li = load(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey", "l_quantity")
-    hv = (
-        li.join(F.broadcast(wp), li.l_partkey == wp.p_partkey)
-        .groupBy("l_suppkey", "l_partkey")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(38,6)")).alias("_q"))
-        .filter(F.col("_q") > 100)
-        .select("l_suppkey")
-    )
-    s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_nationkey")
-    n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    return (
-        s.join(hv, s.s_suppkey == hv.l_suppkey, "left_semi")
-        .join(F.broadcast(n), F.col("s_nationkey") == n.n_nationkey)
-        .select("s_suppkey", "s_name", "n_name")
-    )
-
-
-@register_extra(
-    "x_tpch_q8_market_share",
-    oracle="""
-WITH mkt AS (
-  SELECT CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(38,6)) AS val,
-         year(make_timestamp((epoch_ns(o.o_orderdate) // 1000000000) * 1000000))
-           AS yr,
-         sn.n_name AS supp_nation
-  FROM lineitem l
-  JOIN orders o ON o.o_orderkey = l.l_orderkey
-  JOIN customer c ON c.c_custkey = o.o_custkey
-  JOIN nation cn ON cn.n_nationkey = c.c_nationkey
-  JOIN region r ON r.r_regionkey = cn.n_regionkey AND r.r_name = 'ASIA'
-  JOIN supplier s ON s.s_suppkey = l.l_suppkey
-  JOIN nation sn ON sn.n_nationkey = s.s_nationkey
-)
-SELECT yr,
-       CAST(SUM(CASE WHEN supp_nation = 'NATION_3' THEN val
-                     ELSE CAST(0 AS DECIMAL(38,6)) END) AS DOUBLE)
-         / CAST(SUM(val) AS DOUBLE) AS mkt_share,
-       CAST(count(*) AS BIGINT) AS n_lines
-FROM mkt WHERE yr IN (1996, 1997) GROUP BY yr
-""",
-)
-def x_tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8-shaped national market share: the CASE-numerator /
-    total-denominator ratio per group over a 6-table snowflake (two
-    ROLES of the nation dim — customer side filters the market region,
-    supplier side labels the numerator — joined twice under different
-    aliases). Both sums accumulate in DECIMAL and the share is ONE
-    double division of two exact sums at the edge, so partial-agg
-    order can't move the ratio. The only big join is
-    lineitem⋈orders on the shared orderkey shuffle; every dim
-    broadcasts."""
-    ensure_harness_conf(spark)
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
-    o = o.withColumn(
-        "yr", F.year(F.timestamp_seconds(ep.epoch_s(o, "o_orderdate")))
-    ).drop("o_orderdate")
-    o = o.filter(F.col("yr").isin(1996, 1997))
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    r = (
-        load(spark, sf_dir, "region")
-        .filter(F.col("r_name") == "ASIA")
-        .select("r_regionkey")
-    )
-    asia_cust = (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == F.col("r_regionkey"))
-        .select("c_custkey")
-    )
-    s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    supp_nation = s.join(
-        F.broadcast(n.select(F.col("n_nationkey").alias("_snk"), F.col("n_name").alias("supp_nation"))),
-        s.s_nationkey == F.col("_snk"),
-    ).select("s_suppkey", "supp_nation")
-    val = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(38,6)")
-    mkt = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(asia_cust), o.o_custkey == F.col("c_custkey"))
-        .join(F.broadcast(supp_nation), li.l_suppkey == F.col("s_suppkey"))
-        .select("yr", "supp_nation", val.alias("val"))
-    )
-    zero = F.lit(0).cast("decimal(38,6)")
-    return mkt.groupBy("yr").agg(
-        (
-            F.sum(F.when(F.col("supp_nation") == "NATION_3", F.col("val")).otherwise(zero)).cast("double")
-            / F.sum("val").cast("double")
-        ).alias("mkt_share"),
-        F.count(F.lit(1)).cast("long").alias("n_lines"),
-    )
-
-
-@register_extra(
-    "x_tpch_q9_nation_profit",
-    oracle="""
-SELECT sn.n_name AS nation,
-       year(make_timestamp((epoch_ns(o.o_orderdate) // 1000000000) * 1000000))
-         AS yr,
-       CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount)
-                     - pt.p_retailprice * 0.5 * l.l_quantity
-                     AS DECIMAL(38,6))) AS DOUBLE) AS profit,
-       CAST(count(*) AS BIGINT) AS n_lines
-FROM lineitem l
-JOIN part pt ON pt.p_partkey = l.l_partkey AND pt.p_name LIKE '%bolt%'
-JOIN orders o ON o.o_orderkey = l.l_orderkey
-JOIN supplier s ON s.s_suppkey = l.l_suppkey
-JOIN nation sn ON sn.n_nationkey = s.s_nationkey
-GROUP BY nation, yr
-""",
-)
-def x_tpch_q9_nation_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9-shaped product-line profit by (supplier nation, order
-    year): a LIKE-filtered part dim broadcast into lineitem FIRST (the
-    most selective edge prunes the fact before the orderkey shuffle),
-    then orders for the year and supplier→nation for the label.
-    Profit per line (revenue − cost, cost standing on p_retailprice
-    since the fixture has no partsupp) is computed in one DECIMAL
-    expression per row and summed exactly — the multi-term arithmetic
-    never rides double partial sums."""
-    ensure_harness_conf(spark)
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey",
-        "l_extendedprice", "l_discount", "l_quantity",
-    )
-    pt = (
-        load(spark, sf_dir, "part")
-        .filter(F.col("p_name").like("%bolt%"))
-        .select("p_partkey", "p_retailprice")
-    )
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    o = o.withColumn(
-        "yr", F.year(F.timestamp_seconds(ep.epoch_s(o, "o_orderdate")))
-    ).drop("o_orderdate")
-    s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = load(spark, sf_dir, "nation").select("n_nationkey", F.col("n_name").alias("nation"))
-    sn = s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey).select(
-        "s_suppkey", "nation"
-    )
-    profit = (
-        F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        - F.col("p_retailprice") * 0.5 * F.col("l_quantity")
-    ).cast("decimal(38,6)")
-    j = (
-        li.join(F.broadcast(pt), li.l_partkey == pt.p_partkey)
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(sn), li.l_suppkey == F.col("s_suppkey"))
-    )
-    return j.groupBy("nation", "yr").agg(
-        F.sum(profit).cast("double").alias("profit"),
-        F.count(F.lit(1)).cast("long").alias("n_lines"),
     )

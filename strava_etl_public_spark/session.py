@@ -24,9 +24,20 @@ from pyspark.sql import SparkSession
 #: −16% at 32 cores there). At 100 TB data/advisory ≥ 10⁶ partitions
 #: and the policy is irrelevant; on mid-size clusters set
 #: SPARK_GRAFT_AQE_PARALLELISM_FIRST=true.
-AQE_PARALLELISM_FIRST = os.environ.get(
-    "SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"
-)
+AQE_PARALLELISM_FIRST_ENV = "SPARK_GRAFT_AQE_PARALLELISM_FIRST"
+
+
+def aqe_parallelism_first() -> str:
+    """The AQE policy knob, read when a session is built or pinned (not
+    at import, so a later setting takes effect), as ``"true"`` or
+    ``"false"``; any other spelling raises instead of reaching Spark."""
+    raw = os.environ.get(AQE_PARALLELISM_FIRST_ENV, "false")
+    value = raw.strip().lower()
+    if value not in ("true", "false"):
+        raise ValueError(
+            f"{AQE_PARALLELISM_FIRST_ENV} must be true or false, got {raw!r}"
+        )
+    return value
 
 
 def get_spark(
@@ -57,7 +68,7 @@ def get_spark(
         # shuffles don't collapse to one core before data >> cores×64m.
         .config(
             "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            AQE_PARALLELISM_FIRST,
+            aqe_parallelism_first(),
         )
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
         # let AQE re-partition reads of cached plans (persisted
@@ -94,7 +105,7 @@ def ensure_harness_conf(spark: SparkSession) -> SparkSession:
     # byte-sized AQE reducers + cached-plan repartitioning (see get_spark)
     spark.conf.set(
         "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        AQE_PARALLELISM_FIRST,
+        aqe_parallelism_first(),
     )
     spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
     spark.conf.set(

@@ -59,3 +59,37 @@ def test_deltas_match_hand_computation():
     assert out["min_delta_pct"] == {"q1": -50.0, "q2": -20.0}
     assert out["paired_detail"]["q1"]["base_s"] == TIMES["base"]["q1"]
     assert out["paired_detail"]["q1"]["head_s"] == TIMES["head"]["q1"]
+
+
+def test_block_delta_cancels_the_second_slot():
+    # identical code on both sides; whichever leg runs second in a
+    # pair is 25% faster (warm codegen / page cache)
+    calls: list[str] = []
+
+    def registry(side: str) -> dict:
+        def fn() -> float:
+            second = len(calls) % 2 == 1
+            calls.append(side)
+            return 0.75 if second else 1.0
+
+        return {"q": fn}
+
+    out = bench.paired_ab(registry("base"), registry("head"), ["q"], 4, lambda fn: fn())
+    assert out["paired_detail"]["q"]["delta_pct_pairs"] == [-25.0, 33.3, -25.0, 33.3]
+    assert out["paired_delta_pct"]["q"] != 0.0  # the per-pair median reads the slot
+    assert out["block_delta_pct"]["q"] == 0.0
+    assert out["block_ci90_pct"]["q"] == [0.0, 0.0]
+
+
+def test_block_delta_hand_computation_and_odd_pairs():
+    # q1 log-ratios per pair: ln(1/2), ln(5/4), ln(3/2), ln(4/5)
+    # blocks: ½(ln .5 + ln 1.25) → −20.9%, ½(ln 1.5 + ln .8) → +9.5%
+    _, out = _run()
+    # median of two blocks = their mean log-ratio → −6.9%
+    assert out["block_delta_pct"]["q1"] == -6.9
+    lo, hi = out["block_ci90_pct"]["q1"]
+    assert lo == -20.9 and hi == 9.5
+    # an odd pair count drops the last pair from the blocks
+    _, out3 = _run(pairs=3)
+    assert out3["block_delta_pct"]["q1"] == -20.9
+    assert out3["block_ci90_pct"]["q1"] == [-20.9, -20.9]

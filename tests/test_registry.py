@@ -64,6 +64,44 @@ def test_extra_registry_consistent():
     assert not set(EXTRA_QUERIES) & set(QUERIES)
 
 
+def _census_script():
+    import importlib.util
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parent.parent / "scripts" / "census_extras.py"
+    spec = importlib.util.spec_from_file_location("census_extras", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_every_extra_has_a_reason():
+    """Every registered extra has a keep reason (scripts/census_extras.py):
+    (a) SURVEY_COVERAGE, (b) bench.HEADLINE or perfbench/, (c) tests/ —
+    recomputed here from source — or (d) a library function only it
+    reaches, as recorded in EXTRAS_CENSUS.json."""
+    import importlib
+    import json
+
+    from strava_etl_public_spark.queries import EXTRA_QUERIES
+
+    census = _census_script()
+    entries = json.loads(census.OUT.read_text())["extras"]
+    kept = {n for n, v in entries.items() if v != "deleted"}
+    assert kept == set(EXTRA_QUERIES)
+    static = census.static_reasons(EXTRA_QUERIES)
+    for name in EXTRA_QUERIES:
+        if static[name]:
+            continue
+        entry = entries[name]
+        assert entry["reasons"] == ["d"] and entry["only_reaches"], name
+        for fid in entry["only_reaches"]:
+            module, qualname = fid.split(":")
+            obj = importlib.import_module(module)
+            for part in qualname.split("."):
+                obj = getattr(obj, part)
+
+
 def test_entry_runs(spark):
     df = E.entry(spark)
     assert df.count() > 0
