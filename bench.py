@@ -528,6 +528,46 @@ def _duckdb_anchor(names: list, errors: dict) -> dict:
     return out
 
 
+#: Secondary extras timed after the headline window, each fault-
+#: isolated (JVM-fold ANN twins, curation operators and others whose
+#: spread a round wants on record). Every name must be registered:
+#: ``main`` raises on one that is not, so a renamed or deleted extra
+#: cannot silently drop its row.
+SECONDARY_EXTRAS = (
+    "x_sim_topk_lsh",
+    "x_sim_topk_ivf",
+    "x_text_bigram_lm",
+    "x_range_join_sessions",
+    "x_embed_quantize_int8",
+    # sixth-to-eighth batch curation operators (the heavy graph row
+    # — x_graph_triangles 50 s at sf0.1 — is measured once in
+    # SCALE.md, not re-paid per round)
+    "x_shard_manifest",
+    "x_sketch_kmv",
+    "x_sketch_quantile_hist",
+    "x_embed_covariance",
+    "x_text_boilerplate",
+    "x_mm_audio_stats",
+    "x_geo_radius_join",
+    # fifteenth-sixteenth batch (r7)
+    "x_sim_knn_join",
+    "x_curation_dsir",
+    "x_mm_gif_frames",
+    # seventeenth batch (late r7) — x_mm_jpeg_stats (51 s at
+    # sf0.1: pure-Python DCT decode of 5000 real JPEGs) follows
+    # the heavy-row convention: measured once in SCALE.md, not
+    # re-paid per round
+    "x_text_cdc_chunks",
+    "x_feature_trailing_window",
+    "x_pipeline_curation",
+    "x_text_span_removal",
+    "x_sketch_heavy_hitters",
+    "x_text_hybrid_retrieval",
+    "x_text_dup_extents",
+    "x_interval_islands",
+)
+
+
 def main() -> int:
     import __spark_entry__ as E
     from strava_etl_public_spark.session import get_spark
@@ -538,6 +578,9 @@ def main() -> int:
     qs = dict(_EXTRAS)
     qs.update(E.queries())  # driver-exported queries win name clashes
     names = [n for n in HEADLINE if n in qs]
+    unregistered = [n for n in SECONDARY_EXTRAS if n not in qs]
+    if unregistered:  # before any timing, not after the headline window
+        raise KeyError(f"SECONDARY_EXTRAS not registered: {unregistered}")
     errors: dict[str, str] = {}
 
     # JVM/codegen warm-up on the smallest fixture (not timed): every
@@ -588,42 +631,8 @@ def main() -> int:
     extras: dict[str, float] = {}
     extras_spread: dict[str, dict] = {}
 
-    for n in (
-        "x_sim_topk_lsh",
-        "x_sim_topk_ivf",
-        "x_text_bigram_lm",
-        "x_range_join_sessions",
-        "x_embed_quantize_int8",
-        # sixth-to-eighth batch curation operators (the heavy graph row
-        # — x_graph_triangles 50 s at sf0.1 — is measured once in
-        # SCALE.md, not re-paid per round)
-        "x_shard_manifest",
-        "x_sketch_kmv",
-        "x_sketch_quantile_hist",
-        "x_embed_covariance",
-        "x_text_boilerplate",
-        "x_mm_audio_stats",
-        "x_geo_radius_join",
-        # fifteenth-sixteenth batch (r7)
-        "x_sim_knn_join",
-        "x_curation_dsir",
-        "x_mm_gif_frames",
-        # seventeenth batch (late r7) — x_mm_jpeg_stats (51 s at
-        # sf0.1: pure-Python DCT decode of 5000 real JPEGs) follows
-        # the heavy-row convention: measured once in SCALE.md, not
-        # re-paid per round
-        "x_text_cdc_chunks",
-        "x_feature_trailing_window",
-        "x_pipeline_curation",
-        "x_text_span_removal",
-        "x_sketch_heavy_hitters",
-        "x_text_hybrid_retrieval",
-        "x_text_dup_extents",
-        "x_interval_islands",
-    ):
-        fn = qs.get(n)  # merged extras+driver registry (built above)
-        if fn is None:
-            continue
+    for n in SECONDARY_EXTRAS:
+        fn = qs[n]  # merged extras+driver registry (checked above)
         try:
             _noop(fn(spark, WARMUP_DIR))
             spark.catalog.clearCache()

@@ -432,20 +432,34 @@ def dataset_fingerprint(
     rendering of a non-null value of a cast-stable type).
     """
     use = list(cols) if cols is not None else list(df.columns)
-    parts = [
-        F.coalesce(F.col(c).cast("string"), F.lit("\x1e")) for c in use
-    ]
-    from .sketch import _hash60
-
-    h = _hash60(F.concat_ws("\x1f", *parts))
-    agg = df.select(h.alias("_h")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.expr("bit_xor(_h)").cast("long").alias("xor_hash"),
-        (F.sum(F.col("_h").cast("decimal(38,0)")) % F.lit(1152921504606846976))
-        .cast("long")
-        .alias("sum_hash_mod"),
+    agg = df.select(row_hash(use).alias("_h")).agg(
+        *fingerprint_metrics(F.col("_h"))
     )
     return agg.select(F.lit(label).alias("dataset"), "*")
+
+
+def row_hash(cols: Sequence[str]) -> Column:
+    """The 60-bit md5 row hash :func:`dataset_fingerprint` digests."""
+    from .sketch import _hash60
+
+    parts = [
+        F.coalesce(F.col(c).cast("string"), F.lit("\x1e")) for c in cols
+    ]
+    return _hash60(F.concat_ws("\x1f", *parts))
+
+
+def fingerprint_metrics(h: Column) -> list[Column]:
+    """The digest's three aggregates over the row hash ``h``: row
+    count, bit-XOR and decimal sum mod 2^60. Shared by
+    :func:`dataset_fingerprint` and by writes that observe their
+    digest while they run (``DataFrame.observe``)."""
+    return [
+        F.count(F.lit(1)).cast("long").alias("n_rows"),
+        F.bit_xor(h).cast("long").alias("xor_hash"),
+        (F.sum(h.cast("decimal(38,0)")) % F.lit(1152921504606846976))
+        .cast("long")
+        .alias("sum_hash_mod"),
+    ]
 
 
 # ---------------------------------------------------------------------------

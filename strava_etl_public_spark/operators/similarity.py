@@ -1190,8 +1190,9 @@ def pq_encode(
     argmin over n_cent entries per subspace), so encoding a batch
     costs the batch, never the corpus, and codes of disjoint vector
     sets compose by plain UNION (the faiss add-after-train contract;
-    x_sim_pq_incremental pins merged == full re-encode). ``emb`` must
-    already be L2-normalized (:func:`_l2_normalize`)."""
+    test_pq_incremental_encode_equals_full_reencode pins merged ==
+    full re-encode). ``emb`` must already be L2-normalized
+    (:func:`_l2_normalize`)."""
     sl = _pq_slices(emb, id_col, vec_col, n_sub, dim // n_sub)
     return _pq_assign(sl, cb, id_col).select(
         F.col(id_col).alias("n_id"), "sub_id", "cent_id"

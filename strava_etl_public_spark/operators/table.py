@@ -37,18 +37,23 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
-from typing import Sequence
+import shutil
+import uuid
+from typing import Callable, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .layout import (
     CommitConflict,
     compact_parquet,
     dataset_fingerprint,
+    fingerprint_metrics,
     resolve_entry,
+    row_hash,
     snapshot_commit,
     snapshot_commit_ref,
     snapshot_read,
@@ -69,6 +74,51 @@ from .table_schema import _SchemaMixin
 #: EXISTING bytes mean (a dead-file-unaware reader resurrects
 #: compaction victims; a widen-unaware reader serves narrow types).
 SUPPORTED_FEATURES = {"dead-files", "type-widening"}
+
+_MOD = 1152921504606846976  # 2^60: the digest's modular-sum base
+_DIGEST = ("n_rows", "xor_hash", "sum_hash_mod")
+
+
+def _fold_digest(
+    parent: dict, plus: dict | None = None, minus: dict | None = None
+) -> dict:
+    """``parent`` + ``plus`` − ``minus`` on commit digests. Count,
+    bit-XOR and sum mod 2^60 are group operations, so a reference
+    commit's digest derives exactly from its parent record and the
+    digests of the rows it adds and removes. NULL xor/sum (aggregates
+    over zero rows) are the group identity 0."""
+    z = dict.fromkeys(_DIGEST, 0)
+    plus, minus = plus or z, minus or z
+    return {
+        "n_rows": parent["n_rows"] + plus["n_rows"] - minus["n_rows"],
+        "xor_hash": (parent["xor_hash"] or 0)
+        ^ (plus["xor_hash"] or 0)
+        ^ (minus["xor_hash"] or 0),
+        "sum_hash_mod": (
+            (parent["sum_hash_mod"] or 0)
+            + (plus["sum_hash_mod"] or 0)
+            - (minus["sum_hash_mod"] or 0)
+        )
+        % _MOD,
+    }
+
+
+def _observed(obs: Observation) -> dict:
+    """The metrics a write observed (one seam, so a test can feed a
+    wrong count and drive the footer cross-check)."""
+    return obs.get
+
+
+def _footer_rows(d: str) -> int:
+    """Rows in the parquet files of ``d``, summed from their footers —
+    metadata only, no data page is read."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.read_metadata(os.path.join(d, f)).num_rows
+        for f in os.listdir(d)
+        if f.startswith("part-")
+    )
 
 
 class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
@@ -409,6 +459,63 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
                     "table unchanged"
                 )
 
+    @contextlib.contextmanager
+    def _written_once(
+        self,
+        batch: DataFrame,
+        to_phys: Callable[[DataFrame], DataFrame],
+        vmap,
+    ):
+        """Write ``to_phys(batch)`` ONCE into a private ``_stage_`` dir
+        and yield ``(dir, digest)``: the digest of ``batch``'s logical
+        rows, observed on the write itself (``DataFrame.observe``), so
+        the batch plan runs once per commit. Each commit attempt links
+        the dir's files into its staging (:meth:`_link_files`), so a
+        conflict retry rebases metadata only. The dir is removed on
+        exit; a crash leaves it to the staging vacuum.
+
+        CHECK constraints ride the same observation as violation
+        counts: a violation raises here, before any commit record, so
+        the table is unchanged; only then are sample rows read, from
+        the written files. Observed metrics ride on accumulators, and a
+        re-run stage can count a partition twice, so the observed count
+        is checked against the written files' parquet footers (metadata
+        only); on a mismatch the written files are fingerprinted
+        instead — one scan of the output, never a second run of the
+        batch plan."""
+        out = os.path.join(self.path, f"_stage_{uuid.uuid4().hex[:12]}")
+        try:
+            checks = list(self.constraints.items())
+            obs = Observation()
+            observed = batch.observe(
+                obs,
+                *fingerprint_metrics(row_hash(batch.columns)),
+                *[
+                    F.count_if(~F.coalesce(F.expr(sql), F.lit(True))).alias(
+                        f"_chk{i}"
+                    )
+                    for i, (_, sql) in enumerate(checks)
+                ],
+            )
+            to_phys(observed).write.mode("overwrite").parquet(out)
+            got = _observed(obs)
+
+            def written() -> DataFrame:
+                return self._to_logical(self.spark.read.parquet(out), vmap)
+
+            bad = {n: s for i, (n, s) in enumerate(checks) if got[f"_chk{i}"]}
+            if bad:
+                self._check_rows(written(), bad)
+                raise ValueError(
+                    f"CHECK constraint(s) {sorted(bad)} violated — commit "
+                    "refused, table unchanged"
+                )
+            if got["n_rows"] != _footer_rows(out):
+                got = dataset_fingerprint(written()).collect()[0].asDict()
+            yield out, {k: got[k] for k in _DIGEST}
+        finally:
+            shutil.rmtree(out, ignore_errors=True)
+
     # -- writes (each publishes a new immutable version) -------------------
 
     def merge(
@@ -509,27 +616,13 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
                 .unionByName(hits)
             )
 
-            # derive the new digest from the parent commit record;
-            # NULL xor/sum (empty parent or no-op delete — count
-            # aggregates over zero rows) are the group identity 0
-            with open(
-                os.path.join(self.path, "_commits", f"{v}.json")
-            ) as f:
-                parent = json.load(f)
+            # the new digest derives from the parent commit record
             dd = (
                 dataset_fingerprint(hit_rows.select(*cols))
                 .collect()[0]
                 .asDict()
             )
-            mod = 1152921504606846976
-            digest = {
-                "n_rows": parent["n_rows"] - dd["n_rows"],
-                "xor_hash": (parent["xor_hash"] or 0) ^ (dd["xor_hash"] or 0),
-                "sum_hash_mod": (
-                    (parent["sum_hash_mod"] or 0) - (dd["sum_hash_mod"] or 0)
-                )
-                % mod,
-            }
+            digest = _fold_digest(self._record(v), minus=dd)
 
             wfiles = self._wfiles_of(hit_rows)
             attempts = 0
@@ -605,20 +698,7 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
                         if dv_dir is not None
                         else hits
                     )
-                    with open(
-                        os.path.join(self.path, "_commits", f"{v}.json")
-                    ) as f:
-                        cur_rec = json.load(f)
-                    digest = {
-                        "n_rows": cur_rec["n_rows"] - dd["n_rows"],
-                        "xor_hash": (cur_rec["xor_hash"] or 0)
-                        ^ (dd["xor_hash"] or 0),
-                        "sum_hash_mod": (
-                            (cur_rec["sum_hash_mod"] or 0)
-                            - (dd["sum_hash_mod"] or 0)
-                        )
-                        % mod,
-                    }
+                    digest = _fold_digest(self._record(v), minus=dd)
         finally:
             hit_rows.unpersist()
 
@@ -718,7 +798,9 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
         constraints are probed on the REWRITTEN rows only — cost ∝
         batch, and an update cannot create a violation anywhere else.
         The commit digest is DERIVED: parent − old images + new images
-        (count/xor/mod-sum are group ops). Chained deletes/updates
+        (count/xor/mod-sum are group ops), the new images' digest and
+        the CHECK counts observed on their one write
+        (:meth:`_written_once`). Chained deletes/updates
         inherit the append list, so resolution stays one hop; OPTIMIZE
         materializes survivors and folds the appends away. Returns the
         new version number."""
@@ -726,8 +808,7 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
         data_dir, dv_dir, appends = self._resolve(v)
         vmap = self._version_map(v)
         base = self._open_data(v, data_dir, *appends)
-        phys_cols = base.columns
-        cols = [l for l, _ in vmap] if vmap else phys_cols
+        cols = [l for l, _ in vmap] if vmap else base.columns
         unknown = [c for c in set_exprs if c not in cols]
         if unknown:
             raise ValueError(f"update sets unknown columns: {unknown}")
@@ -762,138 +843,102 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
                     for c in cols
                 ]
             )
-            if self.constraints:
-                self._check_rows(new_rows, self.constraints)
-            # the _upd files join the base files' universe, so they
-            # carry the FULL PHYSICAL schema: mapped columns inverse-
-            # renamed, dropped physical columns NULL-backfilled (dead
-            # values — no live map can surface them, and time travel
-            # to pre-drop versions never includes post-drop appends)
-            if vmap:
-                log_of = {p: l for l, p in vmap}
-                upd_out = new_rows.select(
-                    *[
-                        F.col(log_of[pc]).alias(pc)
-                        if pc in log_of
-                        else F.lit(None)
-                        .cast(base.schema[pc].dataType)
-                        .alias(pc)
-                        for pc in phys_cols
-                    ]
+            # the rewritten images' digest and CHECK counts are observed
+            # on their one write; the old images' digest is derived from
+            # the cached hits
+            with self._written_once(
+                new_rows, lambda d: self._upd_out(d, vmap, base), vmap
+            ) as (upd, new_d):
+                hits = self._relativize_dv(hit_rows.select("_file", "_pos"))
+                old_d = (
+                    dataset_fingerprint(hit_rows.select(*cols))
+                    .collect()[0]
+                    .asDict()
                 )
-            else:
-                upd_out = new_rows
-            hits = self._relativize_dv(hit_rows.select("_file", "_pos"))
-            new_dv = (
-                hits
-                if dv_dir is None
-                else self.spark.read.parquet(dv_dir)
-                .select("_file", "_pos")
-                .unionByName(hits)
-            )
-
-            with open(
-                os.path.join(self.path, "_commits", f"{v}.json")
-            ) as f:
-                parent = json.load(f)
-            old_d = (
-                dataset_fingerprint(hit_rows.select(*cols))
-                .collect()[0]
-                .asDict()
-            )
-            new_d = dataset_fingerprint(new_rows).collect()[0].asDict()
-            mod = 1152921504606846976
-            digest = {
-                "n_rows": parent["n_rows"],
-                "xor_hash": (parent["xor_hash"] or 0)
-                ^ (old_d["xor_hash"] or 0)
-                ^ (new_d["xor_hash"] or 0),
-                "sum_hash_mod": (
-                    (parent["sum_hash_mod"] or 0)
-                    - (old_d["sum_hash_mod"] or 0)
-                    + (new_d["sum_hash_mod"] or 0)
-                )
-                % mod,
-            }
-
-            wfiles = self._wfiles_of(hit_rows)
-            attempts = 0
-            while True:
-                ref = self._base_ref(data_dir)
-                ref["appends"] = self._rebase_appends(v) + ["self"]
-                if self._dead_of(v):
-                    ref["dead"] = self._dead_of(v)
-
-                def populate(vdir: str, new_dv=new_dv, ref=ref, v=v) -> None:
-                    upd_out.write.mode("overwrite").parquet(
-                        os.path.join(vdir, "_upd")
-                    )
-                    new_dv.write.mode("overwrite").parquet(
-                        os.path.join(vdir, "_dv")
-                    )
-                    with open(os.path.join(vdir, "_dv.json"), "w") as f:
-                        json.dump(ref, f)
-                    self._inherit_sidecars(
-                        self._vdir(v), vdir
-                    )
-
-                extra = {"parent": v, "op": "dv_update"}
-                if wfiles is not None:
-                    extra["wfiles"] = wfiles
-                if vmap:
-                    extra["columns"] = vmap
-                if self._version_added(v):
-                    extra["added"] = self._version_added(v)
-                if self._version_widened(v):
-                    extra["widened"] = self._version_widened(v)
-                try:
-                    return snapshot_commit_ref(
-                        self.path, populate, digest=digest, extra=extra,
-                        expected_max=m,
-                    )
-                except CommitConflict:
-                    # an UPDATE absorbs interleaved dv_deletes on
-                    # disjoint files the same way a delete does (its
-                    # own hit positions and images stay valid); any
-                    # other interleave — including another update,
-                    # whose rewritten images this op's predicate never
-                    # scanned — conflicts (Delta's added-file rule).
-                    # expected_max = the pinned rebased head, not
-                    # snapshot_max_commit (advice r11 — see dv_delete)
-                    attempts += 1
-                    v_new = self.version()
-                    if attempts > 5 or not self._interleaved_commute_dv(
-                        m, wfiles, head=v_new
-                    ):
-                        raise
-                    m = v_new
-                    v = v_new
-                    data_dir, dv_dir, _ = self._resolve(v)
+                wfiles = self._wfiles_of(hit_rows)
+                attempts = 0
+                while True:
                     new_dv = (
-                        self.spark.read.parquet(dv_dir)
+                        hits
+                        if dv_dir is None
+                        else self.spark.read.parquet(dv_dir)
                         .select("_file", "_pos")
                         .unionByName(hits)
-                        if dv_dir is not None
-                        else hits
                     )
-                    with open(
-                        os.path.join(self.path, "_commits", f"{v}.json")
-                    ) as f:
-                        cur_rec = json.load(f)
-                    digest = {
-                        "n_rows": cur_rec["n_rows"],
-                        "xor_hash": (cur_rec["xor_hash"] or 0)
-                        ^ (old_d["xor_hash"] or 0)
-                        ^ (new_d["xor_hash"] or 0),
-                        "sum_hash_mod": (
-                            (cur_rec["sum_hash_mod"] or 0)
-                            - (old_d["sum_hash_mod"] or 0)
-                            + (new_d["sum_hash_mod"] or 0)
+                    digest = _fold_digest(
+                        self._record(v), plus=new_d, minus=old_d
+                    )
+                    ref = self._base_ref(data_dir)
+                    ref["appends"] = self._rebase_appends(v) + ["self"]
+                    if self._dead_of(v):
+                        ref["dead"] = self._dead_of(v)
+
+                    def populate(
+                        vdir: str, new_dv=new_dv, ref=ref, v=v
+                    ) -> None:
+                        self._link_files(upd, os.path.join(vdir, "_upd"))
+                        new_dv.write.mode("overwrite").parquet(
+                            os.path.join(vdir, "_dv")
                         )
-                        % mod,
-                    }
+                        with open(os.path.join(vdir, "_dv.json"), "w") as f:
+                            json.dump(ref, f)
+                        self._inherit_sidecars(self._vdir(v), vdir)
+
+                    extra = {"parent": v, "op": "dv_update"}
+                    if wfiles is not None:
+                        extra["wfiles"] = wfiles
+                    if vmap:
+                        extra["columns"] = vmap
+                    if self._version_added(v):
+                        extra["added"] = self._version_added(v)
+                    if self._version_widened(v):
+                        extra["widened"] = self._version_widened(v)
+                    try:
+                        return snapshot_commit_ref(
+                            self.path, populate, digest=digest, extra=extra,
+                            expected_max=m,
+                        )
+                    except CommitConflict:
+                        # an UPDATE absorbs interleaved dv_deletes on
+                        # disjoint files the same way a delete does (its
+                        # own hit positions and images stay valid); any
+                        # other interleave — including another update,
+                        # whose rewritten images this op's predicate
+                        # never scanned — conflicts (Delta's added-file
+                        # rule). expected_max = the pinned rebased head,
+                        # not snapshot_max_commit (advice r11 — see
+                        # dv_delete)
+                        attempts += 1
+                        v_new = self.version()
+                        if attempts > 5 or not self._interleaved_commute_dv(
+                            m, wfiles, head=v_new
+                        ):
+                            raise
+                        m = v_new
+                        v = v_new
+                        data_dir, dv_dir, _ = self._resolve(v)
         finally:
             hit_rows.unpersist()
+
+    @staticmethod
+    def _upd_out(df: DataFrame, vmap, base: DataFrame) -> DataFrame:
+        """Logical rows → the full PHYSICAL schema of ``base``'s files,
+        the shape an ``_upd`` dir needs: its files join the base files'
+        universe, so mapped columns inverse-rename and dropped physical
+        columns NULL-backfill (dead values — no live map can surface
+        them, and time travel to pre-drop versions never includes
+        post-drop appends)."""
+        if not vmap:
+            return df
+        log_of = {p: l for l, p in vmap}
+        return df.select(
+            *[
+                F.col(log_of[pc]).alias(pc)
+                if pc in log_of
+                else F.lit(None).cast(base.schema[pc].dataType).alias(pc)
+                for pc in base.columns
+            ]
+        )
 
     # -- conflict classification (Delta's logical-conflict rules) -----------
 
@@ -977,15 +1022,23 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
         version is parent ∪ batch — the batch lands in the version's
         own ``_upd`` dir, the parent's DV and appends carry through,
         and not one existing byte is rewritten (cost O(batch); this is
-        how a 100 TB table ingests a 1 GB batch). The commit digest is
-        DERIVED (parent record + batch digest — group-op addition).
+        how a 100 TB table ingests a 1 GB batch). The batch plan runs
+        ONCE: its digest and the CHECK constraint counts are observed
+        on the parquet write itself (:meth:`_written_once`, with a
+        footer cross-check against double counting), and the parent's
+        DV is carried as a file copy, with no Spark job. The commit
+        digest is DERIVED (parent record + the observed batch digest —
+        group-op addition), so it describes exactly the rows the
+        commit wrote, even for a batch with a non-deterministic column
+        such as ``current_timestamp()``.
 
         Appends COMMUTE with any interleaved PUBLISHED commit that
         keeps the column map (another append, a DV delete/update, a
         merge, an OPTIMIZE): the batch's rows are new, so a conflict
         only changes which version the append chains from. The rebase
-        re-reads the head's reference and re-derives the digest —
-        no retry of user logic, no second batch write. A column-map
+        re-links the once-written files, re-reads the head's reference
+        and re-derives the digest — no retry of user logic, no second
+        batch write. A column-map
         change in the interleave still conflicts (the batch was shaped
         against the old logical schema). Returns the new version.
 
@@ -996,17 +1049,13 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
         (streaming.ingest.table_append_sink_jvm, r13) is a replay
         guard plus this call."""
         v, m = resolve_entry(self.path)
-        if self.constraints:
-            self._check_rows(df, self.constraints)
         vmap = self._version_map(v)
-        if vmap:
-            logical_cols = [l for l, _ in vmap]
-        else:
-            # through _open_data over the FULL universe: after a
-            # reclaim_dead vacuum the base dir alone can be empty —
-            # the live schema then lives in the _upd dirs
-            bdir, _, bapp = self._resolve(v)
-            logical_cols = self._open_data(v, bdir, *bapp).columns
+        # the live schema through _open_data over the FULL universe:
+        # after a reclaim_dead vacuum the base dir alone can be empty —
+        # the live schema then lives in the _upd dirs
+        rdir, _, rapp = self._resolve(v)
+        eff = self._to_logical(self._open_data(v, rdir, *rapp), vmap).schema
+        logical_cols = eff.names
         batch = self._apply_write_defaults(df).select(*logical_cols)
         # conform the batch to the table's EFFECTIVE types (SQL INSERT
         # casts to the column type — update()'s r9 rule): without
@@ -1017,88 +1066,62 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
         # schema is widened-aware, so this also lands batches WIDE
         # after a widen_column (digest renders like later reads);
         # ANSI mode makes a truly-overflowing cast fail loudly.
-        rdir, _, rapp = self._resolve(v)
-        eff = self._to_logical(
-            self._open_data(v, rdir, *rapp), vmap
-        ).schema
         for c in logical_cols:
             if batch.schema[c].dataType != eff[c].dataType:
                 batch = batch.withColumn(c, F.col(c).cast(eff[c].dataType))
         widened = self._version_widened(v)
-        bd = dataset_fingerprint(batch).collect()[0].asDict()
-        phys_batch = self._to_physical(batch, vmap)
-        mod = 1152921504606846976
-        attempts = 0
-        while True:
-            data_dir, dv_dir, _ = self._resolve(v)
-            if dv_dir is not None:
-                seed_dv = self.spark.read.parquet(dv_dir).select(
-                    "_file", "_pos"
-                )
-            else:
-                seed_dv = self.spark.createDataFrame(
-                    [], "_file string, _pos long"
-                )
-            ref = self._base_ref(data_dir)
-            ref["appends"] = self._rebase_appends(v) + ["self"]
-            if self._dead_of(v):
-                ref["dead"] = self._dead_of(v)
-            with open(
-                os.path.join(self.path, "_commits", f"{v}.json")
-            ) as f:
-                parent = json.load(f)
-            digest = {
-                "n_rows": parent["n_rows"] + bd["n_rows"],
-                "xor_hash": (parent["xor_hash"] or 0) ^ (bd["xor_hash"] or 0),
-                "sum_hash_mod": (
-                    (parent["sum_hash_mod"] or 0) + (bd["sum_hash_mod"] or 0)
-                )
-                % mod,
-            }
-            extra: dict = {"parent": v, "op": "append", "wfiles": []}
-            if txn is not None:
-                extra["txn"] = int(txn)
-                if txn_id is not None:
-                    extra["txn_id"] = str(txn_id)
-            if vmap:
-                extra["columns"] = vmap
-            if self._version_added(v):
-                extra["added"] = self._version_added(v)
-            if self._version_widened(v):
-                extra["widened"] = self._version_widened(v)
+        with self._written_once(
+            batch, lambda d: self._to_physical(d, vmap), vmap
+        ) as (upd, bd):
+            attempts = 0
+            while True:
+                data_dir, dv_dir, _ = self._resolve(v)
+                ref = self._base_ref(data_dir)
+                ref["appends"] = self._rebase_appends(v) + ["self"]
+                if self._dead_of(v):
+                    ref["dead"] = self._dead_of(v)
+                digest = _fold_digest(self._record(v), plus=bd)
+                extra: dict = {"parent": v, "op": "append", "wfiles": []}
+                if txn is not None:
+                    extra["txn"] = int(txn)
+                    if txn_id is not None:
+                        extra["txn_id"] = str(txn_id)
+                if vmap:
+                    extra["columns"] = vmap
+                if self._version_added(v):
+                    extra["added"] = self._version_added(v)
+                if self._version_widened(v):
+                    extra["widened"] = self._version_widened(v)
 
-            def populate(vdir: str) -> None:
-                phys_batch.write.mode("overwrite").parquet(
-                    os.path.join(vdir, "_upd")
-                )
-                seed_dv.write.mode("overwrite").parquet(
-                    os.path.join(vdir, "_dv")
-                )
-                with open(os.path.join(vdir, "_dv.json"), "w") as f:
-                    json.dump(ref, f)
-                self._inherit_sidecars(self._vdir(v), vdir)
+                def populate(vdir: str, dv_dir=dv_dir, ref=ref, v=v) -> None:
+                    self._link_files(upd, os.path.join(vdir, "_upd"))
+                    self._carry_dv(dv_dir, vdir)
+                    with open(os.path.join(vdir, "_dv.json"), "w") as f:
+                        json.dump(ref, f)
+                    self._inherit_sidecars(self._vdir(v), vdir)
 
-            try:
-                return snapshot_commit_ref(
-                    self.path, populate, digest=digest, extra=extra,
-                    expected_max=m,
-                )
-            except CommitConflict:
-                attempts += 1
-                # the rebased head is pinned ONCE and becomes BOTH the
-                # classification bound and the retry's expected_max —
-                # snapshot_max_commit would let an in-flight commit
-                # (record landed, flip pending) pass the check while
-                # the rebase chains past it: lost update (advice r11)
-                new_v = self.version()
-                walked = self._walk_range(new_v, m)
-                new_map = self._version_map(new_v)
-                same_map = (new_map or None) == (vmap or None) and (
-                    self._version_widened(new_v) or None
-                ) == (widened or None)
-                if walked is None or not same_map or attempts > 5:
-                    raise
-                m, v = new_v, new_v
+                try:
+                    return snapshot_commit_ref(
+                        self.path, populate, digest=digest, extra=extra,
+                        expected_max=m,
+                    )
+                except CommitConflict:
+                    attempts += 1
+                    # the rebased head is pinned ONCE and becomes BOTH
+                    # the classification bound and the retry's
+                    # expected_max — snapshot_max_commit would let an
+                    # in-flight commit (record landed, flip pending)
+                    # pass the check while the rebase chains past it:
+                    # lost update (advice r11)
+                    new_v = self.version()
+                    walked = self._walk_range(new_v, m)
+                    new_map = self._version_map(new_v)
+                    same_map = (new_map or None) == (vmap or None) and (
+                        self._version_widened(new_v) or None
+                    ) == (widened or None)
+                    if walked is None or not same_map or attempts > 5:
+                        raise
+                    m, v = new_v, new_v
 
     def restore(self, version: int) -> int:
         """RESTORE VERSION AS OF — publish a NEW version whose logical
@@ -1114,11 +1137,7 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
         retract bad BATCHES, restore to retract bad DATA. Returns the
         new version number."""
         cur, m = resolve_entry(self.path)
-        data_dir, dv_dir, appends = self._resolve(version)
-        if dv_dir is not None:
-            seed_dv = self.spark.read.parquet(dv_dir).select("_file", "_pos")
-        else:
-            seed_dv = self.spark.createDataFrame([], "_file string, _pos long")
+        data_dir, dv_dir, _ = self._resolve(version)
         ref = self._base_ref(data_dir)
         old_appends = self._rebase_appends(version)
         if old_appends:
@@ -1127,7 +1146,7 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
             ref["dead"] = self._dead_of(version)
 
         def populate(vdir: str) -> None:
-            seed_dv.write.mode("overwrite").parquet(os.path.join(vdir, "_dv"))
+            self._carry_dv(dv_dir, vdir)
             with open(os.path.join(vdir, "_dv.json"), "w") as f:
                 json.dump(ref, f)
             self._inherit_sidecars(
@@ -1172,8 +1191,10 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
         other row through (NULL partitions never match — SQL equality
         — so NULL-part rows pass through and NULL-part batch rows
         append, as before). The digest is DERIVED: parent −
-        overwritten rows + batch (group ops). CHECK constraints probe
-        the batch only — removing rows cannot create a violation.
+        overwritten rows + batch (group ops), the batch's digest and
+        CHECK counts observed on its one write (:meth:`_written_once`).
+        CHECK constraints probe the batch only — removing rows cannot
+        create a violation.
         Conflicts: absorbs interleaved dv_deletes on DISJOINT files
         (hit positions stay valid — UPDATE's rule); everything else
         conflicts and transact() rebases semantically. OPTIMIZE later
@@ -1182,8 +1203,7 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
         data_dir, dv_dir, appends = self._resolve(v)
         vmap = self._version_map(v)
         base = self._open_data(v, data_dir, *appends)
-        phys_cols = base.columns
-        cols = [l for l, _ in vmap] if vmap else phys_cols
+        cols = [l for l, _ in vmap] if vmap else base.columns
         batch = self._apply_write_defaults(df).select(*cols)
         # conform to the table's effective types (append's rule — a
         # mismatched batch type would land _upd files that break
@@ -1192,8 +1212,6 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
             want = base.schema[self._to_phys_name(c, vmap)].dataType
             if batch.schema[c].dataType != want:
                 batch = batch.withColumn(c, F.col(c).cast(want))
-        if self.constraints:
-            self._check_rows(batch, self.constraints)
         parts = batch.select(part_col).distinct()
         tagged = self._tagged(base)
         live = (
@@ -1207,129 +1225,71 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
             )
         hit_rows = live.join(F.broadcast(parts), part_col, "semi").persist()
         try:
-            # the _upd files join the base files' universe: full
-            # PHYSICAL schema, dropped physicals NULL-backfilled
-            # (update()'s argument)
-            if vmap:
-                log_of = {p: l for l, p in vmap}
-                upd_out = batch.select(
-                    *[
-                        F.col(log_of[pc]).alias(pc)
-                        if pc in log_of
-                        else F.lit(None)
-                        .cast(base.schema[pc].dataType)
-                        .alias(pc)
-                        for pc in phys_cols
-                    ]
+            with self._written_once(
+                batch, lambda d: self._upd_out(d, vmap, base), vmap
+            ) as (upd, bd):
+                hits = self._relativize_dv(hit_rows.select("_file", "_pos"))
+                old_d = (
+                    dataset_fingerprint(hit_rows.select(*cols))
+                    .collect()[0]
+                    .asDict()
                 )
-            else:
-                upd_out = batch
-            hits = self._relativize_dv(hit_rows.select("_file", "_pos"))
-            new_dv = (
-                hits
-                if dv_dir is None
-                else self.spark.read.parquet(dv_dir)
-                .select("_file", "_pos")
-                .unionByName(hits)
-            )
-            with open(
-                os.path.join(self.path, "_commits", f"{v}.json")
-            ) as f:
-                parent = json.load(f)
-            old_d = (
-                dataset_fingerprint(hit_rows.select(*cols))
-                .collect()[0]
-                .asDict()
-            )
-            bd = dataset_fingerprint(batch).collect()[0].asDict()
-            mod = 1152921504606846976
-            digest = {
-                "n_rows": parent["n_rows"] - old_d["n_rows"] + bd["n_rows"],
-                "xor_hash": (parent["xor_hash"] or 0)
-                ^ (old_d["xor_hash"] or 0)
-                ^ (bd["xor_hash"] or 0),
-                "sum_hash_mod": (
-                    (parent["sum_hash_mod"] or 0)
-                    - (old_d["sum_hash_mod"] or 0)
-                    + (bd["sum_hash_mod"] or 0)
-                )
-                % mod,
-            }
-            wfiles = self._wfiles_of(hit_rows)
-            attempts = 0
-            while True:
-                ref = self._base_ref(data_dir)
-                ref["appends"] = self._rebase_appends(v) + ["self"]
-                if self._dead_of(v):
-                    ref["dead"] = self._dead_of(v)
-
-                def populate(vdir: str, new_dv=new_dv, ref=ref, v=v) -> None:
-                    upd_out.write.mode("overwrite").parquet(
-                        os.path.join(vdir, "_upd")
-                    )
-                    new_dv.write.mode("overwrite").parquet(
-                        os.path.join(vdir, "_dv")
-                    )
-                    with open(os.path.join(vdir, "_dv.json"), "w") as f:
-                        json.dump(ref, f)
-                    self._inherit_sidecars(
-                        self._vdir(v), vdir
-                    )
-
-                extra = {"parent": v, "op": "dv_overwrite"}
-                if wfiles is not None:
-                    extra["wfiles"] = wfiles
-                if vmap:
-                    extra["columns"] = vmap
-                if self._version_added(v):
-                    extra["added"] = self._version_added(v)
-                if self._version_widened(v):
-                    extra["widened"] = self._version_widened(v)
-                try:
-                    return snapshot_commit_ref(
-                        self.path, populate, digest=digest, extra=extra,
-                        expected_max=m,
-                    )
-                except CommitConflict:
-                    attempts += 1
-                    # allow_appends=False: an append into a partition
-                    # being replaced must CONFLICT (it would survive
-                    # the replacement) — Delta's overwrite rule.
-                    # expected_max = the pinned rebased head, not
-                    # snapshot_max_commit (advice r11 — see dv_delete)
-                    v_new = self.version()
-                    if attempts > 5 or not self._interleaved_commute_dv(
-                        m, wfiles, allow_appends=False, head=v_new
-                    ):
-                        raise
-                    m = v_new
-                    v = v_new
-                    data_dir, dv_dir, _ = self._resolve(v)
+                wfiles = self._wfiles_of(hit_rows)
+                attempts = 0
+                while True:
                     new_dv = (
-                        self.spark.read.parquet(dv_dir)
+                        hits
+                        if dv_dir is None
+                        else self.spark.read.parquet(dv_dir)
                         .select("_file", "_pos")
                         .unionByName(hits)
-                        if dv_dir is not None
-                        else hits
                     )
-                    with open(
-                        os.path.join(self.path, "_commits", f"{v}.json")
-                    ) as f:
-                        cur_rec = json.load(f)
-                    digest = {
-                        "n_rows": cur_rec["n_rows"]
-                        - old_d["n_rows"]
-                        + bd["n_rows"],
-                        "xor_hash": (cur_rec["xor_hash"] or 0)
-                        ^ (old_d["xor_hash"] or 0)
-                        ^ (bd["xor_hash"] or 0),
-                        "sum_hash_mod": (
-                            (cur_rec["sum_hash_mod"] or 0)
-                            - (old_d["sum_hash_mod"] or 0)
-                            + (bd["sum_hash_mod"] or 0)
+                    digest = _fold_digest(self._record(v), plus=bd, minus=old_d)
+                    ref = self._base_ref(data_dir)
+                    ref["appends"] = self._rebase_appends(v) + ["self"]
+                    if self._dead_of(v):
+                        ref["dead"] = self._dead_of(v)
+
+                    def populate(
+                        vdir: str, new_dv=new_dv, ref=ref, v=v
+                    ) -> None:
+                        self._link_files(upd, os.path.join(vdir, "_upd"))
+                        new_dv.write.mode("overwrite").parquet(
+                            os.path.join(vdir, "_dv")
                         )
-                        % mod,
-                    }
+                        with open(os.path.join(vdir, "_dv.json"), "w") as f:
+                            json.dump(ref, f)
+                        self._inherit_sidecars(self._vdir(v), vdir)
+
+                    extra = {"parent": v, "op": "dv_overwrite"}
+                    if wfiles is not None:
+                        extra["wfiles"] = wfiles
+                    if vmap:
+                        extra["columns"] = vmap
+                    if self._version_added(v):
+                        extra["added"] = self._version_added(v)
+                    if self._version_widened(v):
+                        extra["widened"] = self._version_widened(v)
+                    try:
+                        return snapshot_commit_ref(
+                            self.path, populate, digest=digest, extra=extra,
+                            expected_max=m,
+                        )
+                    except CommitConflict:
+                        attempts += 1
+                        # allow_appends=False: an append into a partition
+                        # being replaced must CONFLICT (it would survive
+                        # the replacement) — Delta's overwrite rule.
+                        # expected_max = the pinned rebased head, not
+                        # snapshot_max_commit (advice r11 — see dv_delete)
+                        v_new = self.version()
+                        if attempts > 5 or not self._interleaved_commute_dv(
+                            m, wfiles, allow_appends=False, head=v_new
+                        ):
+                            raise
+                        m = v_new
+                        v = v_new
+                        data_dir, dv_dir, _ = self._resolve(v)
         finally:
             hit_rows.unpersist()
 

@@ -379,21 +379,9 @@ class _CompactMixin:
                     residual.write.mode("overwrite").parquet(
                         os.path.join(vdir, "_dv")
                     )
-                    upd = os.path.join(vdir, "_upd")
-                    os.makedirs(upd)
-                    for fn in os.listdir(scratch):
-                        # LINK, not move: a conflicting attempt's
-                        # staging is wiped — the rewritten survivors
-                        # must outlive it for the absorb retry.
-                        # Hard links make that free on one filesystem
-                        # (the table IS one directory tree); copy2 is
-                        # the cross-device fallback.
-                        src = os.path.join(scratch, fn)
-                        dst = os.path.join(upd, fn)
-                        try:
-                            os.link(src, dst)
-                        except OSError:
-                            shutil.copy2(src, dst)
+                    # linked, not moved: the survivors must outlive a
+                    # conflicting attempt's wiped staging
+                    self._link_files(scratch, os.path.join(vdir, "_upd"))
                     with open(os.path.join(vdir, "_dv.json"), "w") as f:
                         json.dump(ref, f)
                     # inherited sidecars stay conservative-correct:

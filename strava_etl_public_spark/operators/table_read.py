@@ -86,6 +86,11 @@ class _TableReadMixin:
 
     # -- column mapping (rename / drop without rewrite) ----------------------
 
+    def _record(self, v: int) -> dict:
+        """Version ``v``'s commit record."""
+        with open(os.path.join(self.path, "_commits", f"{v}.json")) as f:
+            return json.load(f)
+
     def _version_map(self, v: int) -> list[list[str]] | None:
         """The [logical, physical] column map RECORDED with version
         ``v`` (None = identity, the pre-mapping default). Versioned in
@@ -480,6 +485,51 @@ class _TableReadMixin:
                 dst = os.path.join(dst_vdir, rel)
                 shutil.rmtree(dst, ignore_errors=True)
                 shutil.copytree(pq, dst)
+
+    @staticmethod
+    def _link_files(src: str, dst: str) -> None:
+        """Lay every file of ``src`` into a new ``dst`` dir. LINK, not
+        move: a conflicting commit attempt's staging is wiped, and the
+        written files must outlive it for the retry. Hard links make
+        that free on one filesystem (the table IS one directory tree);
+        copy2 is the cross-device fallback."""
+        import shutil
+
+        os.makedirs(dst)
+        for fn in os.listdir(src):
+            s, d = os.path.join(src, fn), os.path.join(dst, fn)
+            try:
+                os.link(s, d)
+            except OSError:
+                shutil.copy2(s, d)
+
+    @staticmethod
+    def _carry_dv(dv_dir: str | None, vdir: str) -> None:
+        """Lay the parent's deletion vector into ``vdir/_dv`` unchanged
+        — a byte copy of its files (entries are table-relative, so they
+        stay valid) — or, when the parent has none, an empty
+        ``_file string, _pos long`` parquet. No Spark job either way:
+        a DV-carrying commit (append, restore, schema change) changes
+        no row address."""
+        import shutil
+
+        dst = os.path.join(vdir, "_dv")
+        if dv_dir is not None:
+            shutil.copytree(dv_dir, dst)
+            return
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        os.makedirs(dst)
+        pq.write_table(
+            pa.table(
+                {
+                    "_file": pa.array([], pa.string()),
+                    "_pos": pa.array([], pa.int64()),
+                }
+            ),
+            os.path.join(dst, "part-00000-empty.parquet"),
+        )
 
     @staticmethod
     def _append_files(append_dirs: Sequence[str]) -> list[str]:

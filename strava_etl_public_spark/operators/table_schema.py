@@ -272,10 +272,6 @@ class _SchemaMixin:
         silently lineage-orphaned)."""
         cur, m = resolve_entry(self.path)
         data_dir, dv_dir, cur_appends = self._resolve(cur)
-        if dv_dir is not None:
-            seed_dv = self.spark.read.parquet(dv_dir).select("_file", "_pos")
-        else:
-            seed_dv = self.spark.createDataFrame([], "_file string, _pos long")
         ref = self._base_ref(data_dir)
         old_appends = self._rebase_appends(cur)
         if old_appends:
@@ -284,7 +280,7 @@ class _SchemaMixin:
             ref["dead"] = self._dead_of(cur)
 
         def populate(vdir: str) -> None:
-            seed_dv.write.mode("overwrite").parquet(os.path.join(vdir, "_dv"))
+            self._carry_dv(dv_dir, vdir)
             with open(os.path.join(vdir, "_dv.json"), "w") as f:
                 json.dump(ref, f)
             self._inherit_sidecars(self._vdir(cur), vdir)

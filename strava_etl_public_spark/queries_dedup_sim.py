@@ -17,9 +17,15 @@ from pyspark.sql import functions as F  # noqa: F401
 from .functions import epoch as ep  # noqa: F401
 from .io import load  # noqa: F401
 from .session import ensure_harness_conf  # noqa: F401
-from .queries import register, register_extra, streams  # noqa: F401
+from .queries_common import register, register_extra, streams  # noqa: F401
 from .operators import dedup, multimodal, similarity, text  # noqa: F401
-from .queries_common import _SH_SQL, _cos_sql  # noqa: F401
+from .queries_common import (  # noqa: F401
+    _CC_CLOSURE_SQL,
+    _SH_SQL,
+    _clusters_oracle,
+    _cos_sql,
+    _minhash_oracle,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -53,46 +59,6 @@ def x_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.dedup_exact(docs.unionByName(recrawl), "doc_id", "text")
 
 
-def _minhash_oracle(k: int = 8, bands: int = 4, threshold: float = 0.5) -> str:
-    rows = k // bands
-    sig_cols = ",\n         ".join(
-        f"min(shingle + {j} * sh2) AS mh{j}" for j in range(k)
-    )
-    band_cases = " ".join(
-        f"WHEN {b} THEN concat_ws('_', "
-        + ", ".join(f"CAST(mh{b * rows + r} AS VARCHAR)" for r in range(rows))
-        + ")"
-        for b in range(bands)
-    )
-    return f"""
-WITH {_SH_SQL},
-sig AS (SELECT doc_id, {sig_cols} FROM sh GROUP BY doc_id),
-banded AS (
-  SELECT doc_id, band_idx, CASE band_idx {band_cases} END AS h
-  FROM sig, (SELECT unnest(generate_series(0, {bands - 1})) AS band_idx)
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM banded a JOIN banded b ON a.band_idx = b.band_idx AND a.h = b.h
-  WHERE a.doc_id < b.doc_id
-),
-sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT c.doc_a, c.doc_b, count(*) AS i
-  FROM cand c
-  JOIN sh sa ON sa.doc_id = c.doc_a
-  JOIN sh sb ON sb.doc_id = c.doc_b AND sb.shingle = sa.shingle
-  GROUP BY c.doc_a, c.doc_b
-)
-SELECT i.doc_a, i.doc_b,
-       CAST(i.i AS DOUBLE) / CAST(za.sz + zb.sz - i.i AS DOUBLE) AS jaccard
-FROM inter i
-JOIN sizes za ON za.doc_id = i.doc_a
-JOIN sizes zb ON zb.doc_id = i.doc_b
-WHERE CAST(i.i AS DOUBLE) / CAST(za.sz + zb.sz - i.i AS DOUBLE) >= {threshold}
-"""
-
-
 @register("x_dedup_minhash_lsh", oracle=_minhash_oracle())
 def x_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash→LSH→exact-Jaccard near-dup (shingle n=3, k=8 perms,
@@ -101,42 +67,6 @@ def x_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_harness_conf(spark)
     docs = load(spark, sf_dir, "documents")
     return dedup.minhash_lsh_dedup(docs, "doc_id", "text", n=3, k=8, bands=4, threshold=0.5)
-
-
-#: Recursive-closure fragment shared by every connected-components
-#: oracle (clusters / entity resolution / keep-list): expects a
-#: ``pairs(doc_a, doc_b)`` CTE in scope and yields ``cc(doc_id,
-#: rep_id)`` — ONE definition so a change to the closure cannot drift
-#: between oracles (code-review finding).
-_CC_CLOSURE_SQL = """
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION
-  SELECT doc_b AS src, doc_a AS dst FROM pairs
-),
-nodes AS (SELECT DISTINCT src AS id FROM edges),
-reach(id, lab) AS (
-  SELECT id, id FROM nodes
-  UNION
-  SELECT e.dst AS id, r.lab FROM reach r JOIN edges e ON e.src = r.id
-),
-cc AS (SELECT id AS doc_id, min(lab) AS rep_id FROM reach GROUP BY id)"""
-
-
-def _clusters_oracle() -> str:
-    """Recursive-closure twin of dedup.duplicate_clusters over the
-    minhash near-dup pair set: enumerate every label reachable from
-    each node through the (bidirectional) edge set, keep the min —
-    the same fixed point min-label propagation converges to, computed
-    a structurally different way (closure vs iteration), so the two
-    engines cross-check the COMPONENT STRUCTURE, not just each other's
-    arithmetic."""
-    return f"""
-WITH RECURSIVE pairs AS ({_minhash_oracle()}),{_CC_CLOSURE_SQL}
-SELECT cc.doc_id, cc.rep_id, CAST(sz.n AS BIGINT) AS cluster_size
-FROM cc JOIN (SELECT rep_id, count(*) AS n FROM cc GROUP BY rep_id) sz
-  USING (rep_id)
-"""
 
 
 @register("x_dedup_incremental", oracle=_clusters_oracle())
@@ -740,7 +670,7 @@ def _e2e_oracle() -> str:
     already-verified oracle of its piecewise query (w2 interp, g2
     rolling maxes, g4 digest) composed verbatim; rolling runs on the
     1e-6-quantized interp output (see _tri_list_sql_q)."""
-    from .queries import STREAMS_SQL
+    from .queries_common import STREAMS_SQL
     from .operators import rolling
 
     wins = rolling.REFERENCE_WINDOWS
@@ -864,7 +794,7 @@ def x_pipeline_activity_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     from .operators import resample, rolling
-    from .queries import _r6
+    from .queries_common import _r6
 
     wins = rolling.REFERENCE_WINDOWS
     cols = list(_E2E_METRICS)

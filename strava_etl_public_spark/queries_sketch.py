@@ -17,10 +17,10 @@ from pyspark.sql import functions as F  # noqa: F401
 from .functions import epoch as ep  # noqa: F401
 from .io import load  # noqa: F401
 from .session import ensure_harness_conf  # noqa: F401
-from .queries import register, register_extra, streams  # noqa: F401
+from .queries_common import register, register_extra, streams  # noqa: F401
 from .operators import dedup, multimodal, similarity, text  # noqa: F401
-from .queries_common import _SH_SQL, _TK_SQL  # noqa: F401
-from .queries_dedup_sim import _clusters_oracle, x_pipeline_activity_e2e  # noqa: F401
+from .queries_common import _SH_SQL, _TK_SQL, _clusters_oracle  # noqa: F401
+from .queries_dedup_sim import x_pipeline_activity_e2e  # noqa: F401
 from .queries_text_mm_stream import _QUALITY_ORACLE, _lang_oracle  # noqa: F401
 
 

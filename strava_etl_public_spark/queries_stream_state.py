@@ -21,7 +21,7 @@ from pyspark.sql import functions as F  # noqa: F401
 from .functions import epoch as ep  # noqa: F401
 from .io import load  # noqa: F401
 from .session import ensure_harness_conf  # noqa: F401
-from .queries import register, register_extra, streams  # noqa: F401
+from .queries_common import register, register_extra, streams  # noqa: F401
 from .queries_sketch import _hll_oracle  # noqa: F401
 from .queries_text_mm_stream import _run_stream, _stage_events_dir  # noqa: F401
 

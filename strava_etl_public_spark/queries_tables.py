@@ -23,7 +23,7 @@ from pyspark.sql import functions as F  # noqa: F401
 from .functions import epoch as ep  # noqa: F401
 from .io import load  # noqa: F401
 from .session import ensure_harness_conf  # noqa: F401
-from .queries import register, register_extra, streams  # noqa: F401
+from .queries_common import register, register_extra, streams  # noqa: F401
 
 
 _MT_FP_RENDER = ", ".join(

@@ -17,9 +17,9 @@ from pyspark.sql import functions as F  # noqa: F401
 from .functions import epoch as ep  # noqa: F401
 from .io import load  # noqa: F401
 from .session import ensure_harness_conf  # noqa: F401
-from .queries import register, register_extra, streams  # noqa: F401
+from .queries_common import register, register_extra, streams  # noqa: F401
 from .operators import dedup, multimodal, similarity, text  # noqa: F401
-from .queries_common import _SH_SQL, _TK_SQL  # noqa: F401
+from .queries_common import _SH_SQL, _TK_SQL, _clusters_oracle  # noqa: F401
 
 
 # ---------------------------------------------------------------------------
@@ -816,8 +816,6 @@ def x_stream_neardup_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_clusters_oracle() -> str:
-    from .queries_dedup_sim import _clusters_oracle
-
     return (
         f"SELECT t.*, CAST(4 AS BIGINT) AS n_batches FROM ({_clusters_oracle()}) t"
     )

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from .functions import epoch as ep
 from .io import load
-from .queries import register
+from .queries_common import register
 from .session import ensure_harness_conf
 
 # shared daily quantized-mean series (the CUSUM query's `d` CTE shape):

@@ -433,14 +433,9 @@ def table_append_batch_jvm(
         t = ManagedTable(bdf.sparkSession, table_path)
         if batch_id <= t.last_txn(txn_id):
             return  # replayed batch: already in the published lineage
-        # one materialization serves BOTH of append's jobs (the JVM
-        # digest aggregate and the JVM parquet write) — without it the
-        # micro-batch's source scan runs twice
-        bdf.persist()
-        try:
-            t.append(bdf, txn=int(batch_id), txn_id=txn_id)
-        finally:
-            bdf.unpersist()
+        # append runs the micro-batch once (its digest is observed on
+        # the write), so nothing needs caching here
+        t.append(bdf, txn=int(batch_id), txn_id=txn_id)
 
     return _sink
 

@@ -7,6 +7,10 @@ correctness gate); this is the fast structural check that belongs in CI.
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import pytest
 
 import __spark_entry__ as E
@@ -160,3 +164,36 @@ def test_headline_queries_smoke_sf0001(spark, sf_dir):
         except Exception as e:  # noqa: BLE001 — collecting all failures
             failures[name] = repr(e)[:200]
     assert not failures, failures
+
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+FAMILY_MODULES = sorted(
+    f[:-3]
+    for f in os.listdir(os.path.join(ROOT, "strava_etl_public_spark"))
+    if f.startswith("queries") and f.endswith(".py")
+)
+
+
+@pytest.mark.parametrize("mod", FAMILY_MODULES)
+def test_query_module_imports_first(mod):
+    """Each query module imports cleanly as the FIRST import of a fresh
+    interpreter — no module may reach a sibling half-way through its
+    own initialisation (no Spark session is started)."""
+    r = subprocess.run(
+        [sys.executable, "-c", f"import strava_etl_public_spark.{mod}"],
+        cwd=ROOT,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+
+
+def test_bench_secondary_extras_are_registered():
+    """bench.main raises on an unregistered SECONDARY_EXTRAS name; this
+    keeps the list in step with the registry without running Spark."""
+    import bench as B
+    from strava_etl_public_spark.queries import EXTRA_QUERIES
+
+    qs = dict(EXTRA_QUERIES) | dict(E.queries())
+    assert [n for n in B.SECONDARY_EXTRAS if n not in qs] == []

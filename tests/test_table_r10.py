@@ -544,6 +544,14 @@ def test_append_commutes_with_interleaved_merge(
     assert fired["done"]
     got = {r["id"]: r["value"] for r in t.read(version=v).collect()}
     assert got[1] == 111.0 and got[200] == 5.0  # both effects
+    # the rebased digest describes the rows actually published
+    from strava_etl_public_spark.operators.layout import dataset_fingerprint
+
+    rec = json.load(open(os.path.join(t.path, "_commits", f"{v}.json")))
+    live = dataset_fingerprint(t.read(version=v)).collect()[0].asDict()
+    assert [rec[k] for k in ("n_rows", "xor_hash", "sum_hash_mod")] == [
+        live[k] for k in ("n_rows", "xor_hash", "sum_hash_mod")
+    ]
 
 
 def test_append_conflicts_on_interleaved_column_map_change(
