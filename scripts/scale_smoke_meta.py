@@ -15,7 +15,7 @@ scale_smoke_update); what remained unmeasured was the metadata side:
      per-file constants).
 
 Part 1 is pure metadata (no Spark): commit records are synthesized
-exactly as layout.snapshot_commit writes them. Part 2 writes real
+exactly as layout.snapshot_commit_ref writes them. Part 2 writes real
 parquet (10M rows / 10k files) and runs the real manifest build.
 
 Usage: python scripts/scale_smoke_meta.py [n_versions] [n_files] [outdir]
@@ -42,7 +42,7 @@ def synth_table(root: str, n: int, ckpt_every: int | None) -> None:
     dir per version so _resolve treats them as reference commits is
     NOT needed — the walkers only read records), every 10th commit
     carrying a txn marker, records shaped exactly like
-    layout.snapshot_commit's output."""
+    layout.snapshot_commit_ref's output."""
     from strava_etl_public_spark.operators import layout
 
     cdir = os.path.join(root, "_commits")

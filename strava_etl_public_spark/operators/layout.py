@@ -578,123 +578,6 @@ def _finish_publish(staging: str, vdir: str) -> None:
             raise
 
 
-def snapshot_commit(
-    df: DataFrame,
-    table_path: str,
-    extra: dict | None = None,
-    expected_max: int | None = None,
-    decorate=None,
-) -> int:
-    """Append one immutable SNAPSHOT of ``df`` to the versioned table
-    at ``table_path`` and return its version number — the minimal
-    table-format contract (Delta/Iceberg's core) on plain parquet:
-
-    * data lands in ``<path>/v{n}`` (never rewritten once published);
-    * the commit record ``<path>/_commits/{n}.json`` carries the row
-      count and the order-free content digest (dataset_fingerprint's
-      count/xor/sum triple) so any reader can audit a snapshot without
-      rescanning it;
-    * publication is ONE atomic rename of the ``_latest`` pointer —
-      a reader never sees a half-written table, a crash before the
-      rename leaves the previous version current (the parquet-swap
-      sink's argument, generalized to a full history).
-
-    Versions are never deleted here — time travel (`snapshot_read`
-    with an explicit version) and `snapshot_rollback` stay valid for
-    the table's whole history; a production deployment adds retention
-    (VACUUM) as a separate, explicitly destructive step.
-
-    Concurrency: the data lands in a PRIVATE staging directory; the
-    O_EXCL commit record decides the version race, and only the
-    winner renames its staging into ``v{n}`` — a losing concurrent
-    committer whose Spark write is still in flight can never scribble
-    over a winner's already-published directory (snapshot_commit_ref's
-    discipline, applied to copy commits too — code-review r10).
-    ``decorate(staging_dir)``, if given, runs after the data write and
-    before the commit record — sidecar manifests built there publish
-    atomically with the version.
-    """
-    import json
-    import os
-    import shutil
-    import uuid
-
-    store = get_log_store()
-    cdir = os.path.join(table_path, "_commits")
-    os.makedirs(cdir, exist_ok=True)
-    # cheap early stale-inputs check — fail before the expensive write
-    _check_expected_max([snapshot_max_commit(table_path)], expected_max)
-    staging = os.path.join(table_path, f"_stage_{uuid.uuid4().hex[:12]}")
-    committed = False
-    try:
-        df.write.mode("overwrite").parquet(staging)
-        spark = df.sparkSession
-        digest = (
-            dataset_fingerprint(spark.read.parquet(staging))
-            .collect()[0]
-            .asDict()
-        )
-        digest.pop("dataset", None)  # relabeled after slot allocation
-        if decorate is not None:
-            decorate(staging)
-        # allocate from the HIGHEST COMMIT EVER, not the _latest
-        # pointer: after a rollback the pointer is behind, and
-        # pointer+1 would overwrite a published (immutable) snapshot.
-        # O(1) via the _hw hint + contiguity probe (r12, verdict #4)
-        existing = [snapshot_max_commit(table_path)]
-        n = existing[0] + 1
-        # OPTIMISTIC CONCURRENCY: (a) re-check the allocation
-        # high-water AFTER the expensive data/digest jobs — a
-        # competing record that landed while this op derived its write
-        # set means the inputs are stale (lost-update window;
-        # code-review r9) — and (b) create the record with O_EXCL so
-        # two writers allocating the same slot get exactly one winner.
-        # Both failure modes raise CommitConflict: the fix is to
-        # RE-APPLY the logical op, not re-write the record. `extra`
-        # rides in the SAME record write (e.g. a streaming sink's
-        # batch-id txn marker) — the marker and the commit it
-        # certifies publish atomically
-        _check_expected_max(existing, expected_max)
-        rec = {
-            "version": n,
-            "dataset": f"v{n}",
-            # the record names its fully-materialized staging dir
-            # (r12, verdict #2): the record put is the COMMIT POINT —
-            # a crash before the v{n} rename no longer burns the slot,
-            # because any reader/allocator resolves the dataset
-            # through ``dataset_dir`` (staged fallback + repair
-            # rename). This is Delta's data-files-first order: data
-            # is durable BEFORE the record that names it.
-            "staged": os.path.basename(staging),
-            **digest,
-            **_stamp_ts(_stamp_txn_hw(table_path, dict(extra or {}))),
-        }
-        # the put-if-absent seam (logstore.py): the ONE primitive
-        # that decides the cross-process/cross-host version race
-        if not store.put_record_if_absent(
-            cdir, f"{n}.json", json.dumps(rec)
-        ):
-            raise CommitConflict(
-                f"commit record v{n} already exists at {table_path} — a "
-                "concurrent writer won the slot"
-            )
-        committed = True
-        _bump_hw(cdir, n)  # keep the O(1) allocation hint fresh
-        _finish_publish(staging, os.path.join(table_path, f"v{n}"))
-        # monotone: a repairer may have already published PAST n
-        # (advice r13 — an unconditional flip here could regress)
-        store.publish_pointer_monotone(table_path, n)
-        _maybe_write_lineage_ckpt(table_path, n)
-        return n
-    finally:
-        # once the record is put the staged data IS the committed
-        # version — a failure between record and rename must leave it
-        # for dataset_dir's repair, never delete it (pre-r12 this
-        # rmtree turned any post-record failure into a burned slot)
-        if not committed:
-            shutil.rmtree(staging, ignore_errors=True)
-
-
 def _check_expected_max(existing: list[int], expected_max: int | None) -> None:
     actual = max(existing) if existing else 0
     if expected_max is not None and actual != expected_max:
@@ -863,7 +746,7 @@ def _stamp_txn_hw(table_path: str, extra: dict) -> dict:
     from the rolled-back-to record, so orphaned branches' markers are
     never inherited (the r9 stale-marker rule, preserved by
     construction). Only applied when the caller supplied a ``parent``
-    (ManagedTable commits); raw snapshot_commit callers don't use
+    (ManagedTable commits); raw snapshot_commit_ref callers don't use
     txn markers."""
     import json
     import os
@@ -995,33 +878,36 @@ def _maybe_write_lineage_ckpt(table_path: str, n: int) -> None:
 def snapshot_commit_ref(
     table_path: str,
     populate,
-    logical_df: DataFrame | None = None,
-    digest: dict | None = None,
+    digest: dict,
     extra: dict | None = None,
     expected_max: int | None = None,
 ) -> int:
-    """Commit a version whose on-disk content is METADATA referencing
-    an earlier version's data files (a deletion-vector sidecar, a
-    shallow clone) instead of a data copy — ``snapshot_commit``'s
-    exact version-allocation / O_EXCL commit-conflict / atomic-pointer
-    discipline, with ``populate(version_dir)`` laying the version's
-    content and the commit digest computed from ``logical_df`` (the
-    version's LOGICAL rows), so `snapshot_history` and audits stay
-    uniform across copy commits and reference commits. This is what
-    lets a DELETE publish a new version of a 100 TB table by writing
-    O(deleted-rows) bytes instead of re-copying the table.
+    """Append one immutable version to the versioned table at
+    ``table_path`` and return its number — the minimal table-format
+    contract (Delta/Iceberg's core) on plain parquet:
 
-    The commit digest comes from ``digest`` (precomputed — e.g. the
-    parent record minus the deleted rows' digest, exact because
-    count/xor/modular-sum are group operations) or, failing that, a
-    fingerprint scan of ``logical_df``; pass one of the two.
+    * ``populate(dir)`` lays the version's content — data files, or
+      metadata referencing an earlier version's files (a deletion-vector
+      sidecar, a shallow clone), which is what lets a DELETE publish a
+      new version of a 100 TB table by writing O(deleted-rows) bytes;
+    * the commit record ``<path>/_commits/{n}.json`` carries ``digest``
+      — the row count and order-free content digest of the version's
+      LOGICAL rows (dataset_fingerprint's count/xor/sum triple), so any
+      reader can audit a version without rescanning it;
+    * publication is ONE atomic flip of the ``_latest`` pointer — a
+      reader never sees a half-written table, and a crash before the
+      record leaves the previous version current.
 
-    Concurrency (code-review r9): ``populate`` writes into a PRIVATE
-    staging directory; the O_EXCL commit record then decides the
-    version race, and only the winner renames its staging into
+    Versions are never deleted here — time travel (`snapshot_read`
+    with an explicit version) and `snapshot_rollback` stay valid for
+    the table's whole history; retention (VACUUM) is a separate,
+    explicitly destructive step.
+
+    Concurrency (code-review r9/r10): ``populate`` writes into a
+    PRIVATE staging directory; the O_EXCL commit record then decides
+    the version race, and only the winner renames its staging into
     ``v{n}`` — a losing concurrent committer can never scribble over
-    the winner's already-populated directory (the window the
-    populate-into-vdir-first order left open). The record names its
+    the winner's already-populated directory. The record names its
     staging dir (r12): a crash between record and rename leaves a
     COMPLETE commit served through ``dataset_dir``'s staged fallback
     — no burned slot, no unreadable version."""
@@ -1038,29 +924,33 @@ def snapshot_commit_ref(
     committed = False
     try:
         populate(staging)
-        # O(1) allocation via the _hw hint + contiguity probe (r12)
+        # allocate from the HIGHEST COMMIT EVER, not the _latest
+        # pointer: after a rollback the pointer is behind, and
+        # pointer+1 would overwrite a published (immutable) snapshot.
+        # O(1) via the _hw hint + contiguity probe (r12, verdict #4)
         existing = [snapshot_max_commit(table_path)]
         n = existing[0] + 1
-        vdir = os.path.join(table_path, f"v{n}")
-        if digest is None:
-            if logical_df is None:
-                raise ValueError(
-                    "snapshot_commit_ref needs digest or logical_df"
-                )
-            digest = (
-                dataset_fingerprint(logical_df, label=f"v{n}")
-                .collect()[0]
-                .asDict()
-            )
-        else:
-            digest = {**digest, "dataset": f"v{n}"}
-        # same two OCC checks as snapshot_commit: stale-inputs guard
-        # after the expensive populate, O_EXCL slot race on the record
+        # OPTIMISTIC CONCURRENCY: (a) re-check the allocation
+        # high-water AFTER the expensive populate — a competing record
+        # that landed while this op derived its write set means the
+        # inputs are stale (lost-update window; code-review r9) — and
+        # (b) create the record with O_EXCL so two writers allocating
+        # the same slot get exactly one winner. Both failure modes
+        # raise CommitConflict: the fix is to RE-APPLY the logical op,
+        # not re-write the record. `extra` rides in the SAME record
+        # write (e.g. a streaming sink's batch-id txn marker) — the
+        # marker and the commit it certifies publish atomically
         _check_expected_max(existing, expected_max)
         rec = {
             "version": n,
-            "staged": os.path.basename(staging),  # see snapshot_commit
+            # the record put is the COMMIT POINT (r12, verdict #2):
+            # readers resolve the dataset through ``dataset_dir``
+            # (staged fallback + repair rename) — Delta's
+            # data-files-first order: data is durable BEFORE the
+            # record that names it
+            "staged": os.path.basename(staging),
             **digest,
+            "dataset": f"v{n}",
             **_stamp_ts(_stamp_txn_hw(table_path, dict(extra or {}))),
         }
         if not store.put_record_if_absent(
@@ -1072,13 +962,16 @@ def snapshot_commit_ref(
             )
         committed = True
         _bump_hw(cdir, n)  # keep the O(1) allocation hint fresh
-        _finish_publish(staging, vdir)  # tolerate a repairer winning
+        _finish_publish(staging, os.path.join(table_path, f"v{n}"))
         # monotone commit-path flip (advice r13 — never regress)
         store.publish_pointer_monotone(table_path, n)
         _maybe_write_lineage_ckpt(table_path, n)
         return n
     finally:
-        if not committed:  # post-record staging IS the version (r12)
+        # once the record is put the staged data IS the committed
+        # version — a failure between record and rename must leave it
+        # for dataset_dir's repair, never delete it (r12)
+        if not committed:
             shutil.rmtree(staging, ignore_errors=True)
 
 

@@ -19,9 +19,11 @@ reproducible as-of a version, and maintenance (OPTIMIZE/VACUUM) never
 mutates published history.
 
 Scale design (100 TB):
-* every commit is an append of new files + ONE atomic pointer rename
+* every commit is an append of new files + ONE atomic pointer flip
   — readers never block writers, and a crash leaves the previous
-  version current (layout.snapshot_commit's argument);
+  version current (layout.snapshot_commit_ref's argument); every
+  commit writes its data once (:meth:`ManagedTable._written_once`) and
+  publishes through one loop (:meth:`ManagedTable._publish`);
 * MERGE is one NULL-safe full-outer shuffle on the key
   (upsert.merge_into) — broadcast when the change batch is small, AQE
   decides from runtime sizes;
@@ -49,13 +51,14 @@ from pyspark.sql import functions as F
 
 from .layout import (
     CommitConflict,
+    _check_expected_max,
     compact_parquet,
     dataset_fingerprint,
     fingerprint_metrics,
     resolve_entry,
     row_hash,
-    snapshot_commit,
     snapshot_commit_ref,
+    snapshot_max_commit,
     snapshot_read,
     snapshot_rollback,
     snapshot_vacuum,
@@ -182,7 +185,7 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
     ) -> "ManagedTable":
         """Create the table: write the config record (O_EXCL — a
         second concurrent create loses loudly, the commit-conflict
-        discipline of snapshot_commit applied to the table itself),
+        discipline of snapshot_commit_ref applied to the table itself),
         then commit ``df`` as v1 and build its manifests.
         ``bloom_col`` adds the point-lookup skipping layer: per-file
         bloom manifests maintained on every copy commit (see
@@ -411,9 +414,10 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
         the EXISTING data is validated first (an unenforceable
         constraint is refused, not recorded). SQL CHECK semantics: a
         row violates only when the expression is FALSE; NULL passes.
-        Enforcement is a short-circuit existence probe (limit-k scan,
-        not a full count) on each commit's data — the few violating
-        rows are quoted in the error so the bad batch is debuggable."""
+        Every later commit counts violations on its one data write
+        (:meth:`_written_once`); only a violation costs a further job,
+        which reads a few violating rows back from the written files to
+        quote in the error, so the bad batch is debuggable."""
         self._check_rows(self.read(), {name: expr_sql})
         self.constraints[name] = expr_sql
         self._save_config()
@@ -592,113 +596,30 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
         vmap = self._version_map(v)
         base = self._open_data(v, data_dir, *appends)
         cols = [l for l, _ in vmap] if vmap else base.columns
-        tagged = self._tagged(base)
-        if dv_dir is not None:
-            parent_dv = self._dv_df(dv_dir)
-            live = tagged.join(parent_dv, ["_file", "_pos"], "left_anti")
-        else:
-            parent_dv = None
-            live = tagged
-        if vmap:
-            # the predicate speaks the LOGICAL schema; rename (keeping
-            # the position tags) before evaluating it
-            live = live.select(
-                *[F.col(p).alias(l) for l, p in vmap], "_file", "_pos"
-            )
-        hit_rows = live.filter(cond).persist()
+        hit_rows = self._live_tagged(base, dv_dir, vmap).filter(cond).persist()
         try:
-            hits = self._relativize_dv(hit_rows.select("_file", "_pos"))
-            new_dv = (
-                hits
-                if parent_dv is None
-                else self.spark.read.parquet(dv_dir)
-                .select("_file", "_pos")
-                .unionByName(hits)
-            )
-
             # the new digest derives from the parent commit record
             dd = (
                 dataset_fingerprint(hit_rows.select(*cols))
                 .collect()[0]
                 .asDict()
             )
-            digest = _fold_digest(self._record(v), minus=dd)
-
             wfiles = self._wfiles_of(hit_rows)
-            attempts = 0
-            while True:
-                # a delete on a CLONE chains from a base OUTSIDE this
-                # table's directory — keep the reference form it
-                # arrived in
-                ref = self._base_ref(data_dir)
-                # inherited appended-row dirs (merge-on-read UPDATEs in
-                # the ancestry) stay part of the file universe — the DV
-                # addresses their rows by the same (file, pos)
-                # coordinates
-                parent_appends = self._rebase_appends(v)
-                if parent_appends:
-                    ref["appends"] = parent_appends
-                if self._dead_of(v):
-                    ref["dead"] = self._dead_of(v)
-
-                def populate(vdir: str, new_dv=new_dv, ref=ref, v=v) -> None:
-                    new_dv.write.mode("overwrite").parquet(
-                        os.path.join(vdir, "_dv")
-                    )
-                    with open(os.path.join(vdir, "_dv.json"), "w") as f:
-                        json.dump(ref, f)
-                    # superset sidecars stay conservative-correct under
-                    # DV (extra hits cost a file read, never a row);
-                    # copied INSIDE populate so they publish atomically
-                    # with the version (code-review r9)
-                    self._inherit_sidecars(
-                        self._vdir(v), vdir
-                    )
-
-                extra = {"parent": v, "op": "dv_delete"}
-                if wfiles is not None:
-                    extra["wfiles"] = wfiles
-                if vmap:
-                    extra["columns"] = vmap
-                if self._version_added(v):
-                    # a reference commit serves the same base files —
-                    # metadata-added columns still need backfill
-                    extra["added"] = self._version_added(v)
-                if self._version_widened(v):
-                    extra["widened"] = self._version_widened(v)
-                try:
-                    return snapshot_commit_ref(
-                        self.path, populate, digest=digest, extra=extra,
-                        expected_max=m,
-                    )
-                except CommitConflict:
-                    # conflict CLASSIFICATION (Delta's logical rules):
-                    # interleaved dv_deletes on DISJOINT files commute —
-                    # absorb them by DV union + digest re-derivation
-                    # instead of re-running the predicate scan.
-                    # The rebased head is pinned ONCE and becomes BOTH
-                    # the classification bound and the retry's
-                    # expected_max — snapshot_max_commit here would
-                    # let an in-flight commit (record landed, pointer
-                    # flip pending) pass _check_expected_max while the
-                    # rebase chains past it: lost update (advice r11)
-                    attempts += 1
-                    v_new = self.version()
-                    if attempts > 5 or not self._interleaved_commute_dv(
-                        m, wfiles, head=v_new
-                    ):
-                        raise
-                    m = v_new
-                    v = v_new
-                    data_dir, dv_dir, _ = self._resolve(v)
-                    new_dv = (
-                        self.spark.read.parquet(dv_dir)
-                        .select("_file", "_pos")
-                        .unionByName(hits)
-                        if dv_dir is not None
-                        else hits
-                    )
-                    digest = _fold_digest(self._record(v), minus=dd)
+            hits = self._relativize_dv(hit_rows.select("_file", "_pos"))
+            # interleaved dv_deletes on DISJOINT files (and blind
+            # appends) commute — absorbed by DV union + digest
+            # re-derivation instead of re-running the predicate scan
+            return self._publish(
+                v,
+                m,
+                "dv_delete",
+                lambda vdir, p: self._lay_ref(vdir, p, hits=hits),
+                minus=dd,
+                commutes=lambda m_, head: self._interleaved_commute_dv(
+                    m_, wfiles, head=head
+                ),
+                extra=None if wfiles is None else {"wfiles": wfiles},
+            )
         finally:
             hit_rows.unpersist()
 
@@ -824,18 +745,7 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
             )
             for c, e in set_exprs.items()
         }
-        tagged = self._tagged(base)
-        live = (
-            tagged.join(self._dv_df(dv_dir), ["_file", "_pos"], "left_anti")
-            if dv_dir is not None
-            else tagged
-        )
-        if vmap:
-            # cond / set_exprs speak the LOGICAL schema
-            live = live.select(
-                *[F.col(p).alias(l) for l, p in vmap], "_file", "_pos"
-            )
-        hit_rows = live.filter(cond).persist()
+        hit_rows = self._live_tagged(base, dv_dir, vmap).filter(cond).persist()
         try:
             new_rows = hit_rows.select(
                 *[
@@ -849,76 +759,45 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
             with self._written_once(
                 new_rows, lambda d: self._upd_out(d, vmap, base), vmap
             ) as (upd, new_d):
-                hits = self._relativize_dv(hit_rows.select("_file", "_pos"))
                 old_d = (
                     dataset_fingerprint(hit_rows.select(*cols))
                     .collect()[0]
                     .asDict()
                 )
                 wfiles = self._wfiles_of(hit_rows)
-                attempts = 0
-                while True:
-                    new_dv = (
-                        hits
-                        if dv_dir is None
-                        else self.spark.read.parquet(dv_dir)
-                        .select("_file", "_pos")
-                        .unionByName(hits)
-                    )
-                    digest = _fold_digest(
-                        self._record(v), plus=new_d, minus=old_d
-                    )
-                    ref = self._base_ref(data_dir)
-                    ref["appends"] = self._rebase_appends(v) + ["self"]
-                    if self._dead_of(v):
-                        ref["dead"] = self._dead_of(v)
-
-                    def populate(
-                        vdir: str, new_dv=new_dv, ref=ref, v=v
-                    ) -> None:
-                        self._link_files(upd, os.path.join(vdir, "_upd"))
-                        new_dv.write.mode("overwrite").parquet(
-                            os.path.join(vdir, "_dv")
-                        )
-                        with open(os.path.join(vdir, "_dv.json"), "w") as f:
-                            json.dump(ref, f)
-                        self._inherit_sidecars(self._vdir(v), vdir)
-
-                    extra = {"parent": v, "op": "dv_update"}
-                    if wfiles is not None:
-                        extra["wfiles"] = wfiles
-                    if vmap:
-                        extra["columns"] = vmap
-                    if self._version_added(v):
-                        extra["added"] = self._version_added(v)
-                    if self._version_widened(v):
-                        extra["widened"] = self._version_widened(v)
-                    try:
-                        return snapshot_commit_ref(
-                            self.path, populate, digest=digest, extra=extra,
-                            expected_max=m,
-                        )
-                    except CommitConflict:
-                        # an UPDATE absorbs interleaved dv_deletes on
-                        # disjoint files the same way a delete does (its
-                        # own hit positions and images stay valid); any
-                        # other interleave — including another update,
-                        # whose rewritten images this op's predicate
-                        # never scanned — conflicts (Delta's added-file
-                        # rule). expected_max = the pinned rebased head,
-                        # not snapshot_max_commit (advice r11 — see
-                        # dv_delete)
-                        attempts += 1
-                        v_new = self.version()
-                        if attempts > 5 or not self._interleaved_commute_dv(
-                            m, wfiles, head=v_new
-                        ):
-                            raise
-                        m = v_new
-                        v = v_new
-                        data_dir, dv_dir, _ = self._resolve(v)
+                hits = self._relativize_dv(hit_rows.select("_file", "_pos"))
+                # an UPDATE absorbs interleaved dv_deletes on disjoint
+                # files (and blind appends) the way a delete does; any
+                # other interleave — including another update, whose
+                # rewritten images this op's predicate never scanned —
+                # conflicts (Delta's added-file rule)
+                return self._publish(
+                    v,
+                    m,
+                    "dv_update",
+                    lambda vdir, p: self._lay_ref(vdir, p, hits=hits, upd=upd),
+                    plus=new_d,
+                    minus=old_d,
+                    commutes=lambda m_, head: self._interleaved_commute_dv(
+                        m_, wfiles, head=head
+                    ),
+                    extra=None if wfiles is None else {"wfiles": wfiles},
+                )
         finally:
             hit_rows.unpersist()
+
+    def _live_tagged(self, base: DataFrame, dv_dir, vmap) -> DataFrame:
+        """The live rows of ``base`` (the version's DV anti-joined out)
+        with their ``_file``/``_pos`` tags, under the LOGICAL names the
+        DML predicates and SET expressions speak."""
+        live = self._tagged(base)
+        if dv_dir is not None:
+            live = live.join(self._dv_df(dv_dir), ["_file", "_pos"], "left_anti")
+        if vmap:
+            live = live.select(
+                *[F.col(p).alias(l) for l, p in vmap], "_file", "_pos"
+            )
+        return live
 
     @staticmethod
     def _upd_out(df: DataFrame, vmap, base: DataFrame) -> DataFrame:
@@ -1070,58 +949,33 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
             if batch.schema[c].dataType != eff[c].dataType:
                 batch = batch.withColumn(c, F.col(c).cast(eff[c].dataType))
         widened = self._version_widened(v)
+        extra: dict = {"wfiles": []}
+        if txn is not None:
+            extra["txn"] = int(txn)
+            if txn_id is not None:
+                extra["txn_id"] = str(txn_id)
+
+        def commutes(m_: int, head: int) -> bool:
+            # any published interleave commutes, unless it changed the
+            # column map or the widened types the batch was shaped for
+            return (
+                self._walk_range(head, m_) is not None
+                and (self._version_map(head) or None) == (vmap or None)
+                and (self._version_widened(head) or None) == (widened or None)
+            )
+
         with self._written_once(
             batch, lambda d: self._to_physical(d, vmap), vmap
         ) as (upd, bd):
-            attempts = 0
-            while True:
-                data_dir, dv_dir, _ = self._resolve(v)
-                ref = self._base_ref(data_dir)
-                ref["appends"] = self._rebase_appends(v) + ["self"]
-                if self._dead_of(v):
-                    ref["dead"] = self._dead_of(v)
-                digest = _fold_digest(self._record(v), plus=bd)
-                extra: dict = {"parent": v, "op": "append", "wfiles": []}
-                if txn is not None:
-                    extra["txn"] = int(txn)
-                    if txn_id is not None:
-                        extra["txn_id"] = str(txn_id)
-                if vmap:
-                    extra["columns"] = vmap
-                if self._version_added(v):
-                    extra["added"] = self._version_added(v)
-                if self._version_widened(v):
-                    extra["widened"] = self._version_widened(v)
-
-                def populate(vdir: str, dv_dir=dv_dir, ref=ref, v=v) -> None:
-                    self._link_files(upd, os.path.join(vdir, "_upd"))
-                    self._carry_dv(dv_dir, vdir)
-                    with open(os.path.join(vdir, "_dv.json"), "w") as f:
-                        json.dump(ref, f)
-                    self._inherit_sidecars(self._vdir(v), vdir)
-
-                try:
-                    return snapshot_commit_ref(
-                        self.path, populate, digest=digest, extra=extra,
-                        expected_max=m,
-                    )
-                except CommitConflict:
-                    attempts += 1
-                    # the rebased head is pinned ONCE and becomes BOTH
-                    # the classification bound and the retry's
-                    # expected_max — snapshot_max_commit would let an
-                    # in-flight commit (record landed, flip pending)
-                    # pass the check while the rebase chains past it:
-                    # lost update (advice r11)
-                    new_v = self.version()
-                    walked = self._walk_range(new_v, m)
-                    new_map = self._version_map(new_v)
-                    same_map = (new_map or None) == (vmap or None) and (
-                        self._version_widened(new_v) or None
-                    ) == (widened or None)
-                    if walked is None or not same_map or attempts > 5:
-                        raise
-                    m, v = new_v, new_v
+            return self._publish(
+                v,
+                m,
+                "append",
+                lambda vdir, p: self._lay_ref(vdir, p, upd=upd),
+                plus=bd,
+                commutes=commutes,
+                extra=extra,
+            )
 
     def restore(self, version: int) -> int:
         """RESTORE VERSION AS OF — publish a NEW version whose logical
@@ -1137,45 +991,17 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
         retract bad BATCHES, restore to retract bad DATA. Returns the
         new version number."""
         cur, m = resolve_entry(self.path)
-        data_dir, dv_dir, _ = self._resolve(version)
-        ref = self._base_ref(data_dir)
-        old_appends = self._rebase_appends(version)
-        if old_appends:
-            ref["appends"] = old_appends
-        if self._dead_of(version):
-            ref["dead"] = self._dead_of(version)
-
-        def populate(vdir: str) -> None:
-            self._carry_dv(dv_dir, vdir)
-            with open(os.path.join(vdir, "_dv.json"), "w") as f:
-                json.dump(ref, f)
-            self._inherit_sidecars(
-                self._vdir(version), vdir
-            )
-
-        with open(
-            os.path.join(self.path, "_commits", f"{version}.json")
-        ) as f:
-            old = json.load(f)
-        extra = {"parent": cur, "op": "restore", "restored_from": version}
-        if old.get("columns"):
-            # a restore is content AND schema: the restored version's
-            # column map comes back with its rows
-            extra["columns"] = old["columns"]
-        if old.get("added"):
-            extra["added"] = old["added"]
-        if old.get("widened"):
-            extra["widened"] = old["widened"]
-        return snapshot_commit_ref(
-            self.path,
-            populate,
-            digest={
-                k: old[k] for k in ("n_rows", "xor_hash", "sum_hash_mod")
-            },
-            extra=extra,
-            expected_max=m,
+        self._resolve(version)  # a missing or vacuumed version raises
+        # content AND schema: the restored version's digest and column
+        # map come back with its rows
+        return self._publish(
+            cur,
+            m,
+            "restore",
+            lambda vdir, _: self._lay_ref(vdir, version),
+            extra={"restored_from": version},
+            src=version,
         )
-
 
     def overwrite_partitions(self, df: DataFrame, part_col: str) -> int:
         """Dynamic partition overwrite as MERGE-ON-READ: DV-delete
@@ -1212,86 +1038,46 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
             want = base.schema[self._to_phys_name(c, vmap)].dataType
             if batch.schema[c].dataType != want:
                 batch = batch.withColumn(c, F.col(c).cast(want))
-        parts = batch.select(part_col).distinct()
-        tagged = self._tagged(base)
-        live = (
-            tagged.join(self._dv_df(dv_dir), ["_file", "_pos"], "left_anti")
-            if dv_dir is not None
-            else tagged
-        )
-        if vmap:
-            live = live.select(
-                *[F.col(p).alias(l) for l, p in vmap], "_file", "_pos"
+        with self._written_once(
+            batch, lambda d: self._upd_out(d, vmap, base), vmap
+        ) as (upd, bd):
+            # the replaced partitions, read back from the written files
+            # (one column) — not a second run of the batch plan
+            parts = (
+                self.spark.read.parquet(upd)
+                .select(F.col(self._to_phys_name(part_col, vmap)).alias(part_col))
+                .distinct()
             )
-        hit_rows = live.join(F.broadcast(parts), part_col, "semi").persist()
-        try:
-            with self._written_once(
-                batch, lambda d: self._upd_out(d, vmap, base), vmap
-            ) as (upd, bd):
-                hits = self._relativize_dv(hit_rows.select("_file", "_pos"))
+            hit_rows = (
+                self._live_tagged(base, dv_dir, vmap)
+                .join(F.broadcast(parts), part_col, "semi")
+                .persist()
+            )
+            try:
                 old_d = (
                     dataset_fingerprint(hit_rows.select(*cols))
                     .collect()[0]
                     .asDict()
                 )
                 wfiles = self._wfiles_of(hit_rows)
-                attempts = 0
-                while True:
-                    new_dv = (
-                        hits
-                        if dv_dir is None
-                        else self.spark.read.parquet(dv_dir)
-                        .select("_file", "_pos")
-                        .unionByName(hits)
-                    )
-                    digest = _fold_digest(self._record(v), plus=bd, minus=old_d)
-                    ref = self._base_ref(data_dir)
-                    ref["appends"] = self._rebase_appends(v) + ["self"]
-                    if self._dead_of(v):
-                        ref["dead"] = self._dead_of(v)
-
-                    def populate(
-                        vdir: str, new_dv=new_dv, ref=ref, v=v
-                    ) -> None:
-                        self._link_files(upd, os.path.join(vdir, "_upd"))
-                        new_dv.write.mode("overwrite").parquet(
-                            os.path.join(vdir, "_dv")
-                        )
-                        with open(os.path.join(vdir, "_dv.json"), "w") as f:
-                            json.dump(ref, f)
-                        self._inherit_sidecars(self._vdir(v), vdir)
-
-                    extra = {"parent": v, "op": "dv_overwrite"}
-                    if wfiles is not None:
-                        extra["wfiles"] = wfiles
-                    if vmap:
-                        extra["columns"] = vmap
-                    if self._version_added(v):
-                        extra["added"] = self._version_added(v)
-                    if self._version_widened(v):
-                        extra["widened"] = self._version_widened(v)
-                    try:
-                        return snapshot_commit_ref(
-                            self.path, populate, digest=digest, extra=extra,
-                            expected_max=m,
-                        )
-                    except CommitConflict:
-                        attempts += 1
-                        # allow_appends=False: an append into a partition
-                        # being replaced must CONFLICT (it would survive
-                        # the replacement) — Delta's overwrite rule.
-                        # expected_max = the pinned rebased head, not
-                        # snapshot_max_commit (advice r11 — see dv_delete)
-                        v_new = self.version()
-                        if attempts > 5 or not self._interleaved_commute_dv(
-                            m, wfiles, allow_appends=False, head=v_new
-                        ):
-                            raise
-                        m = v_new
-                        v = v_new
-                        data_dir, dv_dir, _ = self._resolve(v)
-        finally:
-            hit_rows.unpersist()
+                hits = self._relativize_dv(hit_rows.select("_file", "_pos"))
+                # allow_appends=False: an append into a partition being
+                # replaced must CONFLICT (it would survive the
+                # replacement) — Delta's overwrite rule
+                return self._publish(
+                    v,
+                    m,
+                    "dv_overwrite",
+                    lambda vdir, p: self._lay_ref(vdir, p, hits=hits, upd=upd),
+                    plus=bd,
+                    minus=old_d,
+                    commutes=lambda m_, head: self._interleaved_commute_dv(
+                        m_, wfiles, allow_appends=False, head=head
+                    ),
+                    extra=None if wfiles is None else {"wfiles": wfiles},
+                )
+            finally:
+                hit_rows.unpersist()
 
     def optimize(
         self,
@@ -1475,25 +1261,23 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
         extra: dict | None = None,
         expected_max: int | None = None,
     ) -> int:
-        """snapshot_commit + manifest maintenance: every published
-        version carries its own ``_manifest.json`` over the
-        configured stat columns, so the skipping layer is never stale
-        — the manifest is derived from the version's own files AFTER
-        they land (no sidecar can disagree with the data it
-        describes). CHECK constraints are enforced here, so every
-        copy-commit path (create/merge/overwrite/optimize) inherits
-        them; DV deletes skip the probe — removing rows cannot
-        introduce a violation. ``extra`` lands INSIDE the commit
-        record (atomic with it) — the streaming sink's txn marker."""
+        """Copy commit — create, merge, the streaming merge sink and
+        ``cdf_consume``: ``df`` IS the new version's content. It is
+        written once (:meth:`_written_once`, which observes its digest
+        and CHECK counts on that write) and the written files become
+        the version's own; the zone-map and bloom sidecars are built
+        from them inside the commit's staging dir — basename-keyed,
+        they survive the publish rename, and a crash can never strand
+        a published version without its manifests (ADVICE r10).
+        ``extra`` lands INSIDE the commit record (atomic with it) — the
+        streaming sink's txn marker. A conflict always surfaces
+        (transact() re-applies the op)."""
         # OCC stale-inputs guard: callers that derive their write set
         # from the table state capture the allocation high-water at
         # THEIR entry and pass it; a direct _commit (streaming sink,
-        # tests) captures here, which still covers the whole
-        # write+digest window
+        # tests) captures here, which still covers the whole write
         if expected_max is None:
             _, expected_max = resolve_entry(self.path)
-        if self.constraints:
-            self._check_rows(df, self.constraints)
         # every record carries its PARENT (the version current at
         # commit time), so lineage — not version arithmetic — defines
         # the published chain; after a rollback the abandoned branch's
@@ -1507,7 +1291,7 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
         # columns extend the map, with a suffix if the logical name
         # collides with a retired physical name
         vmap = self._current_map()
-        if vmap and "columns" not in extra:
+        if vmap:
             vmap = [list(e) for e in vmap]
             used_phys = {p for _, p in vmap}
             for c in df.columns:
@@ -1515,7 +1299,9 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
                     phys = c if c not in used_phys else f"{c}_p{extra['parent']}"
                     vmap.append([c, phys])
                     used_phys.add(phys)
-            df = self._to_physical(df, vmap)
+            # map order: the order reads serve, so the observed digest
+            # hashes each row as read() renders it
+            df = df.select(*[l for l, _ in vmap])
             extra["columns"] = vmap
         if self.stat_cols:
             # same JSON-round-trip guard as layout.write_with_stats:
@@ -1528,8 +1314,9 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
                 StringType,
             )
 
+            phys_schema = self._to_physical(df, vmap).schema
             for c in self.stat_cols:
-                dt = df.schema[c].dataType
+                dt = phys_schema[c].dataType
                 if not (
                     isinstance(dt, (NumericType, StringType, BooleanType))
                     and not isinstance(dt, DecimalType)
@@ -1539,17 +1326,110 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
                         "only int/float/string/boolean stats round-trip "
                         "through the JSON manifest"
                     )
-        # sidecars are built INSIDE the commit's staging dir (the
-        # decorate hook) — basename-keyed, they survive the publish
-        # rename, and a crash can never strand a published version
-        # without its manifests (ADVICE r10: the build-after-publish
-        # order left scan()/lookup() raising FileNotFoundError)
-        return snapshot_commit(
-            df,
-            self.path,
-            extra=extra,
-            expected_max=expected_max,
-            decorate=self._build_sidecars,
-        )
+        # cheap early stale-inputs check — fail before the expensive write
+        _check_expected_max([snapshot_max_commit(self.path)], expected_max)
+        with self._written_once(
+            df, lambda d: self._to_physical(d, vmap), vmap
+        ) as (out, digest):
 
+            def populate(vdir: str) -> None:
+                self._link_files(out, vdir)
+                self._build_sidecars(vdir)
 
+            return snapshot_commit_ref(
+                self.path,
+                populate,
+                digest=digest,
+                extra=extra,
+                expected_max=expected_max,
+            )
+
+    def _publish(
+        self,
+        v: int,
+        m: int,
+        op: str,
+        lay: Callable[[str, int], None],
+        plus: dict | None = None,
+        minus: dict | None = None,
+        commutes: Callable[[int, int], bool] | None = None,
+        extra: dict | None = None,
+        src: int | None = None,
+    ) -> int:
+        """Publish a reference commit chaining on version ``v``, for an
+        op that entered at allocation high-water ``m``. ``lay(vdir,
+        parent)`` lays the version's content; the record carries the
+        digest of ``src``'s record (default: the parent's) folded with
+        ``plus`` − ``minus``, and that record's ``columns``, ``added``
+        and ``widened`` entries (a reference commit serves the same
+        files, so metadata-added columns still need backfill), under
+        ``extra``.
+
+        On a CommitConflict, ``commutes(m, head)`` says whether every
+        commit that landed after ``m`` commutes with this op. If so,
+        the op rebases onto ``head`` — re-laid, digest re-folded — and
+        retries, at most 5 times; otherwise (or with no ``commutes``)
+        the conflict surfaces and transact() re-applies the op. The
+        head is pinned ONCE and becomes BOTH the classification bound
+        and the retry's expected_max: snapshot_max_commit here would
+        let an in-flight commit (record landed, pointer flip pending)
+        pass the stale-inputs check while the rebase chains past it —
+        a lost update (advice r11)."""
+        attempts = 0
+        while True:
+            rec = self._record(v if src is None else src)
+            ext = {k: rec[k] for k in ("columns", "added", "widened") if rec.get(k)}
+            ext.update(extra or {}, parent=v, op=op)
+            try:
+                return snapshot_commit_ref(
+                    self.path,
+                    lambda vdir, p=v: lay(vdir, p),
+                    digest=_fold_digest(rec, plus, minus),
+                    extra=ext,
+                    expected_max=m,
+                )
+            except CommitConflict:
+                attempts += 1
+                head = self.version()
+                if commutes is None or attempts > 5 or not commutes(m, head):
+                    raise
+                m = v = head
+
+    def _lay_ref(
+        self,
+        vdir: str,
+        p: int,
+        hits: DataFrame | None = None,
+        upd: str | None = None,
+    ) -> None:
+        """Lay a reference commit over version ``p``'s file universe into
+        ``vdir``: ``upd``'s written files as the version's own ``_upd``
+        dir, ``p``'s deletion vector unioned with the ``hits`` positions
+        (or carried unchanged), the ``_dv.json`` pointer, and ``p``'s
+        sidecars — superset sidecars stay conservative-correct under a
+        DV (extra hits cost a file read, never a row), and laid here
+        they publish atomically with the version (code-review r9)."""
+        data_dir, dv_dir, _ = self._resolve(p)
+        if upd is not None:
+            self._link_files(upd, os.path.join(vdir, "_upd"))
+        if hits is None:
+            self._carry_dv(dv_dir, vdir)
+        else:
+            if dv_dir is not None:
+                hits = (
+                    self.spark.read.parquet(dv_dir)
+                    .select("_file", "_pos")
+                    .unionByName(hits)
+                )
+            hits.write.mode("overwrite").parquet(os.path.join(vdir, "_dv"))
+        # a base in a CLONE source keeps its absolute reference form;
+        # inherited appended-row dirs stay part of the file universe
+        ref = self._base_ref(data_dir)
+        appends = self._rebase_appends(p) + (["self"] if upd else [])
+        if appends:
+            ref["appends"] = appends
+        if self._dead_of(p):
+            ref["dead"] = self._dead_of(p)
+        with open(os.path.join(vdir, "_dv.json"), "w") as f:
+            json.dump(ref, f)
+        self._inherit_sidecars(self._vdir(p), vdir)

@@ -38,12 +38,7 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from .layout import (
-    CommitConflict,
-    dataset_fingerprint,
-    resolve_entry,
-    snapshot_commit_ref,
-)
+from .layout import dataset_fingerprint, resolve_entry
 
 
 class _CompactMixin:
@@ -227,7 +222,6 @@ class _CompactMixin:
         data_dir, dv_dir, appends = self._resolve(v)
         if dv_dir is None:
             return None  # copy commit: no DV, no appends — nothing to fold
-        vmap = self._version_map(v)
         dead = self._dead_abs(v)
         by_dir: dict[str, list[str]] = {
             d: [
@@ -310,134 +304,75 @@ class _CompactMixin:
                     "not content-identical; refusing to publish"
                 )
 
-            # Publish loop: the commit attempt absorbs interleaved
-            # BLIND APPENDS by re-basing onto the append head (r11,
-            # the WriteSerializable rule the DML arms already apply):
-            # an append touches no existing file and no DV, so the
-            # victim census, the rewritten survivor slice, and the
-            # content-identity proof all remain valid — only the
-            # appends chain, residual-DV source, and parent digest
-            # re-derive against the new head. Anything OTHER than an
-            # append still conflicts (Delta's OPTIMIZE-conflicts-with-
-            # writers rule, kept for every op that moves rows).
-            attempts = 0
-            v_cur = v
-            while True:
-                data_dir_c, dv_dir_c, appends_c = self._resolve(v_cur)
-                by_dir_c = {
-                    d: [
-                        os.path.join(d, f)
-                        for f in sorted(os.listdir(d))
-                        if f.startswith("part-") and f.endswith(".parquet")
-                    ]
-                    for d in (data_dir_c, *appends_c)
-                }
+            # residual DV source, appends chain and dead list derive
+            # from the parent the commit chains on: the interleaved
+            # BLIND APPENDS the publish loop absorbs (r11) touch no
+            # existing file and no DV, so the victim census, the
+            # rewritten slice and its content-identity proof stay valid
+            vdf = F.broadcast(
+                self.spark.createDataFrame(
+                    [(p,) for p in sorted(vabs)], "_file string"
+                )
+            )
+
+            def lay(vdir: str, p: int) -> None:
+                data_dir_p, dv_dir_p, appends_p = self._resolve(p)
                 # residual DV: head entries not addressing a victim
                 # (victim deletes became physical). Stored back
                 # relative. Anti-join, not isin — a victim list in
                 # the thousands would otherwise inline as literals.
-                vdf = F.broadcast(
-                    self.spark.createDataFrame(
-                        [(p,) for p in sorted(vabs)], "_file string"
-                    )
-                )
-                residual = self._relativize_dv(
+                self._relativize_dv(
                     self._rebase_dv(
-                        self.spark.read.parquet(dv_dir_c).select(
+                        self.spark.read.parquet(dv_dir_p).select(
                             "_file", "_pos"
                         )
                     ).join(vdf, "_file", "left_anti")
-                )
-
+                ).write.mode("overwrite").parquet(os.path.join(vdir, "_dv"))
+                # linked, not moved: the survivors must outlive a
+                # conflicting attempt's wiped staging
+                self._link_files(scratch, os.path.join(vdir, "_upd"))
                 # fold fully-consumed appends dirs off the chain; keep
                 # dead entries only for files in dirs still referenced
-                new_dead_abs = set(self._dead_abs(v_cur)) | vabs
+                new_dead_abs = set(self._dead_abs(p)) | vabs
                 kept_appends: list[str] = []
-                kept_dirs = {os.path.abspath(data_dir_c)}
-                for a, d in zip(self._rebase_appends(v_cur), appends_c):
+                kept_dirs = {os.path.abspath(data_dir_p)}
+                for a, d in zip(self._rebase_appends(p), appends_p):
                     if all(
-                        os.path.abspath(f) in new_dead_abs
-                        for f in by_dir_c[d]
+                        os.path.abspath(os.path.join(d, f)) in new_dead_abs
+                        for f in os.listdir(d)
+                        if f.startswith("part-") and f.endswith(".parquet")
                     ):
                         continue  # every file dead → dir leaves
                     kept_appends.append(a)
                     kept_dirs.add(os.path.abspath(d))
                 root = os.path.abspath(self.path) + os.sep
                 dead_out = sorted(
-                    (p[len(root):] if p.startswith(root) else p)
-                    for p in new_dead_abs
-                    if os.path.dirname(p) in kept_dirs
+                    (q[len(root):] if q.startswith(root) else q)
+                    for q in new_dead_abs
+                    if os.path.dirname(q) in kept_dirs
                 )
-
-                ref = self._base_ref(data_dir_c)
+                ref = self._base_ref(data_dir_p)
                 ref["appends"] = kept_appends + ["self"]
                 if dead_out:
                     ref["dead"] = dead_out
+                with open(os.path.join(vdir, "_dv.json"), "w") as f:
+                    json.dump(ref, f)
+                # inherited sidecars stay conservative-correct: victim
+                # basenames are pruned from survivor lists driver-side
+                # (scan/lookup consult the dead set), rewritten files
+                # ride the always-read appends path until OPTIMIZE
+                self._inherit_sidecars(self._vdir(p), vdir)
 
-                def populate(vdir: str, residual=residual, ref=ref,
-                             v_src=v_cur) -> None:
-                    residual.write.mode("overwrite").parquet(
-                        os.path.join(vdir, "_dv")
-                    )
-                    # linked, not moved: the survivors must outlive a
-                    # conflicting attempt's wiped staging
-                    self._link_files(scratch, os.path.join(vdir, "_upd"))
-                    with open(os.path.join(vdir, "_dv.json"), "w") as f:
-                        json.dump(ref, f)
-                    # inherited sidecars stay conservative-correct:
-                    # victim basenames are pruned from survivor lists
-                    # driver-side (scan/lookup consult the dead set),
-                    # rewritten files ride the always-read appends
-                    # path until OPTIMIZE
-                    self._inherit_sidecars(
-                        self._vdir(v_src), vdir
-                    )
+            def only_appends(m_: int, head: int) -> bool:
+                # anything OTHER than an append still conflicts
+                # (Delta's OPTIMIZE-conflicts-with-writers rule, kept
+                # for every op that moves rows)
+                walked = self._walk_range(head, m_)
+                return bool(walked) and all(
+                    rec.get("op") == "append" for rec in walked.values()
+                )
 
-                with open(
-                    os.path.join(self.path, "_commits", f"{v_cur}.json")
-                ) as f:
-                    parent = json.load(f)
-                extra: dict = {"parent": v_cur, "op": "compact"}
-                if vmap:
-                    extra["columns"] = vmap
-                if self._version_added(v_cur):
-                    extra["added"] = self._version_added(v_cur)
-                if self._version_widened(v_cur):
-                    extra["widened"] = self._version_widened(v_cur)
-                try:
-                    return snapshot_commit_ref(
-                        self.path,
-                        populate,
-                        digest={
-                            k: parent[k]
-                            for k in ("n_rows", "xor_hash", "sum_hash_mod")
-                        },
-                        extra=extra,
-                        expected_max=m,
-                    )
-                except CommitConflict:
-                    attempts += 1
-                    # pin the rebased head ONCE; it is both the walk
-                    # bound and the retry's expected_max. Refreshing
-                    # expected_max from snapshot_max_commit here would
-                    # let an in-flight commit (record landed, _latest
-                    # flip pending, so m > version()) pass
-                    # _check_expected_max while this retry publishes
-                    # parent=version() — silently dropping that
-                    # commit's rows from the chain (advice r11)
-                    v_new = self.version()
-                    walked = self._walk_range(v_new, m)
-                    if (
-                        attempts > 5
-                        or walked is None
-                        or not walked
-                        or any(
-                            rec.get("op") != "append"
-                            for rec in walked.values()
-                        )
-                    ):
-                        raise
-                    m = v_new
-                    v_cur = v_new
+            # the digest is the parent's: compaction is content-identical
+            return self._publish(v, m, "compact", lay, commutes=only_appends)
         finally:
             shutil.rmtree(scratch, ignore_errors=True)

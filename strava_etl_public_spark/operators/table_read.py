@@ -488,14 +488,14 @@ class _TableReadMixin:
 
     @staticmethod
     def _link_files(src: str, dst: str) -> None:
-        """Lay every file of ``src`` into a new ``dst`` dir. LINK, not
+        """Lay every file of ``src`` into the ``dst`` dir. LINK, not
         move: a conflicting commit attempt's staging is wiped, and the
         written files must outlive it for the retry. Hard links make
         that free on one filesystem (the table IS one directory tree);
         copy2 is the cross-device fallback."""
         import shutil
 
-        os.makedirs(dst)
+        os.makedirs(dst, exist_ok=True)
         for fn in os.listdir(src):
             s, d = os.path.join(src, fn), os.path.join(dst, fn)
             try:

@@ -272,19 +272,6 @@ class _SchemaMixin:
         silently lineage-orphaned)."""
         cur, m = resolve_entry(self.path)
         data_dir, dv_dir, cur_appends = self._resolve(cur)
-        ref = self._base_ref(data_dir)
-        old_appends = self._rebase_appends(cur)
-        if old_appends:
-            ref["appends"] = old_appends
-        if self._dead_of(cur):
-            ref["dead"] = self._dead_of(cur)
-
-        def populate(vdir: str) -> None:
-            self._carry_dv(dv_dir, vdir)
-            with open(os.path.join(vdir, "_dv.json"), "w") as f:
-                json.dump(ref, f)
-            self._inherit_sidecars(self._vdir(cur), vdir)
-
         if rescan:
             # a narrowed (or NULL-widened) logical view hashes
             # differently — one fingerprint aggregate over the new
@@ -331,7 +318,7 @@ class _SchemaMixin:
             extra["widened"] = widened
         return snapshot_commit_ref(
             self.path,
-            populate,
+            lambda vdir: self._lay_ref(vdir, cur),
             digest=digest,
             extra=extra,
             expected_max=m,

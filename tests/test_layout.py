@@ -346,11 +346,27 @@ def test_dataset_fingerprint_multiset_invariance(spark):
 # ---------------------------------------------------------------------------
 
 
+def _commit_df(df, t):
+    """Commit ``df`` as the next snapshot of the table at ``t`` through
+    ``snapshot_commit_ref``: its files are the version's own, its
+    fingerprint the record's digest."""
+    from strava_etl_public_spark.operators.layout import (
+        dataset_fingerprint,
+        snapshot_commit_ref,
+    )
+
+    digest = dataset_fingerprint(df).collect()[0].asDict()
+
+    def populate(vdir: str) -> None:
+        df.write.mode("overwrite").parquet(vdir)
+
+    return snapshot_commit_ref(t, populate, digest=digest)
+
+
 def test_snapshot_commit_read_rollback_history(spark, tmp_path):
     import pandas as pd
 
     from strava_etl_public_spark.operators.layout import (
-        snapshot_commit,
         snapshot_history,
         snapshot_read,
         snapshot_rollback,
@@ -358,10 +374,10 @@ def test_snapshot_commit_read_rollback_history(spark, tmp_path):
     )
 
     t = str(tmp_path / "tbl")
-    v1 = snapshot_commit(
+    v1 = _commit_df(
         spark.createDataFrame(pd.DataFrame({"k": [1, 2], "v": ["a", "b"]})), t
     )
-    v2 = snapshot_commit(
+    v2 = _commit_df(
         spark.createDataFrame(pd.DataFrame({"k": [1, 2, 3], "v": ["a", "B", "c"]})), t
     )
     assert (v1, v2) == (1, 2)
@@ -378,7 +394,7 @@ def test_snapshot_commit_read_rollback_history(spark, tmp_path):
     assert snapshot_read(spark, t, 2).count() == 3  # still time-travelable
 
     # a commit AFTER rollback must NOT overwrite the published v2
-    v3 = snapshot_commit(
+    v3 = _commit_df(
         spark.createDataFrame(pd.DataFrame({"k": [9], "v": ["z"]})), t
     )
     assert v3 == 3
@@ -406,7 +422,6 @@ def test_snapshot_occ_and_vacuum(spark, tmp_path):
     import pytest
 
     from strava_etl_public_spark.operators.layout import (
-        snapshot_commit,
         snapshot_history,
         snapshot_read,
         snapshot_rollback,
@@ -415,7 +430,7 @@ def test_snapshot_occ_and_vacuum(spark, tmp_path):
 
     t = str(tmp_path / "tbl")
     for i in range(4):
-        snapshot_commit(
+        _commit_df(
             spark.createDataFrame(pd.DataFrame({"k": list(range(i + 1))})), t
         )
 
@@ -427,7 +442,7 @@ def test_snapshot_occ_and_vacuum(spark, tmp_path):
     rogue = os.path.join(t, "_commits", "5.json")
     with open(rogue, "w") as f:
         json.dump({"version": 5, "n_rows": 99}, f)
-    v6 = snapshot_commit(spark.createDataFrame(pd.DataFrame({"k": [0]})), t)
+    v6 = _commit_df(spark.createDataFrame(pd.DataFrame({"k": [0]})), t)
     assert v6 == 6  # skipped past the foreign commit
     assert json.load(open(rogue))["n_rows"] == 99  # untouched
     with pytest.raises(FileExistsError):
@@ -548,14 +563,13 @@ def test_snapshot_commit_ref_crash_publishes_nothing(spark, tmp_path):
     import pytest
 
     from strava_etl_public_spark.operators.layout import (
-        snapshot_commit,
         snapshot_commit_ref,
         snapshot_read,
         snapshot_version,
     )
 
     t = str(tmp_path / "tbl")
-    snapshot_commit(spark.range(1, 4).selectExpr("id AS k"), t)
+    _commit_df(spark.range(1, 4).selectExpr("id AS k"), t)
     assert snapshot_version(t) == 1
 
     def boom(vdir: str) -> None:

@@ -1,5 +1,6 @@
-"""The batch of an append / partition overwrite / update runs ONCE: its
-commit digest and CHECK counts are observed on the parquet write
+"""The batch of every data commit (append, partition overwrite, update,
+and the copy commits: create, merge) runs ONCE: its commit digest and
+CHECK counts are observed on the parquet write
 (``ManagedTable._written_once``), the observed count is cross-checked
 against the written files' footers, and the parent's deletion vector
 is carried without a Spark job.
@@ -92,16 +93,16 @@ def test_digest_matches_deterministic_batches(spark, t):
     _assert_digest_exact(t, v)
 
 
-def _counted(spark, batch):
-    """``batch`` with its ``id`` passed through a Python UDF that counts
-    the rows it sees in an accumulator: (batch, accumulator)."""
+def _counted(spark, batch, col="id"):
+    """``batch`` with its ``col`` passed through a Python UDF that
+    counts the rows it sees in an accumulator: (batch, accumulator)."""
     acc = spark.sparkContext.accumulator(0)
 
     def tap(x):
         acc.add(1)
         return x
 
-    return batch.withColumn("id", F.udf(tap, "long")("id")), acc
+    return batch.withColumn(col, F.udf(tap, "long")(col)), acc
 
 
 def test_batch_plan_runs_once_per_append(spark, t):
@@ -113,6 +114,44 @@ def test_batch_plan_runs_once_per_append(spark, t):
     v = t.append(batch)
     assert acc.value == 7
     _assert_digest_exact(t, v)
+
+
+def test_overwrite_runs_batch_once(spark, t):
+    """The replaced-partition list is read from the written files, so a
+    UDF that produces the partition column counts each row once."""
+    batch, acc = _counted(
+        spark, _batch(spark, [600, 601, 604], ts="2024-01-01 00:00:00"), "part"
+    )
+    v = t.overwrite_partitions(batch, "part")
+    assert acc.value == 3
+    got = sorted((r["part"], r["id"]) for r in t.read(v).collect())
+    assert [i for p, i in got if p == 1] == [601, 604]
+    assert [i for p, i in got if p != 1] == [600, 2, 5, 8, 11]
+    _assert_digest_exact(t, v)
+
+
+def test_merge_runs_source_once_under_constraints(spark, t):
+    """A MERGE into a table with two CHECK constraints evaluates them on
+    its one write: the source's counting UDF sees its row once."""
+    t.add_constraint("val_pos", "value > 0")
+    t.add_constraint("id_pos", "id > 0")
+    src, acc = _counted(
+        spark, _batch(spark, [700], ts="2024-01-01 00:00:00")
+    )
+    v = t.merge(src)
+    assert acc.value == 1
+    assert t.read(v).filter(F.col("id") == 700).count() == 1
+    _assert_digest_exact(t, v)
+
+
+def test_violating_merge_leaves_table_unchanged(spark, t):
+    t.add_constraint("val_pos", "value > 0")
+    v0 = t.version()
+    bad = spark.createDataFrame([(777, 0, -1.0, None)], SCHEMA)
+    with pytest.raises(ValueError, match=r"val_pos.*777"):
+        t.merge(bad)
+    assert t.version() == v0
+    assert not stage_litter(t.path)
 
 
 def test_conflict_rebase_does_not_rerun_the_batch(spark, t, monkeypatch):
@@ -210,3 +249,54 @@ def test_dv_carried_through_append(spark, t):
                 assert a.read() == b.read()
     assert sorted(r["id"] for r in t.read(v).collect()) == [1, 3, 5, 7, 9, 11, 101]
     _assert_digest_exact(t, v)
+
+
+def test_every_op_publishes_the_digest_of_its_rows(spark, tmp_path):
+    """Directed walk over every op that publishes a version: after each,
+    the commit record's digest equals a live re-fingerprint of what the
+    version reads."""
+    rows = [(i, i % 3, float(i), int(i)) for i in range(1, 13)]
+    df = spark.createDataFrame(rows, "id long, part long, value double, n int")
+    t = ManagedTable.create(
+        df.repartition(3), str(tmp_path / "t"), key="id", stat_cols=["id"]
+    )
+    steps = [("create", t.version())]
+
+    def src(ids, value):
+        return spark.createDataFrame(
+            [(i, i % 3, value, int(i)) for i in ids],
+            "id long, part long, value double, n int",
+        )
+
+    steps.append(("merge", t.merge(src([2, 20], 2.5))))
+    steps.append(("delete", t.delete(F.col("id").isin(1, 4))))
+    steps.append(("update", t.update(F.col("id") == 5, {"value": F.lit(9.0)})))
+    steps.append(("append", t.append(src([30, 31], 3.0))))
+    steps.append(("overwrite_partitions", t.overwrite_partitions(src([33], 4.0), "part")))
+    steps.append(("compact", t.compact(dead_frac=0.01)))
+    steps.append(("rename_column", t.rename_column("value", "val")))
+    merged = spark.createDataFrame(
+        [(6, 0, 6.5, 6), (40, 1, 4.0, 40)], "id long, part long, val double, n int"
+    )
+    steps.append(("merge under a map", t.merge(merged)))
+    appended = spark.createDataFrame(
+        [(41, 2, 4.1, 41)], "id long, part long, val double, n int"
+    )
+    steps.append(("append under a map", t.append(appended)))
+    steps.append(("add_column", t.add_column("note", "string")))
+    steps.append(("widen_column", t.widen_column("n", "bigint")))
+    evolved = spark.createDataFrame(
+        [(7, 1, 7.5, 7, "x", "tagged")],
+        "id long, part long, val double, n long, note string, tag string",
+    )
+    steps.append(("merge evolve_schema", t.merge(evolved, evolve_schema=True)))
+    steps.append(("drop_column", t.drop_column("note")))
+    steps.append(("optimize", t.optimize()))
+    steps.append(("optimize cluster_by", t.optimize(cluster_by=["id"])))
+    steps.append(("restore", t.restore(3)))
+    for name, v in steps:
+        assert v is not None, name
+        _assert_digest_exact(t, v)
+    c = t.clone(str(tmp_path / "c"))
+    _assert_digest_exact(c, c.version())
+    assert len(steps) + 1 == 18

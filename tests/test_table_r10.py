@@ -1,6 +1,6 @@
 """Round-10 regression tests — the five ADVICE r10 findings.
 
-1. (high) snapshot_commit copy commits stage privately and rename
+1. (high) copy commits (ManagedTable._commit) stage privately and rename
    only after winning the record race — a losing concurrent writer
    can never scribble over a winner's published v{n} data.
 2. (medium) every op captures the allocation high-water BEFORE
