@@ -683,7 +683,7 @@ def main() -> int:
     # regression must fail the bench run, not just dent a number in a
     # report nobody re-reads (round-2 verdict item). Gate errors are
     # themselves isolated so a broken gate can't zero the timings.
-    # Round-5 knee configs (scripts/ann_tune.py): LSH 4x12 and IVF
+    # Round-5 knee configs (scripts/scale.py ann_tune): LSH 4x12 and IVF
     # nprobe=8/iters=1 both measure 0.9 at sf0.1 — the floor buys 0.1
     # of regression margin instead of r4's 0.025.
     RECALL_FLOOR = 0.8

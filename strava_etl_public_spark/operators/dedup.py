@@ -492,7 +492,7 @@ def incremental_minhash_clusters(
     batch docs). State is probed with broadcast-able joins keyed by
     bucket / doc id (batch bucket keys and verified pairs are both
     small); no stage shuffles corpus text. Measured at gen scale in
-    scripts/scale_smoke_incremental.py.
+    scripts/scale.py incremental.
     """
     from pyspark import StorageLevel
 

@@ -614,7 +614,7 @@ SNAPSHOT_CKPT_EVERY = 25
 #: one JSON file (parse cost ~µs/entry, zero extra deps on the read
 #: path); at/above, it is written as ONE parquet file via pyarrow at
 #: 10k rows/row-group — measured at 10⁵ versions
-#: (scripts/scale_smoke_lineage_pq.py, table in SCALE.md): 2.5×
+#: (scripts/scale.py lineage_pq, table in SCALE.md): 2.5×
 #: smaller on disk (1.2 vs 3.0 MB) and the TIMESTAMP RESOLVE — the
 #: hot consumer — answers from row-group stats + one group in 8 ms
 #: vs the JSON twin's 77 ms full parse (9.4×; the no-checkpoint walk

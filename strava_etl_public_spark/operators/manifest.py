@@ -30,7 +30,7 @@ existing pruning proof carries over. File entries key BASENAMES in
 both formats (staging-rename- and relocation-proof, the r10 advisor
 contract).
 
-Scale measurement (scripts/scale_smoke_manifest.py, local[32],
+Scale measurement (scripts/scale.py manifest, local[32],
 recorded in SCALE.md): at 10⁶ file entries the JSON manifest is
 103 MB serialized in 13.7 s of driver time per commit and re-parsed
 (1.3 s, 10⁶ dict rows) on every pruned scan; the parquet manifest is
@@ -55,7 +55,7 @@ from pyspark.sql import functions as F
 
 # Above this many files per version, a JSON manifest is the wrong
 # representation: the driver materializes every entry on each commit
-# AND each scan. Measured (scripts/scale_smoke_manifest.py): at 10⁴
+# AND each scan. Measured (scripts/scale.py manifest): at 10⁴
 # entries the JSON dict walk still beats the Spark job's fixed cost
 # (0.02 s vs 0.9 s prune), at 10⁵ the two are within 2× of each other
 # (~7 MB JSON), at 10⁶ parquet wins on every axis (build 13.7 s →

@@ -231,7 +231,7 @@ def ivf_assign_arrow(
     (6 dp) and (cos desc, cent_id asc) tie-break; results can differ
     from the fold only if a cosine lands within FP-noise of a rounding
     boundary, so the oracle-gated query keeps the fold and the scale
-    path uses this (scale_smoke_ann: JVM fold 802 vecs/s at a 20k
+    path uses this (scripts/scale.py ann: JVM fold 802 vecs/s at a 20k
     corpus; Arrow 4,482 vecs/s at 200k — 5.6x end-to-end on a 10x
     corpus, exact-matching the fold on the fixture).
     """
@@ -265,126 +265,6 @@ def ivf_assign_arrow(
                     id_col: np.repeat(pdf[id_col].to_numpy(), reps),
                     vec_col: [v for v in pdf[vec_col] for _ in range(reps)],
                     "cent_id": cent_ids[idx].ravel(),
-                }
-            )
-
-    vec_type = dict(emb.dtypes)[vec_col]
-    return emb.select(id_col, vec_col).mapInPandas(
-        assign, schema=f"{id_col} long, {vec_col} {vec_type}, cent_id long"
-    )
-
-
-def ivf_assign_arrow_hier(
-    emb: DataFrame,
-    centroids: DataFrame,
-    id_col: str,
-    vec_col: str,
-    nprobe: int = 1,
-    group_probe: int = 4,
-    n_groups: int | None = None,
-) -> DataFrame:
-    """TWO-LEVEL (hierarchical) IVF assignment — the build-time cut
-    (r13, verdict #9). The flat :func:`ivf_assign_arrow` scores every
-    vector against ALL k centroids and full-lexsorts the (batch, k)
-    sheet; at 10⁷ vectors × 4096 centroids that one pass is the
-    measured 835 s build wall (SCALE.md crossover table). Here the
-    centroids are first clustered DRIVER-SIDE into ~√k groups
-    (deterministic k-means over ≤ a few thousand rows — microseconds,
-    stride init, no RNG), each vector routes through its top
-    ``group_probe`` groups (one small matmul), and only those
-    groups' member centroids are scored and rank-selected — per
-    vector ~(√k·(1+group_probe)) dots instead of k, and the
-    tie-break sort runs over the visited candidates only. FAISS's
-    two-level coarse quantizer, Arrow-vectorized.
-
-    Selection semantics within the visited set are IDENTICAL to the
-    flat path (round(cos, 6) desc, cent_id asc); the approximation is
-    only WHICH centroids are visited. With ``group_probe >=
-    n_groups`` every centroid is visited and the result equals the
-    flat assignment exactly (pinned in tests); smaller group_probe
-    trades boundary-vector assignments for the ~5–15× build cut —
-    downstream recall is what moves, measured at 10⁷ in
-    scripts/ann_build_sampled.py."""
-    import math
-
-    import numpy as np
-    import pandas as pd
-
-    c_pdf = centroids.toPandas()
-    spark = emb.sparkSession
-    cent_ids = c_pdf["cent_id"].to_numpy()
-    C = np.vstack(c_pdf["cent_vec"].to_numpy()).astype("float64")
-    k = len(cent_ids)
-    g = n_groups or max(1, int(math.sqrt(k)))
-    if g >= k or k <= 8:
-        return ivf_assign_arrow(emb, centroids, id_col, vec_col, nprobe)
-    order = np.argsort(cent_ids)
-    ids_s = cent_ids[order]
-    Cs = C[order] / np.linalg.norm(C[order], axis=1, keepdims=True)
-    # deterministic k-means over the centroids: stride init, cosine
-    # metric, fixed 8 iterations — tiny and reproducible
-    G = Cs[np.linspace(0, k - 1, g).astype(int)].copy()
-    lbl = np.zeros(k, dtype="int64")
-    for _ in range(8):
-        lbl = np.argmax(Cs @ G.T, axis=1)
-        for j in range(g):
-            m = lbl == j
-            if m.any():
-                v = Cs[m].mean(axis=0)
-                nv = np.linalg.norm(v)
-                if nv > 0:
-                    G[j] = v / nv
-    members = [np.flatnonzero(lbl == j) for j in range(g)]
-    gp = min(group_probe, g)
-    bc = spark.sparkContext.broadcast((ids_s, Cs, G, members))
-
-    def assign(batches):
-        ids_, Cs_, G_, members_ = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            E = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
-            En = E / np.linalg.norm(E, axis=1, keepdims=True)
-            B = len(En)
-            gs = En @ G_.T  # (B, g) — the cheap routing matmul
-            top_g = np.argpartition(-gs, gp - 1, axis=1)[:, :gp]
-            in_g = np.zeros((B, len(members_)), dtype=bool)
-            in_g[np.repeat(np.arange(B), gp), top_g.ravel()] = True
-            # score ONLY the visited groups' centroids: per group one
-            # dense matmul of the rows that routed to it, candidates
-            # collected as (row, centroid, cos) triples
-            cr, cc, cv = [], [], []
-            for j in range(len(members_)):
-                rows = np.flatnonzero(in_g[:, j])
-                mem = members_[j]
-                if not len(rows) or not len(mem):
-                    continue
-                sub = En[rows] @ Cs_[mem].T
-                cr.append(np.repeat(rows, len(mem)))
-                cc.append(np.tile(mem, len(rows)))
-                cv.append(sub.ravel())
-            rows_a = np.concatenate(cr)
-            cols_a = np.concatenate(cc)
-            cos_a = np.round(np.concatenate(cv), 6)
-            # flat-path tie-break (cos desc, cent_id asc), applied to
-            # the visited candidates only — O(candidates log) instead
-            # of the flat path's full (B, k) lexsort
-            o = np.lexsort((ids_[cols_a], -cos_a, rows_a))
-            rows_s = rows_a[o]
-            first = np.searchsorted(rows_s, rows_s)
-            keep = (np.arange(len(rows_s)) - first) < nprobe
-            sel_rows = rows_s[keep]
-            sel_cols = cols_a[o][keep]
-            counts = np.bincount(sel_rows, minlength=B)
-            yield pd.DataFrame(
-                {
-                    id_col: np.repeat(pdf[id_col].to_numpy(), counts),
-                    vec_col: [
-                        v
-                        for v, c in zip(pdf[vec_col], counts)
-                        for _ in range(c)
-                    ],
-                    "cent_id": ids_[sel_cols],
                 }
             )
 
@@ -752,8 +632,6 @@ def build_ivf_index_arrow(
     n_centroids: int = 16,
     refine_iters: int = 2,
     train_fraction: float = 1.0,
-    hier_assign: bool = False,
-    group_probe: int = 4,
 ) -> tuple[DataFrame, DataFrame]:
     """The BUILD half of IVF ANN: ``(centroids, assigned corpus)``.
 
@@ -764,12 +642,8 @@ def build_ivf_index_arrow(
     two halves separately for exactly this reason.
 
     ``train_fraction < 1`` trains the Lloyd passes on a deterministic
-    hash sample; ``hier_assign=True`` switches the full-corpus
-    assignment scan — the build's dominant cost at large k, measured
-    835 s at 10⁷×4096 (SCALE.md) — to the two-level
-    :func:`ivf_assign_arrow_hier` router (≥5× cut, r13 verdict #9;
-    assignment of boundary vectors is approximate, downstream recall
-    measured flat-equivalent in scripts/ann_build_sampled.py).
+    hash sample. The full-corpus assignment scan is the build's
+    dominant cost at large k (835 s at 10⁷×4096, SCALE.md).
 
     The assigned corpus has schema ``(n_id, n_vec, cent_id)`` —
     hash-partitioned on ``cent_id`` by the downstream candidate join.
@@ -780,12 +654,7 @@ def build_ivf_index_arrow(
             emb, cents, id_col, vec_col, iters=refine_iters, arrow=True,
             train_fraction=train_fraction,
         )
-    if hier_assign:
-        assigned = ivf_assign_arrow_hier(
-            emb, cents, id_col, vec_col, nprobe=1, group_probe=group_probe
-        )
-    else:
-        assigned = ivf_assign_arrow(emb, cents, id_col, vec_col, nprobe=1)
+    assigned = ivf_assign_arrow(emb, cents, id_col, vec_col, nprobe=1)
     corpus = assigned.select(
         F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"), "cent_id"
     )

@@ -86,7 +86,7 @@ def x_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup.incremental_minhash_clusters; only the batch is shingled/
     hashed from scratch, only bucket co-occupants of batch docs are
     re-shingled for verification (measured batch-proportional cost:
-    scripts/scale_smoke_incremental.py, SCALE.md)."""
+    scripts/scale.py incremental, SCALE.md)."""
     ensure_harness_conf(spark)
     from pyspark import StorageLevel
 
@@ -458,7 +458,7 @@ def x_sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-5 via multi-table hyperplane LSH (4 md5-derived planes
     x 12 OR-tables): equi-join on (table, bucket) bounds candidates by
     bucket occupancy; exact cosine rerank inside. Config is the
-    measured sf0.1 recall/cost knee (scripts/ann_tune.py, round 5):
+    measured sf0.1 recall/cost knee (scripts/scale.py ann_tune, round 5):
     4 planes → 16 buckets/table → recall 0.9 vs brute (5 planes x 12
     tables measured 0.725; a single 8-plane table 0.05 — the
     OR-construction is what makes the recall/cost dial real). At
@@ -487,7 +487,7 @@ def x_sim_topk_lsh_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     witness). Round-5 config: 4 planes x 12 tables — the measured
     recall/cost knee (recall 0.9 vs 0.725 at 5 planes, AND cheaper:
     wider buckets mean fewer empty-probe misses, see
-    scripts/ann_tune.py)."""
+    scripts/scale.py ann_tune)."""
     ensure_harness_conf(spark)
     emb = load(spark, sf_dir, "embeddings")
     q = emb.filter(F.expr(_QUERY_IDS))
@@ -596,9 +596,9 @@ SELECT q_id, n_id, cos, CAST(rk AS BIGINT) AS rk FROM (
 def x_sim_topk_ivf_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-gated IVF ANN top-5, Arrow path: matmul centroid
     assignment + einsum rerank — the 100 TB throughput path
-    (scale_smoke_ann at 200k vectors: 4,482 vecs/s, planted-twin
+    (scripts/scale.py ann at 200k vectors: 4,482 vecs/s, planted-twin
     recall 1.0). Config is the measured sf0.1 recall/cost knee
-    (scripts/ann_tune.py, round 5): nprobe=8 + one Lloyd iteration →
+    (scripts/scale.py ann_tune, round 5): nprobe=8 + one Lloyd iteration →
     recall 0.9 vs brute at 1.9 s, vs 0.725 at 3.9 s for the old
     nprobe=4/iters=2 — more probes buy recall at scan-bounded cost
     while each extra Lloyd pass bought nothing past the first.

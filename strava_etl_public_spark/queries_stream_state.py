@@ -750,7 +750,7 @@ def x_stream_table_sink_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
     no Arrow transport, which SCALE.md's r12 decomposition proved is
     the Python-DataSource sink's whole 3.3× floor (a do-nothing
     Arrow sink costs the same). Measured in
-    scripts/scale_smoke_sink.py; the Arrow sink
+    scripts/scale.py sink; the Arrow sink
     (``x_stream_table_sink_multi``'s path) stays as the no-closure
     fallback.
 

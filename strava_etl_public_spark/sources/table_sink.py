@@ -31,7 +31,7 @@ commit conflict with a concurrent writer rebases like
 ``ManagedTable.append`` (blind appends commute with any interleave
 that keeps the schema).
 
-Cost (measured, SCALE.md / scripts/scale_smoke_sink.py): 3.0× a
+Cost (measured, SCALE.md / scripts/scale.py sink): 3.0× a
 plain parquet writeStream at 2M rows — the md5 digest fold, whose
 per-cell work is Arrow compute and whose per-row md5 is one C call,
 parallel per partition. That is the price of the format's audit

@@ -457,7 +457,7 @@ def table_append_sink_jvm(
     no-closure fallback): SCALE.md's r12 decomposition proved that
     floor is the Arrow transport itself, so the only faster path is
     to keep the rows in the JVM — this one (measured in
-    scripts/scale_smoke_sink.py).
+    scripts/scale.py sink).
 
     Exactly-once composes the same two guards as the Arrow sink and
     ``table_merge_sink``: Spark's checkpoint replays uncommitted
@@ -799,7 +799,7 @@ def state_metrics(spark: SparkSession, state_path: str) -> dict:
     count of everything ingested (min-merge / LWW compaction on every
     swap), never by the event count — pinned per-batch in
     tests/test_state.py and measured flat at gen scale in
-    scripts/scale_smoke_stream_state.py / SCALE.md."""
+    scripts/scale.py stream_state / SCALE.md."""
     import os
 
     df = _read_state(spark, state_path)

@@ -425,94 +425,6 @@ def test_pq_incremental_encode_equals_full_reencode(spark, sf_dir):
     assert a == b and len(a) == 400 * 8
 
 
-def test_hier_assign_exact_when_all_groups_probed(spark, sf_dir):
-    """r13 (verdict #9): with group_probe >= n_groups every centroid
-    is visited, so the two-level assignment must equal the flat one
-    EXACTLY (same round-6 cosine, same (cos desc, cent_id asc)
-    tie-break) — the approximation is only which centroids are
-    visited, never the selection rule."""
-    from strava_etl_public_spark.operators.similarity import (
-        ivf_assign_arrow,
-        ivf_assign_arrow_hier,
-        lloyd_refine,
-    )
-
-    emb = load(spark, sf_dir, "embeddings")
-    cents = lloyd_refine(
-        emb,
-        seed_centroids(emb, "vec_id", "embedding", k=16),
-        "vec_id",
-        "embedding",
-        iters=1,
-        arrow=True,
-    )
-    flat = {
-        (r["vec_id"], r["cent_id"])
-        for r in ivf_assign_arrow(
-            emb, cents, "vec_id", "embedding", nprobe=2
-        ).collect()
-    }
-    hier = {
-        (r["vec_id"], r["cent_id"])
-        for r in ivf_assign_arrow_hier(
-            emb,
-            cents,
-            "vec_id",
-            "embedding",
-            nprobe=2,
-            group_probe=64,  # >= n_groups → all centroids visited
-            n_groups=4,
-        ).collect()
-    }
-    assert hier == flat
-
-
-def test_hier_assign_build_recall_close_to_flat(spark, sf_dir):
-    """The ≥5×-cheaper hier-assigned index must serve within a small
-    recall delta of the flat-assigned one on the fixture (the 10⁷
-    measurement lives in scripts/ann_build_sampled.py)."""
-    from strava_etl_public_spark.operators.similarity import (
-        build_ivf_index_arrow,
-        cosine_topk_ivf_arrow,
-    )
-
-    emb = load(spark, sf_dir, "embeddings")
-    q = emb.orderBy("vec_id").limit(8)
-
-    def recall(hier: bool) -> float:
-        idx = build_ivf_index_arrow(
-            emb,
-            "vec_id",
-            "embedding",
-            n_centroids=16,
-            refine_iters=1,
-            hier_assign=hier,
-            group_probe=2,
-        )
-        got = {
-            (r["q_id"], r["n_id"])
-            for r in cosine_topk_ivf_arrow(
-                emb,
-                q.select("vec_id"),
-                "vec_id",
-                "embedding",
-                k=5,
-                nprobe=8,
-                index=idx,
-            ).collect()
-        }
-        truth = {
-            (r["q_id"], r["n_id"])
-            for r in cosine_topk_brute(
-                emb, q, "vec_id", "embedding", k=5
-            ).select("q_id", "n_id").collect()
-        }
-        return len(got & truth) / len(truth)
-
-    r_flat, r_hier = recall(False), recall(True)
-    assert r_hier >= r_flat - 0.1, (r_flat, r_hier)
-
-
 def test_knn_join_blocked_releases_input_cache(spark):
     """r14 (r13 verdict #7): knn_join_blocked persists its 4-consumer
     input internally; the eager result barrier must release that cache
