@@ -35,6 +35,8 @@ sys.path.insert(0, _HERE)
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from strava_etl_public_spark.io import DEFAULT_SF_DIR  # noqa: E402
+
 # generated tiers: python scripts/gen_scale_tier.py <sf> /tmp/sfgen/sf<sf>
 GEN_SF01, GEN_SF1 = "/tmp/sfgen/sf0.1", "/tmp/sfgen/sf1"
 
@@ -699,7 +701,7 @@ def ann(spark, root, n_vecs=200_000, n_queries=64):
     }
 
 
-def ann_tune(spark, root, sf_dir=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")):
+def ann_tune(spark, root, sf_dir=DEFAULT_SF_DIR):
     """The ANN recall/cost sweep behind the shipped configs: recall vs
     the exact brute-force top-5 of 8 queries, and best-of-2 wall, for
     IVF over nprobe x train_fraction x refine_iters and LSH over

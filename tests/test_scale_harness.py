@@ -4,6 +4,7 @@ own checks, so a scale measurement cannot rot unnoticed."""
 from __future__ import annotations
 
 import importlib.util
+import inspect
 import os
 
 import pytest
@@ -16,9 +17,8 @@ _spec = importlib.util.spec_from_file_location(
 scale = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(scale)
 
-SF = "/root/testdata/sf0.001"
-
-# the smallest size at which each entry's checks are meaningful
+# the smallest size at which each entry's checks are meaningful; an
+# entry that reads a tier gets the fixture tier as its sf_dir
 SIZES = {
     "pipeline": dict(n_activities=4, max_len=2000),
     "text": dict(n_docs=5000),
@@ -26,16 +26,16 @@ SIZES = {
     "quality": dict(n_docs=2000),
     "cc": dict(n_chain_nodes=800),
     "rangejoin": dict(n_points=2000, n_intervals=1000),
-    "maintenance": dict(sf_dir=SF),
+    "maintenance": dict(),
     "curation": dict(n_fact=100_000, n_docs=2000),
     "dv": dict(n_events=2000),
     "update": dict(n_events=2000),
-    "incremental": dict(sf_dir=SF),
+    "incremental": dict(),
     "lineage_pq": dict(n_versions=1000),
     "manifest": dict(max_exp=4),
     "sink": dict(n_events=2000, n_batches=2),
-    "stream_state": dict(sf_dir=SF, n_batches=3, batch_size=20),
-    "ann_tune": dict(sf_dir=SF),
+    "stream_state": dict(n_batches=3, batch_size=20),
+    "ann_tune": dict(),
 }
 
 # over the tier-1 budget even at these sizes: 20-55 s each on 4 cores
@@ -50,7 +50,10 @@ def test_every_entry_has_a_size():
     "name",
     [pytest.param(n, marks=pytest.mark.slow) if n in SLOW else n for n in sorted(SIZES)],
 )
-def test_entry_ok_at_smallest_size(spark, tmp_path, name):
+def test_entry_ok_at_smallest_size(spark, sf_dir, tmp_path, name):
     ensure_harness_conf(spark)
-    res = scale.ENTRIES[name](spark, str(tmp_path), **SIZES[name])
+    entry, sizes = scale.ENTRIES[name], dict(SIZES[name])
+    if "sf_dir" in inspect.signature(entry).parameters:
+        sizes["sf_dir"] = sf_dir
+    res = entry(spark, str(tmp_path), **sizes)
     assert res["ok"], res
