@@ -58,15 +58,3 @@ def is_connected(code_col: Column | str, min_len: int = 3) -> Column:
     (N13; reference firebase_functions.py:132-140)."""
     c = F.col(code_col) if isinstance(code_col, str) else code_col
     return F.coalesce(F.length(c) > min_len, F.lit(False))
-
-
-def seeded_md5(col: Column | str, seed: int | str) -> Column:
-    """Deterministic, engine-portable hash: hex md5 of ``seed:value``.
-
-    Used by MinHash/fingerprint operators — lexicographic MIN over these
-    fixed-width hex strings equals numeric min of the 128-bit hash, and
-    md5 is identical across Spark / DuckDB / Python, so oracles can
-    replicate it exactly.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.md5(F.concat(F.lit(str(seed)), F.lit(":"), c))

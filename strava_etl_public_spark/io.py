@@ -6,19 +6,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -76,16 +63,6 @@ def load(spark: SparkSession, sf_dir: str, name: str, fan: bool = False) -> Data
     """
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     return fan_out(df) if fan else df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for spark.sql use."""
-    for t in TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -174,6 +174,23 @@ def manifest_entry(vdir: str) -> dict:
         return json.load(f)
 
 
+def manifest_rows(vdir: str) -> list[dict] | None:
+    """The per-file stat rows of the manifest at ``vdir`` (None = no
+    manifest), for EITHER representation, without Spark: inline JSON
+    yields its dict rows directly; a parquet-mode manifest is read
+    with pyarrow (metadata-sized — the relation holds O(files) stat
+    rows, not data). The pyarrow batch source's zone-map input."""
+    p = os.path.join(vdir, "_manifest.json")
+    if not os.path.isfile(p):
+        return None
+    meta = manifest_entry(vdir)
+    if meta.get("format") == "parquet":
+        import pyarrow.parquet as pq
+
+        return pq.read_table(os.path.join(vdir, "_manifest_pq")).to_pylist()
+    return meta.get("files")
+
+
 def stats_survivors(
     spark: SparkSession,
     vdir: str,
@@ -302,6 +319,43 @@ def _write_bloom_json(
         json.dump(manifest, f)
 
 
+def _bloom_hits(meta: dict, value) -> list[str]:
+    """Basenames of an inline JSON bloom manifest whose filter MAY
+    contain ``value`` — all k positions set (layout's one
+    Kirsch-Mitzenmacher position definition)."""
+    from .layout import _bloom_positions_py
+
+    want = set(_bloom_positions_py(value, meta["m"], meta["k"]))
+    return [fn for fn, pos in meta["files"].items() if want <= set(pos)]
+
+
+def bloom_keep(vdir: str, col: str, values) -> set[str] | None:
+    """Basenames whose bloom on ``col`` MAY contain any of ``values``,
+    without Spark — None when the version has no bloom manifest on
+    ``col`` (no pruning). Parquet mode reads the ``_bloom_pq``
+    relation with pyarrow. The pyarrow batch source's equality prune;
+    the same probe as :func:`bloom_survivors`."""
+    p = os.path.join(vdir, "_bloom.json")
+    if not os.path.isfile(p):
+        return None
+    with open(p) as f:
+        meta = json.load(f)
+    if meta["col"] != col:
+        return None
+    if meta.get("format") != "parquet":
+        return {fn for v in values for fn in _bloom_hits(meta, v)}
+    import pyarrow.parquet as pq
+
+    from .layout import _bloom_positions_py
+
+    wants = [set(_bloom_positions_py(v, meta["m"], meta["k"])) for v in values]
+    return {
+        r["file"]
+        for r in pq.read_table(os.path.join(vdir, "_bloom_pq")).to_pylist()
+        if any(w <= set(r["positions"]) for w in wants)
+    }
+
+
 def bloom_survivors(
     spark: SparkSession, vdir: str, data_dir: str, value
 ) -> tuple[list[str], int]:
@@ -327,10 +381,8 @@ def bloom_survivors(
             for r in surv.select("file").collect()
         ]
         return keep, int(meta["n_files"])
-    wset = set(want)
     keep = [
         _resolve_manifest_file(data_dir, fname)
-        for fname, positions in meta["files"].items()
-        if wset <= set(positions)
+        for fname in _bloom_hits(meta, value)
     ]
     return keep, len(meta["files"])

@@ -23,7 +23,8 @@ Scale design (100 TB):
   — readers never block writers, and a crash leaves the previous
   version current (layout.snapshot_commit_ref's argument); every
   commit writes its data once (:meth:`ManagedTable._written_once`) and
-  publishes through one loop (:meth:`ManagedTable._publish`);
+  reference commits publish through one loop
+  (:meth:`~.table_log.TableLog._publish`);
 * MERGE is one NULL-safe full-outer shuffle on the key
   (upsert.merge_into) — broadcast when the change batch is small, AQE
   decides from runtime sizes;
@@ -67,44 +68,9 @@ from .layout import (
 from .upsert import merge_into
 
 from .table_compact import _CompactMixin
+from .table_log import _DIGEST, TableLog
 from .table_read import _TableReadMixin
 from .table_schema import _SchemaMixin
-
-#: reader features THIS build understands; tables list the subset
-#: their history actually uses (stamped on first use). An unknown
-#: listed feature makes the constructor refuse loudly — the Delta
-#: protocol-versioning contract, because both features change what
-#: EXISTING bytes mean (a dead-file-unaware reader resurrects
-#: compaction victims; a widen-unaware reader serves narrow types).
-SUPPORTED_FEATURES = {"dead-files", "type-widening"}
-
-_MOD = 1152921504606846976  # 2^60: the digest's modular-sum base
-_DIGEST = ("n_rows", "xor_hash", "sum_hash_mod")
-
-
-def _fold_digest(
-    parent: dict, plus: dict | None = None, minus: dict | None = None
-) -> dict:
-    """``parent`` + ``plus`` − ``minus`` on commit digests. Count,
-    bit-XOR and sum mod 2^60 are group operations, so a reference
-    commit's digest derives exactly from its parent record and the
-    digests of the rows it adds and removes. NULL xor/sum (aggregates
-    over zero rows) are the group identity 0."""
-    z = dict.fromkeys(_DIGEST, 0)
-    plus, minus = plus or z, minus or z
-    return {
-        "n_rows": parent["n_rows"] + plus["n_rows"] - minus["n_rows"],
-        "xor_hash": (parent["xor_hash"] or 0)
-        ^ (plus["xor_hash"] or 0)
-        ^ (minus["xor_hash"] or 0),
-        "sum_hash_mod": (
-            (parent["sum_hash_mod"] or 0)
-            + (plus["sum_hash_mod"] or 0)
-            - (minus["sum_hash_mod"] or 0)
-        )
-        % _MOD,
-    }
-
 
 def _observed(obs: Observation) -> dict:
     """The metrics a write observed (one seam, so a test can feed a
@@ -124,52 +90,26 @@ def _footer_rows(d: str) -> int:
     )
 
 
-class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
+class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin, TableLog):
     """A versioned, manifest-tracked parquet table with MERGE,
     OPTIMIZE, time travel, rollback, and vacuum — the composition of
     the operator layer's separately-proven table primitives behind one
     handle. Construct with :meth:`create` (new table) or the
-    constructor (existing table path)."""
+    constructor (existing table path). The version log itself — config
+    and feature gate, records, file universes, the reference-commit
+    publish — is :class:`~.table_log.TableLog`."""
 
     def __init__(self, spark: SparkSession, path: str):
+        super().__init__(path)
         self.spark = spark
-        self.path = path
-        cfg = os.path.join(path, "_table.json")
-        if not os.path.isfile(cfg):
-            raise ValueError(f"no managed table at {path} (missing _table.json)")
-        with open(cfg) as f:
-            meta = json.load(f)
-        self.key: list[str] = meta["key"]
-        self.stat_cols: list[str] = meta.get("stat_cols", [])
-        self.constraints: dict[str, str] = meta.get("constraints", {})
-        self.bloom_col: str | None = meta.get("bloom_col")
-        self.bloom_m: int = meta.get("bloom_m", 131072)
-        self.bloom_k: int = meta.get("bloom_k", 5)
-        # zone-map manifest representation: "auto" (default — JSON
-        # below PARQUET_MANIFEST_THRESHOLD files, distributed parquet
-        # at/above), or pinned "json"/"parquet" (operators/manifest.py)
-        self.manifest_format: str = meta.get("manifest_format", "auto")
-        # logical name → [sql_type, default_sql] applied when a WRITE
-        # omits the column (Delta's DEFAULT semantics; add_column)
-        self.column_defaults: dict[str, list] = meta.get(
-            "column_defaults", {}
-        )
-        # protocol feature gating (Delta's reader-feature contract):
-        # ops whose metadata an OLDER reader would silently misread —
-        # dead-file exclusion (resurrected victims), widened types —
-        # stamp their feature into _table.json on first use; a reader
-        # that doesn't know a listed feature must refuse the whole
-        # table rather than serve wrong rows
-        self.required_features: list[str] = meta.get(
-            "required_features", []
-        )
-        unknown = set(self.required_features) - SUPPORTED_FEATURES
-        if unknown:
-            raise ValueError(
-                f"table at {path} requires reader features "
-                f"{sorted(unknown)} this build does not support — "
-                "refusing to open (reads would be silently wrong)"
-            )
+
+    @staticmethod
+    def _commit_ref(*args, **kwargs) -> int:
+        """Every commit of this table puts its record through this
+        module's ``snapshot_commit_ref``, resolved at call time — the
+        one name commit tracing (perfbench/spans.py) and conflict
+        tests hook."""
+        return snapshot_commit_ref(*args, **kwargs)
 
     # -- lifecycle ---------------------------------------------------------
 
@@ -207,9 +147,6 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
         t._commit(df)
         return t
 
-    def version(self) -> int:
-        return snapshot_version(self.path)
-
     def read(self, version: int | None = None) -> DataFrame:
         """The table AS OF ``version`` (time travel), or latest.
         Deletion-vector versions resolve to their base snapshot's
@@ -222,13 +159,9 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
         v = snapshot_version(self.path) if version is None else version
         data_dir, dv_dir, appends = self._resolve(v)
         if dv_dir is None:
-            if os.path.isfile(os.path.join(data_dir, "_vacuumed.json")):
-                # a copy commit can never account for reclaimed files
-                # (its dead set is empty) — loud, like a vacuumed dir
-                raise ValueError(
-                    f"snapshot v{v} lost files to reclaim_dead vacuum — "
-                    "outside the retention window; refusing a partial read"
-                )
+            # a copy commit can never account for reclaimed files (its
+            # dead set is empty) — loud, like a vacuumed dir
+            self._check_tombstones(v, [data_dir], set())
             out = snapshot_read(self.spark, self.path, v)
         else:
             base = self._open_data(v, data_dir, *appends)
@@ -682,8 +615,7 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
         # digest inherited from the source's commit record — a clone's
         # logical content IS the source's, no rescan needed; the
         # source's column map carries over the same way
-        with open(os.path.join(self.path, "_commits", f"{v}.json")) as f:
-            parent = json.load(f)
+        parent = self._record(v)
         extra = {"parent": 0, "op": "clone"}
         if parent.get("columns"):
             extra["columns"] = parent["columns"]
@@ -1343,93 +1275,3 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin):
                 extra=extra,
                 expected_max=expected_max,
             )
-
-    def _publish(
-        self,
-        v: int,
-        m: int,
-        op: str,
-        lay: Callable[[str, int], None],
-        plus: dict | None = None,
-        minus: dict | None = None,
-        commutes: Callable[[int, int], bool] | None = None,
-        extra: dict | None = None,
-        src: int | None = None,
-    ) -> int:
-        """Publish a reference commit chaining on version ``v``, for an
-        op that entered at allocation high-water ``m``. ``lay(vdir,
-        parent)`` lays the version's content; the record carries the
-        digest of ``src``'s record (default: the parent's) folded with
-        ``plus`` − ``minus``, and that record's ``columns``, ``added``
-        and ``widened`` entries (a reference commit serves the same
-        files, so metadata-added columns still need backfill), under
-        ``extra``.
-
-        On a CommitConflict, ``commutes(m, head)`` says whether every
-        commit that landed after ``m`` commutes with this op. If so,
-        the op rebases onto ``head`` — re-laid, digest re-folded — and
-        retries, at most 5 times; otherwise (or with no ``commutes``)
-        the conflict surfaces and transact() re-applies the op. The
-        head is pinned ONCE and becomes BOTH the classification bound
-        and the retry's expected_max: snapshot_max_commit here would
-        let an in-flight commit (record landed, pointer flip pending)
-        pass the stale-inputs check while the rebase chains past it —
-        a lost update (advice r11)."""
-        attempts = 0
-        while True:
-            rec = self._record(v if src is None else src)
-            ext = {k: rec[k] for k in ("columns", "added", "widened") if rec.get(k)}
-            ext.update(extra or {}, parent=v, op=op)
-            try:
-                return snapshot_commit_ref(
-                    self.path,
-                    lambda vdir, p=v: lay(vdir, p),
-                    digest=_fold_digest(rec, plus, minus),
-                    extra=ext,
-                    expected_max=m,
-                )
-            except CommitConflict:
-                attempts += 1
-                head = self.version()
-                if commutes is None or attempts > 5 or not commutes(m, head):
-                    raise
-                m = v = head
-
-    def _lay_ref(
-        self,
-        vdir: str,
-        p: int,
-        hits: DataFrame | None = None,
-        upd: str | None = None,
-    ) -> None:
-        """Lay a reference commit over version ``p``'s file universe into
-        ``vdir``: ``upd``'s written files as the version's own ``_upd``
-        dir, ``p``'s deletion vector unioned with the ``hits`` positions
-        (or carried unchanged), the ``_dv.json`` pointer, and ``p``'s
-        sidecars — superset sidecars stay conservative-correct under a
-        DV (extra hits cost a file read, never a row), and laid here
-        they publish atomically with the version (code-review r9)."""
-        data_dir, dv_dir, _ = self._resolve(p)
-        if upd is not None:
-            self._link_files(upd, os.path.join(vdir, "_upd"))
-        if hits is None:
-            self._carry_dv(dv_dir, vdir)
-        else:
-            if dv_dir is not None:
-                hits = (
-                    self.spark.read.parquet(dv_dir)
-                    .select("_file", "_pos")
-                    .unionByName(hits)
-                )
-            hits.write.mode("overwrite").parquet(os.path.join(vdir, "_dv"))
-        # a base in a CLONE source keeps its absolute reference form;
-        # inherited appended-row dirs stay part of the file universe
-        ref = self._base_ref(data_dir)
-        appends = self._rebase_appends(p) + (["self"] if upd else [])
-        if appends:
-            ref["appends"] = appends
-        if self._dead_of(p):
-            ref["dead"] = self._dead_of(p)
-        with open(os.path.join(vdir, "_dv.json"), "w") as f:
-            json.dump(ref, f)
-        self._inherit_sidecars(self._vdir(p), vdir)

@@ -1,23 +1,19 @@
-"""The read/metadata face of ManagedTable — split out of table.py.
+"""The read face of ManagedTable — split out of table.py.
 
-ManagedTable grew past the repo's 1,600-line-per-file discipline when
-round 10 added conflict classification, blind append, and the signed
-change feed; this module holds the face that never writes data: the
-file-position/DV addressing helpers, the column map, lineage and
-txn-high-water walks, time travel resolution, the change feed
-(``changes`` / ``changes_signed``), manifest- and bloom-pruned reads
-(``scan`` / ``lookup``), and the sidecar builders they consult.
-Method bodies are byte-identical to their pre-split table.py versions
-(the proven r7/r9 split procedure); table.py keeps the DML face and
-``class ManagedTable(_TableReadMixin)`` composes the two. All scale
-arguments live with the methods they describe.
+This module holds the Spark face that never writes data: the
+file-position/DV addressing helpers, the column map's DataFrame
+renames, time travel resolution, the change feed (``changes`` /
+``changes_signed``), manifest- and bloom-pruned reads (``scan`` /
+``lookup``), and the sidecar builders they consult. The spark-free
+metadata underneath — records, file universes, lineage and txn walks —
+is :class:`~.table_log.TableLog`; table.py keeps the DML face and
+``class ManagedTable(..., _TableReadMixin, TableLog)`` composes them.
+All scale arguments live with the methods they describe.
 """
 
 from __future__ import annotations
 
-import json
 import os
-from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -28,9 +24,8 @@ from .layout import read_with_skipping, snapshot_history
 class _TableReadMixin:
     """Read/metadata methods of :class:`~.table.ManagedTable` — mixed
     into the one public class; never instantiated alone. Expects the
-    host to provide ``spark``, ``path``, ``key``, ``stat_cols``,
-    ``constraints``, ``bloom_col``, ``bloom_m``, ``bloom_k`` and the
-    DML face's ``version()``/``read()``."""
+    host to provide ``spark``, the :class:`~.table_log.TableLog`
+    metadata face and the DML face's ``read()``."""
 
 
     # -- file-position addressing (deletion vectors) --------------------------
@@ -86,89 +81,8 @@ class _TableReadMixin:
 
     # -- column mapping (rename / drop without rewrite) ----------------------
 
-    def _record(self, v: int) -> dict:
-        """Version ``v``'s commit record."""
-        with open(os.path.join(self.path, "_commits", f"{v}.json")) as f:
-            return json.load(f)
-
-    def _version_map(self, v: int) -> list[list[str]] | None:
-        """The [logical, physical] column map RECORDED with version
-        ``v`` (None = identity, the pre-mapping default). Versioned in
-        the commit record itself, so time travel and CDC each see the
-        schema their version was published under."""
-        p = os.path.join(self.path, "_commits", f"{v}.json")
-        if not os.path.isfile(p):
-            return None
-        with open(p) as f:
-            return json.load(f).get("columns")
-
     def _current_map(self) -> list[list[str]] | None:
         return self._version_map(self.version())
-
-    def _version_added(self, v: int) -> dict[str, str]:
-        """physical-name → SQL-type map of columns ADDED to version
-        ``v`` as pure metadata (:meth:`~.table.ManagedTable.add_column`
-        — no data rewrite) and not yet materialized by a copy commit:
-        files written before the add lack these physical columns, and
-        every read backfills them (Delta's ADD COLUMN read semantics —
-        existing rows read NULL). Versioned with the commit record, so
-        time travel before the add never sees the column and a copy
-        commit (which writes it physically) drops the marker."""
-        p = os.path.join(self.path, "_commits", f"{v}.json")
-        if not os.path.isfile(p):
-            return {}
-        with open(p) as f:
-            return json.load(f).get("added") or {}
-
-    def _version_widened(self, v: int) -> dict[str, str]:
-        """physical-name → widened SQL-type map of version ``v``
-        (:meth:`~.table_schema._SchemaMixin.widen_column` — ALTER
-        COLUMN TYPE as pure metadata): files written before the widen
-        keep the narrow physical type, and every read opens the
-        version's files under an EXPLICIT widened read schema (the
-        parquet vectorized reader upcasts at scan time). Versioned
-        with the commit record — time travel before the widen serves
-        the narrow type; a copy commit materializes the wide type and
-        drops the marker, exactly the ``added`` lifecycle."""
-        p = os.path.join(self.path, "_commits", f"{v}.json")
-        if not os.path.isfile(p):
-            return {}
-        with open(p) as f:
-            return json.load(f).get("widened") or {}
-
-    def _dead_of(self, v: int) -> list[str]:
-        """Raw stored ``dead`` file list of version ``v`` — files a
-        minor COMPACTION (:meth:`~.table_compact._CompactMixin.compact`)
-        excluded from the version's universe after rewriting their
-        survivors into an ``_upd`` dir. Entries are table-relative when
-        the file lives under this root (the DV storage convention —
-        relocation-safe) and absolute for clone-source files. Child
-        reference commits carry the list verbatim; [] on copy commits
-        and pre-compaction refs."""
-        from .layout import dataset_dir
-
-        # resolve through dataset_dir: a never-renamed publish (crash
-        # window / no-rename mode) keeps its metadata under the staged
-        # name the commit record references (r13)
-        vdir = dataset_dir(self.path, v)
-        if vdir is None:
-            return []
-        p = os.path.join(vdir, "_dv.json")
-        if not os.path.isfile(p):
-            return []
-        with open(p) as f:
-            return json.load(f).get("dead") or []
-
-    def _dead_abs(self, v: int) -> set[str]:
-        """Version ``v``'s dead files as normalized ABSOLUTE paths —
-        the form ``_open_data`` compares directory listings against.
-        O(dead files) driver work, bounded by compaction's victim
-        lists."""
-        root = os.path.abspath(self.path)
-        return {
-            e if os.path.isabs(e) else os.path.join(root, e)
-            for e in self._dead_of(v)
-        }
 
     def _open_data(self, v: int, *paths: str) -> DataFrame:
         """Physical rows of version ``v`` read from ``paths`` with
@@ -188,25 +102,7 @@ class _TableReadMixin:
         read(), scan()/lookup() survivor opens, DELETE/UPDATE/
         overwrite predicate scans, CDC — inherits the exclusion."""
         dead = self._dead_abs(v)
-        # file-level-vacuum tombstones: a directory that lost files to
-        # reclaim_dead serves a version ONLY if that version already
-        # counted every removed file dead — anything else is a version
-        # aged out of retention, and it must fail loudly, never read
-        # partial (the dir-level vacuum contract at file granularity)
-        for p in paths:
-            tp = os.path.join(p, "_vacuumed.json") if os.path.isdir(p) else None
-            if tp and os.path.isfile(tp):
-                with open(tp) as f:
-                    tomb = json.load(f).get("files", [])
-                removed = {
-                    os.path.abspath(os.path.join(p, b)) for b in tomb
-                }
-                if not removed <= dead:
-                    raise ValueError(
-                        f"snapshot v{v} reads files vacuumed from {p} "
-                        "(reclaim_dead) — this version is outside the "
-                        "retention window; refusing a partial read"
-                    )
+        self._check_tombstones(v, paths, dead)
         empty_fallback = None
         if dead:
             files: list[str] = []
@@ -355,216 +251,6 @@ class _TableReadMixin:
     def history(self) -> DataFrame:
         return snapshot_history(self.spark, self.path)
 
-    def last_txn(self, txn_id: str | None = None) -> int:
-        """High-water txn marker over the published LINEAGE — the
-        streaming sink's exactly-once cursor, Delta's txn/appId
-        contract. O(1): every commit record carries ``txn_hw`` —
-        max(parent's high-water, own marker), folded forward at commit
-        time (layout._stamp_txn_hw) — so reading the CURRENT record
-        answers without any walk, even after 10⁶ commits. Lineage-
-        correct by construction: a rollback's next commit chains from
-        the rolled-back-to record, so orphaned branches' markers are
-        never inherited and their batches correctly RE-apply on replay
-        (the r9 stale-marker rule). Legacy records without the field
-        fall back to the parent-pointer walk (first marker found =
-        high-water, since batch ids are monotone along a chain).
-        Returns -1 when no lineage commit carries a marker.
-
-        ``txn_id`` selects a NAMESPACED marker stream (Delta's
-        (appId, version) txn contract): only commits stamped with
-        that id count, read O(1) from the record's ``txn_hw_by_id``
-        map — so independent streaming queries writing one table
-        keep independent replay cursors."""
-        v = self.version()
-        p = os.path.join(self.path, "_commits", f"{v}.json")
-        if v >= 1 and os.path.isfile(p):
-            with open(p) as f:
-                rec = json.load(f)
-            if txn_id is not None:
-                return int(
-                    (rec.get("txn_hw_by_id") or {}).get(str(txn_id), -1)
-                )
-            if "txn_hw" in rec:
-                return int(rec["txn_hw"])
-        if txn_id is not None:
-            for _, rec in self._lineage():
-                if "txn" in rec and str(rec.get("txn_id")) == str(txn_id):
-                    return int(rec["txn"])
-            return -1
-        for _, rec in self._lineage():
-            if "txn" in rec and "txn_id" not in rec:
-                return int(rec["txn"])
-        return -1
-
-    def _base_ref(self, data_dir: str) -> dict:
-        """The _dv.json base pointer for a reference commit chaining
-        from ``data_dir``: table-relative when the base lives in this
-        table (vacuum can then pin it), absolute when it lives in a
-        CLONE source outside this table's directory."""
-        in_table = os.path.dirname(
-            os.path.normpath(data_dir)
-        ) == os.path.normpath(self.path)
-        return (
-            {"base": os.path.basename(data_dir)}
-            if in_table
-            else {"base_abs": data_dir}
-        )
-
-    def _lineage(self):
-        """Yield (version, record) walking PARENT POINTERS back from
-        the current version — the published chain, which excludes
-        orphaned commits and rolled-back branches. One definition of
-        the walk's safety rules (stop on a missing record, stop on a
-        non-decreasing parent pointer) shared by the streaming txn
-        cursor and timestamp time travel.
-
-        Scale: when the walk reaches a version with a lineage
-        CHECKPOINT (`_ckpts/_ckpt_{v}.json`, or `.parquet` above
-        layout.LINEAGE_CKPT_PQ_THRESHOLD entries; written every
-        layout.SNAPSHOT_CKPT_EVERY commits), the checkpoint's folded
-        chain is yielded instead of reading per-version records — the
-        walk is O(cadence) record reads + one checkpoint read, not
-        O(versions), Delta's log-checkpoint analogue. A checkpoint's
-        chain IS version v's unique parent chain, so splicing it at
-        any point of the walk is exact. Checkpoint entries carry the
-        minimal {v, ts, txn?} fields the walk's consumers (as_of,
-        legacy last_txn) read."""
-        from .layout import _read_lineage_ckpt
-
-        cdir = os.path.join(self.path, "_commits")
-        kdir = os.path.join(self.path, "_ckpts")
-        cur = self.version()
-        first = True
-        while cur >= 1:
-            if not first:
-                spliced = _read_lineage_ckpt(kdir, cur)
-                if spliced is not None:
-                    for e in spliced:
-                        yield int(e["v"]), e
-                    return
-            first = False
-            p = os.path.join(cdir, f"{cur}.json")
-            if not os.path.isfile(p):
-                return
-            with open(p) as f:
-                rec = json.load(f)
-            yield cur, rec
-            nxt = int(rec.get("parent", cur - 1))
-            if nxt >= cur:
-                return  # malformed parent pointer — never loop
-            cur = nxt
-
-    def _vdir(self, v: int) -> str:
-        """Version ``v``'s data directory, RESOLVED through
-        dataset_dir (r13): a never-renamed publish — the crash window
-        between record put and rename, or object-store no-rename mode
-        — lives under the staged name its commit record references,
-        and every metadata/sidecar consumer must find it there. Falls
-        back to the logical ``v{n}`` name when the version does not
-        resolve (caller probes existence anyway)."""
-        from .layout import dataset_dir
-
-        return dataset_dir(self.path, v) or os.path.join(
-            self.path, f"v{v}"
-        )
-
-    @staticmethod
-    def _inherit_sidecars(src_vdir: str, dst_vdir: str) -> None:
-        import shutil
-
-        for sidecar in ("_manifest.json", "_bloom.json"):
-            p = os.path.join(src_vdir, sidecar)
-            if os.path.isfile(p):
-                shutil.copyfile(p, os.path.join(dst_vdir, sidecar))
-        # parquet-mode manifests keep their relation in _manifest_pq/
-        # (_bloom_pq/) next to the pointer record — inherit it whole
-        # (O(manifest bytes), never O(data))
-        for rel in ("_manifest_pq", "_bloom_pq"):
-            pq = os.path.join(src_vdir, rel)
-            if os.path.isdir(pq):
-                dst = os.path.join(dst_vdir, rel)
-                shutil.rmtree(dst, ignore_errors=True)
-                shutil.copytree(pq, dst)
-
-    @staticmethod
-    def _link_files(src: str, dst: str) -> None:
-        """Lay every file of ``src`` into the ``dst`` dir. LINK, not
-        move: a conflicting commit attempt's staging is wiped, and the
-        written files must outlive it for the retry. Hard links make
-        that free on one filesystem (the table IS one directory tree);
-        copy2 is the cross-device fallback."""
-        import shutil
-
-        os.makedirs(dst, exist_ok=True)
-        for fn in os.listdir(src):
-            s, d = os.path.join(src, fn), os.path.join(dst, fn)
-            try:
-                os.link(s, d)
-            except OSError:
-                shutil.copy2(s, d)
-
-    @staticmethod
-    def _carry_dv(dv_dir: str | None, vdir: str) -> None:
-        """Lay the parent's deletion vector into ``vdir/_dv`` unchanged
-        — a byte copy of its files (entries are table-relative, so they
-        stay valid) — or, when the parent has none, an empty
-        ``_file string, _pos long`` parquet. No Spark job either way:
-        a DV-carrying commit (append, restore, schema change) changes
-        no row address."""
-        import shutil
-
-        dst = os.path.join(vdir, "_dv")
-        if dv_dir is not None:
-            shutil.copytree(dv_dir, dst)
-            return
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        os.makedirs(dst)
-        pq.write_table(
-            pa.table(
-                {
-                    "_file": pa.array([], pa.string()),
-                    "_pos": pa.array([], pa.int64()),
-                }
-            ),
-            os.path.join(dst, "part-00000-empty.parquet"),
-        )
-
-    @staticmethod
-    def _append_files(append_dirs: Sequence[str]) -> list[str]:
-        return [
-            os.path.join(d, f)
-            for d in append_dirs
-            for f in sorted(os.listdir(d))
-            if f.startswith("part-")
-        ]
-
-    def _walk_range(self, frm: int, to_excl: int) -> dict[int, dict] | None:
-        """Records on the published parent chain from ``frm`` down to
-        (exclusive) ``to_excl`` — or None when the chain can't be
-        proven to cover exactly the allocated records in that range:
-        a record in the range that is NOT on the chain is either an
-        in-flight winner (its pointer flip hasn't landed yet) or an
-        orphan, and neither can be classified safely."""
-        cdir = os.path.join(self.path, "_commits")
-        out: dict[int, dict] = {}
-        cur = frm
-        while cur > to_excl:
-            p = os.path.join(cdir, f"{cur}.json")
-            if not os.path.isfile(p):
-                return None
-            with open(p) as f:
-                rec = json.load(f)
-            out[cur] = rec
-            nxt = int(rec.get("parent", cur - 1))
-            if nxt >= cur:
-                return None
-            cur = nxt
-        if cur != to_excl or set(out) != set(range(to_excl + 1, frm + 1)):
-            return None
-        return out
-
     def as_of(self, ts: float) -> DataFrame:
         """TIMESTAMP AS OF: the table as of wall-clock ``ts`` (epoch
         seconds) — the newest LINEAGE version whose commit time is ≤
@@ -581,7 +267,6 @@ class _TableReadMixin:
         stats + one group instead of a full chain parse)."""
         from .layout import _NO_CKPT, _ckpt_resolve_ts
 
-        cdir = os.path.join(self.path, "_commits")
         kdir = os.path.join(self.path, "_ckpts")
         cur = self.version()
         first = True
@@ -593,11 +278,9 @@ class _TableReadMixin:
                         return r
                     break  # rest of the chain is all newer than ts
             first = False
-            p = os.path.join(cdir, f"{cur}.json")
-            if not os.path.isfile(p):
+            rec = self._record(cur)
+            if not rec:
                 break
-            with open(p) as f:
-                rec = json.load(f)
             if float(rec.get("ts", float("inf"))) <= ts:
                 return cur
             nxt = int(rec.get("parent", cur - 1))
@@ -959,76 +642,3 @@ class _TableReadMixin:
         write_stats_manifest(
             vdir, df, file_col, list(self.stat_cols), fmt=self.manifest_format
         )
-
-    def _resolve(self, v: int) -> tuple[str, str | None, list[str]]:
-        """(data_dir, dv_dir|None, append_dirs) for version ``v`` —
-        data_dir holds the parquet files (the version's own for a copy
-        commit, the referenced base snapshot's for a reference commit);
-        ``append_dirs`` are extra parquet directories UNIONED into the
-        version's file universe (merge-on-read UPDATE writes its
-        rewritten rows there; the version's logical content is
-        base ∪ appends − DV). An ``appends`` entry is ``"self"`` (this
-        version's own ``_upd`` dir — the name is resolved only here,
-        because at populate time the final version number is unknown),
-        a table-relative path like ``"v5/_upd"``, or absolute (clones).
-        Raises loudly on versions that don't exist or whose referenced
-        dirs were vacuumed away — never a silent partial read."""
-        from .layout import dataset_dir
-
-        # dataset_dir repairs an interrupted publish (r12): a commit
-        # that crashed between record put and the v{n} rename still
-        # serves — and the repair rename heals the path for every
-        # direct v{n} consumer downstream
-        vdir = dataset_dir(self.path, v) if v >= 1 else None
-        if vdir is None:
-            raise ValueError(f"snapshot v{v} does not exist at {self.path}")
-        meta = os.path.join(vdir, "_dv.json")
-        if not os.path.isfile(meta):
-            return vdir, None, []
-        with open(meta) as f:
-            m = json.load(f)
-        from .layout import resolve_rel
-
-        # logical v{n} entries resolve through dataset_dir (r13: a
-        # never-renamed publish serves); staged basenames join direct
-        base = (
-            resolve_rel(self.path, m["base"])
-            if "base" in m
-            else m["base_abs"]
-        )
-        if not os.path.isdir(base):
-            raise ValueError(
-                f"snapshot v{v} references base {base}, which no longer "
-                "exists (vacuumed source?) — refusing a partial read"
-            )
-        appends = []
-        for a in m.get("appends", []):
-            p = (
-                os.path.join(vdir, "_upd")
-                if a == "self"
-                else (a if os.path.isabs(a) else resolve_rel(self.path, a))
-            )
-            if not os.path.isdir(p):
-                raise ValueError(
-                    f"snapshot v{v} references appended rows at {p}, which "
-                    "no longer exist (vacuumed?) — refusing a partial read"
-                )
-            appends.append(p)
-        return base, os.path.join(vdir, "_dv"), appends
-
-    def _rebase_appends(self, v: int) -> list[str]:
-        """Version ``v``'s appends list as a CHILD version must record
-        it: ``"self"`` entries become the parent's concrete dir; other
-        entries carry through unchanged."""
-        from .layout import dataset_dir
-
-        vdir = dataset_dir(self.path, v)  # r13: never-renamed serves
-        meta = os.path.join(vdir, "_dv.json") if vdir else ""
-        if not meta or not os.path.isfile(meta):
-            return []
-        with open(meta) as f:
-            m = json.load(f)
-        # "self" rebases to the LOGICAL child name — resolve_rel maps
-        # it back through dataset_dir at read time, so the stored
-        # metadata stays mode- and relocation-independent
-        return [f"v{v}/_upd" if a == "self" else a for a in m.get("appends", [])]

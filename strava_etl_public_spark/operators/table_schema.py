@@ -21,17 +21,10 @@ rewrite); these are that operation's lakehouse forms.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .layout import (
-    dataset_fingerprint,
-    snapshot_commit_ref,
-    resolve_entry,
-)
+from .layout import dataset_fingerprint, resolve_entry
 
 # SQL-type aliases normalized to simpleString() forms
 _TYPE_ALIASES = {
@@ -304,10 +297,7 @@ class _SchemaMixin:
             )
             digest.pop("dataset", None)
         else:
-            with open(
-                os.path.join(self.path, "_commits", f"{cur}.json")
-            ) as f:
-                parent = json.load(f)
+            parent = self._record(cur)
             digest = {
                 k: parent[k] for k in ("n_rows", "xor_hash", "sum_hash_mod")
             }
@@ -316,7 +306,7 @@ class _SchemaMixin:
             extra["added"] = added
         if widened:
             extra["widened"] = widened
-        return snapshot_commit_ref(
+        return self._commit_ref(
             self.path,
             lambda vdir: self._lay_ref(vdir, cur),
             digest=digest,

@@ -71,15 +71,6 @@ def idempotent_append(new_rows: DataFrame, existing: DataFrame | None, key: str)
     return deduped.join(existing.select(key).distinct(), key, "left_anti")
 
 
-def append_parquet(df: DataFrame, path: str, partition_by: Sequence[str] | None = None) -> None:
-    """Append sink (A8; reference main.py:130-180). Nested ARRAY<STRUCT>
-    columns are native in parquet."""
-    writer = df.write.mode("append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
 def scd2_history(
     df: DataFrame,
     key: str,

@@ -12,13 +12,18 @@ ones it can evaluate against the version's manifests, and
 skipping layer wired into the engine's own optimizer, so
 ``.filter(col("es") < x)`` prunes files exactly like ``scan()``.
 
+The driver side reads the version through the table's own
+``TableLog`` (operators/table_log.py — the reader ManagedTable uses:
+same feature gate, same named errors for vacuumed dirs, same
+tombstone guard) and the manifests through operators/manifest.py.
+
 Pruning is PRUNE-ONLY pushdown (the parquet min/max model): every
 filter is also returned to Spark as unsupported, so the engine
 re-applies the exact predicate on the rows the reader emits — a
 manifest bug can cost extra IO, never a wrong row. Conservative keep
 rules match operators/manifest.py (NULL stats keep; range
-intersection), and the bloom probe reuses the one
-Kirsch-Mitzenmacher position definition (layout._bloom_positions_py).
+intersection), and the bloom probe is the one ``lookup()`` uses
+(operators/manifest.py), so engine and reader never disagree on it.
 
 Executor-side: each task opens its one parquet file with pyarrow. A
 file the version's DV touches is read sequentially with row positions
@@ -40,7 +45,6 @@ current).
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass
 from typing import Iterator, Sequence
@@ -57,18 +61,15 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
 )
 
+from ..operators.manifest import bloom_keep, manifest_rows
+from ..operators.table_log import TableLog
 from .table_cdf import (
-    _SQL_TO_ARROW,
-    _arrow_type,
-    _check_tombstones,
     _dv_file_names,
+    _dv_positions,
+    _file_batches,
     _match_keys,
     _part_files,
-    _vdir,
-    _rec,
-    _universe,
-    _version,
-    table_fields,
+    _project,
 )
 
 _RANGE_FILTERS = (
@@ -108,54 +109,6 @@ def _stats_keep(row: dict, pcol: str, flt) -> bool:
     return True
 
 
-def _manifest_rows(vdir: str) -> list[dict] | None:
-    """The version's per-file stat rows, driver-side, for EITHER
-    representation: inline JSON yields its dict rows directly; a
-    parquet-mode manifest is read with pyarrow (metadata-sized — the
-    relation holds O(files) stat rows, not data)."""
-    p = os.path.join(vdir, "_manifest.json")
-    if not os.path.isfile(p):
-        return None
-    with open(p) as f:
-        meta = json.load(f)
-    if meta.get("format") == "parquet":
-        import pyarrow.parquet as pq
-
-        rows: list[dict] = []
-        for f in _part_files(os.path.join(vdir, "_manifest_pq")):
-            rows.extend(pq.read_table(f).to_pylist())
-        return rows
-    return meta.get("files")
-
-
-def _bloom_keep(vdir: str, value) -> set[str] | None:
-    """Basenames whose bloom MAY contain ``value`` (None = no bloom
-    manifest → no pruning). Reuses the driver-side position replica so
-    engine and reader can never disagree on the probe."""
-    p = os.path.join(vdir, "_bloom.json")
-    if not os.path.isfile(p):
-        return None
-    from ..operators.layout import _bloom_positions_py
-
-    with open(p) as f:
-        meta = json.load(f)
-    want = set(_bloom_positions_py(value, meta["m"], meta["k"]))
-    if meta.get("format") == "parquet":
-        import pyarrow.parquet as pq
-
-        keep = set()
-        for f in _part_files(os.path.join(vdir, "_bloom_pq")):
-            for r in pq.read_table(f).to_pylist():
-                if want <= set(r["positions"]):
-                    keep.add(r["file"])
-        return keep
-    return {
-        fn
-        for fn, positions in meta["files"].items()
-        if want <= set(positions)
-    }
-
-
 @dataclass
 class _BatchPartition(InputPartition):
     file: str
@@ -173,6 +126,7 @@ class ManagedTableReader(DataSourceReader):
             )
         self.version = options.get("version")
         self._fields = fields
+        self._log = TableLog(self.path)
         self._pruning: list = []
 
     def pushFilters(self, filters):
@@ -184,22 +138,17 @@ class ManagedTableReader(DataSourceReader):
             yield f
 
     def partitions(self) -> Sequence[InputPartition]:
-        v = (
-            int(self.version)
-            if self.version is not None
-            else _version(self.path)
-        )
-        dirs, dv_dir, dead = _universe(self.path, v)
+        log = self._log
+        v = int(self.version) if self.version is not None else log.version()
+        base_dir, dv_dir, appends = log._resolve(v)
+        dead = log._dead_abs(v)
         # loud refusal when this version reads reclaim_dead-removed
         # files (a time-travel read outside retention)
-        _check_tombstones(self.path, v, dirs, dead)
-        rec = _rec(self.path, v) or {}
-        vmap = rec.get("columns")
+        log._check_tombstones(v, [base_dir, *appends], dead)
+        vmap = log._version_map(v)
         to_phys = {l: p for l, p in vmap} if vmap else None
-        vdir = _vdir(self.path, v)  # r13: staged publish serves
+        vdir = log._vdir(v)  # r13: staged publish serves
         root = os.path.abspath(self.path)
-
-        base_dir = dirs[0]
         base_files = [
             f
             for f in _part_files(base_dir)
@@ -208,7 +157,7 @@ class ManagedTableReader(DataSourceReader):
         # zone-map pruning applies to the manifested base files; the
         # manifest lives with the version dir (inherited for DV
         # versions — superset, conservative-correct)
-        rows = _manifest_rows(vdir)
+        rows = manifest_rows(vdir)
         if rows is not None and self._pruning:
             stats = {r["file"]: r for r in rows}
             kept = []
@@ -233,35 +182,20 @@ class ManagedTableReader(DataSourceReader):
         for flt in self._pruning:
             if not isinstance(flt, (EqualTo, In)):
                 continue
-            p = os.path.join(vdir, "_bloom.json")
-            if not os.path.isfile(p):
-                continue
-            with open(p) as fh:
-                bcol = json.load(fh)["col"]
             col = flt.attribute[0]
-            pcol = to_phys.get(col, col) if to_phys else col
-            if pcol != bcol:
-                continue
-            values = (
-                [flt.value] if isinstance(flt, EqualTo) else list(flt.value)
+            allowed = bloom_keep(
+                vdir,
+                to_phys.get(col, col) if to_phys else col,
+                [flt.value] if isinstance(flt, EqualTo) else list(flt.value),
             )
-            allowed: set[str] = set()
-            for val in values:
-                hit = _bloom_keep(vdir, val)
-                if hit is None:
-                    allowed = None  # type: ignore[assignment]
-                    break
-                allowed |= hit
             if allowed is not None:
                 base_files = [
-                    f
-                    for f in base_files
-                    if os.path.basename(f) in allowed
+                    f for f in base_files if os.path.basename(f) in allowed
                 ]
         # appended-row files carry no manifest entries — always read
         app_files = [
             f
-            for d in dirs[1:]
+            for d in appends
             for f in _part_files(d)
             if os.path.abspath(f) not in dead
         ]
@@ -280,50 +214,10 @@ class ManagedTableReader(DataSourceReader):
         return parts
 
     def read(self, partition: _BatchPartition) -> Iterator:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        dead_pos: set[int] = set()
-        if partition.dv_dir is not None:
-            keys = set(partition.keys)
-            for f in _part_files(partition.dv_dir):
-                t = pq.read_table(f, columns=["_file", "_pos"])
-                for fv, pv in zip(
-                    t.column("_file").to_pylist(),
-                    t.column("_pos").to_pylist(),
-                ):
-                    if fv in keys:
-                        dead_pos.add(pv)
-
-        pf = pq.ParquetFile(partition.file)
-        offset = 0
-        for batch in pf.iter_batches():
-            n = batch.num_rows
-            if dead_pos:
-                idx = [i for i in range(n) if (offset + i) not in dead_pos]
-                offset += n
-                if not idx:
-                    continue
-                taken = batch.take(pa.array(idx, type=pa.int64()))
-            else:
-                offset += n
-                taken = batch
-            cols, names = [], []
-            for logical, physical, sql_type in partition.fields:
-                names.append(logical)
-                if physical in taken.schema.names:
-                    col = taken.column(physical)
-                    want = _SQL_TO_ARROW.get(sql_type.strip().lower())
-                    if want is not None:
-                        target = getattr(pa, want)()
-                        if col.type != target:
-                            col = col.cast(target)
-                    cols.append(col)
-                else:
-                    cols.append(
-                        pa.nulls(taken.num_rows, _arrow_type(sql_type))
-                    )
-            yield pa.RecordBatch.from_arrays(cols, names=names)
+        # an untouched file (dv_dir None) skips position tracking
+        dead = _dv_positions(partition.dv_dir, partition.keys)
+        for batch in _file_batches(partition.file, drop=dead):
+            yield _project(batch, partition.fields)
 
 
 class ManagedTableDataSource(DataSource):
@@ -337,7 +231,7 @@ class ManagedTableDataSource(DataSource):
             raise ValueError(
                 "managed_table requires .option('path', <table>)"
             )
-        return table_fields(path, self.options.get("version"))
+        return TableLog(path).table_fields(self.options.get("version"))
 
     def schema(self) -> str:
         return ", ".join(

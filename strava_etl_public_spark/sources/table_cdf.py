@@ -12,8 +12,11 @@ checkpoint — replaying a window re-reads the same immutable DV and
 
 Scale design (the part that matters at 100 TB):
 
-* The DRIVER touches only COMMIT METADATA: the records of the window
-  (parent-pointer walk), the ``_dv.json`` references, and the DV
+* The DRIVER touches only COMMIT METADATA, through the table's own
+  ``TableLog`` (operators/table_log.py — the reader ManagedTable
+  uses, so the feature gate, the named vacuumed-dir errors and the
+  tombstone guard apply here too): the records of the window
+  (parent-pointer walk), each endpoint's file universe, and the DV
   sidecars' ``_file`` column (column-projected footer+page reads of
   an O(deleted-rows) sidecar) — never a data row.
 * Each InputPartition is ONE physical change file: a base file named
@@ -44,7 +47,6 @@ volume with the engine's own recovery guarantees.
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass
 from typing import Iterator, Sequence
@@ -54,6 +56,8 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
+
+from ..operators.table_log import TableLog
 
 _FAST_OPS = ("dv_delete", "dv_update", "dv_overwrite", "append")
 
@@ -85,114 +89,6 @@ def _arrow_type(sql_type: str):
             "table_cdf stream source"
         )
     return getattr(pa, name)()
-
-
-# -- driver-side metadata walkers (plain files, no SparkSession) ----------
-
-
-def _version(path: str) -> int:
-    p = os.path.join(path, "_latest")
-    if not os.path.isfile(p):
-        return 0
-    with open(p) as f:
-        return int(f.read().strip())
-
-
-def _rec(path: str, v: int) -> dict | None:
-    p = os.path.join(path, "_commits", f"{v}.json")
-    if not os.path.isfile(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
-
-
-def _vdir(path: str, v: int) -> str:
-    """Version ``v``'s data dir, resolved through dataset_dir (r13):
-    a never-renamed publish (crash window / no-rename object-store
-    mode) serves under the staged name its commit record names."""
-    from ..operators.layout import dataset_dir
-
-    return dataset_dir(path, v) or os.path.join(path, f"v{v}")
-
-
-def _ref(path: str, v: int) -> dict | None:
-    p = os.path.join(_vdir(path, v), "_dv.json")
-    if not os.path.isfile(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
-
-
-def _walk(path: str, frm: int, to_excl: int) -> dict[int, dict] | None:
-    """Records on the published parent chain from ``frm`` down to
-    (exclusive) ``to_excl`` — None when the chain can't be proven to
-    cover exactly that range (table_read._walk_range's rules)."""
-    out: dict[int, dict] = {}
-    cur = frm
-    while cur > to_excl:
-        rec = _rec(path, cur)
-        if rec is None:
-            return None
-        out[cur] = rec
-        nxt = int(rec.get("parent", cur - 1))
-        if nxt >= cur:
-            return None
-        cur = nxt
-    if cur != to_excl or set(out) != set(range(to_excl + 1, frm + 1)):
-        return None
-    return out
-
-
-def _universe(path: str, v: int) -> tuple[list[str], str | None, set[str]]:
-    """(data dirs, dv dir|None, dead-file abs set) of version ``v`` —
-    the metadata half of _TableReadMixin._resolve, file-based."""
-    from ..operators.layout import resolve_rel
-
-    vdir = _vdir(path, v)
-    ref = _ref(path, v)
-    if ref is None:
-        return [vdir], None, set()
-    base = (
-        resolve_rel(path, ref["base"])
-        if "base" in ref
-        else ref["base_abs"]
-    )
-    dirs = [base]
-    for a in ref.get("appends", []):
-        dirs.append(
-            os.path.join(vdir, "_upd")
-            if a == "self"
-            else (a if os.path.isabs(a) else resolve_rel(path, a))
-        )
-    root = os.path.abspath(path)
-    dead = {
-        e if os.path.isabs(e) else os.path.join(root, e)
-        for e in ref.get("dead") or []
-    }
-    return dirs, os.path.join(vdir, "_dv"), dead
-
-
-def _check_tombstones(path: str, v: int, dirs, dead: set[str]) -> None:
-    """The file-level-vacuum guard for engine-external readers: a dir
-    that lost files to ``reclaim_dead`` serves version ``v`` only if
-    ``v`` already counted every removed file dead — otherwise the
-    version (or a lagging stream window) is outside retention and
-    must fail LOUDLY, never read partial (the _open_data contract,
-    applied to the pyarrow-side sources)."""
-    for d in dirs:
-        tp = os.path.join(d, "_vacuumed.json")
-        if os.path.isfile(tp):
-            with open(tp) as f:
-                tomb = json.load(f).get("files", [])
-            removed = {
-                os.path.abspath(os.path.join(d, b)) for b in tomb
-            }
-            if not removed <= dead:
-                raise ValueError(
-                    f"version v{v} at {path} reads files removed by a "
-                    "reclaim_dead vacuum — outside the retention "
-                    "window; restart from a current version"
-                )
 
 
 def _part_files(d: str) -> list[str]:
@@ -229,6 +125,73 @@ def _match_keys(file_abs: str, root: str) -> tuple[str, ...]:
     return (file_abs,)
 
 
+def _dv_positions(dv_dir: str | None, keys: Sequence[str]) -> set[int]:
+    """Executor-side: the row positions the DV sidecar at ``dv_dir``
+    records for one file, under any of its stored spellings ``keys``
+    (a pyarrow read of the sidecar's ``_file``/``_pos`` columns)."""
+    if dv_dir is None or not os.path.isdir(dv_dir):
+        return set()
+    import pyarrow.parquet as pq
+
+    keys = set(keys)
+    out: set[int] = set()
+    for f in _part_files(dv_dir):
+        t = pq.read_table(f, columns=["_file", "_pos"])
+        files, pos = t.column("_file"), t.column("_pos")
+        for fv, pv in zip(files.to_pylist(), pos.to_pylist()):
+            if fv in keys:
+                out.add(pv)
+    return out
+
+
+def _file_batches(
+    file: str, only: set[int] | None = None, drop: set[int] | None = None
+) -> Iterator:
+    """Executor-side: one parquet file's Arrow batches, rows kept by
+    position — the positions in ``only`` when given, else all but
+    ``drop``. Positions count in sequential read order, which is
+    Spark's ``_metadata.row_index`` contract the DV writer used."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    offset = 0
+    for batch in pq.ParquetFile(file).iter_batches():
+        n = batch.num_rows
+        if only is not None:
+            idx = [i for i in range(n) if (offset + i) in only]
+        elif drop:
+            idx = [i for i in range(n) if (offset + i) not in drop]
+        else:
+            idx = None
+        offset += n
+        if idx is None:
+            yield batch
+        elif idx:
+            yield batch.take(pa.array(idx, type=pa.int64()))
+
+
+def _project(batch, fields: tuple):
+    """Executor-side: one batch in the table's PHYSICAL names → the
+    declared ``fields`` ((logical, physical, sql_type), ...): columns
+    renamed to logical, a pre-widen file's narrow values upcast to the
+    declared type (widen_column), and metadata-added columns absent
+    from the file backfilled as typed nulls (the add_column read
+    contract)."""
+    import pyarrow as pa
+
+    cols = []
+    for _, physical, sql_type in fields:
+        if physical in batch.schema.names:
+            col = batch.column(physical)
+            want = _SQL_TO_ARROW.get(sql_type.strip().lower())
+            if want is not None and col.type != getattr(pa, want)():
+                col = col.cast(getattr(pa, want)())
+            cols.append(col)
+        else:
+            cols.append(pa.nulls(batch.num_rows, _arrow_type(sql_type)))
+    return pa.RecordBatch.from_arrays(cols, names=[l for l, _, _ in fields])
+
+
 @dataclass
 class _CDFPartition(InputPartition):
     kind: str  # "retract" | "add"
@@ -246,23 +209,24 @@ class TableCDFStreamReader(DataSourceStreamReader):
             raise ValueError("table_cdf requires .option('path', <table>)")
         self.start_version = options.get("starting_version")
         self._fields = schema_fields  # ((logical, physical, sql_type), ...)
+        self._log = TableLog(self.path)
         # the version whose record the declared schema was derived
         # from (schema() samples the current version at query start) —
         # lets _check_metadata_commit tell "declared column added
         # after this older commit" (serve, null backfill) from
         # "dropped after the declaration" (raise)
-        self._decl_version = _version(self.path)
+        self._decl_version = self._log.version()
 
     def initialOffset(self) -> dict:
         v = (
             int(self.start_version)
             if self.start_version is not None
-            else _version(self.path)
+            else self._log.version()
         )
         return {"version": v}
 
     def latestOffset(self) -> dict:
-        return {"version": _version(self.path)}
+        return {"version": self._log.version()}
 
     def partitions(
         self, start: dict, end: dict
@@ -270,7 +234,7 @@ class TableCDFStreamReader(DataSourceStreamReader):
         s, e = int(start["version"]), int(end["version"])
         if e <= s:
             return []
-        walked = _walk(self.path, e, s)
+        walked = self._log._walk_range(e, s)
         if walked is None:
             raise ValueError(
                 f"table_cdf: versions ({s}, {e}] are not fully on the "
@@ -392,11 +356,17 @@ class TableCDFStreamReader(DataSourceStreamReader):
         physical change files diffed against the segment's own
         endpoint DVs."""
         root = os.path.abspath(self.path)
-        from_dirs, dv_from, dead_from = _universe(self.path, s)
-        to_dirs, dv_to, dead_to = _universe(self.path, e)
-        # a lagging stream must not silently miss reclaimed files
-        _check_tombstones(self.path, s, from_dirs, dead_from)
-        _check_tombstones(self.path, e, to_dirs, dead_to)
+        ends = []
+        for v in (s, e):
+            # a stream from v0 (before the first commit) starts empty
+            data_dir, dv_dir, appends = (
+                self._log._resolve(v) if v >= 1 else (None, None, [])
+            )
+            dirs = [data_dir, *appends] if data_dir else []
+            # a lagging stream must not silently miss reclaimed files
+            self._log._check_tombstones(v, dirs, self._log._dead_abs(v))
+            ends.append((dirs, dv_dir))
+        (from_dirs, dv_from), (to_dirs, dv_to) = ends
         from_dir_set = {os.path.abspath(d) for d in from_dirs}
 
         parts: list[InputPartition] = []
@@ -429,123 +399,26 @@ class TableCDFStreamReader(DataSourceStreamReader):
         return parts
 
     def read(self, partition: _CDFPartition) -> Iterator:
-        """Executor-side: one parquet file, positions reconstructed by
-        sequential read order (== Spark's ``_metadata.row_index``),
-        emitted as Arrow batches with the sign column appended."""
+        """Executor-side: one parquet file's changed rows, emitted as
+        Arrow batches with the sign column appended."""
         import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        def _positions(dv_dir: str | None) -> set[int]:
-            if dv_dir is None or not os.path.isdir(dv_dir):
-                return set()
-            out: set[int] = set()
-            keys = set(partition.keys)
-            for f in _part_files(dv_dir):
-                t = pq.read_table(f, columns=["_file", "_pos"])
-                files, pos = t.column("_file"), t.column("_pos")
-                for fv, pv in zip(files.to_pylist(), pos.to_pylist()):
-                    if fv in keys:
-                        out.add(pv)
-            return out
 
         if partition.kind == "retract":
-            wanted = _positions(partition.dv_to) - _positions(
-                partition.dv_from
-            )
-            sign = -1
+            only = _dv_positions(partition.dv_to, partition.keys)
+            only -= _dv_positions(partition.dv_from, partition.keys)
+            batches, sign = _file_batches(partition.file, only=only), -1
         else:
-            dead = _positions(partition.dv_to)
-            wanted = None  # all positions except dead
-            sign = 1
-
-        pf = pq.ParquetFile(partition.file)
-        offset = 0
-        for batch in pf.iter_batches():
-            n = batch.num_rows
-            if wanted is not None:
-                idx = [
-                    i for i in range(n) if (offset + i) in wanted
-                ]
-            else:
-                idx = [
-                    i for i in range(n) if (offset + i) not in dead
-                ]
-            offset += n
-            if not idx:
-                continue
-            taken = batch.take(pa.array(idx, type=pa.int64()))
-            cols, names = [], []
-            for logical, physical, sql_type in partition.fields:
-                names.append(logical)
-                if physical in taken.schema.names:
-                    col = taken.column(physical)
-                    # a pre-widen file serves narrow physical values —
-                    # upcast to the stream's declared type (widen_column)
-                    want = _SQL_TO_ARROW.get(sql_type.strip().lower())
-                    if want is not None:
-                        target = getattr(pa, want)()
-                        if col.type != target:
-                            col = col.cast(target)
-                    cols.append(col)
-                else:
-                    # metadata-added column absent from this file —
-                    # typed nulls, the add_column read contract
-                    cols.append(pa.nulls(len(idx), _arrow_type(sql_type)))
-            cols.append(
-                pa.array([sign] * len(idx), type=pa.int32())
+            drop = _dv_positions(partition.dv_to, partition.keys)
+            batches, sign = _file_batches(partition.file, drop=drop), 1
+        for batch in batches:
+            rb = _project(batch, partition.fields)
+            yield pa.RecordBatch.from_arrays(
+                [*rb.columns, pa.array([sign] * rb.num_rows, type=pa.int32())],
+                names=[*rb.schema.names, "sign"],
             )
-            names.append("sign")
-            yield pa.RecordBatch.from_arrays(cols, names=names)
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in the engine's checkpoint
-
-
-def table_fields(path: str, version: int | None = None) -> tuple:
-    """((logical, physical, sql_type), ...) of a table version —
-    derived from one data file's parquet schema plus the commit
-    record's column map, added-column markers, and widened-type
-    overrides. Shared by the streaming CDF source and the batch
-    ``managed_table`` reader (sources/table_batch.py)."""
-    v = _version(path) if version is None else int(version)
-    if v < 1:
-        raise ValueError(f"no published version at {path}")
-    rec = _rec(path, v) or {}
-    dirs, _, dead = _universe(path, v)
-    sample = None
-    for d in dirs:
-        for f in _part_files(d):
-            if os.path.abspath(f) not in dead:
-                sample = f
-                break
-        if sample:
-            break
-    if sample is None:
-        raise ValueError(f"no data files under {path} v{v}")
-    import pyarrow.parquet as pq
-
-    file_schema = pq.ParquetFile(sample).schema_arrow
-    added = rec.get("added") or {}
-    vmap = rec.get("columns")
-    phys_types: dict[str, str] = {}
-    from pyspark.sql.pandas.types import from_arrow_type
-
-    for name in file_schema.names:
-        phys_types[name] = from_arrow_type(
-            file_schema.field(name).type
-        ).simpleString()
-    for ph, t in added.items():
-        phys_types.setdefault(ph, t)
-    # type-widened columns serve the WIDE type regardless of the
-    # sampled file's physical type (executors upcast per batch)
-    for ph, t in (rec.get("widened") or {}).items():
-        phys_types[ph] = t
-    if vmap:
-        return tuple(
-            (l, p, phys_types.get(p, added.get(p, "string")))
-            for l, p in vmap
-        )
-    return tuple((c, c, phys_types[c]) for c in file_schema.names)
 
 
 class TableCDFStreamDataSource(DataSource):
@@ -561,7 +434,7 @@ class TableCDFStreamDataSource(DataSource):
         path = self.options.get("path")
         if not path:
             raise ValueError("table_cdf requires .option('path', <table>)")
-        return table_fields(path)
+        return TableLog(path).table_fields()
 
     def schema(self) -> str:
         fields = self._fields()

@@ -17,10 +17,14 @@ shape Spark's sink API exists for:
   their commit message. Digests are commutative monoids: task
   retries and speculation reproduce messages, never corrupt them.
 * The DRIVER (:meth:`commit`) merges the messages and publishes ONE
-  blind-append reference commit: staged files move into the new
-  version's ``_upd``, the table digest derives by group-op addition
-  from the parent record (no rescan), and the engine's ``batchId``
-  lands as the commit's txn marker ATOMICALLY with the version.
+  blind-append reference commit through the table's own publish loop
+  (``TableLog._publish``, operators/table_log.py — the one
+  ManagedTable's reference commits use): staged files link into the
+  new version's ``_upd``, the table digest derives by group-op
+  addition from the parent record (no rescan), and the engine's
+  ``batchId`` lands as the commit's txn marker ATOMICALLY with the
+  version. The replay cursor is ``TableLog.last_txn``, and opening
+  the sink passes the table's reader-feature gate.
 
 Exactly-once composes BOTH guards this repo has proven separately:
 Spark's checkpoint replays uncommitted batches after a crash, and the
@@ -53,8 +57,8 @@ pre-format them).
 
 from __future__ import annotations
 
-import json
 import os
+import shutil
 import uuid
 from dataclasses import dataclass
 from typing import Iterator
@@ -66,9 +70,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from .table_cdf import _rec, _universe, _vdir, _version, table_fields
-
-_MOD = 1152921504606846976  # 2^60, the dataset_fingerprint modulus
+from ..operators.table_log import _MOD, TableLog
+from .table_cdf import _arrow_type
 
 
 _DUCKDB_FOLD_BROKEN = False  # set on first runtime failure (log once)
@@ -166,19 +169,15 @@ class _AppendWriterCore:
         # exactly ONE sink lineage (the bare-batchId cursor).
         tid = options.get("txnappid") or options.get("txnAppId")
         self.txn_id = str(tid) if tid is not None else None
-        cfg_p = os.path.join(self.path, "_table.json")
-        if not os.path.isfile(cfg_p):
-            raise ValueError(f"no managed table at {self.path}")
-        with open(cfg_p) as f:
-            cfg = json.load(f)
-        if cfg.get("constraints"):
+        log = TableLog(self.path)
+        if log.constraints:
             raise ValueError(
                 "managed_table_sink cannot enforce CHECK constraints "
                 "(no engine in the commit path) — use "
                 "streaming.ingest.table_merge_sink for constrained "
                 "tables"
             )
-        self.fields = table_fields(self.path)  # ((logical, phys, type),)
+        self.fields = log.table_fields()  # ((logical, phys, type),)
         for l, _, t in self.fields:
             if t.strip().lower() not in _STABLE_TYPES:
                 raise ValueError(
@@ -193,7 +192,6 @@ class _AppendWriterCore:
                 f"stream schema {sorted(got)} != table logical schema "
                 f"{sorted(want)}"
             )
-        self.defaults = cfg.get("column_defaults") or {}
         # sweep staged orphans (a crash between a successful publish
         # and the stage cleanup leaves consumed source files behind —
         # harmless but unbounded); anything older than a day cannot
@@ -207,7 +205,10 @@ class _AppendWriterCore:
                 p = os.path.join(stage_dir, f)
                 try:
                     if now - os.path.getmtime(p) > 86400:
-                        os.remove(p)
+                        if os.path.isdir(p):
+                            shutil.rmtree(p)  # a crashed commit's link dir
+                        else:
+                            os.remove(p)
                 except OSError:
                     pass
 
@@ -216,8 +217,6 @@ class _AppendWriterCore:
     def write(self, iterator: Iterator) -> _AppendCommit:
         import pyarrow as pa
         import pyarrow.parquet as pq
-
-        from .table_batch import _SQL_TO_ARROW
 
         logical_order = [l for l, _, _ in self.fields]
         phys_names = [p for _, p, _ in self.fields]
@@ -232,9 +231,7 @@ class _AppendWriterCore:
                 cast_cols = []
                 for (l, _, t) in self.fields:
                     col = tbl.column(l)
-                    target = getattr(
-                        pa, _SQL_TO_ARROW[t.strip().lower()]
-                    )()
+                    target = _arrow_type(t)
                     if col.type != target:
                         col = col.cast(target)
                     cast_cols.append(col)
@@ -286,186 +283,7 @@ class _AppendWriterCore:
 
     # -- driver side -------------------------------------------------------
 
-    def _last_txn(self) -> int:
-        v = _version(self.path)
-        rec = _rec(self.path, v) if v >= 1 else None
-        if self.txn_id is not None:
-            # namespaced cursor: only THIS query's markers count
-            if rec is not None:
-                return int(
-                    (rec.get("txn_hw_by_id") or {}).get(self.txn_id, -1)
-                )
-            return -1
-        if rec and "txn_hw" in rec:
-            return int(rec["txn_hw"])
-        # legacy walk (records without the folded high-water)
-        while v >= 1 and rec is not None:
-            if "txn" in rec and "txn_id" not in rec:
-                return int(rec["txn"])
-            nxt = int(rec.get("parent", v - 1))
-            if nxt >= v:
-                break
-            v, rec = nxt, _rec(self.path, nxt)
-        return -1
-
-    def commit(self, messages, batchId: int) -> None:
-        if batchId <= self._last_txn():
-            # a REPLAY (restart/checkpoint-loss) of a batch whose
-            # marker is already on the lineage — drop staged bytes
-            stage_dir = os.path.join(self.path, "_stream_stage")
-            for m in messages:
-                if m and m.file:
-                    try:
-                        os.remove(os.path.join(stage_dir, m.file))
-                    except OSError:
-                        pass
-            return
-        self._publish(messages, txn=batchId)
-
-    def _publish(self, messages, txn: int | None) -> None:
-        import shutil
-
-        from ..operators.layout import (
-            CommitConflict,
-            resolve_entry,
-            snapshot_commit_ref,
-        )
-
-        stage_dir = os.path.join(self.path, "_stream_stage")
-        files = [m.file for m in messages if m and m.file]
-        total = sum(m.n_rows for m in messages if m)
-        if total == 0:
-            for fn in files:
-                try:
-                    os.remove(os.path.join(stage_dir, fn))
-                except OSError:
-                    pass
-            return
-        bx, bs = 0, 0
-        for m in messages:
-            if m:
-                bx ^= m.xor_hash
-                bs = (bs + m.sum_hash) % _MOD
-
-        attempts = 0
-        while True:
-            v, m0 = resolve_entry(self.path)
-            parent = _rec(self.path, v)
-            pvdir = _vdir(self.path, v)  # r13: staged publish serves
-            ref_meta = (
-                json.load(open(os.path.join(pvdir, "_dv.json")))
-                if os.path.isfile(os.path.join(pvdir, "_dv.json"))
-                else None
-            )
-            dirs, dv_dir, _ = _universe(self.path, v)
-            ref: dict = (
-                {
-                    "base": ref_meta["base"]
-                }
-                if ref_meta and "base" in ref_meta
-                else {"base_abs": dirs[0]}
-                if ref_meta
-                else {"base": f"v{v}"}
-            )
-            old_appends = [
-                f"v{v}/_upd" if a == "self" else a
-                for a in (ref_meta or {}).get("appends", [])
-            ]
-            ref["appends"] = old_appends + ["self"]
-            if (ref_meta or {}).get("dead"):
-                ref["dead"] = ref_meta["dead"]
-            digest = {
-                "n_rows": parent["n_rows"] + total,
-                "xor_hash": (parent["xor_hash"] or 0) ^ bx,
-                "sum_hash_mod": ((parent["sum_hash_mod"] or 0) + bs) % _MOD,
-            }
-            extra: dict = {
-                "parent": v,
-                "op": "append",
-                "wfiles": [],
-            }
-            if txn is not None:
-                extra["txn"] = txn
-                if self.txn_id is not None:
-                    extra["txn_id"] = self.txn_id
-            for k in ("columns", "added", "widened"):
-                if parent.get(k):
-                    extra[k] = parent[k]
-
-            def populate(vdir: str, files=files, dv_dir=dv_dir) -> None:
-                import pyarrow as pa
-                import pyarrow.parquet as pq
-
-                upd = os.path.join(vdir, "_upd")
-                os.makedirs(upd)
-                for fn in files:
-                    # LINK, not copy (r12): a commit conflict wipes
-                    # the commit layer's staging dir, so the staged
-                    # source files must survive for the rebase retry —
-                    # a hard link gives that survival for free on one
-                    # filesystem (the table IS one directory tree;
-                    # table_compact.py uses the same trick); copy2 is
-                    # the cross-device fallback
-                    src = os.path.join(stage_dir, fn)
-                    dst = os.path.join(upd, fn)
-                    try:
-                        os.link(src, dst)
-                    except OSError:
-                        shutil.copy2(src, dst)
-                # parent DV carries through (file copy — no engine)
-                if dv_dir and os.path.isdir(dv_dir):
-                    shutil.copytree(dv_dir, os.path.join(vdir, "_dv"))
-                else:
-                    # a TYPED empty DV — an empty directory breaks the
-                    # reader's schema inference
-                    os.makedirs(os.path.join(vdir, "_dv"))
-                    pq.write_table(
-                        pa.table(
-                            {
-                                "_file": pa.array([], pa.string()),
-                                "_pos": pa.array([], pa.int64()),
-                            }
-                        ),
-                        os.path.join(vdir, "_dv", "part-empty.parquet"),
-                    )
-                with open(os.path.join(vdir, "_dv.json"), "w") as f:
-                    json.dump(ref, f)
-                # inherit sidecars whole (conservative, like append())
-                src_vdir = pvdir
-                for sc in ("_manifest.json", "_bloom.json"):
-                    sp = os.path.join(src_vdir, sc)
-                    if os.path.isfile(sp):
-                        shutil.copyfile(sp, os.path.join(vdir, sc))
-                for rel in ("_manifest_pq", "_bloom_pq"):
-                    sp = os.path.join(src_vdir, rel)
-                    if os.path.isdir(sp):
-                        shutil.copytree(sp, os.path.join(vdir, rel))
-
-            try:
-                snapshot_commit_ref(
-                    self.path,
-                    populate,
-                    digest=digest,
-                    extra=extra,
-                    expected_max=m0,
-                )
-                for fn in files:  # staged sources consumed
-                    try:
-                        os.remove(os.path.join(stage_dir, fn))
-                    except OSError:
-                        pass
-                return
-            except CommitConflict:
-                # blind appends commute; rebase onto the new head
-                # unless the schema moved under us (append()'s rule)
-                attempts += 1
-                new_rec = _rec(self.path, _version(self.path)) or {}
-                if attempts > 5 or (new_rec.get("columns") or None) != (
-                    (parent or {}).get("columns") or None
-                ):
-                    raise
-
-    def abort(self, messages, batchId: int) -> None:
+    def _drop_staged(self, messages) -> None:
         stage_dir = os.path.join(self.path, "_stream_stage")
         for m in messages:
             if m and m.file:
@@ -473,6 +291,66 @@ class _AppendWriterCore:
                     os.remove(os.path.join(stage_dir, m.file))
                 except OSError:
                     pass
+
+    def commit(self, messages, batchId: int) -> None:
+        if batchId <= TableLog(self.path).last_txn(self.txn_id):
+            # a REPLAY (restart/checkpoint-loss) of a batch whose
+            # marker is already on the lineage — drop staged bytes
+            self._drop_staged(messages)
+            return
+        self._publish(messages, txn=batchId)
+
+    def _publish(self, messages, txn: int | None) -> None:
+        """One blind-append reference commit of the staged files,
+        through the table's own publish loop (``TableLog._publish``):
+        the rebase on a conflict, the digest fold and the carried
+        schema markers are ManagedTable.append's. The commit rule is
+        the sink's: any interleave that keeps the column map commutes."""
+        from ..operators.layout import resolve_entry
+
+        msgs = [m for m in messages if m]
+        total = sum(m.n_rows for m in msgs)
+        if total == 0:
+            self._drop_staged(msgs)
+            return
+        bx, bs = 0, 0
+        for m in msgs:
+            bx ^= m.xor_hash
+            bs = (bs + m.sum_hash) % _MOD
+        extra: dict = {"wfiles": []}
+        if txn is not None:
+            extra["txn"] = txn
+            if self.txn_id is not None:
+                extra["txn_id"] = self.txn_id
+        stage_dir = os.path.join(self.path, "_stream_stage")
+        # this commit's staged files, gathered into one dir of their
+        # own: _lay_ref links it into each attempt's _upd, so a
+        # conflict retry re-lays metadata only
+        upd = os.path.join(stage_dir, f"commit-{uuid.uuid4().hex}")
+        os.makedirs(upd)
+        try:
+            for m in msgs:
+                if m.file:
+                    os.replace(
+                        os.path.join(stage_dir, m.file), os.path.join(upd, m.file)
+                    )
+            log = TableLog(self.path)
+            v, m0 = resolve_entry(self.path)
+            cols = log._version_map(v) or None
+            log._publish(
+                v,
+                m0,
+                "append",
+                lambda vdir, p: log._lay_ref(vdir, p, upd=upd),
+                plus={"n_rows": total, "xor_hash": bx, "sum_hash_mod": bs},
+                commutes=lambda _m, head: (log._version_map(head) or None) == cols,
+                extra=extra,
+            )
+        finally:
+            shutil.rmtree(upd, ignore_errors=True)
+
+    def abort(self, messages, batchId: int) -> None:
+        self._drop_staged(messages)
 
 
 class TableAppendStreamWriter(_AppendWriterCore, DataSourceStreamArrowWriter):

@@ -42,17 +42,6 @@ def normalize_events(ev: DataFrame) -> DataFrame:
     return ev.withColumn("ts", ep.epoch_ns(ev))
 
 
-def read_events_stream(spark: SparkSession, events_dir: str) -> DataFrame:
-    """File-source streaming read of a staged events DIRECTORY (the
-    file source lists directories; S1 streaming: checkpointed offsets
-    replace the max(epoch) read-back)."""
-    return (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
-    )
-
-
 def with_event_time(stream: DataFrame) -> DataFrame:
     """Second-grain event time, dispatching on the actual ``ts`` dtype
     (normalized bigint-nanos from staging, or raw timestamp columns if
@@ -478,21 +467,6 @@ def table_append_sink_jvm(
         .foreachBatch(table_append_batch_jvm(table_path, txn_id))
         .start()
     )
-
-
-def run_to_completion(agg: DataFrame, query_name: str, output_mode: str = "append") -> None:
-    """Drive a streaming aggregation over the (finite) file source to
-    completion into a memory sink named `query_name`."""
-    q = (
-        agg.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
 
 # ---------------------------------------------------------------------------

@@ -9,8 +9,12 @@ manifest; pruning never changes results (prune-only pushdown — Spark
 re-applies every predicate); the source stays correct with pushdown
 disabled; time travel via the version option."""
 
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
+
+from tests.vdir_helper import vd as _vd
 
 from strava_etl_public_spark.operators.table import ManagedTable
 from strava_etl_public_spark.sources.table_batch import register_table_source
@@ -59,26 +63,30 @@ def test_source_equals_read_across_dml(spark, tmp_path):
 
 
 def test_pushed_range_filter_prunes_files(spark, tmp_path):
-    path = str(tmp_path / "t")
-    _mk(spark, path, stat_cols=["id"])
-    full = _load(spark, path)
-    pruned = _load(spark, path).filter(F.col("id") <= 20)
-    n_full = full.rdd.getNumPartitions()
-    n_pruned = pruned.rdd.getNumPartitions()
-    assert n_full == 8
-    assert n_pruned < n_full  # manifest pruned the out-of-range files
-    assert sorted(r["id"] for r in pruned.collect()) == list(range(1, 21))
+    # both manifest representations: inline JSON and the parquet relation
+    for fmt in ("json", "parquet"):
+        path = str(tmp_path / fmt)
+        _mk(spark, path, stat_cols=["id"], manifest_format=fmt)
+        full = _load(spark, path)
+        pruned = _load(spark, path).filter(F.col("id") <= 20)
+        n_full = full.rdd.getNumPartitions()
+        n_pruned = pruned.rdd.getNumPartitions()
+        assert n_full == 8
+        assert n_pruned < n_full  # manifest pruned the out-of-range files
+        assert sorted(r["id"] for r in pruned.collect()) == list(range(1, 21))
 
 
 def test_pushed_bloom_equality_prunes_files(spark, tmp_path):
-    path = str(tmp_path / "t")
-    t = _mk(spark, path, bloom_col="id")
-    hit = _load(spark, path).filter(F.col("id") == 55)
-    assert hit.rdd.getNumPartitions() < 8
-    assert [tuple(r) for r in hit.collect()] == [(55, 55 % 8, 550)]
-    # a deleted key: still zero rows through the DV
-    t.delete(F.col("id") == 55)
-    assert _load(spark, path).filter(F.col("id") == 55).count() == 0
+    # both manifest representations: inline JSON and the parquet relation
+    for fmt in ("json", "parquet"):
+        path = str(tmp_path / fmt)
+        t = _mk(spark, path, bloom_col="id", manifest_format=fmt)
+        hit = _load(spark, path).filter(F.col("id") == 55)
+        assert hit.rdd.getNumPartitions() < 8
+        assert [tuple(r) for r in hit.collect()] == [(55, 55 % 8, 550)]
+        # a deleted key: still zero rows through the DV
+        t.delete(F.col("id") == 55)
+        assert _load(spark, path).filter(F.col("id") == 55).count() == 0
 
 
 def test_pruning_is_only_an_optimization(spark, tmp_path):
@@ -150,6 +158,14 @@ def test_source_refuses_reclaimed_old_version(spark, tmp_path):
     assert _load(spark, path).count() == t.read().count()
     with pytest.raises(Exception, match="reclaim_dead|retention"):
         _load(spark, path, version=1).count()
+    # a DV version whose base dir is gone: the named error, not a bare
+    # FileNotFoundError from a directory listing
+    p2 = str(tmp_path / "t2")
+    t2 = _mk(spark, p2)
+    t2.delete(F.col("id") <= 10)
+    shutil.rmtree(_vd(p2, 1))
+    with pytest.raises(Exception, match="no longer exists"):
+        _load(spark, p2).count()
 
 
 def test_every_pushed_predicate_kind_plans_and_matches(spark, tmp_path):

@@ -10,12 +10,14 @@ exactly-once); copy commits and renames in the window raise loudly
 a delta."""
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from strava_etl_public_spark.operators.table import ManagedTable
 from strava_etl_public_spark.sources.table_cdf import register_cdf_stream
+from tests.vdir_helper import vd as _vd
 
 SCHEMA = "id long, bucket long, val long"
 
@@ -173,6 +175,14 @@ def test_copy_commit_in_window_raises(spark, tmp_path):
     with pytest.raises(Exception) as ei:
         _drain(spark, path, v0, str(tmp_path / "ck"))
     assert "table_cdf" in str(ei.value)
+    # a DV version whose base dir is gone: the named error, not a bare
+    # FileNotFoundError from a directory listing
+    p2 = str(tmp_path / "t2")
+    t2 = _mk(spark, p2)
+    t2.delete(F.col("id") == 1)
+    shutil.rmtree(_vd(p2, 1))
+    with pytest.raises(Exception, match="no longer exists"):
+        _drain(spark, p2, 1, str(tmp_path / "ck2"))
 
 
 def test_rename_in_window_schema_contract(spark, tmp_path):
@@ -417,10 +427,8 @@ def test_replayed_pre_add_window_serves_with_backfill(spark, tmp_path):
     null-backfills it, so that window must SERVE, not raise; only a
     map NEWER than the declaration missing a declared column (a real
     drop/rename) raises."""
-    from strava_etl_public_spark.sources.table_cdf import (
-        TableCDFStreamReader,
-        table_fields,
-    )
+    from strava_etl_public_spark.operators.table_log import TableLog
+    from strava_etl_public_spark.sources.table_cdf import TableCDFStreamReader
 
     path = str(tmp_path / "t")
     t = _mk(spark, path, n=10)
@@ -433,7 +441,7 @@ def test_replayed_pre_add_window_serves_with_backfill(spark, tmp_path):
     # a reader declared NOW (post-add), asked for the PRE-add window —
     # the replayed-batch shape
     rdr = TableCDFStreamReader(
-        {"path": path}, table_fields(path)
+        {"path": path}, TableLog(path).table_fields()
     )
     assert [f[0] for f in rdr._fields] == ["id", "bucket", "val", "note"]
     parts = rdr.partitions({"version": v0}, {"version": v_pre})
