@@ -900,10 +900,10 @@ def lineage_pq(spark, root, n_versions=100_000):
     """Commit-log lineage checkpoints at 10⁵ versions, JSON vs parquet:
     build wall, checkpoint bytes, load wall (``_read_lineage_ckpt``),
     and an as-of resolve to the chain's far end through
-    ``ManagedTable._lineage``, against the no-checkpoint full walk.
+    ``ManagedTable._resolve_ts_version``, against the no-checkpoint full walk.
     Synthesized records; no Spark job. The checkpointed chain must
     equal the full chain, markers included."""
-    from strava_etl_public_spark.operators import layout
+    from strava_etl_public_spark.operators import table_log
     from strava_etl_public_spark.operators.table import ManagedTable
 
     n = n_versions
@@ -946,16 +946,16 @@ def lineage_pq(spark, root, n_versions=100_000):
     exact = True
     for label, thresh in (("json", n + 1), ("parquet", 1)):
         shutil.rmtree(kdir, ignore_errors=True)
-        old, layout.LINEAGE_CKPT_PQ_THRESHOLD = layout.LINEAGE_CKPT_PQ_THRESHOLD, thresh
+        old, table_log.LINEAGE_CKPT_PQ_THRESHOLD = table_log.LINEAGE_CKPT_PQ_THRESHOLD, thresh
         try:
-            out[f"build_s_{label}"] = round(best(lambda: layout._maybe_write_lineage_ckpt(tdir, n))[1], 2)
+            out[f"build_s_{label}"] = round(best(lambda: table_log._maybe_write_lineage_ckpt(tdir, n))[1], 2)
         finally:
-            layout.LINEAGE_CKPT_PQ_THRESHOLD = old
+            table_log.LINEAGE_CKPT_PQ_THRESHOLD = old
         files = os.listdir(kdir)
         out[f"ckpt_bytes_{label}"] = dir_bytes(os.path.join(kdir, files[0]))
-        out[f"load_ms_{label}"] = ms(lambda: layout._read_lineage_ckpt(kdir, n))
+        out[f"load_ms_{label}"] = ms(lambda: table_log._read_lineage_ckpt(kdir, n))
         out[f"resolve_far_ms_{label}"] = ms(far_resolve)
-        chain = layout._read_lineage_ckpt(kdir, n)
+        chain = table_log._read_lineage_ckpt(kdir, n)
         exact &= (
             len(files) == 1
             and len(chain) == n

@@ -13,7 +13,7 @@ S3DynamoDBLogStore pattern: the conditional WRITE happens in DynamoDB,
 the object body follows, and readers repair claimed-but-missing
 objects from the table). This module extracts that seam so the same
 commit protocol runs against any backend that can do a conditional
-put — layout.py's snapshot_commit_ref / snapshot_rollback call the
+put — table_log.py's snapshot_commit_ref / snapshot_rollback call the
 active store and never touch the race primitive directly.
 
 Contract (PORTABILITY.md "Commit protocol" section):

@@ -2,12 +2,13 @@
 
 Round 8 left every table-format primitive as a separately-proven
 operator: MERGE INTO (upsert.merge_into), versioned snapshots with
-time travel / rollback / vacuum (layout.snapshot_*), OPTIMIZE
-(layout.compact_parquet under the snapshot contract), file-manifest
-zone maps (layout.write_with_stats / read_with_skipping), schema
-evolution, and dynamic partition overwrite. This module composes them
-into the single API a user of a table format actually holds — create
-→ merge → optimize → scan → time-travel → rollback → vacuum through
+time travel / rollback / vacuum (the commit protocol in
+table_log.py), OPTIMIZE (layout.compact_parquet under the snapshot
+contract), file-manifest zone maps (layout.write_with_stats /
+read_with_skipping), schema evolution, and dynamic partition
+overwrite. This module composes them into the single API a user of
+a table format actually holds —
+create → merge → optimize → scan → time-travel → rollback → vacuum through
 one object, with the file-statistics manifest maintained across every
 operation (Delta/Iceberg's contract in miniature, on plain parquet).
 
@@ -21,7 +22,7 @@ mutates published history.
 Scale design (100 TB):
 * every commit is an append of new files + ONE atomic pointer flip
   — readers never block writers, and a crash leaves the previous
-  version current (layout.snapshot_commit_ref's argument); every
+  version current (table_log.snapshot_commit_ref's argument); every
   commit writes its data once (:meth:`ManagedTable._written_once`) and
   reference commits publish through one loop
   (:meth:`~.table_log.TableLog._publish`);
@@ -51,24 +52,29 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .layout import (
-    CommitConflict,
-    _check_expected_max,
     compact_parquet,
     dataset_fingerprint,
     fingerprint_metrics,
-    resolve_entry,
     row_hash,
-    snapshot_commit_ref,
-    snapshot_max_commit,
-    snapshot_read,
-    snapshot_rollback,
-    snapshot_vacuum,
-    snapshot_version,
 )
 from .upsert import merge_into
 
 from .table_compact import _CompactMixin
-from .table_log import _DIGEST, TableLog
+from .table_log import (
+    _DIGEST,
+    CommitConflict,
+    TableLog,
+    _check_expected_max,
+    _remove_versions,
+    _retained,
+    dataset_dir,
+    resolve_entry,
+    snapshot_commit_ref,
+    snapshot_max_commit,
+    snapshot_read,
+    snapshot_rollback,
+    snapshot_version,
+)
 from .table_read import _TableReadMixin
 from .table_schema import _SchemaMixin
 
@@ -262,68 +268,39 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin, TableLog):
         against its own dead set and raises on any overlap it cannot
         account for, never a silent partial read (see
         :meth:`~.table_compact._CompactMixin._reclaim_dead_files`)."""
-        import json as _json
-
-        cdir = os.path.join(self.path, "_commits")
-        versions = (
-            sorted(
-                int(f.split(".")[0])
-                for f in os.listdir(cdir)
-                if f.endswith(".json")
-            )
-            if os.path.isdir(cdir)
-            else []
-        )
-        current = self.version()
-        survivors = set(versions[-keep_last:]) | {
-            v for v in versions if v >= current
-        }
-        pinned: set[int] = set()
+        # the survivor set is computed once, here, and handed whole to
+        # the removal pass
+        versions, survivors = _retained(self.path, keep_last)
+        recs = {v: self._record(v) for v in versions}
         if older_than_ts is not None:
-            for v in versions:
-                with open(os.path.join(cdir, f"{v}.json")) as f:
-                    rec = _json.load(f)
-                if "ts" not in rec or float(rec["ts"]) >= older_than_ts:
-                    pinned.add(v)
-            survivors = survivors | pinned
-        from .layout import dataset_dir
-
+            survivors |= {
+                v
+                for v, rec in recs.items()
+                if float(rec.get("ts", float("inf"))) >= older_than_ts
+            }
         # basename → version, covering BOTH naming modes: the logical
         # v{n} name and the staged name the commit record references
         # (a never-renamed publish stores staged basenames in child
         # refs — r13 no-rename mode; the pre-r13 int(base[1:]) parse
         # crashed on those)
-        name_to_v: dict[str, int] = {}
-        for v in versions:
-            name_to_v[f"v{v}"] = v
-            try:
-                with open(os.path.join(cdir, f"{v}.json")) as f:
-                    st = _json.load(f).get("staged")
-                if st:
-                    name_to_v[st] = v
-            except (OSError, ValueError):
-                pass
-
-        def _pin(name: str) -> None:
-            pv = name_to_v.get(name)
-            if pv is not None:
-                pinned.add(pv)
-
+        name_to_v = {f"v{v}": v for v in versions}
+        name_to_v.update(
+            (rec["staged"], v) for v, rec in recs.items() if rec.get("staged")
+        )
+        pinned: set[int] = set()
         for v in survivors:
-            vdir = dataset_dir(self.path, v)  # r13: resolved, not v{v}
-            meta = os.path.join(vdir, "_dv.json") if vdir else ""
-            if meta and os.path.isfile(meta):
-                with open(meta) as f:
-                    m = _json.load(f)
-                base = m.get("base")
-                if base:  # relative in-table base, e.g. "v3"
-                    _pin(base)
-                for a in m.get("appends", []):
-                    # "v5/_upd" pins v5; "self" is the survivor itself
-                    if a != "self" and not os.path.isabs(a):
-                        _pin(a.split("/", 1)[0])
-        removed = snapshot_vacuum(
-            self.path, keep_last=keep_last, protect=pinned, dry_run=dry_run
+            m = self._dv_ref(dataset_dir(self.path, v)) or {}
+            # a relative in-table base ("v3") and appends ("v5/_upd"
+            # pins v5; "self" is the survivor itself)
+            refs = [m["base"]] if m.get("base") else []
+            refs += [
+                a.split("/", 1)[0]
+                for a in m.get("appends", [])
+                if a != "self" and not os.path.isabs(a)
+            ]
+            pinned |= {name_to_v[r] for r in refs if r in name_to_v}
+        removed = _remove_versions(
+            self.path, versions, survivors | pinned, dry_run
         )
         self.last_reclaimed_bytes = 0
         if reclaim_dead:
@@ -363,25 +340,24 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin, TableLog):
         # crash-atomic: write-then-replace — an in-place open('w')
         # left a truncated _table.json on a mid-write crash, bricking
         # every later constructor (ADVICE r10)
-        import uuid
-
         tmp = os.path.join(self.path, f"_table.json.tmp_{uuid.uuid4().hex[:8]}")
         with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "key": self.key,
-                    "stat_cols": self.stat_cols,
-                    "constraints": self.constraints,
-                    "bloom_col": self.bloom_col,
-                    "bloom_m": self.bloom_m,
-                    "bloom_k": self.bloom_k,
-                    "manifest_format": self.manifest_format,
-                    "column_defaults": self.column_defaults,
-                    "required_features": self.required_features,
-                },
-                f,
-            )
+            json.dump(self._config(), f)
         os.replace(tmp, os.path.join(self.path, "_table.json"))
+
+    def _config(self) -> dict:
+        """The ``_table.json`` config this handle holds."""
+        return {
+            "key": self.key,
+            "stat_cols": self.stat_cols,
+            "constraints": self.constraints,
+            "bloom_col": self.bloom_col,
+            "bloom_m": self.bloom_m,
+            "bloom_k": self.bloom_k,
+            "manifest_format": self.manifest_format,
+            "column_defaults": self.column_defaults,
+            "required_features": self.required_features,
+        }
 
     def _check_rows(self, df: DataFrame, constraints: dict[str, str]) -> None:
         for name, expr_sql in constraints.items():
@@ -568,20 +544,7 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin, TableLog):
         data_dir, dv_dir, appends = self._resolve(v)
         os.makedirs(dst_path, exist_ok=True)
         with open(os.path.join(dst_path, "_table.json"), "x") as f:
-            json.dump(
-                {
-                    "key": self.key,
-                    "stat_cols": self.stat_cols,
-                    "constraints": self.constraints,
-                    "bloom_col": self.bloom_col,
-                    "bloom_m": self.bloom_m,
-                    "bloom_k": self.bloom_k,
-                    "manifest_format": self.manifest_format,
-                    "column_defaults": self.column_defaults,
-                    "required_features": self.required_features,
-                },
-                f,
-            )
+            json.dump(self._config(), f)
         if dv_dir is not None:
             # the source's table-relative DV entries point into the
             # SOURCE's files — freeze them to absolute before
@@ -608,8 +571,7 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin, TableLog):
             # absolute before re-rooting under the clone
             if self._dead_of(v):
                 ref["dead"] = sorted(self._dead_abs(v))
-            with open(os.path.join(vdir, "_dv.json"), "w") as f:
-                json.dump(ref, f)
+            self._write_dv_ref(vdir, ref)
             self._inherit_sidecars(self._vdir(v), vdir)
 
         # digest inherited from the source's commit record — a clone's
@@ -626,9 +588,7 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin, TableLog):
         snapshot_commit_ref(
             dst_path,
             populate,
-            digest={
-                k: parent[k] for k in ("n_rows", "xor_hash", "sum_hash_mod")
-            },
+            digest={k: parent[k] for k in _DIGEST},
             extra=extra,
         )
         return ManagedTable(self.spark, dst_path)

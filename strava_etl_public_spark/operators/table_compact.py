@@ -31,14 +31,14 @@ rewrites stop being an option.
 
 from __future__ import annotations
 
-import json
 import math
 import os
 import shutil
 
 from pyspark.sql import functions as F
 
-from .layout import dataset_fingerprint, resolve_entry
+from .layout import dataset_fingerprint
+from .table_log import _tombstone, resolve_entry
 
 
 class _CompactMixin:
@@ -103,11 +103,6 @@ class _CompactMixin:
                     os.path.getsize(f_abs) for f_abs in removable
                 )
                 continue
-            tomb_path = os.path.join(d_abs, "_vacuumed.json")
-            tomb: set[str] = set()
-            if os.path.isfile(tomb_path):
-                with open(tomb_path) as f:
-                    tomb = set(json.load(f).get("files", []))
             # tombstone FIRST, then delete: a crash between the two
             # leaves files tombstoned-but-present — old-version reads
             # refuse conservatively (loud), the current version is
@@ -115,11 +110,7 @@ class _CompactMixin:
             # finishes the deletes. The reverse order left a window
             # where a removed file had no tombstone and an old
             # version read SILENTLY partial.
-            tomb |= {os.path.basename(f) for f in removable}
-            tmp = tomb_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump({"files": sorted(tomb)}, f)
-            os.replace(tmp, tomb_path)  # crash-atomic, like _table.json
+            _tombstone(d_abs, {os.path.basename(f) for f in removable})
             for f_abs in sorted(removable):
                 reclaimed += os.path.getsize(f_abs)
                 os.remove(f_abs)
@@ -207,7 +198,7 @@ class _CompactMixin:
           keeps them valid (the DV convention).
 
         Concurrency: pessimistic, like OPTIMIZE — a competing commit
-        in the window surfaces :class:`~.layout.CommitConflict`
+        in the window surfaces :class:`~.table_log.CommitConflict`
         (transact()'s retry loop re-runs the census, which is cheap).
         Interleaved BLIND APPENDS are absorbed (r11): an append
         touches no existing file and no DV, so the victim census,
@@ -355,8 +346,7 @@ class _CompactMixin:
                 ref["appends"] = kept_appends + ["self"]
                 if dead_out:
                     ref["dead"] = dead_out
-                with open(os.path.join(vdir, "_dv.json"), "w") as f:
-                    json.dump(ref, f)
+                self._write_dv_ref(vdir, ref)
                 # inherited sidecars stay conservative-correct: victim
                 # basenames are pruned from survivor lists driver-side
                 # (scan/lookup consult the dead set), rewritten files

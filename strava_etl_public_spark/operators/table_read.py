@@ -18,7 +18,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .layout import read_with_skipping, snapshot_history
+from .layout import read_with_skipping
+from .table_log import footer_types, snapshot_history
 
 
 class _TableReadMixin:
@@ -148,9 +149,6 @@ class _TableReadMixin:
         footer's fields with the ``widened`` type overrides applied,
         plus ``added`` columns files may lack (explicit-schema reads
         null-backfill missing columns natively)."""
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import from_arrow_type
-
         sample = None
         for p in paths:
             if os.path.isdir(p):
@@ -164,18 +162,9 @@ class _TableReadMixin:
                 break
         if sample is None:
             raise ValueError(f"no parquet files to sample under {paths}")
-        sch = pq.ParquetFile(sample).schema_arrow
-        parts, seen = [], set()
-        for name in sch.names:
-            t = widened.get(name) or from_arrow_type(
-                sch.field(name).type
-            ).simpleString()
-            parts.append(f"`{name}` {t}")
-            seen.add(name)
-        for ph, t in (added or {}).items():
-            if ph not in seen:
-                parts.append(f"`{ph}` {widened.get(ph, t)}")
-        return ", ".join(parts)
+        return ", ".join(
+            f"`{n}` {t}" for n, t in footer_types(sample, widened, added).items()
+        )
 
     def _with_added(self, v: int, df: DataFrame, added=None) -> DataFrame:
         added = self._version_added(v) if added is None else added
@@ -255,42 +244,10 @@ class _TableReadMixin:
         """TIMESTAMP AS OF: the table as of wall-clock ``ts`` (epoch
         seconds) — the newest LINEAGE version whose commit time is ≤
         ``ts`` (walking parent pointers, so abandoned rolled-back
-        branches never serve a timestamp read). Raises if ``ts``
-        predates the chain's first commit."""
+        branches never serve a timestamp read; the resolve is
+        :meth:`~.table_log.TableLog._resolve_ts_version`). Raises if
+        ``ts`` predates the chain's first commit."""
         return self.read(version=self._resolve_ts_version(ts))
-
-    def _resolve_ts_version(self, ts: float) -> int:
-        """The version ``as_of(ts)`` serves — pure metadata, no Spark.
-        Walks the head segment per-record; on reaching a checkpointed
-        version, resolves THROUGH the checkpoint (layout's
-        _ckpt_resolve_ts: parquet checkpoints answer from row-group
-        stats + one group instead of a full chain parse)."""
-        from .layout import _NO_CKPT, _ckpt_resolve_ts
-
-        kdir = os.path.join(self.path, "_ckpts")
-        cur = self.version()
-        first = True
-        while cur >= 1:
-            if not first:
-                r = _ckpt_resolve_ts(kdir, cur, ts)
-                if r is not _NO_CKPT:
-                    if r is not None:
-                        return r
-                    break  # rest of the chain is all newer than ts
-            first = False
-            rec = self._record(cur)
-            if not rec:
-                break
-            if float(rec.get("ts", float("inf"))) <= ts:
-                return cur
-            nxt = int(rec.get("parent", cur - 1))
-            if nxt >= cur:
-                break
-            cur = nxt
-        raise ValueError(
-            f"no published version at or before ts={ts} on the current "
-            f"lineage of {self.path}"
-        )
 
     def changes(
         self, from_version: int, to_version: int, include_before: bool = False

@@ -24,15 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .layout import dataset_fingerprint, resolve_entry
-
-# SQL-type aliases normalized to simpleString() forms
-_TYPE_ALIASES = {
-    "byte": "tinyint",
-    "short": "smallint",
-    "integer": "int",
-    "long": "bigint",
-}
+from .layout import dataset_fingerprint
+from .table_log import _DIGEST, INT_CHAIN, resolve_entry, sql_type
 
 # allowed (from, to) widenings. The int chain is RENDER-STABLE
 # (CAST(5 AS STRING) is "5" at every width), so digests, zone-map
@@ -40,11 +33,10 @@ _TYPE_ALIASES = {
 # commit inherits its parent digest with zero scan. float→double is
 # NOT render-stable (float 0.1 widens to 0.10000000149…), so it
 # rescans the fingerprint and is refused on skipping-layer columns.
-_INT_CHAIN = ["tinyint", "smallint", "int", "bigint"]
 _WIDENINGS = {
     (a, b)
-    for i, a in enumerate(_INT_CHAIN)
-    for b in _INT_CHAIN[i + 1 :]
+    for i, a in enumerate(INT_CHAIN)
+    for b in INT_CHAIN[i + 1 :]
 } | {("float", "double")}
 
 
@@ -172,8 +164,7 @@ class _SchemaMixin:
             .schema[phys]
             .dataType.simpleString()
         )
-        new_t = _TYPE_ALIASES.get(new_type.strip().lower(), new_type.strip().lower())
-        cur_t = _TYPE_ALIASES.get(eff, eff)
+        new_t, cur_t = sql_type(new_type), sql_type(eff)
         if (cur_t, new_t) not in _WIDENINGS:
             raise ValueError(
                 f"cannot alter {name!r} from {cur_t} to {new_t}: only "
@@ -298,9 +289,7 @@ class _SchemaMixin:
             digest.pop("dataset", None)
         else:
             parent = self._record(cur)
-            digest = {
-                k: parent[k] for k in ("n_rows", "xor_hash", "sum_hash_mod")
-            }
+            digest = {k: parent[k] for k in _DIGEST}
         extra = {"parent": cur, "op": "metadata", "columns": new_map}
         if added:
             extra["added"] = added

@@ -203,7 +203,7 @@ def x_table_ckpt_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from .operators import layout
+    from .operators import table_log
     from .operators.layout import dataset_fingerprint
     from .operators.table import ManagedTable
 
@@ -218,11 +218,11 @@ def x_table_ckpt_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     root = tempfile.mkdtemp(prefix="ckpt_pq_table_")
     path = os.path.join(root, "t")
-    old_every = layout.SNAPSHOT_CKPT_EVERY
-    old_thresh = layout.LINEAGE_CKPT_PQ_THRESHOLD
+    old_every = table_log.SNAPSHOT_CKPT_EVERY
+    old_thresh = table_log.LINEAGE_CKPT_PQ_THRESHOLD
     try:
-        layout.SNAPSHOT_CKPT_EVERY = 4
-        layout.LINEAGE_CKPT_PQ_THRESHOLD = 1
+        table_log.SNAPSHOT_CKPT_EVERY = 4
+        table_log.LINEAGE_CKPT_PQ_THRESHOLD = 1
         t = ManagedTable.create(base.repartition(8), path, key="event_id")
         ts0 = 1_900_000_000.0
         for i in range(1, 13):
@@ -261,7 +261,7 @@ def x_table_ckpt_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         # regenerate a checkpoint (at the cadence-aligned v12) so
         # as_of resolves through the row-group fast path, then probe
         # the mid-chain timestamp
-        layout._maybe_write_lineage_ckpt(path, t.version() - 1)
+        table_log._maybe_write_lineage_ckpt(path, t.version() - 1)
         assert os.listdir(kdir)  # the fast path is actually in play
         asof = t.as_of(ts0 + 6 * 10 + 5)
         fp = dataset_fingerprint(asof, cols, label="ckpt_pq_events")
@@ -273,6 +273,6 @@ def x_table_ckpt_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         ).localCheckpoint(eager=True)
     finally:
-        layout.SNAPSHOT_CKPT_EVERY = old_every
-        layout.LINEAGE_CKPT_PQ_THRESHOLD = old_thresh
+        table_log.SNAPSHOT_CKPT_EVERY = old_every
+        table_log.LINEAGE_CKPT_PQ_THRESHOLD = old_thresh
         shutil.rmtree(root, ignore_errors=True)

@@ -57,38 +57,9 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from ..operators.table_log import TableLog
+from ..operators.table_log import TableLog, arrow_type
 
 _FAST_OPS = ("dv_delete", "dv_update", "dv_overwrite", "append")
-
-# SQL type string → pyarrow type factory, for null-backfilled
-# metadata-added columns (executors have no Catalyst to consult)
-_SQL_TO_ARROW = {
-    "long": "int64",
-    "bigint": "int64",
-    "int": "int32",
-    "integer": "int32",
-    "short": "int16",
-    "smallint": "int16",
-    "double": "float64",
-    "float": "float32",
-    "string": "string",
-    "boolean": "bool_",
-    "binary": "binary",
-    "date": "date32",
-}
-
-
-def _arrow_type(sql_type: str):
-    import pyarrow as pa
-
-    name = _SQL_TO_ARROW.get(sql_type.strip().lower())
-    if name is None:
-        raise ValueError(
-            f"unsupported added-column type {sql_type!r} for the "
-            "table_cdf stream source"
-        )
-    return getattr(pa, name)()
 
 
 def _part_files(d: str) -> list[str]:
@@ -181,14 +152,20 @@ def _project(batch, fields: tuple):
 
     cols = []
     for _, physical, sql_type in fields:
+        # executors have no Catalyst to consult: the table_log type table
+        want = arrow_type(sql_type)
         if physical in batch.schema.names:
             col = batch.column(physical)
-            want = _SQL_TO_ARROW.get(sql_type.strip().lower())
-            if want is not None and col.type != getattr(pa, want)():
-                col = col.cast(getattr(pa, want)())
+            if want is not None and col.type != want:
+                col = col.cast(want)
             cols.append(col)
+        elif want is None:
+            raise ValueError(
+                f"unsupported added-column type {sql_type!r} for the "
+                "table_cdf stream source"
+            )
         else:
-            cols.append(pa.nulls(batch.num_rows, _arrow_type(sql_type)))
+            cols.append(pa.nulls(batch.num_rows, want))
     return pa.RecordBatch.from_arrays(cols, names=[l for l, _, _ in fields])
 
 

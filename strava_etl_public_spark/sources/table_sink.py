@@ -70,8 +70,14 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from ..operators.table_log import _MOD, TableLog
-from .table_cdf import _arrow_type
+from ..operators.table_log import (
+    _MOD,
+    STABLE_TYPES,
+    TableLog,
+    arrow_type,
+    resolve_entry,
+    sql_type,
+)
 
 
 _DUCKDB_FOLD_BROKEN = False  # set on first runtime failure (log once)
@@ -133,18 +139,6 @@ def _digest_fold(joined) -> tuple[int, int, int]:
         s = (s + h) % _MOD
     return n, x, s
 
-#: arrow-side SQL types whose Python str() rendering equals Spark's
-#: CAST(x AS STRING) — the digest chain's cast-stability requirement
-_STABLE_TYPES = {
-    "tinyint",
-    "smallint",
-    "int",
-    "bigint",
-    "string",
-    "boolean",
-    "date",
-}
-
 
 @dataclass
 class _AppendCommit(WriterCommitMessage):
@@ -179,7 +173,7 @@ class _AppendWriterCore:
             )
         self.fields = log.table_fields()  # ((logical, phys, type),)
         for l, _, t in self.fields:
-            if t.strip().lower() not in _STABLE_TYPES:
+            if sql_type(t) not in STABLE_TYPES:
                 raise ValueError(
                     f"column {l!r} has type {t} — not cast-stable with "
                     "the digest chain; pre-format it (the "
@@ -231,7 +225,7 @@ class _AppendWriterCore:
                 cast_cols = []
                 for (l, _, t) in self.fields:
                     col = tbl.column(l)
-                    target = _arrow_type(t)
+                    target = arrow_type(t)
                     if col.type != target:
                         col = col.cast(target)
                     cast_cols.append(col)
@@ -249,7 +243,7 @@ class _AppendWriterCore:
                 # on the JVM side, pinned by the sink parity tests).
                 # pa bool→string casts render "true"/"false",
                 # matching SQL CAST — the cast-stable contract the
-                # _STABLE_TYPES gate enforces.
+                # STABLE_TYPES gate enforces.
                 import pyarrow.compute as pc
 
                 rendered = [
@@ -306,8 +300,6 @@ class _AppendWriterCore:
         the rebase on a conflict, the digest fold and the carried
         schema markers are ManagedTable.append's. The commit rule is
         the sink's: any interleave that keeps the column map commutes."""
-        from ..operators.layout import resolve_entry
-
         msgs = [m for m in messages if m]
         total = sum(m.n_rows for m in msgs)
         if total == 0:

@@ -350,10 +350,8 @@ def _commit_df(df, t):
     """Commit ``df`` as the next snapshot of the table at ``t`` through
     ``snapshot_commit_ref``: its files are the version's own, its
     fingerprint the record's digest."""
-    from strava_etl_public_spark.operators.layout import (
-        dataset_fingerprint,
-        snapshot_commit_ref,
-    )
+    from strava_etl_public_spark.operators.layout import dataset_fingerprint
+    from strava_etl_public_spark.operators.table_log import snapshot_commit_ref
 
     digest = dataset_fingerprint(df).collect()[0].asDict()
 
@@ -366,7 +364,7 @@ def _commit_df(df, t):
 def test_snapshot_commit_read_rollback_history(spark, tmp_path):
     import pandas as pd
 
-    from strava_etl_public_spark.operators.layout import (
+    from strava_etl_public_spark.operators.table_log import (
         snapshot_history,
         snapshot_read,
         snapshot_rollback,
@@ -421,7 +419,7 @@ def test_snapshot_occ_and_vacuum(spark, tmp_path):
     import pandas as pd
     import pytest
 
-    from strava_etl_public_spark.operators.layout import (
+    from strava_etl_public_spark.operators.table_log import (
         snapshot_history,
         snapshot_read,
         snapshot_rollback,
@@ -451,14 +449,14 @@ def test_snapshot_occ_and_vacuum(spark, tmp_path):
     # the original 4-commit table
     import shutil as _sh
 
-    from strava_etl_public_spark.operators.layout import dataset_dir as _dd
+    from strava_etl_public_spark.operators.table_log import dataset_dir as _dd
 
     _v6 = _dd(t, 6)  # resolve BEFORE the record goes (no-rename mode)
     os.remove(rogue)
     os.remove(os.path.join(t, "_commits", "6.json"))
     if _v6:
         _sh.rmtree(_v6, ignore_errors=True)
-    from strava_etl_public_spark.operators.layout import snapshot_version
+    from strava_etl_public_spark.operators.table_log import snapshot_version
 
     assert snapshot_version(t) == 6  # pointer moved by the v6 commit
     snapshot_rollback(t, 4)
@@ -562,7 +560,7 @@ def test_snapshot_commit_ref_crash_publishes_nothing(spark, tmp_path):
 
     import pytest
 
-    from strava_etl_public_spark.operators.layout import (
+    from strava_etl_public_spark.operators.table_log import (
         snapshot_commit_ref,
         snapshot_read,
         snapshot_version,

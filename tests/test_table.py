@@ -228,7 +228,7 @@ def test_chained_deletes_merge_dv_one_hop(spark, base, tmp_path):
     with open(os.path.join(_vd(tmp_path / "t", v3), "_dv.json")) as f:
         # the stored base names v1's data dir — "v1" in normal mode,
         # v1's staged basename in no-rename mode; resolve to compare
-        from strava_etl_public_spark.operators.layout import resolve_rel
+        from strava_etl_public_spark.operators.table_log import resolve_rel
 
         assert resolve_rel(
             str(tmp_path / "t"), _json.load(f)["base"]
@@ -745,7 +745,7 @@ def test_transact_retries_commit_conflicts_and_reapplies(spark, base, tmp_path):
 
     attempts = {"n": 0}
 
-    from strava_etl_public_spark.operators.layout import CommitConflict
+    from strava_etl_public_spark.operators.table_log import CommitConflict
 
     def op(tab):
         if attempts["n"] == 0:
@@ -768,7 +768,7 @@ def test_transact_retries_commit_conflicts_and_reapplies(spark, base, tmp_path):
 def test_transact_gives_up_loudly_after_max_retries(spark, base, tmp_path):
     t = ManagedTable.create(base, str(tmp_path / "t"), key="id")
 
-    from strava_etl_public_spark.operators.layout import CommitConflict
+    from strava_etl_public_spark.operators.table_log import CommitConflict
 
     def always_conflicts(tab):
         raise CommitConflict("synthetic permanent conflict")
@@ -947,7 +947,7 @@ def test_raw_op_raises_commit_conflict_outside_transact(
 ):
     """Without transact, the interleaved commit surfaces as a LOUD
     CommitConflict — never a silent lost update."""
-    from strava_etl_public_spark.operators.layout import CommitConflict
+    from strava_etl_public_spark.operators.table_log import CommitConflict
     from strava_etl_public_spark.operators.table import ManagedTable as MT
 
     t = MT.create(base, str(tmp_path / "t"), key="id")

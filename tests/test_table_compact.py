@@ -383,7 +383,7 @@ def test_reader_feature_gate_and_vacuum_dry_run(spark, tmp_path):
     )
     removed = t.vacuum(keep_last=1)
     assert removed == would
-    from strava_etl_public_spark.operators.layout import dataset_dir
+    from strava_etl_public_spark.operators.table_log import dataset_dir
 
     assert not any(
         (dataset_dir(path, v) or "") and os.path.isdir(dataset_dir(path, v))
@@ -514,7 +514,7 @@ def test_compact_still_conflicts_with_interleaved_delete(
     """Only appends commute: a DV delete lands mid-publish — its
     write set may name a victim file, so the compaction must surface
     CommitConflict for a full re-derive (Delta's OPTIMIZE rule)."""
-    from strava_etl_public_spark.operators.layout import CommitConflict
+    from strava_etl_public_spark.operators.table_log import CommitConflict
 
     t = _mk(spark, str(tmp_path / "t"))
     t.delete(F.col("id") <= 40)

@@ -39,7 +39,7 @@ import pytest
 pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 
-from strava_etl_public_spark.operators import layout
+from strava_etl_public_spark.operators import table_log
 from strava_etl_public_spark.operators.layout import dataset_fingerprint
 from strava_etl_public_spark.operators.logstore import (
     LogStore,
@@ -221,7 +221,7 @@ def test_crash_fuzz_commit_protocol(spark, tmp_path, seed, monkeypatch):
         "rollback",  # rollback-abandoned ledger classification
         "burned_slot",  # record-without-data (pre-inversion debris)
     )
-    from strava_etl_public_spark.operators.layout import (
+    from strava_etl_public_spark.operators.table_log import (
         abandoned_records,
         resolve_entry,
         snapshot_max_commit,
@@ -310,7 +310,7 @@ def test_crash_fuzz_commit_protocol(spark, tmp_path, seed, monkeypatch):
                 log.append(f"{i}: rollback {v_before}->{target} crash_at={cp}")
                 set_log_store(CrashingStore(cp))
                 try:
-                    layout.snapshot_rollback(t.path, target)
+                    table_log.snapshot_rollback(t.path, target)
                 except InjectedCrash:
                     pass
                 finally:

@@ -5,8 +5,11 @@ Pins: a table listing a reader feature this build does not know is
 refused by every face (batch source, CDF stream source, sink), not
 only by ManagedTable; the sink's commit rebases over an interleaved
 commit through ``TableLog._publish`` with an exact digest; the sink's
-hashlib digest fold equals its DuckDB fold bit for bit."""
+hashlib digest fold equals its DuckDB fold bit for bit; a TINYINT
+column round-trips through the sink; and the log's own file names are
+spelled in ``table_log.py`` only."""
 
+import ast
 import json
 import os
 
@@ -130,3 +133,100 @@ def test_sink_hashlib_fold_equals_duckdb_fold(monkeypatch):
     slow = table_sink._digest_fold(joined)
     assert table_sink._DUCKDB_FOLD_BROKEN
     assert fast[0] == 3 and slow == fast
+
+
+#: the log's own files, spelled in table_log.py only (logstore.py
+#: writes the _latest pointer it owns)
+_LOG_FILES = {
+    "_commits", "_ckpts", "_abandoned", "_hw", "_dv.json",
+    "_vacuumed.json", "_latest",
+}
+
+
+def test_log_file_names_live_in_table_log_only():
+    """No Spark: every module under operators/ and sources/ except
+    table_log.py is parsed, and none holds one of the log's file names
+    as a string constant outside its docstrings."""
+    import strava_etl_public_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    found = []
+    for sub in ("operators", "sources"):
+        for fn in sorted(os.listdir(os.path.join(root, sub))):
+            if not fn.endswith(".py") or fn == "table_log.py":
+                continue
+            with open(os.path.join(root, sub, fn)) as f:
+                tree = ast.parse(f.read())
+            docs = {
+                id(n.body[0].value)
+                for n in ast.walk(tree)
+                if isinstance(
+                    n,
+                    (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef),
+                )
+                and n.body
+                and isinstance(n.body[0], ast.Expr)
+                and isinstance(n.body[0].value, ast.Constant)
+            }
+            allowed = {"_latest"} if fn == "logstore.py" else set()
+            found += [
+                f"{sub}/{fn}:{n.lineno} {n.value!r}"
+                for n in ast.walk(tree)
+                if isinstance(n, ast.Constant)
+                and n.value in _LOG_FILES - allowed
+                and id(n) not in docs
+            ]
+    assert not found, found
+
+
+def test_sink_tinyint_column_round_trips(spark, tmp_path):
+    """A TINYINT column is cast-stable, so the sink accepts it — and
+    the rows it writes read back the same through ManagedTable.read
+    and through the table_cdf stream."""
+    path = str(tmp_path / "t")
+    t = ManagedTable.create(
+        spark.createDataFrame([(1, 7), (2, -3)], "id long, b tinyint"),
+        path,
+        key="id",
+    )
+    v0 = t.version()
+    schema = spark.createDataFrame([], "id long, b tinyint").schema
+    w = table_sink.TableAppendBatchWriter({"path": path}, schema)
+    msg = w.write(
+        iter(
+            [
+                pa.RecordBatch.from_pydict(
+                    {
+                        "id": pa.array([3, 4], pa.int64()),
+                        "b": pa.array([127, None], pa.int8()),
+                    }
+                )
+            ]
+        )
+    )
+    w.commit([msg])
+    assert t.version() == v0 + 1
+    got = sorted(tuple(r) for r in t.read().collect())
+    assert got == [(1, 7), (2, -3), (3, 127), (4, None)]
+    rec = t._record(t.version())
+    live = dataset_fingerprint(t.read()).collect()[0].asDict()
+    assert [rec[k] for k in ("n_rows", "xor_hash", "sum_hash_mod")] == [
+        live[k] for k in ("n_rows", "xor_hash", "sum_hash_mod")
+    ]
+    rows = []
+    q = (
+        spark.readStream.format("table_cdf")
+        .option("path", path)
+        .option("starting_version", v0)
+        .load()
+        .writeStream.foreachBatch(
+            lambda df, _: rows.extend(tuple(r) for r in df.collect())
+        )
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert sorted(rows, key=lambda r: r[0]) == [(3, 127, 1), (4, None, 1)]

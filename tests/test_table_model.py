@@ -8,7 +8,10 @@ overwrite, clustered/plain OPTIMIZE, rollback, vacuum, metadata ADD
 COLUMN with DML on the added column) against a plain dict-of-rows
 model, asserting after EVERY op that read() equals the model, and at the end that every retained version time-travels to the
 state the model recorded when that version was published (vacuumed
-versions must raise, never read empty).
+versions must raise, never read empty). After every op a differential
+check also holds: the engine-free ``managed_table`` batch source, the
+commit record and ``ManagedTable.read`` give the current version the
+same digest.
 
 Seeded, not hypothesis-driven: each op runs real Spark jobs, so the
 budget is a few deterministic walks rather than shrinking searches. A
@@ -22,7 +25,10 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from strava_etl_public_spark.operators.layout import dataset_fingerprint
 from strava_etl_public_spark.operators.table import ManagedTable
+from strava_etl_public_spark.operators.table_log import _DIGEST
+from strava_etl_public_spark.sources.table_batch import register_table_source
 
 SCHEMA = "id long, part long, val long"
 
@@ -36,6 +42,11 @@ def _read_model(t, val="val", extras=()):
         r["id"]: (r["part"], r[val], tuple(r[e] for e in extras))
         for r in t.read().collect()
     }
+
+
+def _digest(df) -> dict:
+    d = dataset_fingerprint(df).collect()[0].asDict()
+    return {k: d[k] for k in _DIGEST}
 
 
 def _df(spark, model):
@@ -62,6 +73,7 @@ def test_random_op_sequences_match_model(
     )
 
     request.addfinalizer(lambda: set_log_store(None))
+    register_table_source(spark)
     if store_kind == "sqlite":
         set_log_store(
             SqliteCoordLogStore(db_path=str(tmp_path / f"coord{seed}.db"))
@@ -408,6 +420,18 @@ def test_random_op_sequences_match_model(
         assert got == _expected(), (
             f"step {step} diverged\nops:\n" + "\n".join(log)
         )
+        # differential: the pyarrow source, the record and read() agree
+        v = t.version()
+        rec = t._record(v)
+        src = (
+            spark.read.format("managed_table")
+            .option("path", t.path)
+            .option("version", v)
+            .load()
+        )
+        assert (
+            _digest(src) == {k: rec[k] for k in _DIGEST} == _digest(t.read(v))
+        ), f"step {step}: v{v} digests disagree\nops:\n" + "\n".join(log)
 
     # every retained version time-travels to its recorded state;
     # vacuumed versions raise loudly

@@ -135,7 +135,7 @@ def test_overwrite_absorbs_disjoint_interleaved_delete(spark, t, monkeypatch):
     """A dv_delete landing in the overwrite's populate window on
     DISJOINT files is absorbed by DV union — both effects on one
     lineage, no conflict surfaced."""
-    from strava_etl_public_spark.operators import layout as L
+    from strava_etl_public_spark.operators import table_log as L
 
     t2 = ManagedTable(spark, t.path)
     orig = L.snapshot_commit_ref

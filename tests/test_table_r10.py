@@ -106,10 +106,8 @@ def test_copy_commit_stages_until_record_race_won(
     published v{n}. Copy commits now write into a private staging dir
     and rename only after the O_EXCL record win — the loser's conflict
     leaves the winner's version byte-intact and no staging litter."""
-    from strava_etl_public_spark.operators.layout import (
-        CommitConflict,
-        dataset_fingerprint,
-    )
+    from strava_etl_public_spark.operators.layout import dataset_fingerprint
+    from strava_etl_public_spark.operators.table_log import CommitConflict
 
     t = ManagedTable.create(base, str(tmp_path / "t"), key="id")
     t2 = ManagedTable(spark, str(tmp_path / "t"))
@@ -308,9 +306,9 @@ def test_lineage_checkpoint_equals_full_walk(spark, base, tmp_path, monkeypatch)
     exactly the per-record walk's answer for timestamp time travel —
     across rollbacks (abandoned branches excluded from the folded
     chain) — while reading O(cadence) records."""
-    import strava_etl_public_spark.operators.layout as layout
+    import strava_etl_public_spark.operators.table_log as table_log
 
-    monkeypatch.setattr(layout, "SNAPSHOT_CKPT_EVERY", 4)
+    monkeypatch.setattr(table_log, "SNAPSHOT_CKPT_EVERY", 4)
     t = ManagedTable.create(base, str(tmp_path / "t"), key="id")
     ts = 1000.0
     recs = []
@@ -409,7 +407,7 @@ def test_same_file_dv_deletes_still_conflict(
     """Write sets touching the SAME file must conflict (file-level
     granularity, Delta's rule) — the union shortcut is refused and the
     conflict surfaces for transact's semantic retry."""
-    from strava_etl_public_spark.operators.layout import CommitConflict
+    from strava_etl_public_spark.operators.table_log import CommitConflict
 
     t = bucketed
     t2 = ManagedTable(spark, t.path)
@@ -433,7 +431,7 @@ def test_same_file_dv_deletes_still_conflict(
 def test_update_absorbs_disjoint_delete_but_not_update(
     spark, bucketed, tmp_path, monkeypatch
 ):
-    from strava_etl_public_spark.operators.layout import CommitConflict
+    from strava_etl_public_spark.operators.table_log import CommitConflict
 
     t = bucketed
     t2 = ManagedTable(spark, t.path)
@@ -557,7 +555,7 @@ def test_append_commutes_with_interleaved_merge(
 def test_append_conflicts_on_interleaved_column_map_change(
     spark, base, tmp_path, monkeypatch
 ):
-    from strava_etl_public_spark.operators.layout import CommitConflict
+    from strava_etl_public_spark.operators.table_log import CommitConflict
 
     t = ManagedTable.create(base, str(tmp_path / "t"), key="id")
     t2 = ManagedTable(spark, t.path)

@@ -244,10 +244,10 @@ def test_parquet_lineage_checkpoint_equals_walk(spark, tmp_path, monkeypatch):
     and with txn/txn_id markers carried."""
     import shutil
 
-    import strava_etl_public_spark.operators.layout as layout
+    import strava_etl_public_spark.operators.table_log as table_log
 
-    monkeypatch.setattr(layout, "SNAPSHOT_CKPT_EVERY", 4)
-    monkeypatch.setattr(layout, "LINEAGE_CKPT_PQ_THRESHOLD", 1)
+    monkeypatch.setattr(table_log, "SNAPSHOT_CKPT_EVERY", 4)
+    monkeypatch.setattr(table_log, "LINEAGE_CKPT_PQ_THRESHOLD", 1)
 
     base = spark.createDataFrame(
         [(i, float(i), i % 2) for i in range(1, 11)], SCHEMA
@@ -299,9 +299,9 @@ def test_parquet_lineage_checkpoint_equals_walk(spark, tmp_path, monkeypatch):
 def test_ckpt_retention_covers_both_representations(
     spark, tmp_path, monkeypatch
 ):
-    import strava_etl_public_spark.operators.layout as layout
+    import strava_etl_public_spark.operators.table_log as table_log
 
-    monkeypatch.setattr(layout, "SNAPSHOT_CKPT_EVERY", 2)
+    monkeypatch.setattr(table_log, "SNAPSHOT_CKPT_EVERY", 2)
     base = spark.createDataFrame(
         [(i, float(i), i % 2) for i in range(1, 6)], SCHEMA
     )
@@ -309,7 +309,7 @@ def test_ckpt_retention_covers_both_representations(
     # first half JSON, second half parquet (threshold flips mid-run)
     for i in range(8):
         if i == 4:
-            monkeypatch.setattr(layout, "LINEAGE_CKPT_PQ_THRESHOLD", 1)
+            monkeypatch.setattr(table_log, "LINEAGE_CKPT_PQ_THRESHOLD", 1)
         t._commit(t.read(), extra={"ts": 1000.0 + i})
     kdir = str(tmp_path / "t" / "_ckpts")
     vs = sorted(
@@ -418,7 +418,7 @@ def test_overwrite_still_conflicts_with_interleaved_append(
     partition being replaced would survive the replacement, breaking
     'exactly the named partitions' — the conflict surfaces for
     transact's semantic retry (Delta's rule)."""
-    from strava_etl_public_spark.operators.layout import CommitConflict
+    from strava_etl_public_spark.operators.table_log import CommitConflict
 
     t = bucketed
     t2 = ManagedTable(spark, t.path)

@@ -31,8 +31,8 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from strava_etl_public_spark.operators import layout
-from strava_etl_public_spark.operators.layout import (
+from strava_etl_public_spark.operators import table_log
+from strava_etl_public_spark.operators.table_log import (
     CommitConflict,
     abandoned_records,
     dataset_dir,
@@ -280,7 +280,7 @@ def test_lineage_ckpt_json_fallback_uses_requested_version(tmp_path):
         f.write(b"PAR1 this is not a parquet file")
     with open(os.path.join(kdir, "_ckpt_9.json"), "w") as f:
         json.dump({"lineage": [{"v": 9, "ts": 5.0}, {"v": 8, "ts": 4.0}]}, f)
-    got = layout._read_lineage_ckpt(kdir, 9)
+    got = table_log._read_lineage_ckpt(kdir, 9)
     assert got == [{"v": 9, "ts": 5.0}, {"v": 8, "ts": 4.0}]
 
 
@@ -308,7 +308,7 @@ def test_clean_staging_reclaims_only_orphans(spark, tmp_path):
     young_orphan = os.path.join(path, "_stage_deadbeef0002")
     os.makedirs(young_orphan)
 
-    removed = layout.clean_staging(path)
+    removed = table_log.clean_staging(path)
     assert removed == [old_orphan]
     assert os.path.isdir(os.path.join(path, rec["staged"]))
     assert os.path.isdir(young_orphan)

@@ -30,8 +30,8 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from strava_etl_public_spark.operators import layout
-from strava_etl_public_spark.operators.layout import (
+from strava_etl_public_spark.operators import table_log
+from strava_etl_public_spark.operators.table_log import (
     dataset_dir,
     resolve_entry,
     snapshot_version,
@@ -187,7 +187,7 @@ def test_clean_staging_protects_claimed_unmaterialized(spark, tmp_path):
         os.remove(os.path.join(path, "_commits", "2.json"))
         staged = os.path.join(path, rec["staged"])
         os.utime(staged, (1.0, 1.0))  # aged far past any grace window
-        removed = layout.clean_staging(path)
+        removed = table_log.clean_staging(path)
         assert staged not in removed
         assert os.path.isdir(staged), "vacuum deleted COMMITTED data"
         # the census repaired the record file as a side effect
@@ -260,7 +260,7 @@ def test_no_rename_mode_full_cycle(spark, tmp_path, monkeypatch):
     t2 = ManagedTable(spark, path)
     t2.append(_df(spark, [(402, 2, 402)]))
     assert _ids(ManagedTable(spark, path)) == base | {401, 402}
-    removed = layout.snapshot_vacuum(path, keep_last=1)
+    removed = table_log.snapshot_vacuum(path, keep_last=1)
     assert 1 in removed
     with pytest.raises(ValueError):
         t2.read(version=1).collect()

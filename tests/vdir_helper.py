@@ -11,7 +11,7 @@ import os
 
 
 def vd(table_path, v) -> str:
-    from strava_etl_public_spark.operators.layout import dataset_dir
+    from strava_etl_public_spark.operators.table_log import dataset_dir
 
     return dataset_dir(str(table_path), int(v)) or os.path.join(
         str(table_path), f"v{int(v)}"
