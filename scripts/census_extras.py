@@ -370,10 +370,11 @@ def main() -> int:
         roots |= reach[n]
     decisions = decide(extras, static, reach, roots)
 
+    # an extra no longer registered stays in the ledger as deleted
     old = json.loads(OUT.read_text())["extras"] if OUT.exists() else {}
-    for n, v in old.items():
-        if v == "deleted" and n not in decisions:
-            decisions[n] = v
+    for n in old:
+        if n not in decisions and n not in official:
+            decisions[n] = "deleted"
     doc = {
         "fixture": Path(sf_dir).name,
         "wall_s": round(time.perf_counter() - t_start, 1),

@@ -85,9 +85,8 @@ def main() -> int:
         "x_feature_trailing_window",
         "x_ab_cuped",
         "x_graph_khop",
-        # round-8 live-plan additions (x_dedup_incremental /
-        # x_stream_incremental_clusters checkpoint internally — audited
-        # at change time)
+        # round-8 live-plan additions (x_dedup_incremental
+        # checkpoints internally — audited at change time)
         "x_eval_retrieval_mrr_map",
         # round-8 third/fourth waves (the fingerprint near-dups and
         # the staging queries — compact/zonemap/dpp — checkpoint

@@ -14,8 +14,7 @@ a small size.
 
 Entries: pipeline, text, ann, quality, cc, rangejoin, maintenance,
 curation, dv, update, incremental, lineage_pq, manifest, sink,
-stream_state, ann_tune. Results at full size are recorded in
-SCALE.md.
+ann_tune. Results at full size are recorded in SCALE.md.
 """
 
 from __future__ import annotations
@@ -416,61 +415,6 @@ def incremental(spark, root, sf_dir=GEN_SF01, cpus=16):
         "docs": docs.count(),
         "shares": shares,
         "ok": all(s["identical"] for s in shares),
-    }
-
-
-def stream_state(spark, root, sf_dir=GEN_SF01, n_batches=20, batch_size=5000):
-    """Streaming near-dup state stays bounded by DISTINCT keys, not
-    events: replay ``n_batches`` batches of ``batch_size`` fresh event
-    ids over the tier's bounded text universe through
-    ``neardup_merge_batch``. Once every text has been seen, bucket-state
-    rows go flat (bytes within 20 % + 64 KiB) while events keep
-    arriving, and the final rows never exceed the universe's distinct
-    buckets."""
-    from strava_etl_public_spark.operators.dedup import band_buckets
-    from strava_etl_public_spark.streaming.ingest import (
-        neardup_merge_batch,
-        state_metrics,
-    )
-
-    universe = cached(spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text"))
-    universe_n = universe.count()
-    expected_buckets = (
-        band_buckets(universe, "doc_id", "text").select("band_idx", "h").distinct().count()
-    )
-    state = os.path.join(root, "state")
-    batches, bytes_bounded, flat_from = [], True, None
-    for b in range(n_batches):
-        # a cyclic window of the universe, re-keyed with fresh ids:
-        # new events over a bounded text universe
-        lo = (b * batch_size) % universe_n
-        hi = lo + batch_size
-        r = F.col("doc_id") % universe_n
-        sel = (r >= lo) & (r < hi) if hi <= universe_n else (r >= lo) | (r < hi - universe_n)
-        batch = universe.filter(sel).select(
-            (F.col("doc_id") + F.lit((b + 1) * 10_000_000)).alias("doc_id"), "text"
-        )
-        _, wall = best(lambda: neardup_merge_batch(batch, state))
-        bm = state_metrics(spark, os.path.join(state, "buckets"))
-        vm = state_metrics(spark, os.path.join(state, "verdicts"))
-        if batches and bm["rows"] == batches[-1]["bucket_rows"]:
-            flat_from = b if flat_from is None else flat_from
-            bytes_bounded &= bm["bytes"] <= int(batches[-1]["bucket_bytes"] * 1.2) + 65536
-        batches.append({
-            "merge_s": round(wall, 1),
-            "bucket_rows": bm["rows"],
-            "bucket_bytes": bm["bytes"],
-            "verdict_rows": vm["rows"],
-        })
-    universe.unpersist()
-    final = batches[-1]["bucket_rows"]
-    return {
-        "universe": universe_n,
-        "events": n_batches * batch_size,
-        "batches": batches,
-        "expected_buckets": expected_buckets,
-        "flat_from": flat_from,
-        "ok": bytes_bounded and final <= expected_buckets,
     }
 
 
@@ -1086,7 +1030,7 @@ ENTRIES = {
     f.__name__: f
     for f in (
         pipeline, text, ann, quality, cc, rangejoin, maintenance, curation, dv,
-        update, incremental, lineage_pq, manifest, sink, stream_state, ann_tune,
+        update, incremental, lineage_pq, manifest, sink, ann_tune,
     )
 }
 

@@ -1,4 +1,4 @@
-"""Watermark-based incremental ingest (SURVEY §2 A1/A5/G1/S1/J4/T1).
+"""Watermark-based incremental ingest (SURVEY §2 A1/A5/G1/S1/T1).
 
 The reference resumes from ``SELECT max(epoch) … WHERE username = ?``
 read back from the warehouse, one user at a time (reference
@@ -64,12 +64,3 @@ def incremental_scan(
     if per_page is not None:
         out = out.limit(per_page)
     return out
-
-
-def join_users_activities(
-    users: DataFrame, activities: DataFrame, on: str | Sequence[str] = "username"
-) -> DataFrame:
-    """users ⋈ activities replacing the reference's driver-side per-user
-    loop (J4; reference main.py:199-203). ``users`` is a bounded dim →
-    broadcast to make the join shuffle-free on the big side."""
-    return activities.join(F.broadcast(users), on, "inner")

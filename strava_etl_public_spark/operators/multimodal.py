@@ -243,43 +243,6 @@ def resize_image(
     return binary_df.mapInPandas(_resize, schema="doc_id long, payload binary")
 
 
-def sample_frames(
-    binary_df: DataFrame, every_n: int = 30, id_col: str = "doc_id"
-) -> DataFrame:
-    """payload BINARY (video) → one row per sampled frame
-    (doc_id, frame_idx, frame BINARY) via PyAV demux, same explode
-    shape as :func:`fake_frame_index`. Raises with the probe result
-    where PyAV is absent (this container)."""
-    if not CODECS["pyav"]:
-        raise NotImplementedError(
-            f"video demuxer unavailable (probe: {CODECS}); "
-            "use fake_frame_index() for deterministic shape-true testing"
-        )
-
-    def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        import av
-
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                with av.open(io.BytesIO(bytes(payload))) as container:
-                    for i, frame in enumerate(container.decode(video=0)):
-                        if i % every_n:
-                            continue
-                        buf = io.BytesIO()
-                        frame.to_image().save(buf, format="PNG")
-                        ids.append(doc_id)
-                        idxs.append(i)
-                        frames.append(buf.getvalue())
-            yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs, "frame": frames})
-
-    return binary_df.mapInPandas(
-        _frames, schema="doc_id long, frame_idx int, frame binary"
-    )
-
-
 def fake_frame_index(
     binary_df: DataFrame, id_col: str = "doc_id", every_n: int = 16
 ) -> DataFrame:
@@ -310,30 +273,6 @@ def fake_frame_index(
 
     return binary_df.mapInPandas(
         _frames, schema="doc_id long, frame_idx int, frame_fp string"
-    )
-
-
-def fake_decode_stats(binary_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic stand-in for the decode stage: derives fixed-shape
-    'pixel statistics' from the payload bytes via sha256 — exercises the
-    exact mapInPandas batch path a real decoder would use."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            digests = pdf["payload"].map(lambda b: hashlib.sha256(bytes(b)).digest())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "width": digests.map(lambda d: 64 + d[0] % 192).astype("int32"),
-                    "height": digests.map(lambda d: 64 + d[1] % 192).astype("int32"),
-                    "channels": digests.map(lambda d: 1 + d[2] % 4).astype("int32"),
-                    "mean_intensity": digests.map(lambda d: d[3] / 255.0).astype("float64"),
-                }
-            )
-
-    return binary_df.mapInPandas(
-        _decode,
-        schema="doc_id long, width int, height int, channels int, mean_intensity double",
     )
 
 

@@ -139,19 +139,18 @@ QUERY_ORDER: tuple[str, ...] = (
     # certified by the token-budget + pipeline_curation official rows
     # and the DSIR extra stays oracle-gated; slot freed for the exact
     # ROC AUC — the eval family's first official row.
-    # structured streaming (x_stream_session_window demoted late-r7:
-    # session semantics are certified by the official q_sessionize
-    # batch row + the extra; slot freed for the streaming near-dup
-    # ingest filter — the operator a training pipeline actually runs)
+    # structured streaming (the streaming session-window extra,
+    # demoted late-r7 and later deleted by the extras census: session
+    # semantics are certified by the official q_sessionize batch row;
+    # slot freed for the streaming near-dup ingest filter)
     # x_stream_tumbling_counts demoted (r8 rotation, verdict #1):
     # windowed streaming aggregation is certified by the stateful +
-    # neardup + available-now rows/extras; slot freed for the
+    # available-now rows/extras; slot freed for the
     # leakage-free point-in-time feature join.
     "x_stream_stateful_user_stats",
-    # x_stream_neardup_filter demoted (r9 rotation): the streaming
-    # near-dup admission filter is certified by the dedup family's
-    # official rows + the stream-stream join / stateful rows and the
-    # extra stays oracle-gated; slot freed for TPC-H Q21 — the
+    # the streaming near-dup filter, demoted (r9 rotation) and later
+    # deleted by the extras census: near-dup admission is certified by
+    # the dedup family's official rows; slot freed for TPC-H Q21 — the
     # hardest planner shape in the relational battery.
     # multimodal plumbing (x_mm_extract_meta demoted to extras r6,
     # x_mm_frame_sample demoted r7 — the mapInPandas plumbing is

@@ -706,58 +706,6 @@ def x_join_cardinality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_extra(
-    "x_source_paged_feed",
-    oracle="""
-WITH ids AS (
-  SELECT unnest(generate_series(0, 8 * 250 - 1)) AS aid
-),
-feed AS (
-  SELECT aid AS activity_id,
-         (aid * 2654435761) % 97 AS athlete_id,
-         (['Run', 'Ride', 'Swim', 'Hike'])[(aid * 40503) % 4 + 1] AS sport,
-         CAST((aid * 2654435761) % 50000 AS BIGINT) AS distance_m,
-         (aid * 69069) % 14400 AS moving_s
-  FROM ids
-)
-SELECT athlete_id,
-       CAST(count(*) AS BIGINT) AS n_activities,
-       CAST(sum(distance_m) AS BIGINT) AS total_distance_m,
-       CAST(sum(moving_s) AS BIGINT) AS total_moving_s,
-       CAST(count(DISTINCT sport) AS BIGINT) AS n_sports
-FROM feed GROUP BY athlete_id
-""",
-)
-def x_source_paged_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The engine's SOURCE-EXTENSION surface, end-to-end: a custom
-    Python DataSource (Spark 4 API — sources/paged_feed.py) serving a
-    paged activity feed with ONE InputPartition PER PAGE, so the
-    pagination loop the reference walks sequentially over HTTP
-    (strava_sdk.py per_page/page — SURVEY §6's bottleneck) runs
-    cluster-parallel, with Spark owning scheduling and retries. The
-    feed is closed-form synthetic (Knuth multiplicative hashes of the
-    id — the container has no network), which is what lets the oracle
-    reproduce the WHOLE feed and certify the source plumbing, not
-    just run it. Per-athlete rollup over 8 pages x 250 activities;
-    distance is integral-valued so the BIGINT compare is exact."""
-    ensure_harness_conf(spark)
-    from .sources.paged_feed import register as register_feed
-
-    register_feed(spark)
-    feed = (
-        spark.read.format("paged_feed")
-        .option("pages", 8)
-        .option("page_size", 250)
-        .load()
-    )
-    return feed.groupBy("athlete_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_activities"),
-        F.sum(F.col("distance_m").cast("long")).cast("long").alias("total_distance_m"),
-        F.sum("moving_s").cast("long").alias("total_moving_s"),
-        F.count_distinct("sport").cast("long").alias("n_sports"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Lakehouse maintenance: small-file compaction + manifest data skipping
 # (round 8 — promote the test-only layout operators to oracle-gated rows)

@@ -458,181 +458,9 @@ def x_sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_extra(
-    "x_stream_index_bm25",
-    oracle=f"""
-SELECT b.*, CAST(4 AS BIGINT) AS n_batches
-FROM ({_bm25_oracle()}) b
-""",
-)
-def x_stream_index_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING inverted-index maintenance — retrieval's third face
-    (batch build → incremental union → streaming): documents arrive
-    over a 4-batch file stream, each micro-batch tokenizes ONLY its
-    own docs and lands postings under a per-batch directory
-    (streaming/ingest.bm25_index_merge_batch — append-only state, no
-    merge job, replay idempotent because a replayed batch overwrites
-    its own directory with identical content). BM25 through the
-    accumulated index must reproduce the from-scratch oracle's full
-    ranking, and `n_batches` (= real batch-directory count) fails a
-    vacuous single-batch run."""
-    ensure_harness_conf(spark)
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from .streaming.ingest import bm25_index_stream_sink, read_bm25_index
-
-    stage = tempfile.mkdtemp(prefix="docs_stream_idx_")
-    state = tempfile.mkdtemp(prefix="idx_state_")
-    ckpt = tempfile.mkdtemp(prefix="idx_ckpt_")
-    try:
-        docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-        docs.repartition(4).write.mode("overwrite").parquet(stage)
-        schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("text", T.StringType()),
-            ]
-        )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = bm25_index_stream_sink(stream, state, ckpt)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        n_batches = len(os.listdir(f"{state}/postings"))
-        tc, dl = read_bm25_index(spark, state)
-        out = text.bm25_from_index(spark, tc, dl, "doc_id", _BM25_QUERIES, k=10)
-        return out.withColumn(
-            "n_batches", F.lit(n_batches).cast("long")
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
 # ---------------------------------------------------------------------------
-# Semi-structured extraction (JSON props)
+# Incremental EWMA maintenance
 # ---------------------------------------------------------------------------
-
-
-@register_extra(
-    "x_stream_ewma",
-    oracle="""
-WITH RECURSIVE b AS (
-  SELECT user_id, event_id, value,
-         CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS es,
-         row_number() OVER (
-           PARTITION BY user_id
-           ORDER BY CAST(epoch_ns(ts) AS BIGINT), event_id) AS rn
-  FROM events
-),
-r(user_id, rn, s) AS (
-  SELECT user_id, rn, value FROM b WHERE rn = 1
-  UNION ALL
-  SELECT b.user_id, b.rn, 0.3 * b.value + 0.7 * r.s
-  FROM r JOIN b ON b.user_id = r.user_id AND b.rn = r.rn + 1
-),
-mx AS (SELECT user_id, max(rn) AS m FROM b GROUP BY user_id),
-days AS (SELECT CAST(count(DISTINCT es // 86400) AS BIGINT) AS n_batches FROM b)
-SELECT r.user_id, round(r.s, 6) AS ewma, days.n_batches
-FROM r JOIN mx ON mx.user_id = r.user_id AND r.rn = mx.m
-CROSS JOIN days
-""",
-)
-def x_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING EWMA — the time-series face of incremental
-    maintenance run as a real checkpointed stream: events staged one
-    FILE PER CALENDAR DAY (written in day order, so one-file-per-
-    trigger delivers batches key-time-ordered), a foreachBatch sink
-    (streaming/ingest.ewma_merge_batch) folding each day from ONE
-    DOUBLE of persisted state per user, replay-idempotent via
-    per-batch markers. The final state must equal the batch
-    recursion over the WHOLE series bit-for-bit (associative-over-
-    prefix), and the oracle carries `n_batches` = distinct days so a
-    vacuous single-batch run FAILS the row — the same anti-vacuity
-    discipline as x_stream_incremental_clusters."""
-    ensure_harness_conf(spark)
-    import shutil
-    import tempfile
-
-    from .streaming.ingest import (
-        EVENTS_SCHEMA,
-        ewma_stream_sink,
-        normalize_events,
-        _applied_info,
-        _read_state,
-    )
-
-    ev = load(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
-    norm = normalize_events(ev)
-    day = (ep.epoch_s(norm, "ts") / 86400).cast("long")
-    norm = norm.withColumn("_day", day)
-    days = [r["_day"] for r in norm.select("_day").distinct().orderBy("_day").collect()]
-
-    stage = tempfile.mkdtemp(prefix="ewma_stream_")
-    state = tempfile.mkdtemp(prefix="ewma_state_")
-    ckpt = tempfile.mkdtemp(prefix="ewma_ckpt_")
-    try:
-        # CONTRACT: ewma_merge_batch needs key-time-ordered batches,
-        # i.e. FileStreamSource must deliver the day files in day
-        # order. The source orders files by MODIFICATION TIME, and
-        # rapid appends on a coarse-mtime filesystem can tie and be
-        # delivered out of order (code-review r8 low) — so after each
-        # day's write we pin an explicit, strictly-ascending mtime on
-        # that day's data file, making the trigger order deterministic.
-        import os
-        import time
-
-        seen: set[str] = set()
-        base = time.time() - 86400  # past-dated: never racing "now"
-        for i, d in enumerate(days):  # one file per day, in day order
-            norm.filter(F.col("_day") == d).drop("_day").coalesce(1).write.mode(
-                "append"
-            ).parquet(stage)
-            for f in os.listdir(stage):
-                if f.startswith(("_", ".")) or f in seen:
-                    continue
-                seen.add(f)
-                os.utime(os.path.join(stage, f), (base + i, base + i))
-        stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(stage)
-        )
-        stream = stream.withColumn("_ns", ep.epoch_ns(stream, "ts")).drop("ts")
-        q = ewma_stream_sink(
-            stream, state, ckpt,
-            ["user_id"], ["_ns", "event_id"], "value", 0.3,
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        info = _applied_info(state)  # atomic _applied record in current/
-        n_batches = info["count"] if info is not None else 0
-        final = _read_state(spark, state)
-        return (
-            final.select(
-                "user_id",
-                F.round("s0", 6).alias("ewma"),
-                F.lit(n_batches).cast("long").alias("n_batches"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 @register(

@@ -1,7 +1,6 @@
 """Streaming sink / state queries: streaming HLL and CMS sketch
-maintenance, paged-feed streaming ingest, the digest-verified commit
-sink, and the ManagedTable streaming sinks and sources (MERGE, CDF,
-Arrow and JVM append, multi-writer).
+maintenance and the ManagedTable streaming sinks and sources (MERGE,
+CDF, Arrow and JVM append, multi-writer).
 
 Split from queries_sketch.py and queries_curation.py (round 9, verdict #6 file-size
 discipline): registrations, names, and oracle SQL are unchanged —
@@ -57,107 +56,6 @@ def x_stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint()
     finally:
         shutil.rmtree(stage, ignore_errors=True)
-
-
-@register_extra(
-    "x_stream_paged_ingest",
-    oracle="""
-WITH ids AS (
-  SELECT unnest(generate_series(0, 8 * 250 - 1)) AS aid
-),
-feed AS (
-  SELECT (aid * 2654435761) % 97 AS athlete_id,
-         CAST((aid * 2654435761) % 50000 AS BIGINT) AS distance_m
-  FROM ids
-)
-SELECT athlete_id,
-       CAST(count(*) AS BIGINT) AS n_activities,
-       CAST(sum(distance_m) AS BIGINT) AS total_distance_m
-FROM feed GROUP BY athlete_id
-""",
-)
-def x_stream_paged_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S1 incremental ingest as a CUSTOM STREAM SOURCE (Spark 4
-    Python DataSource streaming API): the paged feed arrives 2 pages
-    per micro-batch, the low watermark lives in the engine's offset
-    log as {'page': n}, and readBetweenOffsets re-derives any batch
-    deterministically (exactly-once on recovery without sink-side
-    dedup — the property the reference's manual watermark read-back
-    approximates). The complete-mode rollup over the drained stream
-    equals the batch feed aggregate bit-for-bit; the run must take
-    multiple micro-batches (8 pages / 2 per batch)."""
-    ensure_harness_conf(spark)
-    from .sources.paged_feed import register_stream
-
-    register_stream(spark)
-    stream = (
-        spark.readStream.format("paged_feed_stream")
-        .option("pages", 8)
-        .option("page_size", 250)
-        .option("pages_per_batch", 2)
-        .load()
-    )
-    agg = stream.groupBy("athlete_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_activities"),
-        F.sum(F.col("distance_m").cast("long")).cast("long")
-        .alias("total_distance_m"),
-    )
-    out = _run_stream(spark, agg, "complete")
-    return out.localCheckpoint()
-
-
-@register_extra(
-    "x_sink_digest_commit",
-    oracle="""
-SELECT 'events' AS dataset, CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(bit_xor(h) AS BIGINT) AS xor_hash,
-       CAST(sum(h) % 1152921504606846976 AS BIGINT) AS sum_hash_mod
-FROM (
-  SELECT CAST(concat('0x', substr(md5(concat_ws(chr(31),
-           coalesce(CAST(event_id AS VARCHAR), chr(30)),
-           coalesce(CAST(user_id AS VARCHAR), chr(30)),
-           coalesce(event_type, chr(30)))), 1, 15)) AS BIGINT) AS h
-  FROM events
-)
-""",
-)
-def x_sink_digest_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The custom-SINK half of the DataSource trio (reader + stream
-    reader + writer): events flow through the digest_sink's
-    TWO-PHASE COMMIT — each task's commit message is its partition's
-    O(1) digest, the driver merge publishes one manifest atomically
-    (os.replace; a failed job aborts and publishes nothing). The
-    returned row is read back FROM the committed manifest and must
-    equal the engine-side batch fingerprint oracle — proving the
-    write path saw every row exactly once across task retries
-    (commutative-monoid commit messages make replays harmless).
-    Repartitioned to 8 so the merge genuinely combines messages."""
-    ensure_harness_conf(spark)
-    import json
-    import shutil
-    import tempfile
-
-    from .sources.paged_feed import register_sink
-
-    register_sink(spark)
-    out = tempfile.mkdtemp(prefix="digest_sink_")
-    try:
-        ev = (
-            load(spark, sf_dir, "events")
-            .select("event_id", "user_id", "event_type")
-            .repartition(8)
-        )
-        ev.write.format("digest_sink").option("path", out).mode(
-            "append"
-        ).save()
-        with open(f"{out}/manifest.json") as f:
-            m = json.load(f)
-        return spark.createDataFrame(
-            [("events", m["n_rows"], m["xor_hash"], m["sum_hash_mod"])],
-            "dataset string, n_rows long, xor_hash long, sum_hash_mod long",
-        )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 def _cms_users_oracle(d: int = 4, w: int = 1024, k: int = 20) -> str:
@@ -764,7 +662,6 @@ def x_stream_table_sink_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay dropped by the lineage txn guard. Oracle: fingerprint of
     all of events on the cast-stable columns."""
     ensure_harness_conf(spark)
-    import json as _json
     import os
     import shutil
     import tempfile
@@ -811,9 +708,7 @@ def x_stream_table_sink_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
         run(os.path.join(root, "ck1"))
         v1 = t.version()
         multi_batch = v1 - v0 == 2  # one commit per micro-batch
-        rec = _json.load(
-            open(os.path.join(path, "_commits", f"{v1}.json"))
-        )
+        rec = t._record(v1)
         live = dataset_fingerprint(t.read()).collect()[0].asDict()
         chain_exact = (
             rec["n_rows"],

@@ -19,7 +19,7 @@ from .io import load  # noqa: F401
 from .session import ensure_harness_conf  # noqa: F401
 from .queries_common import register, register_extra, streams  # noqa: F401
 from .operators import dedup, multimodal, similarity, text  # noqa: F401
-from .queries_common import _SH_SQL, _TK_SQL, _clusters_oracle  # noqa: F401
+from .queries_common import _TK_SQL  # noqa: F401
 
 
 # ---------------------------------------------------------------------------
@@ -508,137 +508,6 @@ def x_stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(stage, ignore_errors=True)
 
 
-@register_extra(
-    "x_stream_upsert_sink",
-    oracle="""
-WITH e AS (
-  SELECT user_id, event_id, CAST(epoch_ns(ts) AS BIGINT) AS ts_ns,
-         event_type, value
-  FROM events
-)
-SELECT user_id,
-       CAST(arg_max(event_id, event_id) AS BIGINT) AS event_id,
-       CAST(arg_max(ts_ns, event_id) AS BIGINT) AS ts,
-       arg_max(event_type, event_id) AS event_type,
-       arg_max(value, event_id) AS value
-FROM e GROUP BY user_id
-""",
-)
-def x_stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The S2 streaming LWW upsert sink end-to-end as an ORACLE-EXACT
-    query: stream the staged events in micro-batches through
-    upsert_stream_sink (checkpointed foreachBatch merge into a keyed
-    parquet state table), then read the final state back. event_id is
-    a unique total recency order, so the merged state is micro-batch-
-    slicing-invariant and equals the batch arg_max per user — the
-    reference's Firestore doc.set() final state (firebase_functions.py
-    :50-60), verifiable in SQL."""
-    ensure_harness_conf(spark)
-    import shutil
-    import tempfile
-
-    from .streaming.ingest import EVENTS_SCHEMA, upsert_stream_sink
-
-    stage = _stage_events_dir(spark, sf_dir)
-    state = tempfile.mkdtemp(prefix="upsert_state_")
-    ckpt = tempfile.mkdtemp(prefix="upsert_ckpt_")
-    try:
-        stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 4)
-            .parquet(stage)
-        )
-        q = upsert_stream_sink(
-            stream.select("event_id", "ts", "user_id", "event_type", "value"),
-            state,
-            key="user_id",
-            order_col="event_id",
-            checkpoint_dir=ckpt,
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return (
-            spark.read.parquet(f"{state}/current")
-            .select(
-                "user_id",
-                F.col("event_id").cast("long").alias("event_id"),
-                F.col("ts").cast("long").alias("ts"),
-                "event_type",
-                "value",
-            )
-            .localCheckpoint()  # state dir is removed in finally
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
-@register_extra(
-    "x_stream_session_window",
-    oracle="""
-WITH e AS (
-  SELECT user_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS es FROM events
-),
-g AS (
-  SELECT user_id, es,
-         CASE WHEN lag(es) OVER w IS NULL OR es - lag(es) OVER w >= 3600
-              THEN 1 ELSE 0 END AS new_s
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY es)
-),
-s AS (
-  SELECT user_id, es,
-         SUM(new_s) OVER (PARTITION BY user_id ORDER BY es
-                          ROWS UNBOUNDED PRECEDING) AS sid
-  FROM g
-)
-SELECT user_id,
-       strftime(make_timestamp(min(es) * 1000000), '%Y-%m-%dT%H:%M:%SZ') AS s_start,
-       strftime(make_timestamp((max(es) + 3600) * 1000000), '%Y-%m-%dT%H:%M:%SZ') AS s_end,
-       CAST(count(*) AS BIGINT) AS n_events
-FROM s GROUP BY user_id, sid
-""",
-)
-def x_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """session_window(1h gap) streaming aggregation with watermarked
-    append output. A far-future sentinel event staged after the fixture
-    advances the watermark so every real session is finalized and
-    emitted (the no-data-batch flush); the sentinel's own session is
-    filtered back out. Oracle: the batch lag/gap sessionization."""
-    ensure_harness_conf(spark)
-    import os
-    import shutil
-    import tempfile
-
-    from .streaming.ingest import EVENTS_SCHEMA, normalize_events, session_windows
-
-    ev = normalize_events(load(spark, sf_dir, "events"))  # ts → bigint ns
-    max_ts = ev.agg(F.max("ts")).first()[0]  # one scalar — watermark-read shaped
-
-    stage = tempfile.mkdtemp(prefix="sess_stream_")
-    try:
-        ev.write.mode("overwrite").parquet(stage)
-        sentinel = spark.createDataFrame(
-            [(int(-1), int(max_ts + 30 * 86400 * 10**9), int(-1), "__flush__", 0.0, "{}")],
-            schema=EVENTS_SCHEMA,
-        )
-        sentinel.write.mode("append").parquet(stage)
-
-        stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(stage)
-        agg = session_windows(stream, gap="1 hour", watermark="0 seconds")
-        out = _run_stream(spark, agg, "append")
-        return out.filter(F.col("user_id") >= 0).select(
-            "user_id",
-            F.date_format("s_start", _ISO).alias("s_start"),
-            F.date_format("s_end", _ISO).alias("s_end"),
-            "n_events",
-        ).localCheckpoint()
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-
-
 @register(
     "x_stream_stateful_user_stats",
     oracle="""
@@ -673,213 +542,6 @@ def x_stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(stage, ignore_errors=True)
-
-
-@register_extra(
-    "x_stream_dedup_watermark",
-    oracle="""
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(count(DISTINCT event_id) AS BIGINT) AS n_distinct,
-       CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total_value
-FROM events GROUP BY event_type
-""",
-)
-def x_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming exactly-once dedup with bounded state: the fixture is
-    staged TWICE as separate files and streamed one file per
-    micro-batch, so every event's duplicate arrives in a LATER batch —
-    dropDuplicatesWithinWatermark must suppress it from the state
-    store across batches, not within one (the single-batch run would
-    be vacuous; maxFilesPerTrigger=1 forces the cross-batch case).
-    The deduped stream must aggregate to EXACTLY the original table
-    (n == n_distinct per type is the exactly-once proof inside the
-    result itself). Unlike plain dropDuplicates, state evicts at the
-    watermark horizon — O(keys in the horizon), the only version that
-    survives an unbounded stream."""
-    ensure_harness_conf(spark)
-    import shutil
-    import tempfile
-
-    from .streaming.ingest import EVENTS_SCHEMA, dedup_within_watermark, normalize_events
-
-    stage = tempfile.mkdtemp(prefix="dup_stream_")
-    try:
-        ev = normalize_events(load(spark, sf_dir, "events")).coalesce(1)
-        ev.write.mode("overwrite").parquet(stage)
-        ev.write.mode("append").parquet(stage)  # duplicate copy, new file
-        stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        deduped = dedup_within_watermark(stream, ["event_id"], watermark="2 hours")
-        out = _run_stream(spark, deduped, "append")
-        return (
-            out.groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.countDistinct("event_id").cast("long").alias("n_distinct"),
-                F.sum(F.col("value").cast("decimal(38,6)"))
-                .cast("double")
-                .alias("total_value"),
-            )
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-
-
-# ---------------------------------------------------------------------------
-# Streaming near-dup ingest filter (r7, sixteenth batch)
-# ---------------------------------------------------------------------------
-
-
-def _neardup_stream_oracle(k: int = 8, bands: int = 4) -> str:
-    """Batch twin of the streaming filter's verdict rule: a doc is a
-    duplicate iff it shares any LSH band bucket with a smaller doc id
-    (the same signature/banding construction as _minhash_oracle)."""
-    rows = k // bands
-    sig_cols = ",\n         ".join(
-        f"min(shingle + {j} * sh2) AS mh{j}" for j in range(k)
-    )
-    band_cases = " ".join(
-        f"WHEN {b} THEN concat_ws('_', "
-        + ", ".join(f"CAST(mh{b * rows + r} AS VARCHAR)" for r in range(rows))
-        + ")"
-        for b in range(bands)
-    )
-    return f"""
-WITH {_SH_SQL},
-sig AS (SELECT doc_id, {sig_cols} FROM sh GROUP BY doc_id),
-banded AS (
-  SELECT doc_id, band_idx, CASE band_idx {band_cases} END AS h
-  FROM sig, (SELECT unnest(generate_series(0, {bands - 1})) AS band_idx)
-),
-own AS (SELECT band_idx, h, min(doc_id) AS owner FROM banded GROUP BY band_idx, h),
-v AS (
-  SELECT b.doc_id, min(o.owner) AS mo
-  FROM banded b JOIN own o ON b.band_idx = o.band_idx AND b.h = o.h
-  GROUP BY b.doc_id
-)
-SELECT d.doc_id, coalesce(v.mo < d.doc_id, FALSE) AS is_dup
-FROM documents d LEFT JOIN v ON v.doc_id = d.doc_id
-"""
-
-
-@register_extra("x_stream_neardup_filter", oracle=_neardup_stream_oracle())
-def x_stream_neardup_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH near-dup filtering as a REAL streaming query: the
-    documents corpus staged to a file source, a checkpointed
-    foreachBatch sink maintaining min-merged bucket-owner state
-    (streaming/ingest.neardup_merge_batch — replay-idempotent, so
-    at-least-once delivery gives exactly-once verdicts), and the
-    per-doc keep/duplicate verdict read back from the filter's state.
-    The oracle recomputes the verdict rule ("shares a band bucket
-    with a smaller doc id") from scratch in batch SQL; multi-batch
-    boundary independence is pinned in tests/test_streaming.py."""
-    ensure_harness_conf(spark)
-    import shutil
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from .streaming.ingest import (
-        neardup_stream_sink,
-        read_neardup_verdicts,
-    )
-
-    stage = tempfile.mkdtemp(prefix="docs_stream_")
-    state = tempfile.mkdtemp(prefix="neardup_state_")
-    ckpt = tempfile.mkdtemp(prefix="neardup_ckpt_")
-    try:
-        docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-        docs.write.mode("overwrite").parquet(stage)
-        schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("text", T.StringType()),
-            ]
-        )
-        stream = spark.readStream.schema(schema).parquet(stage)
-        q = neardup_stream_sink(stream, state, ckpt)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        # materialize before the state dirs are removed
-        return read_neardup_verdicts(spark, state).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
-def _stream_clusters_oracle() -> str:
-    return (
-        f"SELECT t.*, CAST(4 AS BIGINT) AS n_batches FROM ({_clusters_oracle()}) t"
-    )
-
-
-@register_extra("x_stream_incremental_clusters", oracle=_stream_clusters_oracle())
-def x_stream_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming INCREMENTAL duplicate-cluster maintenance (round-8
-    verdict #5, streaming face): documents arrive over a 4-batch file
-    stream (maxFilesPerTrigger=1 over a 4-file stage); every
-    micro-batch folds into the persisted bucket-membership + verified-
-    pair state via the same decomposition proof as the batch
-    x_dedup_incremental (streaming/ingest.incremental_clusters_merge_
-    batch — replay-idempotent min/distinct merges). The final clusters
-    must equal the full-recompute clusters oracle over the whole
-    corpus, i.e. the maintained state is indistinguishable from never
-    having streamed at all. ``n_batches`` pins the slicing: a vacuous
-    single-batch run returns 1 ≠ 4 and FAILS the row (the
-    available-now convention)."""
-    ensure_harness_conf(spark)
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from .streaming.ingest import (
-        incremental_clusters_stream_sink,
-        read_incremental_clusters,
-    )
-
-    stage = tempfile.mkdtemp(prefix="docs_stream_ic_")
-    state = tempfile.mkdtemp(prefix="ic_state_")
-    ckpt = tempfile.mkdtemp(prefix="ic_ckpt_")
-    try:
-        docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-        docs.repartition(4).write.mode("overwrite").parquet(stage)
-        schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("text", T.StringType()),
-            ]
-        )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = incremental_clusters_stream_sink(stream, state, ckpt)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        nb = len(
-            [d for d in os.listdir(os.path.join(state, "docs")) if d.startswith("b")]
-        )
-        out = read_incremental_clusters(spark, state).withColumn(
-            "n_batches", F.lit(nb).cast("long")
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,6 @@
 """Multimodal plumbing tests: binary payload schema, Arrow-batched
-metadata extraction, deterministic fake decode, and the stubbed codec
-contract (north-star extension).
+metadata extraction, and the stubbed codec contract (north-star
+extension).
 """
 
 from __future__ import annotations
@@ -14,7 +14,6 @@ from strava_etl_public_spark.operators.multimodal import (
     attach_binary,
     decode_image,
     extract_meta,
-    fake_decode_stats,
 )
 
 
@@ -41,32 +40,19 @@ def test_extract_meta_sha256(spark):
     assert set(out.kind) == {"image"}
 
 
-def test_fake_decode_deterministic(spark):
-    a = fake_decode_stats(_bin_df(spark)).toPandas().sort_values("doc_id")
-    b = fake_decode_stats(_bin_df(spark)).toPandas().sort_values("doc_id")
-    pd.testing.assert_frame_equal(a.reset_index(drop=True), b.reset_index(drop=True))
-    assert ((a.width >= 64) & (a.width < 256)).all()
-    assert ((a.channels >= 1) & (a.channels <= 4)).all()
-
-
 def test_absent_codecs_still_stubbed(spark):
-    """Video demux (PyAV) remains probe-gated in this container;
-    decode_image and PNG resize no longer are — the stdlib kernels
-    took those paths over (test_decode_image_real_png /
+    """decode_image and PNG resize are not probe-gated — the stdlib
+    kernels took those paths over (test_decode_image_real_png /
     test_resize_nn_stdlib_roundtrip). Non-PNG resize still needs
     PIL."""
     from strava_etl_public_spark.operators.multimodal import (
         CODECS,
         resize_image,
-        sample_frames,
     )
 
     if not CODECS["pil"]:
         with pytest.raises(NotImplementedError):
             resize_image(_bin_df(spark), 64, 64, fmt="JPEG")
-    if not CODECS["pyav"]:
-        with pytest.raises(NotImplementedError):
-            sample_frames(_bin_df(spark))
 
 
 def test_decode_image_real_png(spark):
@@ -170,7 +156,6 @@ def test_codec_probe_and_gating(spark):
         CODECS,
         attach_binary,
         decode_image,
-        sample_frames,
     )
 
     assert set(CODECS) == {"pil", "pyav", "ffmpeg", "png_stdlib"}
@@ -178,9 +163,6 @@ def test_codec_probe_and_gating(spark):
     docs = spark.createDataFrame(pd.DataFrame({"doc_id": [1], "text": ["x"]}))
     b = attach_binary(docs, "doc_id", "text")
     decode_image(b)  # plans with either kernel (PIL or stdlib PNG)
-    if not CODECS["pyav"]:
-        with pytest.raises(NotImplementedError, match="probe"):
-            sample_frames(b)
 
 
 def test_resize_nn_stdlib_roundtrip(spark):

@@ -126,26 +126,6 @@ def test_all_queries_run_sf0001(spark, sf_dir):
     assert not failures, failures
 
 
-def test_paged_feed_source_partition_parallel(spark):
-    """The custom DataSource serves one InputPartition per page and
-    the union over pages is the exact id range (no dup/gap at page
-    boundaries)."""
-    from strava_etl_public_spark.sources.paged_feed import register
-
-    register(spark)
-    df = (
-        spark.read.format("paged_feed")
-        .option("pages", 3)
-        .option("page_size", 10)
-        .load()
-    )
-    assert df.rdd.getNumPartitions() == 3
-    rows = df.select("activity_id", "page").collect()
-    assert sorted(r["activity_id"] for r in rows) == list(range(30))
-    for r in rows:
-        assert r["page"] == r["activity_id"] // 10
-
-
 def test_headline_queries_smoke_sf0001(spark, sf_dir):
     """Fast default-lane replacement for the full-registry sweep above
     (r14: test_all_queries_run_sf0001 is ~17 min and moved to the slow

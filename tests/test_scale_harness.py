@@ -34,7 +34,6 @@ SIZES = {
     "lineage_pq": dict(n_versions=1000),
     "manifest": dict(max_exp=4),
     "sink": dict(n_events=2000, n_batches=2),
-    "stream_state": dict(n_batches=3, batch_size=20),
     "ann_tune": dict(),
 }
 

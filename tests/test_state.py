@@ -8,7 +8,6 @@ import pandas as pd
 
 from strava_etl_public_spark.operators.incremental import (
     incremental_scan,
-    join_users_activities,
     watermark,
     watermark_for,
 )
@@ -83,17 +82,6 @@ def test_watermark_and_scan(spark):
     assert got["epoch"].tolist() == [35, 25]  # newest-first top-N after watermark
 
 
-def test_join_users_activities_broadcasts(spark):
-    users = spark.createDataFrame(pd.DataFrame({"username": ["u1", "u2"], "t": [1, 2]}))
-    acts = spark.createDataFrame(
-        pd.DataFrame({"username": ["u1", "u1", "u3"], "activity_id": [1, 2, 3]})
-    )
-    joined = join_users_activities(users, acts)
-    assert joined.count() == 2  # u3 dropped by inner join
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan  # dim side must broadcast
-
-
 def test_upsert_in_source_tie_deterministic(spark):
     """Equal (key, order_col) within one source: winner is the row
     sorting greatest over the remaining columns — stable across runs."""
@@ -138,98 +126,3 @@ def test_scd2_history_collapses_runs_nullsafe(spark):
         (2, "x", 30, None, True),
     ]
 
-
-# ---------------------------------------------------------------------------
-# State-growth contract: rows bounded by DISTINCT KEYS, not events
-# (round 8, verdict #6)
-# ---------------------------------------------------------------------------
-
-
-def test_neardup_state_bounded_by_distinct_keys(spark, tmp_path):
-    """Per-batch state-store metrics across a duplicate-heavy
-    multi-batch replay: bucket-state rows must equal the distinct
-    (band, h) count of everything seen (not the cumulative bucket-row
-    count), verdict rows must equal distinct doc ids, and replaying a
-    batch must leave both unchanged (the min-merge fixpoint)."""
-    from strava_etl_public_spark.operators.dedup import band_buckets
-    from strava_etl_public_spark.streaming.ingest import (
-        neardup_merge_batch,
-        state_metrics,
-    )
-
-    state = str(tmp_path / "state")
-    texts = {
-        i: f"sentence number {i % 4} about streaming dedup state growth"
-        for i in range(40)  # only 4 distinct texts → heavy duplication
-    }
-    batches = [list(range(b * 10, b * 10 + 10)) for b in range(4)]
-
-    seen: list[int] = []
-    bucket_rows_per_batch = []
-    bytes_per_batch = []
-    for ids in batches:
-        bdf = spark.createDataFrame(
-            pd.DataFrame({"doc_id": ids, "text": [texts[i] for i in ids]})
-        )
-        neardup_merge_batch(bdf, state)
-        seen += ids
-        all_df = spark.createDataFrame(
-            pd.DataFrame({"doc_id": seen, "text": [texts[i] for i in seen]})
-        )
-        expect_buckets = (
-            band_buckets(all_df, "doc_id", "text")
-            .select("band_idx", "h")
-            .distinct()
-            .count()
-        )
-        bm = state_metrics(spark, f"{state}/buckets")
-        vm = state_metrics(spark, f"{state}/verdicts")
-        assert bm["rows"] == expect_buckets, f"after {len(seen)} docs"
-        assert vm["rows"] == len(set(seen))
-        bucket_rows_per_batch.append(bm["rows"])
-        bytes_per_batch.append(bm["bytes"])
-
-    # duplicate-heavy stream: key universe is 4 texts → bucket state
-    # must be FLAT across batches (bounded by distinct keys)
-    assert len(set(bucket_rows_per_batch)) == 1, bucket_rows_per_batch
-
-    # replay the last batch (at-least-once delivery): rows identical,
-    # bytes stay in the same compacted band (parquet re-encode jitter)
-    last = spark.createDataFrame(
-        pd.DataFrame(
-            {"doc_id": batches[-1], "text": [texts[i] for i in batches[-1]]}
-        )
-    )
-    neardup_merge_batch(last, state)
-    bm2 = state_metrics(spark, f"{state}/buckets")
-    vm2 = state_metrics(spark, f"{state}/verdicts")
-    assert bm2["rows"] == bucket_rows_per_batch[-1]
-    assert vm2["rows"] == len(set(seen))
-    assert bm2["bytes"] <= int(bytes_per_batch[-1] * 1.2) + 1024
-
-
-def test_lww_state_bounded_by_distinct_keys(spark, tmp_path):
-    """LWW sink state rows == distinct keys after every merge, flat
-    when batches only re-touch existing keys."""
-    from strava_etl_public_spark.streaming.ingest import (
-        merge_batch_lww,
-        state_metrics,
-    )
-
-    state = str(tmp_path / "lww")
-    rows_per_batch = []
-    for b in range(5):
-        upd = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "username": [f"u{i % 6}" for i in range(12)],  # 6 keys, 12 events
-                    "token": [f"t{b}_{i}" for i in range(12)],
-                    "updated_at": [b * 100 + i for i in range(12)],
-                }
-            )
-        )
-        merge_batch_lww(upd, state, "username", "updated_at")
-        m = state_metrics(spark, state)
-        assert m["rows"] == 6, f"batch {b}: {m}"
-        rows_per_batch.append(m["rows"])
-    assert rows_per_batch == [6] * 5

@@ -215,575 +215,6 @@ def test_stream_dedup_across_microbatches(spark, staged_events, tmp_path):
     assert out.distinct().count() == n_unique
 
 
-def test_upsert_stream_sink_kill_and_resume(spark, staged_events, tmp_path):
-    """The S2 LWW upsert sink end-to-end with an injected crash:
-    batches 0-1 merge, batch 2 dies, the restarted query re-runs the
-    failed batch from the checkpoint and drains the backlog. The final
-    state table must equal the BATCH LWW over the whole corpus — the
-    exactly-once check (a replayed merge must be a fixpoint, not a
-    duplicate) — regardless of micro-batch slicing."""
-    from strava_etl_public_spark.operators.upsert import upsert_last_writer_wins
-    from strava_etl_public_spark.streaming.ingest import upsert_stream_sink
-
-    src = str(tmp_path / "src")
-    # event_id is a unique total order -> LWW state is slicing-invariant
-    spark.read.parquet(staged_events).repartition(8).write.parquet(src)
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-
-    crash = {"armed": True}
-    seen: list[int] = []
-
-    def on_batch(bdf, batch_id):
-        seen.append(batch_id)
-        if crash["armed"] and batch_id >= 2:
-            raise RuntimeError("injected crash")
-
-    def start():
-        stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        return upsert_stream_sink(
-            stream.select("event_id", "ts", "user_id", "event_type", "value"),
-            state,
-            key="user_id",
-            order_col="event_id",
-            checkpoint_dir=ckpt,
-            on_batch=on_batch,
-        )
-
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    q = start()
-    with pytest.raises(StreamingQueryException, match="injected crash"):
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    phase1 = spark.read.parquet(f"{state}/current").count()
-    assert phase1 > 0
-    phase1_batches = list(seen)
-    seen.clear()
-
-    crash["armed"] = False
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    # the restart re-ran the failed batch (exactly-once = re-merge is a
-    # fixpoint) and drained the backlog
-    assert max(phase1_batches) == 2 and min(seen) == 2 and max(seen) > 2
-
-    got = (
-        spark.read.parquet(f"{state}/current")
-        .toPandas()
-        .sort_values("user_id")
-        .reset_index(drop=True)
-    )
-    want = (
-        upsert_last_writer_wins(
-            None,
-            spark.read.parquet(src).select(
-                "event_id", "ts", "user_id", "event_type", "value"
-            ),
-            "user_id",
-            "event_id",
-        )
-        .toPandas()
-        .sort_values("user_id")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(
-        got[want.columns.tolist()], want, check_dtype=False
-    )
-
-
-def test_merge_batch_lww_mid_swap_recovery(spark, tmp_path):
-    """The crash window the r6 review found: state living ONLY in _old
-    (crash fell between the two renames) must survive the next merge —
-    an early _old delete would destroy the last copy if the process
-    died again before staging swapped in."""
-    import os
-
-    import pandas as pd
-
-    from strava_etl_public_spark.streaming.ingest import (
-        _read_state,
-        merge_batch_lww,
-    )
-
-    state = str(tmp_path / "state")
-    os.makedirs(state)
-    # simulate the mid-swap crash artifact: committed state in _old,
-    # no current, a stale _staging from the interrupted batch
-    old_df = spark.createDataFrame(
-        pd.DataFrame({"k": [1, 2], "ord": [10, 20], "v": ["a", "b"]})
-    )
-    old_df.write.parquet(f"{state}/_old")
-    spark.createDataFrame(
-        pd.DataFrame({"k": [9], "ord": [1], "v": ["stale"]})
-    ).write.parquet(f"{state}/_staging")
-
-    assert _read_state(spark, state).count() == 2  # fallback reads _old
-
-    updates = spark.createDataFrame(
-        pd.DataFrame({"k": [2, 3], "ord": [25, 5], "v": ["b2", "c"]})
-    )
-    merge_batch_lww(updates, state, key="k", order_col="ord")
-    got = (
-        spark.read.parquet(f"{state}/current")
-        .toPandas()
-        .set_index("k")
-        .sort_index()
-    )
-    # old keys preserved, LWW applied, stale staging discarded
-    assert got.loc[1, "v"] == "a"
-    assert got.loc[2, "v"] == "b2"
-    assert got.loc[3, "v"] == "c"
-    assert 9 not in got.index
-
-
-def test_neardup_filter_batch_boundary_independent(spark, sf_dir, tmp_path):
-    """The streaming near-dup filter's verdicts must not depend on
-    micro-batch slicing when docs arrive in id order: 4 ordered chunk
-    files at maxFilesPerTrigger=1 (4 batches) vs one batch, both
-    equal to the batch rule 'dup iff shares a band bucket with a
-    smaller doc id'. Also exercises the min-merge state across
-    batches."""
-    import os
-    import time
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from strava_etl_public_spark.operators.dedup import band_buckets
-    from strava_etl_public_spark.streaming.ingest import (
-        neardup_stream_sink,
-        read_neardup_verdicts,
-    )
-
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text")
-        .orderBy("doc_id")
-    )
-    pdf = docs.toPandas()
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-
-    def run(chunks, per_trigger):
-        stage = tmp_path / f"stage_{chunks}_{per_trigger}"
-        stage.mkdir()
-        n = len(pdf)
-        step = (n + chunks - 1) // chunks
-        for i in range(chunks):
-            part = pdf.iloc[i * step : (i + 1) * step]
-            f = stage / f"chunk_{i:03d}.parquet"
-            spark.createDataFrame(part, schema).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(str(f))
-            t = time.time() + i  # ascending mtimes → in-order batches
-            for root, _, files in os.walk(f):
-                for name in files:
-                    os.utime(os.path.join(root, name), (t, t))
-        state = str(tmp_path / f"state_{chunks}_{per_trigger}")
-        ckpt = str(tmp_path / f"ckpt_{chunks}_{per_trigger}")
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", per_trigger)
-            .parquet(str(stage) + "/*")
-        )
-        q = neardup_stream_sink(stream, state, ckpt)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out = read_neardup_verdicts(spark, state).toPandas()
-        return sorted(map(tuple, out[["doc_id", "is_dup"]].values))
-
-    multi = run(4, 1)
-    single = run(1, 99)
-
-    # batch reference: owner per bucket = min doc id; dup iff any of a
-    # doc's buckets is owned by a smaller id
-    bk = band_buckets(docs, "doc_id", "text")
-    own = bk.groupBy("band_idx", "h").agg(F.min("doc_id").alias("owner"))
-    mo = (
-        bk.join(own, ["band_idx", "h"])
-        .groupBy("doc_id")
-        .agg(F.min("owner").alias("mo"))
-    )
-    ref_df = (
-        docs.select("doc_id")
-        .join(mo, "doc_id", "left")
-        .select(
-            "doc_id",
-            (F.coalesce("mo", F.col("doc_id")) < F.col("doc_id")).alias("is_dup"),
-        )
-        .toPandas()
-    )
-    ref = sorted(map(tuple, ref_df[["doc_id", "is_dup"]].values))
-    assert multi == ref
-    assert single == ref
-    assert any(d for _, d in ref)  # the fixture contains real dups
-
-
-def test_incremental_clusters_stream_equals_batch_and_replays(spark, tmp_path):
-    """Streaming incremental-cluster maintenance (round 8): after
-    every micro-batch the maintained state's clusters equal a full
-    batch recompute over everything seen; replaying a batch (at-least-
-    once delivery) is a state fixpoint."""
-    import pandas as pd
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from strava_etl_public_spark.operators.dedup import (
-        duplicate_clusters,
-        minhash_lsh_dedup,
-    )
-    from strava_etl_public_spark.streaming.ingest import (
-        _read_state,
-        incremental_clusters_merge_batch,
-        read_incremental_clusters,
-    )
-
-    state = str(tmp_path / "ic")
-    groups = [
-        "the quick brown fox jumps over the lazy dog tonight",
-        "pack my box with five dozen fine liquor jugs today",
-        "how vexingly quick daft zebras jump over fences now",
-    ]
-    # 3 batches; each near-dup group has copies spread across batches
-    batches = []
-    did = 0
-    rows_all = []
-    for b in range(3):
-        rows = []
-        for g, base in enumerate(groups):
-            words = base.split()
-            words[(b + g) % len(words)] = f"mut{b}{g}"
-            rows.append((did, " ".join(words)))
-            did += 1
-        batches.append(rows)
-        rows_all += rows
-
-    seen = []
-    for b, rows in enumerate(batches):
-        bdf = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-        incremental_clusters_merge_batch(bdf, b, state, threshold=0.3)
-        seen += rows
-        sdf = spark.createDataFrame(pd.DataFrame(seen, columns=["doc_id", "text"]))
-        want = sorted(
-            (r["doc_id"], r["rep_id"], r["cluster_size"])
-            for r in duplicate_clusters(
-                minhash_lsh_dedup(sdf, "doc_id", "text", threshold=0.3)
-            ).collect()
-        )
-        got = sorted(
-            (r["doc_id"], r["rep_id"], r["cluster_size"])
-            for r in read_incremental_clusters(spark, state).collect()
-        )
-        assert got == want, f"after batch {b}"
-    assert want, "fixture must produce non-empty clusters"
-
-    # replay the LAST batch: every state table is a fixpoint
-    import os
-
-    pairs_before = sorted(
-        map(tuple, _read_state(spark, os.path.join(state, "pairs")).collect())
-    )
-    buckets_before = sorted(
-        map(tuple, _read_state(spark, os.path.join(state, "buckets")).collect())
-    )
-    bdf = spark.createDataFrame(pd.DataFrame(batches[-1], columns=["doc_id", "text"]))
-    incremental_clusters_merge_batch(bdf, 2, state, threshold=0.3)
-    assert sorted(
-        map(tuple, _read_state(spark, os.path.join(state, "pairs")).collect())
-    ) == pairs_before
-    assert sorted(
-        map(tuple, _read_state(spark, os.path.join(state, "buckets")).collect())
-    ) == buckets_before
-    got2 = sorted(
-        (r["doc_id"], r["rep_id"], r["cluster_size"])
-        for r in read_incremental_clusters(spark, state).collect()
-    )
-    assert got2 == want
-
-
-def test_stream_stream_join_matches_batch_across_batches(spark, staged_events, tmp_path):
-    """The watermarked interval join must emit EXACTLY the batch join's
-    pair set even when the two sides of a pair arrive in different
-    micro-batches (one file per trigger): a click buffered before its
-    view — or after — still matches from the join state store."""
-    from strava_etl_public_spark.functions import epoch as ep
-    from strava_etl_public_spark.streaming.ingest import attribution_join
-
-    src = str(tmp_path / "ssj_src")
-    base = spark.read.parquet(staged_events)
-    base.repartition(5).write.parquet(src)
-
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    joined = attribution_join(stream, window_s=21600, watermark="3650 days")
-    out = _run(spark, joined.select("l_id", "r_id"), "append")
-    got = {(r["l_id"], r["r_id"]) for r in out.collect()}
-
-    e = base.withColumn("es", ep.epoch_s(base, "ts"))
-    c = e.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("cu"), F.col("event_id").alias("cid"), F.col("es").alias("ces")
-    )
-    v = e.filter(F.col("event_type") == "view").select(
-        F.col("user_id").alias("vu"), F.col("event_id").alias("vid"), F.col("es").alias("ves")
-    )
-    want = {
-        (r["cid"], r["vid"])
-        for r in c.join(
-            v,
-            (F.col("cu") == F.col("vu"))
-            & (F.col("ces") >= F.col("ves"))
-            & (F.col("ces") <= F.col("ves") + 21600),
-        ).collect()
-    }
-    assert got == want and len(want) > 0
-
-
-@pytest.mark.slow  # ~3 min state-bound sweep: slow lane (r13 verdict #1)
-def test_stream_stream_join_state_bounded_by_watermark(spark, tmp_path):
-    """The scale contract of the watermarked interval join: buffered
-    state is bounded by the watermark horizon, NOT by stream history.
-    A time-ordered stream (one file per micro-batch, each a later
-    hour) with a 1-hour watermark and a 10-minute join range must
-    finish with far fewer buffered rows than the total fed through —
-    and still emit exactly the batch join's pairs (time-ordered input
-    means nothing is late, so eviction can't drop a real match)."""
-    from strava_etl_public_spark.functions import epoch as ep
-    from strava_etl_public_spark.streaming.ingest import attribution_join
-
-    import pandas as pd
-
-    base = 1704067200  # epoch seconds, hour-aligned
-    rows = []
-    eid = 0
-    for hour in range(24):
-        for k in range(20):
-            eid += 1
-            typ = "click" if k % 2 == 0 else "view"
-            # views at :00+k min, clicks k*37s later — some pairs in range
-            ts_s = base + hour * 3600 + (k * 60 if typ == "view" else k * 60 + 37)
-            rows.append((eid, ts_s * 1_000_000_000, eid % 5, typ, float(k)))
-    pdf = pd.DataFrame(rows, columns=["event_id", "ts", "user_id", "event_type", "value"])
-
-    src = str(tmp_path / "ss_state_src")
-    df = spark.createDataFrame(pdf)
-    # one file per hour, written in time order so file order == event order
-    for hour in range(24):
-        lo = (base + hour * 3600) * 1_000_000_000
-        hi = (base + (hour + 1) * 3600) * 1_000_000_000
-        df.filter((F.col("ts") >= lo) & (F.col("ts") < hi)).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
-    )
-    joined = attribution_join(stream, window_s=600, watermark="1 hour")
-    name = "t_ss_state"
-    q = (
-        joined.select("l_id", "r_id")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        prog = q.lastProgress
-        state_rows = sum(op["numRowsTotal"] for op in prog["stateOperators"])
-    finally:
-        q.stop()
-    total_events = len(rows)
-    # horizon = 1 h watermark + 10 min range over a 24 h stream: final
-    # state must hold only the tail hours, not the whole day
-    assert state_rows < total_events / 3, (state_rows, total_events)
-
-    got = {(r["l_id"], r["r_id"]) for r in spark.table(name).collect()}
-    e = df.withColumn("es", ep.epoch_s(df, "ts"))
-    c = e.filter("event_type = 'click'").select(
-        F.col("user_id").alias("cu"), F.col("event_id").alias("cid"), F.col("es").alias("ces")
-    )
-    v = e.filter("event_type = 'view'").select(
-        F.col("user_id").alias("vu"), F.col("event_id").alias("vid"), F.col("es").alias("ves")
-    )
-    want = {
-        (r["cid"], r["vid"])
-        for r in c.join(
-            v,
-            (F.col("cu") == F.col("vu"))
-            & (F.col("ces") >= F.col("ves"))
-            & (F.col("ces") <= F.col("ves") + 600),
-        ).collect()
-    }
-    assert got == want and len(want) > 0
-
-
-def test_ewma_merge_batch_replay_idempotent(spark, tmp_path):
-    """A replayed batch_id must be a no-op (the fold is NOT naturally
-    idempotent — re-folding would double-apply the batch), and two
-    ordered batches must equal one full fold."""
-    from strava_etl_public_spark.operators.rolling import ewma_by_key
-    from strava_etl_public_spark.streaming.ingest import (
-        _read_state,
-        ewma_merge_batch,
-    )
-
-    state = str(tmp_path / "ewma_state")
-    import os
-
-    os.makedirs(state, exist_ok=True)
-    b1 = spark.createDataFrame(
-        [(1, 1, 10.0), (1, 2, 20.0), (2, 1, 4.0)], "k long, t long, v double"
-    )
-    b2 = spark.createDataFrame([(1, 3, 30.0)], "k long, t long, v double")
-    ewma_merge_batch(b1, state, ["k"], ["t"], "v", 0.5, batch_id=0)
-    ewma_merge_batch(b2, state, ["k"], ["t"], "v", 0.5, batch_id=1)
-    # replay both: markers must short-circuit
-    ewma_merge_batch(b1, state, ["k"], ["t"], "v", 0.5, batch_id=0)
-    ewma_merge_batch(b2, state, ["k"], ["t"], "v", 0.5, batch_id=1)
-    got = {r["k"]: r["s0"] for r in _read_state(spark, state).collect()}
-
-    full = ewma_by_key(b1.union(b2), ["k"], ["t"], "v", 0.5, "s")
-    want = {
-        r["k"]: r["s"]
-        for r in full.groupBy("k")
-        .agg(F.max_by("s", "t").alias("s"))
-        .collect()
-    }
-    assert got == want == {1: 22.5, 2: 4.0}
-
-
-def test_ewma_replay_marker_atomic_with_state(spark, tmp_path):
-    """The replay marker must publish ATOMICALLY with the state it
-    certifies (code-review r8 medium): the `_applied` record lives
-    INSIDE the swapped directory, so no crash window can leave an
-    updated state without its marker (which would double-apply the
-    non-idempotent fold on replay). Pins (a) marker-in-current after
-    every merge, (b) no legacy top-level `_done_*` files, and (c) the
-    mid-swap recovery window reads a marker consistent with the
-    pre-batch state it falls back to."""
-    import os
-    import shutil
-
-    from strava_etl_public_spark.streaming.ingest import (
-        _applied_info,
-        _read_state,
-        ewma_merge_batch,
-    )
-
-    state = str(tmp_path / "ewma_state")
-    os.makedirs(state, exist_ok=True)
-    b1 = spark.createDataFrame(
-        [(1, 1, 10.0), (2, 1, 4.0)], "k long, t long, v double"
-    )
-    b2 = spark.createDataFrame([(1, 2, 30.0)], "k long, t long, v double")
-    ewma_merge_batch(b1, state, ["k"], ["t"], "v", 0.5, batch_id=0)
-    # (a) marker and state are in the SAME directory
-    assert os.path.isfile(os.path.join(state, "current", "_applied"))
-    assert _applied_info(state) == {"last": 0, "count": 1}
-    # (b) nothing at the top level that could drift from the state
-    assert not [f for f in os.listdir(state) if f.startswith("_done_")]
-
-    ewma_merge_batch(b2, state, ["k"], ["t"], "v", 0.5, batch_id=1)
-    assert _applied_info(state) == {"last": 1, "count": 2}
-    post = {r["k"]: r["s0"] for r in _read_state(spark, state).collect()}
-
-    # (c) simulate the mid-swap crash of a NEXT batch: current was
-    # renamed to _old, staging never landed. Recovery reads _old —
-    # and the marker it finds there is _old's own, so a replay of
-    # batch 2 re-folds against exactly the state whose marker it saw.
-    shutil.rmtree(os.path.join(state, "_old"), ignore_errors=True)
-    os.rename(os.path.join(state, "current"), os.path.join(state, "_old"))
-    assert _applied_info(state) == {"last": 1, "count": 2}
-    rec = {r["k"]: r["s0"] for r in _read_state(spark, state).collect()}
-    assert rec == post
-    b3 = spark.createDataFrame([(2, 3, 8.0)], "k long, t long, v double")
-    ewma_merge_batch(b3, state, ["k"], ["t"], "v", 0.5, batch_id=2)
-    assert _applied_info(state) == {"last": 2, "count": 3}
-    got = {r["k"]: r["s0"] for r in _read_state(spark, state).collect()}
-    # k=1 series is (10@t1, 30@t2): 0.5*30 + 0.5*10 = 20 (b3 doesn't
-    # touch it); k=2 is (4@t1, 8@t3): 0.5*8 + 0.5*4 = 6
-    assert got == {1: 20.0, 2: 6.0}
-
-
-def test_transform_with_state_gate_is_honest(spark):
-    """The transformWithStateInPandas path (Spark-4 StatefulProcessor)
-    is environment-gated on google.protobuf: where the probe fails the
-    operator must raise the diagnostic immediately (not deep inside
-    the streaming runner); where it passes, the v2 operator must exist
-    and be callable. Either way the CODE PATH exists and activates the
-    moment the container gains a working protobuf (r8 verdict #9)."""
-    from strava_etl_public_spark.streaming.ingest import (
-        running_user_stats_v2,
-        transform_with_state_available,
-    )
-
-    if not transform_with_state_available():
-        dummy = spark.readStream.format("rate").load()
-        with pytest.raises(RuntimeError, match="protobuf"):
-            running_user_stats_v2(dummy)
-
-
-@pytest.mark.skipif(
-    not __import__(
-        "strava_etl_public_spark.streaming.ingest", fromlist=["x"]
-    ).transform_with_state_available(),
-    reason="google.protobuf unavailable in this container "
-    "(transformWithStateInPandas runner requirement — SURVEY §6)",
-)
-def test_transform_with_state_matches_v1_and_batch(spark, staged_events):
-    """Where protobuf exists: the StatefulProcessor twin must produce
-    the same final per-user state as the applyInPandasWithState
-    operator and the batch aggregation."""
-    from strava_etl_public_spark.streaming.ingest import running_user_stats_v2
-
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged_events)
-    )
-    out = _run(spark, running_user_stats_v2(stream), "update")
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    final = {
-        (r["user_id"], r["n_events"], r["max_value"])
-        for r in out.withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-        .select("user_id", "n_events", "max_value")
-        .collect()
-    }
-    batch = {
-        (r["user_id"], r["n_events"], r["max_value"])
-        for r in spark.read.parquet(staged_events)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.max("value").alias("max_value"),
-        )
-        .collect()
-    }
-    assert final == batch and len(final) > 0
-
-
 def test_table_merge_sink_versions_and_lww(spark, staged_events, tmp_path):
     """Streaming MERGE into a ManagedTable: final content equals the
     batch arg_max per user, every non-empty micro-batch published one

@@ -477,9 +477,7 @@ def test_same_checkpoint_restart_loses_nothing_across_rename(
     pre-rename commits (a fresh checkpoint "from the rename version"
     would silently skip them — the recipe the source's error message
     used to prescribe). table_cdf_resilient_drain is that restart."""
-    from strava_etl_public_spark.streaming.ingest import (
-        table_cdf_resilient_drain,
-    )
+    from tests.cdf_drain_helper import table_cdf_resilient_drain
 
     path = str(tmp_path / "t")
     ckpt = str(tmp_path / "ck")
@@ -529,9 +527,7 @@ def test_resilient_drain_restarts_through_live_evolution(
     import threading
     import time
 
-    from strava_etl_public_spark.streaming.ingest import (
-        table_cdf_resilient_drain,
-    )
+    from tests.cdf_drain_helper import table_cdf_resilient_drain
 
     path = str(tmp_path / "t")
     ckpt = str(tmp_path / "ck")
@@ -585,9 +581,7 @@ def test_same_checkpoint_restart_after_prior_rename(spark, tmp_path):
     fix, every same-checkpoint restart raised until max_restarts:
     the advertised loss-free recovery was unreachable for any table
     with a prior rename."""
-    from strava_etl_public_spark.streaming.ingest import (
-        table_cdf_resilient_drain,
-    )
+    from tests.cdf_drain_helper import table_cdf_resilient_drain
 
     path = str(tmp_path / "t")
     ckpt = str(tmp_path / "ck")

@@ -134,9 +134,7 @@ def test_random_op_sequences_match_model(
     # documented recipe (resync from a snapshot, fresh cursor).
     # Evolution commits (rename/widen/add) stay CLEAN — the resilient
     # drain's restart loop must serve them, replay-exact.
-    from strava_etl_public_spark.streaming.ingest import (
-        table_cdf_resilient_drain,
-    )
+    from tests.cdf_drain_helper import table_cdf_resilient_drain
 
     drain = {
         "n": 0,
