@@ -543,8 +543,6 @@ SECONDARY_EXTRAS = (
     # — x_graph_triangles 50 s at sf0.1 — is measured once in
     # SCALE.md, not re-paid per round)
     "x_shard_manifest",
-    "x_sketch_kmv",
-    "x_sketch_quantile_hist",
     "x_embed_covariance",
     "x_text_boilerplate",
     "x_mm_audio_stats",
@@ -561,7 +559,6 @@ SECONDARY_EXTRAS = (
     "x_feature_trailing_window",
     "x_pipeline_curation",
     "x_text_span_removal",
-    "x_sketch_heavy_hitters",
     "x_text_hybrid_retrieval",
     "x_text_dup_extents",
     "x_interval_islands",

@@ -44,34 +44,25 @@ def main() -> int:
         "x_text_vocab_topk",
         "x_skew_salted_agg",
         "x_range_join_sessions",
-        "x_sample_stratified",
         "x_embed_quantize_int8",
         "x_dedup_containment",
         # sixth-to-ninth batch curation operators (x_graph_triangles and
         # x_text_dup_spans checkpoint internally → their returned plans
         # are scan-of-checkpoint; they are audited by plan reading at
         # change time, not here)
-        "x_sketch_kmv",
-        "x_sketch_kmv_pairs",
         "x_ohlc_downsample",
-        "x_sample_domain_mix",
-        "x_sample_fixed_k",
         "x_text_boilerplate",
-        "x_hist_equidepth",
         "x_embed_centroids",
         "x_mm_audio_stats",
         "x_shard_manifest",
         "x_interval_join_overlap",
-        "x_sketch_quantile_hist",
         "x_embed_covariance",
-        "x_bootstrap_ci",
-        "x_ab_mannwhitney",
         "x_fuzzy_join_names",
         # fifteenth batch (r7 curation)
         "x_sim_knn_join",
         "x_curation_dsir",
         "x_mm_gif_frames",
-        # late-r7 waves (span_removal / dup_extents / heavy hitters /
+        # late-r7 waves (span_removal / dup_extents /
         # eval-ann / pit / export checkpoint internally — audited at
         # change time; these return live plans)
         "x_text_hybrid_retrieval",
@@ -83,7 +74,6 @@ def main() -> int:
         "x_pseudonymize_join",
         "x_join_cardinality_report",
         "x_feature_trailing_window",
-        "x_ab_cuped",
         "x_graph_khop",
         # round-8 live-plan additions (x_dedup_incremental
         # checkpoints internally — audited at change time)

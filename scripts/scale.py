@@ -498,44 +498,12 @@ def maintenance(spark, root, sf_dir=GEN_SF1):
     }
 
 
-def curation(spark, root, n_fact=5_000_000, n_docs=200_000):
-    """Curation operators at millions of rows, all synthetic:
-
-    - ``bloom_prefilter``: ``n_fact`` rows probed against 100k members
-      through a 2^21-bit bitmap; zero false negatives and an FP
-      carryover within 3x of the analytic (1-e^(-kn/m))^k bound.
-    - ``bm25_topk``: ``n_docs`` docs, 3 queries; at most 30 result rows.
-    - ``group_linreg``: ``n_fact`` points in groups of 100 (50k groups
-      at the default) in one hash agg; slope 0.5 recovered within 0.05.
-    - ``sample_weighted``: the kept fraction tracks the mean weight
-      0.495 within 0.01."""
-    from strava_etl_public_spark.operators import sketch
+def curation(spark, root, n_docs=200_000):
+    """Curation operators at scale, all synthetic: ``bm25_topk`` over
+    ``n_docs`` docs and 3 queries; at most 30 result rows."""
     from strava_etl_public_spark.operators import text as T
-    from strava_etl_public_spark.operators.stats import group_linreg
 
     out, fails = {}, []
-    n_members, m, k = 100_000, 1 << 21, 5
-    members = spark.range(n_members).select((F.col("id") * 7919).alias("key"))
-    # ~10 % of fact keys are members, the rest miss
-    fact = spark.range(n_fact).select(
-        F.when(F.col("id") % 10 == 0, (F.col("id") / 10).cast("long") % n_members * 7919)
-        .otherwise(F.col("id") + 1_000_000_000)
-        .alias("key")
-    )
-    n_kept, dt = best(
-        lambda: sketch.bloom_prefilter(
-            fact, sketch.bloom_build(members, "key", m=m, k=k), "key", m=m, k=k
-        ).count()
-    )
-    n_true = (n_fact + 9) // 10
-    fp_bound = int((n_fact - n_true) * (1 - math.exp(-k * n_members / m)) ** k)
-    out.update(bloom_s=round(dt, 2), bloom_kept=n_kept, bloom_true=n_true,
-               bloom_fp=n_kept - n_true, bloom_fp_bound=fp_bound)
-    if n_kept < n_true:
-        fails.append("bloom false negatives")
-    if n_kept - n_true > max(3 * fp_bound, 1000):
-        fails.append("bloom false-positive carryover above the analytic bound")
-
     vocab = 5000
     docs = spark.range(n_docs).select(
         F.col("id").alias("doc_id"),
@@ -549,31 +517,6 @@ def curation(spark, root, n_fact=5_000_000, n_docs=200_000):
     out.update(bm25_s=round(dt, 2), bm25_rows=len(rows))
     if not rows or len(rows) > 30:
         fails.append("bm25 result shape")
-
-    n_groups = max(n_fact // 100, 1)
-    pts = spark.range(n_fact).select(
-        (F.col("id") % n_groups).alias("g"),
-        (F.col("id") / n_groups).cast("long").alias("x"),
-        (
-            (F.col("id") / n_groups).cast("long").cast("double") * 0.5
-            + (F.xxhash64("id") % 1000).cast("double") / 100.0
-        ).alias("y"),
-    )
-
-    def fit():
-        f = group_linreg(pts, ["g"], "x", "y")
-        return f.count(), f.agg(F.avg(F.abs(F.col("slope") - 0.5))).first()[0]
-
-    (groups, slope_err), dt = best(fit)
-    out.update(linreg_s=round(dt, 2), groups=groups, slope_err=round(slope_err, 4))
-    if groups != n_groups or slope_err > 0.05:
-        fails.append("trend fit off (groups or slope recovery)")
-
-    w = spark.range(n_fact).select(F.col("id"), ((F.col("id") % 100).cast("double") / 100.0).alias("w"))
-    kept, dt = best(lambda: sketch.sample_weighted(w, "id", "w").count())
-    out.update(sample_s=round(dt, 2), sample_frac=round(kept / n_fact, 4))
-    if abs(kept / n_fact - 0.495) > 0.01:
-        fails.append("kept fraction far from mean weight")
     return {**out, "fails": fails, "ok": not fails}
 
 
@@ -872,8 +815,7 @@ def lineage_pq(spark, root, n_versions=100_000):
                 json.dump(rec, f)
         with open(os.path.join(tdir, "_latest"), "w") as f:
             f.write(str(n + 5))
-        with open(os.path.join(tdir, "_table.json"), "w") as f:
-            json.dump({"key": ["id"], "stat_cols": []}, f)
+        table_log.save_config(tdir, {"key": ["id"], "stat_cols": []})
 
     out = {"n_versions": n + 5, "synth_s": round(best(synth)[1], 2)}
     kdir = os.path.join(tdir, "_ckpts")

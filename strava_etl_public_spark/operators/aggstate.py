@@ -4,12 +4,9 @@ across batches, finish to user-facing metrics.
 
 The warehouse pattern behind every incremental rollup: at 100 TB you
 cannot re-scan history per refresh, so the rollup is maintained as
-MERGEABLE state — counts and quantized sums add, mins/maxes combine,
-HLL registers max (sketch.finish_hll_registers is the distinct-count
-face of the same split). ``merge(state(A), state(B)) == state(A ∪ B)``
-is the algebraic contract; the driver query proves it against a
-full-corpus oracle. Same state algebra the streaming LWW/HLL sinks
-use — this is the batch face.
+MERGEABLE state — counts and quantized sums add, mins/maxes combine.
+``merge(state(A), state(B)) == state(A ∪ B)`` is the algebraic
+contract; the driver query proves it against a full-corpus oracle.
 
 Determinism: sums are BIGINT over 6dp-quantized values (order-free),
 so the finished metrics are bit-equal however batches are sliced.
@@ -64,8 +61,7 @@ def merge_agg_states(*states: DataFrame) -> DataFrame:
 
 def finish_state(state: DataFrame) -> DataFrame:
     """Read-time finish: quantized sum → 6dp value sum and mean —
-    the serving half of the state split (same pattern as
-    sketch.finish_hll_registers)."""
+    the serving half of the state split."""
     keys = [c for c in state.columns if c not in ("n", "sum_q", "min_v", "max_v")]
     return state.select(
         *keys,

@@ -30,32 +30,19 @@ META_SCHEMA = "doc_id long, n_bytes long, sha256 string, kind string"
 
 
 def _probe_codecs() -> dict[str, bool]:
-    """Import-time codec probe. Checked 2026-08-13 in the build
-    container: PIL, cv2, imageio, av, soundfile, librosa, torchvision,
-    skimage all absent; no ffmpeg/ffprobe binary on PATH. The real
-    kernels below activate automatically wherever the probe passes.
+    """Import-time codec probe: ``pil`` is whether PIL imports; the
+    PIL image kernels below activate automatically wherever it does.
 
     ``png_stdlib`` is always True: operators/pngcodec.py implements a
     real non-interlaced 8-bit PNG decoder on zlib+struct alone, so the
-    decode stage has an executable REAL codec even in this container."""
-    import shutil
-
-    probe = {}
+    decode stage has an executable REAL codec without PIL."""
     try:
         import PIL.Image  # noqa: F401
 
-        probe["pil"] = True
+        pil = True
     except ImportError:
-        probe["pil"] = False
-    try:
-        import av  # noqa: F401
-
-        probe["pyav"] = True
-    except ImportError:
-        probe["pyav"] = False
-    probe["ffmpeg"] = shutil.which("ffmpeg") is not None
-    probe["png_stdlib"] = True
-    return probe
+        pil = False
+    return {"pil": pil, "png_stdlib": True}
 
 
 #: Which codec backends this environment actually has.

@@ -1,30 +1,21 @@
-"""Distributed sketches (north-star extension): deterministic
-HyperLogLog distinct-count.
+"""Deterministic md5 hashing for sampling, splits and bloom positions.
 
-Why not `approx_count_distinct`: Spark's built-in HLL++ and any other
-engine's sketch hash differently, so their estimates can never be
-cross-checked exactly. This HLL derives everything from md5 (the
-engine-portable hash used across this repo) and keeps the harmonic
-mean in INTEGER arithmetic — sum of 2^(53 - M_j) over buckets is exact
-in a BIGINT — so the final estimate is a deterministic function of the
-input SET, bit-identical in Spark and a SQL oracle, while still being
-a real m=2^b-register HLL (standard error ~1.04/sqrt(m)).
-
-Scale shape: one hash-aggregate (group keys + bucket) for the
-per-bucket max rank, then one tiny aggregate over m rows per group —
-the same two-level shape as any groupBy, with map-side combine; no
-distinct-shuffle of the raw values (that is the point of a sketch).
+Why md5 and not ``hash()``/``xxhash64``: md5 is the engine-portable
+hash used across this repo, so every predicate built here (hash
+samples, train/val/test splits, bloom bit positions, the token-budget
+pack order) is a pure function of its inputs, bit-identical in Spark
+and a SQL oracle, and stable across runs, partitionings and cluster
+sizes. Every helper is a projection or a filter over one md5 per row
+(scan-speed, no shuffle), except :func:`token_budget_allocate`, which
+adds one per-domain window sort.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: md5-derived 60-bit value hash: bucket = low b bits, rank = leading
-#: run of zeros (+1) in the remaining 60-b bits.
+#: md5-derived 60-bit value hash: the first 15 hex digits of md5.
 HASH_BITS = 60
 
 
@@ -32,150 +23,16 @@ def _hash60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col.cast("string")), 1, 15), 16, 10).cast("long")
 
 
-def hll_terms(col: Column, b: int = 9) -> tuple[Column, Column]:
-    """(bucket, rank) columns for one value. rank = number of leading
-    zeros in the (HASH_BITS-b)-bit remainder + 1, via string length of
-    the binary form: rem=0 → max rank."""
-    h = _hash60(col)
-    m = 1 << b
-    rem_bits = HASH_BITS - b
-    bucket = (h % m).cast("long")
-    rem = F.shiftright(h, b)
-    rank = F.when(rem == 0, F.lit(rem_bits + 1)).otherwise(
-        rem_bits - F.length(F.bin(rem)) + 1
-    )
-    return bucket, rank.cast("long")
-
-
-def hll_distinct(
-    df: DataFrame,
-    value_col: str,
-    group_cols: Sequence[str] = (),
-    b: int = 9,
-) -> DataFrame:
-    """HLL distinct-count of ``value_col`` per ``group_cols``.
-
-    Emits ``hll_estimate`` (BIGINT — the raw HLL estimate floored,
-    integer-exact as described in the module docstring; small-range
-    linear counting applied when estimate <= 2.5m and empty buckets
-    exist, like standard HLL) and ``n_buckets_seen``.
-    """
-    bucket, rank = hll_terms(F.col(value_col), b)
-    keys = list(group_cols)
-    per_bucket = (
-        df.select(*keys, bucket.alias("_bkt"), rank.alias("_rk"))
-        .groupBy(*keys, "_bkt")
-        .agg(F.max("_rk").alias("_mj"))
-    )
-    return finish_hll_registers(per_bucket, keys, b)
-
-
-def finish_hll_registers(
-    per_bucket: DataFrame, group_cols: Sequence[str] = (), b: int = 9
-) -> DataFrame:
-    """Estimate stage over a REGISTER table ``(group_cols…, _bkt,
-    _mj)`` — split out so register state can be maintained elsewhere
-    (e.g. a streaming aggregation, whose single-agg limit can't chain
-    the estimate) and finished at read time, the standard
-    sketch-serving split. Register maxima are order-free, so the
-    estimate is independent of how the registers were accumulated."""
-    m = 1 << b
-    rem_bits = HASH_BITS - b
-    keys = list(group_cols)
-    # integer-exact harmonic denominator: sum over SEEN buckets of
-    # 2^(rem_bits+1-Mj), plus 2^(rem_bits+1) per EMPTY bucket (Mj=0),
-    # all as BIGINT; alpha_m * m^2 * 2^(rem_bits+1) stays in double
-    # only for the final division.
-    unit = 2 ** (rem_bits + 1)
-    alpha = 0.7213 / (1 + 1.079 / m)  # standard alpha_m for m >= 128
-    agg = per_bucket.groupBy(*keys).agg(
-        F.sum(
-            F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST({rem_bits + 1} - _mj AS INT))")
-        ).alias("_den_seen"),
-        F.count(F.lit(1)).alias("n_buckets_seen"),
-    )
-    den = (F.col("_den_seen") + (F.lit(m) - F.col("n_buckets_seen")) * F.lit(unit)).cast(
-        "double"
-    )
-    raw = F.lit(alpha * m * m * unit) / den
-    zeros = F.lit(m) - F.col("n_buckets_seen")
-    # linear counting for the small range, per the HLL paper
-    small = F.lit(float(m)) * F.log(F.lit(float(m)) / zeros.cast("double"))
-    est = F.when((raw <= 2.5 * m) & (zeros > 0), small).otherwise(raw)
-    return agg.select(
-        *keys,
-        F.floor(est).cast("long").alias("hll_estimate"),
-        F.col("n_buckets_seen").cast("long").alias("n_buckets_seen"),
-    )
-
-
-def _cms_cells(value_col: str, d: int, w: int) -> Column:
-    """The d (row, cell) hash targets of one value — ONE definition
-    shared by build and lookup, because the sketch is only correct if
-    both sides hash identically (code-review r6 finding)."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(r).alias("r"),
-                (
-                    _hash60(F.concat(F.lit(f"cms{r}:"), F.col(value_col).cast("string")))
-                    % w
-                ).alias("c"),
-            )
-            for r in range(d)
-        ]
-    )
-
-
-def cms_build(
-    df: DataFrame, value_col: str, d: int = 4, w: int = 1024
-) -> DataFrame:
-    """Count-min sketch over a value column: a ``d × w`` integer cell
-    table ``(r, c, n)`` — each value increments one cell per hash row
-    (md5-derived, engine-portable like the HLL terms). ONE tagged
-    explode + one hash agg; the sketch is d·w cells regardless of
-    cardinality, and cells merge by addition (map-side combined, and
-    unions of sketches are sums — the distributed-friendly property).
-    """
-    return (
-        df.select(F.explode(_cms_cells(value_col, d, w)).alias("_e"))
-        .select(F.col("_e.r").alias("r"), F.col("_e.c").alias("c"))
-        .groupBy("r", "c")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-
-
-def cms_lookup(
-    cms: DataFrame, keys: DataFrame, value_col: str, d: int = 4, w: int = 1024
-) -> DataFrame:
-    """Point-estimate counts for ``keys`` rows against a built sketch:
-    min over the d cells a value hashes to — the classic CMS
-    overestimate (never under). The keys side explodes to d probe rows
-    and LEFT-joins the (tiny, broadcastable) cell table: an empty cell
-    counts as 0, so unseen keys estimate 0 instead of vanishing (or
-    over-reporting from only their populated cells — code-review r6
-    finding)."""
-    probes = keys.select(
-        F.col(value_col), F.explode(_cms_cells(value_col, d, w)).alias("_e")
-    ).select(value_col, F.col("_e.r").alias("r"), F.col("_e.c").alias("c"))
-    return (
-        probes.join(F.broadcast(cms), ["r", "c"], "left")
-        .groupBy(value_col)
-        .agg(
-            F.min(F.coalesce("n", F.lit(0))).cast("long").alias("cms_count")
-        )
-    )
-
-
 def _bloom_position_cols(value_col: str, m: int, k: int) -> list[Column]:
     """The k bit positions of one value — ONE definition shared by
-    build, probe, and prefilter (the CMS lesson: a sketch is only
-    correct if every side hashes identically). Kirsch-Mitzenmacher
+    every bloom manifest writer (``layout``, ``manifest``), whose
+    driver-side probe ``layout._bloom_positions_py`` must hash
+    identically. Kirsch-Mitzenmacher
     double hashing: ONE md5 yields two independent 60-bit halves
     (h1 = hex[1:15], h2 = hex[17:31] — the fingerprint-split
     convention the MinHash shingles use) and ``pos_r = (h1 + r·(h2|1))
     mod m`` — k positions for one hash evaluation (the dominant
-    prefilter cost at fact-scan scale), with the classic proof that
+    manifest-build cost), with the classic proof that
     the FP rate is asymptotically unchanged. h2 forced odd so the
     stride never degenerates to a single repeated position. k caps at
     8: r·h2 with r ≥ 9 overflows int64 into negative positions
@@ -193,90 +50,6 @@ def _bloom_positions(value_col: str, m: int, k: int) -> Column:
     return F.array(*_bloom_position_cols(value_col, m, k))
 
 
-def bloom_build(df: DataFrame, value_col: str, m: int = 4096, k: int = 5) -> DataFrame:
-    """Bloom filter over a key column, represented as the table of
-    DISTINCT set bit positions ``(pos)`` — at most m rows whatever the
-    input cardinality. One tagged explode + one distinct; filters
-    merge by UNION DISTINCT (bitmaps OR — the distributed-merge
-    property), and the result is small enough to broadcast
-    (m=2^18 → ≤262k longs) against any fact table."""
-    return (
-        df.select(F.explode(_bloom_positions(value_col, m, k)).alias("pos"))
-        .distinct()
-    )
-
-
-def bloom_probe(
-    bloom: DataFrame, keys: DataFrame, value_col: str, m: int = 4096, k: int = 5
-) -> DataFrame:
-    """Membership test of ``keys`` against a built filter: a key hits
-    iff ALL k of its positions are set. The keys side explodes to k
-    probe rows and LEFT-joins the broadcast position table; each
-    exploded row matches at most one (distinct) position row, so
-    ``count(matched) == k`` ⇔ every position present — duplicate
-    positions within one key's array count once each and keep the
-    identity. No false negatives ever; false-positive rate is the
-    classic (1 - e^(-kn/m))^k."""
-    # distinct keys first: a duplicated probe key would pool 2k probe
-    # rows per group and fail the count==k test — a FALSE NEGATIVE on
-    # a true member (code-review finding)
-    probes = keys.select(value_col).distinct().select(
-        F.col(value_col), F.explode(_bloom_positions(value_col, m, k)).alias("pos")
-    )
-    return (
-        probes.join(F.broadcast(bloom.withColumn("_set", F.lit(1))), "pos", "left")
-        .groupBy(value_col)
-        .agg((F.count("_set") == k).alias("bloom_hit"))
-    )
-
-
-def bloom_prefilter(
-    df: DataFrame, bloom: DataFrame, value_col: str, m: int = 4096, k: int = 5
-) -> DataFrame:
-    """Map-only join-pruning filter: drop fact rows whose key is
-    definitely NOT in the filter, BEFORE any shuffle — the reason
-    bloom filters exist in a distributed engine (a semi-join would
-    shuffle the 100 TB side; this is a scan-speed filter).
-
-    The position table is folded to a ≤m/64-row word table in Spark
-    (bit_or per 64-bit word), collected as bounded model state
-    (m=2^18 → 32 KiB bitmap) and broadcast; positions are computed
-    JVM-side (md5), and the bit tests run as one Arrow-batched numpy
-    gather per batch. Keeps every true member (no false negatives);
-    survivors still need the exact join."""
-    import numpy as np
-
-    words = (
-        bloom.groupBy(F.shiftright("pos", 6).alias("w"))
-        .agg(
-            F.expr(
-                "bit_or(shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT)))"
-            ).alias("bits")
-        )
-        .collect()
-    )
-    bitmap = np.zeros(m // 64 + 1, dtype=np.int64)
-    for row in words:
-        bitmap[row["w"]] = row["bits"]
-    bc = df.sparkSession.sparkContext.broadcast(bitmap)
-    out_schema = df.schema
-    pos_cols = [f"_pos{r}" for r in range(k)]
-
-    def keep_members(batches):
-        bm = bc.value
-        for pdf in batches:
-            hit = None
-            for c in pos_cols:
-                arr = pdf[c].to_numpy(dtype=np.int64)  # flat int64, no object rows
-                h = ((bm[arr >> 6] >> (arr & 63)) & 1).astype(bool)
-                hit = h if hit is None else (hit & h)
-            yield pdf.loc[hit, [f.name for f in out_schema.fields]]
-
-    pos = _bloom_position_cols(value_col, m, k)
-    with_pos = df.withColumns(dict(zip(pos_cols, pos)))
-    return with_pos.mapInPandas(keep_members, schema=out_schema)
-
-
 def sample_by_hash(df: DataFrame, id_col: str, fraction: float, salt: str = "sample") -> DataFrame:
     """Stable uniform sample: keep rows whose md5-derived 60-bit hash
     of (salt, id) falls below fraction * 2^60. Unlike df.sample(), the
@@ -287,56 +60,6 @@ def sample_by_hash(df: DataFrame, id_col: str, fraction: float, salt: str = "sam
     pushdown-friendly, no shuffle."""
     h = _hash60(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string")))
     return df.filter(h < int(fraction * (1 << HASH_BITS)))
-
-
-def sample_stratified(
-    df: DataFrame,
-    id_col: str,
-    class_col: str,
-    fractions: dict[str, float],
-    default: float = 0.0,
-    salt: str = "strat",
-) -> DataFrame:
-    """Per-class deterministic sampling (class balancing — e.g. keep
-    10% of the majority class and all of the rare ones when curating
-    training data): a row survives iff its (salt, id) hash falls below
-    ITS CLASS's threshold. Same engine-portable integer math as
-    :func:`sample_by_hash`, so the kept set is a pure function of
-    (salt, ids, fractions) — reproducible across runs, engines and
-    partitionings, and a SQL oracle replicates it exactly. Classes not
-    in ``fractions`` keep ``default``. Pure filter: scan-speed,
-    pushdown-friendly, no shuffle, no per-class passes."""
-    h = _hash60(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string")))
-    thresh = F.lit(int(default * (1 << HASH_BITS)))
-    for cls, frac in fractions.items():
-        thresh = F.when(
-            F.col(class_col) == cls, F.lit(int(frac * (1 << HASH_BITS)))
-        ).otherwise(thresh)
-    return df.filter(h < thresh)
-
-
-def sample_weighted(
-    df: DataFrame,
-    id_col: str,
-    weight_col: Column | str,
-    salt: str = "weighted",
-) -> DataFrame:
-    """Importance (quality-weighted) sampling: keep a row with
-    probability = its per-row weight in [0,1] — the standard curation
-    move of keeping high-quality documents at a higher rate instead of
-    a hard threshold. A row survives iff its (salt, id) hash, scaled
-    to [0,1), falls below ITS OWN weight; weights outside [0,1] are
-    clamped. Deterministic like the other samplers — the kept set is
-    a pure function of (salt, ids, weights), reproducible across
-    engines and partitionings, and re-running after adding rows never
-    flips earlier decisions. Pure filter: scan-speed, no shuffle."""
-    w = F.col(weight_col) if isinstance(weight_col, str) else weight_col
-    w = F.least(F.greatest(w.cast("double"), F.lit(0.0)), F.lit(1.0))
-    h = _hash60(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string")))
-    # integer threshold per row: floor(weight * 2^60) — same math the
-    # uniform sampler uses with a constant fraction, so weight==f
-    # reproduces sample_by_hash(f) exactly
-    return df.filter(h < F.floor(w * F.lit(float(1 << HASH_BITS))).cast("long"))
 
 
 def hash_split(
@@ -362,234 +85,8 @@ def hash_split(
 
 
 # ---------------------------------------------------------------------------
-# KMV (bottom-k / k-minimum-values) distinct sketch
-# ---------------------------------------------------------------------------
-
-
-def kmv_build(
-    df: DataFrame,
-    value_col: str,
-    group_cols: Sequence[str] = (),
-    k: int = 64,
-) -> DataFrame:
-    """Bottom-k (KMV) distinct sketch: the ``k`` smallest distinct
-    60-bit md5 hashes of ``value_col`` per group, as rows
-    ``(group_cols…, _h, _rk)`` with ``_rk`` the 1-based rank.
-
-    Why next to HLL: a KMV sketch supports SET OPERATIONS — the
-    bottom-k of a union is the bottom-k of the merged hash sets, and
-    membership of a hash in both input sketches estimates Jaccard /
-    intersection cardinality directly (Beyer et al., "On Synopses for
-    Distinct-Value Estimation Under Multiset Operations", SIGMOD'07).
-    HLL intersections only exist via inclusion-exclusion, whose error
-    explodes for small overlaps.
-
-    Scale shape: one projection to hashes, a per-partition partial
-    bottom-k prune in Arrow batches (algebraically safe — the global
-    bottom-k of a union is contained in the union of per-batch
-    bottom-ks, the same reason map-side combine is safe for MIN), then
-    one distinct + per-group window over rows already pruned to
-    ≤ k·partitions per group. The raw values are never
-    distinct-shuffled; what shuffles is at most k longs per (group,
-    input partition).
-    """
-    from pyspark.sql import Window
-
-    keys = list(group_cols)
-    proj = df.select(*keys, _hash60(F.col(value_col)).alias("_h")).filter(
-        F.col("_h").isNotNull()
-    )
-
-    schema = proj.schema
-
-    def _prune(batches):
-        # per-Arrow-batch partial bottom-k per group: a superset of the
-        # global bottom-k, bounded memory (k rows out per group/batch)
-        for pdf in batches:
-            pdf = pdf.drop_duplicates()
-            if keys:
-                yield pdf.sort_values("_h").groupby(keys, sort=False).head(k)
-            else:
-                yield pdf.nsmallest(k, "_h")
-
-    pruned = proj.mapInPandas(_prune, schema=schema)
-    w = Window.partitionBy(*keys).orderBy("_h") if keys else Window.orderBy("_h")
-    return (
-        pruned.distinct()
-        .withColumn("_rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("_rk") <= k)
-    )
-
-
-def kmv_estimate(sketch: DataFrame, group_cols: Sequence[str] = (), k: int = 64) -> DataFrame:
-    """Distinct-count estimate from a KMV sketch: exact ``n_seen`` when
-    the group has fewer than k distinct values (the sketch IS the
-    distinct set), else the standard unbiased (k-1)·2^60 / h_(k).
-    Deterministic: (k-1)·2^60 is exactly representable (≤ 9
-    significant bits), h_(k) is an exact BIGINT, one IEEE division,
-    floor — bit-identical in any engine."""
-    keys = list(group_cols)
-    num = float((k - 1) * (1 << HASH_BITS))
-    agg = sketch.groupBy(*keys).agg(
-        F.count(F.lit(1)).cast("long").alias("n_seen"),
-        F.max(F.when(F.col("_rk") == k, F.col("_h"))).alias("_hk"),
-    )
-    est = F.when(F.col("n_seen") < k, F.col("n_seen").cast("double")).otherwise(
-        F.lit(num) / F.col("_hk").cast("double")
-    )
-    return agg.select(
-        *keys,
-        F.floor(est).cast("long").alias("kmv_estimate"),
-        F.col("n_seen"),
-    )
-
-
-def kmv_pair_ops(sketch: DataFrame, group_col: str, k: int = 64) -> DataFrame:
-    """Pairwise set-operation estimates between every pair of groups
-    from their KMV sketches: Jaccard = |bottom-k(A∪B) ∩ A ∩ B| / k'
-    (k' = min(k, |A∪B| hashes)), intersection ≈ Jaccard · D(A∪B).
-
-    Serving-scale op: inputs are k-bounded sketches (≤ k rows per
-    group), so the pair explosion is P²·k — model state, not data.
-    All counts integer; the two divisions are single IEEE ops → the
-    estimates are engine-portable like :func:`kmv_estimate`."""
-    from pyspark.sql import Window
-
-    # the sketch feeds both pair legs — it is k-bounded model state, so
-    # an eager checkpoint is cheap and stops the build subplan (a full
-    # corpus agg) running once per leg (plan-audit finding)
-    sketch = sketch.localCheckpoint(eager=True)
-    a = sketch.select(F.col(group_col).alias("g1"), "_h")
-    b = sketch.select(F.col(group_col).alias("g2"), "_h")
-    # unordered group pairs (tiny — distinct group values of a sketch)
-    pairs = (
-        a.select("g1").distinct().crossJoin(b.select("g2").distinct())
-        .filter(F.col("g1") < F.col("g2"))
-    )
-    # union of the two sketches per pair, tagged with membership
-    ua = pairs.join(a, "g1").select("g1", "g2", "_h", F.lit(1).alias("_in_a"), F.lit(0).alias("_in_b"))
-    ub = pairs.join(b, "g2").select("g1", "g2", "_h", F.lit(0).alias("_in_a"), F.lit(1).alias("_in_b"))
-    merged = (
-        ua.unionByName(ub)
-        .groupBy("g1", "g2", "_h")
-        .agg(F.max("_in_a").alias("in_a"), F.max("_in_b").alias("in_b"))
-    )
-    w = Window.partitionBy("g1", "g2").orderBy("_h")
-    topk = merged.withColumn("_rk", F.row_number().over(w)).filter(F.col("_rk") <= k)
-    union_num = float((k - 1) * (1 << HASH_BITS))
-    agg = topk.groupBy("g1", "g2").agg(
-        F.count(F.lit(1)).cast("long").alias("n_union_seen"),
-        F.sum(F.col("in_a") * F.col("in_b")).cast("long").alias("n_both"),
-        F.max(F.when(F.col("_rk") == k, F.col("_h"))).alias("_hk"),
-    )
-    d_union = F.when(
-        F.col("n_union_seen") < k, F.col("n_union_seen").cast("double")
-    ).otherwise(F.lit(union_num) / F.col("_hk").cast("double"))
-    jac = F.col("n_both").cast("double") / F.col("n_union_seen").cast("double")
-    return agg.select(
-        "g1",
-        "g2",
-        F.col("n_both"),
-        F.col("n_union_seen"),
-        F.round(jac, 6).alias("jaccard_est"),
-        F.floor(jac * d_union).cast("long").alias("intersection_est"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # Temperature-based domain mixing (α-power resampling across sources)
 # ---------------------------------------------------------------------------
-
-
-def domain_mix_plan(
-    df: DataFrame,
-    domain_col: str,
-    budget_frac: float,
-    alpha: float = 0.5,
-) -> DataFrame:
-    """Mixture manifest for α-power domain resampling: per domain, the
-    row count and the deterministic keep-threshold that realizes a
-    target share ∝ n_d^α of an overall ``budget_frac·N`` budget — the
-    LLaMA/Pile-style move of flattening the natural distribution so
-    rare domains are over-represented relative to their raw size
-    (α=1 keeps natural proportions, α=0 equalizes domains).
-
-    Engine-portable by construction: weights are quantized to exact
-    BIGINTs (floor(n^α·10⁶)) before the share division, the keep
-    fraction is one double expression over exact integers, and the
-    threshold is its floor at 10⁶ granularity — so the plan (and
-    therefore the kept SET) is a pure function of the domain counts.
-    α=0.5 uses sqrt, which IEEE requires correctly rounded —
-    bit-identical in any engine; other α go through pow, whose last
-    ulp is libm-dependent (documented, not oracle-checked).
-
-    Scale: one hash agg (P domain rows — bounded model state), one
-    1-row total broadcast. Emits ``(domain, n_total, keep_thr)``;
-    a domain whose fair share exceeds its size is kept whole
-    (threshold capped at 10⁶ — this operator downsamples, it never
-    replicates)."""
-    w_of = (
-        F.sqrt(F.col("_n").cast("double"))
-        if alpha == 0.5
-        else F.pow(F.col("_n").cast("double"), F.lit(float(alpha)))
-    )
-    counts = df.groupBy(F.col(domain_col).alias("domain")).agg(
-        F.count(F.lit(1)).cast("long").alias("_n")
-    )
-    counts = counts.withColumn(
-        "_wq", F.floor(w_of * F.lit(1000000.0)).cast("long")
-    )
-    totals = counts.agg(
-        F.sum("_n").cast("long").alias("_N"),
-        F.sum("_wq").cast("long").alias("_sumwq"),
-    )
-    # totals shares counts' lineage — reference columns through their
-    # owning DataFrame or the analyzer flags `_n` ambiguous
-    n, wq = counts["_n"], counts["_wq"]
-    budget = F.floor(
-        F.lit(float(budget_frac)) * totals["_N"].cast("double")
-    ).cast("long")
-    f = (budget.cast("double") * wq.cast("double")) / (
-        totals["_sumwq"].cast("double") * n.cast("double")
-    )
-    thr = F.least(
-        F.lit(1000000).cast("long"), F.floor(f * F.lit(1000000.0)).cast("long")
-    )
-    return counts.crossJoin(F.broadcast(totals)).select(
-        "domain",
-        n.alias("n_total"),
-        thr.alias("keep_thr"),
-    )
-
-
-def sample_domain_mix(
-    df: DataFrame,
-    id_col: str,
-    domain_col: str,
-    budget_frac: float,
-    alpha: float = 0.5,
-    salt: str = "mix",
-    plan: DataFrame | None = None,
-) -> DataFrame:
-    """Apply a :func:`domain_mix_plan`: keep a row iff its (salt, id)
-    hash bucket falls below ITS DOMAIN's threshold — the same md5
-    10⁶-bucket math as :func:`hash_split`, so the kept set is
-    reproducible across engines/partitionings and re-sampling with a
-    different α never reshuffles survivors randomly (same hash, new
-    thresholds). One broadcast join of the P-row plan + a pure filter:
-    scan speed at any corpus size. Pass a precomputed ``plan`` when
-    the caller already built one (inspection/manifest export) so the
-    corpus is not count-aggregated twice (code-review finding)."""
-    if plan is None:
-        plan = domain_mix_plan(df, domain_col, budget_frac, alpha)
-    h = _hash60(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string")))
-    return (
-        df.join(
-            F.broadcast(plan), df[domain_col] == plan["domain"], "inner"
-        )
-        .filter(h % 1_000_000 < F.col("keep_thr"))
-        .drop("domain", "n_total", "keep_thr")
-    )
 
 
 def token_budget_allocate(
@@ -602,9 +99,9 @@ def token_budget_allocate(
     salt: str = "tb",
 ) -> DataFrame:
     """Token-budget curriculum manifest: split an overall training
-    TOKEN budget across domains by α-power temperature (the same
-    flattening move as :func:`domain_mix_plan`, but budgeted in
-    tokens, which is what a pretraining run actually spends), then
+    TOKEN budget across domains by α-power temperature (T_d^α
+    flattens the mix toward small domains; budgeted in tokens, which
+    is what a pretraining run actually spends), then
     fill each domain's budget with hash-ordered documents until the
     next doc would START past the budget. Emits, per kept doc,
     ``(id, domain, tok_start)`` — tok_start is the doc's token offset
@@ -614,8 +111,7 @@ def token_budget_allocate(
     Determinism/portability: domain token totals are exact integer
     sums; weights quantize to BIGINT (floor(T_d^α·10⁶), α=0.5 → sqrt
     is IEEE-exact); each domain budget is one double expression over
-    exact ints + floor (products must stay < 2⁵³ — same documented
-    bound as domain_mix_plan); doc order inside a domain is the
+    exact ints + floor (products must stay < 2⁵³); doc order inside a domain is the
     (salt, id) md5 hash with an id tie-break; the keep rule is an
     EXCLUSIVE running sum (window: rows unbounded preceding to 1
     preceding) compared to the budget — so every domain except
@@ -670,270 +166,3 @@ def token_budget_allocate(
         .filter(F.col("tok_start") < F.col("tok_budget"))
         .select(id_col, "domain", "tok_start")
     )
-
-
-def sample_fixed_k(
-    df: DataFrame,
-    id_col: str,
-    group_cols: Sequence[str],
-    k: int,
-    salt: str = "fixk",
-) -> DataFrame:
-    """Exactly min(k, |group|) rows per group, chosen by (salt, id)
-    hash order — the fixed-SIZE companion of the fraction samplers
-    (eval-set carving, per-domain inspection samples, capped per-user
-    exports all want "k per group", not "p% of group"). Equivalent to
-    a uniform draw without replacement, but deterministic: the kept
-    set is a pure function of (salt, ids), stable under reruns,
-    engines, partitionings, and appends of later-hashing rows.
-
-    Scale shape: the same per-Arrow-batch partial bottom-k prune as
-    :func:`kmv_build` (global bottom-k ⊆ union of per-batch
-    bottom-ks) cuts each partition to ≤ k rows per group BEFORE the
-    shuffle, so the per-group window sorts ≤ k·partitions rows, never
-    the group's full population. Distinct ids CAN collide in the
-    60-bit hash (rare but possible at scale), so both the per-batch
-    prune and the final window order by (_h, id) — the kept set stays
-    a pure function of (salt, ids) even through a boundary collision
-    (ADVICE r6: a prune sorted by _h alone made the superset
-    partition-dependent when a collision straddled the k cut)."""
-    from pyspark.sql import Window
-
-    keys = list(group_cols)
-    h = _hash60(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string")))
-    proj = df.withColumn("_h", h)
-
-    schema = proj.schema
-
-    def _prune(batches):
-        for pdf in batches:
-            srt = pdf.sort_values(["_h", id_col])
-            if keys:
-                yield srt.groupby(keys, sort=False).head(k)
-            else:
-                yield srt.head(k)
-
-    pruned = proj.mapInPandas(_prune, schema=schema)
-    # no keys → "k rows overall": the global window is fine because the
-    # prune already cut the input to ≤ k·partitions rows (kmv_build's
-    # no-keys convention; code-review finding)
-    w = Window.partitionBy(*keys).orderBy("_h", id_col)
-    return (
-        pruned.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_h", "_rk")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Histogram-based mergeable quantile sketch
-# ---------------------------------------------------------------------------
-
-
-def quantile_hist_build(
-    df: DataFrame,
-    value_col: str,
-    group_cols: Sequence[str] = (),
-    bins: int = 256,
-) -> DataFrame:
-    """Mergeable quantile sketch: per group, a ``bins``-cell equi-width
-    histogram over the group's [min, max] — counts ADD (sketch unions
-    are sums, like CMS cells and HLL registers... with the caveat that
-    merging requires equal bin edges, i.e. a shared min/max epoch; the
-    t-digest/KLL alternatives merge more freely but are sampling- or
-    insertion-order-dependent, which breaks this repo's cross-engine
-    exactness contract). Two passes: a min/max hash agg (P-row model
-    state broadcast back) and the bin hash agg. Deterministic to the
-    bit: bin = floor((v−mn)·bins/(mx−mn)) clamped, computed in ONE
-    fixed double expression.
-
-    Emits ``(group_cols…, _bin, _n, _mn, _mx, _total)`` — the serving
-    split: estimates are finished at read time by
-    :func:`quantile_hist_estimate`."""
-    keys = list(group_cols)
-    data = df.filter(F.col(value_col).isNotNull())
-    mm = data.groupBy(*keys).agg(
-        F.min(F.col(value_col).cast("double")).alias("_mn"),
-        F.max(F.col(value_col).cast("double")).alias("_mx"),
-        F.count(F.lit(1)).cast("long").alias("_total"),
-    )
-    j = data.join(F.broadcast(mm), keys) if keys else data.crossJoin(F.broadcast(mm))
-    v = F.col(value_col).cast("double")
-    raw_bin = F.floor(
-        (v - F.col("_mn")) * bins / (F.col("_mx") - F.col("_mn"))
-    ).cast("long")
-    bin_col = F.when(F.col("_mx") == F.col("_mn"), F.lit(0)).otherwise(
-        F.least(raw_bin, F.lit(bins - 1))
-    )
-    return (
-        j.groupBy(*keys, bin_col.alias("_bin"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("_n"),
-            F.min("_mn").alias("_mn"),
-            F.min("_mx").alias("_mx"),
-            F.min("_total").alias("_total"),
-        )
-    )
-
-
-def quantile_hist_estimate(
-    sketch: DataFrame,
-    quantiles: Sequence[tuple[int, int]],
-    group_cols: Sequence[str] = (),
-    bins: int = 256,
-) -> DataFrame:
-    """Finish quantile estimates from a histogram sketch: for each
-    rational q = num/den, rank r = ⌈q·n⌉ (exact integer math), find
-    the first bin whose cumulative count reaches r, and linearly
-    interpolate inside it. Error ≤ one bin width of the value range —
-    the honest accuracy statement an equi-width sketch can make. The
-    cumulative walk runs over ≤ bins rows per group (sketch-sized, not
-    corpus-sized). Output: one row per (group, quantile) with
-    ``q_num/q_den``, the estimate (6dp) and the group count."""
-    from pyspark.sql import Window
-
-    keys = list(group_cols)
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy("_bin")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = sketch.withColumn("_cum", F.sum("_n").over(w))
-    qdf = None
-    width = (F.col("_mx") - F.col("_mn")) / F.lit(float(bins))
-    for num, den in quantiles:
-        rank = F.expr(f"(_total * {num} + {den - 1}) div {den}")
-        hit = cum.filter(F.col("_cum") >= rank).groupBy(*keys).agg(
-            F.min_by(
-                F.struct("_bin", "_n", "_cum", "_mn", "_mx", "_total"), F.col("_bin")
-            ).alias("_h")
-        ).select(*keys, "_h.*")
-        rank2 = F.expr(f"(_total * {num} + {den - 1}) div {den}")
-        frac = (rank2 - (F.col("_cum") - F.col("_n"))).cast("double") / F.col(
-            "_n"
-        ).cast("double")
-        est = F.col("_mn") + (F.col("_bin").cast("double") + frac) * width
-        row = hit.select(
-            *keys,
-            F.lit(num).alias("q_num"),
-            F.lit(den).alias("q_den"),
-            # + 0.0: negative-zero canonicalization (engine round split)
-            (F.round(est, 6) + F.lit(0.0)).alias("estimate"),
-            F.col("_total").alias("n"),
-        )
-        qdf = row if qdf is None else qdf.unionByName(row)
-    return qdf
-
-
-# ---------------------------------------------------------------------------
-# Exact heavy hitters via a Misra-Gries candidate screen
-# ---------------------------------------------------------------------------
-
-
-def frequent_items_exact(
-    df: DataFrame, value_col: str, phi: float, k: int | None = None
-) -> DataFrame:
-    """EXACT phi-heavy hitters — every value whose frequency is
-    >= ceil(phi*N) with its exact count — WITHOUT a full-cardinality
-    groupBy shuffle. phi is interpreted as its shortest decimal
-    rendering (phi=0.07 means exactly 7/100) and the threshold is
-    evaluated in exact rational arithmetic — no FP ceil drift.
-
-    Two passes. Pass 1 runs a Misra-Gries summary (k = ceil(1/phi)
-    counters by default) per partition inside mapInPandas: each Arrow
-    batch's exact value_counts (vectorized — never a per-row Python
-    loop) is itself an error-0 MG summary, merged into the running
-    one by add-then-prune (subtract the (k+1)-th largest weight,
-    drop <= 0 — the combine step of Agarwal et al., "Mergeable
-    Summaries", PODS'12, which keeps per-partition error <=
-    N_p/(k+1)). An item absent from EVERY partition summary therefore
-    has total frequency <= sum N_p/(k+1) = N/(k+1) < phi*N, so the
-    union of summary keys (<= k rows per partition, the only shuffle)
-    is a complete candidate set. Pass 2 broadcast-semi-joins the scan
-    against the candidates and counts exactly — the final output is a
-    pure function of the input multiset (partition-invariant even
-    though the intermediate summaries are not), so it oracle-matches
-    a plain GROUP BY ... HAVING run on any engine.
-
-    Scale shape: the full-agg alternative shuffles every distinct
-    value (billions of keys for token streams); this shuffles
-    <= k*partitions candidate rows + a broadcast, and the recount
-    aggregates only candidate rows surviving a map-side filter.
-    NULL values are ignored (they are never heavy-hitter candidates).
-    """
-    import math
-
-    import pandas as pd
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    if k is None:
-        k = math.ceil(1.0 / phi)
-    proj = df.select(F.col(value_col).alias("_v"))
-    # _v MUST be declared nullable: the NULL-keyed marker row rides
-    # this schema, and a non-nullable input column would let Catalyst
-    # constant-fold the isNull/isNotNull marker filters below
-    # (code-review finding)
-    out_schema = StructType(
-        [
-            StructField("_v", proj.schema["_v"].dataType, True),
-            StructField("_wt", LongType(), False),
-        ]
-    )
-
-    def _summarize(batches):
-        run = None  # pandas Series: value -> MG weight
-        n_p = 0
-        for pdf in batches:
-            vc = pdf["_v"].value_counts()  # exact per-batch summary
-            n_p += int(vc.sum())
-            run = vc if run is None else run.add(vc, fill_value=0)
-            if len(run) > k:
-                cut = run.nlargest(k + 1).iloc[-1]
-                run = run - cut
-                run = run[run > 0]
-        out = pd.DataFrame(
-            {"_v": [] if run is None else run.index, "_wt": [] if run is None else run.astype("int64").values}
-        )
-        # one NULL-keyed row carries this partition's element count so
-        # N never needs a second scan
-        marker = pd.DataFrame({"_v": [None], "_wt": [n_p]})
-        yield pd.concat([out, marker], ignore_index=True)
-
-    summ = proj.mapInPandas(_summarize, schema=out_schema)
-    from pyspark import StorageLevel
-
-    summ = summ.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        total = summ.filter(F.col("_v").isNull()).agg(
-            F.sum("_wt").alias("_n")
-        )
-        cand = summ.filter(F.col("_v").isNotNull()).select("_v").distinct()
-        counted = (
-            proj.join(F.broadcast(cand), "_v", "left_semi")
-            .groupBy("_v")
-            .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        )
-        # Threshold cnt >= ceil(phi*N) evaluated in EXACT rational
-        # arithmetic: phi is interpreted as its shortest decimal
-        # rendering (Fraction(str(phi)) — so phi=0.07 means exactly
-        # 7/100, not the binary float 0.07000000000000000693…), and
-        # for integer cnt, cnt >= ceil(p*N/q) ⟺ cnt*q >= p*N.
-        # Computing ceil(phi*N) in double drifts at boundaries
-        # (phi=0.07, N=100 → 7.000000000000001 → ceil 8, dropping
-        # exact-boundary items — round-7 ADVICE). decimal(38,0) holds
-        # p*N comfortably (decimal phis have tiny p, q).
-        from fractions import Fraction
-
-        frac = Fraction(str(phi))
-        p_num, q_den = frac.numerator, frac.denominator
-        out = (
-            counted.crossJoin(F.broadcast(total))
-            .filter(
-                F.col("cnt").cast("decimal(38,0)") * F.lit(q_den).cast("decimal(38,0)")
-                >= F.lit(p_num).cast("decimal(38,0)") * F.col("_n").cast("decimal(38,0)")
-            )
-            .select(F.col("_v").alias(value_col), "cnt")
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        summ.unpersist()

@@ -42,7 +42,6 @@ Scale design (100 TB):
 from __future__ import annotations
 
 import contextlib
-import json
 import os
 import shutil
 import uuid
@@ -67,8 +66,10 @@ from .table_log import (
     _check_expected_max,
     _remove_versions,
     _retained,
+    create_config,
     dataset_dir,
     resolve_entry,
+    save_config,
     snapshot_commit_ref,
     snapshot_max_commit,
     snapshot_read,
@@ -138,17 +139,15 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin, TableLog):
         :meth:`lookup`) — the layer for columns the layout is NOT
         clustered on, where zone maps prune nothing."""
         keys = [key] if isinstance(key, str) else list(key)
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, "_table.json"), "x") as f:
-            json.dump(
-                {
-                    "key": keys,
-                    "stat_cols": list(stat_cols or []),
-                    "bloom_col": bloom_col,
-                    "manifest_format": manifest_format,
-                },
-                f,
-            )
+        create_config(
+            path,
+            {
+                "key": keys,
+                "stat_cols": list(stat_cols or []),
+                "bloom_col": bloom_col,
+                "manifest_format": manifest_format,
+            },
+        )
         t = cls(df.sparkSession, path)
         t._commit(df)
         return t
@@ -337,13 +336,7 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin, TableLog):
         self._save_config()
 
     def _save_config(self) -> None:
-        # crash-atomic: write-then-replace — an in-place open('w')
-        # left a truncated _table.json on a mid-write crash, bricking
-        # every later constructor (ADVICE r10)
-        tmp = os.path.join(self.path, f"_table.json.tmp_{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w") as f:
-            json.dump(self._config(), f)
-        os.replace(tmp, os.path.join(self.path, "_table.json"))
+        save_config(self.path, self._config())
 
     def _config(self) -> dict:
         """The ``_table.json`` config this handle holds."""
@@ -542,9 +535,7 @@ class ManagedTable(_CompactMixin, _SchemaMixin, _TableReadMixin, TableLog):
         loudly — never return partial data)."""
         v = self.version()
         data_dir, dv_dir, appends = self._resolve(v)
-        os.makedirs(dst_path, exist_ok=True)
-        with open(os.path.join(dst_path, "_table.json"), "x") as f:
-            json.dump(self._config(), f)
+        create_config(dst_path, self._config())
         if dv_dir is not None:
             # the source's table-relative DV entries point into the
             # SOURCE's files — freeze them to absolute before

@@ -17,6 +17,8 @@ and needs no SparkSession:
   rule to;
 * one SQL↔Arrow type table (:data:`_TYPES`) the schema mixin, the
   sink and the change-feed source derive theirs from;
+* the ``_table.json`` config's one O_EXCL create
+  (:func:`create_config`) and one atomic replace (:func:`save_config`);
 * :class:`TableLog`: the ``_table.json`` config and its reader-feature
   gate, the per-version file universe (``_dv.json`` base / appends /
   dead), the txn high-water, the ``_vacuumed.json`` tombstone guard,
@@ -30,11 +32,12 @@ DataSources (``sources/table_batch.py``, ``table_cdf.py``,
 the log — engine or pyarrow — passes the same feature gate, raises the
 same named errors on vacuumed dirs, and every reference commit
 (including the Arrow sink's) publishes through the same retry loop.
-The log's own files — ``_commits``, ``_ckpts``, ``_abandoned``, the
-``_hw`` hint, ``_latest``, ``_dv.json`` and ``_vacuumed.json`` — are
-spelled, among the modules under ``operators/`` and ``sources/``, in
-this one only (``logstore.py`` writes the ``_latest`` pointer it owns;
-tests/test_table_log.py guards both packages). Some query modules
+The log's own files — ``_table.json``, ``_commits``, ``_ckpts``,
+``_abandoned``, the ``_hw`` hint, ``_latest``, ``_dv.json`` and
+``_vacuumed.json`` — are spelled, among the modules under
+``operators/``, ``sources/`` and ``streaming/``, in this one only
+(``logstore.py`` writes the ``_latest`` pointer it owns;
+tests/test_table_log.py guards the three packages). Some query modules
 outside them (``queries_snapshots.py``, ``queries_stream_state.py``,
 ``queries_protocol.py``) still build these paths by hand.
 """
@@ -1056,16 +1059,45 @@ def _tombstone(d: str, names: set[str]) -> None:
     os.replace(tmp, tp)
 
 
+def _config_file(path: str) -> str:
+    return os.path.join(path, "_table.json")
+
+
+def has_config(path: str) -> bool:
+    """Whether a managed table's ``_table.json`` config exists at ``path``."""
+    return os.path.isfile(_config_file(path))
+
+
+def create_config(path: str, config: dict) -> None:
+    """Write a NEW table's ``_table.json`` under ``path`` (made if
+    missing) with O_EXCL: a second concurrent create loses loudly,
+    the commit-record race applied to the table itself."""
+    os.makedirs(path, exist_ok=True)
+    with open(_config_file(path), "x") as f:
+        json.dump(config, f)
+
+
+def save_config(path: str, config: dict) -> None:
+    """Replace ``path``'s ``_table.json`` crash-atomically (tmp +
+    replace): an in-place write leaves a truncated config on a
+    mid-write crash, which bricks every later open."""
+    import uuid
+
+    tmp = f"{_config_file(path)}.tmp_{uuid.uuid4().hex[:8]}"
+    with open(tmp, "w") as f:
+        json.dump(config, f)
+    os.replace(tmp, _config_file(path))
+
+
 class TableLog:
     """A managed table's version log at ``path`` — config, records,
     file universes and the reference-commit publish, without Spark."""
 
     def __init__(self, path: str):
         self.path = path
-        cfg = os.path.join(path, "_table.json")
-        if not os.path.isfile(cfg):
+        if not has_config(path):
             raise ValueError(f"no managed table at {path} (missing _table.json)")
-        with open(cfg) as f:
+        with open(_config_file(path)) as f:
             meta = json.load(f)
         self.key: list[str] = meta["key"]
         self.stat_cols: list[str] = meta.get("stat_cols", [])

@@ -1,4 +1,4 @@
-"""Curation: domain mixing, row IDs, boilerplate, duplicated spans, BPE, DSIR.
+"""Curation: row IDs, boilerplate, duplicated spans, BPE, DSIR, intervals.
 
 Split from the former single-file queries_ext.py (round 7, verdict
 #7): registrations, names, and oracle SQL are unchanged — the
@@ -19,68 +19,6 @@ from .io import load  # noqa: F401
 from .session import ensure_harness_conf  # noqa: F401
 from .queries_common import register, register_extra, streams  # noqa: F401
 from .operators import dedup, multimodal, similarity, text  # noqa: F401
-
-
-# ---------------------------------------------------------------------------
-# Temperature-based domain mixing
-# ---------------------------------------------------------------------------
-
-
-@register_extra(
-    "x_sample_domain_mix",
-    oracle="""
-WITH c AS (
-  SELECT source AS domain, CAST(count(*) AS BIGINT) AS n,
-         CAST(floor(sqrt(CAST(count(*) AS DOUBLE)) * 1000000.0) AS BIGINT) AS wq
-  FROM documents GROUP BY source
-),
-t AS (SELECT CAST(sum(n) AS BIGINT) AS ntot, CAST(sum(wq) AS BIGINT) AS sumwq FROM c),
-th AS (
-  SELECT domain, n,
-         LEAST(CAST(1000000 AS BIGINT),
-               CAST(floor(
-                 (CAST(CAST(floor(0.5 * CAST(ntot AS DOUBLE)) AS BIGINT) AS DOUBLE)
-                  * CAST(wq AS DOUBLE))
-                 / (CAST(sumwq AS DOUBLE) * CAST(n AS DOUBLE))
-                 * 1000000.0) AS BIGINT)) AS keep_thr
-  FROM c, t
-)
-SELECT th.domain, th.n AS n_total, th.keep_thr,
-       CAST(sum(CASE WHEN CAST(concat('0x', substr(
-                md5(concat('mix:', CAST(d.doc_id AS VARCHAR))), 1, 15))
-                AS BIGINT) % 1000000 < th.keep_thr
-                THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
-FROM documents d JOIN th ON d.source = th.domain
-GROUP BY th.domain, th.n, th.keep_thr
-""",
-)
-def x_sample_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """α=0.5 temperature mixing of the documents corpus across
-    sources at a 50% overall budget: rare sources keep a larger
-    fraction than their natural share (the LLaMA/Pile flattening
-    move), realized as a P-row mixture manifest (auditable model
-    state) broadcast onto a pure hash filter. The whole mixture —
-    thresholds AND the kept set — is a deterministic function of the
-    per-source counts, which is what makes ablations reproducible;
-    the oracle recomputes both from scratch."""
-    ensure_harness_conf(spark)
-    from .operators import sketch
-
-    docs = load(spark, sf_dir, "documents")
-    plan = sketch.domain_mix_plan(docs, "source", budget_frac=0.5, alpha=0.5)
-    kept = sketch.sample_domain_mix(
-        docs, "doc_id", "source", budget_frac=0.5, alpha=0.5, plan=plan
-    )
-    kc = kept.groupBy(F.col("source").alias("domain")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_kept")
-    )
-    # left join: a domain whose threshold rounds to 0 keeps 0 rows
-    return plan.join(kc, "domain", "left").select(
-        "domain",
-        "n_total",
-        "keep_thr",
-        F.coalesce("n_kept", F.lit(0).cast("long")).alias("n_kept"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -347,100 +285,6 @@ def x_text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Fixed-k per-group deterministic sampling
-# ---------------------------------------------------------------------------
-
-
-@register_extra(
-    "x_sample_fixed_k",
-    oracle="""
-WITH h AS (
-  SELECT doc_id, source,
-         CAST(concat('0x', substr(md5(concat('fixk:', CAST(doc_id AS VARCHAR))),
-                                  1, 15)) AS BIGINT) AS hv
-  FROM documents
-),
-r AS (
-  SELECT doc_id, source,
-         row_number() OVER (PARTITION BY source ORDER BY hv, doc_id) AS rk
-  FROM h
-)
-SELECT source, doc_id FROM r WHERE rk <= 10
-""",
-)
-def x_sample_fixed_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exactly 10 documents per source by deterministic hash order —
-    the fixed-size sampler (inspection/eval carving) next to the
-    fraction-based ones. The per-batch bottom-k prune bounds what the
-    per-group window ever sorts; the oracle is the naive global
-    window the engine never pays in full."""
-    ensure_harness_conf(spark)
-    from .operators import sketch
-
-    docs = load(spark, sf_dir, "documents").select("doc_id", "source")
-    return sketch.sample_fixed_k(docs, "doc_id", ["source"], k=10).select(
-        "source", "doc_id"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Equi-depth histogram
-# ---------------------------------------------------------------------------
-
-
-@register_extra(
-    "x_hist_equidepth",
-    oracle="""
-WITH e AS (
-  SELECT event_type, value, event_id FROM events WHERE value IS NOT NULL
-),
-r AS (
-  SELECT event_type, value,
-         row_number() OVER (PARTITION BY event_type
-                            ORDER BY value, event_id) AS rn,
-         count(*) OVER (PARTITION BY event_type) AS n
-  FROM e
-)
-SELECT event_type,
-       CAST((rn - 1) * 8 // n + 1 AS BIGINT) AS bucket,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       min(value) AS lo,
-       max(value) AS hi
-FROM r GROUP BY event_type, (rn - 1) * 8 // n + 1
-""",
-)
-def x_hist_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """8-bucket equi-depth histogram of `value` per event type —
-    integer-rank bucket assignment (no float quantile drift), one
-    sort family per group plus one hash agg. Depth-balanced
-    boundaries are what an optimizer's statistics or a monitoring
-    dashboard's percentile bands actually want; complements the
-    equi-width x_hist_value row."""
-    ensure_harness_conf(spark)
-    from .operators.stats import equidepth_histogram
-
-    ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    return equidepth_histogram(
-        ev, ["event_type"], "value", q=8, tiebreak_cols=["event_id"]
-    )
-
-
-# ---------------------------------------------------------------------------
-# Embedding class centroids + cluster tightness
-# ---------------------------------------------------------------------------
-
-
-# ---------------------------------------------------------------------------
-# Multimodal audio: REAL WAV decode on the hot path
-# ---------------------------------------------------------------------------
-
-
-# ---------------------------------------------------------------------------
-# Streaming-maintained count-min sketch
-# ---------------------------------------------------------------------------
-
-
-# ---------------------------------------------------------------------------
 # Shard manifest (global prefix sum without the SinglePartition funnel)
 # ---------------------------------------------------------------------------
 
@@ -551,84 +395,6 @@ def x_interval_join_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Histogram quantile sketch
-# ---------------------------------------------------------------------------
-
-
-@register_extra(
-    "x_sketch_quantile_hist",
-    oracle="""
-WITH e AS (
-  SELECT event_type, CAST(value AS DOUBLE) AS v FROM events
-  WHERE value IS NOT NULL
-),
-mm AS (
-  SELECT event_type, min(v) AS mn, max(v) AS mx,
-         CAST(count(*) AS BIGINT) AS total
-  FROM e GROUP BY event_type
-),
-b AS (
-  SELECT e.event_type,
-         CASE WHEN mm.mx = mm.mn THEN 0
-              ELSE least(CAST(floor((e.v - mm.mn) * 256 / (mm.mx - mm.mn))
-                              AS BIGINT), 255) END AS bin,
-         mm.mn, mm.mx, mm.total
-  FROM e JOIN mm ON e.event_type = mm.event_type
-),
-h AS (
-  SELECT event_type, bin, CAST(count(*) AS BIGINT) AS n,
-         min(mn) AS mn, min(mx) AS mx, min(total) AS total
-  FROM b GROUP BY event_type, bin
-),
-c AS (
-  SELECT *, sum(n) OVER (PARTITION BY event_type ORDER BY bin) AS cum FROM h
-),
-q(qn, qd) AS (VALUES (1, 2), (9, 10), (99, 100)),
-r AS (
-  SELECT c.*, q.qn, q.qd, (total * qn + qd - 1) // qd AS rk FROM c, q
-),
-hit AS (
-  SELECT * FROM (
-    SELECT r.*, row_number() OVER (PARTITION BY event_type, qn, qd
-                                   ORDER BY bin) AS rn
-    FROM r WHERE cum >= rk
-  ) WHERE rn = 1
-)
-SELECT event_type,
-       CAST(qn AS INTEGER) AS q_num,
-       CAST(qd AS INTEGER) AS q_den,
-       round(mn + (CAST(bin AS DOUBLE)
-                   + CAST(rk - (cum - n) AS DOUBLE) / CAST(n AS DOUBLE))
-                  * ((mx - mn) / 256.0), 6) + 0.0 AS estimate,
-       total AS n
-FROM hit
-""",
-)
-def x_sketch_quantile_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """p50/p90/p99 of `value` per event type from a 256-bin mergeable
-    histogram sketch (counts ADD across partitions/days — the
-    distributed-merge property t-digest gets only by giving up
-    insertion-order determinism, which would break cross-engine
-    exactness). Two hash aggs build; the estimate walks ≤256
-    sketch rows per group. Error ≤ one bin width (pytest quantifies it
-    against exact rank quantiles); the ESTIMATE itself is
-    deterministic to the bit — same recipe as the HLL/CMS rows."""
-    ensure_harness_conf(spark)
-    from .operators import sketch
-
-    ev = load(spark, sf_dir, "events")
-    sk = sketch.quantile_hist_build(ev, "value", ["event_type"], bins=256)
-    return sketch.quantile_hist_estimate(
-        sk, [(1, 2), (9, 10), (99, 100)], ["event_type"], bins=256
-    )
-
-
-# ---------------------------------------------------------------------------
-# Distribution drift: population stability index between snapshots
-# ---------------------------------------------------------------------------
-
-
-# ---------------------------------------------------------------------------
 # Triangle counting (market-basket co-occurrence graph)
 # ---------------------------------------------------------------------------
 
@@ -680,11 +446,6 @@ def x_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
     )
     return triangle_counts(edges)
-
-
-# ---------------------------------------------------------------------------
-# Embedding covariance matrix (Arrow outer-product partials)
-# ---------------------------------------------------------------------------
 
 
 # ---------------------------------------------------------------------------

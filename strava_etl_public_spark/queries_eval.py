@@ -1,7 +1,5 @@
-"""Evaluation / experimentation / profiling queries: exact AUC, A/B
-CUPED, data profiling (column profiles, histograms, winsorize, MAD
-outliers, per-user trends), LOCF fill, and embedding diagnostics
-(centroids, covariance).
+"""Evaluation / profiling queries: exact AUC, histograms, LOCF fill,
+and embedding diagnostics (centroids, covariance).
 
 Split from queries_stats_text.py and queries_curation.py (round 9, verdict #6 file-size
 discipline): registrations, names, and oracle SQL are unchanged —
@@ -23,117 +21,6 @@ from .io import load  # noqa: F401
 from .session import ensure_harness_conf  # noqa: F401
 from .queries_common import register, register_extra, streams  # noqa: F401
 from .queries_common import _cos_sql, _dot_sql  # noqa: F401
-from .queries_stats_text import _EPOCH_US_DUCK  # noqa: F401
-
-
-_EPOCH_DUCK = "CAST(epoch_ns(ts) // 1000000000 AS BIGINT)"
-
-
-def _trend_oracle() -> str:
-    return f"""
-WITH base AS (
-  SELECT user_id,
-         {_EPOCH_DUCK} - (SELECT min({_EPOCH_DUCK}) FROM events) AS x,
-         CAST(round(value * 1000000, 0) AS BIGINT) AS y
-  FROM events
-  WHERE ts IS NOT NULL AND value IS NOT NULL
-),
-s AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-         sum(x) AS sx, sum(y) AS sy,
-         sum(CAST(x AS HUGEINT) * x) AS sxx,
-         sum(CAST(x AS HUGEINT) * y) AS sxy,
-         sum(CAST(y AS HUGEINT) * y) AS syy
-  FROM base GROUP BY user_id
-),
-t AS (
-  SELECT user_id, n,
-         CAST(n * sxy - CAST(sx AS HUGEINT) * sy AS DOUBLE) AS num,
-         CAST(n * sxx - CAST(sx AS HUGEINT) * sx AS DOUBLE) AS denx,
-         CAST(n * syy - CAST(sy AS HUGEINT) * sy AS DOUBLE) AS deny,
-         CAST(sx AS DOUBLE) AS sxd, CAST(sy AS DOUBLE) AS syd
-  FROM s
-)
-SELECT user_id, n,
-       CASE WHEN n >= 2 AND denx > 0
-            THEN round(num / denx / 1000000.0, 9) END AS slope,
-       CASE WHEN n >= 2 AND denx > 0
-            THEN round((syd / 1000000.0 - num / denx / 1000000.0 * sxd)
-                       / CAST(n AS DOUBLE), 6) END AS intercept,
-       CASE WHEN n >= 2 AND denx > 0 THEN
-         CASE WHEN deny > 0 THEN round(num * num / (denx * deny), 6) END
-       END AS r2
-FROM t
-"""
-
-
-@register_extra("x_trend_user_value", oracle=_trend_oracle())
-def x_trend_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user least-squares trend of event value over time — the
-    per-entity drift extraction stage (closed form, no iteration).
-    x is epoch seconds shifted to the corpus start (a 1-row broadcast
-    min keeps x² inside exact integer range); y quantizes to 6 dp.
-    Slope/intercept/r² derive from five exact integer sufficient
-    statistics through one canonical double expression, so the full
-    fit — not a tolerance band — hash-matches the oracle (DuckDB runs
-    the same integer math in HUGEINT, Spark in DECIMAL(38,0)).
-    ONE hash aggregate per the group keys; mergeable partials."""
-    ensure_harness_conf(spark)
-    from .operators import stats
-
-    ev = load(spark, sf_dir, "events")
-    ev = ev.withColumn("_es", ep.epoch_s(ev))
-    t0 = ev.agg(F.min("_es").alias("_t0"))
-    shifted = ev.crossJoin(F.broadcast(t0)).select(
-        "user_id", (F.col("_es") - F.col("_t0")).alias("x"), "value"
-    )
-    return stats.group_linreg(shifted, ["user_id"], "x", "value")
-
-
-_PROFILE_NUM = ("l_orderkey", "l_quantity", "l_extendedprice", "l_discount")
-
-
-_PROFILE_STR = ("l_returnflag", "l_linestatus")
-
-
-def _profile_oracle() -> str:
-    parts = []
-    for c in _PROFILE_NUM:
-        parts.append(f"""
-SELECT '{c}' AS col_name, CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(count(*) - count({c}) AS BIGINT) AS n_nulls,
-       CAST(count(DISTINCT {c}) AS BIGINT) AS n_distinct,
-       round(CAST(min({c}) AS DOUBLE), 6) AS min_num,
-       round(CAST(max({c}) AS DOUBLE), 6) AS max_num,
-       CAST(NULL AS VARCHAR) AS min_str, CAST(NULL AS VARCHAR) AS max_str
-FROM lineitem""")
-    for c in _PROFILE_STR:
-        parts.append(f"""
-SELECT '{c}' AS col_name, CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(count(*) - count({c}) AS BIGINT) AS n_nulls,
-       CAST(count(DISTINCT {c}) AS BIGINT) AS n_distinct,
-       CAST(NULL AS DOUBLE) AS min_num, CAST(NULL AS DOUBLE) AS max_num,
-       min({c}) AS min_str, max({c}) AS max_str
-FROM lineitem""")
-    return " UNION ALL ".join(parts)
-
-
-@register_extra("x_profile_lineitem", oracle=_profile_oracle())
-def x_profile_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-pass table profiling: per column — rows, nulls, exact
-    distinct count, typed min/max — as one row per column. The whole
-    profile is ONE aggregate over ONE scan (Spark's Expand handles
-    the multiple exact distincts); the oracle issues one scan per
-    column, which is exactly the naive plan this operator replaces.
-    At 100 TB this is the schema-drift / data-quality gate you run on
-    every ingest batch."""
-    ensure_harness_conf(spark)
-    from .operators import stats
-
-    li = load(spark, sf_dir, "lineitem")
-    return stats.profile_columns(
-        li, numeric_cols=_PROFILE_NUM, string_cols=_PROFILE_STR
-    )
 
 
 _HIST_BINS = 20
@@ -179,130 +66,6 @@ def x_hist_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return binned.groupBy("event_type", "bin").agg(
         F.count(F.lit(1)).cast("long").alias("n")
-    )
-
-
-@register_extra(
-    "x_winsorize_value",
-    oracle="""
-WITH v AS (SELECT event_type, event_id, value FROM events WHERE value IS NOT NULL),
-r AS (
-  SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY value, event_id) AS rn,
-         count(*) OVER (PARTITION BY event_type) AS n
-  FROM v
-),
-q AS (
-  SELECT *,
-         max(CASE WHEN rn = (n * 1 + 19) // 20 THEN value END)
-           OVER (PARTITION BY event_type) AS p_lo,
-         max(CASE WHEN rn = (n * 19 + 19) // 20 THEN value END)
-           OVER (PARTITION BY event_type) AS p_hi
-  FROM r
-),
-c AS (
-  SELECT event_type, n, p_lo, p_hi,
-         least(greatest(value, p_lo), p_hi) AS vw,
-         CASE WHEN value < p_lo THEN 1 ELSE 0 END AS lo_f,
-         CASE WHEN value > p_hi THEN 1 ELSE 0 END AS hi_f
-  FROM q
-)
-SELECT event_type, CAST(max(n) AS BIGINT) AS n,
-       max(p_lo) AS p05, max(p_hi) AS p95,
-       CAST(sum(lo_f) AS BIGINT) AS n_clamped_lo,
-       CAST(sum(hi_f) AS BIGINT) AS n_clamped_hi,
-       round(CAST(sum(CAST(round(vw * 1000000, 0) AS HUGEINT)) AS DOUBLE)
-             / 1000000.0 / CAST(max(n) AS DOUBLE), 6) AS mean_w
-FROM c GROUP BY event_type
-""",
-)
-def x_winsorize_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winsorized per-type value summary: every value clamped into its
-    own group's exact [p05, p95] (percentile_disc INTEGER rank math —
-    (n·a + b−1) div b, no float-p rank drift), then the robust mean
-    over the clamped values (6dp-quantized decimal sum — order-free).
-    Percentiles and clamp ride ONE sort family (stats.winsorize); the
-    aggregate is one more hash agg."""
-    ensure_harness_conf(spark)
-    from .operators import stats
-
-    ev = (
-        load(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull())
-        .select("event_type", "event_id", "value")
-    )
-    wz = stats.winsorize(
-        ev, ["event_type"], "value", tiebreak=["event_id"], lo=(1, 20), hi=(19, 20)
-    )
-    return wz.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.max("p_lo").alias("p05"),
-        F.max("p_hi").alias("p95"),
-        F.sum(F.when(F.col("clamped") == -1, 1).otherwise(0))
-        .cast("long")
-        .alias("n_clamped_lo"),
-        F.sum(F.when(F.col("clamped") == 1, 1).otherwise(0))
-        .cast("long")
-        .alias("n_clamped_hi"),
-        F.round(
-            F.sum(F.round(F.col("value_w") * 1000000, 0).cast("decimal(38,0)")).cast(
-                "double"
-            )
-            / F.lit(1000000.0)
-            / F.count(F.lit(1)).cast("double"),
-            6,
-        ).alias("mean_w"),
-    )
-
-
-@register_extra(
-    "x_outliers_mad",
-    oracle="""
-WITH v AS (SELECT event_type, event_id, value FROM events WHERE value IS NOT NULL),
-r1 AS (
-  SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY value, event_id) AS rn,
-         count(*) OVER (PARTITION BY event_type) AS n
-  FROM v
-),
-m AS (
-  SELECT *, max(CASE WHEN rn = (n * 1 + 1) // 2 THEN value END)
-              OVER (PARTITION BY event_type) AS med
-  FROM r1
-),
-d AS (SELECT event_type, event_id, value, n, med, abs(value - med) AS dev FROM m),
-r2 AS (
-  SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY dev, value, event_id) AS drn
-  FROM d
-),
-m2 AS (
-  SELECT *, max(CASE WHEN drn = (n * 1 + 1) // 2 THEN dev END)
-              OVER (PARTITION BY event_type) AS mad
-  FROM r2
-)
-SELECT event_type, CAST(max(n) AS BIGINT) AS n,
-       max(med) AS med, max(mad) AS mad,
-       CAST(sum(CASE WHEN dev > 3.0 * 1.4826 * mad THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_outliers
-FROM m2 GROUP BY event_type
-""",
-)
-def x_outliers_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust per-type outlier detection: |x − median| > 3·1.4826·MAD
-    with the median AND the MAD as exact percentile_disc rank picks —
-    the mean/stddev z-score alternative that outliers themselves
-    can't corrupt. Two sort families (value, then |x−med|) — the
-    honest exact cost; both medians are integer-rank math and the
-    deviation is one fixed double subtraction, so counts AND the
-    med/mad values hash-match the oracle."""
-    ensure_harness_conf(spark)
-    from .operators import stats
-
-    ev = (
-        load(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull())
-        .select("event_type", "event_id", "value")
-    )
-    return stats.mad_outliers(
-        ev, ["event_type"], "value", tiebreak=["event_id"], n_sigmas=3.0
     )
 
 
@@ -354,103 +117,6 @@ def x_locf_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v_filled").alias("value_filled"),
         F.col("v_was_filled").cast("long").alias("was_filled"),
     )
-
-
-@register_extra(
-    "x_ab_cuped",
-    oracle=f"""
-WITH e AS (
-  SELECT user_id, {_EPOCH_US_DUCK} AS us,
-         coalesce(CAST(round(value * 1000000, 0) AS HUGEINT),
-                  CAST(0 AS HUGEINT)) AS qv
-  FROM events
-),
-b AS (SELECT (min(us) + max(us)) // 2 AS cut FROM e),
-per AS (
-  SELECT user_id,
-         sum(CASE WHEN us < cut THEN qv ELSE CAST(0 AS HUGEINT) END) AS x,
-         sum(CASE WHEN us >= cut THEN qv ELSE CAST(0 AS HUGEINT) END) AS y
-  FROM e, b GROUP BY user_id
-),
-a AS (
-  SELECT x, y,
-         CASE WHEN CAST(concat('0x', substr(md5(concat('exp:',
-                   CAST(user_id AS VARCHAR))), 1, 15)) AS BIGINT) % 1000000
-                   < 500000 THEN 'A' ELSE 'B' END AS arm
-  FROM per
-),
-pooled AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n, sum(x) AS sx, sum(y) AS sy,
-         sum(x * x) AS sxx, sum(x * y) AS sxy
-  FROM a
-),
-th AS (
-  SELECT CASE WHEN n * sxx - sx * sx = 0 THEN 0.0
-              ELSE round(CAST(n * sxy - sx * sy AS DOUBLE)
-                         / CAST(n * sxx - sx * sx AS DOUBLE), 6) END AS theta,
-         round(CAST(sx AS DOUBLE) / CAST(n AS DOUBLE), 6) AS xbar_all
-  FROM pooled
-),
-arms AS (
-  SELECT arm, CAST(count(*) AS BIGINT) AS n_units,
-         sum(y) AS sy_a, sum(x) AS sx_a
-  FROM a GROUP BY arm
-)
-SELECT arm, n_units,
-       round(CAST(sy_a AS DOUBLE) / CAST(n_units AS DOUBLE), 6) AS mean_y,
-       th.theta AS theta,
-       round(round(CAST(sy_a AS DOUBLE) / CAST(n_units AS DOUBLE), 6)
-             - th.theta * (round(CAST(sx_a AS DOUBLE) / CAST(n_units AS DOUBLE), 6)
-                           - th.xbar_all), 6) AS mean_y_adjusted
-FROM arms, th
-""",
-)
-def x_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUPED experiment readout (Deng et al., WSDM'13) entirely
-    in-engine: users hash-split into two arms, pre-period value sum
-    (first half of the event-time range, micro-quantized) as the
-    covariate, post-period sum as the outcome; the pooled
-    θ = cov(x,y)/var(x) comes from DECIMAL-exact sufficient
-    statistics and the per-arm adjusted means follow one fixed
-    double expression tree — the complete variance-reduction readout
-    (the x_ab_mannwhitney companion with a continuous adjusted
-    metric), bit-portable and oracle-exact. The time cutoff is a
-    1-row broadcast (min+max div 2), not a driver action."""
-    ensure_harness_conf(spark)
-    from .operators.sketch import _hash60
-    from .operators.stats import cuped
-
-    ev = load(spark, sf_dir, "events")
-    q = ev.select(
-        "user_id",
-        ep.epoch_us(ev).alias("us"),
-        F.coalesce(
-            F.round(F.col("value") * 1000000, 0).cast("long"), F.lit(0)
-        ).alias("qv"),
-    )
-    bounds = q.agg(F.expr("(min(us) + max(us)) div 2").alias("cut"))
-    per = (
-        q.crossJoin(F.broadcast(bounds))
-        .groupBy("user_id")
-        .agg(
-            F.sum(F.when(F.col("us") < F.col("cut"), F.col("qv")).otherwise(0))
-            .cast("long")
-            .alias("x"),
-            F.sum(F.when(F.col("us") >= F.col("cut"), F.col("qv")).otherwise(0))
-            .cast("long")
-            .alias("y"),
-        )
-    )
-    armed = per.withColumn(
-        "arm",
-        F.when(
-            _hash60(F.concat(F.lit("exp:"), F.col("user_id").cast("string")))
-            % 1_000_000
-            < 500_000,
-            F.lit("A"),
-        ).otherwise(F.lit("B")),
-    )
-    return cuped(armed, "user_id", "x", "y", "arm")
 
 
 @register(

@@ -1,4 +1,4 @@
-"""In-engine ML, stats tests, JL projection, k-means/SemDeDup, geospatial.
+"""In-engine ML, fuzzy join, JL projection, k-means/SemDeDup, geospatial.
 
 Split from the former single-file queries_ext.py (round 7, verdict
 #7): registrations, names, and oracle SQL are unchanged — the
@@ -21,163 +21,7 @@ from .queries_common import register, register_extra, streams  # noqa: F401
 from .operators import dedup, multimodal, similarity, text  # noqa: F401
 from .queries_common import _cos_sql  # noqa: F401
 from .queries_dedup_sim import _ivf_oracle  # noqa: F401
-from .queries_sketch import _hll_oracle  # noqa: F401
 from .queries_stats_text import x_incremental_agg_merge  # noqa: F401
-from .queries_stream_state import _cms_users_oracle  # noqa: F401
-
-
-# ---------------------------------------------------------------------------
-# One-pass Poisson bootstrap confidence intervals
-# ---------------------------------------------------------------------------
-
-
-def _bootstrap_oracle(B: int = 64, tn: int = 1, td: int = 40) -> str:
-    from .operators.stats import _poisson1_thresholds
-
-    t = _poisson1_thresholds()
-    h = (
-        "CAST(concat('0x', substr(md5('boot' || ':' || CAST(r.b AS VARCHAR) "
-        "|| ':' || CAST(e.event_id AS VARCHAR)), 1, 15)) AS BIGINT)"
-    )
-    wcase = "CASE " + " ".join(
-        f"WHEN {h} < {t[k]} THEN {k}" for k in range(8)
-    ) + " ELSE 8 END"
-    return f"""
-WITH e AS (
-  SELECT event_type, event_id,
-         CAST(round(CAST(value AS DOUBLE) * 1000000, 0) AS BIGINT) AS vq
-  FROM events WHERE value IS NOT NULL
-),
-rep AS (
-  SELECT e.event_type, r.b, {wcase} AS w, e.vq
-  FROM e, unnest(generate_series(0, {B - 1})) AS r(b)
-),
-pr AS (
-  SELECT event_type, b,
-         sum(CAST(w AS HUGEINT) * vq) AS swv,
-         CAST(sum(w) AS BIGINT) AS sw
-  FROM rep GROUP BY event_type, b
-),
-m AS (
-  SELECT event_type, b,
-         round(CAST(swv AS DOUBLE) / CAST(sw AS DOUBLE) / 1000000.0, 6) AS mb
-  FROM pr WHERE sw > 0
-),
-rk AS (
-  SELECT event_type, mb,
-         row_number() OVER (PARTITION BY event_type ORDER BY mb, b) AS rn,
-         count(*) OVER (PARTITION BY event_type) AS nb
-  FROM m
-),
-ci AS (
-  SELECT event_type,
-         max(CASE WHEN rn = (nb * {tn} + {td - 1}) // {td} THEN mb END) + 0.0
-           AS ci_lo,
-         max(CASE WHEN rn = (nb * {td - tn} + {td - 1}) // {td} THEN mb END) + 0.0
-           AS ci_hi
-  FROM rk GROUP BY event_type
-),
-fl AS (
-  SELECT event_type,
-         round(CAST(sum(CAST(vq AS HUGEINT)) AS DOUBLE)
-               / CAST(count(*) AS DOUBLE) / 1000000.0, 6) AS mean,
-         CAST(count(*) AS BIGINT) AS n
-  FROM e GROUP BY event_type
-)
-SELECT fl.event_type, fl.mean, ci.ci_lo, ci.ci_hi, fl.n,
-       CAST({B} AS INTEGER) AS n_replicas
-FROM fl JOIN ci ON fl.event_type = ci.event_type
-"""
-
-
-@register_extra("x_bootstrap_ci", oracle=_bootstrap_oracle())
-def x_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """95% CI for mean(value) per event type via the one-pass Poisson
-    bootstrap (Chamandy et al. 2012): each row draws its own Poisson(1)
-    multiplicity per replica from an md5-inverted CDF (integer
-    thresholds shared with the oracle), so the resample never needs a
-    global view — the distributed answer to "error bars on a 100 TB
-    mean". 64 replicas, integer-exact sums, replica means and the
-    interval endpoints deterministic to the bit: rerunning anywhere
-    reproduces the identical CI (alertable, unlike RNG bootstraps)."""
-    ensure_harness_conf(spark)
-    from .operators.stats import bootstrap_mean_ci
-
-    ev = load(spark, sf_dir, "events")
-    return bootstrap_mean_ci(
-        ev, "event_id", "value", ["event_type"], n_replicas=64
-    )
-
-
-# ---------------------------------------------------------------------------
-# A/B testing: Mann-Whitney rank-sum
-# ---------------------------------------------------------------------------
-
-
-@register_extra(
-    "x_ab_mannwhitney",
-    oracle="""
-WITH e AS (
-  SELECT event_type,
-         CASE WHEN user_id % 2 = 0 THEN 'a' ELSE 'b' END AS c,
-         CAST(value AS DOUBLE) AS v
-  FROM events WHERE value IS NOT NULL
-),
-r AS (
-  SELECT event_type, c, v,
-         rank() OVER (PARTITION BY event_type ORDER BY v) AS rk,
-         count(*) OVER (PARTITION BY event_type, v) AS t
-  FROM e
-),
-ag AS (
-  SELECT event_type,
-         CAST(sum(CASE WHEN c = 'a' THEN 2 * rk + (t - 1) END) AS BIGINT) AS r2a,
-         CAST(sum(CASE WHEN c = 'a' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-         CAST(sum(CASE WHEN c = 'b' THEN 1 ELSE 0 END) AS BIGINT) AS n_b
-  FROM r GROUP BY event_type
-),
-tv AS (
-  SELECT event_type, CAST(sum(tc * tc * tc - tc) AS BIGINT) AS tie3
-  FROM (SELECT event_type, v, CAST(count(*) AS HUGEINT) AS tc
-        FROM e GROUP BY event_type, v)
-  GROUP BY event_type
-),
-s AS (
-  SELECT ag.event_type, ag.n_a, ag.n_b,
-         CAST(ag.r2a AS DOUBLE) / 2.0
-           - CAST(ag.n_a AS DOUBLE) * CAST(ag.n_a + 1 AS DOUBLE) / 2.0 AS u,
-         CAST(ag.n_a AS DOUBLE) * CAST(ag.n_b AS DOUBLE) / 2.0 AS mu,
-         CAST(ag.n_a AS DOUBLE) * CAST(ag.n_b AS DOUBLE) / 12.0
-           * (CAST(ag.n_a + ag.n_b + 1 AS DOUBLE)
-              - CAST(tv.tie3 AS DOUBLE)
-                / (CAST(ag.n_a + ag.n_b AS DOUBLE)
-                   * CAST(ag.n_a + ag.n_b - 1 AS DOUBLE))) AS var
-  FROM ag JOIN tv ON ag.event_type = tv.event_type
-)
-SELECT event_type, n_a, n_b,
-       round(u, 6) + 0.0 AS u_stat,
-       round(CASE WHEN var > 0 THEN (u - mu) / sqrt(var) END, 6) + 0.0 AS z_score
-FROM s
-""",
-)
-def x_ab_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mann-Whitney rank-sum test per event type between the even/odd
-    user cohorts — the nonparametric A/B significance test that
-    survives heavy-tailed metrics. Average-rank ties kept in exact
-    integers by doubling, tie-corrected normal approximation as one
-    fixed expression → the z-score is bit-identical across engines
-    (a rerunnable, alertable experiment readout). One sort family per
-    group + two hash aggs."""
-    ensure_harness_conf(spark)
-    from .operators.stats import mann_whitney
-
-    ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    e = ev.select(
-        "event_type",
-        F.when(F.col("user_id") % 2 == 0, "a").otherwise("b").alias("cohort"),
-        F.col("value").cast("double").alias("v"),
-    )
-    return mann_whitney(e, ["event_type"], "cohort", "v")
 
 
 # ---------------------------------------------------------------------------
@@ -384,54 +228,6 @@ def x_nb_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return nb_train_predict(
         load(spark, sf_dir, "documents"), "doc_id", "text", "lang", 0.8
     )
-
-
-# ---------------------------------------------------------------------------
-# Logistic-regression quality classifier (rows-only: sigmoid/exp is
-# libm-bound; reference-pinned in tests/test_stats.py like BPE)
-# ---------------------------------------------------------------------------
-
-
-@register_extra("x_quality_logreg")
-def x_quality_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train a linear (logistic) quality classifier in-engine —
-    English-vs-rest from the quality features — by full-batch GD with
-    exact-integer gradient sums (one bounded driver action per
-    iteration; weights are the only driver state), then score the
-    corpus at scan speed with the frozen weights. The fasttext-style
-    curation-filter workflow end-to-end. Deterministic across
-    partitionings/reruns (quantized gradient terms + 6dp weight steps;
-    pytest pins the exact weight trajectory against a single-process
-    reference). Output: weight vector rows + train accuracy."""
-    ensure_harness_conf(spark)
-    from .operators.stats import logreg_score, logreg_train
-    from .operators.text import quality_features
-
-    docs = load(spark, sf_dir, "documents")
-    qf = quality_features(docs, "doc_id", "text").join(
-        docs.select("doc_id", "lang"), "doc_id"
-    )
-    feat = qf.select(
-        "doc_id",
-        (F.col("n_tokens").cast("double") / 100.0).alias("f_len"),
-        (
-            F.col("stopword_hits").cast("double")
-            / F.greatest(F.col("n_tokens").cast("double"), F.lit(1.0))
-        ).alias("f_stop"),
-        F.col("quality_score").alias("f_q"),
-        (F.col("lang") == "en").cast("int").alias("y"),
-    )
-    w = logreg_train(feat, ["f_len", "f_stop", "f_q"], "y", iters=8, lr=0.5)
-    scored = logreg_score(feat, ["f_len", "f_stop", "f_q"], w)
-    acc = scored.agg(
-        (
-            F.sum((F.col("pred") == F.col("y")).cast("int")).cast("double")
-            / F.count(F.lit(1)).cast("double")
-        ).alias("acc")
-    ).collect()[0]["acc"]
-    rows = [(f"w{j}", float(wj)) for j, wj in enumerate(w)]
-    rows.append(("train_acc", round(acc, 6)))
-    return spark.createDataFrame(rows, "term STRING, value DOUBLE")
 
 
 # ---------------------------------------------------------------------------
@@ -908,86 +704,4 @@ def x_geo_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey",
         (F.col("e") % 1048576).cast("long").alias("nearest_suppkey"),
         F.expr("e div 1048576").cast("long").alias("dist2_micro"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Sketch union at the query level: merged half-sketches == whole sketch
-# ---------------------------------------------------------------------------
-
-
-@register_extra("x_sketch_hll_merge", oracle=_hll_oracle())
-def x_sketch_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HLL union proof at the query level: registers built on two
-    DISJOINT event halves merge by register-max, and the finished
-    estimate equals the whole-corpus sketch under the SAME oracle —
-    the property that lets 100 TB of per-day sketches roll up into
-    any ad-hoc window without touching raw data (the batch face of
-    the streaming-HLL state argument, like x_incremental_agg_merge
-    for algebraic aggs)."""
-    ensure_harness_conf(spark)
-    from .operators import sketch
-
-    ev = load(spark, sf_dir, "events")
-    bucket, rank = sketch.hll_terms(F.col("user_id"), b=9)
-
-    def regs(df: DataFrame) -> DataFrame:
-        return (
-            df.select("event_type", bucket.alias("_bkt"), rank.alias("_rk"))
-            .groupBy("event_type", "_bkt")
-            .agg(F.max("_rk").alias("_mj"))
-        )
-
-    r1 = regs(ev.filter(F.col("event_id") % 2 == 0))
-    r2 = regs(ev.filter(F.col("event_id") % 2 == 1))
-    merged = (
-        r1.unionByName(r2)
-        .groupBy("event_type", "_bkt")
-        .agg(F.max("_mj").alias("_mj"))
-    )
-    return sketch.finish_hll_registers(merged, ["event_type"], b=9)
-
-
-# ---------------------------------------------------------------------------
-# Dedup keep-list: the final curation output
-# ---------------------------------------------------------------------------
-
-
-@register_extra("x_sketch_cms_merge", oracle=_cms_users_oracle())
-def x_sketch_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CMS union proof at the query level (completing the mergeable-
-    sketch trio with x_sketch_hll_merge and x_incremental_agg_merge):
-    cell tables built on two disjoint event halves merge by ADDITION,
-    and heavy-hitter lookups against the merged sketch equal the
-    whole-corpus sketch under the same oracle — per-day hot-key
-    sketches roll up into any window without re-reading raw data."""
-    ensure_harness_conf(spark)
-    from .operators import sketch
-    from .operators.sketch import _cms_cells
-
-    ev = load(spark, sf_dir, "events")
-
-    def cells(df: DataFrame) -> DataFrame:
-        return (
-            df.select(F.explode(_cms_cells("user_id", 4, 1024)).alias("_e"))
-            .select(F.col("_e.r").alias("r"), F.col("_e.c").alias("c"))
-            .groupBy("r", "c")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        )
-
-    c1 = cells(ev.filter(F.col("event_id") % 2 == 0))
-    c2 = cells(ev.filter(F.col("event_id") % 2 == 1))
-    merged = (
-        c1.unionByName(c2).groupBy("r", "c").agg(F.sum("n").cast("long").alias("n"))
-    )
-    exact = ev.groupBy("user_id").agg(F.count(F.lit(1)).cast("long").alias("n_true"))
-    wr = W.orderBy(F.col("n_true").desc(), "user_id")
-    top = (
-        exact.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= 20)
-        .select(F.col("user_id").cast("string").alias("user_id"), "n_true")
-    )
-    est = sketch.cms_lookup(merged, top, "user_id", d=4, w=1024)
-    return top.join(est, "user_id").select(
-        F.col("user_id").cast("long").alias("user_id"), "n_true", "cms_count"
     )

@@ -123,13 +123,13 @@ QUERY_ORDER: tuple[str, ...] = (
     # no operator): the text family keeps FOUR official rows (lang_id,
     # quality, span_removal, hybrid_retrieval); the slot goes to the
     # round-11 LogStore-seam face below.
-    # sketches / deterministic sampling — x_sketch_hll_users and
-    # x_sample_hash_split demoted (second-wave r7 rotation; the latter
-    # later deleted by the extras census): the HLL family is certified
-    # by the merge/streaming extras, hash sampling (sample_by_hash) by
-    # the x_sim_topk_ivf_arrow headline and the fixed-k/stratified/
-    # weighted/domain-mix extras; slots freed for the curation
-    # operators a training pipeline runs first.
+    # sketches / deterministic sampling — the HLL distinct-count row and
+    # x_sample_hash_split demoted (second-wave r7 rotation), both later
+    # deleted by the extras census (the HLL sketch with its whole
+    # family): hash sampling (sample_by_hash) is certified by the
+    # x_sim_topk_ivf_arrow extra, which trains its IVF centroids on a
+    # hash sample; slots freed for the curation operators a training
+    # pipeline runs first.
     # x_curation_token_budget demoted (r12 rotation, verdict #3), later
     # deleted by the extras census: the curation family is certified by
     # the x_pipeline_curation official row, which composes budgeting

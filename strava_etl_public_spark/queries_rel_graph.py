@@ -1,4 +1,4 @@
-"""Graphs (PageRank, k-hop), file sources, stream-stream join, governance, KMV.
+"""Graphs (PageRank, k-hop), file sources, stream-stream join, governance.
 
 Split from the former single-file queries_ext.py (round 7, verdict
 #7): registrations, names, and oracle SQL are unchanged — the
@@ -374,121 +374,6 @@ def x_moments_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# CDC snapshot diff
-# ---------------------------------------------------------------------------
-
-
-# ---------------------------------------------------------------------------
-# KMV bottom-k sketch: distinct estimates + set operations
-# ---------------------------------------------------------------------------
-
-_KMV_K = 64
-_KMV_NUM = repr(float((_KMV_K - 1) * (1 << 60)))  # (k-1)·2^60, exact double
-
-_KMV_SKETCH_SQL = f"""
-h AS (
-  SELECT DISTINCT event_type,
-         CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS hv
-  FROM events WHERE user_id IS NOT NULL
-),
-r AS (
-  SELECT event_type, hv,
-         row_number() OVER (PARTITION BY event_type ORDER BY hv) AS rk
-  FROM h
-),
-s AS (SELECT * FROM r WHERE rk <= {_KMV_K})"""
-
-
-@register_extra(
-    "x_sketch_kmv",
-    oracle=f"""
-WITH {_KMV_SKETCH_SQL},
-ag AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n_seen,
-         max(CASE WHEN rk = {_KMV_K} THEN hv END) AS hk
-  FROM s GROUP BY event_type
-)
-SELECT event_type,
-       CAST(floor(CASE WHEN n_seen < {_KMV_K} THEN CAST(n_seen AS DOUBLE)
-                       ELSE {_KMV_NUM} / CAST(hk AS DOUBLE) END) AS BIGINT)
-         AS kmv_estimate,
-       n_seen
-FROM ag
-""",
-)
-def x_sketch_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KMV (bottom-k) distinct sketch: distinct users per event_type
-    estimated from the k=64 smallest md5 hashes. The set-operation-
-    capable sibling of the HLL row — bottom-k sketches union by
-    merging hash sets (see x_sketch_kmv_pairs for the intersection /
-    Jaccard face HLL fundamentally lacks). Deterministic to the bit:
-    integer hashes, one IEEE division, floor — same estimate in any
-    engine. Scale: per-Arrow-batch partial bottom-k prune before the
-    shuffle, so at most k longs per (group, partition) move."""
-    ensure_harness_conf(spark)
-    from .operators import sketch
-
-    ev = load(spark, sf_dir, "events")
-    sk = sketch.kmv_build(ev, "user_id", ["event_type"], k=_KMV_K)
-    return sketch.kmv_estimate(sk, ["event_type"], k=_KMV_K)
-
-
-@register_extra(
-    "x_sketch_kmv_pairs",
-    oracle=f"""
-WITH {_KMV_SKETCH_SQL},
-pr AS (
-  SELECT a.event_type AS g1, b.event_type AS g2
-  FROM (SELECT DISTINCT event_type FROM s) a,
-       (SELECT DISTINCT event_type FROM s) b
-  WHERE a.event_type < b.event_type
-),
-m AS (
-  SELECT pr.g1, pr.g2, s.hv,
-         max(CASE WHEN s.event_type = pr.g1 THEN 1 ELSE 0 END) AS in_a,
-         max(CASE WHEN s.event_type = pr.g2 THEN 1 ELSE 0 END) AS in_b
-  FROM pr JOIN s ON s.event_type IN (pr.g1, pr.g2)
-  GROUP BY pr.g1, pr.g2, s.hv
-),
-t AS (
-  SELECT *, row_number() OVER (PARTITION BY g1, g2 ORDER BY hv) AS rk FROM m
-),
-tk AS (SELECT * FROM t WHERE rk <= {_KMV_K}),
-ag AS (
-  SELECT g1, g2, CAST(count(*) AS BIGINT) AS n_union_seen,
-         CAST(sum(in_a * in_b) AS BIGINT) AS n_both,
-         max(CASE WHEN rk = {_KMV_K} THEN hv END) AS hk
-  FROM tk GROUP BY g1, g2
-)
-SELECT g1, g2, n_both, n_union_seen,
-       round(CAST(n_both AS DOUBLE) / CAST(n_union_seen AS DOUBLE), 6)
-         AS jaccard_est,
-       CAST(floor(CAST(n_both AS DOUBLE) / CAST(n_union_seen AS DOUBLE)
-                  * CASE WHEN n_union_seen < {_KMV_K}
-                         THEN CAST(n_union_seen AS DOUBLE)
-                         ELSE {_KMV_NUM} / CAST(hk AS DOUBLE) END) AS BIGINT)
-         AS intersection_est
-FROM ag
-""",
-)
-def x_sketch_kmv_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise audience-overlap estimates between event types from
-    their KMV sketches alone: Jaccard = shared fraction of the merged
-    bottom-k, intersection ≈ Jaccard · D(union) (Beyer et al.,
-    SIGMOD'07). The sketches are the ONLY input — k-bounded model
-    state, so the pairwise stage costs P²·k rows regardless of corpus
-    size. This is the set-operation capability that justifies carrying
-    KMV next to HLL (whose intersections via inclusion-exclusion lose
-    all precision on small overlaps)."""
-    ensure_harness_conf(spark)
-    from .operators import sketch
-
-    ev = load(spark, sf_dir, "events")
-    sk = sketch.kmv_build(ev, "user_id", ["event_type"], k=_KMV_K)
-    return sketch.kmv_pair_ops(sk, "event_type", k=_KMV_K)
-
-
-# ---------------------------------------------------------------------------
 # OHLC downsampling
 # ---------------------------------------------------------------------------
 
@@ -704,21 +589,6 @@ def x_join_cardinality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         top=10,
     )
-
-
-# ---------------------------------------------------------------------------
-# Lakehouse maintenance: small-file compaction + manifest data skipping
-# (round 8 — promote the test-only layout operators to oracle-gated rows)
-# ---------------------------------------------------------------------------
-
-# ---------------------------------------------------------------------------
-# TPC-H shape battery completion: the semi/anti/correlated-subquery planners
-# (Q4 EXISTS, Q13 outer-join distribution, Q16 NOT-IN anti + COUNT DISTINCT,
-#  Q17 correlated scalar aggregate, Q21 EXISTS + NOT EXISTS self-join,
-#  Q22 anti join against a global scalar).  Together with Q1/Q3/Q5/Q6/Q7/
-#  Q10/Q12/Q14/Q15/Q18/Q19 these close the relational-shape inventory a
-#  reference user would expect from a warehouse front door.
-# ---------------------------------------------------------------------------
 
 
 # ---------------------------------------------------------------------------

@@ -1,4 +1,4 @@
-"""Sketches (HLL/CMS/Bloom), corpus-filter pipeline, BM25, sampling.
+"""Bucketed/range/point-in-time joins, text chunking, skew, corpus filter.
 
 Split from the former single-file queries_ext.py (round 7, verdict
 #7): registrations, names, and oracle SQL are unchanged — the
@@ -22,176 +22,6 @@ from .operators import dedup, multimodal, similarity, text  # noqa: F401
 from .queries_common import _SH_SQL, _TK_SQL, _clusters_oracle  # noqa: F401
 from .queries_dedup_sim import x_pipeline_activity_e2e  # noqa: F401
 from .queries_text_mm_stream import _QUALITY_ORACLE, _lang_oracle  # noqa: F401
-
-
-# ---------------------------------------------------------------------------
-# Sketches
-# ---------------------------------------------------------------------------
-
-
-def _hll_oracle(b: int = 9) -> str:
-    from .operators import sketch
-
-    m = 1 << b
-    rem_bits = sketch.HASH_BITS - b
-    unit = 2 ** (rem_bits + 1)
-    alpha = 0.7213 / (1 + 1.079 / m)
-    num = repr(alpha * m * m * unit)  # shared double literal, bit-identical
-    small_m = repr(float(m))
-    thresh = repr(2.5 * m)
-    return f"""
-WITH h AS (
-  SELECT event_type,
-         CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS hv
-  FROM events
-),
-t AS (
-  SELECT event_type, hv % {m} AS bkt,
-         CASE WHEN (hv >> {b}) = 0 THEN {rem_bits + 1}
-              ELSE {rem_bits} - length(bin(hv >> {b})) + 1 END AS rk
-  FROM h
-),
-pb AS (SELECT event_type, bkt, max(rk) AS mj FROM t GROUP BY event_type, bkt),
-ag AS (
-  SELECT event_type,
-         SUM(CAST(1 AS BIGINT) << ({rem_bits + 1} - mj)) AS den_seen,
-         CAST(COUNT(*) AS BIGINT) AS nseen
-  FROM pb GROUP BY event_type
-),
-est AS (
-  SELECT event_type, nseen,
-         {num} / CAST(den_seen + ({m} - nseen) * CAST({unit} AS BIGINT) AS DOUBLE) AS raw
-  FROM ag
-)
-SELECT event_type,
-       CAST(floor(CASE WHEN raw <= {thresh} AND ({m} - nseen) > 0
-                       THEN {small_m} * ln({small_m} / CAST({m} - nseen AS DOUBLE))
-                       ELSE raw END) AS BIGINT) AS hll_estimate,
-       nseen AS n_buckets_seen
-FROM est
-"""
-
-
-@register_extra("x_sketch_hll_users", oracle=_hll_oracle())
-def x_sketch_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic HyperLogLog: distinct users per event_type from a
-    512-register sketch — md5-derived hashing and an integer-exact
-    harmonic denominator make the ESTIMATE itself bit-identical across
-    engines (built-in approx_count_distinct can never be cross-checked
-    this way). Two hash-aggs, map-side combined; the raw values are
-    never distinct-shuffled."""
-    ensure_harness_conf(spark)
-    from .operators import sketch
-
-    ev = load(spark, sf_dir, "events")
-    return sketch.hll_distinct(ev, "user_id", ["event_type"], b=9)
-
-
-def _cms_oracle(d: int = 4, w: int = 1024, k: int = 20) -> str:
-    def h(term: str, row: str) -> str:
-        return (
-            f"CAST(concat('0x', substr(md5('cms' || {row} || ':' || {term}), 1, 15)) "
-            f"AS BIGINT) % {w}"
-        )
-
-    return f"""
-WITH tk AS ({_TK_SQL}),
-tok AS (SELECT unnest(t) AS term FROM tk),
-exact AS (SELECT term, CAST(count(*) AS BIGINT) AS n_true FROM tok GROUP BY term),
-top AS (
-  SELECT term, n_true
-  FROM (SELECT term, n_true,
-               row_number() OVER (ORDER BY n_true DESC, term) AS rn
-        FROM exact)
-  WHERE rn <= {k}
-),
-rows_ AS (SELECT unnest(generate_series(0, {d - 1})) AS i),
-cms AS (
-  SELECT r.i AS r, {h('term', 'r.i')} AS c, CAST(count(*) AS BIGINT) AS n
-  FROM tok CROSS JOIN rows_ r
-  GROUP BY 1, 2
-)
-SELECT t.term, t.n_true, CAST(min(m.n) AS BIGINT) AS cms_count
-FROM top t CROSS JOIN rows_ r
-JOIN cms m ON m.r = r.i AND m.c = {h('t.term', 'r.i')}
-GROUP BY t.term, t.n_true
-"""
-
-
-@register_extra("x_sketch_cms_tokens", oracle=_cms_oracle())
-def x_sketch_cms_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min sketch heavy-hitter estimation: build a 4×1024 cell
-    sketch over the token stream (one tagged explode + one hash agg —
-    d·w cells regardless of vocabulary size, cells merge by addition),
-    then point-estimate the true top-20 tokens against it. Estimates
-    are deterministic (md5 row hashes) so the oracle reproduces every
-    cell and every min exactly; CMS never underestimates
-    (tests assert cms_count >= n_true)."""
-    ensure_harness_conf(spark)
-    from .operators import sketch
-
-    docs = load(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.explode(dedup.tokens("text")).alias("term")
-    )
-    exact = toks.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("n_true"))
-    wr = W.orderBy(F.col("n_true").desc(), "term")
-    top = (
-        exact.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= 20)
-        .select("term", "n_true")
-    )
-    cms = sketch.cms_build(toks, "term", d=4, w=1024)
-    est = sketch.cms_lookup(cms, top, "term", d=4, w=1024)
-    return top.join(est, "term").select("term", "n_true", "cms_count")
-
-
-def _strat_oracle() -> str:
-    hb = 1 << 60
-    t = {
-        "click": int(0.5 * hb),
-        "view": int(0.2 * hb),
-        "purchase": int(1.0 * hb),
-    }
-    default = int(0.05 * hb)
-    h = (
-        "CAST(concat('0x', substr(md5(concat('strat:', "
-        "CAST(event_id AS VARCHAR))), 1, 15)) AS BIGINT)"
-    )
-    return f"""
-SELECT event_type, CAST(count(*) AS BIGINT) AS n_kept
-FROM events
-WHERE {h} < CASE event_type
-              WHEN 'click' THEN CAST({t['click']} AS BIGINT)
-              WHEN 'view' THEN CAST({t['view']} AS BIGINT)
-              WHEN 'purchase' THEN CAST({t['purchase']} AS BIGINT)
-              ELSE CAST({default} AS BIGINT) END
-GROUP BY event_type
-"""
-
-
-@register_extra("x_sample_stratified", oracle=_strat_oracle())
-def x_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Class-balancing stratified sample (curation: downsample the
-    majority event classes, keep all purchases, near-drop the rest) —
-    a pure per-row hash filter with per-class thresholds, so the kept
-    SET is reproducible across engines/partitionings and the oracle
-    replicates the identical integer math. No shuffle, no per-class
-    passes; the only agg is the count that makes the result small."""
-    ensure_harness_conf(spark)
-    from .operators import sketch
-
-    ev = load(spark, sf_dir, "events")
-    kept = sketch.sample_stratified(
-        ev,
-        "event_id",
-        "event_type",
-        {"click": 0.5, "view": 0.2, "purchase": 1.0},
-        default=0.05,
-    )
-    return kept.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_kept")
-    )
 
 
 @register_extra(
@@ -745,204 +575,6 @@ def x_text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_harness_conf(spark)
     docs = load(spark, sf_dir, "documents")
     return text.bigram_lm_score(docs, "doc_id", "text")
-
-
-# ---------------------------------------------------------------------------
-# Bloom filter sketches (join pruning)
-# ---------------------------------------------------------------------------
-
-
-def _bloom_pos_sql(val: str, m: int, k: int) -> str:
-    """DuckDB list of the k bloom bit positions of ``val`` — mirrors
-    sketch._bloom_position_cols (same ONE-md5 Kirsch-Mitzenmacher
-    double hashing: h1 = hex[1:15], h2 = hex[17:31] forced odd,
-    pos_r = (h1 + r*h2) mod m)."""
-    h1 = f"CAST(concat('0x', substr(md5('bloom:' || {val}), 1, 15)) AS BIGINT)"
-    h2 = f"(CAST(concat('0x', substr(md5('bloom:' || {val}), 17, 15)) AS BIGINT) | 1)"
-    terms = ", ".join(f"({h1} + {r} * {h2}) % {m}" for r in range(k))
-    return f"[{terms}]"
-
-
-def _bloom_probe_oracle(m: int = 4096, k: int = 5) -> str:
-    return f"""
-WITH members AS (
-  SELECT DISTINCT o_custkey AS key FROM orders WHERE o_totalprice > 450000
-),
-bloom AS (
-  SELECT DISTINCT unnest({_bloom_pos_sql("CAST(key AS VARCHAR)", m, k)}) AS pos
-  FROM members
-),
-probes AS (
-  SELECT c_custkey AS key,
-         unnest({_bloom_pos_sql("CAST(c_custkey AS VARCHAR)", m, k)}) AS pos
-  FROM customer
-),
-hits AS (
-  SELECT p.key, count(b.pos) = {k} AS bloom_hit
-  FROM probes p LEFT JOIN bloom b USING (pos)
-  GROUP BY p.key
-)
-SELECT h.bloom_hit, m.key IS NOT NULL AS exact_hit,
-       CAST(count(*) AS BIGINT) AS n_keys
-FROM hits h LEFT JOIN members m USING (key)
-GROUP BY 1, 2
-"""
-
-
-@register_extra("x_sketch_bloom_probe", oracle=_bloom_probe_oracle())
-def x_sketch_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter membership sketch: build a m=4096/k=5 filter over
-    the big-spender customer set (custkeys holding a >450k order) and
-    probe EVERY customer, cross-tabbed against exact membership.
-
-    The (bloom_hit=true, exact_hit=false) cell is the measured
-    false-positive count at the classic (1-e^(-kn/m))^k rate; the
-    (false, true) cell is structurally empty — a bloom filter has no
-    false negatives, and the oracle hash-match proves every bit
-    position, not just the rates. m is deliberately undersized here to
-    make the FP tradeoff visible at fixture scale; bloom_prefilter
-    sizes m to n for the pruning use.
-
-    Scale: build is one explode + distinct over the member set (≤m
-    rows out whatever the cardinality, mergeable by union); probe
-    explodes keys ×k and broadcast-joins the position table — no
-    shuffle of the probed side beyond its own k-row groupBy."""
-    ensure_harness_conf(spark)
-    from .operators import sketch
-
-    members = (
-        load(spark, sf_dir, "orders")
-        .filter(F.col("o_totalprice") > 450000)
-        .select(F.col("o_custkey").alias("key"))
-        .distinct()
-    )
-    bloom = sketch.bloom_build(members, "key", m=4096, k=5)
-    probed = sketch.bloom_probe(
-        bloom,
-        load(spark, sf_dir, "customer").select(F.col("c_custkey").alias("key")),
-        "key",
-        m=4096,
-        k=5,
-    )
-    return (
-        probed.join(members.withColumn("_m", F.lit(1)), "key", "left")
-        .groupBy("bloom_hit", F.col("_m").isNotNull().alias("exact_hit"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_keys"))
-    )
-
-
-def _bloom_prefilter_oracle(m: int = 1 << 18, k: int = 5) -> str:
-    return f"""
-WITH hot AS (
-  SELECT o_orderkey FROM orders WHERE o_totalprice > 250000
-),
-bloom AS (
-  SELECT DISTINCT unnest({_bloom_pos_sql("CAST(o_orderkey AS VARCHAR)", m, k)}) AS pos
-  FROM hot
-),
-probes AS (
-  SELECT l_orderkey,
-         unnest({_bloom_pos_sql("CAST(l_orderkey AS VARCHAR)", m, k)}) AS pos
-  FROM (SELECT DISTINCT l_orderkey FROM lineitem)
-),
-hitkeys AS (
-  SELECT p.l_orderkey
-  FROM probes p LEFT JOIN bloom b USING (pos)
-  GROUP BY p.l_orderkey HAVING count(b.pos) = {k}
-)
-SELECT l.l_returnflag,
-       CAST(count(*) AS BIGINT) AS n_bloom_kept,
-       CAST(count(h.o_orderkey) AS BIGINT) AS n_true
-FROM lineitem l
-JOIN hitkeys USING (l_orderkey)
-LEFT JOIN hot h ON l.l_orderkey = h.o_orderkey
-GROUP BY l.l_returnflag
-"""
-
-
-@register_extra("x_sketch_bloom_prefilter", oracle=_bloom_prefilter_oracle())
-def x_sketch_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom join-pruning: the 100 TB use of the sketch. A filter
-    built on the dimension side's join keys (hot orders) prunes the
-    fact table (lineitem) at SCAN SPEED — no shuffle, no semi-join —
-    before the exact join runs on the survivors. Per returnflag:
-    rows the bloom kept vs rows truly joining; the gap is the
-    false-positive carryover the exact join still removes, bounded by
-    (1-e^(-kn/m))^k with m sized to n (2^18 bits = a 32 KiB broadcast
-    bitmap — the whole point: 100 TB pruned by 32 KiB).
-
-    Spark shape: position table folded to ≤m/64 bit-or words in
-    Spark, collected as bounded model state, broadcast as a numpy
-    bitmap; JVM-side md5 positions + one Arrow-batched vectorized
-    bit-gather per batch (sketch.bloom_prefilter). The oracle
-    recomputes every bit position and the exact join."""
-    ensure_harness_conf(spark)
-    from .operators import sketch
-
-    m, k = 1 << 18, 5
-    hot = (
-        load(spark, sf_dir, "orders")
-        .filter(F.col("o_totalprice") > 250000)
-        .select("o_orderkey")
-    )
-    bloom = sketch.bloom_build(hot, "o_orderkey", m=m, k=k)
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_returnflag")
-    kept = sketch.bloom_prefilter(li, bloom, "l_orderkey", m=m, k=k)
-    return (
-        kept.join(
-            F.broadcast(hot.withColumn("_h", F.lit(1))),
-            kept["l_orderkey"] == hot["o_orderkey"],
-            "left",
-        )
-        .groupBy("l_returnflag")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_bloom_kept"),
-            F.count("_h").cast("long").alias("n_true"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Exact heavy hitters (Misra-Gries candidate screen + exact recount)
-# ---------------------------------------------------------------------------
-
-
-@register_extra(
-    "x_sketch_heavy_hitters",
-    oracle="""
-WITH tok AS (
-  SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9_]+')) AS t
-  FROM documents
-),
-n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM tok)
-SELECT t AS token, CAST(count(*) AS BIGINT) AS cnt
-FROM tok, n
-GROUP BY t, n.n
--- exact rational threshold: cnt >= ceil(phi*N) for integer cnt is
--- cnt*q >= p*N with phi = 0.002 = 1/500 exactly (shortest-decimal
--- interpretation, mirroring frequent_items_exact's Fraction(str(phi)))
-HAVING CAST(count(*) AS HUGEINT) * 500 >= CAST(1 AS HUGEINT) * n.n
-""",
-)
-def x_sketch_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact phi=0.002 heavy-hitter tokens over the corpus token
-    stream via the two-pass Misra-Gries screen (operators/sketch.py
-    frequent_items_exact): per-partition k=500-counter summaries give
-    a provably complete candidate set (union error < N/(k+1) < phi*N),
-    then a broadcast-semi-joined exact recount — the output is the
-    same multiset a full GROUP BY ... HAVING would produce, without
-    shuffling the full distinct-token cardinality. The scale
-    counterpart of x_text_vocab_topk's exact full agg."""
-    ensure_harness_conf(spark)
-    from .operators.dedup import tokens
-    from .operators.sketch import frequent_items_exact
-    from .io import fan_out
-
-    docs = load(spark, sf_dir, "documents")
-    tok = fan_out(docs).select(
-        F.explode(tokens(F.col("text"))).alias("token")
-    )
-    return frequent_items_exact(tok, "token", phi=0.002)
 
 
 @register(

@@ -1,4 +1,4 @@
-"""Dataset statistics, text statistics, PQ ANN, incremental maintenance.
+"""Text statistics and retrieval, PQ ANN, incremental maintenance.
 
 Split from the former single-file queries_ext.py (round 7, verdict
 #7): registrations, names, and oracle SQL are unchanged — the
@@ -21,44 +21,6 @@ from .queries_common import register, register_extra, streams  # noqa: F401
 from .operators import dedup, multimodal, similarity, text  # noqa: F401
 from .queries_common import _TK_SQL, _cos_sql, _dot_sql  # noqa: F401
 from .queries_text_mm_stream import _QUALITY_ORACLE  # noqa: F401
-
-
-# ---------------------------------------------------------------------------
-# Importance-weighted sampling (curation)
-# ---------------------------------------------------------------------------
-
-_WEIGHTED_THRESH = (
-    "CAST(floor(quality_score * 1152921504606846976.0) AS BIGINT)"  # 2^60
-)
-
-
-@register_extra(
-    "x_sample_weighted",
-    oracle=f"""
-WITH qual AS ({_QUALITY_ORACLE})
-SELECT doc_id, quality_score
-FROM qual
-WHERE CAST(concat('0x', substr(md5('curate:' || CAST(doc_id AS VARCHAR)), 1, 15))
-           AS BIGINT) < {_WEIGHTED_THRESH}
-""",
-)
-def x_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-weighted document sampling: each doc survives with
-    probability equal to its OWN quality score (soft curation — keeps
-    some low-quality text for diversity instead of a hard cutoff,
-    upsamples clean text). Same deterministic md5-threshold math as
-    the uniform/stratified samplers, so the kept SET is reproducible
-    across engines and partitionings and the oracle reproduces it
-    row-for-row. Pure filter after the quality projection — scan
-    speed, no shuffle."""
-    ensure_harness_conf(spark)
-    from .operators import sketch
-
-    docs = load(spark, sf_dir, "documents")
-    q = text.quality_features(docs, "doc_id", "text").select(
-        "doc_id", "quality_score"
-    )
-    return sketch.sample_weighted(q, "doc_id", "quality_score", salt="curate")
 
 
 # ---------------------------------------------------------------------------
@@ -139,11 +101,7 @@ def x_text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Dataset statistics: per-group trend fit, one-pass profiling
-# ---------------------------------------------------------------------------
-
-# ---------------------------------------------------------------------------
-# PMI collocations, FK audit, histograms
+# PMI collocations
 # ---------------------------------------------------------------------------
 
 
@@ -194,52 +152,6 @@ def x_text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_harness_conf(spark)
     docs = load(spark, sf_dir, "documents")
     return text.pmi_collocations(docs, "doc_id", "text", min_count=5, k=50)
-
-
-@register_extra(
-    "x_audit_fk_orphans",
-    oracle="""
-SELECT 'lineitem->orders' AS fk, CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(sum(CASE WHEN o.o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_orphans
-FROM lineitem l LEFT JOIN (SELECT DISTINCT o_orderkey FROM orders) o
-  ON l.l_orderkey = o.o_orderkey
-UNION ALL
-SELECT 'orders->customer', CAST(count(*) AS BIGINT),
-       CAST(sum(CASE WHEN c.c_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-FROM orders o LEFT JOIN (SELECT DISTINCT c_custkey FROM customer) c
-  ON o.o_custkey = c.c_custkey
-UNION ALL
-SELECT 'customer->nation', CAST(count(*) AS BIGINT),
-       CAST(sum(CASE WHEN n.n_nationkey IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-FROM customer c LEFT JOIN (SELECT DISTINCT n_nationkey FROM nation) n
-  ON c.c_nationkey = n.n_nationkey
-""",
-)
-def x_audit_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Referential-integrity audit across the FK chain
-    lineitem→orders→customer→nation: per edge, total child rows and
-    rows whose parent key is missing — the data-quality gate every
-    warehouse ingest runs. Each edge is one LEFT join against the
-    DISTINCT parent keys; parent key sets are dimension-sized, so
-    Spark broadcasts them (the fact side never shuffles) — at 100 TB
-    this is three scan-speed probes, not three shuffles."""
-    ensure_harness_conf(spark)
-    from .operators.stats import fk_orphans as edge
-
-    li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    nation = load(spark, sf_dir, "nation")
-    return (
-        edge("lineitem->orders", li, "l_orderkey", orders, "o_orderkey")
-        .unionAll(edge("orders->customer", orders, "o_custkey", cust, "c_custkey"))
-        .unionAll(edge("customer->nation", cust, "c_nationkey", nation, "n_nationkey"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# Robust statistics: winsorization, MAD outliers
-# ---------------------------------------------------------------------------
 
 
 # ---------------------------------------------------------------------------
@@ -526,10 +438,6 @@ def x_ts_ewma_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Product analytics: LOCF fill, running distinct, cohorts, funnel
-# ---------------------------------------------------------------------------
-
-# ---------------------------------------------------------------------------
 # Hybrid retrieval: BM25 + dense cosine, reciprocal-rank fusion
 # ---------------------------------------------------------------------------
 
@@ -696,7 +604,7 @@ def x_text_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# CUPED experiment readout
+# Trailing-window features
 # ---------------------------------------------------------------------------
 
 _EPOCH_US_DUCK = "CAST(epoch_ns(ts) // 1000 AS BIGINT)"

@@ -1,6 +1,5 @@
-"""Streaming sink / state queries: streaming HLL and CMS sketch
-maintenance and the ManagedTable streaming sinks and sources (MERGE,
-CDF, Arrow and JVM append, multi-writer).
+"""Streaming sink / state queries: the ManagedTable streaming sinks
+and sources (MERGE, CDF, Arrow and JVM append, multi-writer).
 
 Split from queries_sketch.py and queries_curation.py (round 9, verdict #6 file-size
 discipline): registrations, names, and oracle SQL are unchanged —
@@ -21,123 +20,7 @@ from .functions import epoch as ep  # noqa: F401
 from .io import load  # noqa: F401
 from .session import ensure_harness_conf  # noqa: F401
 from .queries_common import register, register_extra, streams  # noqa: F401
-from .queries_sketch import _hll_oracle  # noqa: F401
 from .queries_text_mm_stream import _run_stream, _stage_events_dir  # noqa: F401
-
-
-@register_extra("x_stream_hll_users", oracle=_hll_oracle())
-def x_stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The HLL sketch maintained BY THE STREAM: the register table
-    (max rank per (event_type, bucket)) is the streaming aggregation's
-    state — one stateful agg, the only kind streaming allows — and the
-    harmonic estimate is finished at read time over the 512-register
-    table (sketch.finish_hll_registers; the sketch-serving split).
-    Register maxima are order-free, so micro-batch slicing cannot
-    change a single register and the estimate equals the batch
-    x_sketch_hll_users bit-for-bit — same oracle."""
-    ensure_harness_conf(spark)
-    import shutil
-
-    from .operators import sketch
-    from .streaming.ingest import EVENTS_SCHEMA
-
-    stage = _stage_events_dir(spark, sf_dir)
-    try:
-        stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(stage)
-        bucket, rank = sketch.hll_terms(F.col("user_id"), b=9)
-        regs = (
-            stream.select("event_type", bucket.alias("_bkt"), rank.alias("_rk"))
-            .groupBy("event_type", "_bkt")
-            .agg(F.max("_rk").alias("_mj"))
-        )
-        reg_table = _run_stream(spark, regs, "complete")
-        return sketch.finish_hll_registers(
-            reg_table, ["event_type"], b=9
-        ).localCheckpoint()
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-
-
-def _cms_users_oracle(d: int = 4, w: int = 1024, k: int = 20) -> str:
-    def h(term: str, row: str) -> str:
-        return (
-            f"CAST(concat('0x', substr(md5('cms' || {row} || ':' || {term}), 1, 15)) "
-            f"AS BIGINT) % {w}"
-        )
-
-    return f"""
-WITH ev AS (SELECT CAST(user_id AS VARCHAR) AS term FROM events),
-exact AS (SELECT term, CAST(count(*) AS BIGINT) AS n_true FROM ev GROUP BY term),
-top AS (
-  SELECT term, n_true
-  FROM (SELECT term, n_true,
-               row_number() OVER (ORDER BY n_true DESC, CAST(term AS BIGINT)) AS rn
-        FROM exact)
-  WHERE rn <= {k}
-),
-rows_ AS (SELECT unnest(generate_series(0, {d - 1})) AS i),
-cms AS (
-  SELECT r.i AS r, {h('term', 'r.i')} AS c, CAST(count(*) AS BIGINT) AS n
-  FROM ev CROSS JOIN rows_ r
-  GROUP BY 1, 2
-)
-SELECT CAST(t.term AS BIGINT) AS user_id, t.n_true,
-       CAST(min(m.n) AS BIGINT) AS cms_count
-FROM top t CROSS JOIN rows_ r
-JOIN cms m ON m.r = r.i AND m.c = {h('t.term', 'r.i')}
-GROUP BY t.term, t.n_true
-"""
-
-
-@register_extra("x_stream_cms_users", oracle=_cms_users_oracle())
-def x_stream_cms_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The count-min sketch maintained BY THE STREAM: the d×w cell
-    table is the streaming aggregation's state (cells are SUMS —
-    order-free and micro-batch-slicing-invariant, the same mergeable-
-    state argument as the streaming HLL), heavy-hitter lookups happen
-    at read time against the final cell table (the sketch-serving
-    split). Estimates equal the batch sketch bit-for-bit under the
-    same oracle; at 100 TB/day this is the bounded-memory way to track
-    hot keys on an unbounded stream."""
-    ensure_harness_conf(spark)
-    import shutil
-
-    from .operators import sketch
-    from .operators.sketch import _cms_cells
-    from .streaming.ingest import EVENTS_SCHEMA
-
-    stage = _stage_events_dir(spark, sf_dir)
-    try:
-        stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(stage)
-        cells = (
-            stream.select(F.explode(_cms_cells("user_id", 4, 1024)).alias("_e"))
-            .select(F.col("_e.r").alias("r"), F.col("_e.c").alias("c"))
-            .groupBy("r", "c")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        )
-        cms = _run_stream(spark, cells, "complete")
-        ev = load(spark, sf_dir, "events")
-        exact = ev.groupBy("user_id").agg(
-            F.count(F.lit(1)).cast("long").alias("n_true")
-        )
-        wr = W.orderBy(F.col("n_true").desc(), "user_id")
-        top = (
-            exact.withColumn("rn", F.row_number().over(wr))
-            .filter(F.col("rn") <= 20)
-            .select(F.col("user_id").cast("string").alias("user_id"), "n_true")
-        )
-        est = sketch.cms_lookup(cms, top, "user_id", d=4, w=1024)
-        return (
-            top.join(est, "user_id")
-            .select(
-                F.col("user_id").cast("long").alias("user_id"),
-                "n_true",
-                "cms_count",
-            )
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
 
 
 @register_extra(

@@ -274,22 +274,18 @@ def table_cdf_tail(
     is DV ops/appends (the physical change files), falling back to the
     snapshot diff across copy commits. Groups whose row count reaches
     zero are dropped (exact retraction, not tombstones)."""
-    import json as _json
-    import os
-
     from pyspark.sql import functions as F
 
     from ..operators.table import ManagedTable
+    from ..operators.table_log import create_config, has_config
 
     spark = src.spark
     cur = src.version()
     n_batches = 0
-    if not os.path.isfile(os.path.join(out_path, "_table.json")):
+    if not has_config(out_path):
         # initial snapshot batch: the aggregate of the EARLIEST
         # consumable version, marked as consumed-through that version
-        os.makedirs(out_path, exist_ok=True)
-        with open(os.path.join(out_path, "_table.json"), "x") as f:
-            _json.dump({"key": [group_col], "stat_cols": []}, f)
+        create_config(out_path, {"key": [group_col], "stat_cols": []})
         out = ManagedTable(spark, out_path)
         init = (
             src.read(version=1)

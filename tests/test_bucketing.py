@@ -95,35 +95,3 @@ def test_bucketed_join_matches_plain_join(spark, bucketed_pair):
         .reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(got, want)
-
-
-def test_stratified_sample_is_deterministic_subset(spark):
-    from strava_etl_public_spark.operators.sketch import (
-        sample_by_hash,
-        sample_stratified,
-    )
-
-    df = spark.range(0, 5000).select(
-        F.col("id"),
-        F.when(F.col("id") % 3 == 0, "a")
-        .when(F.col("id") % 3 == 1, "b")
-        .otherwise("c")
-        .alias("cls"),
-    )
-    kept = sample_stratified(
-        df, "id", "cls", {"a": 0.5, "b": 1.0}, default=0.0, salt="sample"
-    )
-    out = kept.groupBy("cls").count().toPandas().set_index("cls")["count"].to_dict()
-    assert out.get("b", 0) == df.filter("cls = 'b'").count()  # keep-all
-    assert "c" not in out  # default 0.0 drops the class entirely
-    # class-a keeps EXACTLY the same ids the uniform 50% sampler keeps
-    # (same salt, same hash math) — stratification only switches the
-    # threshold per class, it never redraws
-    uni = set(
-        r.id
-        for r in sample_by_hash(df.filter("cls = 'a'"), "id", 0.5, salt="sample")
-        .select("id")
-        .collect()
-    )
-    got = set(r.id for r in kept.filter("cls = 'a'").select("id").collect())
-    assert got == uni and 0.4 < len(got) / df.filter("cls = 'a'").count() < 0.6

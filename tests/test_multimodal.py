@@ -158,7 +158,7 @@ def test_codec_probe_and_gating(spark):
         decode_image,
     )
 
-    assert set(CODECS) == {"pil", "pyav", "ffmpeg", "png_stdlib"}
+    assert set(CODECS) == {"pil", "png_stdlib"}
     assert CODECS["png_stdlib"] is True  # stdlib decoder is always live
     docs = spark.createDataFrame(pd.DataFrame({"doc_id": [1], "text": ["x"]}))
     b = attach_binary(docs, "doc_id", "text")

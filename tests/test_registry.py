@@ -45,9 +45,6 @@ ORACLE_EXEMPT_EXTRAS = {
     # reference trainer in tests/test_text.py::test_bpe_train_*
     "x_text_bpe_vocab",
     "x_text_bpe_encode",
-    # sigmoid/exp is libm-bound; weight trajectory pinned against a
-    # single-process reference in tests/test_stats.py::test_logreg_*
-    "x_quality_logreg",
     # perceptual fingerprints run real codecs + DCT/FFT kernels — past
     # what a SQL oracle can express; blocked==bruteforce pair
     # exactness, planted-twin recall, and the invariance arguments are

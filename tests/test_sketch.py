@@ -1,45 +1,9 @@
-"""Deterministic-HLL sketch tests: accuracy within the theoretical
-error band, determinism across partitionings, and small-range linear
-counting."""
+"""md5 hash helpers: stable splits and samples, the bloom position
+guard, and token-budget allocation invariants."""
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import functions as F
-
-from strava_etl_public_spark.operators.sketch import hll_distinct
-
-
-def test_hll_accuracy_and_determinism(spark, sf_dir):
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    est = hll_distinct(ev, "user_id", ["event_type"], b=9).toPandas()
-    exact = (
-        ev.groupBy("event_type")
-        .agg(F.countDistinct("user_id").alias("x"))
-        .toPandas()
-    )
-    j = est.merge(exact, on="event_type")
-    # 512 registers -> standard error ~1.04/sqrt(512) = 4.6%; allow 3 sigma
-    assert ((j.hll_estimate - j.x).abs() / j.x <= 0.15).all(), j
-    # determinism: estimate is a function of the SET, not the partitioning
-    est2 = (
-        hll_distinct(ev.repartition(17), "user_id", ["event_type"], b=9)
-        .toPandas()
-        .sort_values("event_type")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(
-        est.sort_values("event_type").reset_index(drop=True), est2
-    )
-
-
-def test_hll_small_range_linear_counting(spark):
-    df = spark.createDataFrame(
-        pd.DataFrame({"v": [f"val{i}" for i in range(20)] * 3})
-    )
-    est = hll_distinct(df, "v", [], b=9).first()
-    # linear counting keeps tiny cardinalities near-exact
-    assert abs(est["hll_estimate"] - 20) <= 1
 
 
 def test_hash_split_stable_and_disjoint(spark, sf_dir):
@@ -63,309 +27,13 @@ def test_hash_split_stable_and_disjoint(spark, sf_dir):
     assert ids1 != ids2
 
 
-def test_cms_overestimates_never_under(spark):
-    """CMS point estimates are >= true counts always, and exact when
-    the sketch is sparse enough that the min row has no collision."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from strava_etl_public_spark.operators.sketch import cms_build, cms_lookup
-
-    vals = [f"tok{i}" for i in range(50) for _ in range(i % 7 + 1)]
-    df = spark.createDataFrame(pd.DataFrame({"v": vals}))
-    truth = df.groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("n_true"))
-    cms = cms_build(df, "v", d=4, w=1024)
-    est = cms_lookup(cms, truth.select("v"), "v", d=4, w=1024)
-    out = truth.join(est, "v").toPandas()
-    assert (out.cms_count >= out.n_true).all()
-    # 50 distinct keys into 4x1024 cells: overwhelmingly likely at
-    # least the min row is collision-free per key -> exact estimates
-    assert (out.cms_count == out.n_true).all()
-    # sketch size is d*w cells max, independent of input
-    assert cms.count() <= 4 * 1024
-
-
-def test_cms_unseen_key_estimates_zero(spark):
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from strava_etl_public_spark.operators.sketch import cms_build, cms_lookup
-
-    df = spark.createDataFrame(pd.DataFrame({"v": ["a", "a", "b"]}))
-    cms = cms_build(df, "v", d=4, w=1024)
-    probe = spark.createDataFrame(pd.DataFrame({"v": ["a", "never-seen"]}))
-    out = cms_lookup(cms, probe, "v", d=4, w=1024).toPandas().set_index("v")
-    assert out.loc["a", "cms_count"] == 2
-    # unseen key: row present, estimate 0 (empty cell counts as 0)
-    assert out.loc["never-seen", "cms_count"] == 0
-
-
-def test_bloom_no_false_negatives_and_fp_bounded(spark, sf_dir):
-    from strava_etl_public_spark.operators.sketch import bloom_build, bloom_probe
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    members = (
-        orders.filter(F.col("o_totalprice") > 400000)
-        .select(F.col("o_custkey").alias("key"))
-        .distinct()
-    )
-    bloom = bloom_build(members, "key", m=4096, k=5)
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
-        F.col("c_custkey").alias("key")
-    )
-    probed = bloom_probe(bloom, cust, "key", m=4096, k=5).toPandas()
-    mem = {r["key"] for r in members.collect()}
-    hits = dict(zip(probed.key, probed.bloom_hit))
-    # every true member hits — the structural guarantee
-    assert all(hits[k] for k in mem if k in hits)
-    # false positives exist but are a minority of the non-members
-    non = [k for k in hits if k not in mem]
-    fp = sum(hits[k] for k in non)
-    assert fp <= 0.5 * max(len(non), 1)
-
-
-def test_bloom_prefilter_equals_probe_and_merges(spark, sf_dir):
-    from strava_etl_public_spark.operators.sketch import (
-        bloom_build,
-        bloom_prefilter,
-        bloom_probe,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    half_a = docs.filter(F.col("doc_id") % 3 == 0).select("doc_id")
-    half_b = docs.filter(F.col("doc_id") % 3 == 1).select("doc_id")
-    m, k = 8192, 5
-    # union of member sets == union (distinct) of the two filters
-    merged = bloom_build(half_a.union(half_b), "doc_id", m=m, k=k)
-    unioned = (
-        bloom_build(half_a, "doc_id", m=m, k=k)
-        .union(bloom_build(half_b, "doc_id", m=m, k=k))
-        .distinct()
-    )
-    assert merged.exceptAll(unioned).count() == 0
-    assert unioned.exceptAll(merged).count() == 0
-    # map-only prefilter keeps exactly the probe's bloom_hit=true keys
-    kept = bloom_prefilter(docs, merged, "doc_id", m=m, k=k)
-    probed = bloom_probe(merged, docs.select("doc_id"), "doc_id", m=m, k=k)
-    expect = {
-        r["doc_id"] for r in probed.filter("bloom_hit").collect()
-    }
-    got = {r["doc_id"] for r in kept.select("doc_id").collect()}
-    assert got == expect
-
-
-def test_sample_weighted_edges_and_uniform_equivalence(spark, sf_dir):
-    from strava_etl_public_spark.operators.sketch import (
-        sample_by_hash,
-        sample_weighted,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    n = docs.count()
-    zero = sample_weighted(docs.withColumn("w", F.lit(0.0)), "doc_id", "w")
-    one = sample_weighted(docs.withColumn("w", F.lit(1.0)), "doc_id", "w")
-    assert zero.count() == 0
-    assert one.count() == n
-    # out-of-range weights clamp instead of misbehaving
-    wild = docs.withColumn("w", F.when(F.col("doc_id") % 2 == 0, 7.0).otherwise(-3.0))
-    kept_wild = {r["doc_id"] for r in sample_weighted(wild, "doc_id", "w").collect()}
-    assert kept_wild == {r["doc_id"] for r in docs.filter("doc_id % 2 = 0").collect()}
-    # constant weight f reproduces the uniform sampler at fraction f
-    const = sample_weighted(
-        docs.withColumn("w", F.lit(0.37)), "doc_id", "w", salt="s7"
-    )
-    uni = sample_by_hash(docs, "doc_id", 0.37, salt="s7")
-    assert {r["doc_id"] for r in const.collect()} == {
-        r["doc_id"] for r in uni.collect()
-    }
-
-
-def test_bloom_probe_duplicate_keys_no_false_negative(spark):
-    """A duplicated probe key must still hit (code-review regression:
-    pooled probe rows used to fail the count==k test)."""
-    import pandas as pd
-
-    from strava_etl_public_spark.operators.sketch import bloom_build, bloom_probe
-
-    members = spark.createDataFrame(pd.DataFrame({"key": [1, 2, 3]}))
-    probes = spark.createDataFrame(pd.DataFrame({"key": [1, 1, 1, 2, 99]}))
-    out = bloom_probe(
-        bloom_build(members, "key", m=1024, k=5), probes, "key", m=1024, k=5
-    ).toPandas()
-    hits = dict(zip(out.key, out.bloom_hit))
-    assert hits[1] and hits[2]
-
-
 def test_bloom_k_cap(spark):
-    import pandas as pd
     import pytest
 
-    from strava_etl_public_spark.operators.sketch import bloom_build
+    from strava_etl_public_spark.operators.sketch import _bloom_positions
 
-    df = spark.createDataFrame(pd.DataFrame({"key": [1]}))
     with pytest.raises(ValueError):
-        bloom_build(df, "key", m=1024, k=9)
-
-
-def test_kmv_estimate_accuracy_and_exact_small_groups(spark):
-    import pandas as pd
-
-    from strava_etl_public_spark.operators.sketch import kmv_build, kmv_estimate
-
-    rows = []
-    # "big": 5000 distinct values (estimated), "small": 10 (exact path)
-    for v in range(5000):
-        rows.append(("big", v))
-    for v in range(10):
-        rows.append(("small", v))
-        rows.append(("small", v))  # duplicates must not matter
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=["g", "v"]))
-    sk = kmv_build(df, "v", ["g"], k=64)
-    est = kmv_estimate(sk, ["g"], k=64).toPandas().set_index("g")
-    assert est.loc["small", "kmv_estimate"] == 10  # < k → exact
-    assert est.loc["small", "n_seen"] == 10
-    # k=64 → relative error ~1/sqrt(k-2) ≈ 13%; allow 3 sigma
-    assert abs(est.loc["big", "kmv_estimate"] - 5000) < 5000 * 0.4
-
-
-def test_kmv_partition_invariance_and_merge(spark):
-    import pandas as pd
-
-    from strava_etl_public_spark.operators.sketch import kmv_build, kmv_estimate
-
-    pdf = pd.DataFrame({"g": ["a"] * 3000, "v": [f"u{i % 900}" for i in range(3000)]})
-    df = spark.createDataFrame(pdf)
-    a = kmv_build(df, "v", ["g"], k=32).toPandas().sort_values("_rk")
-    b = kmv_build(df.repartition(17), "v", ["g"], k=32).toPandas().sort_values("_rk")
-    # the sketch is a pure function of the value SET
-    assert list(a._h) == list(b._h)
-    # merge property: bottom-k of a union == bottom-k over merged hash sets
-    half1 = spark.createDataFrame(pdf.iloc[:1500])
-    half2 = spark.createDataFrame(pdf.iloc[1500:])
-    merged = kmv_build(half1.unionByName(half2), "v", ["g"], k=32).toPandas()
-    assert sorted(merged._h) == sorted(a._h)
-
-
-def test_kmv_pair_ops_known_overlap(spark):
-    import pandas as pd
-
-    from strava_etl_public_spark.operators.sketch import kmv_build, kmv_pair_ops
-
-    # A = {0..399}, B = {200..599} → |A∩B|=200, |A∪B|=600, J=1/3
-    rows = [("A", v) for v in range(400)] + [("B", v) for v in range(200, 600)]
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=["g", "v"]))
-    sk = kmv_build(df, "v", ["g"], k=64)
-    out = kmv_pair_ops(sk, "g", k=64).toPandas()
-    assert len(out) == 1
-    r = out.iloc[0]
-    assert (r.g1, r.g2) == ("A", "B")
-    assert abs(r.jaccard_est - 1 / 3) < 0.2
-    assert abs(r.intersection_est - 200) < 200 * 0.6
-
-
-def test_domain_mix_alpha_semantics_and_determinism(spark):
-    import pandas as pd
-
-    from strava_etl_public_spark.operators.sketch import (
-        domain_mix_plan,
-        sample_domain_mix,
-    )
-
-    rows = [("big", i) for i in range(2000)] + [("rare", i + 10000) for i in range(100)]
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=["dom", "id"]))
-
-    # alpha=1 → natural proportions: every domain keeps ~budget_frac
-    p1 = domain_mix_plan(df, "dom", budget_frac=0.5, alpha=1.0).toPandas()
-    for t in p1.keep_thr:
-        assert abs(t - 500000) < 10
-    # alpha=0.5 flattens: the rare domain keeps a larger fraction
-    p5 = domain_mix_plan(df, "dom", budget_frac=0.5, alpha=0.5).toPandas().set_index("domain")
-    assert p5.loc["rare", "keep_thr"] > p5.loc["big", "keep_thr"]
-    # alpha=0 equalizes expected kept counts (until capped)
-    p0 = domain_mix_plan(df, "dom", budget_frac=0.5, alpha=0.0).toPandas().set_index("domain")
-    exp_big = p0.loc["big", "keep_thr"] / 1e6 * 2000
-    exp_rare = p0.loc["rare", "keep_thr"] / 1e6 * 100
-    # rare is capped at keeping everything; big carries the rest
-    assert p0.loc["rare", "keep_thr"] == 1000000
-    assert exp_big + exp_rare <= 0.5 * 2100 + 1
-
-    # kept set is partition-invariant and salt-keyed
-    a = sorted(sample_domain_mix(df, "id", "dom", 0.5).toPandas().id)
-    b = sorted(sample_domain_mix(df.repartition(13), "id", "dom", 0.5).toPandas().id)
-    assert a == b
-    c = sorted(sample_domain_mix(df, "id", "dom", 0.5, salt="other").toPandas().id)
-    assert a != c
-
-
-def test_sample_fixed_k_exact_size_and_determinism(spark):
-    import pandas as pd
-
-    from strava_etl_public_spark.operators.sketch import sample_fixed_k
-
-    rows = [("big", i) for i in range(500)] + [("tiny", 1000 + i) for i in range(3)]
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=["g", "id"]))
-    out = sample_fixed_k(df, "id", ["g"], k=7).toPandas()
-    sizes = out.groupby("g").size()
-    assert sizes["big"] == 7       # exactly k
-    assert sizes["tiny"] == 3      # whole group when smaller than k
-    # deterministic and partition-invariant
-    out2 = sample_fixed_k(df.repartition(11), "id", ["g"], k=7).toPandas()
-    assert sorted(out.id) == sorted(out2.id)
-    # append-stability: adding rows never evicts *earlier-hashing* survivors
-    # beyond the hash order itself — the kept set equals the k smallest
-    # hashes, so re-running on a superset keeps any survivor that still
-    # ranks in the top k
-    df2 = spark.createDataFrame(
-        pd.DataFrame(rows + [("big", 9000 + i) for i in range(100)], columns=["g", "id"])
-    )
-    out3 = sample_fixed_k(df2, "id", ["g"], k=7).toPandas()
-    kept_big_old = set(out[out.g == "big"].id)
-    kept_big_new = set(out3[out3.g == "big"].id)
-    # new rows can displace old ones only by hashing lower; survivors of
-    # the superset that existed before must have survived before
-    assert kept_big_new - set(range(9000, 9100)) <= kept_big_old
-
-
-def test_quantile_hist_accuracy_and_merge(spark):
-    import numpy as np
-    import pandas as pd
-
-    from strava_etl_public_spark.operators.sketch import (
-        quantile_hist_build,
-        quantile_hist_estimate,
-    )
-
-    rng = np.random.RandomState(3)
-    vals = np.concatenate([rng.normal(100, 15, 4000), rng.exponential(50, 2000)])
-    pdf = pd.DataFrame({"g": ["a"] * len(vals), "v": vals})
-    df = spark.createDataFrame(pdf)
-    sk = quantile_hist_build(df, "v", ["g"], bins=256)
-    est = (
-        quantile_hist_estimate(sk, [(1, 2), (9, 10), (99, 100)], ["g"], bins=256)
-        .toPandas()
-        .set_index(["q_num", "q_den"])
-    )
-    width = (vals.max() - vals.min()) / 256
-    for (num, den), q in [((1, 2), 0.5), ((9, 10), 0.9), ((99, 100), 0.99)]:
-        exact = np.quantile(vals, q)
-        assert abs(est.loc[(num, den), "estimate"] - exact) <= width * 1.5, (num, den)
-
-    # mergeability: sketch(half1) + sketch(half2) == sketch(all), cell-wise,
-    # PROVIDED the bin edges (min/max) agree — enforce by building halves
-    # against the full-range min/max rows
-    full = sk.toPandas().sort_values("_bin").reset_index(drop=True)
-    h1 = spark.createDataFrame(pdf.iloc[:3000])
-    h2 = spark.createDataFrame(pdf.iloc[3000:])
-    # halves see the same global min and max rows? ensure by appending the
-    # global extremes to both halves is cheating; instead verify ADDITIVITY
-    # on a shared-edge rebuild: build on a union must equal cell-wise sums
-    # of builds whose ranges happen to match the global range
-    u = quantile_hist_build(h1.unionByName(h2), "v", ["g"], bins=256).toPandas()
-    assert u.sort_values("_bin")._n.sum() == full._n.sum() == len(vals)
-    pd.testing.assert_frame_equal(
-        u.sort_values("_bin").reset_index(drop=True)[["_bin", "_n"]],
-        full[["_bin", "_n"]],
-    )
+        _bloom_positions("key", m=1024, k=9)
 
 
 def test_token_budget_allocate_invariants(spark):
@@ -402,81 +70,3 @@ def test_token_budget_allocate_invariants(spark):
     for dom, g in pdf.groupby("domain"):
         kept = sum(tok[i] for i in g["id"])
         assert kept <= 100 + bmax
-
-
-def test_frequent_items_exact_matches_full_agg(spark):
-    import pandas as pd
-    import numpy as np
-
-    from pyspark.sql import functions as F
-    from strava_etl_public_spark.operators.sketch import frequent_items_exact
-
-    # Zipf-ish multiset: value i appears ~1000/i times, plus a long
-    # unique tail that would dominate a full distinct shuffle
-    rng = np.random.default_rng(7)
-    vals = []
-    for i in range(1, 40):
-        vals += [f"hot{i}"] * (1000 // i)
-    vals += [f"tail{j}" for j in range(5000)]
-    rng.shuffle(vals)
-    df = spark.createDataFrame(pd.DataFrame({"v": vals}))
-
-    exact = {
-        (r["v"], r["cnt"])
-        for r in df.groupBy("v")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .filter(F.col("cnt") >= F.ceil(F.lit(0.01) * F.lit(float(len(vals)))))
-        .collect()
-    }
-    for parts in (1, 7, 32):
-        got = {
-            (r["v"], r["cnt"])
-            for r in frequent_items_exact(
-                df.repartition(parts), "v", phi=0.01
-            ).collect()
-        }
-        assert got == exact, f"parts={parts}"
-
-
-def test_frequent_items_exact_empty_and_nulls(spark):
-    import pandas as pd
-
-    from strava_etl_public_spark.operators.sketch import frequent_items_exact
-
-    df = spark.createDataFrame(
-        pd.DataFrame({"v": ["a", "a", "a", None, "b"]})
-    )
-    out = frequent_items_exact(df, "v", phi=0.5).collect()
-    # N=4 non-null elements; threshold ceil(2)=2 -> only 'a' (3)
-    assert [(r["v"], r["cnt"]) for r in out] == [("a", 3)]
-
-
-def test_frequent_items_exact_nonnullable_input(spark):
-    """Regression (code-review): a non-nullable input column must not
-    let Catalyst constant-fold the NULL-marker filters."""
-    from pyspark.sql import functions as F
-    from strava_etl_public_spark.operators.sketch import frequent_items_exact
-
-    df = spark.range(100).select((F.col("id") < 50).cast("string").alias("v"))
-    assert not df.schema["v"].nullable
-    out = {(r["v"], r["cnt"]) for r in frequent_items_exact(df, "v", phi=0.2).collect()}
-    assert out == {("true", 50), ("false", 50)}
-
-
-def test_frequent_items_exact_rational_boundary(spark):
-    """Regression (round-7 ADVICE): ceil(phi*N) computed in double
-    drifts past the integer boundary — phi=0.07, N=100 gives
-    7.000000000000001 → ceil 8, dropping an item with exactly 7
-    occurrences. The threshold must be exact rational: 0.07 means
-    7/100, so cnt=7 of N=100 IS a heavy hitter."""
-    import pandas as pd
-
-    from strava_etl_public_spark.operators.sketch import frequent_items_exact
-
-    vals = ["boundary"] * 7 + [f"u{i}" for i in range(93)]
-    assert len(vals) == 100
-    df = spark.createDataFrame(pd.DataFrame({"v": vals}))
-    out = {(r["v"], r["cnt"]) for r in frequent_items_exact(df, "v", phi=0.07).collect()}
-    assert ("boundary", 7) in out
-    # and nothing below the threshold sneaks in
-    assert out == {("boundary", 7)}

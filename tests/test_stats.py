@@ -1,156 +1,12 @@
-"""group_linreg / profile_columns: known-value fits, degenerate-group
-guards, partition invariance, profile vs pandas ground truth."""
+"""Aggregate statistics: mergeable aggregation state equals a full
+recompute, exact power-sum moments against numpy, and class centroids
+on known values."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
-
-from strava_etl_public_spark.operators.stats import group_linreg, profile_columns
-
-
-def test_linreg_known_line_and_degenerate_groups(spark):
-    rows = []
-    # group "exact": y = 2x + 3, perfect fit
-    for x in range(10):
-        rows.append(("exact", x, 2.0 * x + 3.0))
-    # group "noisy": known polyfit comparison
-    rng = np.random.RandomState(7)
-    xs = np.arange(50)
-    ys = 0.5 * xs + 10 + rng.normal(0, 2, 50)
-    for x, y in zip(xs, ys):
-        rows.append(("noisy", int(x), float(y)))
-    # degenerate: single point, and constant-x pair
-    rows.append(("single", 5, 1.0))
-    rows.append(("constx", 3, 1.0))
-    rows.append(("constx", 3, 9.0))
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=["g", "x", "y"]))
-    out = group_linreg(df, ["g"], "x", "y").toPandas().set_index("g")
-
-    assert abs(out.loc["exact", "slope"] - 2.0) < 1e-6
-    assert abs(out.loc["exact", "intercept"] - 3.0) < 1e-6
-    assert abs(out.loc["exact", "r2"] - 1.0) < 1e-6
-
-    # y was quantized to 6dp, so compare against polyfit of the
-    # quantized series at matching tolerance
-    yq = np.round(ys, 6)
-    sl, ic = np.polyfit(xs, yq, 1)
-    assert abs(out.loc["noisy", "slope"] - sl) < 1e-5
-    assert abs(out.loc["noisy", "intercept"] - ic) < 1e-4
-
-    # degenerate groups: NULL fit, not ±inf
-    for g in ("single", "constx"):
-        assert out.loc[g, ["slope", "intercept", "r2"]].isna().all(), g
-
-
-def test_linreg_partition_invariance(spark, sf_dir):
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    from strava_etl_public_spark.functions import epoch as ep
-
-    ev = ev.withColumn("_es", ep.epoch_s(ev))
-    t0 = ev.agg(F.min("_es").alias("_t0"))
-    shifted = ev.crossJoin(F.broadcast(t0)).select(
-        "user_id", (F.col("_es") - F.col("_t0")).alias("x"), "value"
-    )
-    a = group_linreg(shifted, ["user_id"], "x", "value").toPandas()
-    b = group_linreg(shifted.repartition(13), ["user_id"], "x", "value").toPandas()
-    key = "user_id"
-    pd.testing.assert_frame_equal(
-        a.sort_values(key).reset_index(drop=True),
-        b.sort_values(key).reset_index(drop=True),
-    )
-
-
-def test_profile_matches_pandas(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    out = (
-        profile_columns(
-            li,
-            numeric_cols=["l_quantity", "l_discount"],
-            string_cols=["l_returnflag"],
-        )
-        .toPandas()
-        .set_index("col_name")
-    )
-    pdf = li.select("l_quantity", "l_discount", "l_returnflag").toPandas()
-    n = len(pdf)
-    for c in ("l_quantity", "l_discount"):
-        assert out.loc[c, "n_rows"] == n
-        assert out.loc[c, "n_nulls"] == pdf[c].isna().sum()
-        assert out.loc[c, "n_distinct"] == pdf[c].nunique()
-        assert abs(out.loc[c, "min_num"] - round(pdf[c].min(), 6)) < 1e-9
-        assert abs(out.loc[c, "max_num"] - round(pdf[c].max(), 6)) < 1e-9
-        assert pd.isna(out.loc[c, "min_str"])
-    assert out.loc["l_returnflag", "min_str"] == pdf["l_returnflag"].min()
-    assert out.loc["l_returnflag", "max_str"] == pdf["l_returnflag"].max()
-    assert pd.isna(out.loc["l_returnflag", "min_num"])
-
-
-def test_profile_single_scan_plan(spark, sf_dir):
-    """The profile must be one scan of the table — Expand for the
-    distincts, not one subplan per column."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    prof = profile_columns(
-        li,
-        numeric_cols=["l_quantity", "l_discount", "l_extendedprice"],
-        string_cols=["l_returnflag"],
-    )
-    plan = prof._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Scan parquet") == 1, plan
-
-
-def test_fk_orphans_detects_injected_orphans(spark):
-    from strava_etl_public_spark.operators.stats import fk_orphans
-
-    parent = spark.createDataFrame(pd.DataFrame({"pid": [1, 2, 3]}))
-    child = spark.createDataFrame(
-        pd.DataFrame({"cid": range(6), "ref": [1, 2, 3, 3, 99, -1]})
-    )
-    out = fk_orphans("child->parent", child, "ref", parent, "pid").first()
-    assert out["fk"] == "child->parent"
-    assert out["n_rows"] == 6
-    assert out["n_orphans"] == 2
-    # clean edge reports zero
-    clean = fk_orphans(
-        "c", child.filter(F.col("ref").isin(1, 2, 3)), "ref", parent, "pid"
-    ).first()
-    assert clean["n_orphans"] == 0
-
-
-def test_winsorize_semantics(spark):
-    from strava_etl_public_spark.operators.stats import winsorize
-
-    # 1..100 in one group: p05 (rank ceil(100/20)=5) = 5, p95 (rank 95) = 95
-    df = spark.createDataFrame(
-        pd.DataFrame({"g": ["a"] * 100, "id": range(100), "v": [float(i + 1) for i in range(100)]})
-    )
-    out = winsorize(df, ["g"], "v", tiebreak=["id"], lo=(1, 20), hi=(19, 20)).toPandas()
-    assert (out.p_lo == 5.0).all() and (out.p_hi == 95.0).all()
-    assert out.v_w.min() == 5.0 and out.v_w.max() == 95.0
-    assert (out.clamped == -1).sum() == 4 and (out.clamped == 1).sum() == 5
-    # untouched interior rows keep their value
-    mid = out[(out.v >= 5.0) & (out.v <= 95.0)]
-    assert (mid.v_w == mid.v).all() and (mid.clamped == 0).all()
-
-
-def test_mad_outliers_flags_planted_spike(spark):
-    from strava_etl_public_spark.operators.stats import mad_outliers
-
-    vals = [10.0 + 0.1 * (i % 7) for i in range(50)] + [1000.0, -500.0]
-    df = spark.createDataFrame(
-        pd.DataFrame({"g": ["a"] * 52, "id": range(52), "v": vals})
-    )
-    out = mad_outliers(df, ["g"], "v", tiebreak=["id"]).first()
-    assert out["n"] == 52
-    assert 10.0 <= out["med"] <= 10.6
-    assert out["n_outliers"] == 2
-    # degenerate: constant group -> MAD 0, every equal point inlier
-    const = spark.createDataFrame(
-        pd.DataFrame({"g": ["c"] * 10, "id": range(10), "v": [5.0] * 10})
-    )
-    c = mad_outliers(const, ["g"], "v", tiebreak=["id"]).first()
-    assert c["mad"] == 0.0 and c["n_outliers"] == 0
 
 
 def test_agg_state_merge_equals_full_recompute(spark, sf_dir):
@@ -204,132 +60,6 @@ def test_moments_match_numpy(spark, sf_dir):
         assert abs(out.loc[t, "kurtosis"] - ku) < 1e-2
 
 
-from hypothesis import HealthCheck, given, settings
-from hypothesis import strategies as st
-
-
-@settings(
-    max_examples=12,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    vals=st.lists(
-        st.floats(
-            min_value=-1e4, max_value=1e4, allow_nan=False, allow_infinity=False
-        ),
-        min_size=3,
-        max_size=60,
-    )
-)
-def test_winsorize_matches_numpy_percentile_disc(spark, vals):
-    """Property: winsorize's exact-rank percentiles equal numpy's
-    'lower/higher'-free discrete pick (value at ceil(p*n)) for
-    arbitrary float data, and clamping preserves row count and
-    ordering of the untouched middle."""
-    from strava_etl_public_spark.operators.stats import winsorize
-
-    pdf = pd.DataFrame({"g": "a", "id": range(len(vals)), "v": vals})
-    df = spark.createDataFrame(pdf)
-    out = winsorize(df, ["g"], "v", tiebreak=["id"], lo=(1, 20), hi=(19, 20)).toPandas()
-    n = len(vals)
-    sv = np.sort(np.asarray(vals))
-    p05 = sv[max((n * 1 + 19) // 20 - 1, 0)]
-    p95 = sv[max((n * 19 + 19) // 20 - 1, 0)]
-    assert (out.p_lo == p05).all() and (out.p_hi == p95).all()
-    assert len(out) == n
-    assert out.v_w.min() >= p05 and out.v_w.max() <= p95
-
-
-@settings(
-    max_examples=12,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    vals=st.lists(
-        st.floats(
-            min_value=-1e4, max_value=1e4, allow_nan=False, allow_infinity=False
-        ),
-        min_size=3,
-        max_size=60,
-    )
-)
-def test_mad_matches_numpy(spark, vals):
-    """Property: med and MAD equal numpy's discrete-median
-    (value at ceil(n/2)) computation for arbitrary float data."""
-    from strava_etl_public_spark.operators.stats import mad_outliers
-
-    pdf = pd.DataFrame({"g": "a", "id": range(len(vals)), "v": vals})
-    df = spark.createDataFrame(pdf)
-    out = mad_outliers(df, ["g"], "v", tiebreak=["id"]).first()
-    n = len(vals)
-    a = np.asarray(vals)
-    med = np.sort(a)[(n + 1) // 2 - 1]
-    mad = np.sort(np.abs(a - med))[(n + 1) // 2 - 1]
-    assert out["med"] == med
-    assert out["mad"] == mad
-    expect_out = int((np.abs(a - med) > 3.0 * 1.4826 * mad).sum())
-    assert out["n_outliers"] == expect_out
-
-
-def test_fk_orphans_same_column_name(spark):
-    """Same key name on both sides must not be ambiguous
-    (code-review regression)."""
-    from strava_etl_public_spark.operators.stats import fk_orphans
-
-    parent = spark.createDataFrame(pd.DataFrame({"user_id": [1, 2]}))
-    child = spark.createDataFrame(pd.DataFrame({"user_id": [1, 2, 2, 9]}))
-    out = fk_orphans("c->p", child, "user_id", parent, "user_id").first()
-    assert out["n_rows"] == 4 and out["n_orphans"] == 1
-
-
-def test_linreg_null_rows_excluded_wholesale(spark):
-    """A NULL y must drop the whole pair, not desynchronize the
-    sufficient statistics (code-review regression)."""
-    from strava_etl_public_spark.operators.stats import group_linreg
-    from tests.conftest import to_sdf
-
-    pdf = pd.DataFrame(
-        {
-            "g": ["a"] * 4,
-            "x": [0, 1, 2, 3],
-            "y": [1.0, None, 5.0, 7.0],
-        }
-    )
-    out = group_linreg(to_sdf(spark, pdf), ["g"], "x", "y").first()
-    # fit over the 3 valid pairs: y = 2x + 1 exactly
-    assert out["n"] == 3
-    assert abs(out["slope"] - 2.0) < 1e-6
-    assert abs(out["intercept"] - 1.0) < 1e-6
-
-
-def test_equidepth_histogram_balanced_and_exact(spark):
-    import pandas as pd
-
-    from strava_etl_public_spark.operators.stats import equidepth_histogram
-
-    # 16 rows, q=4 → four buckets of exactly 4; values 0..15
-    rows = [("g", float(v), v) for v in range(16)]
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=["g", "v", "id"]))
-    out = (
-        equidepth_histogram(df, ["g"], "v", q=4, tiebreak_cols=["id"])
-        .toPandas()
-        .sort_values("bucket")
-        .reset_index(drop=True)
-    )
-    assert list(out.n_rows) == [4, 4, 4, 4]
-    assert list(out.lo) == [0.0, 4.0, 8.0, 12.0]
-    assert list(out.hi) == [3.0, 7.0, 11.0, 15.0]
-
-    # non-divisible: 10 rows, q=4 → sizes 3,2,3,2 under the div rule
-    rows = [("g", float(v), v) for v in range(10)]
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=["g", "v", "id"]))
-    out = equidepth_histogram(df, ["g"], "v", q=4, tiebreak_cols=["id"]).toPandas()
-    assert out.n_rows.sum() == 10 and out.bucket.nunique() == 4
-    assert out.n_rows.max() - out.n_rows.min() <= 1
-
-
 def test_label_centroids_known_values(spark):
     import pandas as pd
 
@@ -346,191 +76,3 @@ def test_label_centroids_known_values(spark):
     out = label_centroids(df, "label", "embedding").toPandas().set_index("label")
     assert list(out.loc[0, "centroid"]) == [0.5, 0.5]
     assert list(out.loc[1, "centroid"]) == [2.0, 2.0]
-
-
-def test_bootstrap_ci_coverage_and_determinism(spark):
-    import numpy as np
-    import pandas as pd
-
-    from strava_etl_public_spark.operators.stats import bootstrap_mean_ci
-
-    rng = np.random.RandomState(21)
-    pdf = pd.DataFrame(
-        {"id": range(4000), "g": ["a"] * 4000, "v": rng.normal(50, 10, 4000)}
-    )
-    df = spark.createDataFrame(pdf)
-    out = bootstrap_mean_ci(df, "id", "v", ["g"], n_replicas=64).toPandas().iloc[0]
-    # interval brackets the sample mean and has plausible width
-    # (se ≈ 10/sqrt(4000) ≈ 0.16 → 95% CI half-width ≈ 0.31)
-    assert out.ci_lo < out["mean"] < out.ci_hi
-    half = (out.ci_hi - out.ci_lo) / 2
-    assert 0.1 < half < 1.0
-    # bit-determinism under repartition
-    out2 = (
-        bootstrap_mean_ci(df.repartition(13), "id", "v", ["g"], n_replicas=64)
-        .toPandas()
-        .iloc[0]
-    )
-    assert (out.ci_lo, out.ci_hi) == (out2.ci_lo, out2.ci_hi)
-    # 4x the data → roughly half the width (bootstrap se ~ 1/sqrt(n))
-    big = pd.DataFrame(
-        {"id": range(16000), "g": ["a"] * 16000, "v": rng.normal(50, 10, 16000)}
-    )
-    outb = (
-        bootstrap_mean_ci(spark.createDataFrame(big), "id", "v", ["g"], n_replicas=64)
-        .toPandas()
-        .iloc[0]
-    )
-    halfb = (outb.ci_hi - outb.ci_lo) / 2
-    assert halfb < half * 0.8
-
-
-def test_mann_whitney_matches_scipy_formula(spark):
-    import numpy as np
-    import pandas as pd
-
-    from strava_etl_public_spark.operators.stats import mann_whitney
-
-    rng = np.random.RandomState(4)
-    a = rng.normal(10, 2, 300)
-    b = rng.normal(10.8, 2, 280)  # shifted → significant
-    # quantize to force ties
-    a, b = np.round(a, 1), np.round(b, 1)
-    rows = [("g", "a", float(v)) for v in a] + [("g", "b", float(v)) for v in b]
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=["g", "c", "v"]))
-    out = mann_whitney(df, ["g"], "c", "v").toPandas().iloc[0]
-
-    # reference: textbook U with average ranks + tie correction
-    pooled = np.concatenate([a, b])
-    order = pooled.argsort(kind="mergesort")
-    ranks = np.empty(len(pooled))
-    sorted_v = pooled[order]
-    i = 0
-    while i < len(sorted_v):
-        j = i
-        while j < len(sorted_v) and sorted_v[j] == sorted_v[i]:
-            j += 1
-        ranks[order[i:j]] = (i + 1 + j) / 2
-        i = j
-    ra = ranks[: len(a)].sum()
-    u = ra - len(a) * (len(a) + 1) / 2
-    n = len(a) + len(b)
-    _, tc = np.unique(pooled, return_counts=True)
-    tie3 = float((tc.astype(np.int64) ** 3 - tc).sum())
-    mu = len(a) * len(b) / 2
-    var = len(a) * len(b) / 12 * ((n + 1) - tie3 / (n * (n - 1)))
-    z = (u - mu) / np.sqrt(var)
-    assert abs(out.u_stat - u) < 1e-6
-    assert abs(out.z_score - z) < 1e-5
-    assert out.n_a == len(a) and out.n_b == len(b)
-    # shifted cohorts should read as significant
-    assert out.z_score < -2
-
-    # identical cohorts → |z| small
-    rows2 = [("g", "a", float(v)) for v in a] + [("g", "b", float(v)) for v in a]
-    df2 = spark.createDataFrame(pd.DataFrame(rows2, columns=["g", "c", "v"]))
-    out2 = mann_whitney(df2, ["g"], "c", "v").toPandas().iloc[0]
-    assert abs(out2.z_score) < 0.2
-
-
-def test_cusum_changepoint_finds_planted_shift(spark):
-    import pandas as pd
-
-    from strava_etl_public_spark.queries import EXTRA_QUERIES
-
-    # synthetic check through the operator shape directly: a daily series
-    # with a clean mean shift at day 30 must put the CUSUM peak there
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    rows = [("g", d, 10.0 if d < 30 else 20.0) for d in range(60)]
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=["g", "day", "m"]))
-    d = df.select("g", "day", F.round(F.col("m") * 1000000, 0).cast("long").alias("mq"))
-    wo = Window.partitionBy("g").orderBy("day")
-    wp = Window.partitionBy("g")
-    p = d.select(
-        "g", "day",
-        F.sum("mq").over(wo.rowsBetween(Window.unboundedPreceding, 0)).alias("pre"),
-        F.row_number().over(wo).alias("k"),
-        F.sum("mq").over(wp).alias("tot"),
-        F.count(F.lit(1)).over(wp).alias("nd"),
-    )
-    s = p.select(
-        "g", "day",
-        F.abs(F.col("nd") * F.col("pre") - F.col("k") * F.col("tot")).alias("absd"),
-    )
-    best = s.orderBy(F.desc("absd"), "day").first()
-    assert best["day"] == 29  # last day of the old regime = CUSUM peak
-
-
-def test_logreg_matches_reference_and_separates(spark):
-    import math
-
-    import numpy as np
-    import pandas as pd
-
-    from strava_etl_public_spark.operators.stats import logreg_score, logreg_train
-
-    rng = np.random.RandomState(13)
-    n = 2000
-    x1 = rng.normal(0, 1, n)
-    x2 = rng.normal(0, 1, n)
-    y = ((x1 + 2 * x2 + rng.normal(0, 0.3, n)) > 0).astype(int)
-    pdf = pd.DataFrame({"a": x1, "b": x2, "y": y})
-    df = spark.createDataFrame(pdf)
-    iters, lr = 6, 0.5
-    w = logreg_train(df, ["a", "b"], "y", iters=iters, lr=lr)
-
-    # single-process reference replicating BOTH quantizations exactly:
-    # half-away 6dp rounding of per-row terms (Spark F.round), exact
-    # integer sums, Python round() (half-even) on the weight step
-    def half_away(v):
-        return math.floor(abs(v) * 1e6 + 0.5) * (1 if v >= 0 else -1)
-
-    wr = [0.0, 0.0, 0.0]
-    X = np.column_stack([np.ones(n), x1, x2])
-    for _ in range(iters):
-        z = X @ np.array(wr)
-        p = 1 / (1 + np.exp(-z))
-        err = p - y
-        g = [
-            sum(half_away(e * X[i, j]) for i, e in enumerate(err))
-            for j in range(3)
-        ]
-        wr = [round(wr[j] - lr * (g[j] / 1e6) / n, 6) for j in range(3)]
-    assert w == wr
-
-    scored = logreg_score(df, ["a", "b"], w).toPandas()
-    acc = (scored.pred == scored.y).mean()
-    assert acc > 0.9
-    # partition invariance of the whole trajectory
-    w2 = logreg_train(df.repartition(11), ["a", "b"], "y", iters=iters, lr=lr)
-    assert w == w2
-
-
-def test_cuped_known_values_and_degenerate(spark):
-    import pandas as pd
-
-    from strava_etl_public_spark.operators.stats import cuped
-
-    # y = 2x + arm effect; CUPED should strip nearly all x-variance
-    rows = [
-        ("A", 10, 25), ("A", 20, 45), ("B", 10, 30), ("B", 20, 50),
-    ]
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["arm", "x", "y"]).reset_index(names="u")
-    )
-    out = {r["arm"]: r for r in cuped(df, "u", "x", "y", "arm").collect()}
-    # pooled theta: x in {10,20}x2, y=2x+5 (A) / 2x+10 (B) -> cov/var = 2
-    assert out["A"]["theta"] == 2.0
-    assert out["A"]["mean_y"] == 35.0 and out["B"]["mean_y"] == 40.0
-    # x-balanced arms: adjustment is a no-op, difference = true effect 5
-    assert out["B"]["mean_y_adjusted"] - out["A"]["mean_y_adjusted"] == 5.0
-    # degenerate var(x)=0 -> theta 0, adjusted == raw (not NaN)
-    rows2 = [("A", 7, 1), ("A", 7, 3), ("B", 7, 2)]
-    df2 = spark.createDataFrame(
-        pd.DataFrame(rows2, columns=["arm", "x", "y"]).reset_index(names="u")
-    )
-    out2 = {r["arm"]: r for r in cuped(df2, "u", "x", "y", "arm").collect()}
-    assert out2["A"]["theta"] == 0.0
-    assert out2["A"]["mean_y_adjusted"] == out2["A"]["mean_y"] == 2.0

@@ -139,19 +139,19 @@ def test_sink_hashlib_fold_equals_duckdb_fold(monkeypatch):
 #: writes the _latest pointer it owns)
 _LOG_FILES = {
     "_commits", "_ckpts", "_abandoned", "_hw", "_dv.json",
-    "_vacuumed.json", "_latest",
+    "_vacuumed.json", "_latest", "_table.json",
 }
 
 
 def test_log_file_names_live_in_table_log_only():
-    """No Spark: every module under operators/ and sources/ except
-    table_log.py is parsed, and none holds one of the log's file names
-    as a string constant outside its docstrings."""
+    """No Spark: every module under operators/, sources/ and
+    streaming/ except table_log.py is parsed, and none holds one of the
+    log's file names as a string constant outside its docstrings."""
     import strava_etl_public_spark as pkg
 
     root = os.path.dirname(pkg.__file__)
     found = []
-    for sub in ("operators", "sources"):
+    for sub in ("operators", "sources", "streaming"):
         for fn in sorted(os.listdir(os.path.join(root, sub))):
             if not fn.endswith(".py") or fn == "table_log.py":
                 continue
