@@ -536,7 +536,6 @@ def _duckdb_anchor(names: list, errors: dict) -> dict:
 SECONDARY_EXTRAS = (
     "x_sim_topk_lsh",
     "x_sim_topk_ivf",
-    "x_text_bigram_lm",
     "x_range_join_sessions",
     "x_embed_quantize_int8",
     # sixth-to-eighth batch curation operators (the heavy graph row
@@ -544,24 +543,19 @@ SECONDARY_EXTRAS = (
     # SCALE.md, not re-paid per round)
     "x_shard_manifest",
     "x_embed_covariance",
-    "x_text_boilerplate",
     "x_mm_audio_stats",
     "x_geo_radius_join",
     # fifteenth-sixteenth batch (r7)
     "x_sim_knn_join",
-    "x_curation_dsir",
     "x_mm_gif_frames",
     # seventeenth batch (late r7) — x_mm_jpeg_stats (51 s at
     # sf0.1: pure-Python DCT decode of 5000 real JPEGs) follows
     # the heavy-row convention: measured once in SCALE.md, not
     # re-paid per round
-    "x_text_cdc_chunks",
     "x_feature_trailing_window",
     "x_pipeline_curation",
     "x_text_span_removal",
     "x_text_hybrid_retrieval",
-    "x_text_dup_extents",
-    "x_interval_islands",
 )
 
 

@@ -673,7 +673,7 @@ def shape_distinct_agg(rng, pools):
 def shape_islands(rng, pools):
     """Gaps-and-islands: boundary flag from a running max over the
     PRECEDING frame, cumulative island id, island agg — two stacked
-    windows + agg sharing one partitioning (the merge_intervals /
+    windows + agg sharing one partitioning (the interval-union /
     sessionize pattern). Flag depends only on the ordered value, so
     ties in the total order cannot change the output. NULL values are
     filtered (Spark orders NULLS FIRST, DuckDB NULLS LAST)."""

@@ -37,21 +37,18 @@ def main() -> int:
     qs = E.queries()
     #: bench extras with their own scale posture worth auditing
     audited_extras = [
-        "x_text_bigram_lm",
         # (the fused pipelines moved into bench.HEADLINE in r6; their
         # returned plans are checkpoint-truncated — scripts/profile_queries.py
         # is the per-pipeline audit tool)
-        "x_text_vocab_topk",
         "x_skew_salted_agg",
         "x_range_join_sessions",
         "x_embed_quantize_int8",
         "x_dedup_containment",
-        # sixth-to-ninth batch curation operators (x_graph_triangles and
-        # x_text_dup_spans checkpoint internally → their returned plans
-        # are scan-of-checkpoint; they are audited by plan reading at
-        # change time, not here)
+        # sixth-to-ninth batch curation operators (x_graph_triangles
+        # checkpoints internally → its returned plan is
+        # scan-of-checkpoint; it is audited by plan reading at change
+        # time, not here)
         "x_ohlc_downsample",
-        "x_text_boilerplate",
         "x_embed_centroids",
         "x_mm_audio_stats",
         "x_shard_manifest",
@@ -60,18 +57,14 @@ def main() -> int:
         "x_fuzzy_join_names",
         # fifteenth batch (r7 curation)
         "x_sim_knn_join",
-        "x_curation_dsir",
         "x_mm_gif_frames",
-        # late-r7 waves (span_removal / dup_extents /
+        # late-r7 waves (span_removal /
         # eval-ann / pit / export checkpoint internally — audited at
         # change time; these return live plans)
         "x_text_hybrid_retrieval",
-        "x_interval_islands",
         "x_mm_jpeg_stats",
         "x_mm_audio_resample",
-        "x_text_cdc_chunks",
         "x_split_leakage_free",
-        "x_pseudonymize_join",
         "x_join_cardinality_report",
         "x_feature_trailing_window",
         "x_graph_khop",
@@ -84,7 +77,7 @@ def main() -> int:
         "x_eval_auc",
         "x_global_row_ids",
         # round-8 fourth wave: the TPC-H shape-battery closure (live
-        # plans; x_sql_recursive_khop / x_udtf_chunk_windows and the
+        # plans; x_sql_recursive_khop and the
         # streaming rows checkpoint or sink internally — audited at
         # change time).
         "x_tpch_q4_order_priority",

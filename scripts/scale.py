@@ -13,8 +13,8 @@ is 0 when ``ok``. ``tests/test_scale_harness.py`` runs every entry at
 a small size.
 
 Entries: pipeline, text, ann, quality, cc, rangejoin, maintenance,
-curation, dv, update, incremental, lineage_pq, manifest, sink,
-ann_tune. Results at full size are recorded in SCALE.md.
+dv, update, incremental, lineage_pq, manifest, sink, ann_tune.
+Results at full size are recorded in SCALE.md.
 """
 
 from __future__ import annotations
@@ -418,24 +418,30 @@ def incremental(spark, root, sf_dir=GEN_SF01, cpus=16):
     }
 
 
+_BM25_QUERIES: list[tuple[int, str]] = [
+    (1, "hash join shuffle"),
+    (2, "window sort order"),
+    (3, "vector scan filter"),
+]
+
+
 def maintenance(spark, root, sf_dir=GEN_SF1):
     """Two incremental maintainers against their full recompute, on a
     tier's documents and events (best of 2: the first pandas pass pays
     Python-worker startup):
 
     1. BM25 index: corpus postings persisted once; a 1 % batch is
-       tokenized alone and unioned in, vs ``bm25_topk`` over everything.
+       tokenized alone and unioned in, vs ``bm25_from_index`` over a
+       fresh ``build_postings`` of everything.
     2. EWMA: fold a ~1 % strictly-later batch from stored per-key state
        vs recomputing the whole series.
 
     Both incremental results must equal the full ones exactly."""
     from pyspark.sql import Window as W
 
-    import strava_etl_public_spark.queries  # noqa: F401  (registry init first)
     from strava_etl_public_spark.functions import epoch as ep
     from strava_etl_public_spark.operators import text as T
     from strava_etl_public_spark.operators.rolling import ewma_by_key
-    from strava_etl_public_spark.queries_stats_text import _BM25_QUERIES
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     batch = docs.filter(F.col("doc_id") % 100 == 0)
@@ -449,9 +455,15 @@ def maintenance(spark, root, sf_dir=GEN_SF1):
         dl = spark.read.parquet(f"{root}/doclen").unionByName(dl_b)
         return T.bm25_from_index(spark, tc, dl, "doc_id", _BM25_QUERIES, k=10).collect()
 
-    r_full, t_full = best(
-        lambda: T.bm25_topk(docs, "doc_id", "text", _BM25_QUERIES, k=10).collect(), 2
-    )
+    def bm25_full():
+        tc, dl = (cached(x) for x in T.build_postings(docs, "doc_id", "text"))
+        try:
+            return T.bm25_from_index(spark, tc, dl, "doc_id", _BM25_QUERIES, k=10).collect()
+        finally:
+            tc.unpersist()
+            dl.unpersist()
+
+    r_full, t_full = best(bm25_full, 2)
     r_inc, t_inc = best(bm25_incremental, 2)
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select("user_id", "event_id", "ts", "value")
@@ -496,28 +508,6 @@ def maintenance(spark, root, sf_dir=GEN_SF1):
         "events": ev.count(),
         "ok": match and match_e,
     }
-
-
-def curation(spark, root, n_docs=200_000):
-    """Curation operators at scale, all synthetic: ``bm25_topk`` over
-    ``n_docs`` docs and 3 queries; at most 30 result rows."""
-    from strava_etl_public_spark.operators import text as T
-
-    out, fails = {}, []
-    vocab = 5000
-    docs = spark.range(n_docs).select(
-        F.col("id").alias("doc_id"),
-        F.concat_ws(" ", F.array(*[
-            F.concat(F.lit("w"), (F.xxhash64(F.col("id") * 131 + i) % vocab + vocab).cast("string"))
-            for i in range(60)
-        ])).alias("text"),
-    )
-    qs = [(1, "w5100 w5200"), (2, "w6100 w6200 w6300"), (3, "w7100")]
-    rows, dt = best(lambda: T.bm25_topk(docs, "doc_id", "text", qs, k=10).collect())
-    out.update(bm25_s=round(dt, 2), bm25_rows=len(rows))
-    if not rows or len(rows) > 30:
-        fails.append("bm25 result shape")
-    return {**out, "fails": fails, "ok": not fails}
 
 
 # ---- similarity ------------------------------------------------------
@@ -971,8 +961,8 @@ def sink(spark, root, n_events=2_000_000, n_batches=4):
 ENTRIES = {
     f.__name__: f
     for f in (
-        pipeline, text, ann, quality, cc, rangejoin, maintenance, curation, dv,
-        update, incremental, lineage_pq, manifest, sink, ann_tune,
+        pipeline, text, ann, quality, cc, rangejoin, maintenance, dv, update,
+        incremental, lineage_pq, manifest, sink, ann_tune,
     )
 }
 

@@ -496,11 +496,6 @@ def write_with_bloom(
     fixture-scale representation; a production manifest packs the
     same bits into m/8 bytes per file (Parquet's own BloomFilter
     header layout), which this layer would adopt unchanged."""
-    import json
-    import os
-
-    from .sketch import _bloom_positions
-
     df.write.mode("overwrite").parquet(path)
     return build_bloom_manifest(df.sparkSession, path, col, m, k)
 

@@ -117,73 +117,3 @@ def interval_join_binned(
         )
         .drop("_bin")
     )
-
-
-def merge_intervals(
-    df: DataFrame,
-    keys: Seq[str],
-    start_col: str,
-    end_col: str,
-    gap: int = 0,
-) -> DataFrame:
-    """Interval UNION per key (gaps-and-islands): merge every set of
-    intervals that overlap or sit within ``gap`` of each other into
-    one maximal island, and report its extent and member count. The
-    set-union counterpart of :func:`interval_join_binned` (which
-    pairs intervals; this coalesces them) and of point sessionization
-    (which handles instants; this handles true [start, end] spans —
-    busy periods, duplicated-text extents, downtime windows).
-
-    Classic two-window plan, fully JVM-side: order by (start, end)
-    per key, flag a new island when a row's start exceeds the running
-    maximum of previous ends by more than ``gap`` (running max, NOT
-    lag(end): an interval can be swallowed by an earlier longer one —
-    the standard islands pitfall), island id = cumulative flag sum,
-    then one hash agg per island. Both windows share ONE partitioning
-    and sort (single exchange + sort in the physical plan); the agg
-    reuses the same keys, so the whole operator is one shuffle.
-    Inverted intervals (end < start) would corrupt the running max,
-    so they FAIL FAST: the island flag's first CASE branch raises at
-    execution time instead of letting them silently split or merge
-    islands (code-review finding — riding the flag expression means
-    column pruning can never drop the check).
-    """
-    from pyspark.sql import Window
-
-    ks = list(keys)
-    w = Window.partitionBy(*ks).orderBy(start_col, end_col)
-    prev_max_end = F.max(end_col).over(
-        w.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    flag = (
-        F.when(
-            F.col(end_col) < F.col(start_col),
-            F.raise_error(
-                F.lit("merge_intervals: interval with end < start")
-            ),
-        )
-        .when(
-            prev_max_end.isNull()
-            | (F.col(start_col) > prev_max_end + F.lit(gap)),
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-    )
-    isl = df.withColumn("_new", flag).withColumn(
-        "_isl", F.sum("_new").over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
-    return (
-        isl.groupBy(*ks, "_isl")
-        .agg(
-            F.min(start_col).alias("island_start"),
-            F.max(end_col).alias("island_end"),
-            F.count(F.lit(1)).cast("long").alias("n_intervals"),
-        )
-        .select(
-            *ks,
-            F.col("_isl").cast("long").alias("island_id"),
-            "island_start",
-            "island_end",
-            "n_intervals",
-        )
-    )

@@ -1,10 +1,11 @@
 """Text analysis operators (north-star extension): language-ID,
-quality scoring, token counting, document fingerprinting.
+quality and encoding features, TF-IDF, BM25 over a postings index,
+within-document repetition, cross-document duplicated-span removal.
 
-All pure Column expressions (codegen'd, shuffle-free projections);
-deterministic and engine-portable so every one is DuckDB-oracle
-checkable. At 100 TB these run at scan speed — they're the map stage
-of a training-data curation pipeline.
+Deterministic and engine-portable, so every one is DuckDB-oracle
+checkable: the per-document features are codegen'd, shuffle-free
+projections that run at scan speed — the map stage of a
+training-data curation pipeline.
 """
 
 from __future__ import annotations
@@ -12,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import TOKEN_RE, shingles, tokens
+from .dedup import shingles, tokens
 
 #: Tiny per-language stopword profiles for the n-gram/stopword heuristic.
 #: Chosen for determinism, not linguistic accuracy.
@@ -22,10 +23,6 @@ LANG_PROFILES: dict[str, tuple[str, ...]] = {
     "es": ("el", "los", "las", "y", "que"),
     "de": ("der", "die", "das", "und", "ist"),
 }
-
-#: BPE-ish pre-tokenizer: letter runs | single digits | punctuation
-#: singles — the GPT-2-style split shape, RE2-safe for oracle parity.
-BPE_RE = "[a-z]+|[0-9]|[^a-z0-9 ]"
 
 
 def _count_in(tokens_col: Column, words: tuple[str, ...]) -> Column:
@@ -55,17 +52,6 @@ def lang_id(
     for lang in reversed(langs):
         out = F.when((scores[lang] > 0) & (scores[lang] == best), F.lit(lang)).otherwise(out)
     return out
-
-
-def token_count_ws(text_col: Column | str) -> Column:
-    """Whitespace token count."""
-    return F.size(tokens(text_col, r"[^ \t\n]+")).cast("long")
-
-
-def token_count_bpe(text_col: Column | str) -> Column:
-    """BPE-ish regex token count (letters / digits / punct singles)."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.size(F.regexp_extract_all(F.lower(c), F.lit(BPE_RE), 0)).cast("long")
 
 
 def quality_score_col(text_col: Column | str, toks: Column) -> Column:
@@ -191,67 +177,12 @@ def tf_idf(
     )
 
 
-def bm25_topk(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    queries: list[tuple[int, str]],
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """Full-text top-k retrieval with BM25 over an inverted index —
-    the keyword-search half of a data-curation stack (finding
-    benchmark-adjacent or topic-matched documents at corpus scale).
-
-    Index: postings ``(term, doc, tf)`` + doc lengths from ONE
-    tokenize pass (two hash aggs, map-side combined). ``queries`` is a
-    bounded list of ``(query_id, query_text)`` — model-state-sized, so
-    its distinct terms broadcast and CUT the postings to query terms
-    BEFORE any per-term stats join (df counts are computed on the
-    pruned postings, not the full vocabulary). Corpus scalars
-    (N, total length) are a 1-row broadcast.
-
-    Scoring (Robertson/Sparck Jones, the Lucene-default shape):
-    ``idf = ln(1 + (N - df + 0.5)/(df + 0.5))``,
-    ``tf_part = tf·(k1+1) / (tf + k1·(1 - b + b·dl·N/Σdl))`` — note
-    ``dl/avgdl`` is computed as ``dl·N/Σdl`` so every input is an
-    exact BIGINT and the double math is one fixed expression tree.
-    Each ln rounds to 6dp (the tf_idf/bigram-LM precedent for
-    engine-divergent libm); per-term contributions round to 6dp and
-    sum as DECIMAL(38,6) (order-free), so scores are bit-equal across
-    engines and partitionings. Top-k per query by (score desc,
-    doc_id) row_number — per-query k rows out.
-    """
-    from pyspark import StorageLevel
-
-    # Materialize the index ONCE (r14, guide §2.4/§5): bm25_from_index
-    # consumes ``tc`` via two branches (query-term prune → df stats +
-    # hits) and ``dl`` via two more (corpus stats, doc-length join),
-    # and Spark never dedupes branch subtrees — un-persisted, the
-    # corpus was tokenized FOUR times per run (plan: 4 Generate
-    # subtrees; plans/r14/x_text_bm25_topk_before.txt). The postings
-    # are the index state a serving deployment persists anyway; the
-    # (queries×k)-row result is eagerly materialized as the single
-    # barrier so both caches release on exit instead of leaking.
-    tc, dl = build_postings(df, id_col, text_col)
-    tc = tc.persist(StorageLevel.MEMORY_AND_DISK)
-    dl = dl.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        return bm25_from_index(
-            df.sparkSession, tc, dl, id_col, queries, k=k, k1=k1, b=b
-        ).localCheckpoint(eager=True)
-    finally:
-        tc.unpersist()
-        dl.unpersist()
-
-
 def build_postings(df: DataFrame, id_col: str, text_col: str):
     """The BM25 index state: postings ``(id, term, tf_n)`` + doc
-    lengths ``(id, doc_len)`` from one tokenize pass. Split out of
-    bm25_topk (r8) so the index can be PERSISTED and maintained
-    incrementally: doc-id-disjoint batches compose by pure UNION
-    (each doc's postings and length depend only on its own text), so
+    lengths ``(id, doc_len)`` from one tokenize pass (two hash aggs,
+    map-side combined). Kept apart from scoring so the index can be
+    PERSISTED and maintained incrementally: doc-id-disjoint batches
+    compose by pure UNION (each doc's postings and length depend only on its own text), so
     index(C ∪ B) = index(C) ∪ index(B) exactly — tokenization cost is
     batch-proportional, the corpus postings are never re-derived."""
     tok_long = df.select(F.col(id_col), tokens(text_col).alias("_t")).select(
@@ -274,10 +205,29 @@ def bm25_from_index(
     k1: float = 1.2,
     b: float = 0.75,
 ) -> DataFrame:
-    """BM25 scoring over a PREBUILT index (see bm25_topk for the
-    scoring discipline and bounds) — corpus stats (N, Σdl) are derived
-    from the index itself, so a stale sidecar can never disagree with
-    the postings it scores."""
+    """BM25 top-k retrieval over a PREBUILT index (``build_postings``).
+    Corpus stats (N, Σdl) are derived from the index itself, so a stale
+    sidecar can never disagree with the postings it scores.
+
+    ``queries`` is a bounded list of ``(query_id, query_text)`` —
+    model-state-sized, so its distinct terms broadcast and CUT the
+    postings to query terms BEFORE any per-term stats join (df counts
+    are computed on the pruned postings, not the full vocabulary).
+
+    Scoring (Robertson/Sparck Jones, the Lucene-default shape):
+    ``idf = ln(1 + (N - df + 0.5)/(df + 0.5))``,
+    ``tf_part = tf·(k1+1) / (tf + k1·(1 - b + b·dl·N/Σdl))`` — note
+    ``dl/avgdl`` is computed as ``dl·N/Σdl`` so every input is an
+    exact BIGINT and the double math is one fixed expression tree.
+    Each ln rounds to 6dp (the tf_idf precedent for engine-divergent
+    libm); per-term contributions round to 6dp and sum as
+    DECIMAL(38,6) (order-free), so scores are bit-equal across engines
+    and partitionings. Top-k per query by (score desc, id) row_number.
+
+    ``tc`` feeds two branches (query-term prune → df stats + hits) and
+    ``dl`` two more (corpus stats, doc-length join); Spark does not
+    dedupe branch subtrees, so persist both when they are not already
+    materialized."""
     from pyspark.sql import Window
 
     stats = dl.agg(
@@ -335,22 +285,6 @@ def bm25_from_index(
         scored.withColumn("rk", F.row_number().over(w).cast("long"))
         .filter(F.col("rk") <= k)
         .select("query_id", F.col(id_col), "bm25", "n_terms_matched", "rk")
-    )
-
-
-def fingerprint(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
-    """Document fingerprints: md5 of the normalized token stream (exact
-    content identity) + min shingle hash (a 1-perm MinHash — the
-    winnowing anchor)."""
-    base = df.select(F.col(id_col), tokens(text_col).alias("_toks"))
-    toks = F.col("_toks")
-    norm = F.array_join(toks, " ")
-    sh = shingles(toks, n)
-    min_sh = F.array_min(F.transform(sh, lambda s: F.md5(s)))
-    return base.select(
-        F.col(id_col),
-        F.md5(norm).alias("content_fp"),
-        min_sh.alias("min_shingle_fp"),
     )
 
 
@@ -438,354 +372,6 @@ def repetition_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def char_entropy(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Per-document character-level Shannon entropy — the gibberish /
-    compression-junk detector (base64 blobs and minified code sit far
-    above prose entropy; repeated-char padding far below), a standard
-    quality-filter feature alongside the stopword/punctuation ratios.
-
-    ``H = −Σ_c (n_c/N)·ln(n_c/N)`` over the document's character
-    counts. Determinism: each ln rounds to 6 dp (the repo's libm
-    rule), the per-char contribution ``n_c · ln_r`` rounds to 6 dp
-    and sums as DECIMAL(38,6) (order-free), and the final ``−S/N``
-    rounds to 6 dp — bit-equal across engines and partitionings.
-    Empty docs emit 0.0 with n_chars=0.
-
-    Scale shape: one char explode + one (doc, char) hash agg + one
-    per-doc agg — the tokens() shape at character granularity, all
-    map-side combined."""
-    from pyspark.sql import Window
-
-    chars = df.select(
-        F.col(id_col), F.explode(F.split(F.col(text_col), "")).alias("_c")
-    ).filter(F.col("_c") != "")
-    counts = chars.groupBy(id_col, "_c").agg(
-        F.count(F.lit(1)).cast("long").alias("_nc")
-    )
-    per_doc = counts.withColumn(
-        "_n", F.sum("_nc").over(Window.partitionBy(id_col))
-    ).withColumn(
-        "_contrib",
-        F.round(
-            F.col("_nc").cast("double")
-            * F.round(
-                F.log(F.col("_nc").cast("double") / F.col("_n").cast("double")), 6
-            ),
-            6,
-        ),
-    )
-    ent = per_doc.groupBy(id_col).agg(
-        F.max("_n").cast("long").alias("n_chars"),
-        F.round(
-            -F.sum(F.col("_contrib").cast("decimal(38,6)")).cast("double")
-            / F.max("_n").cast("double"),
-            6,
-        ).alias("char_entropy"),
-    )
-    return (
-        df.select(F.col(id_col))
-        .join(ent, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("n_chars", F.lit(0)).cast("long").alias("n_chars"),
-            F.coalesce("char_entropy", F.lit(0.0)).alias("char_entropy"),
-        )
-    )
-
-
-def pmi_collocations(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    min_count: int = 5,
-    k: int = 50,
-) -> DataFrame:
-    """Top-k collocations by pointwise mutual information — the
-    phrase-mining step of tokenizer/vocab construction (finding pairs
-    like "new york" that behave as one unit, worth merging before BPE
-    training).
-
-    ``PMI(w1,w2) = ln( P(w1w2) / (P(w1)·P(w2)) )`` with
-    ``P(w1w2) = C12/NB`` over bigram occurrences and ``P(w) = C/NT``
-    over token occurrences — computed as ONE ln of a ratio of exact
-    BIGINT counts (``C12·NT·NT / (C1·C2·NB)``), rounded to 6 dp, so
-    the score is engine-exact (single fixed expression tree; no sum of
-    logs to reorder). ``min_count`` prunes rare bigrams BEFORE the
-    stats joins — at corpus scale the long tail of singleton bigrams
-    is most of the table and none of the answer.
-
-    Scale shape: one bigram explode + two corpus hash-aggs (bigram,
-    unigram), one 1-row totals broadcast, two joins keyed on token
-    (AQE-skew-safe — function words are the hot keys), then a global
-    top-k that plans as TakeOrderedAndProject (per-partition heaps,
-    no full sort)."""
-    from pyspark.sql import Window
-
-    toks = df.select(F.col(id_col), tokens(text_col).alias("_t"))
-    uni = toks.select(F.explode(F.col("_t")).alias("_w"))
-    uni_counts = uni.groupBy("_w").agg(F.count(F.lit(1)).cast("long").alias("_c1"))
-    bg = toks.select(F.explode(shingles(F.col("_t"), 2)).alias("_bg"))
-    bg_counts = (
-        bg.groupBy("_bg")
-        .agg(F.count(F.lit(1)).cast("long").alias("c12"))
-        .filter(F.col("c12") >= min_count)
-        .withColumn("w1", F.split(F.col("_bg"), " ")[0])
-        .withColumn("w2", F.split(F.col("_bg"), " ")[1])
-    )
-    totals = uni.agg(F.count(F.lit(1)).cast("long").alias("nt")).crossJoin(
-        bg.agg(F.count(F.lit(1)).cast("long").alias("nb"))
-    )
-    pmi = F.round(
-        F.log(
-            F.col("c12").cast("double")
-            * F.col("nt").cast("double")
-            * F.col("nt").cast("double")
-            / (
-                F.col("_l1").cast("double")
-                * F.col("_l2").cast("double")
-                * F.col("nb").cast("double")
-            )
-        ),
-        6,
-    )
-    scored = (
-        bg_counts.join(uni_counts.select(F.col("_w").alias("w1"), F.col("_c1").alias("_l1")), "w1")
-        .join(uni_counts.select(F.col("_w").alias("w2"), F.col("_c1").alias("_l2")), "w2")
-        .crossJoin(F.broadcast(totals))
-        .select("w1", "w2", "c12", pmi.alias("pmi"))
-    )
-    return (
-        scored.orderBy(F.col("pmi").desc(), "w1", "w2")
-        .limit(k)
-        .withColumn(
-            "rk",
-            F.row_number()
-            .over(Window.orderBy(F.col("pmi").desc(), "w1", "w2"))
-            .cast("long"),
-        )
-    )
-
-
-def bigram_lm_score(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Corpus-trained bigram language-model score per document — the
-    perplexity-filter family (CCNet / LLaMA-style data curation uses a
-    KenLM score; this is its exact, engine-portable bigram analogue).
-
-    Model: add-one-smoothed bigram probabilities trained on the corpus
-    itself — ``P(w2|w1) = (C(w1 w2)+1) / (C(w1)+V)`` with ``C(w1)`` the
-    corpus unigram occurrence count and ``V`` the distinct vocabulary
-    size. Per doc: mean natural-log probability over its bigram
-    occurrences (higher = more in-distribution text; templated/spammy
-    repetition scores high, out-of-vocabulary noise scores low).
-
-    Determinism: each ln() is rounded to 6dp (the tf_idf precedent for
-    engine-divergent libm), summed as DECIMAL(38,6) (order-independent)
-    and the mean rounds to 6dp — bit-equal across engines and partition
-    counts. Docs with <2 tokens score 0.0 with n_bigrams=0.
-
-    Scale shape: one bigram explode, two corpus hash-aggs (bigram and
-    unigram tables, map-side combined), one 1-row vocab broadcast, two
-    hash joins keyed on bigram/token (AQE-skew-safe; hot function words
-    are exactly the skewed keys AQE splits), one per-doc agg. No
-    window, no pairwise work, no driver data — the "train" half is two
-    aggregations over the same scan that scores.
-    """
-    toks = df.select(F.col(id_col), tokens(text_col).alias("_t"))
-    uni = toks.select(F.explode(F.col("_t")).alias("_w"))
-    uni_counts = uni.groupBy("_w").agg(F.count(F.lit(1)).alias("_c1"))
-    vocab = uni_counts.agg(F.count(F.lit(1)).alias("_v"))
-    occ = toks.select(
-        F.col(id_col), F.explode(shingles(F.col("_t"), 2)).alias("_bg")
-    ).withColumn("_w", F.split(F.col("_bg"), " ")[0])
-    bg_counts = occ.groupBy("_bg").agg(F.count(F.lit(1)).alias("_c2"))
-    lp = F.round(
-        F.log(
-            (F.col("_c2") + F.lit(1)).cast("double")
-            / (F.col("_c1") + F.col("_v")).cast("double")
-        ),
-        6,
-    )
-    per_doc = (
-        occ.join(bg_counts, "_bg")
-        .join(uni_counts, "_w")
-        .crossJoin(F.broadcast(vocab))
-        .withColumn("_lp", lp)
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-            F.round(
-                F.sum(F.col("_lp").cast("decimal(38,6)")).cast("double")
-                / F.count(F.lit(1)),
-                6,
-            ).alias("lm_logprob"),
-        )
-    )
-    return (
-        df.select(F.col(id_col))
-        .join(per_doc, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("n_bigrams", F.lit(0)).cast("long").alias("n_bigrams"),
-            F.coalesce("lm_logprob", F.lit(0.0)).alias("lm_logprob"),
-        )
-    )
-
-
-#: PII patterns, RE2-safe (no backrefs/lookarounds) so Spark
-#: regexp_replace and a SQL oracle apply the identical automaton.
-#: Order matters: longest/most-specific first so e.g. an SSN inside a
-#: longer digit run is not half-matched by the phone pattern.
-PII_PATTERNS: tuple[tuple[str, str], ...] = (
-    ("email", r"[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}"),
-    ("ssn", r"\b[0-9]{3}-[0-9]{2}-[0-9]{4}\b"),
-    # no leading \b: a word boundary cannot assert before "(" — the
-    # trailing \b plus the fixed separator shape bounds the match
-    ("phone", r"(\+?1[ .-])?(\([0-9]{3}\) ?|[0-9]{3}[ .-])[0-9]{3}[ .-][0-9]{4}\b"),
-    ("ipv4", r"\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b"),
-    ("cc", r"\b[0-9]{4}[ -][0-9]{4}[ -][0-9]{4}[ -][0-9]{4}\b"),
-)
-
-
-def redact_pii(text_col: Column | str) -> Column:
-    """Replace common PII shapes (email, SSN, NANP phone, IPv4, spaced
-    credit-card) with ``[<KIND>]`` placeholders — the scrubbing map
-    stage of a training-data pipeline. A chain of regexp_replace column
-    expressions: codegen'd, shuffle-free, scan-speed at any corpus
-    size; deterministic and SQL-replicable (RE2-safe patterns, fixed
-    application order)."""
-    out = F.col(text_col) if isinstance(text_col, str) else text_col
-    for kind, pat in PII_PATTERNS:
-        out = F.regexp_replace(out, pat, f"[{kind.upper()}]")
-    return out
-
-
-def pii_counts(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Per-document PII hit counts per kind + the redacted text — the
-    audit view (filter / weight / drop decisions need the counts, the
-    scrubbed corpus needs the text; both come from one projection)."""
-    return df.select(
-        F.col(id_col),
-        *[
-            F.size(F.regexp_extract_all(F.col(text_col), F.lit(pat), F.lit(0)))
-            .cast("long")
-            .alias(f"n_{kind}")
-            for kind, pat in PII_PATTERNS
-        ],
-        redact_pii(text_col).alias("redacted"),
-    )
-
-
-def vocab_topk(df: DataFrame, id_col: str, text_col: str, k: int = 1000) -> DataFrame:
-    """Corpus vocabulary build: the k most frequent tokens with total
-    count and document frequency — the tokenizer-training / vocab-
-    pruning stage of an LLM data pipeline.
-
-    Deterministic ordering by (count desc, token asc). Scale shape:
-    one explode + one hash agg keyed on token (map-side combined —
-    Zipfian heavy hitters collapse per partition before the shuffle;
-    count(DISTINCT id) rides the same agg), then a global top-k that
-    Spark plans as TakeOrderedAndProject (per-partition heap + driver
-    merge of k rows, never a full sort); ranks are assigned over the
-    ALREADY-REDUCED k rows, so the single-partition window is bounded
-    by k, not vocabulary size."""
-    from pyspark.sql import Window
-
-    counts = (
-        df.select(F.col(id_col), F.explode(tokens(text_col)).alias("token"))
-        .groupBy("token")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.countDistinct(id_col).cast("long").alias("n_docs"),
-        )
-    )
-    top = counts.orderBy(F.col("n").desc(), F.col("token")).limit(k)
-    w = Window.orderBy(F.col("n").desc(), F.col("token"))
-    return top.withColumn("rk", F.row_number().over(w).cast("long"))
-
-
-def dsir_importance(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    target_pred,
-    n_buckets: int = 256,
-    salt: str = "dsir",
-) -> DataFrame:
-    """Data Selection with Importance Resampling (hashed n-gram
-    features, after Xie et al. 2023 "Data Selection for Language
-    Models via Importance Resampling"), linear-proxy variant: score
-    each document by how much its token distribution resembles a
-    TARGET domain relative to the whole corpus.
-
-    Features are unigram tokens hashed into ``n_buckets`` buckets
-    (md5-based 60-bit hash — engine-portable, the repo's shared
-    oracle convention). Per document: ``num = Σ_tok p[bucket(tok)]``
-    and ``den = Σ_tok q[bucket(tok)]`` where p counts target-domain
-    tokens and q counts corpus tokens per bucket — exact integers, so
-    ``imp = round(num/den, 6)`` is one IEEE-exact division per doc
-    and any engine reproduces it bit-for-bit. (The published method
-    scores ``Σ log p̂_f/q̂_f``; the linear num/den proxy keeps the
-    oracle exact — log's last ulp is libm-dependent — and preserves
-    the ranking property the resampling step needs: documents heavy
-    in target-typical buckets score high.) ``den ≥ n_tokens > 0``
-    whenever the doc has tokens; token-free docs keep a row with
-    imp = 0.
-
-    Scale shape: one explode + hash agg builds the two bucket tables
-    (``n_buckets`` rows each — bounded model state), broadcast back
-    onto the token stream for a map-side lookup, then one per-doc
-    hash agg. No shuffle grows with corpus size except the per-doc
-    agg itself; at 100 TB the bucket tables are still 256 rows. The
-    exploded token table feeds BOTH the bucket agg and the per-doc
-    score (Spark never dedupes common subtrees), so it is persisted
-    — caller unpersists after its last action if the corpus scan was
-    expensive (the jaccard_join_prefix convention).
-    Integer-sum bound: per-doc ``den ≤ n_tokens·max_bucket_count``
-    must stay < 2⁵³ for the final double division to be exact —
-    holds to ~10⁴-token docs against ~10⁹-count buckets.
-    """
-    from pyspark import StorageLevel
-
-    from .sketch import _hash60
-
-    toks = df.select(
-        F.col(id_col),
-        F.when(target_pred, F.lit(1)).otherwise(F.lit(0)).alias("_is_t"),
-        F.explode(tokens(text_col)).alias("_tok"),
-    ).withColumn(
-        "_bk",
-        (_hash60(F.concat(F.lit(f"{salt}:"), F.col("_tok"))) % n_buckets).cast(
-            "int"
-        ),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    buckets = toks.groupBy("_bk").agg(
-        F.count(F.lit(1)).cast("long").alias("_q"),
-        F.sum("_is_t").cast("long").alias("_p"),
-    )
-    scored = (
-        toks.join(F.broadcast(buckets), "_bk")
-        .groupBy(id_col)
-        .agg(
-            F.sum("_p").cast("long").alias("_num"),
-            F.sum("_q").cast("long").alias("_den"),
-        )
-    )
-    imp = F.round(
-        F.col("_num").cast("double") / F.col("_den").cast("double"), 6
-    ) + F.lit(0.0)
-    # token-free docs: keep the row, score 0 (left join from the base)
-    return (
-        df.select(F.col(id_col))
-        .join(scored, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("_num"), F.lit(0).cast("long")).alias("n_target_hits"),
-            F.coalesce(F.col("_den"), F.lit(0).cast("long")).alias("n_corpus_hits"),
-            F.when(F.col("_den").isNull(), F.lit(0.0)).otherwise(imp).alias("imp"),
-        )
-    )
-
-
 #: Control characters that signal a broken decode (C0 minus \t\n\r).
 _CTRL_RE = "[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f]"
 #: ASCII printable range (space..tilde).
@@ -824,255 +410,6 @@ def encoding_quality(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def chunk_documents(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    chunk_tokens: int = 128,
-    stride: int = 96,
-) -> DataFrame:
-    """Split documents into overlapping token windows — the
-    context-window preprocessing step of an LLM training pipeline.
-    Emits (id, chunk_idx, chunk_text, n_tokens); windows start every
-    ``stride`` tokens and span ``chunk_tokens`` (the final window is
-    the shorter tail; a doc shorter than one window yields one chunk).
-
-    Pure array math: tokenize once, generate start offsets with
-    sequence(), slice + rejoin per window, explode — codegen'd
-    projections, no UDF, no shuffle; at 100 TB this is a map-only
-    stage whose output feeds packing/batching."""
-    n = F.size(F.col("_t"))
-    # last start: smallest multiple of stride that still covers the
-    # tail (>= 0) — ceil((n - chunk)/stride) * stride
-    last = F.greatest(
-        F.lit(0).cast("long"),
-        F.ceil((n - F.lit(chunk_tokens)) / F.lit(stride)).cast("long") * stride,
-    )
-    starts = F.sequence(F.lit(0).cast("long"), last, F.lit(stride).cast("long"))
-    return (
-        df.select(F.col(id_col), tokens(text_col).alias("_t"))
-        .select(
-            id_col,
-            F.posexplode(
-                F.transform(
-                    starts, lambda s: F.slice(F.col("_t"), s + 1, chunk_tokens)
-                )
-            ).alias("chunk_idx", "_w"),
-        )
-        .filter(F.size("_w") > 0)
-        .select(
-            F.col(id_col),
-            F.col("chunk_idx").cast("long").alias("chunk_idx"),
-            F.array_join("_w", " ").alias("chunk_text"),
-            F.size("_w").cast("long").alias("n_tokens"),
-        )
-    )
-
-
-def pack_chunks(
-    df: DataFrame,
-    id_cols: list[str],
-    tokens_col: str,
-    budget: int = 2048,
-    n_buckets: int = 256,
-    salt: str = "pack",
-) -> DataFrame:
-    """Sequence packing: assign chunks to fixed-token-budget packs
-    (training-batch construction). Chunks are hash-distributed into
-    ``n_buckets`` independent buckets (deterministic, so packing is
-    reproducible and buckets parallelize); within a bucket, first-fit-
-    decreasing over (n_tokens desc, ids asc) — the classic 11/9-OPT
-    bin-packing heuristic — runs in an Arrow grouped map. Emits the
-    input rows plus (pack_id, pack_fill): every chunk lands in exactly
-    one pack, no pack exceeds ``budget`` (chunks longer than the
-    budget get a singleton pack).
-
-    Scale shape: one shuffle on the bucket key; per-bucket state is
-    the open-bin list (≤ bucket_rows), never corpus-wide. Global pack
-    ids are (bucket << 32) | local_idx — no coordination. Packing
-    quality is local to a bucket; more buckets = more parallelism,
-    marginally looser packs (measured ~1% fill loss at 256 buckets on
-    fixture chunks).
-    """
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    h = F.md5(
-        F.concat_ws(":", F.lit(salt), *[F.col(c).cast("string") for c in id_cols])
-    )
-    bucketed = df.withColumn(
-        "_bucket", (F.conv(F.substring(h, 1, 15), 16, 10).cast("long") % n_buckets)
-    )
-
-    out_schema = ", ".join(
-        f"{name} {dtype}" for name, dtype in bucketed.dtypes if name != "_bucket"
-    ) + ", pack_id long, pack_fill long"
-
-    # no per-param type hints: a partial hint set makes Spark's
-    # eval-type inference warn; the (key, pdf) arity alone selects the
-    # grouped-map path
-    def pack(key, pdf):
-        bucket = int(key[0])
-        pdf = pdf.sort_values(
-            [tokens_col, *id_cols], ascending=[False] + [True] * len(id_cols)
-        ).reset_index(drop=True)
-        bins: list[int] = []  # remaining capacity per open bin
-        assign: list[int] = []
-        for n in pdf[tokens_col]:
-            n = int(n)
-            placed = None
-            for i, rem in enumerate(bins):
-                if rem >= n:
-                    placed = i
-                    break
-            if placed is None:
-                bins.append(max(budget - n, 0))
-                placed = len(bins) - 1
-            else:
-                bins[placed] -= n
-            assign.append(placed)
-        pdf = pdf.drop(columns=["_bucket"])
-        pdf["pack_id"] = [(bucket << 32) | a for a in assign]
-        fills = {}
-        for a, n in zip(assign, pdf[tokens_col]):
-            fills[a] = fills.get(a, 0) + int(n)
-        pdf["pack_fill"] = [fills[a] for a in assign]
-        return pdf
-
-    return bucketed.groupBy("_bucket").applyInPandas(pack, schema=out_schema)
-
-
-def boilerplate_filter(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    min_df: int = 5,
-    sep: str = "\n",
-) -> DataFrame:
-    """Corpus-level boilerplate line removal (the CCNet move): a line
-    whose normalized form appears in at least ``min_df`` DISTINCT
-    documents is boilerplate — nav bars, cookie banners, copyright
-    footers — and is dropped from every document; blank lines go too.
-    Line-level dedup is the complement of document-level dedup: it
-    removes the repeated FRAGMENTS that survive whole-document
-    near-dup filters and that LMs then memorize.
-
-    Emits one row per document: ``n_lines``, ``n_removed``, and
-    ``clean_text`` reassembled from the kept lines in original order.
-
-    Scale shape: one posexplode, one distinct + hash agg for line
-    document-frequency (map-side combined), one equi-join of lines
-    against the boilerplate set on the line hash — the set is the
-    high-df tail (≤ total_lines/min_df entries, in practice tiny), so
-    AQE converts the join to broadcast at runtime — then one
-    collect_list per doc. Pure string/integer ops → oracle-exact.
-    """
-    import re as _re
-
-    lid = F.md5(F.trim(F.col("line")))
-    # split() takes a REGEX: escape the separator so a metachar sep
-    # ('|', '.') splits literally, matching the literal array_join
-    # reassembly below (code-review finding)
-    lines = df.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), F.lit(_re.escape(sep)), -1)).alias(
-            "pos", "line"
-        ),
-    ).withColumn("_norm", F.trim("line"))
-    docfreq = (
-        lines.filter(F.col("_norm") != "")
-        .select(id_col, F.md5("_norm").alias("_lh"))
-        .distinct()
-        .groupBy("_lh")
-        .agg(F.count(F.lit(1)).alias("_df"))
-        .filter(F.col("_df") >= min_df)
-        .select("_lh")
-    )
-    flagged = lines.join(
-        docfreq, lid == docfreq["_lh"], "left"
-    ).withColumn(
-        "_keep", F.col("_lh").isNull() & (F.col("_norm") != "")
-    )
-    kept_struct = F.when(F.col("_keep"), F.struct("pos", "line"))
-    return flagged.groupBy(id_col).agg(
-        F.count(F.lit(1)).cast("long").alias("n_lines"),
-        F.sum(F.when(F.col("_keep"), 0).otherwise(1)).cast("long").alias("n_removed"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(kept_struct)), lambda s: s["line"]
-            ),
-            sep,
-        ).alias("clean_text"),
-    )
-
-
-def dup_span_stats(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3
-) -> DataFrame:
-    """Cross-document duplicated-span scoring (the signal behind
-    "Deduplicating Training Data Makes Language Models Better", Lee et
-    al. 2022): for every document, the fraction of its n-token spans
-    that also occur in at least one OTHER document. Complements the
-    whole-document dedup family — a doc can pass near-dup filters yet
-    be 60% stitched from corpus-repeated spans — and the boilerplate
-    filter (which needs line structure; this doesn't).
-
-    Per doc: ``n_spans`` (positional, with multiplicity), both the
-    count and fraction of spans whose shingle has corpus document-
-    frequency > 1. Scale shape: one shingle explode kept positional,
-    one distinct + hash agg for span document-frequency, one long-key
-    equi-join against the duplicated-span set (the >1-df tail), one
-    hash agg per doc. Same 60-bit md5 shingle identity as the dedup
-    family → oracle-exact.
-    """
-    from .dedup import shingles, tokens
-
-    from ..io import fan_out
-
-    # materialize the token array ONCE: the shingle transform touches it
-    # n times per position, and an inlined tokens() re-runs the regex for
-    # every element_at reference (measured 19 s → 1.5 s at sf0.1 — the
-    # dedup.doc_shingles lesson applied here); fan the scan out first —
-    # the fixture arrives as ONE parquet split and would serialize the
-    # whole shingle map stage onto one core (io.fan_out's exact purpose)
-    toks = fan_out(df).select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
-    sp = toks.select(
-        F.col(id_col),
-        F.explode(shingles(F.col("_toks"), n)).alias("_s"),
-    ).select(
-        id_col,
-        F.conv(F.substring(F.md5("_s"), 1, 15), 16, 10).cast("long").alias("_sh"),
-    )
-    # the span table feeds TWO consumers (the doc-frequency agg and the
-    # per-position join) — persist it, checkpoint the small per-doc
-    # funnel end, release (the minhash cache-lifecycle discipline)
-    from pyspark import StorageLevel
-
-    sp = sp.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        dup_set = (
-            sp.distinct()
-            .groupBy("_sh")
-            .agg(F.count(F.lit(1)).alias("_ndocs"))
-            .filter(F.col("_ndocs") > 1)
-            .select("_sh", F.lit(1).alias("_dup"))
-        )
-        j = sp.join(dup_set, "_sh", "left")
-        out = j.groupBy(id_col).agg(
-            F.count(F.lit(1)).cast("long").alias("n_spans"),
-            F.sum(F.coalesce("_dup", F.lit(0))).cast("long").alias("n_dup_spans"),
-            F.round(
-                F.sum(F.coalesce("_dup", F.lit(0))).cast("double")
-                / F.count(F.lit(1)).cast("double"),
-                6,
-            ).alias("dup_frac"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        sp.unpersist()
-
-
 def dup_span_remove(
     df: DataFrame,
     id_col: str,
@@ -1082,10 +419,9 @@ def dup_span_remove(
 ) -> DataFrame:
     """Cross-document duplicated-span REMOVAL (the rewrite step of
     "Deduplicating Training Data Makes Language Models Better", Lee et
-    al. 2022 — :func:`dup_span_stats` is the scoring twin): drop every
-    token covered by ANY n-token span whose shingle occurs in more
-    than one document, and reassemble the survivors. Every input doc
-    appears in the output (a rewrite, not a filter) — docs with no
+    al. 2022): drop every token covered by ANY n-token span whose
+    shingle occurs in more than one document, and reassemble the
+    survivors. Every input doc appears in the output (a rewrite, not a filter) — docs with no
     duplicated spans pass through byte-identical modulo tokenization.
 
     Scale shape: one positional shingle explode, one distinct + hash
@@ -1098,7 +434,6 @@ def dup_span_remove(
     """
     from pyspark import StorageLevel
 
-    from .dedup import shingles, tokens
     from .sketch import _hash60
     from ..io import fan_out
 
@@ -1180,251 +515,3 @@ def dup_span_remove(
         sp.unpersist()
         if own_toks:
             toks.unpersist()
-
-
-def nb_train_predict(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    label_col: str,
-    train_frac: float = 0.8,
-    salt: str = "nb",
-) -> DataFrame:
-    """Multinomial Naive Bayes trained and evaluated IN the engine —
-    the classical supervised text classifier as pure relational
-    algebra, end-to-end: deterministic hash split, token-count
-    training with Laplace smoothing, log-space scoring of the held-out
-    split, argmax prediction. Every quantity is either an exact
-    integer count or a 6dp-quantized ln of a ratio of exact counts
-    (the bigram-LM recipe), and score sums are exact BIGINT math — so
-    the trained model AND every prediction are bit-identical across
-    engines and a SQL oracle replays the whole workflow.
-
-    Scale shape: training = one tokenize explode + three hash aggs
-    (token-class counts, class totals, vocab size — the model is
-    |vocab|·|classes| rows, joined not collected); scoring = test
-    token counts × |classes| (a small broadcast fan-out) joined
-    against the model on (token, label), with unseen-token mass
-    handled in closed form (doc_len − seen) · default_c, so missing
-    (token, class) pairs never materialize. Output: one row per test
-    doc — (id, actual, predicted, correct)."""
-    from .sketch import hash_split
-
-    split = hash_split(
-        df.select(id_col, text_col, label_col),
-        id_col,
-        {"train": train_frac, "test": 1.0 - train_frac},
-        salt=salt,
-    )
-    toks = split.select(
-        id_col, label_col, "split", tokens(F.col(text_col)).alias("_toks")
-    )
-    tok_long = toks.select(
-        id_col, label_col, "split", F.explode("_toks").alias("tok")
-    )
-    train = tok_long.filter(F.col("split") == "train")
-
-    tc = train.groupBy(label_col, "tok").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
-    )
-    cls = train.groupBy(label_col).agg(
-        F.sum(F.lit(1)).cast("long").alias("tot_c"),
-        F.countDistinct(id_col).cast("long").alias("n_docs_c"),
-    )
-    vocab = tc.select("tok").distinct().agg(F.count(F.lit(1)).alias("v"))
-    ndocs = (
-        split.filter(F.col("split") == "train")
-        .agg(F.count(F.lit(1)).alias("nd"))
-    )
-    consts = cls.crossJoin(F.broadcast(vocab)).crossJoin(F.broadcast(ndocs))
-    lnq6 = lambda num, den: (  # noqa: E731 — shared quantized-ln shape
-        F.round(F.log(num.cast("double") / den.cast("double")), 6) * 1000000
-    ).cast("long")
-    model_cls = consts.select(
-        label_col,
-        lnq6(F.col("n_docs_c"), F.col("nd")).alias("lnprior"),
-        lnq6(F.lit(1), F.col("tot_c") + F.col("v")).alias("lndefault"),
-        (F.col("tot_c") + F.col("v")).alias("_den"),
-    )
-    model_tok = tc.join(F.broadcast(model_cls.select(label_col, "_den")), label_col).select(
-        label_col,
-        "tok",
-        lnq6(F.col("cnt") + 1, F.col("_den")).alias("lntok"),
-    )
-
-    test = tok_long.filter(F.col("split") == "test")
-    dt = test.groupBy(id_col, "tok").agg(F.count(F.lit(1)).cast("long").alias("nt"))
-    dl = dt.groupBy(id_col).agg(F.sum("nt").cast("long").alias("dlen"))
-    # fan each test doc's tokens out across the class list (tiny)
-    classes = model_cls.select(label_col, "lnprior", "lndefault")
-    fan = dt.crossJoin(F.broadcast(classes.select(label_col)))
-    hit = fan.join(model_tok, [label_col, "tok"], "left")
-    per = hit.groupBy(id_col, label_col).agg(
-        F.sum(F.when(F.col("lntok").isNotNull(), F.col("nt") * F.col("lntok")))
-        .cast("long")
-        .alias("_seen"),
-        F.sum(F.when(F.col("lntok").isNotNull(), F.col("nt")).otherwise(0))
-        .cast("long")
-        .alias("_nseen"),
-    )
-    scored = (
-        per.join(F.broadcast(classes), label_col)
-        .join(dl, id_col)
-        .select(
-            id_col,
-            label_col,
-            (
-                F.col("lnprior")
-                + F.coalesce("_seen", F.lit(0))
-                + (F.col("dlen") - F.col("_nseen")) * F.col("lndefault")
-            ).alias("score"),
-        )
-    )
-    from pyspark.sql import Window
-
-    wr = Window.partitionBy(id_col).orderBy(F.desc("score"), label_col)
-    pred = (
-        scored.withColumn("_rn", F.row_number().over(wr))
-        .filter(F.col("_rn") == 1)
-        .select(id_col, F.col(label_col).alias("predicted"))
-    )
-    actual = split.filter(F.col("split") == "test").select(
-        id_col, F.col(label_col).alias("actual")
-    )
-    # LEFT join: a zero-token test doc has no score rows — it keeps its
-    # output row with predicted NULL / correct 0 rather than vanishing
-    # (code-review finding; the docstring contract is one row per doc)
-    return actual.join(pred, id_col, "left").select(
-        id_col,
-        "actual",
-        "predicted",
-        F.coalesce(
-            (F.col("actual") == F.col("predicted")).cast("int"), F.lit(0)
-        ).alias("correct"),
-    )
-
-
-def pseudonymize(
-    df: DataFrame, cols: "Sequence[str]", salt: str
-) -> DataFrame:
-    """Join-preserving pseudonymization: replace each listed column's
-    values with a deterministic 60-bit keyed surrogate
-    (md5(salt:value)) — the privacy step that lets keyed joins,
-    group-bys, and frequency analyses run downstream WITHOUT raw
-    identifiers ever leaving the trust boundary. The same (salt,
-    value) maps to the same surrogate in every table, so referential
-    integrity survives; rotating the salt unlinks every historical
-    export at once. NULL stays NULL (a surrogate for NULL would
-    manufacture joins between unknown parties).
-
-    Pure projection — no shuffle, scan-speed at any size. 60-bit
-    surrogates can collide (~n^2/2^61 expected pairs); a collision
-    MERGES two identities, which is privacy-safe but analytically
-    lossy — callers needing certainty at billions of keys should
-    widen to the full md5 hex instead (same formula, string-typed).
-    """
-    from .sketch import _hash60
-
-    out = df
-    for c in cols:
-        sur = _hash60(F.concat(F.lit(f"{salt}:"), F.col(c).cast("string")))
-        out = out.withColumn(c, F.when(F.col(c).isNotNull(), sur))
-    return out
-
-
-def cdc_chunks(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    window: int = 3,
-    mask: int = 15,
-) -> DataFrame:
-    """Content-defined chunking (the rsync/LBFS boundary trick, token
-    granularity): a chunk boundary falls AFTER token position i when
-    the rolling window hash of the ``window`` tokens ending at i
-    satisfies ``hash % (mask+1) == 0`` — so boundaries are anchored
-    to CONTENT, not offsets, and inserting a sentence into a document
-    shifts only the chunks it touches while every later chunk keeps
-    its identity (fixed-stride windows re-key the whole tail — this
-    is why CDC is the dedup-friendly chunking for evolving corpora).
-    Expected chunk size ≈ mask+1 tokens; every boundary decision is
-    INDEPENDENT (no min-size carry state), which is what keeps the
-    operator a pure parallel projection — runt-chunk merging is a
-    separate sequential policy a caller can apply downstream.
-
-    Pure column math end to end: ONE tokenize, the shingle transform
-    for window hashes, a filter over boundary positions, one
-    posexplode — map-only at any corpus size, same scale shape as
-    chunk_documents. The 60-bit md5 window hash is the engine-
-    portable shingle identity, so a SQL oracle reproduces every
-    boundary and every chunk exactly.
-
-    Emits (id, chunk_idx, tok_start 1-based, n_tokens, chunk_text).
-    """
-    from .dedup import shingles, tokens
-    from .sketch import _hash60
-
-    toks = df.select(
-        F.col(id_col),
-        F.coalesce(tokens(F.col(text_col)), F.array().cast("array<string>"))
-        .alias("_t"),
-    )
-    # shingle j (1-based) spans tokens j..j+window-1; a boundary cuts
-    # AFTER its last token. The final token position never cuts (the
-    # tail chunk always closes at n). The hash array MATERIALIZES in
-    # its own projection before any element_at touches it — accessing
-    # an unevaluated transform() through element_at re-derives the
-    # whole array per position, an O(n^2)-per-doc trap (the
-    # dup_span_stats tokenize lesson; measured 17.9 s -> ~2 s at
-    # sf0.1 when this stage was split out).
-    toks = toks.withColumn(
-        "_hs",
-        F.transform(
-            shingles(F.col("_t"), window), lambda s: _hash60(s)
-        ),
-    )
-    # sequence(1, 0) counts DOWN in Spark (the shingles() lesson):
-    # guard the empty-shingle case explicitly
-    idx = F.when(
-        F.size("_hs") >= 1, F.sequence(F.lit(1), F.size("_hs"))
-    ).otherwise(F.array().cast("array<int>"))
-    cuts = F.transform(
-        F.filter(
-            idx,
-            lambda i: (F.element_at(F.col("_hs"), i) % (mask + 1) == 0)
-            & (i + F.lit(window) - 1 < F.size("_t")),
-        ),
-        lambda i: (i + F.lit(window) - 1).cast("int"),
-    )
-    starts = F.concat(
-        F.array(F.lit(1).cast("int")), F.transform(cuts, lambda c: c + 1)
-    )
-    ends = F.concat(cuts, F.array(F.size("_t").cast("int")))
-    chunked = toks.select(
-        id_col,
-        "_t",
-        F.posexplode(F.arrays_zip(starts.alias("s"), ends.alias("e"))).alias(
-            "chunk_idx", "_se"
-        ),
-    ).filter(F.col("_se.e") >= F.col("_se.s"))
-    return chunked.select(
-        F.col(id_col),
-        F.col("chunk_idx").cast("long").alias("chunk_idx"),
-        F.col("_se.s").cast("long").alias("tok_start"),
-        (F.col("_se.e") - F.col("_se.s") + 1).cast("long").alias("n_tokens"),
-        F.array_join(
-            F.slice(F.col("_t"), F.col("_se.s"), F.col("_se.e") - F.col("_se.s") + 1),
-            " ",
-        ).alias("chunk_text"),
-    )
-
-# BPE trainer/encoder live in operators/bpe.py (round-9 split);
-# re-exported here because callers and tests address them as
-# text.bpe_* (the text-operator namespace).
-from .bpe import (  # noqa: E402,F401
-    _bpe_batch_prefix,
-    _bpe_merge_word,
-    bpe_apply,
-    bpe_encode_tokens,
-    bpe_train,
-)

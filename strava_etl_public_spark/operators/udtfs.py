@@ -1,19 +1,17 @@
 """Python UDTFs — the imperative table-function extension point.
 
 Spark 4's Python UDTF is the sanctioned escape hatch when an operator
-genuinely needs per-row imperative logic that EMITS MULTIPLE ROWS:
-the class's eval() yields output rows, the engine plans the call as a
-lateral generator (one Python worker per task, Arrow-batched when
-``useArrow=True``), and the result composes with ordinary relational
-operators downstream.
+genuinely needs per-row imperative logic that EMITS ROWS: the class's
+eval() consumes input rows, terminate() yields output rows, and the
+engine plans the call as a table function whose result composes with
+ordinary relational operators downstream.
 
-Discipline: the hot path stays declarative — every UDTF here has a
-codegen'd HOF twin (chunk_windows_udtf ≡ text.chunk_documents), the
-UDTF exists to prove the EXTENSION POINT works and is oracle-gated to
-the same answer. A production pipeline reaches for this only when the
-per-row logic can't be expressed with built-ins (external tokenizers,
-stateful parsers); re-expressing chunking imperatively keeps the
-parity claim testable down to every row.
+Discipline: the hot path stays declarative — the UDTF here has a
+vectorized twin (ewma_final_udtf ≡ the last row per key of
+rolling.ewma_by_key); the UDTF exists to prove the TABLE-argument
+EXTENSION POINT works and is pinned to the same answer. A production
+pipeline reaches for this only when the per-row logic can't be
+expressed with built-ins (external tokenizers, stateful parsers).
 
 Reference semantics: the reference walks per-activity payloads with
 imperative Python loops (strava_sdk.py:137-176); this is the
@@ -23,44 +21,12 @@ imperative.
 
 from __future__ import annotations
 
-import math
-import re
-
 from pyspark.sql.functions import udtf
-
-from .dedup import TOKEN_RE
-
-_TOKEN_PATTERN = re.compile(TOKEN_RE)
-
-
-@udtf(returnType="chunk_idx bigint, chunk_text string, n_tokens bigint", useArrow=True)
-class ChunkWindowsUDTF:
-    """Overlapping context windows — row-identical to
-    text.chunk_documents(chunk_tokens, stride): tokenize with the
-    corpus TOKEN_RE, start a window every ``stride`` tokens, span
-    ``chunk_tokens``, keep the shorter tail, emit nothing for an
-    empty token list. chunk_idx = start // stride, matching the
-    declarative twin's posexplode index."""
-
-    def eval(self, text: str, chunk_tokens: int, stride: int):
-        toks = _TOKEN_PATTERN.findall(text.lower()) if text else []
-        n = len(toks)
-        last = max(0, math.ceil((n - chunk_tokens) / stride) * stride)
-        for s in range(0, last + 1, stride):
-            w = toks[s : s + chunk_tokens]
-            if w:
-                yield (s // stride, " ".join(w), len(w))
-
-
-def register_udtfs(spark) -> None:
-    """Idempotently register the UDTF inventory on a session."""
-    spark.udtf.register("chunk_windows_udtf", ChunkWindowsUDTF)
-    spark.udtf.register("ewma_final_udtf", EwmaFinalUDTF)
 
 
 @udtf(returnType="user_id bigint, n bigint, ewma double")
 class EwmaFinalUDTF:
-    """TABLE-argument UDTF — the second Python table-function
+    """TABLE-argument UDTF — the Python table-function
     invocation form: `ewma_final_udtf(TABLE(v) PARTITION BY user_id
     ORDER BY (_ns, event_id))`. The engine shuffles rows by the
     PARTITION BY key, sorts each partition by the ORDER BY, and feeds
@@ -94,3 +60,8 @@ class EwmaFinalUDTF:
             # the twin surfaces the poisoned state as NULL (Spark's
             # Arrow serializer maps pandas NaN → null on the way back)
             yield (self._key, self._n, None if s != s else s)
+
+
+def register_udtfs(spark) -> None:
+    """Idempotently register the UDTF inventory on a session."""
+    spark.udtf.register("ewma_final_udtf", EwmaFinalUDTF)

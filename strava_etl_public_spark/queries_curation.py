@@ -61,116 +61,7 @@ def x_global_row_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Boilerplate line removal (CCNet-style line-level dedup)
-# ---------------------------------------------------------------------------
-
-
-@register_extra(
-    "x_text_boilerplate",
-    oracle="""
-WITH l AS (
-  SELECT doc_id, t.i AS pos,
-         CASE t.i WHEN 1 THEN 'nav: home | about | contact'
-                  WHEN 2 THEN 'source: ' || source
-                  WHEN 3 THEN text
-                  ELSE 'copyright ' || source END AS line
-  FROM documents, unnest([1, 2, 3, 4]) AS t(i)
-),
-n AS (SELECT doc_id, pos, line, trim(line) AS norm FROM l),
-bp AS (
-  SELECT md5(norm) AS lh FROM (SELECT DISTINCT doc_id, norm FROM n WHERE norm != '')
-  GROUP BY md5(norm) HAVING count(*) >= 5
-),
-f AS (
-  SELECT n.doc_id, n.pos, n.line,
-         (bp.lh IS NULL AND n.norm != '') AS keep
-  FROM n LEFT JOIN bp ON md5(n.norm) = bp.lh
-)
-SELECT doc_id,
-       CAST(count(*) AS BIGINT) AS n_lines,
-       CAST(sum(CASE WHEN keep THEN 0 ELSE 1 END) AS BIGINT) AS n_removed,
-       md5(coalesce(string_agg(CASE WHEN keep THEN line END, chr(10) ORDER BY pos), ''))
-         AS clean_md5
-FROM f GROUP BY doc_id
-""",
-)
-def x_text_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style boilerplate removal over a derived 4-line corpus
-    (global nav header + per-source banner + real content + per-source
-    footer — the repeated-fragment shape real crawls have): any line
-    whose normalized form appears in ≥5 distinct documents is dropped
-    corpus-wide, so the banners vanish and content survives — EXCEPT
-    content that is itself duplicated ≥5× (the planted exact-dup
-    groups), which line-level dedup correctly catches too. Output
-    compares the reassembled text by md5 so the oracle still proves
-    byte-exact reassembly without shipping full texts."""
-    ensure_harness_conf(spark)
-    from .operators.text import boilerplate_filter
-
-    d = load(spark, sf_dir, "documents")
-    multi = d.select(
-        "doc_id",
-        F.concat_ws(
-            "\n",
-            F.lit("nav: home | about | contact"),
-            F.concat(F.lit("source: "), F.col("source")),
-            F.col("text"),
-            F.concat(F.lit("copyright "), F.col("source")),
-        ).alias("mtext"),
-    )
-    out = boilerplate_filter(multi, "doc_id", "mtext", min_df=5, sep="\n")
-    return out.select(
-        "doc_id", "n_lines", "n_removed", F.md5("clean_text").alias("clean_md5")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Cross-document duplicated-span fraction
-# ---------------------------------------------------------------------------
-
-
-@register_extra(
-    "x_text_dup_spans",
-    oracle="""
-WITH tk AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9_]+') AS t FROM documents
-),
-sp AS (
-  SELECT doc_id,
-         CAST(concat('0x', substr(md5(t[i] || ' ' || t[i+1] || ' ' || t[i+2]),
-                                  1, 15)) AS BIGINT) AS sh
-  FROM tk, unnest(generate_series(1, greatest(len(t) - 2, 0))) AS u(i)
-),
-dfq AS (
-  SELECT sh FROM (SELECT DISTINCT doc_id, sh FROM sp)
-  GROUP BY sh HAVING count(*) > 1
-),
-j AS (
-  SELECT sp.doc_id, CASE WHEN dfq.sh IS NULL THEN 0 ELSE 1 END AS dup
-  FROM sp LEFT JOIN dfq ON sp.sh = dfq.sh
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_spans,
-       CAST(sum(dup) AS BIGINT) AS n_dup_spans,
-       round(CAST(sum(dup) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS dup_frac
-FROM j GROUP BY doc_id
-""",
-)
-def x_text_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document duplicated-span fraction (Lee et al. 2022 signal):
-    share of each doc's positional 3-token spans whose shingle occurs
-    in >1 document corpus-wide. Catches stitched/templated documents
-    that whole-document near-dup misses; pairs with x_dedup_* (drop
-    decisions) as a graded keep/down-weight signal. Same 60-bit
-    shingle identity as the dedup family, so the two families compose
-    on one shingle table in fused pipelines."""
-    ensure_harness_conf(spark)
-    from .operators.text import dup_span_stats
-
-    return dup_span_stats(load(spark, sf_dir, "documents"), "doc_id", "text", n=3)
-
-
-# ---------------------------------------------------------------------------
-# Cross-document duplicated-span REMOVAL (rewrite twin of the scorer)
+# Cross-document duplicated-span removal
 # ---------------------------------------------------------------------------
 
 
@@ -237,51 +128,6 @@ def x_text_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.text import dup_span_remove
 
     return dup_span_remove(load(spark, sf_dir, "documents"), "doc_id", "text", n=3)
-
-
-# ---------------------------------------------------------------------------
-# BPE vocabulary induction (rows-only: iterative merge state is not
-# SQL-expressible; pinned instead against a single-process reference
-# implementation in tests/test_text.py)
-# ---------------------------------------------------------------------------
-
-
-@register_extra("x_text_bpe_vocab")
-def x_text_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BPE vocabulary induction (Sennrich et al. 2016):
-    20 merges trained on the documents corpus. The corpus is scanned
-    once into a word-frequency table; every iteration runs over
-    |distinct words| rows with ONE bounded driver action (the argmax
-    pair), so corpus size only affects the first agg. Deterministic
-    merge order (count desc, pair lex asc) — pytest proves the exact
-    sequence equals a single-process reference trainer."""
-    ensure_harness_conf(spark)
-    from .operators.text import bpe_train
-
-    merges, _vocab = bpe_train(
-        load(spark, sf_dir, "documents"), "text", num_merges=20
-    )
-    rows = [
-        (i + 1, a, b, a + b, n) for i, (a, b, n) in enumerate(merges)
-    ]
-    return spark.createDataFrame(
-        rows, "rank INT, left STRING, right STRING, merged STRING, pair_count LONG"
-    )
-
-
-@register_extra("x_text_bpe_encode")
-def x_text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Apply the corpus-trained BPE merge table to every document:
-    per-doc word count, BPE token count, tokens/word. The merge table
-    is bounded driver model state; encoding is one Arrow pass with a
-    per-partition word→length memo. The real token-budget accounting
-    a training pipeline runs after inducing its tokenizer."""
-    ensure_harness_conf(spark)
-    from .operators.text import bpe_apply, bpe_train
-
-    docs = load(spark, sf_dir, "documents")
-    merges, _ = bpe_train(docs, "text", num_merges=20)
-    return bpe_apply(docs, "doc_id", "text", merges)
 
 
 # ---------------------------------------------------------------------------
@@ -446,225 +292,6 @@ def x_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
     )
     return triangle_counts(edges)
-
-
-# ---------------------------------------------------------------------------
-# DSIR-style importance weighting (hashed n-gram features)
-# ---------------------------------------------------------------------------
-
-
-@register_extra(
-    "x_curation_dsir",
-    oracle="""
-WITH tk AS (
-  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9_]+')) AS t
-  FROM documents
-),
-b AS (
-  SELECT tk.doc_id,
-         CAST(concat('0x', substr(md5('dsir:' || t), 1, 15)) AS BIGINT) % 256 AS bk,
-         CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS ist
-  FROM tk JOIN documents d USING (doc_id)
-),
-bt AS (
-  SELECT bk, CAST(count(*) AS BIGINT) AS q, CAST(sum(ist) AS BIGINT) AS p
-  FROM b GROUP BY bk
-),
-s AS (
-  SELECT b.doc_id, CAST(sum(bt.p) AS BIGINT) AS num,
-         CAST(sum(bt.q) AS BIGINT) AS den
-  FROM b JOIN bt USING (bk) GROUP BY b.doc_id
-)
-SELECT d.doc_id,
-       coalesce(s.num, 0) AS n_target_hits,
-       coalesce(s.den, 0) AS n_corpus_hits,
-       CASE WHEN s.den IS NULL THEN 0.0
-            ELSE round(CAST(s.num AS DOUBLE) / CAST(s.den AS DOUBLE), 6) + 0.0
-       END AS imp
-FROM documents d LEFT JOIN s USING (doc_id)
-""",
-)
-def x_curation_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR-style importance score of every document against the
-    English subcorpus as target (operators/text.dsir_importance —
-    hashed unigram features, 256 buckets, exact linear num/den proxy
-    so the oracle matches bit-for-bit; see the operator docstring for
-    the log-ratio deviation note). The two 256-row bucket tables are
-    the only model state; at any corpus size the plan is explode →
-    two broadcasts → per-doc agg."""
-    ensure_harness_conf(spark)
-    from .operators.text import dsir_importance
-
-    docs = load(spark, sf_dir, "documents")
-    return dsir_importance(
-        docs, "doc_id", "text", target_pred=F.col("lang") == "en"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Interval UNION (gaps-and-islands): merge_intervals consumers
-# ---------------------------------------------------------------------------
-
-
-@register_extra(
-    "x_interval_islands",
-    oracle="""
-WITH iv AS (
-  SELECT l_suppkey,
-         CAST(epoch_ns(l_shipdate) // 1000000000 AS BIGINT) // 86400 AS s,
-         CAST(epoch_ns(l_shipdate) // 1000000000 AS BIGINT) // 86400
-           + CAST(l_quantity AS BIGINT) AS e
-  FROM lineitem
-),
-fl AS (
-  SELECT l_suppkey, s, e,
-         CASE WHEN max(e) OVER w IS NULL OR s > max(e) OVER w
-              THEN 1 ELSE 0 END AS f
-  FROM iv
-  WINDOW w AS (PARTITION BY l_suppkey ORDER BY s, e
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-),
-isl AS (
-  SELECT l_suppkey, s, e,
-         sum(f) OVER (PARTITION BY l_suppkey ORDER BY s, e
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS g
-  FROM fl
-)
-SELECT l_suppkey, CAST(g AS BIGINT) AS island_id,
-       CAST(min(s) AS BIGINT) AS island_start,
-       CAST(max(e) AS BIGINT) AS island_end,
-       CAST(count(*) AS BIGINT) AS n_intervals
-FROM isl GROUP BY l_suppkey, g
-""",
-)
-def x_interval_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Supplier busy periods: union the [ship, ship+quantity-days]
-    interval of every lineitem per supplier into maximal islands —
-    the interval-UNION relational shape (gaps-and-islands on true
-    spans, where an interval can be swallowed entirely by an earlier
-    longer one; running-max, not lag, is the correctness hinge).
-    One shuffle total: both windows and the island agg share the
-    l_suppkey partitioning. Epoch-day arithmetic goes through the
-    encoding-dispatch helpers so either physical l_shipdate type
-    works; l_quantity is integral-valued so the BIGINT cast is
-    engine-safe."""
-    ensure_harness_conf(spark)
-    from .operators.rangejoin import merge_intervals
-
-    li = load(spark, sf_dir, "lineitem")
-    iv = li.select(
-        "l_suppkey",
-        F.floor(ep.epoch_s(li, "l_shipdate") / 86400).cast("long").alias("s"),
-        (
-            F.floor(ep.epoch_s(li, "l_shipdate") / 86400)
-            + F.col("l_quantity").cast("long")
-        ).cast("long").alias("e"),
-    )
-    return merge_intervals(iv, ["l_suppkey"], "s", "e", gap=0)
-
-
-@register_extra(
-    "x_text_dup_extents",
-    oracle="""
-WITH tk AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9_]+') AS t FROM documents
-),
-sp AS (
-  SELECT doc_id, i,
-         CAST(concat('0x', substr(md5(t[i] || ' ' || t[i+1] || ' ' || t[i+2]),
-                                  1, 15)) AS BIGINT) AS sh
-  FROM tk, unnest(generate_series(1, greatest(len(t) - 2, 0))) AS u(i)
-),
-dfq AS (
-  SELECT sh FROM (SELECT DISTINCT doc_id, sh FROM sp)
-  GROUP BY sh HAVING count(*) > 1
-),
-iv AS (
-  SELECT sp.doc_id, sp.i AS s, sp.i + 2 AS e
-  FROM sp JOIN dfq ON sp.sh = dfq.sh
-),
-fl AS (
-  SELECT doc_id, s, e,
-         CASE WHEN max(e) OVER w IS NULL OR s > max(e) OVER w
-              THEN 1 ELSE 0 END AS f
-  FROM iv
-  WINDOW w AS (PARTITION BY doc_id ORDER BY s, e
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-),
-isl AS (
-  SELECT doc_id, s, e,
-         sum(f) OVER (PARTITION BY doc_id ORDER BY s, e
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS g
-  FROM fl
-)
-SELECT doc_id, CAST(g AS BIGINT) AS island_id,
-       CAST(min(s) AS BIGINT) AS island_start,
-       CAST(max(e) AS BIGINT) AS island_end,
-       CAST(max(e) - min(s) + 1 AS BIGINT) AS extent_len,
-       CAST(count(*) AS BIGINT) AS n_spans
-FROM isl GROUP BY doc_id, g
-""",
-)
-def x_text_dup_extents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maximal duplicated-text extents: the [p, p+2] interval of every
-    corpus-duplicated 3-token span, unioned per doc into contiguous
-    extents (doc_id, start, end, token length, span count) — the
-    audit view behind x_text_span_removal (WHICH passages are
-    duplicated, not just how much), and the closest n-gram-seeded
-    analogue of Lee et al.'s suffix-array duplicate extents. Same
-    shingle identity as the dedup family; merge_intervals does the
-    union in one doc_id-partitioned shuffle."""
-    ensure_harness_conf(spark)
-    from .operators.dedup import shingles, tokens
-    from .operators.rangejoin import merge_intervals
-    from .io import fan_out
-
-    from pyspark import StorageLevel
-
-    from .operators.sketch import _hash60
-
-    docs = load(spark, sf_dir, "documents")
-    toks = fan_out(docs).select(
-        F.col("doc_id"), tokens(F.col("text")).alias("_toks")
-    )
-    # sp feeds TWO consumers (the df-agg and the dup-start join):
-    # persist, checkpoint the small island table, release — the
-    # dup_span_stats cache-lifecycle convention (code-review finding:
-    # the unpersisted version re-ran tokenize+shingle+md5 twice)
-    sp = (
-        toks.select(
-            "doc_id", F.posexplode(shingles(F.col("_toks"), 3)).alias("_p0", "_s")
-        )
-        .select(
-            "doc_id",
-            (F.col("_p0") + 1).alias("s"),
-            _hash60(F.col("_s")).alias("_sh"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    try:
-        dup_set = (
-            sp.select("doc_id", "_sh")
-            .distinct()
-            .groupBy("_sh")
-            .agg(F.count(F.lit(1)).alias("_ndocs"))
-            .filter(F.col("_ndocs") > 1)
-            .select("_sh")
-        )
-        iv = sp.join(dup_set, "_sh").select(
-            "doc_id", "s", (F.col("s") + 2).alias("e")
-        )
-        out = merge_intervals(iv, ["doc_id"], "s", "e", gap=0).select(
-            "doc_id",
-            "island_id",
-            "island_start",
-            "island_end",
-            (F.col("island_end") - F.col("island_start") + 1).alias("extent_len"),
-            F.col("n_intervals").alias("n_spans"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        sp.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -855,66 +482,3 @@ def x_pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         toks.unpersist()
         docs.unpersist()
-
-
-# ---------------------------------------------------------------------------
-# Content-defined chunking (CDC)
-# ---------------------------------------------------------------------------
-
-
-@register_extra(
-    "x_text_cdc_chunks",
-    oracle="""
-WITH tk AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9_]+') AS t FROM documents
-),
-sh AS (
-  SELECT doc_id, i,
-         CAST(concat('0x', substr(md5(t[i] || ' ' || t[i+1] || ' ' || t[i+2]),
-                                  1, 15)) AS BIGINT) AS h,
-         len(t) AS n
-  FROM tk, unnest(generate_series(1, greatest(len(t) - 2, 0))) AS u(i)
-),
-cuts AS (
-  SELECT doc_id, i + 2 AS c FROM sh WHERE h % 16 = 0 AND i + 2 < n
-),
-b AS (
-  SELECT doc_id, 1 AS s FROM tk WHERE len(t) > 0
-  UNION ALL
-  SELECT doc_id, c + 1 FROM cuts
-),
-r AS (
-  SELECT doc_id, s,
-         CAST(row_number() OVER (PARTITION BY doc_id ORDER BY s) - 1 AS BIGINT)
-           AS chunk_idx
-  FROM b
-),
-e AS (
-  SELECT r.doc_id, r.chunk_idx, r.s,
-         coalesce(lead(r.s) OVER (PARTITION BY r.doc_id ORDER BY r.s) - 1,
-                  len(tk.t)) AS en,
-         tk.t
-  FROM r JOIN tk ON tk.doc_id = r.doc_id
-)
-SELECT doc_id, chunk_idx,
-       CAST(s AS BIGINT) AS tok_start,
-       CAST(en - s + 1 AS BIGINT) AS n_tokens,
-       array_to_string(list_slice(t, s, en), ' ') AS chunk_text
-FROM e
-""",
-)
-def x_text_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-defined chunking over the corpus (operators/text.
-    cdc_chunks): boundaries where the rolling 3-token window hash is
-    0 mod 16 (expected chunk ~16 tokens) — chunk identity anchored to
-    content, so edits shift only the chunks they touch while fixed-
-    stride windows re-key the whole tail. Every boundary decision is
-    independent: the operator stays a pure parallel projection
-    (tokenize, shingle-hash, filter, posexplode — map-only), and the
-    oracle reproduces every boundary, extent, and chunk text exactly."""
-    ensure_harness_conf(spark)
-    from .operators.text import cdc_chunks
-
-    return cdc_chunks(
-        load(spark, sf_dir, "documents"), "doc_id", "text", window=3, mask=15
-    )

@@ -130,107 +130,6 @@ def x_embed_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Naive Bayes: train + held-out evaluation, oracle-exact
-# ---------------------------------------------------------------------------
-
-
-@register_extra(
-    "x_nb_classifier",
-    oracle="""
-WITH sp AS (
-  SELECT doc_id, text, lang,
-         CASE WHEN CAST(concat('0x', substr(md5(concat('nb:',
-                CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % 1000000
-              < 800000 THEN 'train' ELSE 'test' END AS split
-  FROM documents
-),
-tl AS (
-  SELECT doc_id, lang, split,
-         unnest(regexp_extract_all(lower(text), '[a-z0-9_]+')) AS tok
-  FROM sp
-),
-tc AS (
-  SELECT lang, tok, CAST(count(*) AS BIGINT) AS cnt
-  FROM tl WHERE split = 'train' GROUP BY lang, tok
-),
-cls AS (
-  SELECT lang, CAST(count(*) AS BIGINT) AS tot_c,
-         CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs_c
-  FROM tl WHERE split = 'train' GROUP BY lang
-),
-vv AS (SELECT CAST(count(DISTINCT tok) AS BIGINT) AS v FROM tc),
-nd AS (SELECT CAST(count(*) AS BIGINT) AS nd FROM sp WHERE split = 'train'),
-mc AS (
-  SELECT cls.lang,
-         CAST(round(ln(CAST(n_docs_c AS DOUBLE) / CAST(nd.nd AS DOUBLE)), 6)
-              * 1000000 AS BIGINT) AS lnprior,
-         CAST(round(ln(CAST(1 AS DOUBLE) / CAST(tot_c + vv.v AS DOUBLE)), 6)
-              * 1000000 AS BIGINT) AS lndefault,
-         tot_c + vv.v AS den
-  FROM cls, vv, nd
-),
-mt AS (
-  SELECT tc.lang, tc.tok,
-         CAST(round(ln(CAST(cnt + 1 AS DOUBLE) / CAST(mc.den AS DOUBLE)), 6)
-              * 1000000 AS BIGINT) AS lntok
-  FROM tc JOIN mc ON tc.lang = mc.lang
-),
-dt AS (
-  SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS nt
-  FROM tl WHERE split = 'test' GROUP BY doc_id, tok
-),
-dl AS (SELECT doc_id, CAST(sum(nt) AS BIGINT) AS dlen FROM dt GROUP BY doc_id),
-fan AS (SELECT dt.doc_id, dt.tok, dt.nt, mc.lang FROM dt, mc),
-hit AS (
-  SELECT f.doc_id, f.lang,
-         CAST(coalesce(sum(CASE WHEN mt.lntok IS NOT NULL
-                                THEN f.nt * mt.lntok END), 0) AS BIGINT) AS seen,
-         CAST(sum(CASE WHEN mt.lntok IS NOT NULL THEN f.nt ELSE 0 END)
-              AS BIGINT) AS nseen
-  FROM fan f LEFT JOIN mt ON mt.lang = f.lang AND mt.tok = f.tok
-  GROUP BY f.doc_id, f.lang
-),
-sc AS (
-  SELECT h.doc_id, h.lang,
-         mc.lnprior + h.seen + (dl.dlen - h.nseen) * mc.lndefault AS score
-  FROM hit h JOIN mc ON h.lang = mc.lang JOIN dl ON h.doc_id = dl.doc_id
-),
-pr AS (
-  SELECT doc_id, lang AS predicted
-  FROM (SELECT doc_id, lang, score,
-               row_number() OVER (PARTITION BY doc_id
-                                  ORDER BY score DESC, lang) AS rn
-        FROM sc)
-  WHERE rn = 1
-)
-SELECT sp.doc_id, sp.lang AS actual, pr.predicted,
-       CAST(CASE WHEN sp.lang = pr.predicted THEN 1 ELSE 0 END AS INTEGER)
-         AS correct
-FROM sp JOIN pr ON sp.doc_id = pr.doc_id
-WHERE sp.split = 'test'
-""",
-)
-def x_nb_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Supervised learning entirely in the engine, oracle-exact:
-    multinomial Naive Bayes over document tokens — deterministic 80/20
-    hash split, Laplace-smoothed training (the model is
-    |vocab|·|classes| relational rows, never collected), log-space
-    scoring of the held-out split with closed-form unseen-token mass,
-    argmax prediction. Counts are exact integers and every log is a
-    6dp-quantized ln of a ratio of exact counts, so the model AND
-    every per-doc prediction hash-match a SQL replay of the whole
-    train→predict workflow. (The synthetic fixture's languages share
-    a vocabulary, so accuracy is near-prior — the verified artifact is
-    the workflow, and the per-doc agreement proves it end-to-end.)"""
-    ensure_harness_conf(spark)
-    from .operators.text import nb_train_predict
-
-    return nb_train_predict(
-        load(spark, sf_dir, "documents"), "doc_id", "text", "lang", 0.8
-    )
-
-
-# ---------------------------------------------------------------------------
 # Johnson-Lindenstrauss projection: distance-preservation report
 # ---------------------------------------------------------------------------
 

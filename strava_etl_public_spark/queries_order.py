@@ -96,28 +96,30 @@ QUERY_ORDER: tuple[str, ...] = (
     # x_sim_topk_ivf_arrow demoted (r8 rotation, verdict #1): IVF is
     # certified by the build/probe extras + the PQ official row; the
     # slot goes to the RANGE-frame trailing-window features below.
-    # text analysis (x_text_fingerprint demoted r7: shingle identity
-    # is certified by the dedup family, slot freed for MERGE INTO;
-    # x_text_token_counts demoted late-r7: token counting is certified
-    # by chunk_windows/BPE/quality paths, slot freed for the kNN join)
+    # text analysis (the content-fingerprint extra, demoted r7:
+    # shingle identity is certified by the dedup family, slot freed
+    # for MERGE INTO; the token-count extra, demoted late-r7: token
+    # counting is certified by the x_text_quality row's n_tokens, slot
+    # freed for the kNN join; both later deleted by the extras census)
     "x_text_lang_id",
     "x_text_quality",
     # x_text_tfidf demoted (r9 rotation, verdict #1): the tf-idf
     # ranking family is certified by the hybrid-retrieval official row
     # (BM25 + dense fusion) and the tfidf extra stays oracle-gated;
     # the slot goes to the maintenance family's time-series face.
-    # x_text_chunk_windows demoted (late-r7 fourth wave), later deleted
-    # by the extras census: chunking is certified by the
-    # x_text_pack_chunks extra (same chunk_documents operator) + the
-    # BPE/token paths; the slot goes to the duplicated-span REMOVAL
-    # rewrite (the Lee-et-al step a pretraining pipeline actually runs).
+    # x_text_chunk_windows demoted (late-r7 fourth wave); it and the
+    # other chunking, packing and BPE extras were later deleted by the
+    # extras census, so no query chunks documents any more; the slot
+    # goes to the duplicated-span REMOVAL rewrite (the Lee-et-al step a
+    # pretraining pipeline actually runs).
     "x_text_span_removal",
     # r8 promotion (verdict #1): the RAG stack's official row — BM25
     # top-20 + dense cosine top-20 fused by reciprocal-rank fusion.
     "x_text_hybrid_retrieval",
-    # x_text_pii_redact demoted (second-wave r7 rotation): the regex
-    # projection family is certified by the x_text_lang_id row and the
-    # extra stays oracle-gated; slot freed for the curation batch below.
+    # the PII-redaction extra, demoted (second-wave r7 rotation) and
+    # later deleted by the extras census: the regex projection family
+    # is certified by the x_text_lang_id row; slot freed for the
+    # curation batch below.
     # x_text_encoding_quality demoted (r12 rotation, verdict #3), later
     # deleted by the extras census (an inline projection that reaches
     # no operator): the text family keeps FOUR official rows (lang_id,
@@ -135,10 +137,11 @@ QUERY_ORDER: tuple[str, ...] = (
     # the x_pipeline_curation official row, which composes budgeting
     # (token_budget_allocate) inside the fused pipeline; the slot goes
     # to the round-11 commit-log-at-scale face below.
-    # x_curation_dsir demoted (r9 rotation): importance weighting is
-    # certified by the token-budget + pipeline_curation official rows
-    # and the DSIR extra stays oracle-gated; slot freed for the exact
-    # ROC AUC — the eval family's first official row.
+    # the DSIR importance-weighting extra, demoted (r9 rotation) and
+    # later deleted by the extras census: curation weighting is
+    # certified by the token-budget + pipeline_curation official rows;
+    # slot freed for the exact ROC AUC — the eval family's first
+    # official row.
     # structured streaming (the streaming session-window extra,
     # demoted late-r7 and later deleted by the extras census: session
     # semantics are certified by the official q_sessionize batch row;
@@ -312,9 +315,9 @@ QUERY_ORDER: tuple[str, ...] = (
     "g2_rolling_maxes_wide",
     "g4_n7_nested_assembly",
     "s1_incremental_ingest",
-    # x_nb_classifier demoted (r10 rotation, verdict #1): the
-    # in-engine ML/eval family keeps its official row via x_eval_auc,
-    # and the NB classifier stays oracle-gated as an extra.
+    # the Naive Bayes extra, demoted (r10 rotation, verdict #1) and
+    # later deleted by the extras census: the in-engine ML/eval family
+    # keeps its official row via x_eval_auc.
     # r9 promotion (verdict #1): exact ROC AUC (tie-corrected
     # rank-sum in pure BIGINT) — the eval family's threshold-free
     # official row.

@@ -429,64 +429,8 @@ def x_ohlc_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Dataset fingerprinting + join-preserving pseudonymization
+# k-hop reachability, join cardinality report
 # ---------------------------------------------------------------------------
-
-
-@register_extra(
-    "x_pseudonymize_join",
-    oracle="""
-WITH c AS (
-  SELECT CASE WHEN c_custkey IS NULL THEN NULL
-              ELSE CAST(concat('0x', substr(md5(concat('k1:', CAST(c_custkey AS VARCHAR))),
-                                            1, 15)) AS BIGINT) END AS sur,
-         c_mktsegment
-  FROM customer
-),
-o AS (
-  SELECT CASE WHEN o_custkey IS NULL THEN NULL
-              ELSE CAST(concat('0x', substr(md5(concat('k1:', CAST(o_custkey AS VARCHAR))),
-                                            1, 15)) AS BIGINT) END AS sur
-  FROM orders
-)
-SELECT c.c_mktsegment,
-       CAST(count(o.sur) AS BIGINT) AS n_orders,
-       CAST(count(DISTINCT CASE WHEN o.sur IS NOT NULL THEN c.sur END) AS BIGINT)
-         AS n_customers_with_orders,
-       CAST(min(c.sur) AS BIGINT) AS min_surrogate
-FROM c LEFT JOIN o ON c.sur = o.sur
-GROUP BY c.c_mktsegment
-""",
-)
-def x_pseudonymize_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Referential integrity THROUGH pseudonymization: customer and
-    orders keys are replaced by keyed 60-bit surrogates
-    (operators/text.py pseudonymize, salt k1) BEFORE the join, and
-    the per-segment order counts still come out right — the raw key
-    never appears downstream of the projection. The surrogate values
-    themselves (min per segment) oracle-match, proving the mapping is
-    engine-portable, not just count-preserving. Pure projections +
-    one equi-join on the surrogate; same shuffle shape as joining on
-    the raw key."""
-    ensure_harness_conf(spark)
-    from .operators.text import pseudonymize
-
-    c = pseudonymize(
-        load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment"),
-        ["c_custkey"],
-        "k1",
-    ).select(F.col("c_custkey").alias("sur"), "c_mktsegment")
-    o = pseudonymize(
-        load(spark, sf_dir, "orders").select("o_custkey"), ["o_custkey"], "k1"
-    ).select(F.col("o_custkey").alias("osur"))
-    j = c.join(o, c["sur"] == o["osur"], "left")
-    return j.groupBy("c_mktsegment").agg(
-        F.count("osur").cast("long").alias("n_orders"),
-        F.count_distinct(
-            F.when(F.col("osur").isNotNull(), F.col("sur"))
-        ).cast("long").alias("n_customers_with_orders"),
-        F.min("sur").cast("long").alias("min_surrogate"),
-    )
 
 
 @register_extra(

@@ -1,4 +1,4 @@
-"""Bucketed/range/point-in-time joins, text chunking, skew, corpus filter.
+"""Bucketed/range/point-in-time joins, skew, corpus filter.
 
 Split from the former single-file queries_ext.py (round 7, verdict
 #7): registrations, names, and oracle SQL are unchanged — the
@@ -218,73 +218,6 @@ def x_range_join_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _chunk_oracle(chunk: int = 64, stride: int = 48) -> str:
-    return f"""
-WITH tk AS ({_TK_SQL}),
-st AS (
-  SELECT doc_id, t,
-         generate_series(0,
-           greatest(CAST(0 AS BIGINT),
-                    CAST(ceil((len(t) - {chunk}) / {stride}.0) AS BIGINT) * {stride}),
-           {stride}) AS starts
-  FROM tk
-),
-w AS (
-  SELECT doc_id, u.s AS start, list_slice(t, u.s + 1, u.s + {chunk}) AS win
-  FROM st, unnest(starts) AS u(s)
-)
-SELECT doc_id, CAST(start / {stride} AS BIGINT) AS chunk_idx,
-       array_to_string(win, ' ') AS chunk_text,
-       CAST(len(win) AS BIGINT) AS n_tokens
-FROM w WHERE len(win) > 0
-"""
-
-
-@register_extra("x_udtf_chunk_windows", oracle=_chunk_oracle())
-def x_udtf_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The chunking operator re-expressed through Spark 4's Python
-    UDTF extension point (operators/udtfs.ChunkWindowsUDTF): an
-    Arrow-batched table function invoked as a LATERAL generator from
-    SQL, oracle-gated to the SAME answer as the declarative HOF
-    chunking (text.chunk_documents). This is the
-    sanctioned imperative escape hatch — per-row Python that EMITS
-    ROWS — and the gate proves the extension point preserves every
-    row, not just the API shape. The hot path remains the codegen'd
-    twin; tests/test_udtf.py pins row-identity between the two."""
-    ensure_harness_conf(spark)
-    from .operators.udtfs import register_udtfs
-
-    register_udtfs(spark)
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    view = f"docs_udtf_{uuid.uuid4().hex[:8]}"
-    docs.createOrReplaceTempView(view)
-    try:
-        return spark.sql(
-            f"""
-            SELECT d.doc_id, c.chunk_idx, c.chunk_text, c.n_tokens
-            FROM {view} d, LATERAL chunk_windows_udtf(d.text, 64, 48) c
-            """
-        ).localCheckpoint(eager=True)
-    finally:
-        spark.catalog.dropTempView(view)
-
-
-@register_extra("x_text_pack_chunks")  # no SQL oracle: sequential
-# first-fit bin state is not SQL-expressible; invariants (exactly-one
-# pack per chunk, fill <= budget, determinism under repartitioning,
-# FFD efficiency) are pytest-enforced in tests/test_text.py.
-def x_text_pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing: 64/48 context windows first-fit-decreasing
-    into 256-token packs across 8 hash buckets — the training-batch
-    construction step downstream of chunking."""
-    ensure_harness_conf(spark)
-    docs = load(spark, sf_dir, "documents")
-    chunks = text.chunk_documents(docs, "doc_id", "text", chunk_tokens=64, stride=48)
-    return text.pack_chunks(
-        chunks, ["doc_id", "chunk_idx"], "n_tokens", budget=256, n_buckets=8
-    )
-
-
 @register_extra(
     "x_skew_salted_agg",
     oracle="""
@@ -326,29 +259,6 @@ def x_skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "max_price",
         F.col("count_order").cast("long").alias("count_order"),
     )
-
-
-@register_extra(
-    "x_text_vocab_topk",
-    oracle=f"""
-WITH tk AS ({_TK_SQL}),
-tok AS (SELECT doc_id, unnest(t) AS token FROM tk),
-c AS (SELECT token,
-             CAST(count(*) AS BIGINT) AS n,
-             CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-      FROM tok GROUP BY token),
-r AS (SELECT *, row_number() OVER (ORDER BY n DESC, token) AS rk FROM c)
-SELECT token, n, n_docs, CAST(rk AS BIGINT) AS rk FROM r WHERE rk <= 1000
-""",
-)
-def x_text_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus vocabulary build: top-1000 tokens by (count desc, token)
-    with total and document frequency — the tokenizer-training stage.
-    One explode + one map-side-combined hash agg + TakeOrdered top-k;
-    the rank window runs over the already-reduced k rows only."""
-    ensure_harness_conf(spark)
-    docs = load(spark, sf_dir, "documents")
-    return text.vocab_topk(docs, "doc_id", "text", k=1000)
 
 
 _REPETITION_ORACLE = f"""
@@ -533,48 +443,6 @@ def x_pipeline_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         sh_all.unpersist()
         docs.unpersist()
-
-
-_BIGRAM_LM_ORACLE = f"""
-WITH tk AS ({_TK_SQL}),
-uni AS (SELECT unnest(t) AS w FROM tk),
-uc AS (SELECT w, count(*) AS c1 FROM uni GROUP BY w),
-v AS (SELECT count(*) AS v FROM uc),
-occ AS (
-  SELECT doc_id,
-         unnest(list_transform(generate_series(1, greatest(len(t) - 1, 0)),
-                               i -> t[i] || ' ' || t[i+1])) AS bg
-  FROM tk
-),
-o2 AS (SELECT doc_id, bg, string_split(bg, ' ')[1] AS w FROM occ),
-bgc AS (SELECT bg, count(*) AS c2 FROM occ GROUP BY bg),
-scored AS (
-  SELECT o2.doc_id,
-         round(ln(CAST(bgc.c2 + 1 AS DOUBLE) / CAST(uc.c1 + v.v AS DOUBLE)), 6) AS lp
-  FROM o2 JOIN bgc USING (bg) JOIN uc USING (w) CROSS JOIN v
-),
-p AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-         round(CAST(SUM(CAST(lp AS DECIMAL(38,6))) AS DOUBLE) / count(*), 6)
-           AS lm_logprob
-  FROM scored GROUP BY doc_id
-)
-SELECT d.doc_id,
-       CAST(coalesce(p.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-       coalesce(p.lm_logprob, 0.0) AS lm_logprob
-FROM documents d LEFT JOIN p ON p.doc_id = d.doc_id
-"""
-
-
-@register_extra("x_text_bigram_lm", oracle=_BIGRAM_LM_ORACLE)
-def x_text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-trained add-one bigram LM mean log-probability per doc —
-    the perplexity-filter family (CCNet-style curation), exact and
-    engine-portable (6dp ln rounding + decimal accumulation, the
-    tf_idf precedent). Train = two hash aggs over the same scan."""
-    ensure_harness_conf(spark)
-    docs = load(spark, sf_dir, "documents")
-    return text.bigram_lm_score(docs, "doc_id", "text")
 
 
 @register(

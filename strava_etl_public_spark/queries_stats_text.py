@@ -1,4 +1,4 @@
-"""Text statistics and retrieval, PQ ANN, incremental maintenance.
+"""Hybrid text retrieval, PQ ANN, incremental maintenance.
 
 Split from the former single-file queries_ext.py (round 7, verdict
 #7): registrations, names, and oracle SQL are unchanged — the
@@ -24,181 +24,8 @@ from .queries_text_mm_stream import _QUALITY_ORACLE  # noqa: F401
 
 
 # ---------------------------------------------------------------------------
-# BM25 retrieval (inverted index)
+# Incremental aggregation state
 # ---------------------------------------------------------------------------
-
-_BM25_QUERIES: list[tuple[int, str]] = [
-    (1, "hash join shuffle"),
-    (2, "window sort order"),
-    (3, "vector scan filter"),
-]
-
-
-def _bm25_oracle(k: int = 10, k1: float = 1.2, b: float = 0.75) -> str:
-    qvals = ", ".join(f"({qid}, '{qt}')" for qid, qt in _BM25_QUERIES)
-    return f"""
-WITH tk AS ({_TK_SQL}),
-tc AS (
-  SELECT doc_id, unnest(t) AS term FROM tk
-),
-postings AS (
-  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf_n
-  FROM tc GROUP BY doc_id, term
-),
-dl AS (SELECT doc_id, sum(tf_n) AS doc_len FROM postings GROUP BY doc_id),
-stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(doc_len) AS BIGINT) AS sum_dl FROM dl),
-qraw(query_id, q_text) AS (VALUES {qvals}),
-qterms AS (
-  SELECT DISTINCT CAST(query_id AS BIGINT) AS query_id,
-         unnest(regexp_extract_all(lower(q_text), '[a-z0-9_]+')) AS term
-  FROM qraw
-),
-hits AS (SELECT q.query_id, p.doc_id, p.term, p.tf_n
-         FROM postings p JOIN qterms q USING (term)),
-dft AS (SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS df_n
-        FROM hits GROUP BY term),
-contrib AS (
-  SELECT h.query_id, h.doc_id,
-         round(
-           round(ln(1.0 + (CAST(s.n_docs AS DOUBLE) - d.df_n + 0.5)
-                          / (CAST(d.df_n AS DOUBLE) + 0.5)), 6)
-           * (CAST(h.tf_n AS DOUBLE) * {k1 + 1.0})
-             / (CAST(h.tf_n AS DOUBLE)
-                + {k1} * ({1.0 - b} + {b} * (CAST(l.doc_len AS DOUBLE)
-                                             * CAST(s.n_docs AS DOUBLE)
-                                             / CAST(s.sum_dl AS DOUBLE)))),
-           6) AS c
-  FROM hits h JOIN dft d USING (term) JOIN dl l USING (doc_id)
-       CROSS JOIN stats s
-),
-scored AS (
-  SELECT query_id, doc_id,
-         round(CAST(sum(CAST(c AS DECIMAL(38,6))) AS DOUBLE), 6) AS bm25,
-         CAST(count(*) AS BIGINT) AS n_terms_matched
-  FROM contrib GROUP BY query_id, doc_id
-)
-SELECT query_id, doc_id, bm25, n_terms_matched, rk
-FROM (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-                                        ORDER BY bm25 DESC, doc_id) AS BIGINT) AS rk
-      FROM scored)
-WHERE rk <= {k}
-"""
-
-
-@register_extra("x_text_bm25_topk", oracle=_bm25_oracle())
-def x_text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 keyword retrieval over an inverted index: top-10 documents
-    per query for a bounded query set. The index is one tokenize pass
-    (postings + doc-length aggs); query terms broadcast and prune the
-    postings BEFORE any stats join, so per-query work is proportional
-    to the posting lists touched, not the corpus. Scores are
-    engine-exact (each ln rounded 6dp, contributions summed as
-    DECIMAL(38,6), dl/avgdl computed as dl·N/Σdl from exact BIGINTs) —
-    the full ranking, not just the ids, hash-matches the oracle."""
-    ensure_harness_conf(spark)
-    docs = load(spark, sf_dir, "documents")
-    return text.bm25_topk(docs, "doc_id", "text", _BM25_QUERIES, k=10)
-
-
-# ---------------------------------------------------------------------------
-# PMI collocations
-# ---------------------------------------------------------------------------
-
-
-def _pmi_oracle(min_count: int = 5, k: int = 50) -> str:
-    return f"""
-WITH tk AS ({_TK_SQL}),
-uni AS (SELECT unnest(t) AS w FROM tk),
-uc AS (SELECT w, CAST(count(*) AS BIGINT) AS c1 FROM uni GROUP BY w),
-bg AS (
-  SELECT unnest(list_transform(generate_series(1, greatest(len(t) - 1, 0)),
-                               i -> t[i] || ' ' || t[i+1])) AS b
-  FROM tk
-),
-bc AS (
-  SELECT b, CAST(count(*) AS BIGINT) AS c12
-  FROM bg GROUP BY b HAVING count(*) >= {min_count}
-),
-tot AS (
-  SELECT (SELECT CAST(count(*) AS BIGINT) FROM uni) AS nt,
-         (SELECT CAST(count(*) AS BIGINT) FROM bg) AS nb
-),
-scored AS (
-  SELECT split_part(b, ' ', 1) AS w1, split_part(b, ' ', 2) AS w2, c12,
-         round(ln(CAST(c12 AS DOUBLE) * CAST(nt AS DOUBLE) * CAST(nt AS DOUBLE)
-                  / (CAST(u1.c1 AS DOUBLE) * CAST(u2.c1 AS DOUBLE)
-                     * CAST(nb AS DOUBLE))), 6) AS pmi
-  FROM bc
-  JOIN uc u1 ON u1.w = split_part(b, ' ', 1)
-  JOIN uc u2 ON u2.w = split_part(b, ' ', 2)
-  CROSS JOIN tot
-)
-SELECT w1, w2, c12, pmi,
-       CAST(row_number() OVER (ORDER BY pmi DESC, w1, w2) AS BIGINT) AS rk
-FROM scored
-ORDER BY pmi DESC, w1, w2
-LIMIT {k}
-"""
-
-
-@register_extra("x_text_pmi_collocations", oracle=_pmi_oracle())
-def x_text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Phrase mining by pointwise mutual information: the top-50
-    bigrams whose co-occurrence most exceeds independence — the
-    merge-candidate list fed to tokenizer/vocab construction. Scores
-    are ONE ln of a ratio of exact counts (no log-sum reordering),
-    rounded 6 dp; min_count prunes the singleton tail before any
-    join. Global top-k plans as TakeOrderedAndProject."""
-    ensure_harness_conf(spark)
-    docs = load(spark, sf_dir, "documents")
-    return text.pmi_collocations(docs, "doc_id", "text", min_count=5, k=50)
-
-
-# ---------------------------------------------------------------------------
-# Char entropy, incremental aggregation state
-# ---------------------------------------------------------------------------
-
-
-@register_extra(
-    "x_text_char_entropy",
-    oracle="""
-WITH ch AS (
-  SELECT doc_id, unnest(split(text, '')) AS c FROM documents
-),
-cnt AS (
-  SELECT doc_id, c, CAST(count(*) AS BIGINT) AS nc
-  FROM ch WHERE c <> '' GROUP BY doc_id, c
-),
-per AS (
-  SELECT doc_id, nc, sum(nc) OVER (PARTITION BY doc_id) AS n
-  FROM cnt
-),
-contrib AS (
-  SELECT doc_id, n,
-         round(CAST(nc AS DOUBLE)
-               * round(ln(CAST(nc AS DOUBLE) / CAST(n AS DOUBLE)), 6), 6) AS c
-  FROM per
-),
-ent AS (
-  SELECT doc_id, CAST(max(n) AS BIGINT) AS n_chars,
-         round(-CAST(sum(CAST(c AS DECIMAL(38,6))) AS DOUBLE)
-               / CAST(max(n) AS DOUBLE), 6) AS char_entropy
-  FROM contrib GROUP BY doc_id
-)
-SELECT d.doc_id,
-       coalesce(e.n_chars, 0) AS n_chars,
-       coalesce(e.char_entropy, 0.0) AS char_entropy
-FROM documents d LEFT JOIN ent e USING (doc_id)
-""",
-)
-def x_text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Character-level Shannon entropy per document — the gibberish /
-    base64-blob / padding detector of the quality-filter family.
-    Engine-exact via the 6dp-ln + decimal-sum rule; one char explode
-    + two hash aggs, scan shape."""
-    ensure_harness_conf(spark)
-    docs = load(spark, sf_dir, "documents")
-    return text.char_entropy(docs, "doc_id", "text")
 
 
 @register_extra(

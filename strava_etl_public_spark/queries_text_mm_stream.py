@@ -56,27 +56,6 @@ def x_text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_extra(
-    "x_text_token_counts",
-    oracle=r"""
-SELECT doc_id,
-       CAST(len(regexp_extract_all(lower(text), '[^ \t\n]+')) AS BIGINT) AS n_ws_tokens,
-       CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]|[^a-z0-9 ]')) AS BIGINT) AS n_bpe_tokens
-FROM documents
-""",
-)
-def x_text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whitespace + BPE-ish regex token counting (the tokens-per-doc
-    budget stage of a curation pipeline)."""
-    ensure_harness_conf(spark)
-    docs = load(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        text.token_count_ws("text").alias("n_ws_tokens"),
-        text.token_count_bpe("text").alias("n_bpe_tokens"),
-    )
-
-
 _EN = ", ".join(repr(w) for w in text.LANG_PROFILES["en"])
 
 _QUALITY_ORACLE = f"""
@@ -108,83 +87,6 @@ def x_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_harness_conf(spark)
     docs = load(spark, sf_dir, "documents")
     return text.quality_features(docs, "doc_id", "text")
-
-
-@register_extra(
-    "x_text_fingerprint",
-    oracle=f"""
-WITH tk AS ({_TK_SQL}),
-sh AS (
-  SELECT doc_id, t,
-         list_transform(generate_series(1, greatest(len(t) - 2, 0)),
-                        i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]) AS shl
-  FROM tk
-)
-SELECT doc_id,
-       md5(array_to_string(t, ' ')) AS content_fp,
-       list_min(list_transform(shl, s -> md5(s))) AS min_shingle_fp
-FROM sh
-""",
-)
-def x_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content fingerprint (md5 of the normalized token stream) + min
-    shingle hash (1-perm MinHash winnowing anchor)."""
-    ensure_harness_conf(spark)
-    docs = load(spark, sf_dir, "documents")
-    return text.fingerprint(docs, "doc_id", "text", n=3)
-
-
-def _pii_oracle() -> str:
-    counts = ",\n       ".join(
-        f"CAST(len(regexp_extract_all(t, '{pat}')) AS BIGINT) AS n_{kind}"
-        for kind, pat in text.PII_PATTERNS
-    )
-    redacted = "t"
-    for kind, pat in text.PII_PATTERNS:
-        redacted = f"regexp_replace({redacted}, '{pat}', '[{kind.upper()}]', 'g')"
-    return f"""
-WITH seeded AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 10 = 0
-              THEN text || ' contact user' || doc_id ||
-                   '@example.com or 415-555-' ||
-                   lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-              ELSE text END AS t
-  FROM documents
-)
-SELECT doc_id,
-       {counts},
-       {redacted} AS redacted
-FROM seeded
-"""
-
-
-@register_extra("x_text_pii_redact", oracle=_pii_oracle())
-def x_text_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrub (email/SSN/phone/IPv4/card): per-doc hit counts per
-    kind + the redacted text, one scan-speed projection. The fixture
-    corpus carries no PII, so every 10th doc gets a deterministic
-    synthetic email+phone appended (same expression in the oracle) —
-    the patterns are exercised, the clean docs prove no false
-    positives."""
-    ensure_harness_conf(spark)
-    docs = load(spark, sf_dir, "documents")
-    seeded = docs.select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 10 == 0,
-            F.concat(
-                F.col("text"),
-                F.lit(" contact user"),
-                F.col("doc_id").cast("string"),
-                F.lit("@example.com or 415-555-"),
-                F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-            ),
-        )
-        .otherwise(F.col("text"))
-        .alias("t"),
-    )
-    return text.pii_counts(seeded, "doc_id", "t")
 
 
 @register_extra(

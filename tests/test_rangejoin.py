@@ -116,44 +116,3 @@ def test_interval_join_binned_vs_naive_and_bin_invariance(spark):
         # exactly once per overlapping pair, at EVERY bin size
         assert len(pairs) == len(set(pairs)) == len(want), bin_size
         assert set(pairs) == want, bin_size
-
-
-def test_merge_intervals_swallowed_and_gap(spark):
-    import pandas as pd
-
-    from strava_etl_public_spark.operators.rangejoin import merge_intervals
-
-    rows = [
-        # key A: [0,10] swallows [2,3]; [11,12] within gap=0? start 11 > 10 -> new island
-        ("A", 0, 10), ("A", 2, 3), ("A", 11, 12),
-        # key B: running-max pitfall — [0,100], [1,2], [3,4]: lag(end)
-        # would wrongly split at 3 > 2; running max keeps one island
-        ("B", 0, 100), ("B", 1, 2), ("B", 3, 4),
-    ]
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=["k", "s", "e"]))
-    got = {
-        (r["k"], r["island_id"]): (r["island_start"], r["island_end"], r["n_intervals"])
-        for r in merge_intervals(df, ["k"], "s", "e", gap=0).collect()
-    }
-    assert got[("A", 1)] == (0, 10, 2)
-    assert got[("A", 2)] == (11, 12, 1)
-    assert got[("B", 1)] == (0, 100, 3)
-    # gap=1 bridges A's [0,10] and [11,12]
-    got2 = {
-        (r["k"], r["island_id"]): r["n_intervals"]
-        for r in merge_intervals(df, ["k"], "s", "e", gap=1).collect()
-    }
-    assert got2[("A", 1)] == 3 and ("A", 2) not in got2
-
-
-def test_merge_intervals_rejects_inverted(spark):
-    import pandas as pd
-    import pytest
-
-    from strava_etl_public_spark.operators.rangejoin import merge_intervals
-
-    df = spark.createDataFrame(
-        pd.DataFrame([("A", 0, 3), ("A", 10, 2)], columns=["k", "s", "e"])
-    )
-    with pytest.raises(Exception, match="end < start"):
-        merge_intervals(df, ["k"], "s", "e").collect()

@@ -40,11 +40,6 @@ def test_registry_priority_order():
 #: extras allowed to have NO SQL oracle: genuinely non-SQL-expressible
 #: ops, verified by invariant tests instead (each must name its test).
 ORACLE_EXEMPT_EXTRAS = {
-    "x_text_pack_chunks",  # sequential bin-packing state; tests/test_text.py
-    # iterative BPE merge state; pinned against a single-process
-    # reference trainer in tests/test_text.py::test_bpe_train_*
-    "x_text_bpe_vocab",
-    "x_text_bpe_encode",
     # perceptual fingerprints run real codecs + DCT/FFT kernels — past
     # what a SQL oracle can express; blocked==bruteforce pair
     # exactness, planted-twin recall, and the invariance arguments are

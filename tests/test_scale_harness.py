@@ -27,7 +27,6 @@ SIZES = {
     "cc": dict(n_chain_nodes=800),
     "rangejoin": dict(n_points=2000, n_intervals=1000),
     "maintenance": dict(),
-    "curation": dict(n_docs=2000),
     "dv": dict(n_events=2000),
     "update": dict(n_events=2000),
     "incremental": dict(),

@@ -21,7 +21,6 @@ def test_hash_split_stable_and_disjoint(spark, sf_dir):
     # sample proportion within binomial noise; independent salts differ
     k = sample_by_hash(docs, "doc_id", 0.2).count()
     assert abs(k / n - 0.2) < 0.08
-    k2 = sample_by_hash(docs, "doc_id", 0.2, salt="other").count()
     ids1 = {r[0] for r in sample_by_hash(docs, "doc_id", 0.2).select("doc_id").collect()}
     ids2 = {r[0] for r in sample_by_hash(docs, "doc_id", 0.2, salt="other").select("doc_id").collect()}
     assert ids1 != ids2

@@ -2,18 +2,15 @@
 
 from __future__ import annotations
 
-import hashlib
-
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from strava_etl_public_spark.operators.text import (
-    fingerprint,
+    bm25_from_index,
+    build_postings,
     lang_id,
     quality_features,
-    token_count_bpe,
-    token_count_ws,
 )
 
 
@@ -36,16 +33,6 @@ def test_lang_id(spark):
     )
     out = df.select("doc_id", lang_id("text").alias("lang")).toPandas().set_index("doc_id")
     assert out.lang.tolist() == ["en", "fr", "es", "de", "und"]
-
-
-def test_token_counts(spark):
-    df = _df(spark, ["Hello, world! 42 times"])
-    row = df.select(
-        token_count_ws("text").alias("ws"), token_count_bpe("text").alias("bpe")
-    ).first()
-    assert row["ws"] == 4
-    # bpe: hello , world ! 4 2 times -> 7
-    assert row["bpe"] == 7
 
 
 def test_quality_features(spark):
@@ -78,177 +65,6 @@ def test_tf_idf(spark):
     # rarer term outranks common one at equal tf: doc3 'date' (df=1) > 'apple' (df=2)
     d3 = out[out.doc_id == 3].sort_values("rk")
     assert d3.term.tolist() == ["date", "apple"]
-
-
-def test_fingerprint(spark):
-    out = fingerprint(
-        _df(spark, ["The QUICK brown fox", "the quick brown fox"]), "doc_id", "text"
-    ).toPandas()
-    # case-insensitive normalization -> same content fingerprint
-    assert out.content_fp.nunique() == 1
-    assert out.content_fp.iloc[0] == hashlib.md5(b"the quick brown fox").hexdigest()
-    want_min = min(
-        hashlib.md5(s.encode()).hexdigest()
-        for s in ("the quick brown", "quick brown fox")
-    )
-    assert out.min_shingle_fp.iloc[0] == want_min
-
-
-def test_pii_redaction_and_counts(spark):
-    from strava_etl_public_spark.operators.text import pii_counts
-
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": [1, 2],
-                "text": [
-                    "mail a.b+c@x.co.uk, ssn 123-45-6789, call (415) 555-0123, "
-                    "ip 10.0.0.1, card 4111 1111 1111 1111",
-                    "clean text with plain numbers 42 2026 and no identifiers",
-                ],
-            }
-        )
-    )
-    out = pii_counts(df, "doc_id", "text").toPandas().set_index("doc_id")
-    assert out.loc[1, ["n_email", "n_ssn", "n_phone", "n_ipv4", "n_cc"]].tolist() == [1, 1, 1, 1, 1]
-    for kind in ("EMAIL", "SSN", "PHONE", "IPV4", "CC"):
-        assert f"[{kind}]" in out.loc[1, "redacted"]
-    assert out.loc[2, ["n_email", "n_ssn", "n_phone", "n_ipv4", "n_cc"]].sum() == 0
-    assert out.loc[2, "redacted"].startswith("clean text")
-
-
-def test_chunk_documents_windows(spark):
-    from strava_etl_public_spark.operators.text import chunk_documents
-
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": [1, 2, 3],
-                "text": [" ".join(f"w{i}" for i in range(10)), "single", ""],
-            }
-        )
-    )
-    out = chunk_documents(df, "doc_id", "text", chunk_tokens=4, stride=3).toPandas()
-    d1 = out[out.doc_id == 1].sort_values("chunk_idx")
-    # starts 0,3,6: full coverage with overlap, tail included exactly once
-    assert d1.chunk_text.tolist() == ["w0 w1 w2 w3", "w3 w4 w5 w6", "w6 w7 w8 w9"]
-    assert d1.n_tokens.tolist() == [4, 4, 4]
-    assert out[out.doc_id == 2].chunk_text.tolist() == ["single"]
-    assert (out.doc_id != 3).all()  # empty doc -> no chunks
-
-
-def test_pack_chunks_invariants(spark):
-    from strava_etl_public_spark.operators.text import chunk_documents, pack_chunks
-
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    chunks = chunk_documents(docs, "doc_id", "text", chunk_tokens=64, stride=48)
-    packed = pack_chunks(
-        chunks, ["doc_id", "chunk_idx"], "n_tokens", budget=256, n_buckets=8
-    ).toPandas()
-    # every chunk in exactly one pack
-    assert len(packed) == chunks.count()
-    assert not packed.duplicated(["doc_id", "chunk_idx"]).any()
-    # no pack over budget (fill equals the sum of its members)
-    g = packed.groupby("pack_id").n_tokens.sum()
-    assert (g <= 256).all()
-    fills = packed.groupby("pack_id").pack_fill.first()
-    assert (g == fills).all()
-    # efficiency: FFD should fill packs reasonably (>60% avg on 64-token chunks)
-    assert g.mean() / 256 > 0.6
-    # determinism across partitionings
-    packed2 = pack_chunks(
-        chunks.repartition(13), ["doc_id", "chunk_idx"], "n_tokens",
-        budget=256, n_buckets=8,
-    ).toPandas()
-    a = packed.sort_values(["doc_id", "chunk_idx"]).reset_index(drop=True)
-    b = packed2.sort_values(["doc_id", "chunk_idx"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
-
-
-def test_pack_chunks_matches_independent_ffd(spark):
-    """Pin the packing itself — not just its invariants — against a
-    from-scratch pure-Python FFD over the same (bucket, sort, first-fit)
-    contract: identical bucket hash (md5 of 'pack:doc_id:chunk_idx'),
-    sort by (n_tokens desc, doc_id, chunk_idx), first open bin with
-    room. pack_id and pack_fill must agree bin-for-bin on every row —
-    a subtle FFD ordering bug in the Arrow path cannot pass this
-    (round-2 verdict item)."""
-    from strava_etl_public_spark.operators.text import chunk_documents, pack_chunks
-
-    budget, n_buckets = 256, 8
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    chunks = chunk_documents(docs, "doc_id", "text", chunk_tokens=64, stride=48)
-    got = (
-        pack_chunks(chunks, ["doc_id", "chunk_idx"], "n_tokens", budget=budget,
-                    n_buckets=n_buckets)
-        .toPandas()
-        .sort_values(["doc_id", "chunk_idx"])
-        .reset_index(drop=True)
-    )
-
-    # independent reference: plain dicts and lists, no pandas sort /
-    # Spark code shared with the implementation under test
-    rows = [
-        (int(r.doc_id), int(r.chunk_idx), int(r.n_tokens))
-        for r in chunks.select("doc_id", "chunk_idx", "n_tokens").collect()
-    ]
-    by_bucket: dict[int, list[tuple[int, int, int]]] = {}
-    for doc_id, chunk_idx, n in rows:
-        h = hashlib.md5(f"pack:{doc_id}:{chunk_idx}".encode()).hexdigest()
-        by_bucket.setdefault(int(h[:15], 16) % n_buckets, []).append(
-            (doc_id, chunk_idx, n)
-        )
-    expect: dict[tuple[int, int], tuple[int, int]] = {}  # (doc,chunk) -> (pack, fill)
-    for bucket, items in by_bucket.items():
-        items.sort(key=lambda t: (-t[2], t[0], t[1]))
-        bins: list[list[tuple[int, int, int]]] = []
-        rem: list[int] = []
-        for doc_id, chunk_idx, n in items:
-            for i in range(len(bins)):
-                if rem[i] >= n:
-                    bins[i].append((doc_id, chunk_idx, n))
-                    rem[i] -= n
-                    break
-            else:
-                bins.append([(doc_id, chunk_idx, n)])
-                rem.append(max(budget - n, 0))
-        for i, members in enumerate(bins):
-            fill = sum(n for _, _, n in members)
-            for doc_id, chunk_idx, _ in members:
-                expect[(doc_id, chunk_idx)] = ((bucket << 32) | i, fill)
-
-    assert len(got) == len(expect)
-    for r in got.itertuples(index=False):
-        pack_id, fill = expect[(int(r.doc_id), int(r.chunk_idx))]
-        assert int(r.pack_id) == pack_id, (r.doc_id, r.chunk_idx)
-        assert int(r.pack_fill) == fill, (r.doc_id, r.chunk_idx)
-
-
-def test_chunk_documents_coverage_property(spark):
-    """Property over (n_tokens, chunk, stride) grid: every token index
-    appears in at least one window; consecutive windows overlap by
-    exactly chunk - stride (except the re-anchored tail); no window
-    exceeds chunk tokens."""
-    from strava_etl_public_spark.operators.text import chunk_documents
-
-    cases = [(n, c, s) for n in (1, 3, 7, 12, 25) for c, s in ((4, 3), (5, 5), (8, 2))]
-    rows = [
-        {"doc_id": i, "text": " ".join(f"t{j}" for j in range(n))}
-        for i, (n, _, _) in enumerate(cases)
-    ]
-    df = spark.createDataFrame(pd.DataFrame(rows))
-    for i, (n, c, s) in enumerate(cases):
-        out = (
-            chunk_documents(df.filter(F.col("doc_id") == i), "doc_id", "text", c, s)
-            .toPandas()
-            .sort_values("chunk_idx")
-        )
-        covered = set()
-        for txt in out.chunk_text:
-            toks = txt.split(" ")
-            assert len(toks) <= c
-            covered |= {int(t[1:]) for t in toks}
-        assert covered == set(range(n)), (n, c, s, covered)
 
 
 def test_repetition_features_known_values(spark):
@@ -326,48 +142,17 @@ def test_decontaminate_flags_overlap(spark):
     assert out[3]["n_shingles"] == 0 and not out[3]["flagged"]
 
 
-def test_bigram_lm_score_known_values(spark):
-    import math
-
-    from strava_etl_public_spark.operators.text import bigram_lm_score
-
-    # corpus: "a b" x2 docs + "a c" + a 1-token doc + an empty doc
-    # unigrams: a:3 b:2 c:1 x:1 -> V=4
-    # bigram counts: "a b":2, "a c":1
-    rows = [
-        {"doc_id": 0, "text": "a b"},
-        {"doc_id": 1, "text": "a b"},
-        {"doc_id": 2, "text": "a c"},
-        {"doc_id": 3, "text": "x"},
-        {"doc_id": 4, "text": "!!"},
-    ]
-    out = {
-        r["doc_id"]: r
-        for r in bigram_lm_score(
-            spark.createDataFrame(pd.DataFrame(rows)), "doc_id", "text"
-        )
-        .toPandas()
-        .to_dict("records")
-    }
-    lp_ab = round(math.log((2 + 1) / (3 + 4)), 6)  # P(b|a) = 3/7
-    lp_ac = round(math.log((1 + 1) / (3 + 4)), 6)  # P(c|a) = 2/7
-    assert out[0]["n_bigrams"] == 1 and out[0]["lm_logprob"] == pytest.approx(lp_ab, abs=2e-6)
-    assert out[1]["lm_logprob"] == out[0]["lm_logprob"]
-    assert out[2]["n_bigrams"] == 1 and out[2]["lm_logprob"] == pytest.approx(lp_ac, abs=2e-6)
-    # the common bigram scores higher than the rare one
-    assert out[0]["lm_logprob"] > out[2]["lm_logprob"]
-    assert out[3] == {"doc_id": 3, "n_bigrams": 0, "lm_logprob": 0.0}
-    assert out[4] == {"doc_id": 4, "n_bigrams": 0, "lm_logprob": 0.0}
+def _bm25(spark, docs, queries, k):
+    """BM25 the way x_text_hybrid_retrieval scores it: a postings index
+    from build_postings, ranked by bm25_from_index."""
+    tc, dl = build_postings(docs, "doc_id", "text")
+    return bm25_from_index(spark, tc, dl, "doc_id", queries, k=k)
 
 
 def test_bm25_ranking_semantics(spark):
     """A document matching more query terms more often, at comparable
     length, must outrank one with a single glancing mention; docs with
     no query term never appear."""
-    import pandas as pd
-
-    from strava_etl_public_spark.operators.text import bm25_topk
-
     docs = spark.createDataFrame(
         pd.DataFrame(
             {
@@ -381,7 +166,7 @@ def test_bm25_ranking_semantics(spark):
             }
         )
     )
-    out = bm25_topk(docs, "doc_id", "text", [(1, "hash join")], k=10).toPandas()
+    out = _bm25(spark, docs, [(1, "hash join")], k=10).toPandas()
     assert set(out.query_id) == {1}
     assert 3 not in set(out.doc_id)
     ranked = out.sort_values("rk").doc_id.tolist()
@@ -395,43 +180,15 @@ def test_bm25_ranking_semantics(spark):
 
 
 def test_bm25_partition_invariance(spark, sf_dir):
-    from strava_etl_public_spark.operators.text import bm25_topk
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     qs = [(1, "hash join"), (2, "window sort")]
-    a = bm25_topk(docs, "doc_id", "text", qs, k=5).toPandas()
-    b = bm25_topk(docs.repartition(13), "doc_id", "text", qs, k=5).toPandas()
+    a = _bm25(spark, docs, qs, k=5).toPandas()
+    b = _bm25(spark, docs.repartition(13), qs, k=5).toPandas()
     key = ["query_id", "rk"]
     pd.testing.assert_frame_equal(
         a.sort_values(key).reset_index(drop=True),
         b.sort_values(key).reset_index(drop=True),
     )
-
-
-def test_pmi_collocations_semantics(spark):
-    """A pair that ALWAYS co-occurs must outscore a pair of
-    independent frequent words; bigrams under min_count are pruned."""
-    from strava_etl_public_spark.operators.text import pmi_collocations
-
-    rows = []
-    # "san francisco" always together, 6 times, in separate docs
-    for i in range(6):
-        rows.append((i, "san francisco is foggy today really"))
-    # "the cat" / "the dog": 'the' everywhere -> low PMI pairs
-    for i in range(6, 12):
-        rows.append((i, "the cat saw the dog near the gate"))
-    # rare pair below min_count: must not appear
-    rows.append((12, "quux zzyzx"))
-    docs = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-    out = pmi_collocations(docs, "doc_id", "text", min_count=5, k=50).toPandas()
-    pairs = {(r.w1, r.w2): r.pmi for r in out.itertuples()}
-    assert ("san", "francisco") in pairs
-    assert ("quux", "zzyzx") not in pairs
-    the_pairs = [v for (a, b), v in pairs.items() if a == "the" or b == "the"]
-    assert the_pairs and all(pairs[("san", "francisco")] > v for v in the_pairs)
-    # rk follows (pmi desc, w1, w2)
-    srt = out.sort_values(["pmi", "w1", "w2"], ascending=[False, True, True])
-    assert srt.rk.tolist() == sorted(out.rk.tolist())
 
 
 def test_hist_value_invariants(spark, sf_dir):
@@ -447,41 +204,11 @@ def test_hist_value_invariants(spark, sf_dir):
     assert 19 in set(out[out.event_type == typ].bin)
 
 
-def test_char_entropy_known_values(spark):
-    import math
-
-    from strava_etl_public_spark.operators.text import char_entropy
-
-    docs = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": [1, 2, 3, 4],
-                "text": ["aaaa", "abab", "abcd", ""],
-            }
-        )
-    )
-    out = (
-        char_entropy(docs, "doc_id", "text").toPandas().set_index("doc_id")
-    )
-    # constant string: zero entropy
-    assert out.loc[1, "char_entropy"] == 0.0 and out.loc[1, "n_chars"] == 4
-    # two equiprobable symbols: ln 2
-    assert abs(out.loc[2, "char_entropy"] - math.log(2)) < 1e-5
-    # four equiprobable symbols: ln 4
-    assert abs(out.loc[3, "char_entropy"] - math.log(4)) < 1e-5
-    # empty doc: 0 with n_chars 0
-    assert out.loc[4, "n_chars"] == 0 and out.loc[4, "char_entropy"] == 0.0
-    # ordering property: random-ish text above repeated text
-    assert out.loc[3, "char_entropy"] > out.loc[2, "char_entropy"] > out.loc[1, "char_entropy"]
-
-
 def test_bm25_shared_term_across_queries_keeps_true_df(spark):
     """A term appearing in two queries must not double its document
     frequency: scores for a single-term query must be identical
     whether or not another query shares the term (code-review
     regression)."""
-    from strava_etl_public_spark.operators.text import bm25_topk
-
     docs = spark.createDataFrame(
         pd.DataFrame(
             {
@@ -494,74 +221,11 @@ def test_bm25_shared_term_across_queries_keeps_true_df(spark):
             }
         )
     )
-    alone = bm25_topk(docs, "doc_id", "text", [(1, "hash")], k=10).toPandas()
-    shared = bm25_topk(
-        docs, "doc_id", "text", [(1, "hash"), (2, "hash join")], k=10
-    ).toPandas()
+    alone = _bm25(spark, docs, [(1, "hash")], k=10).toPandas()
+    shared = _bm25(spark, docs, [(1, "hash"), (2, "hash join")], k=10).toPandas()
     a = alone.set_index("doc_id").bm25
     s = shared[shared.query_id == 1].set_index("doc_id").bm25
     pd.testing.assert_series_equal(a.sort_index(), s.sort_index())
-
-
-def test_boilerplate_filter_semantics(spark):
-    import pandas as pd
-
-    from strava_etl_public_spark.operators.text import boilerplate_filter
-
-    bp = "COOKIE BANNER"
-    docs = []
-    # banner appears in docs 0..2 (df=3 → boilerplate at min_df=3)
-    for i in range(3):
-        docs.append((i, f"{bp}\ncontent {i} line one\n\ncontent {i} line two"))
-    # doc 3 repeats the banner TWICE in one doc — still df counts once,
-    # and a within-doc-only repeat is NOT boilerplate
-    docs.append((3, f"{bp}\nself repeated\nself repeated\n{bp}"))
-    # doc 4: unique content only
-    docs.append((4, "totally unique"))
-    df = spark.createDataFrame(pd.DataFrame(docs, columns=["doc_id", "text"]))
-    out = (
-        boilerplate_filter(df, "doc_id", "text", min_df=3)
-        .toPandas()
-        .set_index("doc_id")
-        .sort_index()
-    )
-    # banner + blank line removed, both content lines kept in order
-    assert out.loc[0, "clean_text"] == "content 0 line one\ncontent 0 line two"
-    assert out.loc[0, "n_lines"] == 4 and out.loc[0, "n_removed"] == 2
-    # within-doc repeat survives (df=1), both banner copies removed
-    assert out.loc[3, "clean_text"] == "self repeated\nself repeated"
-    assert out.loc[3, "n_removed"] == 2
-    assert out.loc[4, "clean_text"] == "totally unique"
-
-    # min_df boundary: df=2 banner with min_df=3 is NOT boilerplate
-    out2 = (
-        boilerplate_filter(
-            df.filter("doc_id < 2"), "doc_id", "text", min_df=3
-        )
-        .toPandas()
-        .set_index("doc_id")
-    )
-    assert out2.loc[0, "clean_text"].startswith(bp)
-
-
-def test_dup_span_stats_known_corpus(spark):
-    import pandas as pd
-
-    from strava_etl_public_spark.operators.text import dup_span_stats
-
-    docs = [
-        (0, "alpha beta gamma delta"),        # spans: abg, bgd
-        (1, "alpha beta gamma epsilon"),      # spans: abg, bge
-        (2, "zeta eta theta iota"),           # unique spans
-        (3, "xy"),                            # < n tokens → no spans row
-    ]
-    df = spark.createDataFrame(pd.DataFrame(docs, columns=["doc_id", "text"]))
-    out = dup_span_stats(df, "doc_id", "text", n=3).toPandas().set_index("doc_id")
-    assert 3 not in out.index
-    assert out.loc[0, "n_spans"] == 2 and out.loc[0, "n_dup_spans"] == 1
-    assert out.loc[0, "dup_frac"] == 0.5
-    assert out.loc[1, "n_dup_spans"] == 1
-    assert out.loc[2, "n_dup_spans"] == 0 and out.loc[2, "dup_frac"] == 0.0
 
 
 def test_dup_span_remove_rewrite(spark):
@@ -595,170 +259,6 @@ def test_dup_span_remove_rewrite(spark):
     assert (out7["clean_text"] == out["clean_text"]).all()
 
 
-def _ref_bpe(word_counts, num_merges, min_pair_count=2):
-    """Single-process Sennrich BPE reference."""
-    from strava_etl_public_spark.operators.text import _bpe_merge_word
-
-    vocab = {w: list(w) for w in word_counts}
-    merges = []
-    for _ in range(num_merges):
-        pc = {}
-        for w, syms in vocab.items():
-            c = word_counts[w]
-            for i in range(len(syms) - 1):
-                pc[(syms[i], syms[i + 1])] = pc.get((syms[i], syms[i + 1]), 0) + c
-        if not pc:
-            break
-        (a, b), n = min(pc.items(), key=lambda kv: (-kv[1], kv[0]))
-        if n < min_pair_count:
-            break
-        merges.append((a, b, n))
-        for w in vocab:
-            vocab[w] = _bpe_merge_word(vocab[w], a, b)
-    return merges, vocab
-
-
-def test_bpe_train_matches_reference(spark):
-    import pandas as pd
-    import re
-
-    from strava_etl_public_spark.operators.text import bpe_train
-
-    texts = [
-        "low lower lowest low low",
-        "new newer newest new newer",
-        "wide wider widest low new",
-    ]
-    df = spark.createDataFrame(pd.DataFrame({"text": texts}))
-    got_merges, got_vocab = bpe_train(df, "text", num_merges=12)
-
-    wc = {}
-    for t in texts:
-        for w in re.findall("[a-z0-9_]+", t.lower()):
-            wc[w] = wc.get(w, 0) + 1
-    want_merges, want_vocab = _ref_bpe(wc, 12)
-    assert got_merges == want_merges
-    gv = {r["w"]: list(r["sym"]) for r in got_vocab.collect()}
-    assert gv == want_vocab
-
-
-def test_bpe_train_partition_invariant_and_apply(spark):
-    import pandas as pd
-
-    from strava_etl_public_spark.operators.text import (
-        bpe_apply,
-        bpe_encode_tokens,
-        bpe_train,
-    )
-
-    texts = ["aaa aab abab baba", "aaa aab aab caca", "deed deed dee aaa"]
-    df = spark.createDataFrame(pd.DataFrame({"id": range(3), "text": texts}))
-    m1, _ = bpe_train(df, "text", num_merges=6)
-    m2, _ = bpe_train(df.repartition(5), "text", num_merges=6)
-    assert m1 == m2
-
-    enc = bpe_apply(df, "id", "text", m1).toPandas().set_index("id")
-    ranks = {(a, b): i for i, (a, b, _) in enumerate(m1)}
-    import re
-
-    for i, t in enumerate(texts):
-        ws = re.findall("[a-z0-9_]+", t)
-        want = sum(len(bpe_encode_tokens(w, ranks)) for w in ws)
-        assert enc.loc[i, "n_bpe_tokens"] == want
-        assert enc.loc[i, "n_words"] == len(ws)
-
-
-def test_bpe_batched_identical_to_sequential(spark, sf_dir):
-    """The batched trainer (top-k non-interacting merges per round,
-    r7) must produce the IDENTICAL merge sequence as the strictly
-    sequential schedule (batch_k=1) on a real corpus — the whole
-    point of _bpe_batch_prefix's proof obligations."""
-    from strava_etl_public_spark.operators.text import bpe_train
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    m_seq, _ = bpe_train(docs, "text", num_merges=15, batch_k=1)
-    m_bat, _ = bpe_train(docs, "text", num_merges=15, batch_k=16)
-    assert m_bat == m_seq
-    assert len(m_bat) == 15
-
-
-def test_bpe_batched_self_pair_runs(spark):
-    """r7 code-review regression: a SELF-pair merge (a,a) over an odd
-    run ('aaa') spawns (aa,a) whose count carrier is the accepted pair
-    ITSELF — excluding accepted pairs from the conflict scan reordered
-    the schedule ({aaa:3, bb:5, baaa:4} emitted (b,b) before (aa,a)).
-    Repeated-character runs ('www', '000') exist in any real corpus."""
-    import pandas as pd
-
-    from strava_etl_public_spark.operators.text import bpe_train
-
-    texts = ["aaa baaa " * 1, "bb " * 5, "aaa baaa aaa baaa baaa"]
-    df = spark.createDataFrame(pd.DataFrame({"text": texts}))
-    m_seq, _ = bpe_train(df, "text", num_merges=6, batch_k=1)
-    m_bat, _ = bpe_train(df, "text", num_merges=6, batch_k=16)
-    assert m_bat == m_seq
-    # the schedule must include a self-pair and its spawned successor
-    assert ("a", "a") in [(a, b) for a, b, _ in m_seq]
-    assert ("aa", "a") in [(a, b) for a, b, _ in m_seq]
-
-
-def test_bpe_batch_prefix_guards():
-    """Unit cases for the batch-acceptance proof conditions."""
-    from strava_etl_public_spark.operators.text import _bpe_batch_prefix
-
-    # disjoint pairs with distinct counts: all accepted
-    rows = [("a", "b", 10), ("c", "d", 8), ("e", "f", 6)]
-    assert _bpe_batch_prefix(rows, False, 99, 2) == rows
-    # symbol overlap stops the batch (b reused)
-    rows = [("a", "b", 10), ("b", "c", 8), ("e", "f", 6)]
-    assert _bpe_batch_prefix(rows, False, 99, 2) == rows[:1]
-    # concatenated new symbol collides with a later pair's symbol
-    rows = [("a", "b", 10), ("ab", "c", 8)]
-    assert _bpe_batch_prefix(rows, False, 99, 2) == rows[:1]
-    # a visible neighbor pair touching an accepted symbol with count
-    # >= candidate's can spawn a new-symbol pair that overtakes it
-    rows = [("a", "b", 10), ("b", "x", 9), ("c", "d", 8)]
-    assert _bpe_batch_prefix(rows, False, 99, 2) == rows[:1]
-    # a SELF-pair is its own carrier ((aa, a) from odd runs): it must
-    # block later candidates even though it is the accepted pair
-    rows = [("a", "a", 10), ("c", "d", 8)]
-    assert _bpe_batch_prefix(rows, False, 99, 2) == rows[:1]
-    # full table: a candidate tying the K-th count may lose to an
-    # unseen pair on the lexicographic tie-break → stop
-    rows = [("a", "b", 10), ("c", "d", 6), ("e", "f", 6)]
-    assert _bpe_batch_prefix(rows, True, 99, 2) == rows[:1]
-    # same counts, table NOT full → no unseen pairs → accepted
-    assert _bpe_batch_prefix(rows, False, 99, 2) == rows
-    # budget and min_pair_count respected
-    assert _bpe_batch_prefix(rows, False, 2, 2) == rows[:2]
-    assert _bpe_batch_prefix([("a", "b", 1)], False, 9, 2) == []
-
-
-def test_nb_classifier_separable_corpus(spark):
-    import pandas as pd
-
-    from strava_etl_public_spark.operators.text import nb_train_predict
-
-    # two classes with disjoint vocabularies → held-out accuracy must be
-    # perfect; a third class with mixed vocab lands by prior/overlap
-    rows = []
-    for i in range(120):
-        rows.append((i, "apple banana cherry apple fruit " * 3, "fruit"))
-    for i in range(120, 240):
-        rows.append((i, "carrot potato onion turnip root " * 3, "veg"))
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text", "lang"]))
-    out = nb_train_predict(df, "doc_id", "text", "lang", 0.8).toPandas()
-    assert len(out) > 20  # ~20% held out
-    assert (out.correct == 1).all()
-    # deterministic under repartition
-    out2 = nb_train_predict(
-        df.repartition(7), "doc_id", "text", "lang", 0.8
-    ).toPandas()
-    a = out.sort_values("doc_id").reset_index(drop=True)
-    b = out2.sort_values("doc_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
-
-
 def test_encoding_quality_mojibake(spark):
     import pandas as pd
 
@@ -785,167 +285,3 @@ def test_encoding_quality_mojibake(spark):
     assert out.loc[2, "n_ctrl"] == 2 and not bool(out.loc[2, "clean"])
     # tab/newline are NOT control noise; empty doc divides by max(n,1)
     assert out.loc[3, "n_chars"] == 0 and out.loc[3, "printable_ratio"] == 0.0
-
-
-def test_dsir_importance_ranks_target_like_docs(spark):
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
-    from strava_etl_public_spark.operators.text import dsir_importance
-
-    rows = pd.DataFrame(
-        {
-            "id": range(6),
-            "text": [
-                "alpha beta alpha beta",      # target-style
-                "alpha beta gamma",           # target-style
-                "zeta eta theta zeta",        # off-target
-                "eta theta eta theta",        # off-target
-                "alpha zeta",                 # mixed
-                "",                           # token-free
-            ],
-            "grp": ["t", "t", "s", "s", "s", "s"],
-        }
-    )
-    out = (
-        dsir_importance(
-            spark.createDataFrame(rows), "id", "text", F.col("grp") == "t"
-        )
-        .toPandas()
-        .set_index("id")
-        .sort_index()
-    )
-    # target-vocab docs score strictly above off-target docs
-    assert min(out.loc[0, "imp"], out.loc[1, "imp"]) > max(
-        out.loc[2, "imp"], out.loc[3, "imp"]
-    )
-    # mixed doc lands strictly between
-    assert out.loc[3, "imp"] < out.loc[4, "imp"] < out.loc[0, "imp"]
-    # token-free doc keeps its row, score 0
-    assert out.loc[5, "n_corpus_hits"] == 0 and out.loc[5, "imp"] == 0.0
-
-
-def test_cdc_chunks_stability_under_insertion(spark):
-    """The CDC property itself: inserting text early in a doc must
-    leave later chunk CONTENT identical (fixed-stride chunking would
-    re-key the whole tail)."""
-    import pandas as pd
-
-    from strava_etl_public_spark.operators.text import cdc_chunks
-
-    base = " ".join(f"tok{i}" for i in range(200))
-    edited = "inserted words here " + base
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1, 2], "text": [base, edited]})
-    )
-    out = cdc_chunks(df, "doc_id", "text", window=3, mask=15).toPandas()
-    c1 = set(out[out.doc_id == 1]["chunk_text"])
-    c2 = set(out[out.doc_id == 2]["chunk_text"])
-    shared = c1 & c2
-    # all but the first chunk or two of the base doc survive verbatim
-    assert len(shared) >= len(c1) - 2 and len(c1) > 3
-    # coverage invariant: chunks tile each doc exactly
-    for did, grp in out.groupby("doc_id"):
-        grp = grp.sort_values("tok_start")
-        assert grp.iloc[0]["tok_start"] == 1
-        ends = grp["tok_start"] + grp["n_tokens"]
-        assert (grp["tok_start"].iloc[1:].values == ends.iloc[:-1].values).all()
-
-
-def _compound_corpus(spark, sf_dir: str):
-    """Production-vocab-shaped corpus from the fixture: token TRIGRAMS
-    joined by '_' become the words ('_' is inside the tokenizer's
-    charset, so each compound survives as one token). The fixture's
-    flat word list saturates BPE at 89 merges (every word fully
-    merged); the ~10^3-10^4 distinct long compounds support 1000+ —
-    the morphology-rich schedule a production 32k vocab actually has."""
-    from pyspark.sql import functions as F
-
-    from strava_etl_public_spark.operators.dedup import shingles, tokens
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return docs.select(
-        F.array_join(
-            F.transform(
-                shingles(tokens(F.col("text")), 3),
-                lambda s: F.regexp_replace(s, " ", "_"),
-            ),
-            " ",
-        ).alias("text")
-    )
-
-
-@pytest.mark.slow  # ~90 s; the sequential-identity twin stays in the default lane
-def test_bpe_batched_reference_identity_150_merges(spark):
-    """Round-8 extension of the identity pin (verdict #7): the batched
-    trainer must reproduce the single-process Sennrich reference for a
-    production-shaped schedule — 150 merges over a compound-word
-    corpus built from the real fixture, at two batch sizes. Fidelity
-    is binary: the merge sequences are equal element-wise or the
-    batching proof is wrong."""
-    import re
-
-    from strava_etl_public_spark.operators.text import bpe_train
-
-    docs = _compound_corpus(spark, "/root/testdata/sf0.001")
-    wc: dict[str, int] = {}
-    for r in docs.select("text").collect():
-        for w in re.findall("[a-z0-9_]+", r["text"].lower()):
-            wc[w] = wc.get(w, 0) + 1
-    want, _ = _ref_bpe(wc, 150)
-    assert len(want) == 150  # the compound vocab supports the schedule
-
-    for bk in (16, 48):
-        stats: dict = {}
-        got, _ = bpe_train(docs, "text", num_merges=150, batch_k=bk, stats=stats)
-        assert got == want, (
-            f"batch_k={bk} diverged at merge "
-            f"{next(i for i, (g, w) in enumerate(zip(got, want)) if g != w)}"
-        )
-        # batching must actually batch (not 150 sequential rounds)
-        assert stats["rounds"] < 150, stats
-
-
-def test_bm25_topk_equals_unpersisted_index_path(spark):
-    """r14: bm25_topk now materializes the postings index internally
-    (4 tokenize subtrees → 1). Scores must be IDENTICAL to the
-    un-persisted build_postings → bm25_from_index composition, and the
-    internal caches must be released on return."""
-    from strava_etl_public_spark.operators.text import (
-        bm25_from_index,
-        bm25_topk,
-        build_postings,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "pack my box with five dozen liquor jugs"),
-            (3, "the lazy dog sleeps while the quick fox runs"),
-            (4, "sphinx of black quartz judge my vow"),
-            (5, "quick quick quick fox fox dog"),
-        ],
-        "doc_id long, text string",
-    )
-    queries = [(0, "quick fox"), (1, "lazy dog"), (2, "liquor quartz")]
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
-    got = bm25_topk(docs, "doc_id", "text", queries, k=3)
-    rows_got = sorted(
-        (r.asDict() for r in got.collect()),
-        key=lambda r: (r["query_id"], r["rk"]),
-    )
-    after = jsc.getPersistentRDDs().size()
-    assert after - before <= 1  # result checkpoint only; tc/dl released
-    tc, dl = build_postings(docs, "doc_id", "text")
-    want = sorted(
-        (
-            r.asDict()
-            for r in bm25_from_index(
-                spark, tc, dl, "doc_id", queries, k=3
-            ).collect()
-        ),
-        key=lambda r: (r["query_id"], r["rk"]),
-    )
-    assert rows_got == want

@@ -1,71 +1,16 @@
-"""Python UDTF extension point: row-identity with the declarative twin.
+"""Python UDTF extension point: the TABLE-argument UDTF against its
+declarative twin.
 
-The oracle gate proves x_udtf_chunk_windows against DuckDB; these
-tests pin the stronger internal claim — the imperative UDTF and the
-codegen'd HOF operator (text.chunk_documents) emit EXACTLY the same
-rows, and the UDTF handles the degenerate inputs (NULL text, empty
-token list, sub-window doc) the same way.
+ewma_final_udtf runs the EWMA recursion one row at a time per
+PARTITION BY key; these tests pin it bit-identical to the last row of
+the vectorized rolling.ewma_by_key, NULL values included.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from strava_etl_public_spark.operators.text import chunk_documents
 from strava_etl_public_spark.operators.udtfs import register_udtfs
-
-
-def _udtf_chunks(spark, docs, chunk: int, stride: int):
-    register_udtfs(spark)
-    docs.createOrReplaceTempView("t_udtf_docs")
-    return spark.sql(
-        f"""
-        SELECT d.doc_id, c.chunk_idx, c.chunk_text, c.n_tokens
-        FROM t_udtf_docs d, LATERAL chunk_windows_udtf(d.text, {chunk}, {stride}) c
-        """
-    )
-
-
-def _sorted_rows(df):
-    return [tuple(r) for r in df.orderBy("doc_id", "chunk_idx").collect()]
-
-
-def test_udtf_matches_declarative_twin_on_corpus(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    ).limit(100)
-    declarative = chunk_documents(docs, "doc_id", "text", chunk_tokens=64, stride=48)
-    imperative = _udtf_chunks(spark, docs, 64, 48)
-    assert _sorted_rows(imperative) == _sorted_rows(declarative)
-
-
-def test_udtf_degenerate_inputs(spark):
-    docs = spark.createDataFrame(
-        [(1, None), (2, ""), (3, "...!!!"), (4, "one two"), (5, "a " * 200)],
-        "doc_id long, text string",
-    )
-    # NULL / empty / punctuation-only docs emit nothing; a sub-window
-    # doc emits exactly one tail chunk — same contract as the twin.
-    declarative = chunk_documents(docs, "doc_id", "text", chunk_tokens=64, stride=48)
-    imperative = _udtf_chunks(spark, docs, 64, 48)
-    assert _sorted_rows(imperative) == _sorted_rows(declarative)
-    got_ids = {r[0] for r in _sorted_rows(imperative)}
-    assert got_ids == {4, 5}
-    one = [r for r in _sorted_rows(imperative) if r[0] == 4]
-    assert one == [(4, 0, "one two", 2)]
-
-
-def test_udtf_overlap_and_tail_rule(spark):
-    # 10 tokens, chunk 4, stride 3 -> starts 0,3,6 and the ceil-rule
-    # tail start 9 would exceed unless needed: last = ceil(6/3)*3 = 6,
-    # so starts are 0..6 step 3 (tail window 6..9 spans 4 tokens).
-    text = " ".join(f"w{i}" for i in range(10))
-    docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    rows = _sorted_rows(_udtf_chunks(spark, docs, 4, 3))
-    twin = _sorted_rows(chunk_documents(docs, "doc_id", "text", 4, 3))
-    assert rows == twin
-    assert [r[1] for r in rows] == [0, 1, 2]
-    assert rows[-1][3] == 4 and rows[-1][2] == "w6 w7 w8 w9"
 
 
 def test_table_arg_udtf_matches_ewma_operator(spark, sf_dir):
