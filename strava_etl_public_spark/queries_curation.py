@@ -1,4 +1,4 @@
-"""Curation: row IDs, boilerplate, duplicated spans, BPE, DSIR, intervals.
+"""Curation: row IDs, span removal, shard manifest, intervals, triangles.
 
 Split from the former single-file queries_ext.py (round 7, verdict
 #7): registrations, names, and oracle SQL are unchanged — the
